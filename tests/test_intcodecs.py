@@ -194,6 +194,16 @@ def test_decode_ints_narrow_matches_int64(tag):
         assert d32.dtype == np.int32
         assert np.array_equal(d32, d64.astype(np.int32))
         assert np.array_equal(d32, a32)
+        if tag == IC.T_FORBP:
+            # mini sizes whose minis are not byte-aligned for most widths
+            # take the per-mini branch of both decoders
+            for mini in (5, 13):
+                payload = memoryview(IC._enc_forbp(a32, mini=mini))
+                w64 = IC._dec_forbp(payload, a32.size)
+                w32 = IC._dec_forbp(payload, a32.size, narrow=True)
+                assert w32.dtype == np.int32
+                assert np.array_equal(w32, w64.astype(np.int32))
+                assert np.array_equal(w32, a32)
 
 
 def test_decode_ints_narrow_const():

@@ -43,6 +43,47 @@ def test_decode_from_percent_encoded_path(spark, tokens_df, tmp_path):
     assert _sorted_rows(back) == _sorted_rows(tokens_df)
 
 
+def test_decode_not_bound_by_binary_file_max_length(spark, tokens_df,
+                                                    tmp_path):
+    """Workers open part files themselves: Spark's binaryFile size limit
+    (spark.sql.sources.binaryFile.maxLength, 2 GiB by default) must not
+    refuse a part larger than it, in decode() or decode_stream."""
+    from zseq import streaming
+
+    out = str(tmp_path / "maxlen")
+    epoch = streaming.epoch_dir(out, 0)
+    res = zenc.encode(tokens_df, epoch, partitions=2)
+    key = "spark.sql.sources.binaryFile.maxLength"
+    spark.conf.set(key, str(min(p["enc_bytes"] for p in res.parts) - 1))
+    try:
+        want = _sorted_rows(tokens_df)
+        assert _sorted_rows(zdec.decode(spark, epoch)) == want
+        assert _sorted_rows(streaming.decode_stream(spark, out)) == want
+    finally:
+        spark.conf.unset(key)
+
+
+def test_encode_parquet_task_plan_is_constant_size(spark):
+    """The encode_parquet task list rides in the task closure, not in
+    the plan: the analyzed plan of 5,000 tasks is the plan of 10 (equal
+    up to the numbers in it). Built only, never executed."""
+    import re
+
+    import pyarrow as pa
+
+    schema = pa.schema([pa.field("doc_id", pa.int64())])
+
+    def plan(n):
+        tasks = [(i, f"/nonexistent/in-{i:05d}.parquet") for i in range(n)]
+        df = zenc._encode_files(spark, tasks, "/nonexistent/out", schema,
+                                True, 1 << 16, None)
+        return re.sub(r"\d+", "0",
+                      df._jdf.queryExecution().analyzed().toString())
+
+    small, large = plan(10), plan(5000)
+    assert len(small) == len(large), (small, large)
+
+
 def test_manifest_metrics(spark, tokens_df, tmp_path):
     out = str(tmp_path / "enc2")
     res = zenc.encode(tokens_df, out, partitions=4)

@@ -154,16 +154,17 @@ def _write_epoch(out: str, e: int, rows: int = 5):
 
 def test_decode_stream_is_one_scan_at_100_epochs(spark, tmp_path):
     """decode_stream must not build an O(epochs) union chain: the
-    executed plan carries exactly ONE scan node over all committed
+    executed plan carries exactly ONE leaf source node over all committed
     parts, and every epoch's crc is still enforced."""
     out = str(tmp_path / "stream100")
     expect = []
     for e in range(100):
         expect += _write_epoch(out, e)
     df = streaming.decode_stream(spark, out)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    scans = plan.count("FileScan") + plan.count("BatchScan")
-    assert scans == 1, f"expected one scan node, got {scans}:\n{plan}"
+    executed = df._jdf.queryExecution().executedPlan()
+    plan = executed.toString()
+    leaves = executed.collectLeaves().size()
+    assert leaves == 1, f"expected one leaf node, got {leaves}:\n{plan}"
     assert "Union" not in plan, plan
     got = sorted((r["doc_id"], r["v"]) for r in df.collect())
     assert got == sorted(expect)

@@ -51,3 +51,13 @@ def test_regimes_have_distinct_stats():
         flat[offs[i]:offs[i + 1]].max() for i in np.where(small_rows)[0]
     )
     assert small_max < synth.SMALL     # small regime bounded
+
+
+def test_tokens_from_ids_refuses_null_id(spark):
+    """A NULL doc_id has no tokens to derive: the kernel refuses it
+    instead of emitting a garbage non-null row."""
+    import pytest
+
+    ids = spark.createDataFrame([(1,), (None,), (3,)], "doc_id bigint")
+    with pytest.raises(Exception, match="NULL doc_id"):
+        synth._tokens_from_ids(ids, doc_id_nullable=True).collect()

@@ -5,9 +5,10 @@ The Spark-first integration of the .zseq format, built on the Python
 DataSource API (Spark 4.0) with filter pushdown (Spark 4.1):
 
 read
-    One InputPartition per committed part file (manifest-driven, so a
-    blob never splits and one task decodes one file — same plan shape as
-    ``zseq.decode``). Catalyst pushes comparison filters through
+    The read path of ``zseq.decode`` (``decode.plan_groups`` on the
+    driver, ``decode.read_group`` in the worker): one InputPartition per
+    byte-packed group of whole committed part files, opened and
+    crc-checked by the worker. Catalyst pushes comparison filters through
     ``pushFilters()``; int, timestamp/date, string, and startswith
     comparisons become zone-map block pruning inside the reader (a
     conservative superset — whole blocks are skipped without
@@ -77,17 +78,11 @@ _PUSHABLE = {
 
 
 @dataclass
-class ZseqPartition(InputPartition):
-    path: str
-    crc32: int | None
-
-
-@dataclass
 class ZseqPartGroup(InputPartition):
-    """A batch-read task: several whole part files ((path, crc32) pairs).
+    """A read task: several whole part files ((path, crc32) pairs).
     Packing multiple blobs per InputPartition amortizes the per-partition
     Python-runner setup the DataSource API pays (measured ~3x on a
-    many-small-parts corpus vs zseq.decode's one-scan plan)."""
+    many-small-parts corpus against one file per task)."""
     files: tuple
 
 
@@ -104,10 +99,21 @@ def _revision_opt(options: dict) -> int | None:
     return int(r) if r is not None else None
 
 
-def _arrow_schema_from_manifest(m: dict):
-    import pyarrow as pa
+def _parallelism() -> int:
+    """Parallelism floor of the read task packing. Readers are
+    constructed inside Spark's spawned planning worker, where
+    getActiveSession() is usually None — so the session wins when
+    visible, then the machine's core count (right for local mode; a sane
+    per-node floor on a cluster)."""
+    try:
+        from pyspark.sql import SparkSession
 
-    return pa.ipc.read_schema(pa.py_buffer(bytes.fromhex(m["schema"])))
+        active = SparkSession.getActiveSession()
+        if active:
+            return active.sparkContext.defaultParallelism
+    except Exception:
+        pass
+    return max(8, os.cpu_count() or 8)
 
 
 def register(spark) -> None:
@@ -149,7 +155,9 @@ class ZseqDataSource(DataSource):
             raise FileNotFoundError(
                 f"{self._path()}/manifest.json missing — not a committed "
                 "zseq dataset")
-        schema = _arrow_schema_from_manifest(m)
+        from .decode import manifest_schema
+
+        schema = manifest_schema(m)
         cols = self.options.get("columns")
         if cols:
             keep = [c.strip() for c in cols.split(",") if c.strip()]
@@ -186,16 +194,6 @@ def pa_select(schema, keep: list[str]):
     return pa.schema([schema.field(n) for n in schema.names if n in sel])
 
 
-def _read_verified_blob(path: str, crc32: int | None):
-    """Open a part file, enforce the manifest crc, return its reader."""
-    from .zseqfile import ZseqReader, check_crc
-
-    with open(path, "rb") as f:
-        content = f.read()
-    check_crc(content, crc32, path)
-    return ZseqReader(content)
-
-
 class ZseqSourceReader(DataSourceReader):
     def __init__(self, options: dict, schema: StructType | None = None):
         from .encode import read_manifest
@@ -219,103 +217,36 @@ class ZseqSourceReader(DataSourceReader):
             raise FileNotFoundError(
                 f"{self._dir}/manifest.json missing — not a committed "
                 "zseq dataset")
+        from .decode import (TARGET_BYTES, manifest_schema, part_entries,
+                             read_plan)
+
         self._names = list(m["schema_names"])
         cols = options.get("columns")
-        self._columns = ([c.strip() for c in cols.split(",") if c.strip()]
-                         if cols else None)
-        # Reconcile the Spark-provided read schema with the written one.
-        # Identical -> fast path (emit decoded batches as-is). A subset
-        # is projection; extra nullable fields are read-side EVOLUTION
-        # (filled with L6 defaults per batch); a reorder is honored.
-        # Type changes / non-nullable new fields are refused up front.
-        self._emit = None
-        if schema is not None:
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            from .decode import evolution_fields, spark_normalized
-
-            reader_arrow = to_arrow_schema(schema)
-            # compare in the Spark-normalized type domain: a dataset
-            # written via the parquet fast path may carry types that
-            # don't round-trip through StructType (large_string etc.) —
-            # a plain full read must keep working
-            written_arrow = spark_normalized(_arrow_schema_from_manifest(m))
-            extra = evolution_fields(written_arrow, reader_arrow,
-                                     allow_subset=True)
-            rnames = list(reader_arrow.names)
-            if rnames != self._names:
-                present = [n for n in rnames if n in set(self._names)]
-                in_written_order = [n for n in self._names
-                                    if n in set(rnames)]
-                if not extra and present == in_written_order:
-                    # pure projection in written order: the decoded
-                    # batches already match — no per-batch rebuild
-                    self._columns = present
-                else:
-                    self._columns = present or [self._names[0]]
-                    self._emit = reader_arrow
-        # Size each part from the manifest; a manifest written without
-        # enc_bytes (older revision / foreign writer) would otherwise
-        # make every part weigh 0 and pack the whole dataset into ONE
-        # InputPartition, serializing the read — fall back to the actual
-        # file size on disk (and only then to 0, which the packer floors
-        # by parallelism anyway).
-        def _psize(path: str, p: dict) -> int:
-            n = int(p.get("enc_bytes", 0))
-            if n > 0:
-                return n
-            try:
-                return os.path.getsize(path)
-            except OSError:
-                return 0
-
-        self._parts = [
-            (os.path.join(self._dir, p["file"]), p.get("crc32"),
-             _psize(os.path.join(self._dir, p["file"]), p),
-             p.get("zones"), p.get("part_id"))
-            for p in m.get("parts", [])
-        ]
-        # hash-bucket pruning inputs (prune_parts): only a pure
-        # mode='hash' manifest carries the part_id == pmod(hash(key), P)
-        # guarantee (append/compact/salted all void it, and record a
-        # different mode)
-        self._mode = m.get("mode")
-        self._pcol = m.get("partition_col")
-        self._pcount = m.get("partitions")
+        cols = ([c.strip() for c in cols.split(",") if c.strip()]
+                if cols else None)
+        written = manifest_schema(m)
+        # Spark hands the reader DataSource.schema()'s result (already
+        # projected by the columns option) or a user .schema(...): a
+        # subset is projection, extra nullable fields are read-side
+        # EVOLUTION, a reorder is honored (decode.read_plan).
+        self._columns, self._emit, _ = read_plan(
+            written, schema, cols if schema is None else None,
+            allow_subset=True)
+        self._parts = part_entries(self._dir, m)
         # Task sizing: pack part files into ~target-byte groups, floored
-        # by the session's parallelism so a small corpus still fans out to
-        # every core. At scale (parts >= target bytes) this degenerates to
-        # one file per task — the same plan shape as zseq.decode.
+        # by the session's parallelism (decode.plan_groups).
         self._target_bytes = int(
-            options.get("target_partition_bytes", 128 << 20))
-        # Parallelism floor. The reader is constructed inside Spark's
-        # spawned planning worker, where getActiveSession() is usually
-        # None — so an explicit .option("min_partitions", N) wins, then
-        # the session (when visible), then the machine's core count
-        # (right for local mode; a sane per-node floor on a cluster).
-        mp = int(options.get("min_partitions", 0))
-        if mp > 0:
-            self._min_tasks = mp
-        else:
-            try:
-                from pyspark.sql import SparkSession
-
-                active = SparkSession.getActiveSession()
-                self._min_tasks = (
-                    active.sparkContext.defaultParallelism if active
-                    else max(8, os.cpu_count() or 8))
-            except Exception:
-                self._min_tasks = max(8, os.cpu_count() or 8)
+            options.get("target_partition_bytes", TARGET_BYTES))
+        # an explicit .option("min_partitions", N) wins
+        self._min_tasks = (int(options.get("min_partitions", 0))
+                           or _parallelism())
         # Zone maps exist for int-kind chunks (ints, timestamps, dates in
         # their storage domain) and for binary/string chunks (truncated
         # byte bounds) — those columns accept pushdown.
         import pyarrow as pa
 
-        sch = _arrow_schema_from_manifest(m)
-        self._ptype = (sch.field(self._pcol).type
-                       if self._pcol and self._pcol in sch.names else None)
         self._pushtypes = {
-            f.name: f.type for f in sch
+            f.name: f.type for f in written
             if pa.types.is_integer(f.type) or pa.types.is_temporal(f.type)
             or pa.types.is_string(f.type) or pa.types.is_large_string(f.type)
             or pa.types.is_binary(f.type) or pa.types.is_large_binary(f.type)
@@ -428,71 +359,21 @@ class ZseqSourceReader(DataSourceReader):
         return filters
 
     def partitions(self) -> Sequence[InputPartition]:
-        parts = self._parts
-        if parts and self._predicate:
-            # Driver-side FILE pruning (pushFilters ran before
-            # partitions() per the DataSource contract): zone envelopes
-            # + hash-bucket pinning via the shared zseqfile.prune_parts
-            # — a pruned file never becomes an InputPartition, so the
-            # cluster never launches a task for it. Conservative
-            # superset — Spark re-applies every filter exactly
-            # (pushFilters returns them all unhandled).
-            from .zseqfile import prune_parts
+        # pushFilters ran before partitions() per the DataSource
+        # contract: a file pruned here never becomes an InputPartition.
+        # An empty (or fully pruned) read is one empty group — returning
+        # [] makes Spark's planning worker call read(None).
+        from .decode import plan_groups
 
-            keep = prune_parts(
-                [{"zones": t[3], "part_id": t[4], "_t": t}
-                 for t in parts],
-                self._predicate, mode=self._mode,
-                partition_col=self._pcol, partitions=self._pcount,
-                key_type=self._ptype)
-            parts = [p["_t"] for p in keep]
-        if not parts:
-            # a committed EMPTY dataset (or a fully-pruned read) must
-            # yield an empty DataFrame: returning [] here makes Spark's
-            # planning worker call read(None), which crashes the job
-            return [ZseqPartGroup(())]
-        total = sum(s for _, _, s, _, _ in parts)
-        if total == 0 and len(parts) > 1:
-            # No size information at all (manifest lacks enc_bytes and
-            # the files are unreadable/empty): count-based packing so the
-            # read still fans out instead of serializing on one task.
-            per = -(-len(parts) // max(1, self._min_tasks))
-            return [ZseqPartGroup(tuple(
-                        (path, crc)
-                        for path, crc, _, _, _ in parts[i:i + per]))
-                    for i in range(0, len(parts), per)]
-        # effective group size: never larger than the byte target, never
-        # so large that fewer than min_tasks groups cover the dataset
-        eff = max(1, min(self._target_bytes,
-                         -(-total // max(1, self._min_tasks))))
-        groups: list[ZseqPartGroup] = []
-        cur: list[tuple] = []
-        cur_bytes = 0
-        for path, crc, size, _zones, _pid in parts:
-            if cur and cur_bytes + size > eff:
-                groups.append(ZseqPartGroup(tuple(cur)))
-                cur, cur_bytes = [], 0
-            cur.append((path, crc))
-            cur_bytes += size
-        if cur:
-            groups.append(ZseqPartGroup(tuple(cur)))
-        return groups
+        return [ZseqPartGroup(g) for g in plan_groups(
+            self._parts, self._predicate, self._min_tasks,
+            self._target_bytes)]
 
     def read(self, partition: ZseqPartGroup):
-        for path, crc in partition.files:
-            r = _read_verified_blob(path, crc)
-            if list(r.schema.names) != self._names:
-                raise ValueError(
-                    f"{path}: schema {r.schema.names} != manifest "
-                    f"{self._names}")
-            if self._emit is None:
-                yield from r.batches(self._columns,
-                                     self._predicate or None)
-            else:
-                from .decode import evolve_batch
+        from .decode import read_group
 
-                for b in r.batches(self._columns, self._predicate or None):
-                    yield evolve_batch(b, self._emit)
+        yield from read_group(partition.files, self._names, self._columns,
+                              self._predicate or None, self._emit)
 
 
 class ZseqSourceWriter(DataSourceArrowWriter):
@@ -746,11 +627,14 @@ class ZseqStreamReader(DataSourceStreamReader):
     Offset = count of committed epoch directories consumed. An epoch's
     manifest write is atomic, so an epoch is either fully visible or
     invisible — the offset can never split an epoch. Each micro-batch
-    gets one InputPartition per part file of the newly committed epochs
-    (no splits, crc-verified), so the read parallelism equals the part
-    count exactly like the batch reader."""
+    reads the newly committed epochs' part files through the batch read
+    path (packed groups, crc-verified, header schema checked against the
+    first epoch's)."""
 
     def __init__(self, options: dict):
+        from .encode import read_manifest
+        from .streaming import committed_epochs
+
         self._dir = options.get("path")
         if not self._dir:
             raise ValueError("zseq: .load(path) is required")
@@ -758,6 +642,10 @@ class ZseqStreamReader(DataSourceStreamReader):
         # schema() applies this projection — the yielded batches must too
         self._columns = ([c.strip() for c in cols.split(",") if c.strip()]
                          if cols else None)
+        eps = committed_epochs(self._dir)
+        m = read_manifest(eps[0]) if eps else None
+        self._names = list(m["schema_names"]) if m else None
+        self._min_tasks = _parallelism()
 
     def initialOffset(self) -> dict:
         return {"epochs": 0}
@@ -768,25 +656,25 @@ class ZseqStreamReader(DataSourceStreamReader):
         return {"epochs": len(committed_epochs(self._dir))}
 
     def partitions(self, start: dict, end: dict):
+        from .decode import part_entries, plan_groups
         from .encode import read_manifest
         from .streaming import committed_epochs
 
-        eps = committed_epochs(self._dir)[start["epochs"]:end["epochs"]]
-        parts = []
-        for d in eps:
+        entries = []
+        for d in committed_epochs(self._dir)[start["epochs"]:end["epochs"]]:
             m = read_manifest(d)
-            for p in (m or {}).get("parts", []):
-                parts.append(ZseqPartition(
-                    os.path.join(d, p["file"]), p.get("crc32")))
-        # an epoch can be empty (empty micro-batch) — Spark still needs
-        # at least one partition to advance the offset
-        return parts or [ZseqPartition("", None)]
+            if m is not None:
+                entries += part_entries(d, m)
+        # an epoch can be empty (empty micro-batch): one empty group
+        # still advances the offset
+        return [ZseqPartGroup(g)
+                for g in plan_groups(entries, None, self._min_tasks)]
 
-    def read(self, partition: ZseqPartition):
-        if not partition.path:
-            return
-        r = _read_verified_blob(partition.path, partition.crc32)
-        yield from r.batches(self._columns)
+    def read(self, partition: ZseqPartGroup):
+        from .decode import read_group
+
+        yield from read_group(partition.files, self._names, self._columns,
+                              None, None)
 
     def commit(self, end: dict) -> None:
         pass

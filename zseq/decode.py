@@ -1,23 +1,33 @@
 """Distributed decode job: .zseq blobs -> DataFrame.
 
 The Spark rebuild of the reference's read path (EP2 in SURVEY.md §3:
-header parse -> block read -> decompress -> unshred). Files are picked up
-with Spark's binaryFile source (never splits a file, so one task decodes
-one blob) and decoded inside ``mapInArrow`` back into Arrow batches of the
-original schema — strict about magic, block framing, per-segment byte
-consumption, and the trailing row count.
+header parse -> block read -> decompress -> unshred). One read path
+serves ``decode``, ``streaming.decode_stream`` and the ``zseq``
+DataSource (batch and stream):
+
+- driver: manifest(s) + predicate -> file pruning -> byte-packed groups
+  of (path, crc32) (``plan_groups``), and the reader schema resolved
+  against the written one (``read_plan``);
+- worker: each group's files are opened and read directly, crc-checked,
+  schema-checked and decoded — strict about magic, block framing,
+  per-segment byte consumption and the trailing row count — then evolved
+  to the reader schema (``read_group``).
+
+``decode`` runs the groups as ``spark.range(n_groups).mapInArrow``: one
+leaf node and a task list built only in the JVM.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .encode import read_manifest
-from .zseqfile import ZseqReader
+from . import encode as zenc
+from . import zseqfile
 
 
 def spark_normalized(schema: pa.Schema) -> pa.Schema:
@@ -136,85 +146,176 @@ def evolve_batch(batch: pa.RecordBatch,
                                       schema=reader_schema)
 
 
-def _crc_keys(path: str) -> tuple[str, ...]:
-    """Manifest-crc lookup keys: the last two path components
-    ("<dataset-or-epoch-dir>/<part file>"). Basename alone is ambiguous
-    for streaming layouts, where every epoch names its parts
-    part-00000.zseq...; the parent dir disambiguates. Spark's binaryFile
-    source hands back a Hadoop URI, which percent-encodes characters the
-    manifest (raw filesystem names) never would — so the url-DECODED key
-    is tried as well (raw first, covering a filename with a literal
-    '%'); the refuse-on-miss behavior is unchanged."""
-    from urllib.parse import unquote
-
-    raw = "/".join(path.rstrip("/").split("/")[-2:])
-    dec = "/".join(unquote(path).rstrip("/").split("/")[-2:])
-    return (raw,) if raw == dec else (raw, dec)
+def manifest_schema(m: dict) -> pa.Schema:
+    """The committed Arrow schema of a manifest (hex-serialized IPC)."""
+    return pa.ipc.read_schema(pa.py_buffer(bytes.fromhex(m["schema"])))
 
 
-def _decode_files(schema_names: list[str], crcs: dict[str, int] | None,
-                  columns: list[str] | None = None,
-                  predicate: list[tuple] | None = None):
-    def fn(batches):
-        from .session import quiet_worker_zip_finders
-        from .zseqfile import check_crc
+def read_plan(written: pa.Schema, reader=None,
+              columns: list[str] | None = None,
+              allow_subset: bool = False):
+    """Resolve a read against the written schema -> (read_cols, emit,
+    out), shared by ``decode``, ``decode_stream`` and the DataSource.
 
-        quiet_worker_zip_finders()
+    ``reader`` (pyarrow.Schema or Spark StructType, None = the written
+    schema) is validated by ``evolution_fields``; ``columns`` projects
+    it. ``read_cols`` are the columns decoded from every file (None =
+    all); when every requested column is new, ONE written column is
+    still read so the row count is real. ``emit`` is the Arrow schema
+    each decoded batch is evolved to (None = the decoded batches already
+    match); ``out`` is the Arrow schema of the result."""
+    if reader is None:
+        if columns is not None:
+            missing = set(columns) - set(written.names)
+            if missing:
+                raise KeyError(f"zseq: unknown columns {sorted(missing)}")
+            written = pa.schema([f for f in written if f.name in columns])
+        return columns, None, written
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-        for batch in batches:
-            # one blob at a time: to_pylist would copy EVERY file's bytes
-            # in the batch into Python objects simultaneously, doubling
-            # peak memory across all of them
-            pcol, ccol = batch.column("path"), batch.column("content")
-            for i in range(batch.num_rows):
-                path = pcol[i].as_py()
-                # zero-copy view of the blob (as_py would copy the whole
-                # file into a Python bytes object)
-                content = memoryview(ccol[i].as_buffer())
-                if crcs is not None:
-                    want = next((crcs[k] for k in _crc_keys(path)
-                                 if k in crcs), None)
-                    if want is None:
-                        raise ValueError(
-                            f"{path}: no crc32 entry in manifest for key "
-                            f"{_crc_keys(path)!r} — refusing unverified "
-                            "read")
-                    check_crc(content, want, path)
-                r = ZseqReader(content)
-                if list(r.schema.names) != list(schema_names):
-                    raise ValueError(
-                        f"{path}: schema {r.schema.names} != manifest "
-                        f"{schema_names}"
-                    )
-                yield from r.batches(columns, predicate)
-
-    return fn
+    if isinstance(reader, T.StructType):
+        reader = to_arrow_schema(reader)
+    elif not isinstance(reader, pa.Schema):
+        raise TypeError(
+            f"decode schema must be a pyarrow.Schema or Spark "
+            f"StructType, got {type(reader).__name__}")
+    new = {f.name for f in evolution_fields(
+        spark_normalized(written), spark_normalized(reader), allow_subset)}
+    if columns is not None:
+        missing = set(columns) - set(reader.names)
+        if missing:
+            raise KeyError(f"zseq: unknown columns {sorted(missing)}")
+        reader = pa.schema([reader.field(c) for c in columns])
+    read_cols = [n for n in reader.names if n not in new]
+    if read_cols and not new \
+            and read_cols == [n for n in written.names if n in read_cols]:
+        # a projection in written order: no per-batch rebuild
+        return (None if read_cols == written.names else read_cols,
+                None, reader)
+    return read_cols or [written.names[0]], reader, reader
 
 
-def _df_from_parts(spark: SparkSession, paths: list[str],
-                   crcs: dict[str, int] | None, schema: pa.Schema,
-                   names: list[str],
-                   columns: list[str] | None = None,
-                   predicate: list[tuple] | None = None) -> DataFrame:
-    """ONE binaryFile scan over ``paths`` + one mapInArrow decode — the
-    shared tail of every decode entry point (batch dataset, stream epochs,
-    partial reads). The plan has a single scan node regardless of how many
-    directories the paths span."""
+TARGET_BYTES = 128 << 20
+
+
+def part_entries(d: str, m: dict) -> list[tuple]:
+    """(path, crc32, size, prune stats, prune rule) per part of the
+    manifest ``m`` of directory ``d``. The size is the manifest's
+    enc_bytes, else the file size on disk (a manifest without enc_bytes
+    would otherwise weigh every part 0 and pack the read into one
+    task), else 0. The prune rule is the manifest's kwargs to
+    ``zseqfile.prune_parts`` — one object per manifest."""
+    pcol = m.get("partition_col")
+    rule = {"mode": m.get("mode"), "partition_col": pcol,
+            "partitions": m.get("partitions"), "key_type": None}
+    if pcol and pcol in m.get("schema_names", ()):
+        rule["key_type"] = manifest_schema(m).field(pcol).type
+
+    def size(path: str, p: dict) -> int:
+        n = int(p.get("enc_bytes", 0))
+        if n > 0:
+            return n
+        try:
+            return os.path.getsize(path)
+        except OSError:
+            return 0
+
+    out = []
+    for p in m.get("parts", []):
+        path = os.path.join(d, p["file"])
+        stats = {k: p.get(k) for k in ("zones", "part_id", "rows")}
+        out.append((path, p.get("crc32"), size(path, p), stats, rule))
+    return out
+
+
+def plan_groups(entries: list[tuple], predicate, min_tasks: int,
+                target_bytes: int = TARGET_BYTES) -> list[tuple]:
+    """The driver-side read plan: ``part_entries`` -> file pruning ->
+    byte-packed groups of (path, crc32).
+
+    FILE pruning (zone envelopes, null counts, hash-bucket pinning) runs
+    once per manifest through ``zseqfile.prune_parts``; a pruned file
+    never reaches a task. It is a conservative superset: callers still
+    filter rows exactly. Groups are at most ``target_bytes`` and at most
+    total / ``min_tasks`` bytes, so a small read still fans out to every
+    core; with no size information at all the files are split by count.
+    Never empty: an empty read is one empty group."""
+    if predicate:
+        kept = []
+        for _, run in itertools.groupby(entries, key=lambda e: id(e[4])):
+            run = list(run)
+            keep = {id(s) for s in zseqfile.prune_parts(
+                [e[3] for e in run], predicate, **run[0][4])}
+            kept += [e for e in run if id(e[3]) in keep]
+        entries = kept
+    if not entries:
+        return [()]
+    min_tasks = max(1, min_tasks)
+    total = sum(e[2] for e in entries)
+    if total == 0:
+        per = -(-len(entries) // min_tasks)
+        return [tuple(e[:2] for e in entries[i:i + per])
+                for i in range(0, len(entries), per)]
+    eff = max(1, min(target_bytes, -(-total // min_tasks)))
+    groups: list[tuple] = []
+    cur: list[tuple] = []
+    cur_bytes = 0
+    for path, crc, size, _stats, _rule in entries:
+        if cur and cur_bytes + size > eff:
+            groups.append(tuple(cur))
+            cur, cur_bytes = [], 0
+        cur.append((path, crc))
+        cur_bytes += size
+    groups.append(tuple(cur))
+    return groups
+
+
+def read_group(files, names: list[str] | None,
+               columns: list[str] | None, predicate,
+               emit: pa.Schema | None):
+    """The one read kernel, run in the worker: for each (path, crc32)
+    open and read the file, enforce the manifest crc, check the header
+    schema against ``names``, decode the projected/zone-pruned blocks
+    and evolve them to ``emit`` (see ``read_plan``)."""
+    for path, crc in files:
+        with open(path, "rb") as f:
+            content = f.read()
+        zseqfile.check_crc(content, crc, path)
+        r = zseqfile.ZseqReader(content)
+        if names is not None and list(r.schema.names) != list(names):
+            raise ValueError(
+                f"{path}: schema {r.schema.names} != manifest {names}")
+        for b in r.batches(columns, predicate):
+            yield b if emit is None else evolve_batch(b, emit)
+
+
+def read_parts(spark: SparkSession, entries: list[tuple],
+               written: pa.Schema, columns: list[str] | None = None,
+               predicate: list[tuple] | None = None,
+               schema=None) -> DataFrame:
+    """``part_entries`` of one or more manifests -> DataFrame: one
+    ``spark.range`` leaf with a task per group, whatever the number of
+    files or directories. The group list rides in the task closure, so
+    the plan holds no per-file literal."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    if columns is not None:
-        schema = pa.schema([
-            schema.field(n) for n in schema.names if n in set(columns)
-        ])
-    if not paths:
-        return spark.createDataFrame([], from_arrow_schema(schema))
-    files = (
-        spark.read.format("binaryFile").load(paths)
-        .select("path", "content")
-    )
-    return files.mapInArrow(
-        _decode_files(names, crcs, columns, predicate),
-        from_arrow_schema(schema))
+    read_cols, emit, out = read_plan(written, schema, columns)
+    groups = plan_groups(entries, predicate,
+                         spark.sparkContext.defaultParallelism)
+    names = written.names
+
+    def task(batches):
+        from .session import quiet_worker_zip_finders
+
+        quiet_worker_zip_finders()
+        for b in batches:  # each input id is the index of a group
+            for gid in b.column(0).to_pylist():
+                yield from read_group(groups[gid], names, read_cols,
+                                      predicate, emit)
+
+    n = len(groups)
+    return spark.range(0, n, 1, n).mapInArrow(task, from_arrow_schema(out))
 
 
 def decode(spark: SparkSession, out_dir: str,
@@ -226,10 +327,12 @@ def decode(spark: SparkSession, out_dir: str,
 
     ``columns`` -> projection pushdown into the blob reader (unrequested
     columns are seeked past, never decompressed). ``predicate`` -> a
-    conjunction of (col, op, value) pruned against per-block zone
-    maps (int storage values for int-kind columns, str/bytes for binary
-    columns); surviving blocks may still hold non-matching rows, so
-    compose with a normal ``.filter`` for exact semantics.
+    conjunction of (col, op, value) pruned against the manifest's
+    per-part zone envelopes (whole files skipped on the driver) and
+    per-block zone maps (int storage values for int-kind columns,
+    str/bytes for binary columns); surviving blocks may still hold
+    non-matching rows, so compose with a normal ``.filter`` for exact
+    semantics.
 
     ``schema`` -> read-side schema EVOLUTION (pyarrow.Schema or Spark
     StructType): a superset of the written schema whose new nullable
@@ -237,173 +340,45 @@ def decode(spark: SparkSession, out_dir: str,
     null for types without a zero-value) — the reference's serde-default
     evolution (docs/schema.md:299-459) for long-lived datasets that grew
     columns. Type changes and dropped columns are refused (project with
-    ``columns``; cast after decode). The fill is a constant JVM-side
-    projection — zero decode cost, zero Python.
+    ``columns``; cast after decode).
 
     ``revision`` -> TIME TRAVEL: read the dataset as of that manifest
     revision (``zseq.revisions(out_dir)`` lists retained ones). Append
     and compaction retain superseded snapshots — reading revision N-1
     after an append returns exactly the pre-append rows; vacuum()
-    expires aged snapshots and an overwrite resets history."""
+    expires aged snapshots and an overwrite resets history.
+
+    ``allow_partial`` -> with no committed manifest, read every
+    ``*.zseq`` file in ``out_dir`` (no crc to check against); the schema
+    comes from the first file's header."""
     from .session import ship_package
 
     ship_package(spark)
-    if schema is not None:
-        return _decode_evolved(spark, out_dir, schema, allow_partial,
-                               columns, predicate, revision)
-    manifest = read_manifest(out_dir, revision=revision)
-    if manifest is None and not allow_partial:
-        raise FileNotFoundError(
-            f"{out_dir}/manifest.json missing — encode did not commit "
-            "(pass allow_partial=True to read surviving part files)"
-        )
-    if manifest is None:
-        # Partial read: glob survivors, schema from the first file.
-        files = (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", "*.zseq")
-            .load(out_dir)
-            .select("path", "content")
-        )
-        first = files.limit(1).collect()
-        if not first:
-            raise FileNotFoundError(f"no .zseq files in {out_dir}")
-        schema = ZseqReader(first[0]["content"]).schema
-        names = list(schema.names)
-        if columns is not None:
-            missing = set(columns) - set(names)
-            if missing:  # same driver-side error the committed path gives
-                raise KeyError(f"zseq: unknown columns {sorted(missing)}")
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        out_schema = schema if columns is None else pa.schema([
-            schema.field(n) for n in schema.names if n in set(columns)])
-        return files.mapInArrow(
-            _decode_files(names, None, columns, predicate),
-            from_arrow_schema(out_schema))
-
-    schema = pa.ipc.read_schema(
-        pa.py_buffer(bytes.fromhex(manifest["schema"])))
-    names = manifest["schema_names"]
-    if columns is not None:
-        missing = set(columns) - set(names)
-        if missing:
-            raise KeyError(f"zseq: unknown columns {sorted(missing)}")
-    # Read EXACTLY the committed part list — never glob. Stray .zseq
-    # files (orphans of a crashed overwrite/epoch commit, or a
-    # concurrent writer's staged output) must not leak rows into a
-    # committed dataset.
-    base = os.path.basename(os.path.abspath(out_dir))
-    parts = manifest.get("parts", [])
-    if predicate:
-        # driver-side FILE pruning: zone envelopes + hash-bucket pinning
-        # (zseqfile.prune_parts). At cluster scale, skipping a file here
-        # saves the whole task launch + blob fetch, not just its decode
-        # work; a point lookup on a hash-mode dataset's key opens ONE of
-        # P files. Conservative superset (like block pruning) — Spark's
-        # own filter above handles exact row semantics.
-        from .zseqfile import prune_parts
-
-        pcol = manifest.get("partition_col")
-        parts = prune_parts(
-            parts, predicate, mode=manifest.get("mode"),
-            partition_col=pcol,
-            partitions=manifest.get("partitions"),
-            key_type=(schema.field(pcol).type
-                      if pcol in set(names) else None))
-    paths = [os.path.join(out_dir, p["file"]) for p in parts]
-    crcs = {f"{base}/{p['file']}": p["crc32"] for p in parts}
-    return _df_from_parts(spark, paths, crcs, schema, names,
-                          columns, predicate)
-
-
-def _decode_evolved(spark: SparkSession, out_dir: str, schema,
-                    allow_partial: bool, columns: list[str] | None,
-                    predicate: list[tuple] | None,
-                    revision: int | None = None) -> DataFrame:
-    """decode() with a reader schema: decode the written columns as
-    usual, then project to the reader schema with constant L6 defaults
-    for the new columns — all inside one JVM-side select (Catalyst
-    folds the literals; nothing extra crosses the Python boundary)."""
-    manifest = read_manifest(out_dir, revision=revision)
-    if manifest is None:
+    m = zenc.read_manifest(out_dir, revision=revision)
+    if m is None and schema is not None:
         raise FileNotFoundError(
             f"{out_dir}/manifest.json missing — schema evolution needs "
             "the committed schema to validate against"
             + (" (allow_partial reads cannot evolve)"
                if allow_partial else ""))
-    reader_struct, read_cols, new_names, _written = evolved_read_plan(
-        schema, manifest["schema"], columns)
-    base = decode(spark, out_dir, columns=read_cols, predicate=predicate,
-                  revision=revision)
-    return apply_evolution(base, reader_struct, new_names, columns)
-
-
-def evolved_read_plan(schema, written_hex: str,
-                      columns: list[str] | None):
-    """Shared validation half of an evolved read (batch decode AND
-    decode_stream): the reader schema (pyarrow.Schema or Spark
-    StructType) against the committed hex-serialized Arrow schema ->
-    (reader_struct, read_cols, new_names, written). ``read_cols`` is the
-    projection to actually read from disk (None = all written columns);
-    when every requested column is new, ONE written column is still read
-    so the row count is real (apply_evolution drops it). ``written`` is
-    the parsed, Spark-normalized committed schema so callers don't
-    re-parse the hex."""
-    from pyspark.sql import types as T
-    from pyspark.sql.pandas.types import (from_arrow_schema,
-                                          to_arrow_schema)
-
-    if isinstance(schema, T.StructType):
-        reader_arrow = to_arrow_schema(schema)
-        reader_struct = schema
-    elif isinstance(schema, pa.Schema):
-        reader_arrow = schema
-        reader_struct = from_arrow_schema(schema)
+    if m is None and not allow_partial:
+        raise FileNotFoundError(
+            f"{out_dir}/manifest.json missing — encode did not commit "
+            "(pass allow_partial=True to read surviving part files)"
+        )
+    if m is None:
+        files = sorted(f for f in os.listdir(out_dir)
+                       if f.endswith(".zseq"))
+        if not files:
+            raise FileNotFoundError(f"no .zseq files in {out_dir}")
+        with open(os.path.join(out_dir, files[0]), "rb") as f:
+            written = zseqfile.ZseqReader(f.read()).schema
+        m = {"parts": [{"file": f} for f in files]}
     else:
-        raise TypeError(
-            f"decode schema must be a pyarrow.Schema or Spark "
-            f"StructType, got {type(schema).__name__}")
-    written = spark_normalized(pa.ipc.read_schema(
-        pa.py_buffer(bytes.fromhex(written_hex))))
-    new_fields = evolution_fields(written, spark_normalized(reader_arrow))
-    new_names = {f.name for f in new_fields}
-    if columns is not None:
-        missing = set(columns) - set(reader_arrow.names)
-        if missing:
-            raise KeyError(f"zseq: unknown columns {sorted(missing)}")
-    read_cols = None
-    if columns is not None:
-        read_cols = [c for c in columns if c not in new_names]
-        if not read_cols:
-            read_cols = [written.names[0]]
-    return reader_struct, read_cols, new_names, written
-
-
-def apply_evolution(base, reader_struct, new_names: set,
-                    columns: list[str] | None):
-    """Projection half of an evolved read: constant L6 defaults for the
-    new columns, reader-order select — one JVM-side projection (Catalyst
-    folds the literals; nothing extra crosses the Python boundary)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from .schema import default_for
-
-    out = base
-    for f in reader_struct.fields:
-        if f.name not in new_names:
-            continue
-        if columns is not None and f.name not in set(columns):
-            continue
-        d = default_for(f.dataType)
-        if isinstance(f.dataType, T.ArrayType):
-            col = F.array().cast(f.dataType)
-        elif d is None:
-            col = F.lit(None).cast(f.dataType)
-        else:
-            col = F.lit(d).cast(f.dataType)
-        out = out.withColumn(f.name, col)
-    order = [f.name for f in reader_struct.fields] if columns is None \
-        else list(columns)
-    return out.select(order)
+        written = manifest_schema(m)
+    # A committed read follows EXACTLY the manifest's part list — never
+    # a glob. Stray .zseq files (orphans of a crashed overwrite/epoch
+    # commit, or a concurrent writer's staged output) must not leak rows
+    # into a committed dataset.
+    return read_parts(spark, part_entries(out_dir, m), written, columns,
+                      predicate, schema)

@@ -479,15 +479,19 @@ def _encode_partition(out_dir: str, schema: pa.Schema, cluster: bool,
     return fn
 
 
-def _encode_files(out_dir: str, schema: pa.Schema, cluster: bool,
-                  batch_rows: int, columns: list[str] | None,
+def _encode_files(spark, tasks: list[tuple[int, str]], out_dir: str,
+                  schema: pa.Schema, cluster: bool, batch_rows: int,
+                  columns: list[str] | None,
                   zstd_level: int | None = None,
-                  token: str | None = None):
-    """Task fn for the parquet fast path: each input row is
-    (part_id, file path); the worker reads the parquet itself via pyarrow
-    (bypassing the JVM row->Arrow conversion, which profiling shows costs
-    more than the codecs for array columns) and writes one .zseq per
-    input file — a deterministic, resume-friendly 1:1 mapping."""
+                  token: str | None = None) -> DataFrame:
+    """Task frame for the parquet fast path, one task per (part_id,
+    parquet path) — a deterministic, resume-friendly 1:1 mapping of input
+    file to .zseq part. The task list is ``spark.range`` (built only in
+    the JVM: no Python RDD hop, no per-file plan literal); the worker
+    looks its file up in the closure-captured ``tasks`` by id, reads the
+    parquet itself via pyarrow (bypassing the JVM row->Arrow conversion,
+    which profiling shows costs more than the codecs for array columns)
+    and writes one .zseq."""
     def fn(batches):
         import pyarrow.parquet as pq
 
@@ -500,21 +504,22 @@ def _encode_files(out_dir: str, schema: pa.Schema, cluster: bool,
         pa.set_cpu_count(1)
         pa.set_io_thread_count(2)
         for batch in batches:
-            for row in batch.to_pylist():
+            for i in batch.column(0).to_pylist():
+                part_id, path = tasks[i]
                 t0 = time.time()
-                tbl = pq.read_table(
-                    row["path"], columns=columns, use_threads=False)
+                tbl = pq.read_table(path, columns=columns, use_threads=False)
                 if schema.names != tbl.schema.names:
                     tbl = tbl.select(schema.names)
                 tbl = tbl.cast(schema)
-                fname = (f"part-{token}-{row['part_id']:05d}.zseq"
+                fname = (f"part-{token}-{part_id:05d}.zseq"
                          if token else None)
                 out = _encode_table_to_file(
-                    tbl, out_dir, row["part_id"], schema, cluster,
+                    tbl, out_dir, part_id, schema, cluster,
                     batch_rows, t0, zstd_level, fname=fname)
                 yield pa.RecordBatch.from_pylist([out], schema=_METRICS_PA)
 
-    return fn
+    n = len(tasks)
+    return spark.range(0, n, 1, n).mapInArrow(fn, METRICS_SCHEMA)
 
 
 def encode(df: DataFrame, out_dir: str, *, mode: str = "preserve",
@@ -1219,22 +1224,10 @@ def encode_parquet(spark, input_dir: str, out_dir: str, *,
 
     token = uuid.uuid4().hex[:8]
     if todo:
-        # One task per file WITHOUT a Python RDD: sc.parallelize +
-        # createDataFrame(rdd) routes every task through an extra
-        # Python-runner hop (pickled rows -> python worker -> JVM rows)
-        # before mapInArrow's own worker. range + array-literal lookup
-        # keeps the task list pure JVM — same 1:1 file-per-task layout,
-        # measurably less per-task overhead at low core counts.
-        ids_lit = F.array(*[F.lit(int(t["part_id"])) for t in todo])
-        paths_lit = F.array(*[F.lit(t["path"]) for t in todo])
-        idx = (F.col("id") + 1).cast("int")
-        pdf = spark.range(0, len(todo), 1, len(todo)).select(
-            F.element_at(ids_lit, idx).cast("int").alias("part_id"),
-            F.element_at(paths_lit, idx).alias("path"))
-        fn = _encode_files(out_dir, arrow_schema, cluster, batch_rows,
-                           columns, zstd_level, token)
-        parts = [r.asDict() for r in pdf.mapInArrow(fn, METRICS_SCHEMA)
-                 .collect()]
+        tasks = [(int(t["part_id"]), t["path"]) for t in todo]
+        parts = [r.asDict() for r in _encode_files(
+            spark, tasks, out_dir, arrow_schema, cluster, batch_rows,
+            columns, zstd_level, token).collect()]
     parts.extend(done_parts.values())
     parts.sort(key=lambda p: p["part_id"])
     if append_prev is not None:

@@ -24,7 +24,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from . import encode as zenc
-from . import zseqfile
 
 
 def epoch_dir(out_dir: str, epoch_id: int) -> str:
@@ -145,83 +144,37 @@ def decode_stream(spark: SparkSession, out_dir: str,
                   columns: list[str] | None = None,
                   predicate: list[tuple] | None = None,
                   schema=None) -> DataFrame:
-    """All committed epochs as one DataFrame — ONE binaryFile scan + one
-    mapInArrow over every committed part across every epoch (the schema
-    is identical across epochs by construction; this is asserted).
-
-    The naive per-epoch ``decode().unionByName()`` chain costs O(epochs)
-    plan nodes and driver-side manifest parses per query — at thousands
-    of epochs of a long-running stream the driver chokes before the
-    cluster does. Here the driver reads the manifests once, flattens the
-    (path, crc) list, and the executed plan carries a single scan node
-    regardless of epoch count. Per-epoch crcs stay enforced (the crc map
-    is keyed by "epoch-dir/file", so identically-named parts of
-    different epochs cannot alias).
+    """All committed epochs as one DataFrame, through the read path of
+    :func:`zseq.decode.decode`: the driver reads every epoch manifest
+    once, prunes each epoch's files against ``predicate`` and packs the
+    surviving (path, crc32) pairs of all epochs into task groups; the
+    plan is ONE ``spark.range`` leaf plus one mapInArrow regardless of
+    the epoch count (a per-epoch ``decode().unionByName()`` chain costs
+    O(epochs) plan nodes — at thousands of epochs the driver chokes
+    before the cluster does). Every file is checked against its own
+    epoch's crc. The schema must be identical across epochs.
 
     ``schema`` -> the same read-side schema EVOLUTION as
     :func:`zseq.decode.decode`: a superset reader schema whose new
     nullable columns are L6-default-filled — a long-lived stream whose
-    consumers grew columns keeps reading every epoch ever committed,
-    still through one scan node."""
-    import pyarrow as pa
-
+    consumers grew columns keeps reading every epoch ever committed."""
     from . import decode as zdec
-    from .encode import read_manifest
     from .session import ship_package
 
     ship_package(spark)
-    epochs = committed_epochs(out_dir)
-    if not epochs:
+    # an epoch listed but unreadable raced with an in-flight commit
+    committed = [(d, m) for d in committed_epochs(out_dir)
+                 if (m := zenc.read_manifest(d)) is not None]
+    if not committed:
         raise FileNotFoundError(f"no committed epochs in {out_dir}")
-    paths: list[str] = []
-    crcs: dict[str, int] = {}
-    schema_hex: str | None = None
-    baseline: str | None = None  # the epoch the schema actually came from
-    names: list[str] = []
-    parsed = None
-    for d in epochs:
-        m = read_manifest(d)
-        if m is None:  # raced with an in-flight commit; listed = committed
-            continue
-        if schema_hex is None:
-            schema_hex, names = m["schema"], list(m["schema_names"])
-            baseline = d
-            parsed = pa.ipc.read_schema(
-                pa.py_buffer(bytes.fromhex(schema_hex)))
-        elif m["schema"] != schema_hex:
+    first, m0 = committed[0]
+    entries = []
+    for d, m in committed:
+        if m["schema"] != m0["schema"]:
             raise ValueError(
-                f"{d}: epoch schema differs from {baseline} — the stream "
+                f"{d}: epoch schema differs from {first} — the stream "
                 "was restarted with a different schema; compact or read "
                 "the epoch ranges separately")
-        base = os.path.basename(os.path.normpath(d))
-        # driver-side file pruning per epoch: zone envelopes + null
-        # counts + hash-bucket pinning (foreachBatch epochs commit via
-        # encode(mode='hash'), so a point lookup touches one file per
-        # epoch) — a year of epochs narrows to the files that can match
-        # before one task launches
-        kept = m.get("parts", [])
-        if predicate:
-            pcol = m.get("partition_col")
-            kept = zseqfile.prune_parts(
-                kept, predicate, mode=m.get("mode"), partition_col=pcol,
-                partitions=m.get("partitions"),
-                key_type=(parsed.field(pcol).type
-                          if pcol in set(names) else None))
-        for p in kept:
-            paths.append(os.path.join(d, p["file"]))
-            crcs[f"{base}/{p['file']}"] = p["crc32"]
-    if schema_hex is None:
-        raise FileNotFoundError(f"no committed epochs in {out_dir}")
-    if schema is not None:
-        reader_struct, read_cols, new_names, written = \
-            zdec.evolved_read_plan(schema, schema_hex, columns)
-        base = zdec._df_from_parts(spark, paths, crcs, written, names,
-                                   read_cols, predicate)
-        return zdec.apply_evolution(base, reader_struct, new_names,
-                                    columns)
-    if columns is not None:
-        missing = set(columns) - set(names)
-        if missing:
-            raise KeyError(f"zseq: unknown columns {sorted(missing)}")
-    return zdec._df_from_parts(spark, paths, crcs, parsed, names,
-                               columns, predicate)
+        entries += zdec.part_entries(d, m)
+    return zdec.read_parts(spark, entries, zdec.manifest_schema(m0),
+                           columns, predicate, schema)

@@ -265,6 +265,12 @@ def _tokens_from_ids(ids_df, doc_id_nullable: bool = False):
 
         quiet_worker_zip_finders()
         for b in batches:
+            if b.column(0).null_count:
+                # to_numpy would turn a NULL id into a garbage non-null
+                # row
+                raise ValueError(
+                    "synth: NULL doc_id — every row needs an id to derive "
+                    "its tokens from")
             if b.num_rows:
                 yield _tokens_batch(
                     b.column(0).to_numpy(zero_copy_only=False))
