@@ -27,6 +27,20 @@ CASES = {
 }
 
 
+def _byte_width_inputs(lo: int) -> dict[int, np.ndarray]:
+    """Arrays whose PACK width is exactly 8, 16 and 32 bits above ``lo``
+    (both extremes present), read in place by the byte-width decode."""
+    rng = np.random.default_rng(8)
+    return {w: lo + np.concatenate(
+        ([0, 2**w - 1], rng.integers(0, 2**w, 3000))).astype(np.int64)
+        for w in (8, 16, 32)}
+
+
+# int64 domain: the 32-bit case sits past the int32 range
+for _w, _a in _byte_width_inputs(2**40).items():
+    CASES[f"pack_width{_w}"] = _a
+
+
 @pytest.mark.parametrize("name", CASES)
 @pytest.mark.parametrize("codec", ALL_CODECS)
 def test_forced_codec_roundtrip(name, codec):
@@ -178,14 +192,16 @@ def test_const_strict_payload_size():
 @pytest.mark.parametrize("tag", [None, IC.T_RAW, IC.T_ZBRA, IC.T_PACK,
                                  IC.T_FORBP, IC.T_DELTA, IC.T_DICT,
                                  IC.T_RLE])
-def test_decode_ints_narrow_matches_int64(tag):
+def test_decode_ints_narrow_matches_int64(tag, monkeypatch):
     rng = np.random.default_rng(17)
+    byte_width = _byte_width_inputs(-(2**31))
     for a in (rng.integers(-(2**31), 2**31, 5000),
               rng.integers(0, 200, 5000),
               np.repeat(rng.integers(0, 9, 200), rng.integers(1, 30, 200)),
               np.sort(rng.integers(-(2**31), 2**31, 1025)),
               np.array([-(2**31), 2**31 - 1, 0, -1]),
-              rng.integers(-3, 3, 2)):
+              rng.integers(-3, 3, 2),
+              *byte_width.values()):
         a32 = a.astype(np.int32)
         seg = IC.encode_ints(a32, codec=tag)
         d64, p64 = IC.decode_ints(seg, 0, a32.size)
@@ -204,6 +220,19 @@ def test_decode_ints_narrow_matches_int64(tag):
                 assert w32.dtype == np.int32
                 assert np.array_equal(w32, w64.astype(np.int32))
                 assert np.array_equal(w32, a32)
+    if tag == IC.T_PACK:
+        # byte widths are read in place, without the bit-unpack kernel
+        def no_unpack(*_args, **_kw):
+            raise AssertionError("unpack_width called for a byte width")
+
+        monkeypatch.setattr(IC.P, "unpack_width", no_unpack)
+        for w, a in byte_width.items():
+            a32 = a.astype(np.int32)
+            seg = IC.encode_ints(a32, codec=IC.T_PACK)
+            assert seg[IC.HEADER.size + 8] == w
+            d64, _ = IC.decode_ints(seg, 0, a32.size)
+            d32, _ = IC.decode_ints(seg, 0, a32.size, np.int32)
+            assert np.array_equal(d64, a) and np.array_equal(d32, a32)
 
 
 def test_decode_ints_narrow_const():
@@ -211,3 +240,46 @@ def test_decode_ints_narrow_const():
                          codec=IC.T_CONST)
     d32, _ = IC.decode_ints(seg, 0, 100, np.int32)
     assert d32.dtype == np.int32 and (d32 == -7).all()
+
+
+# ---------------------------------------------------------------------------
+# Byte-aligned wrap retry: a PACK at a non-byte width hides repeats from
+# zstd (LZ matches whole bytes); a declined wrap is retried at the next
+# byte width, zstd'd whole.
+# ---------------------------------------------------------------------------
+
+def _phase_shifted_repeats() -> np.ndarray:
+    """4096-value rows cut from one 31-bit pseudo-random sequence. Row k
+    starts at 1000k + 1 + k % 7 (never a multiple of 8), so any two rows
+    that share values hold them 1-6 (mod 8) positions apart in the stream:
+    packed at 31 bits, every repeat starts at another bit phase."""
+    base = np.random.default_rng(31).integers(0, 2**31, 260_000)
+    rows = [base[1000 * k + 1 + k % 7:][:4096] for k in range(256)]
+    return np.concatenate(rows).astype(np.int32)
+
+
+@pytest.mark.parametrize("lo", [0, 2**40], ids=["int32", "int64"])
+def test_wrap_retry_at_byte_width_finds_phase_shifted_repeats(lo):
+    a = _phase_shifted_repeats()
+    if lo:
+        a = a.astype(np.int64) + lo
+    pack = IC.encode_ints(a, codec=IC.T_PACK)
+    assert pack[IC.HEADER.size + 8] == 31
+    seg = IC.encode_ints(a)
+    assert seg[0] == IC.T_WRAP
+    assert len(seg) <= 0.5 * len(pack), (len(seg), len(pack))
+    d64, pos = IC.decode_ints(seg, 0, a.size)
+    assert pos == len(seg)
+    assert np.array_equal(d64, a)
+    if not lo:
+        d32, _ = IC.decode_ints(seg, 0, a.size, np.int32)
+        assert np.array_equal(d32, a)
+    # zone bounds come from the 31-bit PACK, not the 32-bit inner segment
+    assert IC.segment_zone(seg, 0, a.size) == IC.segment_zone(pack, 0, a.size)
+
+
+def test_wrap_retry_does_not_grow_random_values():
+    a = np.random.default_rng(17).integers(0, 2**17, 200_000).astype(np.int32)
+    pack = IC.encode_ints(a, codec=IC.T_PACK)
+    assert pack[IC.HEADER.size + 8] == 17
+    assert IC.encode_ints(a) == pack

@@ -81,8 +81,11 @@ def _zstd() -> pa.Codec:
 
 
 def zstd_compress(data: bytes | np.ndarray) -> bytes:
-    buf = data.tobytes() if isinstance(data, np.ndarray) else bytes(data)
-    return _zstd().compress(buf, asbytes=True)
+    """zstd at ``ZSTD_LEVEL``. ``data`` is read in place through the buffer
+    protocol (bytes, memoryview, C-contiguous ndarray): no staging copy."""
+    if isinstance(data, np.ndarray) and not data.flags.c_contiguous:
+        data = np.ascontiguousarray(data)
+    return _zstd().compress(data, asbytes=True)
 
 
 def zstd_decompress(data, raw_size: int) -> bytes:

@@ -33,7 +33,11 @@ types are handled at the column layer):
   RLE     run values + run lengths, each sub-encoded (repetitive data)
   WRAP    zstd over a finished segment (cascade; catches periodic
           structure no single codec models); carries the inner segment's
-          derived zone map so pruning survives the wrap
+          derived zone map so pruning survives the wrap. LZ matches are
+          byte-granular, so a PACK at a non-byte width hides most repeats
+          (7 of 8 start at another bit phase); when the wrap trial fails
+          there, the values are re-packed at the next byte width and
+          zstd'd whole once (``_maybe_wrap_byte_aligned``)
 
 Zone maps are *derived*, not stored: CONST/PACK/FORBP/ZBRA/DICT headers
 already bound their values, so block pruning costs zero extra bytes
@@ -64,6 +68,7 @@ T_WRAP = 0x08
 T_PACK = 0x09
 
 MINI = 1024  # FORBP mini-block size
+_BYTE_WIDTHS = (8, 16, 32, 64)  # PACK widths whose lanes are whole bytes
 
 INT_CODEC_NAMES = {
     T_CONST: "const",
@@ -167,13 +172,19 @@ def _dec_pack(payload: memoryview, count: int,
         nb = (count * width + 7) // 8
         if len(payload) != 9 + nb:
             raise ValueError("pack: payload size mismatch")
-        deltas = P.unpack_width(payload[9:], count, width)
+        if width in _BYTE_WIDTHS:  # byte-width lanes: read in place
+            deltas = np.frombuffer(payload[9:], dtype=f"<u{width // 8}")
+        else:
+            deltas = P.unpack_width(payload[9:], count, width)
+    # dtype= fixes the sum's width: u1/u2 lanes plus a small scalar would
+    # otherwise stay u1/u2 under numpy 1.x value-based casting
     with _wrap:
         if narrow:
             # mod-2^32 arithmetic == int64 decode + astype(int32)
-            return (deltas.astype(np.uint32)
-                    + np.uint32(lo & 0xFFFFFFFF)).view(np.int32)
-        return (deltas + np.int64(lo).view(np.uint64)).view(np.int64)
+            return np.add(deltas, np.uint32(lo & 0xFFFFFFFF),
+                          dtype=np.uint32).view(np.int32)
+        return np.add(deltas, np.int64(lo).view(np.uint64),
+                      dtype=np.uint64).view(np.int64)
 
 
 def _enc_forbp(arr: np.ndarray, mini: int = MINI) -> bytes:
@@ -556,32 +567,77 @@ def encode_ints(values, codec: int | None = None,
     seg = _seg(codec, _ENCODERS[codec](arr))
     if auto and T_WRAP not in exclude:
         seg = _maybe_wrap(seg, n)
+        if seg[0] == T_PACK:
+            seg = _maybe_wrap_byte_aligned(arr, seg, n)
     return seg
 
 
-def _maybe_wrap(seg: bytes, count: int) -> bytes:
-    """Cascade compression: zstd the finished segment when it still has
-    exploitable structure (e.g. periodic patterns no single codec models).
-    A ~64 KiB trial bounds cost; kept only on a clear (>=10%) win. The
-    inner segment's derived zone map rides in the wrap header so block
-    pruning still works on wrapped chunks."""
-    if len(seg) < 128:
-        return seg
-    from .bytescodecs import zstd_compress
-
-    trial = seg if len(seg) <= 65536 else seg[:65536]
-    comp_trial = zstd_compress(np.frombuffer(trial, np.uint8))
-    if len(comp_trial) > 0.85 * len(trial):
-        return seg
-    comp = comp_trial if trial is seg else zstd_compress(
-        np.frombuffer(seg, np.uint8)
-    )
+def _wrapped(seg: bytes, count: int, inner_len: int, comp: bytes) -> bytes:
+    """T_WRAP around ``comp`` (zstd of an ``inner_len``-byte inner segment
+    holding the same values as ``seg``). The zone header is derived from
+    ``seg`` so block pruning still works on wrapped chunks."""
     zone = segment_zone(seg, 0, count)
     zhead = (
         struct.pack("<Bqq", 1, zone[0], zone[1]) if zone
         else struct.pack("<B", 0)
     )
-    wrapped = _seg(T_WRAP, struct.pack("<I", len(seg)) + zhead + comp)
+    return _seg(T_WRAP, struct.pack("<I", inner_len) + zhead + comp)
+
+
+def _maybe_wrap(seg: bytes, count: int) -> bytes:
+    """Cascade compression: zstd the finished segment when it still has
+    exploitable structure (e.g. periodic patterns no single codec models).
+    A ~64 KiB trial bounds cost; kept only on a clear (>=10%) win.
+
+    When this declines a PACK at a non-byte width, ``encode_ints`` retries
+    once in ``_maybe_wrap_byte_aligned`` (one whole-segment zstd pass):
+    zstd matches whole bytes, and bit-packing at such a width shifts
+    repeated runs to other bit phases."""
+    if len(seg) < 128:
+        return seg
+    from .bytescodecs import zstd_compress
+
+    trial = seg if len(seg) <= 65536 else memoryview(seg)[:65536]
+    comp_trial = zstd_compress(trial)
+    if len(comp_trial) > 0.85 * len(trial):
+        return seg
+    comp = comp_trial if trial is seg else zstd_compress(seg)
+    wrapped = _wrapped(seg, count, len(seg), comp)
+    return wrapped if len(wrapped) < 0.9 * len(seg) else seg
+
+
+def _maybe_wrap_byte_aligned(arr: np.ndarray, seg: bytes,
+                             count: int) -> bytes:
+    """Retry of a declined wrap of a PACK segment ``seg`` of ``arr``.
+
+    At a width that is not 8/16/32/64, a run repeated at an offset that is
+    not a multiple of 8 values starts at another bit phase, so zstd's
+    byte-granular matches miss it (row-clustered token blocks whose rows
+    share runs: zstd reaches 0.88 of the 31-bit PACK, but 0.16 at 32 bits).
+    Re-pack the same values at the next byte width and zstd that inner
+    segment whole — a prefix trial cannot tell, because the repeats may lie
+    far apart — keeping the wrap under ``_maybe_wrap``'s 0.9 rule. Costs one
+    whole-segment zstd pass, and runs only after ``_maybe_wrap`` declined.
+    The inner segment is built in one buffer and compressed in place; the
+    zone header still comes from the original ``seg``."""
+    width = seg[HEADER.size + 8]
+    wide = next(b for b in _BYTE_WIDTHS if b >= width)
+    head = HEADER.size + 9
+    inner_len = head + count * (wide // 8)
+    if len(seg) < 128 or width == wide or inner_len > 0xFFFFFFFF:
+        return seg
+    inner = np.empty(inner_len, dtype=np.uint8)
+    inner[:head] = np.frombuffer(seg, np.uint8, head)  # tag, lo
+    HEADER.pack_into(inner, 0, T_PACK, inner_len - HEADER.size)
+    inner[head - 1] = wide
+    lo = int.from_bytes(seg[HEADER.size : head - 1], "little", signed=True)
+    with _wrap:  # deltas < 2^width, so the wrapping subtract casts exactly
+        np.subtract(arr, arr.dtype.type(lo),
+                    out=inner[head:].view(f"<u{wide // 8}"),
+                    casting="unsafe")
+    from .bytescodecs import zstd_compress
+
+    wrapped = _wrapped(seg, count, inner_len, zstd_compress(inner))
     return wrapped if len(wrapped) < 0.9 * len(seg) else seg
 
 

@@ -9,7 +9,11 @@ score each codec's *predicted* encoded size in bytes, and pick the minimum.
 
 Prediction is deliberately cheap (no trial encodes of the full chunk) so the
 selector adds O(SAMPLE) work per chunk regardless of chunk size — the right
-trade at 10^12-sequence scale where chunks are millions of values.
+trade at 10^12-sequence scale where chunks are millions of values. The one
+full-chunk trial is downstream of selection: when a chosen PACK at a
+non-byte width fails its zstd-wrap trial, ``intcodecs`` re-packs it at the
+next byte width and zstds the whole chunk once (byte-granular LZ matches
+cannot see repeats that bit-packing shifted to other bit phases).
 """
 
 from __future__ import annotations
