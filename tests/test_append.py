@@ -1,6 +1,6 @@
 """Batch append mode: grow a committed dataset with new token-staged
-parts + an atomic revision-CAS manifest rewrite (encode API, parquet
-fast path, and the DataSource writer's .mode('append'))."""
+parts + a put-if-absent commit of the next manifest revision (encode
+API, parquet fast path, and the DataSource writer's .mode('append'))."""
 
 import os
 import shutil
@@ -98,13 +98,13 @@ def test_concurrent_writer_fails_cas_cleanly(spark, base):
     commit once any other writer committed r+1 — and the winner's
     dataset stays fully readable."""
     out, _, res1 = base
-    stale_prev = dict(res1.manifest)
+    c = zenc.begin(out, append=True)  # the append reads revision r
     # concurrent overwrite commits first
     winner = synth.tokens_df_range(spark, 120, partitions=1,
                                    start=5_000_000)
     zenc.encode(winner, out, partitions=1)
     with pytest.raises(RuntimeError, match="concurrent"):
-        zenc.append_commit(out, stale_prev, [], None, None, None, "dead")
+        c.finish(dict(res1.manifest, revision=c.revision))
     back = zdec.decode(spark, out)
     assert back.count() == 120
     assert _ids(spark, back) == _ids(spark, winner)

@@ -91,12 +91,12 @@ def test_compact_noop_and_dry_run(spark, many_small):
 
 def test_compact_cas_refuses_concurrent_commit(spark, many_small):
     out, _, res = many_small
-    stale = dict(res.manifest)
+    c = zenc.begin(out, append=True)  # the compaction reads revision r
     # a concurrent append commits first
     zenc.encode(synth.tokens_df_range(spark, 50, partitions=1,
                                       start=1_000_000), out, append=True)
     with pytest.raises(RuntimeError, match="manifest changed"):
-        zenc.compact_commit(out, stale, set(), [], token=None)
+        c.finish(dict(res.manifest, revision=c.revision))
 
 
 def test_compact_zones_survive_for_file_pruning(spark, tmp_path):

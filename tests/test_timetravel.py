@@ -121,8 +121,8 @@ def test_overwrite_resets_history(spark, tmp_path):
 
 
 def test_crash_window_live_without_snapshot_still_reads(spark, tmp_path):
-    # the live swap IS the commit; a crash before the snapshot write
-    # must leave revision==live readable (served from the live file)
+    # a live manifest whose own snapshot is gone (a dataset edited by
+    # hand) must leave revision==live readable (served from the live file)
     out = str(tmp_path / "ds")
     zenc.encode(synth.tokens_df_range(spark, 80, partitions=1), out)
     os.remove(os.path.join(out, zenc._snapshot_name(1)))

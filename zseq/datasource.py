@@ -18,11 +18,14 @@ read
     past in the blob, never decompressed.
 
 write
-    Each task encodes its partition into one .zseq file (Arrow batches
-    straight in via ``DataSourceArrowWriter`` — no row conversion), the
-    driver commits ``manifest.json`` exactly once from the per-task
-    commit messages. Task files are written tmp-then-rename, so retries
-    are idempotent and ``abort()`` leaves no committed state — the same
+    Each task encodes its partition into one job-token-named .zseq file
+    (Arrow batches straight in via ``DataSourceArrowWriter`` — no row
+    conversion); the driver commits the manifest once from the per-task
+    commit messages through ``encode.Commit``, the commit every writer
+    uses: a put-if-absent of the next revision's snapshot, so a
+    concurrent writer that committed first makes this job raise. Task
+    files are written tmp-then-rename, so retries are idempotent, and
+    ``abort()`` removes the job's token-named files — the same
     exactly-once story as ``zseq.encode``.
 
 Usage::
@@ -378,48 +381,27 @@ class ZseqSourceReader(DataSourceReader):
 
 class ZseqSourceWriter(DataSourceArrowWriter):
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
-        import uuid
-
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from .encode import read_manifest
+        from .codecs.bytescodecs import validate_zstd_level
+        from .encode import begin
 
         self._dir = options.get("path")
         if not self._dir:
             raise ValueError("zseq: .save(path) is required")
-        prev = read_manifest(self._dir)
-        self._overwrite = overwrite
-        self._old_files = {p["file"] for p in (prev or {}).get("parts", [])}
-        # Job-unique file-name token: new parts can NEVER clobber a
-        # previously committed dataset's files, so the atomic manifest
-        # write is the single commit point (crash before it leaves the
-        # old dataset fully intact; readers only follow the manifest).
-        self._token = uuid.uuid4().hex[:8]
-        from .codecs.bytescodecs import validate_zstd_level
-
         lvl = options.get("zstd_level")
         self._zstd = int(lvl) if lvl else None
         validate_zstd_level(self._zstd)
         self._cluster = str(options.get("cluster", "true")).lower() != "false"
         self._batch_rows = int(options.get("batch_rows", 1 << 16))
         self._schema = to_arrow_schema(schema)
-        # .mode('append') reaches here as overwrite=False. Appending to
-        # a committed dataset follows the encode-module protocol: exact
-        # schema/zstd match validated UP FRONT (before any task runs),
-        # part ids offset past the committed ones, revision-CAS commit.
-        self._append_prev = None
-        self._part_base = 0
-        if not overwrite and prev is not None:
-            from .encode import check_append_compat
-
-            # the DataSource writer has no reversed_cols option, so the
-            # written parts carry none — a reversed committed dataset
-            # fails the schema-hex check (the marker lives in schema
-            # metadata) with the right message
-            check_append_compat(prev, self._schema, self._zstd, None)
-            self._append_prev = prev
-            self._part_base = 1 + max(
-                (p["part_id"] for p in prev.get("parts", [])), default=-1)
+        # .mode('append') reaches here as overwrite=False: the append
+        # checks run UP FRONT, before any task (the DataSource writer has
+        # no reversed_cols option, so a reversed committed dataset fails
+        # the schema check — the marker lives in field metadata).
+        self._commit = begin(self._dir, append=not overwrite,
+                             arrow_schema=self._schema,
+                             zstd_level=self._zstd)
         os.makedirs(self._dir, exist_ok=True)
 
     def write(self, iterator: Iterator) -> ZseqCommit:
@@ -434,62 +416,31 @@ class ZseqSourceWriter(DataSourceArrowWriter):
         batches = own_batches(list(iterator))
         if not batches:
             return ZseqCommit(None)
-        pid = TaskContext.get().partitionId() + self._part_base
+        c = self._commit
+        pid = TaskContext.get().partitionId() + c.part_base
         tbl = pa.Table.from_batches(batches).combine_chunks()
         row = _encode_table_to_file(
             tbl, self._dir, pid, self._schema, self._cluster,
             self._batch_rows, t0, self._zstd,
-            fname=f"part-{self._token}-{pid:05d}.zseq")
+            fname=f"part-{c.token}-{pid:05d}.zseq")
         return ZseqCommit(row)
 
     def commit(self, messages) -> None:
-        from .encode import build_manifest
+        from .encode import append_commit, build_manifest
 
+        c = self._commit
         parts = [m.part for m in messages if m is not None and m.part]
         parts.sort(key=lambda p: p["part_id"])
-        if self._append_prev is not None:
-            from .encode import append_commit
-
-            append_commit(self._dir, self._append_prev, parts,
-                          self._schema, self._zstd, None, self._token)
+        if not c.replace:
+            append_commit(c, parts, self._schema, self._zstd, None)
             return
-        # revision continues from whatever manifest is live at commit
-        # time (NOT truthiness of old parts — a committed EMPTY dataset
-        # is still revision >= 1 and must not reset the counter the
-        # append CAS relies on)
-        from .encode import read_manifest
-
-        cur = read_manifest(self._dir)
-        prev_rev = cur.get("revision", 1) if cur is not None else 0
-        manifest = build_manifest(
+        c.finish(build_manifest(
             mode="datasource", partitions=len(parts),
             arrow_schema=self._schema, parts=parts, zstd_level=self._zstd,
-            extra={"revision": prev_rev + 1})
-        # The manifest swap IS the commit; only then GC the files this
-        # job is entitled to delete (the superseded manifest's parts and
-        # our own token-named leftovers — never a concurrent writer's or
-        # a crashed job's salvageable parts; readers never glob).
-        from .encode import commit_manifest, gc_unreferenced
-
-        # fresh/overwrite path: superseded parts get GC'd, so retained
-        # snapshots reset (append commits above retain history)
-        commit_manifest(self._dir, manifest, reset_history=True)
-        gc_unreferenced(self._dir, {p["file"] for p in parts},
-                        self._old_files, self._token)
+            extra={"revision": c.revision}))
 
     def abort(self, messages) -> None:
-        # Remove only THIS job's files (token-named); the committed
-        # dataset's files and manifest are untouched.
-        try:
-            names = os.listdir(self._dir)
-        except OSError:
-            return
-        for f in names:
-            if f.startswith(f"part-{self._token}-") and f.endswith(".zseq"):
-                try:
-                    os.remove(os.path.join(self._dir, f))
-                except OSError:
-                    pass
+        self._commit.abort()
 
 
 class ZseqStreamWriter(DataSourceStreamArrowWriter):
@@ -499,9 +450,9 @@ class ZseqStreamWriter(DataSourceStreamArrowWriter):
     manifest), but driven by the engine's streaming commit protocol
     instead of foreachBatch: tasks stage their encoded part under
     .staging/ (they do not know the batch id), and commit(batchId) moves
-    the staged files into the epoch directory and writes its manifest
-    atomically — a replayed epoch that already committed is a no-op
-    (exactly-once), abort removes the staged files.
+    the staged files into the epoch directory and commits its manifest
+    through ``encode.Commit`` — a replayed epoch that already committed
+    is a no-op (exactly-once), abort removes the staged files.
 
     CAVEAT (same semantics as Spark's built-in file sink, whose
     _spark_metadata log lives in the output dir): the epoch manifests in
@@ -560,13 +511,14 @@ class ZseqStreamWriter(DataSourceStreamArrowWriter):
         return ZseqCommit(row)
 
     def commit(self, messages, batchId: int) -> None:
-        from .encode import _atomic_write_json, build_manifest
+        from .encode import begin, build_manifest
         from .streaming import epoch_dir
 
         parts = [m.part for m in messages if m is not None and m.part]
         parts.sort(key=lambda p: p["part_id"])
         dest = epoch_dir(self._dir, batchId)
-        if os.path.exists(os.path.join(dest, "manifest.json")):
+        c = begin(dest)
+        if c.prev is not None:
             # replayed epoch: already committed — drop the staged files
             for p in parts:
                 try:
@@ -583,11 +535,10 @@ class ZseqStreamWriter(DataSourceStreamArrowWriter):
             p["file"] = new
             p["part_id"] = i
         self._gc_staging()
-        manifest = build_manifest(
+        c.finish(build_manifest(
             mode="stream", partitions=len(parts),
             arrow_schema=self._schema, parts=parts, zstd_level=self._zstd,
-            extra={"epoch": int(batchId)})
-        _atomic_write_json(os.path.join(dest, "manifest.json"), manifest)
+            extra={"epoch": int(batchId), "revision": c.revision}))
 
     def _gc_staging(self) -> None:
         """Remove staged leftovers from THIS QUERY's dead/superseded task

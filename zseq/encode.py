@@ -8,7 +8,7 @@ zbra). Here the plan is declarative up to the codec boundary:
      -> mapInArrow(encode_partition)     [Arrow batches -> numpy codecs]
      -> executor writes part-{pid}.zseq  [tmp + rename, idempotent]
      -> metrics rows -> driver           [collect ~P small rows]
-     -> manifest.json                    [atomic commit: tmp + rename]
+     -> manifest-r{N}.json, manifest.json [commit: put-if-absent link]
 
 Scale notes (design target: 10^12 sequences, 1000 executors):
   - One shuffle, hash-partitioned on doc_id: uniform row spread; a heavy
@@ -31,8 +31,9 @@ import json
 import os
 import re
 import time
+import uuid
 import zlib
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
@@ -61,7 +62,7 @@ _METRICS_PA = pa.schema([
 
 def gc_unreferenced(out_dir: str, keep: set[str], old_files: set[str],
                     token: str | None) -> None:
-    """After the manifest swap (the commit point), remove exactly the
+    """After the commit (:meth:`Commit.finish`), remove exactly the
     files this job is entitled to delete and no others:
 
       - the old manifest's parts (``old_files``) — superseded by the
@@ -73,12 +74,12 @@ def gc_unreferenced(out_dir: str, keep: set[str], old_files: set[str],
 
     Everything else is spared — in particular a CONCURRENT writer's
     parts, regardless of when it started: its files are neither in the
-    old manifest nor token-matched, so concurrent overwrite degrades to
-    last-manifest-wins (the loser's parts become unreferenced orphans
-    that ITS next commit or a future overwrite of the same files never
-    touches; readers only follow the manifest). Salvageable parts of a
-    crashed earlier job (no manifest) are likewise never deleted by a
-    later non-overwrite write."""
+    old manifest nor token-matched. Only one of two concurrent writers
+    commits (the other raises in ``finish``), and the loser's staged
+    parts stay unreferenced orphans for vacuum(); readers only follow
+    the manifest. Salvageable parts of a crashed earlier job (no
+    manifest) are likewise never deleted by a later non-overwrite
+    write."""
     try:
         names = os.listdir(out_dir)
     except OSError:
@@ -413,9 +414,7 @@ def _encode_table_to_file(tbl: pa.Table, out_dir: str, part_id: int,
     # Attempt-unique tmp: pid alone can COLLIDE across machines on a
     # shared filesystem (speculative execution / zombie retries of the
     # same task), interleaving two writers into one tmp file.
-    import uuid as _uuid
-
-    tmp = final + f".tmp-{os.getpid()}-{_uuid.uuid4().hex[:8]}"
+    tmp = final + f".tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
     list_elems = 0
     for name in tbl.column_names:
         t = tbl.schema.field(name).type
@@ -568,9 +567,9 @@ def encode(df: DataFrame, out_dir: str, *, mode: str = "preserve",
     (hash mode only).
 
     ``append``: grow a committed dataset instead of replacing it — new
-    parts are staged under a fresh job token, then the manifest is
-    atomically rewritten as old parts + new parts (revision CAS; see
-    :func:`append_commit`). The appended data's schema / zstd level /
+    parts are staged under a fresh job token, then the manifest old
+    parts + new parts is committed as the next revision (put-if-absent;
+    see :class:`Commit`). The appended data's schema / zstd level /
     reversed set must match the committed manifest exactly. Appending to
     a path with no committed manifest degrades to a fresh encode. The
     resulting manifest's mode is ``append`` (no bucketing claim survives
@@ -603,29 +602,6 @@ def encode(df: DataFrame, out_dir: str, *, mode: str = "preserve",
     key = partition_col or df.columns[0]
     os.makedirs(out_dir, exist_ok=True)
 
-    prev = read_manifest(out_dir)
-    if resume and prev is not None and prev.get("mode") in ("append",
-                                                            "compact"):
-        raise ValueError(
-            f"resume cannot target a dataset after '{prev['mode']}' — "
-            "hash-bucket determinism no longer spans the whole part "
-            "set; append new data with append=True or re-encode fresh")
-    append_prev = prev if (append and prev is not None) else None
-    old_files = {q["file"] for q in (prev or {}).get("parts", [])}
-    done_parts: dict[int, dict] = {}
-    if resume:
-        if prev is not None:
-            if prev["partitions"] != P:
-                raise ValueError(
-                    f"resume with partitions={P} but manifest has "
-                    f"{prev['partitions']} — hash assignment would differ"
-                )
-            _check_resume_zstd(prev, zstd_level)
-            for p in prev.get("parts", []):
-                path = os.path.join(out_dir, p["file"])
-                if os.path.exists(path):
-                    done_parts[p["part_id"]] = p
-
     from .codecs.bytescodecs import validate_zstd_level
 
     validate_zstd_level(zstd_level)
@@ -634,21 +610,13 @@ def encode(df: DataFrame, out_dir: str, *, mode: str = "preserve",
         from .column import mark_reversed
 
         arrow_schema = mark_reversed(arrow_schema, reversed_cols)
-    if done_parts and prev is not None \
-            and prev.get("schema") != arrow_schema.serialize() \
-            .to_pybytes().hex():
+    c = begin(out_dir, append=append, resume=resume,
+              arrow_schema=arrow_schema, zstd_level=zstd_level,
+              reversed_cols=reversed_cols)
+    if resume and c.prev is not None and c.prev["partitions"] != P:
         raise ValueError(
-            "resume: dataframe schema (or reversed_cols) differs from "
-            "the committed manifest's — reused parts would contradict "
-            "the new manifest and every read would fail; encode fresh "
-            "(resume=False) or restore the original schema")
-    part_base = 0
-    if append_prev is not None:
-        check_append_compat(append_prev, arrow_schema, zstd_level,
-                            reversed_cols)
-        part_base = 1 + max(
-            (p["part_id"] for p in append_prev.get("parts", [])),
-            default=-1)
+            f"resume with partitions={P} but manifest has "
+            f"{c.prev['partitions']} — hash assignment would differ")
     # Map columns cross the JVM->Python boundary as entries arrays (see
     # strip_maps_df) and are rebuilt to true maps inside the worker; the
     # committed schema/format is the original, map-typed one.
@@ -672,8 +640,8 @@ def encode(df: DataFrame, out_dir: str, *, mode: str = "preserve",
         run = True
     elif mode == "hash":
         work = df.repartition(P, F.col(key))
-        todo = sorted(set(range(P)) - set(done_parts))
-        if done_parts and todo:
+        todo = sorted(set(range(P)) - set(c.done_parts))
+        if c.done_parts and todo:
             # Hash assignment is deterministic for fixed (key, P): after
             # the repartition, spark_partition_id IS the hash bucket —
             # filter to the buckets whose part files are missing.
@@ -682,39 +650,26 @@ def encode(df: DataFrame, out_dir: str, *, mode: str = "preserve",
     else:
         work = df
         run = True
-    # Job-unique part names: a re-encode into a committed directory
-    # can never clobber the live dataset's files; the atomic manifest
-    # write below is the single commit point.
-    import uuid
-
-    token = uuid.uuid4().hex[:8]
     if run:
         fn = _encode_partition(out_dir, arrow_schema, cluster, batch_rows,
-                               zstd_level, token, part_base=part_base)
+                               zstd_level, c.token, part_base=c.part_base)
         metrics = work.mapInArrow(fn, METRICS_SCHEMA)
         parts = [r.asDict() for r in metrics.collect()]
-    parts.extend(done_parts.values())
+    parts.extend(c.done_parts.values())
     parts.sort(key=lambda p: p["part_id"])
 
-    if append_prev is not None:
-        manifest = append_commit(out_dir, append_prev, parts, arrow_schema,
-                                 zstd_level, reversed_cols, token)
+    if not c.replace:
+        manifest = append_commit(c, parts, arrow_schema, zstd_level,
+                                 reversed_cols)
         return EncodeResult(out_dir, manifest, manifest["parts"])
-    manifest = build_manifest(
+    manifest = c.finish(build_manifest(
         mode=mode, partitions=P if mode == "hash" else len(parts),
         arrow_schema=arrow_schema, parts=parts,
         # preserve mode did not partition by any column — recording the
         # defaulted key would claim a bucketing that never happened
         partition_col=key if mode in ("hash", "salted", "range") else None,
         zstd_level=zstd_level, reversed_cols=reversed_cols,
-        # monotone manifest revision: missing == 1 (any committed
-        # manifest is at least its first revision) — the append CAS
-        # compares this plus the part set
-        extra={"revision": (prev.get("revision", 1) + 1) if prev else 1})
-    # fresh/overwrite: superseded parts are GC'd below, so retained
-    # snapshots would reference deleted files — history resets here
-    commit_manifest(out_dir, manifest, reset_history=True)
-    gc_unreferenced(out_dir, {p["file"] for p in parts}, old_files, token)
+        extra={"revision": c.revision}))
     return EncodeResult(out_dir, manifest, parts)
 
 
@@ -762,34 +717,15 @@ def check_append_compat(prev: dict, arrow_schema: pa.Schema,
             f"{prev.get('reversed_cols', [])}")
 
 
-def append_commit(out_dir: str, prev: dict, new_parts: list[dict],
+def append_commit(c: Commit, new_parts: list[dict],
                   arrow_schema: pa.Schema, zstd_level: int | None,
-                  reversed_cols: list[str] | None, token: str,
+                  reversed_cols: list[str] | None,
                   extra: dict | None = None) -> dict:
-    """The append commit point: atomically rewrite the manifest as
-    old parts + new parts, guarded by a revision compare-and-swap.
-
-    The guard re-reads the manifest immediately before the swap and
-    refuses if its revision (or part set) moved since this append read
-    it — a concurrent overwrite/append won the race and committing on
-    top of it would resurrect parts that writer superseded (or drop its
-    appends). The check-then-rename window is not a true CAS across
-    hosts, but on one filesystem it reduces the race to microseconds vs
-    the minutes an encode runs; losers' staged parts are token-named
-    orphans that vacuum() sweeps after the age gate — never a data-loss,
-    by the same argument as crashed overwrites. Old files are NEVER
-    GC'd on append (they are still referenced); only this job's own
-    tmp leftovers are."""
-    cur = read_manifest(out_dir)
-    if cur is None or cur.get("revision", 1) != prev.get("revision", 1) \
-            or {p["file"] for p in cur.get("parts", [])} \
-            != {p["file"] for p in prev.get("parts", [])}:
-        raise RuntimeError(
-            "append: the dataset's manifest changed while this append "
-            "ran (a concurrent overwrite or append committed first) — "
-            "refusing to commit on top of it. This job's staged parts "
-            "are token-named orphans; vacuum() removes them after the "
-            "age gate.")
+    """The append manifest — the committed parts verbatim, then the new
+    ones — published through ``c.finish`` (which alone decides whether a
+    concurrent commit won). Old files are never GC'd on append: they are
+    still referenced."""
+    prev = c.prev
     all_parts = prev.get("parts", []) + new_parts
     extra = dict(extra or {})
     if "input_files" in prev and "input_files" not in extra:
@@ -797,16 +733,13 @@ def append_commit(out_dir: str, prev: dict, new_parts: list[dict],
         # DataFrame append onto a parquet-fast-path dataset must not
         # silently drop the committed input_files list
         extra["input_files"] = prev["input_files"]
-    manifest = build_manifest(
+    return c.finish(build_manifest(
         mode="append", partitions=len(all_parts),
         arrow_schema=arrow_schema, parts=all_parts,
         zstd_level=zstd_level, reversed_cols=reversed_cols,
         extra={**extra,
-               "revision": prev.get("revision", 1) + 1,
-               "appends": prev.get("appends", 0) + 1})
-    commit_manifest(out_dir, manifest)
-    gc_unreferenced(out_dir, {p["file"] for p in all_parts}, set(), token)
-    return manifest
+               "revision": c.revision,
+               "appends": prev.get("appends", 0) + 1}))
 
 
 def _merge_group(task: tuple) -> dict:
@@ -856,15 +789,20 @@ def compact_parts(out_dir: str, spark=None, *,
     envelope is computed fresh by the writer, so driver-side file
     pruning keeps working.
 
-    Commit = revision compare-and-swap manifest rewrite (same guard and
-    race posture as append_commit). Replaced files are deliberately NOT
-    deleted at commit: an in-flight reader may still hold the previous
-    manifest, so they age out via ``vacuum()`` exactly like any other
-    superseded part. A crash before the swap leaves token-named staged
-    orphans and an untouched dataset. ``resume`` refuses compacted
-    datasets (part ids no longer mirror hash buckets), same as appended
-    ones."""
-    prev = read_manifest(out_dir)
+    Commit = the manifest (untouched parts in order, then the merged
+    ones) published through :meth:`Commit.finish`, like an append: a
+    concurrent commit that wins the revision makes this compaction raise
+    and leaves its staged parts as orphans for vacuum(). Replaced files
+    are deliberately NOT deleted at commit: an in-flight reader may
+    still hold the previous manifest, so they age out via ``vacuum()``
+    exactly like any other superseded part. A crash before the commit
+    leaves token-named staged orphans and an untouched dataset.
+    ``resume`` refuses compacted datasets (part ids no longer mirror
+    hash buckets), same as appended ones."""
+    # builds on the live manifest like an append: its parts stay
+    # referenced by the retained snapshots
+    c = begin(out_dir, append=True)
+    prev = c.prev
     if prev is None:
         raise FileNotFoundError(
             f"{out_dir}/manifest.json missing — compact_parts operates "
@@ -905,15 +843,11 @@ def compact_parts(out_dir: str, spark=None, *,
         summary["parts_after"] = len(parts) - summary["parts_merged"] \
             + len(groups)
         return summary
-    import uuid
-
-    token = uuid.uuid4().hex[:8]
-    base = max((p.get("part_id", -1) for p in parts), default=-1) + 1
     lvl = int(prev.get("zstd_level", 3) or 3)
     tasks = [
         (out_dir, [(p["file"], p.get("crc32")) for p in g],
-         prev["schema"], batch_rows, lvl, base + i,
-         f"part-{token}-{base + i:05d}.zseq")
+         prev["schema"], batch_rows, lvl, c.part_base + i,
+         f"part-{c.token}-{c.part_base + i:05d}.zseq")
         for i, g in enumerate(groups)
     ]
     if spark is not None:
@@ -926,7 +860,19 @@ def compact_parts(out_dir: str, spark=None, *,
     else:
         merged = [_merge_group(t) for t in tasks]
     replaced = {p["file"] for g in groups for p in g}
-    manifest = compact_commit(out_dir, prev, replaced, merged, token)
+    new_parts = [p for p in parts if p["file"] not in replaced] + merged
+    extra = {k: prev[k] for k in ("input_files", "appends") if k in prev}
+    manifest = c.finish(build_manifest(
+        mode="compact", partitions=len(new_parts),
+        arrow_schema=pa.ipc.read_schema(
+            pa.py_buffer(bytes.fromhex(prev["schema"]))),
+        parts=new_parts,
+        partition_col=prev.get("partition_col"),
+        zstd_level=prev.get("zstd_level"),
+        reversed_cols=prev.get("reversed_cols"),
+        extra={**extra,
+               "revision": c.revision,
+               "compactions": prev.get("compactions", 0) + 1}))
     summary.update(
         parts_after=len(manifest["parts"]),
         revision=manifest["revision"],
@@ -935,46 +881,6 @@ def compact_parts(out_dir: str, spark=None, *,
         enc_bytes_merged_after=sum(m["enc_bytes"] for m in merged),
     )
     return summary
-
-
-def compact_commit(out_dir: str, prev: dict, replaced: set,
-                   merged: list[dict], token: str | None) -> dict:
-    """The compaction commit point: atomically rewrite the manifest as
-    (untouched parts, in order) + merged parts, guarded by the same
-    revision compare-and-swap as append_commit — a concurrent append or
-    overwrite that committed first wins, and this compaction's staged
-    parts become token-named orphans for vacuum(). Replaced files stay
-    on disk for the age-gated vacuum (in-flight readers of the previous
-    manifest may still fetch them)."""
-    cur = read_manifest(out_dir)
-    if cur is None or cur.get("revision", 1) != prev.get("revision", 1) \
-            or {p["file"] for p in cur.get("parts", [])} \
-            != {p["file"] for p in prev.get("parts", [])}:
-        raise RuntimeError(
-            "compact: the dataset's manifest changed while compaction "
-            "ran (a concurrent append or overwrite committed first) — "
-            "refusing to commit on top of it. This job's staged parts "
-            "are token-named orphans; vacuum() removes them after the "
-            "age gate.")
-    schema = pa.ipc.read_schema(
-        pa.py_buffer(bytes.fromhex(prev["schema"])))
-    new_parts = [p for p in prev.get("parts", [])
-                 if p["file"] not in replaced] + merged
-    extra = {k: prev[k] for k in ("input_files", "appends") if k in prev}
-    manifest = build_manifest(
-        mode="compact", partitions=len(new_parts),
-        arrow_schema=schema, parts=new_parts,
-        partition_col=prev.get("partition_col"),
-        zstd_level=prev.get("zstd_level"),
-        reversed_cols=prev.get("reversed_cols"),
-        extra={**extra,
-               "revision": prev.get("revision", 1) + 1,
-               "compactions": prev.get("compactions", 0) + 1})
-    commit_manifest(out_dir, manifest)
-    # only this job's own retried/aborted token files + stale tmps;
-    # replaced parts are vacuum's to sweep after the age gate
-    gc_unreferenced(out_dir, {p["file"] for p in new_parts}, set(), token)
-    return manifest
 
 
 def _check_resume_zstd(prev: dict, zstd_level: int | None) -> None:
@@ -1105,8 +1011,8 @@ def encode_parquet(spark, input_dir: str, out_dir: str, *,
 
     ``append=True`` encodes ``input_dir``'s files as NEW parts on top of
     the committed dataset (same protocol as :func:`encode`'s append:
-    token-staged parts, revision-CAS manifest rewrite, exact schema
-    match required).
+    token-staged parts, put-if-absent commit of the next revision,
+    exact schema match required).
     """
     from .session import ship_package
 
@@ -1123,52 +1029,12 @@ def encode_parquet(spark, input_dir: str, out_dir: str, *,
         raise FileNotFoundError(f"no .parquet files in {input_dir}")
     os.makedirs(out_dir, exist_ok=True)
 
-    prev = read_manifest(out_dir)
-    if resume and prev is not None and prev.get("mode") in ("append",
-                                                            "compact"):
-        raise ValueError(
-            f"resume cannot target a dataset after '{prev['mode']}' "
-            "(input_files no longer describes the whole part set); "
-            "append new data with append=True or re-encode fresh")
-    append_prev = prev if (append and prev is not None) else None
-    old_files = {q["file"] for q in (prev or {}).get("parts", [])}
-    done_parts: dict[int, dict] = {}
-    if resume:
-        if prev is not None:
-            if prev.get("input_files") != files:
-                raise ValueError(
-                    "resume: input file list changed since the manifest "
-                    "was committed"
-                )
-            _check_resume_zstd(prev, zstd_level)
-            for p in prev.get("parts", []):
-                if os.path.exists(os.path.join(out_dir, p["file"])):
-                    done_parts[p["part_id"]] = p
-
-    part_base = 0
-    if append_prev is not None:
-        part_base = 1 + max(
-            (p["part_id"] for p in append_prev.get("parts", [])),
-            default=-1)
-    todo = [
-        {"part_id": i + part_base, "path": f} for i, f in enumerate(files)
-        if i not in done_parts
-    ]
     import pyarrow.parquet as pq
 
     from .codecs.bytescodecs import validate_zstd_level
 
     validate_zstd_level(zstd_level)
     arrow_schema = pq.read_schema(files[0])
-    # Schema-drift check UP FRONT (footer reads, parallelized): a
-    # mismatching file otherwise surfaces as a cast failure inside some
-    # task minutes into the job, without naming the culprit. The check
-    # mirrors exactly what the task path tolerates — extra columns are
-    # dropped by select(), field order may differ, and losslessly-
-    # castable type drift rides tbl.cast(); only a MISSING required
-    # column or a cast-incompatible type is refused. Files already
-    # committed by a resume manifest were validated when first encoded
-    # (input_files is pinned) and are skipped.
     want = {f.name: f.type for f in arrow_schema}
     if columns:
         unknown = set(columns) - set(want)
@@ -1179,9 +1045,30 @@ def encode_parquet(spark, input_dir: str, out_dir: str, *,
             raise KeyError(
                 f"encode_parquet: columns {sorted(unknown)} not in "
                 f"{files[0]}'s schema {sorted(want)}")
+        arrow_schema = pa.schema([arrow_schema.field(c) for c in columns])
+    if reversed_cols:
+        from .column import mark_reversed
+
+        arrow_schema = mark_reversed(arrow_schema, reversed_cols)
+    c = begin(out_dir, append=append, resume=resume,
+              arrow_schema=arrow_schema, zstd_level=zstd_level,
+              reversed_cols=reversed_cols)
+    if resume and c.prev is not None and c.prev.get("input_files") != files:
+        raise ValueError(
+            "resume: input file list changed since the manifest was "
+            "committed")
+    # Schema-drift check UP FRONT (footer reads, parallelized): a
+    # mismatching file otherwise surfaces as a cast failure inside some
+    # task minutes into the job, without naming the culprit. The check
+    # mirrors exactly what the task path tolerates — extra columns are
+    # dropped by select(), field order may differ, and losslessly-
+    # castable type drift rides tbl.cast(); only a MISSING required
+    # column or a cast-incompatible type is refused. Files already
+    # committed by a resume manifest were validated when first encoded
+    # (input_files is pinned) and are skipped.
     required = set(columns) if columns else set(want)
     to_check = [f for i, f in enumerate(files)
-                if i not in done_parts and f != files[0]]
+                if i not in c.done_parts and f != files[0]]
     if to_check:
         from concurrent.futures import ThreadPoolExecutor
 
@@ -1194,56 +1081,30 @@ def encode_parquet(spark, input_dir: str, out_dir: str, *,
                 raise ValueError(
                     f"encode_parquet: {f} is missing column(s) "
                     f"{sorted(missing)} present in {files[0]}")
-            drift = {c for c in required
-                     if not _types_castable(got[c], want[c])}
+            drift = {col for col in required
+                     if not _types_castable(got[col], want[col])}
             if drift:
                 raise ValueError(
                     f"encode_parquet: {f} column type(s) are not "
                     f"castable to {files[0]}'s: "
-                    + ", ".join(f"{c}: {got[c]} -> {want[c]}"
-                                for c in sorted(drift)))
-    if columns:
-        arrow_schema = pa.schema([arrow_schema.field(c) for c in columns])
-    if reversed_cols:
-        from .column import mark_reversed
-
-        arrow_schema = mark_reversed(arrow_schema, reversed_cols)
-    if done_parts and prev is not None \
-            and prev.get("schema") != arrow_schema.serialize() \
-            .to_pybytes().hex():
-        raise ValueError(
-            "resume: projected schema (columns/reversed_cols) differs "
-            "from the committed manifest's — reused parts would "
-            "contradict the new manifest; encode fresh (resume=False) "
-            "or restore the original projection")
-    if append_prev is not None:
-        check_append_compat(append_prev, arrow_schema, zstd_level,
-                            reversed_cols)
-    parts: list[dict] = []
-    import uuid
-
-    token = uuid.uuid4().hex[:8]
-    if todo:
-        tasks = [(int(t["part_id"]), t["path"]) for t in todo]
-        parts = [r.asDict() for r in _encode_files(
-            spark, tasks, out_dir, arrow_schema, cluster, batch_rows,
-            columns, zstd_level, token).collect()]
-    parts.extend(done_parts.values())
+                    + ", ".join(f"{col}: {got[col]} -> {want[col]}"
+                                for col in sorted(drift)))
+    tasks = [(i + c.part_base, f) for i, f in enumerate(files)
+             if i not in c.done_parts]
+    parts = [r.asDict() for r in _encode_files(
+        spark, tasks, out_dir, arrow_schema, cluster, batch_rows,
+        columns, zstd_level, c.token).collect()] if tasks else []
+    parts.extend(c.done_parts.values())
     parts.sort(key=lambda p: p["part_id"])
-    if append_prev is not None:
+    if not c.replace:
         manifest = append_commit(
-            out_dir, append_prev, parts, arrow_schema, zstd_level,
-            reversed_cols, token,
-            extra={"input_files":
-                   append_prev.get("input_files", []) + files})
+            c, parts, arrow_schema, zstd_level, reversed_cols,
+            extra={"input_files": c.prev.get("input_files", []) + files})
         return EncodeResult(out_dir, manifest, manifest["parts"])
-    manifest = build_manifest(
+    manifest = c.finish(build_manifest(
         mode="files", partitions=len(files), arrow_schema=arrow_schema,
         parts=parts, zstd_level=zstd_level, reversed_cols=reversed_cols,
-        extra={"input_files": files,
-               "revision": (prev.get("revision", 1) + 1) if prev else 1})
-    commit_manifest(out_dir, manifest, reset_history=True)
-    gc_unreferenced(out_dir, {p["file"] for p in parts}, old_files, token)
+        extra={"input_files": files, "revision": c.revision}))
     return EncodeResult(out_dir, manifest, parts)
 
 
@@ -1253,12 +1114,13 @@ def vacuum(out_dir: str, min_age_sec: float = 86400.0,
     """Remove .zseq files (and their .tmp leftovers) that no committed
     manifest references and that are older than ``min_age_sec``.
 
-    Why it exists: a batch encode that crashes BEFORE its manifest swap
-    leaves token-named orphans no later job is entitled to delete
-    (gc_unreferenced only touches superseded-manifest parts and the
-    running job's own token), so repeatedly failed writes leak disk in
-    long-lived directories. Vacuum is the explicit, age-gated sweep for
-    exactly those; the age gate keeps a concurrently RUNNING writer's
+    Why it exists: a batch encode that crashes before its commit, or
+    loses the commit to a concurrent writer, leaves token-named orphans
+    no later job is entitled to delete (gc_unreferenced only touches
+    superseded-manifest parts and the running job's own token), so
+    repeatedly failed writes leak disk in long-lived directories.
+    Vacuum is the explicit, age-gated sweep for exactly those; the age
+    gate keeps a concurrently RUNNING writer's
     fresh parts safe.
 
     Layouts: a committed batch dataset (keeps the manifest's parts), or
@@ -1313,8 +1175,7 @@ def vacuum(out_dir: str, min_age_sec: float = 86400.0,
     if m is not None:
         keep = {p["file"] for p in m.get("parts", [])}
         live_rev = m.get("revision", 1)
-        snaps = sorted(int(mt.group(1)) for f in os.listdir(out_dir)
-                       if (mt := _SNAPSHOT_RE.match(f)))
+        snaps = sorted(_snapshots(out_dir))
         protected = set(snaps[-keep_revisions:]) | {live_rev}
         for f in sorted(os.listdir(out_dir)):
             mt = _SNAPSHOT_RE.match(f)
@@ -1415,23 +1276,32 @@ def to_arrow_schema(df: DataFrame) -> pa.Schema:
 
 def read_manifest(out_dir: str, revision: int | None = None) -> dict | None:
     """Read the live manifest, or — time travel — a retained revision
-    snapshot. Every commit (fresh, append, compact, DataSource) writes
-    its manifest twice: the live ``manifest.json`` plus an immutable
-    ``manifest-r{N}.json`` snapshot. Because append never deletes parts
-    and compaction leaves replaced files for the age-gated vacuum, a
+    snapshot. Every commit (:meth:`Commit.finish`) publishes its manifest
+    twice: first the immutable ``manifest-r{N}.json`` snapshot, whose
+    put-if-absent creation IS the commit, then the live
+    ``manifest.json``. So the live manifest is the highest snapshot
+    whenever that is newer than ``manifest.json`` (a writer died between
+    the two steps, or two commits replaced ``manifest.json`` out of
+    order). A directory without ``manifest.json`` holds no committed
+    dataset; datasets without snapshots (the rev00001 fixture) read
+    ``manifest.json`` alone. Because append never deletes parts and
+    compaction leaves replaced files for the age-gated vacuum, a
     retained snapshot's part list stays readable until vacuum expires
     it; overwrite resets history (its commit deletes the superseded
     parts immediately, so their snapshots would be lies).
 
-    ``revision=N`` returns that snapshot (the live manifest when N is
-    the live revision — covers the crash window where the live swap
-    landed but the snapshot write didn't). Missing/expired revisions
+    ``revision=N`` returns that snapshot (answered from the live
+    manifest when N is the live revision). Missing/expired revisions
     raise with the list of retained ones."""
     path = os.path.join(out_dir, "manifest.json")
     live = None
     if os.path.exists(path):
         with open(path) as f:
             live = json.load(f)
+        top = _latest_snapshot(out_dir)
+        if top > live.get("revision", 1):
+            with open(os.path.join(out_dir, _snapshot_name(top))) as f:
+                live = json.load(f)
     if revision is None:
         return live
     if live is not None and live.get("revision", 1) == revision:
@@ -1457,6 +1327,18 @@ def _snapshot_name(revision: int) -> str:
 # revisions()/vacuum (never expired, parts unprotected by the keep-set)
 # while read_manifest(revision=N) still found it by direct path.
 _SNAPSHOT_RE = re.compile(r"^manifest-r(\d{8,})\.json$")
+
+
+def _snapshots(out_dir: str) -> list[int]:
+    try:
+        names = os.listdir(out_dir)
+    except OSError:
+        return []
+    return [int(mt.group(1)) for f in names if (mt := _SNAPSHOT_RE.match(f))]
+
+
+def _latest_snapshot(out_dir: str) -> int:
+    return max(_snapshots(out_dir), default=0)
 
 
 def revisions(out_dir: str) -> list[dict]:
@@ -1499,17 +1381,17 @@ def rollback(out_dir: str, revision: int) -> dict:
 
     Refuses if any of the target's part files are already gone (vacuum
     expired that revision's data — the catalog entry alone can't bring
-    it back), and guards the swap with the same revision CAS as append
-    so a concurrent writer's commit is never silently overwritten.
-    Rolling back to the live revision is a no-op returning it."""
+    it back), and commits through :meth:`Commit.finish` like every
+    writer, so a concurrent writer's commit is never silently
+    overwritten. Rolling back to the live revision is a no-op returning
+    it."""
     target = read_manifest(out_dir, revision=revision)  # raises if gone
-    cur = read_manifest(out_dir)
-    if cur is None:
+    c = begin(out_dir, append=True)
+    if c.prev is None:
         raise FileNotFoundError(f"{out_dir}/manifest.json missing — "
                                 "nothing to roll back")
-    cur_rev = cur.get("revision", 1)
-    if revision == cur_rev:
-        return cur
+    if revision == c.prev.get("revision", 1):
+        return c.prev
     missing = [p["file"] for p in target.get("parts", [])
                if not os.path.exists(os.path.join(out_dir, p["file"]))]
     if missing:
@@ -1518,53 +1400,162 @@ def rollback(out_dir: str, revision: int) -> dict:
             f"{len(missing)} of its part files were already removed by "
             f"vacuum (first: {missing[0]}); the snapshot is a catalog "
             "entry only")
-    manifest = {**target,
-                "revision": cur_rev + 1,
-                "rollback_of": revision,
-                "rollbacks": cur.get("rollbacks", 0) + 1}
-    latest = read_manifest(out_dir)
-    if latest is None or latest.get("revision", 1) != cur_rev:
-        raise RuntimeError(
-            "rollback: the dataset's manifest changed while this "
-            "rollback ran (a concurrent writer committed first) — "
-            "re-read `revisions()` and retry against the new state")
-    commit_manifest(out_dir, manifest)
-    return manifest
+    return c.finish({**target,
+                     "revision": c.revision,
+                     "rollback_of": revision,
+                     "rollbacks": c.prev.get("rollbacks", 0) + 1})
 
 
-def commit_manifest(out_dir: str, manifest: dict, *,
-                    reset_history: bool = False) -> None:
-    """The single manifest commit point: atomically swap the live
-    ``manifest.json`` (THE commit), then write this revision's
-    immutable snapshot for time travel. Crash between the two leaves a
-    live manifest whose own snapshot is missing — read_manifest covers
-    that window by answering revision==live from the live file.
+@dataclass
+class Commit:
+    """One write job on ``out_dir``, from :func:`begin` to
+    :meth:`finish` (publish) or :meth:`abort` (discard). Every writer
+    commits through it: ``encode``, ``encode_parquet``, the DataSource
+    batch and stream writers, ``encode_stream`` epochs, ``compact_parts``
+    and ``rollback``.
 
-    ``reset_history`` (fresh/overwrite commits, whose gc_unreferenced
-    deletes the superseded parts): retained snapshots would reference
-    deleted files, so they are removed FIRST — a crash after removal
-    but before the swap loses only history the overwrite was about to
-    destroy anyway; the live dataset stays intact."""
-    if reset_history:
+    ``prev`` is the manifest the job builds on (None: fresh) and
+    ``revision`` the one it commits (prev's + 1). ``replace``: the
+    commit supersedes prev's parts (fresh/overwrite: they are GC'd and
+    history resets); otherwise (append, compact, rollback) they stay
+    referenced. ``token`` names the job's staged part files,
+    ``part_base`` is the first part id past the committed ones, and
+    ``done_parts`` maps part id -> committed entry for the parts a
+    resume reuses."""
+    out_dir: str
+    prev: dict | None
+    revision: int
+    replace: bool
+    token: str
+    part_base: int = 0
+    done_parts: dict = field(default_factory=dict)
+
+    def finish(self, manifest: dict) -> dict:
+        """Publish ``manifest`` (whose ``revision`` is ``self.revision``):
+
+        1. write it to a job-token-named tmp and fsync;
+        2. ``os.link`` the tmp to ``manifest-r{revision}.json`` — THE
+           commit point. Linking is put-if-absent, so of the writers
+           that read the same revision exactly one commits the next; the
+           others raise;
+        3. lose as well when a higher snapshot exists: an overwrite's
+           history reset freed this revision under a stale writer;
+        4. atomically replace ``manifest.json`` through a token-named
+           tmp — a separate file, not a link to the snapshot, because
+           operators edit ``manifest.json`` in place;
+        5. overwrite only: remove the snapshots below this revision
+           (they reference the parts step 6 deletes);
+        6. GC the files this job is entitled to delete.
+
+        A crash after step 2 leaves the commit live (read_manifest
+        follows the highest snapshot); a crash before it leaves the
+        previous revision live and token-named orphans for vacuum()."""
+        d = self.out_dir
+        snap = os.path.join(d, _snapshot_name(self.revision))
+        tmp = _write_json_tmp(os.path.join(d, "manifest.json"), manifest,
+                              self.token)
         try:
-            for f in os.listdir(out_dir):
-                if _SNAPSHOT_RE.match(f):
+            try:
+                os.link(tmp, snap)
+                won = _latest_snapshot(d) == self.revision
+                if not won:
+                    os.remove(snap)
+            except FileExistsError:
+                won = False
+        finally:
+            os.remove(tmp)
+        if not won:
+            raise RuntimeError(
+                f"commit of revision {self.revision}: the dataset's "
+                "manifest changed while this job ran (a concurrent writer "
+                "committed first) — refusing to commit on top of it. This "
+                "job's staged parts are token-named orphans; vacuum() "
+                "removes them after the age gate.")
+        _atomic_write_json(os.path.join(d, "manifest.json"), manifest,
+                           self.token)
+        if self.replace:
+            for r in _snapshots(d):
+                if r < self.revision:
                     try:
-                        os.remove(os.path.join(out_dir, f))
+                        os.remove(os.path.join(d, _snapshot_name(r)))
                     except OSError:
                         pass
-        except OSError:
-            pass
-    _atomic_write_json(os.path.join(out_dir, "manifest.json"), manifest)
-    _atomic_write_json(
-        os.path.join(out_dir, _snapshot_name(manifest.get("revision", 1))),
-        manifest)
+        old = {p["file"] for p in (self.prev or {}).get("parts", [])} \
+            if self.replace else set()
+        gc_unreferenced(d, {p["file"] for p in manifest.get("parts", [])},
+                        old, self.token)
+        return manifest
+
+    def abort(self) -> None:
+        """Remove this job's token-named parts and their ``.zseq.tmp-*``
+        leftovers; committed files and manifests are untouched."""
+        gc_unreferenced(self.out_dir, set(), set(), self.token)
 
 
-def _atomic_write_json(path: str, obj: dict) -> None:
-    tmp = path + ".tmp"
+def begin(out_dir: str, *, append: bool = False, resume: bool = False,
+          arrow_schema: pa.Schema | None = None,
+          zstd_level: int | None = None,
+          reversed_cols: list[str] | None = None) -> Commit:
+    """Start a write job on ``out_dir``: read the manifest it builds on
+    and run the checks every writer shares.
+
+    ``append``: build on the committed manifest (append, compact,
+    rollback); with no committed manifest this is a fresh commit.
+    ``resume``: reuse the committed parts whose files survive — refused
+    after an append or compaction (part ids no longer mirror the
+    input); the caller checks its own resume key (partition count,
+    input file list). ``arrow_schema``: what the job writes, checked
+    against reused parts and, on append, against the committed schema.
+    With no manifest the job commits past the highest leftover snapshot
+    (a fresh commit that died before its ``manifest.json`` swap), so no
+    writer is wedged on a revision that is already taken."""
+    prev = read_manifest(out_dir)
+    done: dict[int, dict] = {}
+    part_base = 0
+    if prev is not None and resume:
+        if prev.get("mode") in ("append", "compact"):
+            raise ValueError(
+                f"resume cannot target a dataset after '{prev['mode']}' — "
+                "its part ids no longer mirror the input (hash buckets, "
+                "input_files); append new data with append=True or "
+                "re-encode fresh")
+        _check_resume_zstd(prev, zstd_level)
+        done = {p["part_id"]: p for p in prev.get("parts", [])
+                if os.path.exists(os.path.join(out_dir, p["file"]))}
+        if done and prev.get("schema") != \
+                arrow_schema.serialize().to_pybytes().hex():
+            raise ValueError(
+                "resume: the schema (columns, reversed_cols) differs from "
+                "the committed manifest's — reused parts would contradict "
+                "the new manifest and every read would fail; encode fresh "
+                "(resume=False) or restore the original schema")
+    if prev is not None and append:
+        if arrow_schema is not None:
+            check_append_compat(prev, arrow_schema, zstd_level,
+                                reversed_cols)
+        part_base = 1 + max(
+            (p.get("part_id", -1) for p in prev.get("parts", [])),
+            default=-1)
+    n = prev.get("revision", 1) if prev is not None \
+        else _latest_snapshot(out_dir)
+    return Commit(out_dir, prev, revision=n + 1,
+                  replace=not (append and prev is not None),
+                  token=uuid.uuid4().hex[:8], part_base=part_base,
+                  done_parts=done)
+
+
+def _write_json_tmp(path: str, obj: dict, token: str) -> str:
+    tmp = f"{path}.tmp-{token}"
     with open(tmp, "w") as f:
         json.dump(obj, f, indent=1)
         f.flush()
         os.fsync(f.fileno())
-    os.replace(tmp, path)
+    return tmp
+
+
+def _atomic_write_json(path: str, obj: dict,
+                       token: str | None = None) -> None:
+    """tmp + fsync + rename. The tmp carries the writer's job token, so
+    two interleaved commits never write into one tmp file."""
+    os.replace(_write_json_tmp(path, obj, token or uuid.uuid4().hex[:8]),
+               path)

@@ -31,6 +31,9 @@ def epoch_dir(out_dir: str, epoch_id: int) -> str:
 
 
 def committed_epochs(out_dir: str) -> list[str]:
+    """Epoch directories holding a ``manifest.json`` — the rule of
+    ``encode.read_manifest`` (a directory without one holds no committed
+    dataset), checked without parsing every epoch's manifest."""
     if not os.path.isdir(out_dir):
         return []
     out = []
@@ -54,7 +57,7 @@ def encode_stream(stream_df: DataFrame, out_dir: str, checkpoint: str,
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         dest = epoch_dir(out_dir, epoch_id)
-        if os.path.exists(os.path.join(dest, "manifest.json")):
+        if zenc.read_manifest(dest) is not None:
             return  # replayed epoch — already committed, exactly-once
         zenc.encode(batch_df, dest, mode="hash",
                     partitions=partitions
