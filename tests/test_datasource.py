@@ -395,13 +395,40 @@ def test_partition_packing_math(spark, tmp_path):
     assert sorted(files) == sorted(p for p, *_ in r_big._parts)
     assert len(files) == len(set(files)) == 16
     # parallelism floor: even with an unbounded byte target the corpus
-    # spreads over ~defaultParallelism tasks
+    # spreads over exactly defaultParallelism tasks (one wave)
     floor = min(16, r_big._min_tasks)
-    assert len(groups) >= floor
+    assert len(groups) == floor
 
     r_tiny = ZseqSourceReader({"path": out,
                                "target_partition_bytes": "1"})
     assert len(r_tiny.partitions()) == 16  # one file per task
+
+
+def _plan(sizes, min_tasks, target_bytes=None):
+    from zseq.decode import TARGET_BYTES, plan_groups
+
+    entries = [(f"p{i}", i, s, {}, None) for i, s in enumerate(sizes)]
+    groups = plan_groups(entries, None, min_tasks,
+                         target_bytes or TARGET_BYTES)
+    # every file exactly once, in order, in non-empty groups
+    assert [p for g in groups for p, _ in g] == [e[0] for e in entries]
+    assert all(groups) or groups == [()]
+    return [len(g) for g in groups]
+
+
+def test_plan_groups_one_wave():
+    """Near-equal parts never spill into an extra group: 16 parts of
+    5.97-5.98 MB on 4 cores plan as 4 groups of 4, not [3, 3, 4, 4, 2]."""
+    sizes = [5_970_000 + 677 * i % 9_973 for i in range(16)]
+    assert _plan(sizes, 4) == [4, 4, 4, 4]
+    assert _plan(sizes, 8) == [2] * 8
+    assert _plan(sizes[:3], 8) == [1, 1, 1]   # fewer files than tasks
+    assert _plan(sizes, 4, target_bytes=1) == [1] * 16
+    assert _plan(sizes, 4, target_bytes=1 << 40) == [4, 4, 4, 4]
+    assert _plan(sizes, 4, target_bytes=12_000_000) == [2] * 8
+    assert _plan([0] * 10, 4) == [3, 2, 3, 2]   # no sizes: by count
+    assert _plan([1000] + [1] * 7, 4) == [1, 1, 1, 5]   # skew: non-empty
+    assert _plan([], 4) == [0]
 
 
 def test_partition_packing_without_enc_bytes(spark, tmp_path):

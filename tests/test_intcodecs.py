@@ -283,3 +283,66 @@ def test_wrap_retry_does_not_grow_random_values():
     pack = IC.encode_ints(a, codec=IC.T_PACK)
     assert pack[IC.HEADER.size + 8] == 17
     assert IC.encode_ints(a) == pack
+
+
+# ---------------------------------------------------------------------------
+# The one-pass unpack returns uint32 and writes into the caller's array:
+# int64 consumers must widen explicitly (under numpy 1.x, a uint32 array
+# plus a uint64 scalar stays uint32, and a later view(int64) halves it).
+# ---------------------------------------------------------------------------
+
+def _pinned_width(width: int, lo: int = -(2**31),
+                  n: int = 3 * IC.MINI + 77) -> np.ndarray:
+    """int64 values with every FORBP mini (the partial tail too) and the
+    whole array spanning exactly ``width`` bits above ``lo``."""
+    u = np.random.default_rng(width).integers(0, 1 << width, n)
+    u[::IC.MINI] = 0
+    u[1::IC.MINI] = (1 << width) - 1
+    return u + lo
+
+
+@pytest.mark.parametrize("tag", [IC.T_PACK, IC.T_FORBP])
+@pytest.mark.parametrize("width", range(1, 33))
+def test_forced_width_decodes_to_int64_and_int32(tag, width):
+    # lo = 0 keeps every min small enough for the numpy 1.x trap
+    for lo in (0, -(2**31)):
+        a = _pinned_width(width, lo)
+        fits32 = a.max() < 2**31
+        for arr in (a, a.astype(np.int32)) if fits32 else (a,):
+            seg = IC.encode_ints(arr, codec=tag)
+            if tag == IC.T_PACK:
+                assert seg[IC.HEADER.size + 8] == width
+            else:
+                heads = np.frombuffer(seg, np.uint8, 4 * 9,
+                                      IC.HEADER.size + 2)
+                assert (heads.reshape(4, 9)[:, 8] == width).all()
+            for dt in (np.int64, np.int32):
+                got, pos = IC.decode_ints(seg, 0, a.size, dt)
+                assert pos == len(seg)
+                assert got.dtype == dt and got.shape == (a.size,)
+                assert np.array_equal(got, a.astype(dt))
+
+
+@pytest.mark.parametrize("tag", [IC.T_PACK, IC.T_FORBP])
+def test_narrow_decode_never_takes_lane_path(tag, monkeypatch):
+    """An int32 PACK/FORBP column at widths <= 32 decodes with the
+    one-pass kernel, reached through ``P.unpack_width``."""
+    def no_lanes(*_args, **_kw):
+        raise AssertionError("lane unpack called for a width <= 32")
+
+    calls = []
+    unpack = IC.P.unpack_width
+
+    def counted(*args, **kw):
+        calls.append(args[2])
+        return unpack(*args, **kw)
+
+    monkeypatch.setattr(IC.P, "_unpack_width_lanes", no_lanes)
+    monkeypatch.setattr(IC.P, "unpack_width", counted)
+    for width in range(1, 33):
+        a32 = _pinned_width(width).astype(np.int32)
+        seg = IC.encode_ints(a32, codec=tag)
+        got, _ = IC.decode_ints(seg, 0, a32.size, np.int32)
+        assert np.array_equal(got, a32)
+        assert (width in calls) == (tag == IC.T_FORBP
+                                    or width not in IC._BYTE_WIDTHS)

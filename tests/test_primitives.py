@@ -145,3 +145,35 @@ def test_pack_width_narrow_dtype_input(width, dt):
     rng = np.random.default_rng(width)
     u = rng.integers(0, 1 << width, size=1000, dtype=np.uint64)
     assert P.pack_width(u.astype(dt), width) == P._pack_width_lanes(u, width)
+
+
+# ---------------------------------------------------------------------------
+# One-pass unpack (strided windows straight to uint32) must match the lane
+# reference at every width it serves, whatever buffer the payload sits in.
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("width", range(1, 33))
+def test_unpack_width_matches_lanes(width):
+    rng = np.random.default_rng(100 + width)
+    for n in (0, 1, 7, 8, 9, 1023, 1024, 1025, 65537):
+        u = rng.integers(0, 1 << width, size=n, dtype=np.uint64)
+        packed = P.pack_width(u, width)
+        want = P._unpack_width_lanes(packed, n, width)
+        assert np.array_equal(want, u)
+        # exact-size bytes; a slice followed by 0xFF bytes (windows past
+        # the payload must not leak them); a slice at an odd offset
+        ff = memoryview(packed + b"\xff" * 16)[:len(packed)]
+        odd = memoryview(b"\x00" + packed + b"\x00")[1:len(packed) + 1]
+        for buf in (packed, ff, odd):
+            got = P.unpack_width(buf, n, width)
+            assert got.dtype == np.uint32
+            assert np.array_equal(got, want), (width, n)
+        for dt in (np.uint32, np.uint64):
+            out = np.full(n + 2, 7, dtype=dt)
+            res = P.unpack_width(odd, n, width, out=out[1:n + 1])
+            assert np.shares_memory(res, out) or n == 0
+            assert np.array_equal(out[1:n + 1], want)
+            assert out[0] == 7 and out[-1] == 7  # nothing written outside
+        if n:
+            with pytest.raises(ValueError):
+                P.unpack_width(packed[:-1], n, width)

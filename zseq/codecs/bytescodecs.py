@@ -89,6 +89,10 @@ def zstd_compress(data: bytes | np.ndarray) -> bytes:
 
 
 def zstd_decompress(data, raw_size: int) -> bytes:
+    # The bytes() copy stays: passing pa.py_buffer(data) and returning the
+    # Arrow buffer measured slower for an 8 MB output (min 19.6 vs 16.3 ms,
+    # result read once, 4-core Xeon VM), likely page faults on the fresh
+    # Arrow-pool allocation.
     return _zstd().decompress(bytes(data), decompressed_size=raw_size,
                               asbytes=True)
 

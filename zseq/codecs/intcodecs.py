@@ -164,27 +164,24 @@ def _dec_pack(payload: memoryview, count: int,
             return np.full(count, int(np.int64(lo).astype(np.int32)),
                            dtype=np.int32)
         return np.full(count, lo, dtype=np.int64)
-    if width == 64:
-        deltas = np.frombuffer(payload[9:], dtype="<u8")
-        if deltas.size != count:
-            raise ValueError("pack: raw delta count mismatch")
-    else:
-        nb = (count * width + 7) // 8
-        if len(payload) != 9 + nb:
-            raise ValueError("pack: payload size mismatch")
-        if width in _BYTE_WIDTHS:  # byte-width lanes: read in place
-            deltas = np.frombuffer(payload[9:], dtype=f"<u{width // 8}")
-        else:
-            deltas = P.unpack_width(payload[9:], count, width)
-    # dtype= fixes the sum's width: u1/u2 lanes plus a small scalar would
-    # otherwise stay u1/u2 under numpy 1.x value-based casting
+    if len(payload) != 9 + (count * width + 7) // 8:
+        raise ValueError("pack: payload size mismatch")
+    # narrow: mod-2^32 arithmetic == int64 decode + astype(int32)
+    udt = np.uint32 if narrow else np.uint64
+    lo_u = np.int64(lo).astype(udt)
     with _wrap:
-        if narrow:
-            # mod-2^32 arithmetic == int64 decode + astype(int32)
-            return np.add(deltas, np.uint32(lo & 0xFFFFFFFF),
-                          dtype=np.uint32).view(np.int32)
-        return np.add(deltas, np.int64(lo).view(np.uint64),
-                      dtype=np.uint64).view(np.int64)
+        if width in _BYTE_WIDTHS:  # byte-width lanes: read in place
+            # dtype= fixes the sum's width: u1/u2 lanes plus a small
+            # scalar would otherwise stay u1/u2 under numpy 1.x
+            # value-based casting
+            out = np.add(np.frombuffer(payload[9:],
+                                       dtype=f"<u{width // 8}"),
+                         lo_u, dtype=udt)
+        else:  # unpack straight into the result, add lo in place
+            out = P.unpack_width(payload[9:], count, width,
+                                 out=np.empty(count, dtype=udt))
+            out += lo_u
+    return out.view(np.int32 if narrow else np.int64)
 
 
 def _enc_forbp(arr: np.ndarray, mini: int = MINI) -> bytes:
@@ -271,6 +268,14 @@ def _enc_forbp(arr: np.ndarray, mini: int = MINI) -> bytes:
 
 def _dec_forbp(payload: memoryview, count: int,
                narrow: bool = False) -> np.ndarray:
+    """Inverse of ``_enc_forbp``. ``narrow`` decodes to int32: identical
+    values to the int64 decode truncated with astype(int32) (all
+    arithmetic is exact mod 2^32), at half the memory traffic.
+
+    Deltas unpack straight into the result, one call per run of
+    consecutive equal-width minis (one per mini where a mini does not
+    fill whole bytes); each mini's min is then added in place. The
+    trailing partial mini is a run of its own."""
     (mini,) = struct.unpack_from("<H", payload, 0)
     if mini == 0:
         raise ValueError("forbp: zero mini-block size")
@@ -278,150 +283,47 @@ def _dec_forbp(payload: memoryview, count: int,
     nfull = count // mini
     heads = np.frombuffer(payload[2 : 2 + 9 * nminis],
                           dtype=np.uint8).reshape(nminis, 9)
-    mins = np.ascontiguousarray(heads[:, :8]).view("<i8").reshape(nminis)
+    udt = np.uint32 if narrow else np.uint64
+    # wraps mod 2^32 when narrow — exactly astype
+    mins = np.ascontiguousarray(heads[:, :8]).view("<i8").reshape(
+        nminis).astype(udt)
     widths = heads[:, 8].astype(np.int64)
     pos = 2 + 9 * nminis
-    if narrow:
-        return _dec_forbp_narrow(payload, count, mini, nminis, nfull,
-                                 mins, widths, pos)
-    out = np.empty(count, dtype=np.int64)
-    # Decode runs of equal width among full minis in one unpack each.
+    out = np.empty(count, dtype=udt)
     m = 0
-    while m < nfull:
+    while m < nminis:
         w = int(widths[m])
         e = m + 1
-        while e < nfull and widths[e] == w:
+        stop = nfull if m < nfull else nminis
+        while e < stop and widths[e] == w:
             e += 1
-        nvals = (e - m) * mini
-        lo_idx = m * mini
+        lo_idx, hi_idx = m * mini, min(e * mini, count)
+        run = out[lo_idx:hi_idx]
         if w == 0:
-            deltas = np.zeros(nvals, dtype=np.uint64)
+            run[...] = 0
         elif w == 64:
-            nb = nvals * 8
-            deltas = np.frombuffer(payload[pos : pos + nb], dtype="<u8")
-            if deltas.size != nvals:
+            nb = run.size * 8
+            d64 = np.frombuffer(payload[pos : pos + nb], dtype="<u8")
+            if d64.size != run.size:
                 raise ValueError("forbp: truncated raw mini-block")
+            run[...] = d64
             pos += nb
         else:
-            # Minis are byte-aligned individually; for full minis each
-            # occupies exactly mini*w/8... only when mini*w % 8 == 0,
-            # which holds for the power-of-two MINI. Otherwise fall back
-            # to per-mini.
-            per = (mini * w + 7) // 8
-            if per * 8 != mini * w:
-                for i in range(m, e):
-                    d = P.unpack_width(
-                        payload[pos : pos + per], mini, w)
-                    with _wrap:
-                        out[i * mini : (i + 1) * mini] = (
-                            d + mins[i].view(np.uint64)).view(np.int64)
-                    pos += per
-                m = e
-                continue
-            nb = per * (e - m)
-            deltas = P.unpack_width(payload[pos : pos + nb], nvals, w)
-            pos += nb
+            step = run.size if mini * w % 8 == 0 else mini
+            for i in range(lo_idx, hi_idx, step):
+                j = min(i + step, hi_idx)
+                nb = ((j - i) * w + 7) // 8
+                P.unpack_width(payload[pos : pos + nb], j - i, w,
+                               out=out[i:j])
+                pos += nb
         with _wrap:
-            out[lo_idx : lo_idx + nvals] = (
-                deltas.reshape(e - m, mini)
-                + mins[m:e].view(np.uint64)[:, None]
-            ).reshape(-1).view(np.int64)
+            run.reshape(e - m, -1)[...] += mins[m:e, None]
         m = e
-    if nminis > nfull:
-        blk_n = count - nfull * mini
-        w = int(widths[-1])
-        if w == 0:
-            deltas = np.zeros(blk_n, dtype=np.uint64)
-        elif w == 64:
-            nb = blk_n * 8
-            deltas = np.frombuffer(payload[pos : pos + nb], dtype="<u8")
-            if deltas.size != blk_n:
-                raise ValueError("forbp: truncated raw mini-block")
-            pos += nb
-        else:
-            nb = (blk_n * w + 7) // 8
-            deltas = P.unpack_width(payload[pos : pos + nb], blk_n, w)
-            pos += nb
-        with _wrap:
-            out[nfull * mini :] = (
-                deltas + mins[-1].view(np.uint64)).view(np.int64)
     if pos != len(payload):
         raise ValueError(
             f"forbp: trailing payload bytes ({len(payload) - pos})"
         )
-    return out
-
-
-def _dec_forbp_narrow(payload, count, mini, nminis, nfull, mins, widths,
-                      pos) -> np.ndarray:
-    """int32 output path of FORBP decode: identical values to the int64
-    path truncated with astype(int32) (all arithmetic is exact mod
-    2^32), at half the memory traffic. Mirrors the run structure of the
-    int64 body byte for byte."""
-    mins32 = mins.astype(np.uint32)  # wraps mod 2^32 — exactly astype
-    out = np.empty(count, dtype=np.int32)
-    out32 = out.view(np.uint32)
-    m = 0
-    while m < nfull:
-        w = int(widths[m])
-        e = m + 1
-        while e < nfull and widths[e] == w:
-            e += 1
-        nvals = (e - m) * mini
-        lo_idx = m * mini
-        if w == 0:
-            deltas = np.zeros(nvals, dtype=np.uint32)
-        elif w == 64:
-            nb = nvals * 8
-            d64 = np.frombuffer(payload[pos : pos + nb], dtype="<u8")
-            if d64.size != nvals:
-                raise ValueError("forbp: truncated raw mini-block")
-            pos += nb
-            deltas = d64.astype(np.uint32)
-        else:
-            per = (mini * w + 7) // 8
-            if per * 8 != mini * w:
-                for i in range(m, e):
-                    d = P.unpack_width(payload[pos : pos + per], mini, w)
-                    with _wrap:
-                        out32[i * mini : (i + 1) * mini] = (
-                            d.astype(np.uint32) + mins32[i])
-                    pos += per
-                m = e
-                continue
-            nb = per * (e - m)
-            deltas = P.unpack_width(
-                payload[pos : pos + nb], nvals, w).astype(np.uint32)
-            pos += nb
-        with _wrap:
-            out32[lo_idx : lo_idx + nvals] = (
-                deltas.reshape(e - m, mini) + mins32[m:e, None]
-            ).reshape(-1)
-        m = e
-    if nminis > nfull:
-        blk_n = count - nfull * mini
-        w = int(widths[-1])
-        if w == 0:
-            deltas = np.zeros(blk_n, dtype=np.uint32)
-        elif w == 64:
-            nb = blk_n * 8
-            d64 = np.frombuffer(payload[pos : pos + nb], dtype="<u8")
-            if d64.size != blk_n:
-                raise ValueError("forbp: truncated raw mini-block")
-            pos += nb
-            deltas = d64.astype(np.uint32)
-        else:
-            nb = (blk_n * w + 7) // 8
-            deltas = P.unpack_width(
-                payload[pos : pos + nb], blk_n, w).astype(np.uint32)
-            pos += nb
-        with _wrap:
-            out32[nfull * mini :] = deltas + mins32[-1]
-    if pos != len(payload):
-        raise ValueError(
-            f"forbp: trailing payload bytes ({len(payload) - pos})"
-        )
-    return out
+    return out.view(np.int32 if narrow else np.int64)
 
 
 def _enc_delta(arr: np.ndarray) -> bytes:

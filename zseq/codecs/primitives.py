@@ -146,7 +146,8 @@ def bp64_unpack(packed: bytes | memoryview, count: int) -> np.ndarray:
                 f"bp64: truncated raw payload ({len(data)} < {need} bytes)"
             )
         return np.frombuffer(data[:need], dtype="<u8").copy()
-    return unpack_width(data, count, width)
+    return unpack_width(data, count, width,
+                        out=np.empty(count, dtype=np.uint64))
 
 
 def _pack_width_lanes(u: np.ndarray, width: int) -> bytes:
@@ -267,8 +268,9 @@ def pack_width(u: np.ndarray, width: int) -> bytes:
 
 
 def _unpack_width_lanes(data, count: int, width: int) -> np.ndarray:
-    """Reference lane implementation of unpack (any width) — the wide
-    (>= 33) path and the tree path's test oracle."""
+    """Reference lane implementation of unpack (any width), returning
+    uint64 — the wide (>= 33) path and the test oracle of
+    ``unpack_width``'s one-pass path."""
     nbits = count * width
     nbytes = (nbits + 7) // 8
     raw = np.frombuffer(data, dtype=np.uint8, count=-1)
@@ -296,15 +298,75 @@ def _unpack_width_lanes(data, count: int, width: int) -> np.ndarray:
     return vals.reshape(-1)[:count]
 
 
-def unpack_width(data, count: int, width: int) -> np.ndarray:
+def _unpack_groups(raw: np.ndarray, ngroups: int, width: int,
+                   rows: np.ndarray) -> None:
+    """rows[k, g] = value k of the 8-value group g, for g < ngroups.
+
+    Value k starts at bit k*width of its group's ``width`` bytes. For each
+    k, one strided view reads a little-endian window at byte k*width//8 of
+    every group at once (stride ``width`` bytes, no copy; 4 bytes when the
+    value fits in them, else 8), then shift and mask into uint32. Every
+    window must lie inside ``raw``."""
+    mask = np.uint32((1 << width) - 1)
+    for k in range(8):
+        b, s = divmod(k * width, 8)
+        dt = np.dtype("<u8" if s + width > 32 else "<u4")
+        win = np.ndarray((ngroups,), dt, raw, b, (width,))
+        r = rows[k, :ngroups]
+        np.right_shift(win, dt.type(s), out=r, casting="unsafe")
+        if width < 32:
+            r &= mask
+
+
+def unpack_width(data, count: int, width: int,
+                 out: np.ndarray | None = None) -> np.ndarray:
     """Inverse of pack_width; strict about truncation (unlike the
     reference, which silently yields zeros — compression.rs:198-205;
-    SURVEY.md §4.3 says decode must be strict in the rebuild). The lane
-    implementation measures FASTER than a tree split here: each of its 8
-    passes touches only ngroups-sized arrays and it materializes uint64
-    output directly, where a split tree pays doubling-size temporaries
-    plus a final widen — measured 1.5-7x slower, so unpack keeps lanes."""
-    return _unpack_width_lanes(data, count, width)
+    SURVEY.md §4.3 says decode must be strict in the rebuild).
+
+    Widths <= 32 return uint32: one pass per value position of the
+    8-value group (``_unpack_groups``) fills (8, ngroups) rows, then one
+    transposed copy fills the result. The lane path zero-fills a staging
+    array, scatters the payload into it and widens to uint64; on 3.76M
+    values it measured 2.6-4.3x slower (widths 31 and 17). Widths >= 33
+    take the lane path and return uint64. ``out`` (a contiguous unsigned
+    array of ``count`` values, e.g. the final column slice) receives the
+    values instead of a new array; a wider dtype widens them exactly."""
+    if width > 32 or width == 0:
+        vals = _unpack_width_lanes(data, count, width)
+        if out is None:
+            return vals
+        out[...] = vals
+        return out
+    nbytes = (count * width + 7) // 8
+    raw = np.frombuffer(data, dtype=np.uint8)
+    if raw.size < nbytes:
+        raise ValueError(
+            f"bitpack: truncated payload ({raw.size} < {nbytes} bytes)"
+        )
+    raw = raw[:nbytes]
+    if out is None:
+        out = np.empty(count, dtype=np.uint32)
+    elif out.shape != (count,) or not out.flags.c_contiguous:
+        raise ValueError("bitpack: out must be contiguous, of count values")
+    ngroups = (count + 7) // 8
+    rows = np.empty((8, ngroups), dtype=np.uint32)
+    # furthest byte past a group's start that one of its windows reads
+    reach = max(k * width // 8 + (8 if k * width % 8 + width > 32 else 4)
+                for k in range(8))
+    main = min(ngroups, max(0, (nbytes - reach) // width + 1))
+    if main:
+        _unpack_groups(raw, main, width, rows)
+    if main < ngroups:  # windows of the last groups run past the payload
+        pad = np.zeros((ngroups - main) * width + reach, dtype=np.uint8)
+        tail = raw[main * width:]
+        pad[:tail.size] = tail
+        _unpack_groups(pad, ngroups - main, width, rows[:, main:])
+    nfull = count // 8
+    out[:nfull * 8].reshape(nfull, 8)[...] = rows[:, :nfull].T
+    if nfull < ngroups:
+        out[nfull * 8:] = rows[:count - nfull * 8, nfull]
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -7,13 +7,14 @@ DataSource API (Spark 4.0) with filter pushdown (Spark 4.1):
 read
     The read path of ``zseq.decode`` (``decode.plan_groups`` on the
     driver, ``decode.read_group`` in the worker): one InputPartition per
-    byte-packed group of whole committed part files, opened and
-    crc-checked by the worker. Catalyst pushes comparison filters through
-    ``pushFilters()``; int, timestamp/date, string, and startswith
-    comparisons become zone-map block pruning inside the reader (a
-    conservative superset — whole blocks are skipped without
-    decompression), and ALL filters are handed back to Spark so exact row
-    filtering still happens JVM-side: the parquet model. Column pruning: ``.option("columns", "a,b")`` (the Python DS
+    group of whole committed part files (cut at byte quantiles, one
+    wave), opened and crc-checked by the worker. Catalyst pushes
+    comparison filters through ``pushFilters()``; int, timestamp/date,
+    string, and startswith comparisons become zone-map block pruning
+    inside the reader (a conservative superset — whole blocks are
+    skipped without decompression), and ALL filters are handed back to
+    Spark so exact row filtering still happens JVM-side: the parquet
+    model. Column pruning: ``.option("columns", "a,b")`` (the Python DS
     API has no required-columns pushdown yet); pruned columns are seeked
     past in the blob, never decompressed.
 
@@ -236,8 +237,8 @@ class ZseqSourceReader(DataSourceReader):
             written, schema, cols if schema is None else None,
             allow_subset=True)
         self._parts = part_entries(self._dir, m)
-        # Task sizing: pack part files into ~target-byte groups, floored
-        # by the session's parallelism (decode.plan_groups).
+        # Task sizing: cut the part files into ~target-byte groups, at
+        # least the session's parallelism of them (decode.plan_groups).
         self._target_bytes = int(
             options.get("target_partition_bytes", TARGET_BYTES))
         # an explicit .option("min_partitions", N) wins

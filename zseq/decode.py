@@ -5,9 +5,10 @@ header parse -> block read -> decompress -> unshred). One read path
 serves ``decode``, ``streaming.decode_stream`` and the ``zseq``
 DataSource (batch and stream):
 
-- driver: manifest(s) + predicate -> file pruning -> byte-packed groups
-  of (path, crc32) (``plan_groups``), and the reader schema resolved
-  against the written one (``read_plan``);
+- driver: manifest(s) + predicate -> file pruning -> groups of (path,
+  crc32) cut at byte quantiles, one task each, in one wave
+  (``plan_groups``), and the reader schema resolved against the written
+  one (``read_plan``);
 - worker: each group's files are opened and read directly, crc-checked,
   schema-checked and decoded — strict about magic, block framing,
   per-segment byte consumption and the trailing row count — then evolved
@@ -19,6 +20,7 @@ leaf node and a task list built only in the JVM.
 
 from __future__ import annotations
 
+import bisect
 import itertools
 import os
 
@@ -232,15 +234,17 @@ def part_entries(d: str, m: dict) -> list[tuple]:
 def plan_groups(entries: list[tuple], predicate, min_tasks: int,
                 target_bytes: int = TARGET_BYTES) -> list[tuple]:
     """The driver-side read plan: ``part_entries`` -> file pruning ->
-    byte-packed groups of (path, crc32).
+    groups of (path, crc32) that run in one wave.
 
     FILE pruning (zone envelopes, null counts, hash-bucket pinning) runs
     once per manifest through ``zseqfile.prune_parts``; a pruned file
     never reaches a task. It is a conservative superset: callers still
-    filter rows exactly. Groups are at most ``target_bytes`` and at most
-    total / ``min_tasks`` bytes, so a small read still fans out to every
-    core; with no size information at all the files are split by count.
-    Never empty: an empty read is one empty group."""
+    filter rows exactly. The kept files, in order, are cut into exactly
+    min(files, max(``min_tasks``, total / ``target_bytes``)) contiguous
+    groups at the byte quantiles of their prefix sums, so a small read
+    fans out to every core and near-equal files never spill into an
+    extra wave; with no size information at all every file weighs the
+    same. Never empty: an empty read is one empty group."""
     if predicate:
         kept = []
         for _, run in itertools.groupby(entries, key=lambda e: id(e[4])):
@@ -251,24 +255,24 @@ def plan_groups(entries: list[tuple], predicate, min_tasks: int,
         entries = kept
     if not entries:
         return [()]
-    min_tasks = max(1, min_tasks)
-    total = sum(e[2] for e in entries)
+    n = len(entries)
+    sizes = [e[2] for e in entries]
+    total = sum(sizes)
+    k = min(n, max(min_tasks, 1, -(-total // max(1, target_bytes))))
     if total == 0:
-        per = -(-len(entries) // min_tasks)
-        return [tuple(e[:2] for e in entries[i:i + per])
-                for i in range(0, len(entries), per)]
-    eff = max(1, min(target_bytes, -(-total // min_tasks)))
-    groups: list[tuple] = []
-    cur: list[tuple] = []
-    cur_bytes = 0
-    for path, crc, size, _stats, _rule in entries:
-        if cur and cur_bytes + size > eff:
-            groups.append(tuple(cur))
-            cur, cur_bytes = [], 0
-        cur.append((path, crc))
-        cur_bytes += size
-    groups.append(tuple(cur))
-    return groups
+        sizes, total = [1] * n, n
+    prefix = list(itertools.accumulate(sizes, initial=0))
+    cuts = [0]
+    for j in range(1, k):
+        # the file boundary nearest the j-th quantile j*total/k, leaving
+        # every group at least one file
+        i = bisect.bisect_left(prefix, -(-j * total // k))
+        if i > 0 and j * total - prefix[i - 1] * k < prefix[i] * k - j * total:
+            i -= 1
+        cuts.append(min(max(i, cuts[-1] + 1), n - (k - j)))
+    cuts.append(n)
+    return [tuple(e[:2] for e in entries[a:b])
+            for a, b in zip(cuts, cuts[1:])]
 
 
 def read_group(files, names: list[str] | None,
