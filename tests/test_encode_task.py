@@ -1,0 +1,123 @@
+"""The encode task body: the clustered row gather (``_take_table``) and a
+pin of the bytes ``_encode_table_to_file`` writes."""
+
+import tracemalloc
+
+import numpy as np
+import pyarrow as pa
+import pytest
+
+from perfbench import corpus as C
+from zseq import encode, synth
+
+
+def _lists(lengths, values, typ, nulls=None):
+    offs = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offs[1:])
+    odt = pa.int64() if pa.types.is_large_list(typ) else pa.int32()
+    mask = None if nulls is None else pa.array(nulls)
+    arr = (pa.LargeListArray if pa.types.is_large_list(typ)
+           else pa.ListArray).from_arrays(
+        pa.array(offs, type=odt), pa.array(values[: offs[-1]]), mask=mask)
+    return arr.cast(typ)
+
+
+def _table() -> pa.Table:
+    """Every list shape the gather meets: empty rows, a run of 2048-token
+    rows, list<int32|int64|float64>, large_list, null list entries,
+    null values inside lists, and string values."""
+    rng = np.random.default_rng(3)
+    n = 300
+    lengths = rng.integers(0, 40, n)
+    lengths[::7] = 0
+    lengths[50:60] = 2048
+    total = int(lengths.sum())
+    vals = rng.integers(-(2**20), 2**20, total)
+    nulls = np.zeros(n, dtype=bool)
+    nulls[5::11] = True
+    holes = pa.array(vals[:total].astype(np.int32),
+                     mask=np.arange(total) % 13 == 0)
+    offs = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(lengths, out=offs[1:])
+    return pa.table({
+        "doc_id": pa.array([f"d{i}" for i in range(n)]),
+        "tok": _lists(lengths, vals.astype(np.int32), pa.list_(pa.int32())),
+        "tok64": _lists(lengths[::-1], vals * 4096,
+                        pa.list_(pa.field("v", pa.int64(), False))),
+        "f": _lists(lengths, vals / 7.0, pa.list_(pa.float64())),
+        "big": _lists(lengths, vals.astype(np.int32),
+                      pa.large_list(pa.int32())),
+        "nullable": _lists(lengths, vals.astype(np.int32),
+                           pa.list_(pa.int32()), nulls),
+        "holes": pa.ListArray.from_arrays(pa.array(offs), holes),
+        "words": _lists(lengths % 5, np.array([str(v) for v in vals]),
+                        pa.list_(pa.string())),
+        "n": pa.array(lengths.astype(np.int32)),
+    })
+
+
+def _chunked(tbl: pa.Table, chunks: int) -> pa.Table:
+    if chunks == 1:
+        return tbl
+    k = tbl.num_rows // 3  # sliced chunks: list arrays with an offset
+    out = pa.concat_tables([tbl.slice(0, k), tbl.slice(k)])
+    assert out.column("tok").num_chunks == 2
+    return out
+
+
+@pytest.mark.parametrize("chunks", [1, 2])
+@pytest.mark.parametrize("how", ["identity", "reverse", "cluster"])
+def test_take_table_equals_arrow_take(chunks, how):
+    tbl = _chunked(_table(), chunks)
+    n = tbl.num_rows
+    order = {"identity": np.arange(n), "reverse": np.arange(n)[::-1].copy(),
+             "cluster": encode._cluster_order(tbl)}[how]
+    got = encode._take_table(tbl, order)
+    want = tbl.take(pa.array(order))
+    assert got.schema == tbl.schema
+    for name in tbl.column_names:
+        assert got.column(name).equals(want.column(name)), name
+
+
+def test_cluster_order_is_chunking_invariant():
+    tbl = _table()
+    assert np.array_equal(encode._cluster_order(tbl),
+                          encode._cluster_order(_chunked(tbl, 2)))
+
+
+def test_take_table_allocates_about_one_output():
+    """The gather writes rows straight into one output buffer: no
+    per-element index arrays the size of the column."""
+    tbl = synth.tokens_table_arrow(13_000)
+    out_bytes = tbl.column("tokens").combine_chunks().values.nbytes
+    assert out_bytes >= 8_000_000  # ~2M int32 tokens
+    order = encode._cluster_order(tbl)
+    tracemalloc.start()
+    try:
+        got = encode._take_table(tbl, order)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 1.5 * out_bytes, (peak, out_bytes)
+    assert got.column("tokens").equals(
+        tbl.column("tokens").take(pa.array(order)))
+
+
+# enc_bytes and crc32 of one clustered part, recorded at the commit before
+# the one-copy gather, lazy PACK and capped FSST build: those changes must
+# leave every encoded byte as it was.
+PINS = {
+    "fixture": (lambda: synth.tokens_table_arrow(20_000, start=0),
+                441_698, 370_583_919),
+    "zipf": (lambda: C.make_table("zipf", 7, 0, 5_000),
+             1_196_534, 1_588_541_621),
+}
+
+
+@pytest.mark.parametrize("name", PINS)
+def test_encoded_part_bytes_pinned(name, tmp_path):
+    make, enc_bytes, crc32 = PINS[name]
+    tbl = make()
+    row = encode._encode_table_to_file(tbl, str(tmp_path), 0, tbl.schema,
+                                       True, 1 << 16, 0.0)
+    assert (row["enc_bytes"], row["crc32"]) == (enc_bytes, crc32)

@@ -65,3 +65,84 @@ def test_symbol_table_roundtrip():
     t2, pos = fsst.SymbolTable.deserialize(memoryview(blob))
     assert pos == len(blob)
     assert t2.symbols == t.symbols
+
+
+# ---------------------------------------------------------------------------
+# The table build caps greedy match lengths at the table's longest symbol;
+# the uncapped loop below is the oracle.
+# ---------------------------------------------------------------------------
+
+def _uncapped_greedy(data, table, max_len=None):
+    out = []
+    i, n = 0, len(data)
+    while i < n:
+        for L in range(min(fsst.MAX_SYM_LEN, n - i), 0, -1):
+            cand = data[i : i + L]
+            if cand in table:
+                out.append(cand)
+                i += L
+                break
+        else:
+            out.append(data[i : i + 1])
+            i += 1
+    return out
+
+
+def _doc_id_like(rng) -> list[bytes]:
+    ids = rng.integers(0, 80_000_000, 2000)
+    return [f"doc_{i:08d}".encode() for i in np.sort(ids)]
+
+
+def _random_bytes(rng) -> list[bytes]:
+    return [rng.integers(0, 256, rng.integers(0, 40), dtype=np.uint8)
+            .tobytes() for _ in range(500)]
+
+
+TABLE_INPUTS = {
+    **CASES,
+    "hello": [b"hello world", b"hello there", b"well hello"],
+    "doc_id_like": _doc_id_like(np.random.default_rng(5)),
+    "random_bytes": _random_bytes(np.random.default_rng(6)),
+}
+
+
+@pytest.mark.parametrize("name", TABLE_INPUTS)
+def test_capped_table_build_matches_uncapped(name, monkeypatch):
+    strs = TABLE_INPUTS[name]
+    got = fsst.build_table(strs).symbols
+    monkeypatch.setattr(fsst, "_greedy_encode_py", _uncapped_greedy)
+    assert got == fsst.build_table(strs).symbols
+
+
+@pytest.mark.parametrize("corpus,rows", [("fixture", 234_375),
+                                         ("zipf", 25_000)])
+def test_bin_codec_choice_unchanged_by_capped_build(corpus, rows, tmp_path,
+                                                    monkeypatch):
+    """Every doc_id/source block of one clustered part, as the encode task
+    hands it to the selector, selects the same codec with the capped and
+    the uncapped table build."""
+    from perfbench import corpus as C
+    from perfbench.workloads import BATCH_ROWS
+    from zseq import encode
+    from zseq.codecs import bytescodecs as BC
+
+    tbl = C.make_table(corpus, 7, 14_000_000, rows)
+    calls = []
+    select = BC.select_bin_codec
+
+    def recorded(lengths, data):
+        calls.append((lengths.copy(), data.copy(), select(lengths, data)))
+        return calls[-1][2]
+
+    builds = []
+    build = fsst.build_table
+    monkeypatch.setattr(BC, "select_bin_codec", recorded)
+    monkeypatch.setattr(fsst, "build_table",
+                        lambda strs: builds.append(1) or build(strs))
+    encode._encode_table_to_file(tbl, str(tmp_path), 0, tbl.schema, True,
+                                 BATCH_ROWS, 0.0)
+    # doc_id and source per block, plus nested dictionary selections
+    assert len(calls) >= 2 * -(-rows // BATCH_ROWS)
+    monkeypatch.setattr(fsst, "_greedy_encode_py", _uncapped_greedy)
+    assert [c for _l, _d, c in calls] == [select(l, d) for l, d, _c in calls]
+    assert builds  # the FSST trial ran on some block

@@ -90,13 +90,16 @@ class SymbolTable:
         return cls(syms), pos
 
 
-def _greedy_encode_py(data: bytes, table: dict[bytes, int]) -> list[bytes]:
+def _greedy_encode_py(data: bytes, table: dict[bytes, int],
+                      max_len: int = MAX_SYM_LEN) -> list[bytes]:
     """Scalar greedy longest-match over a small sample (table build only).
-    Returns the symbol sequence (escapes as 1-byte symbols)."""
+    Returns the symbol sequence (escapes as 1-byte symbols). Match lengths
+    start at ``max_len``, the table's longest symbol: a longer candidate
+    cannot be in the table, so the result is the uncapped one."""
     out = []
     i, n = 0, len(data)
     while i < n:
-        for L in range(min(MAX_SYM_LEN, n - i), 0, -1):
+        for L in range(min(max_len, n - i), 0, -1):
             cand = data[i : i + L]
             if cand in table:
                 out.append(cand)
@@ -138,8 +141,9 @@ def build_table(strings: list[bytes]) -> SymbolTable:
     for _ in range(GENERATIONS):
         gains: Counter[bytes] = Counter()
         lookup = dict.fromkeys(table, 1)
+        longest = max(map(len, table))
         for s in sample:
-            seq = _greedy_encode_py(s, lookup)
+            seq = _greedy_encode_py(s, lookup, longest)
             for sym in seq:
                 gains[sym] += len(sym)
             for a, b in zip(seq, seq[1:]):

@@ -37,7 +37,10 @@ types are handled at the column layer):
           byte-granular, so a PACK at a non-byte width hides most repeats
           (7 of 8 start at another bit phase); when the wrap trial fails
           there, the values are re-packed at the next byte width and
-          zstd'd whole once (``_maybe_wrap_byte_aligned``)
+          zstd'd whole once (``_maybe_wrap_byte_aligned``). An
+          auto-selected PACK is packed lazily (``_LazyPack``): the trial
+          packs only the 64 KiB prefix it reads, and the whole PACK is
+          built only when it is returned or wrapped itself
 
 Zone maps are *derived*, not stored: CONST/PACK/FORBP/ZBRA/DICT headers
 already bound their values, so block pruning costs zero extra bytes
@@ -124,33 +127,63 @@ def _enc_zbra(arr: np.ndarray) -> bytes:
     return P.zbra_compress_int_array(arr)
 
 
-def _enc_pack(arr: np.ndarray) -> bytes:
-    """min i64 LE | width u8 | packed deltas (byte-aligned).
-    width==0: all equal min. width==64: raw 8-byte deltas.
+class _LazyPack:
+    """The PACK segment of ``arr``, packed only as far as it is read.
+
+    Head (tag, length, min, width) and length come from min and max
+    alone. The auto path's wrap trials read just a 64 KiB prefix, and when
+    the byte-aligned retry wins the whole segment is never needed, so the
+    body is packed in full only by ``seg()`` (cached).
 
     int32 input stays in the 32-bit domain: (arr - lo) wraps mod 2^32,
     and the true deltas are < 2^32 by construction (int32 span), so the
     uint32 view is exact — same bytes, half the traffic."""
-    lo = int(arr.min())
-    if arr.dtype == np.int32:
+
+    def __init__(self, arr: np.ndarray):
+        lo = int(arr.min())
+        width = (int(arr.max()) - lo).bit_length()
+        nbody = (arr.size * width + 7) // 8
+        self.arr, self.lo, self.width = arr, lo, width
+        self.head = (HEADER.pack(T_PACK, 9 + nbody)
+                     + lo.to_bytes(8, "little", signed=True)
+                     + bytes([width]))
+        self._len = len(self.head) + nbody
+        self._seg: bytes | None = None
+
+    def __len__(self) -> int:
+        return self._len
+
+    def body(self, count: int | None = None) -> bytes:
+        """The packed deltas of the first ``count`` values (all: None).
+        width==0: empty. width==64: raw 8-byte deltas."""
+        arr = self.arr[:count]
+        if self.width == 0:
+            return b""
+        udt = np.uint32 if arr.dtype == np.int32 else np.uint64
         with _wrap:
-            deltas = (arr - np.int32(lo)).view(np.uint32)
-        hi = int(deltas.max())
-        width = 0 if hi == 0 else hi.bit_length()
-        head = int(lo).to_bytes(8, "little", signed=True) + bytes([width])
-        if width == 0:
-            return head
-        return head + P.pack_width(deltas, width)
-    with _wrap:
-        deltas = (arr - np.int64(lo)).view(np.uint64)
-    hi = int(deltas.max())
-    width = 0 if hi == 0 else hi.bit_length()
-    head = int(lo).to_bytes(8, "little", signed=True) + bytes([width])
-    if width == 0:
-        return head
-    if width == 64:
-        return head + deltas.astype("<u8").tobytes()
-    return head + P.pack_width(deltas, width)
+            deltas = (arr - arr.dtype.type(self.lo)).view(udt)
+        if self.width == 64:
+            return deltas.astype("<u8").tobytes()
+        return P.pack_width(deltas, self.width)
+
+    def prefix(self, nbytes: int) -> bytes:
+        """``seg()[:nbytes]``. Every 8 values pack to ``width`` whole
+        bytes, so whole 8-value groups give exactly the full segment's
+        leading bytes."""
+        groups = -(-(nbytes - len(self.head)) // self.width)
+        return (self.head + self.body(8 * groups))[:nbytes]
+
+    def seg(self) -> bytes:
+        if self._seg is None:
+            self._seg = self.head + self.body()
+        return self._seg
+
+
+def _enc_pack(arr: np.ndarray) -> bytes:
+    """min i64 LE | width u8 | packed deltas (byte-aligned).
+    width==0: all equal min. width==64: raw 8-byte deltas."""
+    p = _LazyPack(arr)
+    return p.head[HEADER.size:] + p.body()
 
 
 def _dec_pack(payload: memoryview, count: int,
@@ -466,18 +499,20 @@ def encode_ints(values, codec: int | None = None,
         codec = T_RAW
     if arr.dtype != np.int64 and codec not in _NARROW_OK:
         arr = arr.astype(np.int64)  # codecs with int64-domain byte paths
-    seg = _seg(codec, _ENCODERS[codec](arr))
-    if auto and T_WRAP not in exclude:
-        seg = _maybe_wrap(seg, n)
-        if seg[0] == T_PACK:
-            seg = _maybe_wrap_byte_aligned(arr, seg, n)
-    return seg
+    if not auto or T_WRAP in exclude:
+        return _seg(codec, _ENCODERS[codec](arr))
+    if codec != T_PACK:
+        return _maybe_wrap(_seg(codec, _ENCODERS[codec](arr)), n)
+    seg = _maybe_wrap(_LazyPack(arr), n)
+    return seg if isinstance(seg, bytes) else \
+        _maybe_wrap_byte_aligned(arr, seg, n)
 
 
 def _wrapped(seg: bytes, count: int, inner_len: int, comp: bytes) -> bytes:
     """T_WRAP around ``comp`` (zstd of an ``inner_len``-byte inner segment
     holding the same values as ``seg``). The zone header is derived from
-    ``seg`` so block pruning still works on wrapped chunks."""
+    ``seg`` so block pruning still works on wrapped chunks; a PACK's head
+    alone is enough for that."""
     zone = segment_zone(seg, 0, count)
     zhead = (
         struct.pack("<Bqq", 1, zone[0], zone[1]) if zone
@@ -486,31 +521,38 @@ def _wrapped(seg: bytes, count: int, inner_len: int, comp: bytes) -> bytes:
     return _seg(T_WRAP, struct.pack("<I", inner_len) + zhead + comp)
 
 
-def _maybe_wrap(seg: bytes, count: int) -> bytes:
+def _maybe_wrap(seg: bytes | _LazyPack,
+                count: int) -> bytes | _LazyPack:
     """Cascade compression: zstd the finished segment when it still has
     exploitable structure (e.g. periodic patterns no single codec models).
     A ~64 KiB trial bounds cost; kept only on a clear (>=10%) win.
 
-    When this declines a PACK at a non-byte width, ``encode_ints`` retries
-    once in ``_maybe_wrap_byte_aligned`` (one whole-segment zstd pass):
-    zstd matches whole bytes, and bit-packing at such a width shifts
-    repeated runs to other bit phases."""
+    An auto-selected PACK arrives unbuilt (``_LazyPack``): the trial packs
+    only the prefix it reads, and the whole segment is built only when
+    the trial passes. A PACK this declines comes back still a
+    ``_LazyPack``, and ``encode_ints`` retries it once in
+    ``_maybe_wrap_byte_aligned``: zstd matches whole bytes, and
+    bit-packing at a non-byte width shifts repeated runs to other bit
+    phases."""
     if len(seg) < 128:
         return seg
     from .bytescodecs import zstd_compress
 
-    trial = seg if len(seg) <= 65536 else memoryview(seg)[:65536]
+    lazy = isinstance(seg, _LazyPack)
+    trial = seg.prefix(65536) if lazy else memoryview(seg)[:65536]
     comp_trial = zstd_compress(trial)
     if len(comp_trial) > 0.85 * len(trial):
         return seg
-    comp = comp_trial if trial is seg else zstd_compress(seg)
-    wrapped = _wrapped(seg, count, len(seg), comp)
-    return wrapped if len(wrapped) < 0.9 * len(seg) else seg
+    full = seg.seg() if lazy else seg
+    comp = comp_trial if len(trial) == len(full) else zstd_compress(full)
+    wrapped = _wrapped(full, count, len(full), comp)
+    return wrapped if len(wrapped) < 0.9 * len(full) else seg
 
 
-def _maybe_wrap_byte_aligned(arr: np.ndarray, seg: bytes,
+def _maybe_wrap_byte_aligned(arr: np.ndarray, seg: _LazyPack,
                              count: int) -> bytes:
-    """Retry of a declined wrap of a PACK segment ``seg`` of ``arr``.
+    """Retry of a declined wrap of the PACK segment ``seg`` of ``arr``;
+    returns the wrapped retry or the built PACK.
 
     At a width that is not 8/16/32/64, a run repeated at an offset that is
     not a multiple of 8 values starts at another bit phase, so zstd's
@@ -518,29 +560,29 @@ def _maybe_wrap_byte_aligned(arr: np.ndarray, seg: bytes,
     share runs: zstd reaches 0.88 of the 31-bit PACK, but 0.16 at 32 bits).
     Re-pack the same values at the next byte width and zstd that inner
     segment whole — a prefix trial cannot tell, because the repeats may lie
-    far apart — keeping the wrap under ``_maybe_wrap``'s 0.9 rule. Costs one
-    whole-segment zstd pass, and runs only after ``_maybe_wrap`` declined.
-    The inner segment is built in one buffer and compressed in place; the
-    zone header still comes from the original ``seg``."""
-    width = seg[HEADER.size + 8]
+    far apart — keeping the wrap under ``_maybe_wrap``'s 0.9 rule against
+    the PACK's length. Costs one whole-segment zstd pass, and runs only
+    after ``_maybe_wrap`` declined. The inner segment is built in one
+    buffer and compressed in place; the zone header comes from the PACK's
+    head, so a winning retry never packs the PACK body at all."""
+    width = seg.width
     wide = next(b for b in _BYTE_WIDTHS if b >= width)
     head = HEADER.size + 9
     inner_len = head + count * (wide // 8)
     if len(seg) < 128 or width == wide or inner_len > 0xFFFFFFFF:
-        return seg
+        return seg.seg()
     inner = np.empty(inner_len, dtype=np.uint8)
-    inner[:head] = np.frombuffer(seg, np.uint8, head)  # tag, lo
+    inner[:head] = np.frombuffer(seg.head, np.uint8)  # tag, lo
     HEADER.pack_into(inner, 0, T_PACK, inner_len - HEADER.size)
     inner[head - 1] = wide
-    lo = int.from_bytes(seg[HEADER.size : head - 1], "little", signed=True)
     with _wrap:  # deltas < 2^width, so the wrapping subtract casts exactly
-        np.subtract(arr, arr.dtype.type(lo),
+        np.subtract(arr, arr.dtype.type(seg.lo),
                     out=inner[head:].view(f"<u{wide // 8}"),
                     casting="unsafe")
     from .bytescodecs import zstd_compress
 
-    wrapped = _wrapped(seg, count, inner_len, zstd_compress(inner))
-    return wrapped if len(wrapped) < 0.9 * len(seg) else seg
+    wrapped = _wrapped(seg.head, count, inner_len, zstd_compress(inner))
+    return wrapped if len(wrapped) < 0.9 * len(seg) else seg.seg()
 
 
 def decode_ints(buf, offset: int, count: int,

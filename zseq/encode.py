@@ -39,6 +39,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc  # imported at module load: workers pay it once,
 # outside any per-task timed region
+from numpy.lib.stride_tricks import as_strided
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -308,7 +309,9 @@ def own_batches(batches: list) -> list:
 
 def _cluster_order(tbl: pa.Table) -> np.ndarray | None:
     """Row order by (bit width of per-row max |value| of the first list
-    column, list length). Returns None when there is nothing to cluster."""
+    column, list length). Returns None when there is nothing to cluster.
+    Reads the column chunk by chunk: the per-row stats need no combined
+    copy (``_take_table`` makes the only one)."""
     list_col = None
     for name in tbl.column_names:
         t = tbl.schema.field(name).type
@@ -318,67 +321,86 @@ def _cluster_order(tbl: pa.Table) -> np.ndarray | None:
                 break
     if list_col is None or tbl.num_rows < 2:
         return None
-    arr = tbl.column(list_col).combine_chunks()
-    lengths = pc.list_value_length(arr).to_numpy(zero_copy_only=False)
-    lengths = np.nan_to_num(lengths, nan=0).astype(np.int64) \
-        if lengths.dtype.kind == "f" else lengths.astype(np.int64)
-    flat = arr.flatten()
-    vals = flat.to_numpy(zero_copy_only=False)
-    offs = np.zeros(lengths.size + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offs[1:])
-    rowmax = np.zeros(lengths.size, dtype=np.int64)
-    nz = lengths > 0
-    if nz.any():
-        starts = offs[:-1][nz]
-        # max |value| per row WITHOUT materializing |values| in int64:
-        # reduceat min and max on the native (usually int32) buffer, abs
-        # on the tiny per-row results — same rowmax, ~4x less traffic.
-        row_hi = np.maximum.reduceat(vals, starts).astype(np.int64)
-        row_lo = np.minimum.reduceat(vals, starts).astype(np.int64)
-        rowmax[nz] = np.maximum(np.abs(row_hi), np.abs(row_lo))
+    lengths, rowmax = [], []
+    for arr in tbl.column(list_col).chunks:
+        ln = pc.list_value_length(arr).to_numpy(zero_copy_only=False)
+        ln = np.nan_to_num(ln, nan=0).astype(np.int64) \
+            if ln.dtype.kind == "f" else ln.astype(np.int64)
+        vals = arr.flatten().to_numpy(zero_copy_only=False)
+        offs = np.zeros(ln.size + 1, dtype=np.int64)
+        np.cumsum(ln, out=offs[1:])
+        rm = np.zeros(ln.size, dtype=np.int64)
+        nz = ln > 0
+        if nz.any():
+            starts = offs[:-1][nz]
+            # max |value| per row WITHOUT materializing |values| in int64:
+            # reduceat min and max on the native (usually int32) buffer,
+            # abs on the tiny per-row results — same rowmax, ~4x less
+            # traffic.
+            row_hi = np.maximum.reduceat(vals, starts).astype(np.int64)
+            row_lo = np.minimum.reduceat(vals, starts).astype(np.int64)
+            rm[nz] = np.maximum(np.abs(row_hi), np.abs(row_lo))
+        lengths.append(ln)
+        rowmax.append(rm)
+    lengths, rowmax = np.concatenate(lengths), np.concatenate(rowmax)
     # bit width via frexp (exact for |v| < 2^53; clustering is heuristic
     # so clipping larger values is fine)
     width = np.frexp(np.clip(rowmax, 0, 1 << 52).astype(np.float64))[1]
     return np.lexsort((lengths, width))
 
 
+_GATHER_VALUES = 1 << 16  # bound on the gather's temporary, in values
+
+
+def _take_rows(fv: np.ndarray, starts: np.ndarray, lengths: np.ndarray,
+               new_offs: np.ndarray) -> np.ndarray:
+    """Flat values of the rows ``fv[starts[i]:starts[i] + lengths[i]]``,
+    concatenated in order, written straight into one output buffer.
+
+    ``_cluster_order`` sorts rows by (width, length), so rows of equal
+    length are contiguous: each run of length L is a fancy-index gather
+    of whole rows from a read-only (fv.size - L + 1, L) sliding-window
+    view of ``fv``, at most ``_GATHER_VALUES`` values at a time. Any
+    order is correct; clustered orders make it a few hundred runs."""
+    out = np.empty(int(new_offs[-1]), dtype=fv.dtype)
+    firsts = np.flatnonzero(np.diff(lengths, prepend=-1)).tolist()
+    step = fv.strides[0]
+    for a, e in zip(firsts, firsts[1:] + [lengths.size]):
+        L = int(lengths[a])
+        if L == 0:
+            continue
+        win = as_strided(fv, shape=(fv.size - L + 1, L),
+                         strides=(step, step), writeable=False)
+        dst = out[new_offs[a]:new_offs[e]].reshape(e - a, L)
+        rows = max(1, _GATHER_VALUES // L)
+        for i in range(a, e, rows):
+            j = min(i + rows, e)
+            dst[i - a:j - a] = win[starts[i:j]]
+    return out
+
+
 def _take_table(tbl: pa.Table, order: np.ndarray) -> pa.Table:
-    """Row gather that is fast for list columns: pa.Table.take does a
-    per-element gather on lists (measured ~2x the cost of the codecs);
-    rebuilding (offsets, flat gather) in numpy is ~10x cheaper."""
+    """``tbl.take(order)``, fast for list columns of numbers: Arrow's
+    take gathers lists element by element (measured ~2x the cost of the
+    codecs), while ``_take_rows`` copies whole rows into the one output
+    buffer. Null-bearing lists and other value types take the Arrow
+    path. A multi-chunk column is combined here, once."""
     cols = []
-    for name in tbl.column_names:
-        arr = tbl.column(name).combine_chunks()
+    for col in tbl.columns:
+        # combine_chunks copies even a single chunk
+        arr = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
         t = arr.type
         if (pa.types.is_list(t) or pa.types.is_large_list(t)) \
-                and arr.null_count == 0:
-            lengths = pc.list_value_length(arr).to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            flat = arr.flatten()
-            offs = np.zeros(lengths.size + 1, dtype=np.int64)
-            np.cumsum(lengths, out=offs[1:])
-            new_lengths = lengths[order]
-            starts = offs[:-1][order]
+                and arr.null_count == 0 and arr.values.null_count == 0 \
+                and (pa.types.is_integer(t.value_type)
+                     or pa.types.is_floating(t.value_type)):
+            offs = arr.offsets.to_numpy().astype(np.int64)
+            lengths = np.diff(offs)[order]
             new_offs = np.zeros(order.size + 1, dtype=np.int64)
-            np.cumsum(new_lengths, out=new_offs[1:])
-            total = int(new_offs[-1])
-            idt = np.int32 if total < (1 << 31) else np.int64
-            gather = (
-                np.arange(total, dtype=idt)
-                + np.repeat((starts - new_offs[:-1]).astype(idt),
-                            new_lengths)
-            ) if total else np.zeros(0, dtype=np.int64)
-            if total and flat.null_count == 0 and (
-                    pa.types.is_integer(flat.type)
-                    or pa.types.is_floating(flat.type)):
-                # numpy fancy index on the raw buffer beats Arrow take
-                # (which routes through generic selection kernels)
-                fv = flat.to_numpy(zero_copy_only=False)
-                new_flat = pa.array(fv[gather], type=flat.type)
-            elif total:
-                new_flat = flat.take(pa.array(gather))
-            else:
-                new_flat = flat[:0]
+            np.cumsum(lengths, out=new_offs[1:])
+            new_flat = pa.array(
+                _take_rows(arr.values.to_numpy(), offs[:-1][order],
+                           lengths, new_offs), type=t.value_type)
             if pa.types.is_large_list(t):
                 rebuilt = pa.LargeListArray.from_arrays(
                     pa.array(new_offs, type=pa.int64()), new_flat)

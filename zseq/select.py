@@ -13,7 +13,9 @@ trade at 10^12-sequence scale where chunks are millions of values. The one
 full-chunk trial is downstream of selection: when a chosen PACK at a
 non-byte width fails its zstd-wrap trial, ``intcodecs`` re-packs it at the
 next byte width and zstds the whole chunk once (byte-granular LZ matches
-cannot see repeats that bit-packing shifted to other bit phases).
+cannot see repeats that bit-packing shifted to other bit phases). That
+retry replaces the PACK: the full-width PACK is packed only when it is
+what the chunk keeps.
 """
 
 from __future__ import annotations
