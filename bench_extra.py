@@ -1,142 +1,30 @@
 #!/usr/bin/env python
 """Round-6 optimization harness — measurement only, NOT the graded bench.
 
-bench.py is frozen for measurement; this file holds the extra
-instrumentation the optimization round needs (guide §1):
+bench.py is frozen for measurement; this file holds extra
+instrumentation it does not cover. Per-layer timings of the encode and
+read task bodies come from ``python perfbench/run.py --trace 1``.
 
-  profile-kernel   cProfile of the single-core encode/decode kernel
-                   (zseqfile.encode_table / decode_table) on the synth
-                   chunk — where does the 21M tok/s ceiling go?
-  profile-task     cProfile of the LITERAL Spark task body of the bench's
-                   encode stage (parquet read + cast + cluster + codecs +
-                   write + fsync) on one materialized input file.
-  profile-mat      cProfile-free wall breakdown of the materialize stage
+  profile-mat      wall breakdown of the materialize stage
                    (synth SQL expression vs parquet write vs count).
+  plans            .explain('formatted') of PLAN_QUERIES into a directory.
   time-queries     wall time of every declared query's build + collect at
-                   a given SF dir (the driver's correctness harness cost).
+                   a given SF dir.
 
-Usage: python bench_extra.py <cmd> [args]
+Usage: python bench_extra.py <profile-mat|plans|time-queries> [args]
 """
 
 from __future__ import annotations
 
-import cProfile
 import io
 import json
 import os
-import pstats
 import sys
 import tempfile
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
-
-
-def _print_stats(pr: cProfile.Profile, top: int = 40) -> None:
-    s = io.StringIO()
-    ps = pstats.Stats(pr, stream=s).sort_stats("cumulative")
-    ps.print_stats(top)
-    print(s.getvalue())
-
-
-def profile_kernel(n_docs: int = 150000, reps: int = 3) -> None:
-    import pyarrow.compute as pc
-
-    from zseq import synth, zseqfile
-
-    tbl = synth.tokens_table_arrow(n_docs)
-    toks = int(pc.sum(tbl.column("n_tok")).as_py())
-    # warm
-    buf = zseqfile.encode_table(tbl)
-    t0 = time.time()
-    for _ in range(reps):
-        buf = zseqfile.encode_table(tbl)
-    enc = (time.time() - t0) / reps
-    t0 = time.time()
-    for _ in range(reps):
-        zseqfile.decode_table(buf)
-    dec = (time.time() - t0) / reps
-    print(json.dumps({"tokens": toks, "enc_sec": round(enc, 3),
-                      "dec_sec": round(dec, 3),
-                      "enc_tok_per_sec": round(toks / enc),
-                      "dec_tok_per_sec": round(toks / dec),
-                      "enc_bytes": len(buf)}))
-    pr = cProfile.Profile()
-    pr.enable()
-    buf = zseqfile.encode_table(tbl)
-    pr.disable()
-    print("=== encode profile ===")
-    _print_stats(pr)
-    pr = cProfile.Profile()
-    pr.enable()
-    zseqfile.decode_table(buf)
-    pr.disable()
-    print("=== decode profile ===")
-    _print_stats(pr)
-
-
-def _make_input(work: str, n_docs: int, files: int) -> list[str]:
-    """Materialize bench-shaped parquet input WITHOUT Spark (same rows:
-    synth fixture is engine-independent)."""
-    import pyarrow.parquet as pq
-
-    from zseq import synth
-
-    paths = []
-    per = n_docs // files
-    for i in range(files):
-        tbl = synth.tokens_table_arrow(per, start=i * per)
-        p = os.path.join(work, f"part-{i:05d}.parquet")
-        pq.write_table(tbl, p, compression="snappy")
-        paths.append(p)
-    return paths
-
-
-def profile_task(n_docs: int = 93750) -> None:
-    """One bench encode task: the exact body of bench.py's
-    _pool_encode_one / zseq.encode._encode_files."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from zseq.encode import _encode_table_to_file
-
-    pa.set_cpu_count(1)
-    pa.set_io_thread_count(2)
-    work = tempfile.mkdtemp(prefix="zseq_prof_")
-    try:
-        [path] = _make_input(work, n_docs, 1)
-        out_dir = os.path.join(work, "out")
-        os.makedirs(out_dir)
-
-        def body():
-            t0 = time.time()
-            tbl = pq.read_table(path, use_threads=False)
-            t_read = time.time() - t0
-            tbl = tbl.cast(tbl.schema)
-            row = _encode_table_to_file(
-                tbl, out_dir, 0, tbl.schema, True, 1 << 16, time.time(),
-                None, fname="p.zseq")
-            return t_read, row
-
-        t_read, row = body()  # warm
-        t0 = time.time()
-        t_read, row = body()
-        wall = time.time() - t0
-        print(json.dumps({"read_sec": round(t_read, 3),
-                          "task_sec": round(wall, 3),
-                          "enc_bytes": row["enc_bytes"],
-                          "rows": row["rows"],
-                          "list_elems": row["list_elems"]}))
-        pr = cProfile.Profile()
-        pr.enable()
-        body()
-        pr.disable()
-        _print_stats(pr, 50)
-    finally:
-        import shutil
-
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def profile_mat(n_docs: int = 1500000) -> None:
@@ -243,12 +131,8 @@ def capture_plans(out_dir: str, sf_dir: str = "/root/testdata/sf0.001",
 
 
 if __name__ == "__main__":
-    cmd = sys.argv[1] if len(sys.argv) > 1 else "profile-kernel"
-    if cmd == "profile-kernel":
-        profile_kernel(int(sys.argv[2]) if len(sys.argv) > 2 else 150000)
-    elif cmd == "profile-task":
-        profile_task(int(sys.argv[2]) if len(sys.argv) > 2 else 93750)
-    elif cmd == "profile-mat":
+    cmd = sys.argv[1] if len(sys.argv) > 1 else None
+    if cmd == "profile-mat":
         profile_mat(int(sys.argv[2]) if len(sys.argv) > 2 else 1500000)
     elif cmd == "plans":
         capture_plans(sys.argv[2] if len(sys.argv) > 2
@@ -262,4 +146,4 @@ if __name__ == "__main__":
                      else "/root/testdata/sf0.001",
                      sys.argv[3] if len(sys.argv) > 3 else None)
     else:
-        raise SystemExit(f"unknown cmd {cmd}")
+        raise SystemExit(__doc__ if cmd is None else f"unknown cmd {cmd}")

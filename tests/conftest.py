@@ -2,8 +2,17 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import types as T
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# The tokens table (BASELINE.json input_hint), every field non-null.
+TOKENS_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.StringType(), False),
+    T.StructField("tokens", T.ArrayType(T.IntegerType(), False), False),
+    T.StructField("n_tok", T.IntegerType(), False),
+    T.StructField("source", T.StringType(), False),
+])
 
 
 @pytest.fixture(scope="session")

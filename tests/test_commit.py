@@ -32,17 +32,60 @@ def overwrite(out, ids):
     """``encode``'s fresh/overwrite commit, without the Spark job."""
     os.makedirs(out, exist_ok=True)
     c = zenc.begin(out, arrow_schema=SCHEMA)
-    return c.finish(zenc.build_manifest(
-        mode="preserve", partitions=1, arrow_schema=SCHEMA,
-        parts=[_stage(out, c.token, ids, 0)],
-        extra={"revision": c.revision}))
+    return c.publish([_stage(out, c.token, ids, 0)], mode="preserve",
+                     arrow_schema=SCHEMA)
 
 
 def append(out, ids):
     """``encode(append=True)``'s commit, without the Spark job."""
     c = zenc.begin(out, append=True, arrow_schema=SCHEMA)
-    return zenc.append_commit(
-        c, [_stage(out, c.token, ids, c.part_base)], SCHEMA, None, None)
+    return c.publish([_stage(out, c.token, ids, c.part_base)],
+                     mode="preserve", arrow_schema=SCHEMA)
+
+
+BASE_KEYS = ["format", "mode", "partitions", "partition_col", "zstd_level",
+             "reversed_cols", "schema", "schema_names", "parts", "totals"]
+
+
+def test_publish_fresh_and_append_manifest_shapes(tmp_path):
+    """``Commit.publish`` forms the manifests ``encode``,
+    ``encode_parquet`` and the DataSource writer commit, key for key:
+    fresh — the writer's mode/partitions/partition_col and extra keys,
+    then the revision; append — the committed parts then the new ones,
+    mode ``append``, ``input_files`` carried over and extended, then
+    ``revision`` and ``appends``."""
+    out = str(tmp_path / "ds")
+    os.makedirs(out)
+    c = zenc.begin(out, arrow_schema=SCHEMA)
+    fresh = c.publish([_stage(out, c.token, range(0, 5), 0)],
+                      mode="files", arrow_schema=SCHEMA, partitions=3,
+                      extra={"input_files": ["a.parquet"]})
+    assert list(fresh) == BASE_KEYS + ["input_files", "revision"]
+    assert (fresh["mode"], fresh["partitions"], fresh["partition_col"],
+            fresh["revision"]) == ("files", 3, None, 1)
+
+    c = zenc.begin(out, append=True, arrow_schema=SCHEMA)
+    new = _stage(out, c.token, range(5, 8), c.part_base)
+    app = c.publish([new], mode="files", arrow_schema=SCHEMA,
+                    partitions=1, partition_col="doc_id",
+                    extra={"input_files": ["b.parquet"]})
+    assert list(app) == BASE_KEYS + ["input_files", "revision", "appends"]
+    assert app["parts"] == fresh["parts"] + [new]
+    assert (app["mode"], app["partitions"], app["partition_col"],
+            app["revision"], app["appends"]) == ("append", 2, None, 2, 1)
+    assert app["input_files"] == ["a.parquet", "b.parquet"]
+    assert app["totals"]["rows"] == 8
+
+    # an append with no input files of its own keeps the committed list
+    app2 = append(out, range(8, 9))
+    assert app2["input_files"] == ["a.parquet", "b.parquet"]
+    assert app2["appends"] == 2
+
+    # without input_files anywhere, neither manifest grows the key
+    out2 = str(tmp_path / "ds2")
+    assert list(overwrite(out2, range(3))) == BASE_KEYS + ["revision"]
+    assert list(append(out2, range(3, 6))) == \
+        BASE_KEYS + ["revision", "appends"]
 
 
 def _rows(out):
@@ -211,12 +254,7 @@ def test_kill_at_every_step_leaves_last_revision_readable(
              "wb").close()
     _kill_after(monkeypatch, step)
     with pytest.raises(Killed):
-        if mode == "append":
-            zenc.append_commit(c, parts, SCHEMA, None, None)
-        else:
-            c.finish(zenc.build_manifest(
-                mode="preserve", partitions=1, arrow_schema=SCHEMA,
-                parts=parts, extra={"revision": c.revision}))
+        c.publish(parts, mode="preserve", arrow_schema=SCHEMA)
     monkeypatch.undo()
 
     # the link is the commit point: before it revision 2 is live, after
@@ -275,7 +313,7 @@ def test_stale_writer_loses_after_history_reset(tmp_path):
     overwrite(out, range(30, 40))                    # revision 3
     assert [r["revision"] for r in zenc.revisions(out)] == [3]
     with pytest.raises(RuntimeError, match="concurrent"):
-        zenc.append_commit(stale, parts, SCHEMA, None, None)
+        stale.publish(parts, mode="preserve", arrow_schema=SCHEMA)
     assert zenc.read_manifest(out)["revision"] == 3
     assert [r["revision"] for r in zenc.revisions(out)] == [3]
     assert _rows(out) == list(range(30, 40))

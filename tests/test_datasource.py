@@ -173,14 +173,14 @@ def test_stream_sink_writes_epochs(registered, tmp_path):
     dir with an atomic manifest; decode_stream unions them."""
     import pyarrow.parquet as pq
 
+    from conftest import TOKENS_SCHEMA
     from zseq import streaming
-    from zseq.schema import TOKENS_SCHEMA
 
     src, out, ckpt = (str(tmp_path / k) for k in ("src", "out", "ckpt"))
     os.makedirs(src, exist_ok=True)
     pq.write_table(synth.tokens_table_arrow(400, start=0),
                    os.path.join(src, "wave-0.parquet"))
-    stream = registered.readStream.schema(TOKENS_SCHEMA.to_spark()) \
+    stream = registered.readStream.schema(TOKENS_SCHEMA) \
         .parquet(src)
     q = (stream.writeStream.format("zseq")
          .option("checkpointLocation", ckpt)
@@ -191,7 +191,7 @@ def test_stream_sink_writes_epochs(registered, tmp_path):
 
     pq.write_table(synth.tokens_table_arrow(200, start=400),
                    os.path.join(src, "wave-400.parquet"))
-    stream2 = registered.readStream.schema(TOKENS_SCHEMA.to_spark()) \
+    stream2 = registered.readStream.schema(TOKENS_SCHEMA) \
         .parquet(src)
     q2 = (stream2.writeStream.format("zseq")
           .option("checkpointLocation", ckpt)
@@ -205,6 +205,38 @@ def test_stream_sink_writes_epochs(registered, tmp_path):
     got = sorted(r.doc_id for r in back.select("doc_id").collect())
     assert got == sorted(f"doc_{i:08d}" for i in range(600))
     # no staged leftovers
+    assert os.listdir(os.path.join(out, ".staging")) == []
+
+
+def test_stream_sink_replayed_epoch_is_noop(registered, tmp_path):
+    """A fresh checkpoint restarts batch ids at 0 and re-delivers the same
+    data: the committed epoch 0 is a no-op — no second epoch, the
+    manifest untouched, the replayed parts dropped from .staging."""
+    import pyarrow.parquet as pq
+
+    from conftest import TOKENS_SCHEMA
+    from zseq import streaming
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    os.makedirs(src)
+    pq.write_table(synth.tokens_table_arrow(200, start=0),
+                   os.path.join(src, "wave-0.parquet"))
+
+    def run(ckpt: str):
+        q = (registered.readStream.schema(TOKENS_SCHEMA).parquet(src)
+             .writeStream.format("zseq")
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True)
+             .start(out))
+        q.awaitTermination(120)
+
+    run(str(tmp_path / "ckpt"))
+    [d] = streaming.committed_epochs(out)
+    before = os.path.getmtime(os.path.join(d, "manifest.json"))
+    run(str(tmp_path / "ckpt_replay"))
+    assert streaming.committed_epochs(out) == [d]
+    assert os.path.getmtime(os.path.join(d, "manifest.json")) == before
+    assert streaming.decode_stream(registered, out).count() == 200
     assert os.listdir(os.path.join(out, ".staging")) == []
 
 
@@ -312,14 +344,12 @@ def test_batch_read_of_stream_layout_fails_helpfully(registered, tmp_path):
 
 
 def test_stream_writer_validates_zstd_level():
-    from pyspark.sql.types import StructType
-
+    from conftest import TOKENS_SCHEMA
     from zseq.datasource import ZseqStreamWriter
-    from zseq.schema import TOKENS_SCHEMA
 
     with pytest.raises(ValueError, match="1, 22"):
         ZseqStreamWriter({"path": "/tmp/x", "zstd_level": "30"},
-                         TOKENS_SCHEMA.to_spark())
+                         TOKENS_SCHEMA)
 
 
 def test_overwrite_is_atomic_against_stale_files(registered, tmp_path):

@@ -18,6 +18,34 @@ from zseq import synth
 FIXDIR = os.path.join(os.path.dirname(__file__), "fixtures")
 
 
+# The L6 default table (the reference's default_for_schema,
+# logical.rs:355-391): the value a new nullable column is filled with.
+L6_DEFAULTS = [
+    *[(t, 0) for t in (pa.int8(), pa.int16(), pa.int32(), pa.int64(),
+                       pa.uint8(), pa.uint16(), pa.uint32(), pa.uint64())],
+    (pa.float32(), 0.0), (pa.float64(), 0.0),
+    (pa.string(), ""), (pa.large_string(), ""),
+    (pa.binary(), b""), (pa.large_binary(), b""),
+    (pa.bool_(), False),
+    (pa.list_(pa.int32()), []), (pa.large_list(pa.string()), []),
+    # no zero-value: null
+    (pa.struct([("a", pa.int64())]), None),
+    (pa.map_(pa.string(), pa.int64()), None),
+    (pa.decimal128(10, 2), None),
+    (pa.timestamp("us"), None),
+]
+
+
+@pytest.mark.parametrize("t,want", [pytest.param(t, w, id=str(t))
+                                    for t, w in L6_DEFAULTS])
+def test_l6_default_per_type_family(t, want):
+    assert zdec._arrow_default(t) == want
+    arr = zdec.default_array(t, 3)
+    assert arr.type == t
+    assert arr.to_pylist() == [want] * 3
+    assert arr.null_count == (3 if want is None else 0)
+
+
 @pytest.fixture(scope="module")
 def ds(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("evo") / "ds")

@@ -1,122 +1,13 @@
-"""Structured Streaming ingest: file source -> .zseq epochs -> union
-decode; epoch replay is a committed no-op."""
+"""``decode_stream`` over the epoch layout: one scan over every committed
+epoch, each file checked against its own epoch's crc, read-side schema
+evolution and manifest pruning. The stream sink that writes epochs is
+tested in test_datasource.py."""
 
 import os
 
 import pytest
 
-from zseq import streaming, synth
-from zseq.schema import TOKENS_SCHEMA
-
-
-@pytest.fixture()
-def dirs(tmp_path):
-    return {k: str(tmp_path / k) for k in ("src", "out", "ckpt")}
-
-
-def _write_wave(spark, src: str, start: int, n: int) -> None:
-    tbl = synth.tokens_table_arrow(n, start=start)
-    import pyarrow.parquet as pq
-
-    os.makedirs(src, exist_ok=True)
-    pq.write_table(tbl, os.path.join(src, f"wave-{start}.parquet"))
-
-
-def test_stream_encode_decode(spark, dirs):
-    _write_wave(spark, dirs["src"], 0, 500)
-    stream = (
-        spark.readStream.schema(TOKENS_SCHEMA.to_spark())
-        .parquet(dirs["src"])
-    )
-    q = streaming.encode_stream(stream, dirs["out"], dirs["ckpt"],
-                                partitions=2)
-    q.awaitTermination(120)
-    assert len(streaming.committed_epochs(dirs["out"])) == 1
-
-    # second wave -> new epoch, same checkpoint
-    _write_wave(spark, dirs["src"], 500, 300)
-    stream2 = (
-        spark.readStream.schema(TOKENS_SCHEMA.to_spark())
-        .parquet(dirs["src"])
-    )
-    q2 = streaming.encode_stream(stream2, dirs["out"], dirs["ckpt"],
-                                 partitions=2)
-    q2.awaitTermination(120)
-    epochs = streaming.committed_epochs(dirs["out"])
-    assert len(epochs) == 2
-
-    back = streaming.decode_stream(spark, dirs["out"])
-    assert back.count() == 800
-    got = sorted(r.doc_id for r in back.select("doc_id").collect())
-    assert got == sorted(f"doc_{i:08d}" for i in range(800))
-
-
-def test_replayed_epoch_is_noop(spark, dirs):
-    _write_wave(spark, dirs["src"], 0, 200)
-
-    def run(ckpt: str):
-        stream = (
-            spark.readStream.schema(TOKENS_SCHEMA.to_spark())
-            .parquet(dirs["src"])
-        )
-        q = streaming.encode_stream(stream, dirs["out"], ckpt, partitions=2)
-        q.awaitTermination(120)
-
-    run(dirs["ckpt"])
-    d = streaming.committed_epochs(dirs["out"])[0]
-    before = os.path.getmtime(os.path.join(d, "manifest.json"))
-    # Replay: a FRESH checkpoint restarts epoch numbering at 0 and
-    # re-delivers the same data — the committed epoch must be a no-op.
-    run(str(dirs["ckpt"]) + "_replay")
-    assert len(streaming.committed_epochs(dirs["out"])) == 1
-    after = os.path.getmtime(os.path.join(d, "manifest.json"))
-    assert before == after
-    assert streaming.decode_stream(spark, dirs["out"]).count() == 200
-
-
-def test_stream_dedup_exactly_once_across_batches(spark, dirs):
-    """applyInPandasWithState dedup: a text seen in epoch 0 is suppressed
-    in epoch 1; each distinct fingerprint is emitted exactly once."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    src, sink, ckpt = dirs["src"], dirs["out"], dirs["ckpt"]
-    os.makedirs(src, exist_ok=True)
-
-    def wave(name, rows):
-        tbl = pa.table({
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-        })
-        pq.write_table(tbl, os.path.join(src, name))
-
-    def drain():
-        stream = spark.readStream.schema("doc_id long, text string") \
-            .parquet(src)
-        out = streaming.stream_dedup(stream)
-
-        def write(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(sink)
-
-        q = (out.writeStream.outputMode("update").foreachBatch(write)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    wave("w0.parquet", [(1, "alpha beta"), (2, "gamma delta"),
-                        (3, "alpha beta")])
-    drain()
-    got = {(r.doc_id, r.text)
-           for r in spark.read.parquet(sink).collect()}
-    assert got == {(1, "alpha beta"), (2, "gamma delta")}
-
-    # second wave: one replayed text, one new
-    wave("w1.parquet", [(10, "alpha beta"), (11, "epsilon zeta")])
-    drain()
-    got = {(r.doc_id, r.text)
-           for r in spark.read.parquet(sink).collect()}
-    assert got == {(1, "alpha beta"), (2, "gamma delta"),
-                   (11, "epsilon zeta")}
+from zseq import streaming
 
 
 def _write_epoch(out: str, e: int, rows: int = 5):
@@ -182,71 +73,6 @@ def test_decode_stream_crc_enforced_per_epoch(spark, tmp_path):
     open(p, "wb").write(bytes(blob))
     with pytest.raises(Exception, match="crc32"):
         streaming.decode_stream(spark, out).count()
-
-
-def test_windowed_stats_watermark_drops_late_rows(spark, tmp_path):
-    """Event-time windows + watermark: on-time rows aggregate into their
-    window; a row arriving after the watermark passed its window is
-    DROPPED (the late-data contract that bounds state)."""
-    import datetime as dt
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    src = str(tmp_path / "wsrc")
-    ckpt = str(tmp_path / "wckpt")
-    os.makedirs(src)
-
-    def ts(minute, second=0):
-        return dt.datetime(2026, 1, 1, 10, minute, second)
-
-    def wave(name, rows):
-        tbl = pa.table({
-            "ts": pa.array([r[0] for r in rows],
-                           pa.timestamp("us")),
-            "source": pa.array([r[1] for r in rows]),
-            "n_tok": pa.array([r[2] for r in rows], pa.int64()),
-        })
-        pq.write_table(tbl, os.path.join(src, name))
-
-    sink = str(tmp_path / "wsink")
-
-    def drain():
-        stream = (
-            spark.readStream
-            .schema("ts timestamp, source string, n_tok long")
-            .parquet(src)
-        )
-        out = streaming.windowed_stats(stream, window="1 minute",
-                                       watermark="2 minutes")
-
-        def write(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(sink)
-
-        q = (out.writeStream.outputMode("update").foreachBatch(write)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    # drain 1: watermark advances to 10:05 - 2min = 10:03
-    wave("w0.parquet", [(ts(0, 0), "a", 10), (ts(0, 30), "a", 5),
-                        (ts(5, 0), "b", 7)])
-    drain()
-    # drain 2 (checkpointed watermark carried over): one LATE row inside
-    # the closed 10:00 window (dropped), one on-time row
-    wave("w1.parquet", [(ts(0, 10), "a", 100), (ts(6, 0), "b", 3)])
-    drain()
-    spark.read.parquet(sink).createOrReplaceTempView("wstats")
-    rows = spark.sql(
-        "SELECT win_start, source, max(docs) as docs, "
-        "max(tokens) as tokens FROM wstats "
-        "GROUP BY win_start, source").collect()
-    got = {(r["win_start"].minute, r["source"]): (r["docs"], r["tokens"])
-           for r in rows}
-    # late (ts 10:00:10, 100 tokens) must NOT be in the 10:00 window
-    assert got[(0, "a")] == (2, 15)
-    assert got[(5, "b")] == (1, 7)
-    assert got[(6, "b")] == (1, 3)
 
 
 def test_decode_stream_schema_evolution(spark, tmp_path):

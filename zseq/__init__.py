@@ -10,8 +10,9 @@ inside ``mapInArrow`` — zero per-row Python on the hot path.
 Layers (mirroring zbra's four-layer design, README.md:5-12 of the reference):
 
   JSON/Parquet  ->  Spark DataFrame (logical rows)
-  logical       ->  zseq.schema (validated schema model)
-  striped       ->  Arrow RecordBatch columns shredded in zseq.shred
+  logical       ->  Spark/Arrow types (the Arrow schema rides in every
+                    part header and manifest)
+  striped       ->  Arrow RecordBatch columns shredded in zseq.column
   binary        ->  .zseq blob files written per-partition (zseq.zseqfile)
 
 Correctness contract (reference zbra-core/tests/roundtrip.rs:12-22):

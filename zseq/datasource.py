@@ -427,33 +427,24 @@ class ZseqSourceWriter(DataSourceArrowWriter):
         return ZseqCommit(row)
 
     def commit(self, messages) -> None:
-        from .encode import append_commit, build_manifest
-
-        c = self._commit
         parts = [m.part for m in messages if m is not None and m.part]
         parts.sort(key=lambda p: p["part_id"])
-        if not c.replace:
-            append_commit(c, parts, self._schema, self._zstd, None)
-            return
-        c.finish(build_manifest(
-            mode="datasource", partitions=len(parts),
-            arrow_schema=self._schema, parts=parts, zstd_level=self._zstd,
-            extra={"revision": c.revision}))
+        self._commit.publish(parts, mode="datasource",
+                             arrow_schema=self._schema,
+                             zstd_level=self._zstd)
 
     def abort(self, messages) -> None:
         self._commit.abort()
 
 
 class ZseqStreamWriter(DataSourceStreamArrowWriter):
-    """Streaming sink: ``df.writeStream.format("zseq").start(path)``.
-
-    Same epoch layout as zseq.streaming (epoch-<id>/ part files +
-    manifest), but driven by the engine's streaming commit protocol
-    instead of foreachBatch: tasks stage their encoded part under
-    .staging/ (they do not know the batch id), and commit(batchId) moves
-    the staged files into the epoch directory and commits its manifest
-    through ``encode.Commit`` — a replayed epoch that already committed
-    is a no-op (exactly-once), abort removes the staged files.
+    """Streaming sink: ``df.writeStream.format("zseq").start(path)``,
+    the one writer of the epoch layout described in zseq.streaming
+    (epoch-<id>/ part files + manifest). Tasks stage their encoded part
+    under .staging/ (they do not know the batch id), and commit(batchId)
+    moves the staged files into the epoch directory and commits its
+    manifest through ``encode.Commit`` — a replayed epoch that already
+    committed is a no-op (exactly-once), abort removes the staged files.
 
     CAVEAT (same semantics as Spark's built-in file sink, whose
     _spark_metadata log lives in the output dir): the epoch manifests in
@@ -573,8 +564,8 @@ class ZseqStreamWriter(DataSourceStreamArrowWriter):
 
 class ZseqStreamReader(DataSourceStreamReader):
     """Streaming source: ``spark.readStream.format("zseq").load(path)``
-    tails the committed epochs under ``path`` (the layout both the
-    foreachBatch path and the zseq stream sink produce).
+    tails the committed epochs under ``path`` (the layout the zseq
+    stream sink produces).
 
     Offset = count of committed epoch directories consumed. An epoch's
     manifest write is atomic, so an epoch is either fully visible or

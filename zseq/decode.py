@@ -102,10 +102,10 @@ def evolution_fields(written: pa.Schema, reader: pa.Schema,
 
 
 def _arrow_default(t: pa.DataType):
-    """L6 default_for (zseq/schema.py:218) in the Arrow type domain:
-    ints 0, floats 0.0, string '', binary b'', bool false, list [] —
-    None (null) for types with no zero-value (struct/map/decimal/
-    temporal, matching default_for exactly)."""
+    """L6 defaults (the reference's default_for_schema, logical.rs:355-391)
+    in the Arrow type domain: ints 0, floats 0.0, string '', binary b'',
+    bool false, list [] — None (null) for types with no zero-value
+    (struct/map/decimal/temporal)."""
     if pa.types.is_integer(t):
         return 0
     if pa.types.is_floating(t):

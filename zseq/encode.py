@@ -680,19 +680,14 @@ def encode(df: DataFrame, out_dir: str, *, mode: str = "preserve",
     parts.extend(c.done_parts.values())
     parts.sort(key=lambda p: p["part_id"])
 
-    if not c.replace:
-        manifest = append_commit(c, parts, arrow_schema, zstd_level,
-                                 reversed_cols)
-        return EncodeResult(out_dir, manifest, manifest["parts"])
-    manifest = c.finish(build_manifest(
-        mode=mode, partitions=P if mode == "hash" else len(parts),
-        arrow_schema=arrow_schema, parts=parts,
+    manifest = c.publish(
+        parts, mode=mode, arrow_schema=arrow_schema,
+        zstd_level=zstd_level, reversed_cols=reversed_cols,
+        partitions=P if mode == "hash" else None,
         # preserve mode did not partition by any column — recording the
         # defaulted key would claim a bucketing that never happened
-        partition_col=key if mode in ("hash", "salted", "range") else None,
-        zstd_level=zstd_level, reversed_cols=reversed_cols,
-        extra={"revision": c.revision}))
-    return EncodeResult(out_dir, manifest, parts)
+        partition_col=key if mode in ("hash", "salted", "range") else None)
+    return EncodeResult(out_dir, manifest, manifest["parts"])
 
 
 def check_append_compat(prev: dict, arrow_schema: pa.Schema,
@@ -743,18 +738,19 @@ def append_commit(c: Commit, new_parts: list[dict],
                   arrow_schema: pa.Schema, zstd_level: int | None,
                   reversed_cols: list[str] | None,
                   extra: dict | None = None) -> dict:
-    """The append manifest — the committed parts verbatim, then the new
-    ones — published through ``c.finish`` (which alone decides whether a
-    concurrent commit won). Old files are never GC'd on append: they are
-    still referenced."""
+    """The append branch of :meth:`Commit.publish`: the committed parts
+    verbatim, then the new ones, published through ``c.finish`` (which
+    alone decides whether a concurrent commit won). ``input_files``
+    provenance survives an append from any entry point: the committed
+    list, extended by ``extra``'s. Old files are never GC'd on append:
+    they are still referenced. A module function, looked up at call
+    time, so ``perfbench/trace.py`` times it as ``encode.append_commit``."""
     prev = c.prev
     all_parts = prev.get("parts", []) + new_parts
     extra = dict(extra or {})
-    if "input_files" in prev and "input_files" not in extra:
-        # provenance survives an append from ANY entry point — a
-        # DataFrame append onto a parquet-fast-path dataset must not
-        # silently drop the committed input_files list
-        extra["input_files"] = prev["input_files"]
+    if "input_files" in prev or "input_files" in extra:
+        extra["input_files"] = (prev.get("input_files", [])
+                                + extra.get("input_files", []))
     return c.finish(build_manifest(
         mode="append", partitions=len(all_parts),
         arrow_schema=arrow_schema, parts=all_parts,
@@ -1118,16 +1114,11 @@ def encode_parquet(spark, input_dir: str, out_dir: str, *,
         columns, zstd_level, c.token).collect()] if tasks else []
     parts.extend(c.done_parts.values())
     parts.sort(key=lambda p: p["part_id"])
-    if not c.replace:
-        manifest = append_commit(
-            c, parts, arrow_schema, zstd_level, reversed_cols,
-            extra={"input_files": c.prev.get("input_files", []) + files})
-        return EncodeResult(out_dir, manifest, manifest["parts"])
-    manifest = c.finish(build_manifest(
-        mode="files", partitions=len(files), arrow_schema=arrow_schema,
-        parts=parts, zstd_level=zstd_level, reversed_cols=reversed_cols,
-        extra={"input_files": files, "revision": c.revision}))
-    return EncodeResult(out_dir, manifest, parts)
+    manifest = c.publish(
+        parts, mode="files", arrow_schema=arrow_schema,
+        zstd_level=zstd_level, reversed_cols=reversed_cols,
+        partitions=len(files), extra={"input_files": files})
+    return EncodeResult(out_dir, manifest, manifest["parts"])
 
 
 def vacuum(out_dir: str, min_age_sec: float = 86400.0,
@@ -1433,8 +1424,9 @@ class Commit:
     """One write job on ``out_dir``, from :func:`begin` to
     :meth:`finish` (publish) or :meth:`abort` (discard). Every writer
     commits through it: ``encode``, ``encode_parquet``, the DataSource
-    batch and stream writers, ``encode_stream`` epochs, ``compact_parts``
-    and ``rollback``.
+    batch and stream writers, ``compact_parts`` and ``rollback``. The
+    first three publish through :meth:`publish`; the others build their
+    own manifest shapes and call :meth:`finish`.
 
     ``prev`` is the manifest the job builds on (None: fresh) and
     ``revision`` the one it commits (prev's + 1). ``replace``: the
@@ -1451,6 +1443,32 @@ class Commit:
     token: str
     part_base: int = 0
     done_parts: dict = field(default_factory=dict)
+
+    def publish(self, parts: list[dict], *, mode: str,
+                arrow_schema: pa.Schema, zstd_level: int | None = None,
+                reversed_cols: list[str] | None = None,
+                partitions: int | None = None,
+                partition_col: str | None = None,
+                extra: dict | None = None) -> dict:
+        """Commit the manifest of ``parts``, the job's parts in part-id
+        order, through :meth:`finish`: the one place a writer's manifest
+        becomes a fresh dataset or an append.
+
+        replace: :func:`build_manifest` of ``parts`` with ``mode``,
+        ``partitions`` (default ``len(parts)``), ``partition_col`` and
+        ``extra``. append: :func:`append_commit` — the committed parts,
+        then ``parts``, mode ``append``, ``input_files`` carried over and
+        extended by ``extra``'s, ``appends`` + 1."""
+        if not self.replace:
+            return append_commit(self, parts, arrow_schema, zstd_level,
+                                 reversed_cols, extra)
+        return self.finish(build_manifest(
+            mode=mode,
+            partitions=len(parts) if partitions is None else partitions,
+            arrow_schema=arrow_schema, parts=parts,
+            partition_col=partition_col, zstd_level=zstd_level,
+            reversed_cols=reversed_cols,
+            extra={**(extra or {}), "revision": self.revision}))
 
     def finish(self, manifest: dict) -> dict:
         """Publish ``manifest`` (whose ``revision`` is ``self.revision``):

@@ -94,11 +94,6 @@ def enum_column_size(tags: np.ndarray,
     )
 
 
-def reversed_column_size(inner_size: int) -> int:
-    """Column::Reversed (binary.rs:350-353): tag + inner column."""
-    return 1 + inner_size
-
-
 # ---------------------------------------------------------------------------
 # Arrow -> zbra mapping
 # ---------------------------------------------------------------------------

@@ -59,13 +59,10 @@ def quiet_worker_zip_finders() -> None:
     semantics-preserving. A finder created later (e.g. a subsequent
     addPyFile) keeps normal behavior until a later task quiets it, and
     its first read is always fresh. Idempotent, instance-scoped (no
-    global importlib patch). Opt out with
-    ZSEQ_KEEP_IMPORT_CACHE_INVALIDATION=1."""
+    global importlib patch)."""
     import sys
     import zipimport
 
-    if os.environ.get("ZSEQ_KEEP_IMPORT_CACHE_INVALIDATION"):
-        return
     for f in list(sys.path_importer_cache.values()):
         if isinstance(f, zipimport.zipimporter) \
                 and "invalidate_caches" not in f.__dict__:

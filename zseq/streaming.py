@@ -1,20 +1,21 @@
-"""Structured Streaming ingest: a stream of rows -> .zseq epochs.
+"""The streaming epoch layout: a stream of micro-batches -> .zseq epochs.
 
-The reference's "streaming" is chunked file I/O in its benches
-(/root/reference/zbra-core/benches/streaming-io.rs:8-51 — 1000-row chunks,
-single process). The Spark-native rebuild is real streaming: any
-``readStream`` source feeds ``foreachBatch``, each micro-batch is encoded
-into its own epoch directory with the standard atomic manifest, and epoch
-replay (Spark's at-least-once foreachBatch contract) is made exactly-once
-by the manifest commit: a replayed epoch that already committed is a no-op.
+``df.writeStream.format("zseq").start(out_dir)`` (the DataSource sink,
+:class:`zseq.datasource.ZseqStreamWriter`) commits each micro-batch into
+its own epoch directory, with the manifest published through
+``encode.Commit`` like every writer:
 
     out_dir/
-      epoch-00000000/ part-*.zseq + manifest.json
+      .staging/       parts of micro-batches not yet committed
+      epoch-00000000/ part-*.zseq + manifest.json (+ manifest-r*.json)
       epoch-00000001/ ...
 
-``decode_stream`` reads the union of committed epochs — uncommitted
-(crashed mid-epoch) directories are invisible, preserving the
-encode-side atomicity across the streaming boundary.
+An epoch directory is committed once it holds a ``manifest.json``, and a
+replayed micro-batch whose epoch already committed is a no-op, so
+Spark's at-least-once replay becomes exactly-once. ``decode_stream``,
+``spark.readStream.format("zseq")``, ``vacuum`` and the CLI read the
+union of committed epochs; uncommitted (crashed mid-epoch) directories
+are invisible.
 """
 
 from __future__ import annotations
@@ -43,104 +44,6 @@ def committed_epochs(out_dir: str) -> list[str]:
                 os.path.exists(os.path.join(d, "manifest.json")):
             out.append(d)
     return out
-
-
-def encode_stream(stream_df: DataFrame, out_dir: str, checkpoint: str,
-                  partitions: int | None = None, cluster: bool = True,
-                  available_now: bool = True):
-    """Start the streaming encode. Returns the StreamingQuery.
-
-    ``available_now=True`` drains everything currently available and
-    stops (the batch-ingest pattern); pass False for a continuous query.
-    """
-    os.makedirs(out_dir, exist_ok=True)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        dest = epoch_dir(out_dir, epoch_id)
-        if zenc.read_manifest(dest) is not None:
-            return  # replayed epoch — already committed, exactly-once
-        zenc.encode(batch_df, dest, mode="hash",
-                    partitions=partitions
-                    or batch_df.sparkSession.sparkContext.defaultParallelism,
-                    cluster=cluster)
-
-    writer = (
-        stream_df.writeStream
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_dedup(stream_df: DataFrame, col: str = "text",
-                 key: str = "doc_id") -> DataFrame:
-    """Cross-batch streaming exact dedup: emit each distinct (normalized)
-    text exactly once over the stream's lifetime — the first row seen for
-    its fingerprint (min ``key`` within a batch for determinism).
-
-    This is the custom-stateful-operator pattern
-    (``applyInPandasWithState``): state is keyed on the md5 fingerprint
-    and holds a single 'seen' flag, so state size is one tiny row per
-    distinct document ever seen — the minimum any exactly-once dedup can
-    hold — and it shuffles once on the fingerprint, the same key the
-    batch ``exact_groups`` uses. Replays are idempotent because state
-    lives in the checkpoint."""
-    import pandas as pd
-
-    from .textops import fingerprint_exprs
-
-    fp_s, _ = fingerprint_exprs(col)
-    cols = stream_df.columns
-    with_fp = stream_df.selectExpr(*cols, f"{fp_s} as fingerprint")
-    out_type = with_fp.schema
-
-    def fn(key_tuple, pdfs, state):
-        if state.exists:
-            return
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        state.update((True,))
-        first = batch.sort_values(key).head(1)
-        yield first
-
-    return (
-        with_fp.groupBy("fingerprint")
-        .applyInPandasWithState(
-            fn, out_type, "seen boolean", "update",
-            "NoTimeout")
-    )
-
-
-def windowed_stats(stream_df: DataFrame, time_col: str = "ts",
-                   window: str = "1 minute", slide: str | None = None,
-                   watermark: str = "2 minutes",
-                   keys: tuple = ("source",),
-                   value_col: str = "n_tok") -> DataFrame:
-    """Event-time windowed ingest stats with a watermark — docs and
-    token mass per (window, keys) over a stream.
-
-    The watermark IS the state bound: windows older than
-    max(event_time) - watermark are finalized and evicted, and rows
-    arriving later than that are dropped (the late-data contract), so
-    state size is O(active windows x key cardinality) regardless of how
-    long the stream runs. The aggregation is algebraic (count/sum), so
-    Spark applies map-side partial aggregation before the one shuffle
-    on (window, keys)."""
-    from pyspark.sql import functions as F
-
-    w = F.window(F.col(time_col), window, slide or window)
-    agg = (
-        stream_df.withWatermark(time_col, watermark)
-        .groupBy(w.alias("win"), *[F.col(k) for k in keys])
-        .agg(F.count(F.lit(1)).alias("docs"),
-             F.sum(value_col).alias("tokens"))
-    )
-    return agg.select(
-        F.col("win.start").alias("win_start"),
-        F.col("win.end").alias("win_end"),
-        *[F.col(k) for k in keys],
-        F.col("docs"), F.col("tokens"))
 
 
 def decode_stream(spark: SparkSession, out_dir: str,

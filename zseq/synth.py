@@ -59,22 +59,6 @@ def n_tok_of(doc_ids: np.ndarray) -> np.ndarray:
     return np.where(d % HEAVY_EVERY == 0, HEAVY_LEN, 16 + (d * 37) % 240)
 
 
-def tokens_of(doc_id: int, n: int) -> np.ndarray:
-    """Token array for one doc (vectorized over j)."""
-    d = np.int64(doc_id)
-    j = np.arange(n, dtype=np.int64)
-    r = int(d % 4)
-    if r == 0:
-        t = ((d + 1) * A + j * B) % VOCAB
-    elif r == 1:
-        t = (d * 131 + j * 7) % SMALL
-    elif r == 2:
-        t = (d % 1000) + j * 3
-    else:
-        t = ((d + j + 1) * A) % WIDE
-    return t.astype(np.int32)
-
-
 def flat_tokens(doc_ids: np.ndarray, n_tok: np.ndarray) -> np.ndarray:
     """All docs' tokens concatenated — fully vectorized.
 
@@ -174,25 +158,12 @@ def tokens_table_arrow(n_docs: int, start: int = 0) -> pa.Table:
 
 
 # ---------------------------------------------------------------------------
-# Spark derivation (from a numeric id column, e.g. the documents table)
+# SQL and Spark derivations (from a numeric id column, e.g. the documents
+# table)
 # ---------------------------------------------------------------------------
 
-def tokens_sql_spark(id_expr: str = "d") -> dict[str, str]:
-    """SQL fragments (Spark dialect) keyed by output column."""
-    n_tok = N_TOK_SQL.format(d=id_expr)
-    return {
-        "doc_id": f"concat('doc_', lpad(cast({id_expr} as string), 8, '0'))",
-        "tokens": (
-            f"transform(sequence(0, ({n_tok}) - 1), "
-            f"j -> cast(({TOKEN_SQL.format(d=id_expr, j='j')}) as int))"
-        ),
-        "n_tok": f"cast(({n_tok}) as int)",
-        "source": SOURCE_SQL.format(d=id_expr),
-    }
-
-
 def tokens_sql_duckdb(id_expr: str = "d") -> dict[str, str]:
-    """Same derivation in DuckDB dialect."""
+    """The derivation as DuckDB SQL fragments keyed by output column."""
     n_tok = N_TOK_SQL.format(d=id_expr)
     return {
         "doc_id": f"'doc_' || lpad(cast({id_expr} as varchar), 8, '0')",
@@ -246,7 +217,7 @@ def _tokens_batch(ids: np.ndarray) -> pa.RecordBatch:
 
 def _tokens_from_ids(ids_df, doc_id_nullable: bool = False):
     """ids DataFrame (single int64 column) -> tokens table via a numpy
-    ``mapInArrow`` kernel. The SQL derivation (tokens_sql_spark) evaluates
+    ``mapInArrow`` kernel. The derivation as Spark SQL evaluated
     transform(sequence(...)) per ELEMENT in Catalyst — ~150 expression
     evals per row; the numpy path generates whole batches with a handful
     of vectorized ops (guide §4.2: hand batches to vectorized native

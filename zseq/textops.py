@@ -462,17 +462,6 @@ def gopher_quality(spark: SparkSession, sf_dir: str, col: str = "text",
     return df.selectExpr(*exprs)
 
 
-def gopher_filter(df: DataFrame, col: str = "text",
-                  min_words: int = 50,
-                  max_words: int = 100_000,
-                  min_stopwords: int = 2) -> DataFrame:
-    """Keep only documents passing every Gopher rule (the filtering
-    counterpart of gopher_quality's audit view)."""
-    flags = gopher_flag_exprs(col, min_words, max_words, min_stopwords)
-    cond = " and ".join(f"({s})" for s, _ in flags.values())
-    return df.filter(cond)
-
-
 def gopher_oracle_sql(col: str = "text", min_words: int = 50,
                       max_words: int = 100_000,
                       min_stopwords: int = 2) -> str:
