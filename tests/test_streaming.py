@@ -1,7 +1,7 @@
 """``decode_stream`` over the epoch layout: one scan over every committed
 epoch, each file checked against its own epoch's crc, read-side schema
-evolution and manifest pruning. The stream sink that writes epochs is
-tested in test_datasource.py."""
+evolution and manifest pruning, and one file-stream -> sink -> decode
+roundtrip. The sink's own contract is tested in test_datasource.py."""
 
 import os
 
@@ -41,6 +41,48 @@ def _write_epoch(out: str, e: int, rows: int = 5):
                        parts=[part], extra={"epoch": e})
     _atomic_write_json(os.path.join(d, "manifest.json"), m)
     return [(e * 100 + i, f"x{e}_{i}") for i in range(rows)]
+
+
+def test_stream_encode_decode(spark, tmp_path):
+    """File stream -> writeStream.format('zseq') epochs -> decode_stream:
+    two waves through one checkpoint commit two epochs of two parts
+    each, and every row decodes back equal to its source."""
+    import pyarrow.parquet as pq
+
+    from conftest import TOKENS_SCHEMA
+    from zseq import synth
+    from zseq.datasource import register
+
+    register(spark)
+    src, out, ckpt = (str(tmp_path / k) for k in ("src", "out", "ckpt"))
+    os.makedirs(src, exist_ok=True)
+
+    def drain(start: int, n: int) -> None:
+        pq.write_table(synth.tokens_table_arrow(n, start=start),
+                       os.path.join(src, f"wave-{start}.parquet"))
+        q = (spark.readStream.schema(TOKENS_SCHEMA).parquet(src)
+             .repartition(2)
+             .writeStream.format("zseq")
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True)
+             .start(out))
+        q.awaitTermination(120)
+
+    drain(0, 500)
+    assert len(streaming.committed_epochs(out)) == 1
+    drain(500, 300)
+    epochs = streaming.committed_epochs(out)
+    assert len(epochs) == 2
+    for d in epochs:
+        parts = [f for f in os.listdir(d) if f.endswith(".zseq")]
+        assert len(parts) == 2, (d, parts)
+
+    back = streaming.decode_stream(spark, out)
+    assert back.count() == 800
+    want = synth.tokens_table_arrow(800).to_pylist()
+    got = sorted((r.asDict() for r in back.collect()),
+                 key=lambda r: r["doc_id"])
+    assert got == sorted(want, key=lambda r: r["doc_id"])
 
 
 def test_decode_stream_is_one_scan_at_100_epochs(spark, tmp_path):
