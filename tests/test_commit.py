@@ -281,7 +281,7 @@ def test_stream_epoch_killed_between_link_and_swap_commits_once(
 
     def attempt(aid):
         """One task attempt's staged part of micro-batch 0."""
-        return ZseqCommit(_stage(w._staging, w._token, ids, aid))
+        return ZseqCommit(_stage(w._staging, w._token, ids, aid), w._token)
 
     _kill_after(monkeypatch, "linked")
     with pytest.raises(Killed):

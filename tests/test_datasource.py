@@ -509,6 +509,21 @@ def test_empty_dataset_reads_as_empty_dataframe(registered, tmp_path):
     assert back.columns == ["doc_id", "n_tok"]
 
 
+def test_read_plans_one_wave_of_session_parallelism(registered, tmp_path):
+    """The reader is built in Spark's planning worker, which sees no
+    session: ``register`` carries the session's defaultParallelism
+    there, so 16 equal parts on local[4] read as 4 groups, one wave."""
+    from zseq import encode as zenc
+
+    out = str(tmp_path / "wave")
+    df = synth.tokens_df_range(registered, 1600, partitions=16)
+    zenc.encode(df, out, partitions=16, mode="hash")
+    assert registered.sparkContext.defaultParallelism == 4
+    back = registered.read.format("zseq").load(out)
+    assert back.rdd.getNumPartitions() == 4
+    assert back.count() == 1600
+
+
 def test_min_partitions_option_controls_packing_floor(spark, tmp_path):
     from zseq import encode as zenc
     from zseq import synth

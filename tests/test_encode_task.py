@@ -1,6 +1,8 @@
-"""The encode task body: the clustered row gather (``_take_table``) and a
-pin of the bytes ``_encode_table_to_file`` writes."""
+"""The encode task body: the clustered row gather (``_take_table``), a
+pin of the bytes ``_encode_table_to_file`` writes, and pins of what
+every writer commits."""
 
+import os
 import tracemalloc
 
 import numpy as np
@@ -121,3 +123,75 @@ def test_encoded_part_bytes_pinned(name, tmp_path):
     row = encode._encode_table_to_file(tbl, str(tmp_path), 0, tbl.schema,
                                        True, 1 << 16, 0.0)
     assert (row["enc_bytes"], row["crc32"]) == (enc_bytes, crc32)
+
+
+# Every writer on one fixed 3,000-row table: the (part_id, rows,
+# enc_bytes, crc32) of each committed part and the manifest's keys,
+# recorded at the commit before the writers shared one batches->part
+# helper, one part-file name and one task frame.
+KEYS = ["format", "mode", "partitions", "partition_col", "zstd_level",
+        "reversed_cols", "schema", "schema_names", "parts", "totals",
+        "revision"]
+ONE_PART = [(0, 3000, 198_830, 676_962_287)]
+MERGED = [(2, 3000, 180_159, 2_004_599_617)]
+WRITER_PINS = {
+    "encode": (ONE_PART, KEYS),
+    "datasource": (ONE_PART, KEYS),
+    "compact": (MERGED, KEYS + ["compactions"]),
+    "compact_spark": (MERGED, KEYS + ["compactions"]),
+}
+
+
+@pytest.mark.parametrize("writer", WRITER_PINS)
+def test_writer_parts_pinned(writer, spark, tmp_path):
+    from zseq.datasource import register
+
+    out = str(tmp_path / writer)
+    df = synth.tokens_df_range(spark, 3000, partitions=2)
+    if writer == "encode":
+        encode.encode(df.coalesce(1), out)
+    elif writer == "datasource":
+        register(spark)
+        df.coalesce(1).write.format("zseq").mode("overwrite").save(out)
+    else:
+        before = encode.encode(df, out).manifest  # two parts
+        assert [(p["part_id"], p["rows"], p["enc_bytes"], p["crc32"])
+                for p in before["parts"]] == [
+            (0, 1500, 133_734, 4_115_615_652),
+            (1, 1500, 133_117, 2_149_413_596)]
+        encode.compact_parts(out, spark if writer == "compact_spark"
+                             else None, target_bytes=1 << 30)
+    m = encode.read_manifest(out)
+    parts, keys = WRITER_PINS[writer]
+    assert [(p["part_id"], p["rows"], p["enc_bytes"], p["crc32"])
+            for p in m["parts"]] == parts
+    assert list(m) == keys
+
+
+def test_stream_sink_manifest_pinned(spark, tmp_path):
+    """The stream sink's epoch manifest, key for key. Its part header
+    carries the task attempt id, so its bytes are not pinned."""
+    import pyarrow.parquet as pq
+
+    from conftest import TOKENS_SCHEMA
+    from zseq import streaming
+    from zseq.datasource import register
+
+    register(spark)
+    src, out, ckpt = (str(tmp_path / k) for k in ("src", "out", "ckpt"))
+    os.makedirs(src)
+    pq.write_table(synth.tokens_table_arrow(300),
+                   os.path.join(src, "wave-0.parquet"))
+    q = (spark.readStream.schema(TOKENS_SCHEMA).parquet(src)
+         .writeStream.format("zseq")
+         .option("checkpointLocation", ckpt)
+         .trigger(availableNow=True)
+         .start(out))
+    q.awaitTermination(120)
+    [d] = streaming.committed_epochs(out)
+    m = encode.read_manifest(d)
+    assert list(m) == KEYS[:-1] + ["epoch", "revision"]
+    assert (m["epoch"], m["mode"], m["revision"]) == (0, "stream", 1)
+    assert [(p["part_id"], p["file"], p["rows"]) for p in m["parts"]] == \
+        [(0, "part-00000.zseq", 300)]
+    assert os.listdir(os.path.join(out, ".staging")) == []

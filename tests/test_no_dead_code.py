@@ -1,6 +1,8 @@
-"""No engine code without a caller: the name of every top-level
-``def``/``class`` in ``zseq/`` must be referenced somewhere (the ``def``
-or ``class`` statement itself is not a reference).
+"""No engine code without a caller, and no parameter without one.
+
+The name of every top-level ``def``/``class`` in ``zseq/`` must be
+referenced somewhere (the ``def`` or ``class`` statement itself is not a
+reference).
 
 References are counted over the engine and the programs that drive it —
 ``zseq/``, ``bench*.py``, ``bench/``, ``perfbench/`` and
@@ -8,7 +10,13 @@ References are counted over the engine and the programs that drive it —
 imports, and string constants that spell an identifier or a dotted path
 (``getattr``/``setattr`` targets such as ``perfbench/trace.py``'s patch
 list). Tests do not count: a function only its own test calls is dead.
-Comments and docstrings do not count either."""
+Comments and docstrings do not count either.
+
+Every defaulted parameter of a ``zseq/`` function must be passed, by
+keyword or position, by some call of that function's name — tests
+included, since a test that sets a parameter is its caller. The
+operator modules (``dedup``, ``sim``, ``textops``, ``queries``) are
+exempt: their knobs serve the declared queries."""
 
 import ast
 import os
@@ -19,9 +27,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _DOTTED = re.compile(r"^[A-Za-z_][\w.]*$")
 
 
-def _sources() -> list[str]:
+def _sources(*extra: str) -> list[str]:
     out = []
-    for base in ("zseq", "bench", "perfbench"):
+    for base in ("zseq", "bench", "perfbench") + extra:
         for d, _, files in os.walk(os.path.join(REPO, base)):
             out += [os.path.join(d, f) for f in files if f.endswith(".py")]
     out += [os.path.join(REPO, f) for f in os.listdir(REPO)
@@ -59,3 +67,73 @@ def test_every_top_level_engine_definition_has_a_caller():
     dead = [f"{rel}: {name}" for rel, name in defs if not refs[name]]
     assert not dead, "no caller outside the definition itself:\n" + \
         "\n".join(dead)
+
+
+_OPERATOR_MODULES = {"dedup.py", "sim.py", "textops.py", "queries.py"}
+
+
+def _defaulted(fn, shift: int) -> list[tuple[str, int | None]]:
+    """(name, call position or None for keyword-only) of ``fn``'s
+    defaulted parameters; ``shift`` drops a bound ``self``/``cls``."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    return ([(p.arg, i - shift) for i, p in enumerate(pos) if i >= first]
+            + [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+               if d is not None])
+
+
+def _params(tree) -> list[tuple[str, str, int | None]]:
+    """(callee name, parameter, position) of every defaulted parameter
+    of every function in ``tree``, methods and nested functions too. A
+    constructor is called by its class name."""
+    out = []
+
+    def visit(node, cls):
+        for n in ast.iter_child_nodes(node):
+            if isinstance(n, ast.ClassDef):
+                visit(n, n)
+            elif isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                static = any(isinstance(d, ast.Name)
+                             and d.id == "staticmethod"
+                             for d in n.decorator_list)
+                shift = int(cls is not None and not static)
+                name = cls.name if cls is not None and n.name == "__init__" \
+                    else n.name
+                out.extend((name, p, i) for p, i in _defaulted(n, shift))
+                visit(n, None)
+            else:
+                visit(n, cls)
+
+    visit(tree, None)
+    return out
+
+
+def test_every_defaulted_parameter_has_a_caller():
+    params, calls = [], {}
+    for path in _sources("tests"):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        rel = os.path.relpath(path, REPO)
+        if rel.startswith("zseq" + os.sep) \
+                and os.path.basename(rel) not in _OPERATOR_MODULES:
+            params += [(rel, *p) for p in _params(tree)]
+        for n in ast.walk(tree):
+            if not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr",
+                                                                None)
+            # a *args / **kwargs call passes every parameter
+            npos = float("inf") if any(isinstance(a, ast.Starred)
+                                       for a in n.args) else len(n.args)
+            kws = None if any(k.arg is None for k in n.keywords) \
+                else {k.arg for k in n.keywords}
+            calls.setdefault(name, []).append((npos, kws))
+    assert len(params) > 50  # the scan sees the engine's parameters
+    unset = [f"{rel}: {name}({p})" for rel, name, p, i in params
+             if not any(kws is None or p in kws
+                        or (i is not None and npos > i)
+                        for npos, kws in calls.get(name, []))]
+    assert not unset, "no caller passes these parameters:\n" + \
+        "\n".join(unset)

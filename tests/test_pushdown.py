@@ -685,10 +685,10 @@ def test_bucket_pruning_never_on_other_modes(spark, tmp_path):
     df = spark.range(0, 100).selectExpr(
         "cast(id as string) as doc_id", "id as v",
         "cast(id % 7 as int) as n_tok")
-    for mode, kw in [("salted", {}), ("preserve", {})]:
+    for mode in ("salted", "preserve"):
         out = str(tmp_path / f"ds_{mode}")
         zenc.encode(df.repartition(3), out, mode=mode, partitions=3,
-                    partition_col="doc_id", **kw)
+                    partition_col="doc_id")
         m = json.load(open(os.path.join(out, "manifest.json")))
         pred = [("doc_id", "=", "5")]
         kept = prune_parts(m["parts"], pred,

@@ -71,12 +71,14 @@ def test_encode_parquet_task_plan_is_constant_size(spark):
 
     import pyarrow as pa
 
+    from zseq.session import run_tasks
+
     schema = pa.schema([pa.field("doc_id", pa.int64())])
+    fn = zenc._encode_files("/nonexistent/out", schema, None, None, "tok")
 
     def plan(n):
         tasks = [(i, f"/nonexistent/in-{i:05d}.parquet") for i in range(n)]
-        df = zenc._encode_files(spark, tasks, "/nonexistent/out", schema,
-                                True, 1 << 16, None)
+        df = run_tasks(spark, tasks, fn, zenc.METRICS_SCHEMA)
         return re.sub(r"\d+", "0",
                       df._jdf.queryExecution().analyzed().toString())
 

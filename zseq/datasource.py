@@ -19,15 +19,17 @@ read
     past in the blob, never decompressed.
 
 write
-    Each task encodes its partition into one job-token-named .zseq file
-    (Arrow batches straight in via ``DataSourceArrowWriter`` — no row
-    conversion); the driver commits the manifest once from the per-task
-    commit messages through ``encode.Commit``, the commit every writer
-    uses: a put-if-absent of the next revision's snapshot, so a
-    concurrent writer that committed first makes this job raise. Task
-    files are written tmp-then-rename, so retries are idempotent, and
-    ``abort()`` removes the job's token-named files — the same
-    exactly-once story as ``zseq.encode``.
+    Both writers hand each task's Arrow batches (no row conversion) to
+    ``encode.encode_batches``, the helper ``zseq.encode`` runs too: one
+    job-token-named .zseq file per task, written tmp-then-rename, so
+    retries are idempotent. The batch writer's driver commits the
+    manifest once from the per-task commit messages through
+    ``encode.Commit``, the commit every writer uses: a put-if-absent of
+    the next revision's snapshot, so a concurrent writer that committed
+    first makes this job raise, and ``abort()`` removes the job's
+    token-named files — the same exactly-once story as ``zseq.encode``.
+    The stream sink stages its parts under ``.staging/`` and publishes
+    each micro-batch as one epoch through the same commit.
 
 Usage::
 
@@ -92,7 +94,10 @@ class ZseqPartGroup(InputPartition):
 
 @dataclass
 class ZseqCommit(WriterCommitMessage):
+    """A write task's part entry (None: the task had no rows) and the
+    job token its file is named by."""
     part: dict | None
+    token: str
 
 
 def _revision_opt(options: dict) -> int | None:
@@ -104,10 +109,9 @@ def _revision_opt(options: dict) -> int | None:
 
 
 def _parallelism() -> int:
-    """Parallelism floor of the read task packing. Readers are
-    constructed inside Spark's spawned planning worker, where
-    getActiveSession() is usually None — so the session wins when
-    visible, then the machine's core count (right for local mode; a sane
+    """Parallelism floor of the read task packing when the source was
+    not registered by :func:`register`: the session when visible (the
+    driver), then the machine's core count (right for local mode; a sane
     per-node floor on a cluster)."""
     try:
         from pyspark.sql import SparkSession
@@ -120,18 +124,45 @@ def _parallelism() -> int:
     return max(8, os.cpu_count() or 8)
 
 
+def _write_options(options: dict, schema: StructType, verb: str):
+    """The options both writers take -> (path, zstd level, rows per
+    block, Arrow schema)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from .codecs.bytescodecs import validate_zstd_level
+    from .encode import BATCH_ROWS
+
+    path = options.get("path")
+    if not path:
+        raise ValueError(f"zseq: .{verb}(path) is required")
+    lvl = options.get("zstd_level")
+    zstd = int(lvl) if lvl else None
+    validate_zstd_level(zstd)
+    return (path, zstd, int(options.get("batch_rows", BATCH_ROWS)),
+            to_arrow_schema(schema))
+
+
 def register(spark) -> None:
     """Ship the package to executors and register the 'zseq' format.
     Python-source filter pushdown is off by default in Spark 4.1 — turn
-    it on, else a reader implementing pushFilters() is refused."""
+    it on, else a reader implementing pushFilters() is refused.
+
+    Readers are built in Spark's spawned planning worker, which sees no
+    session; the registered source is a subclass carrying this session's
+    ``defaultParallelism``, so a read plans one wave of groups."""
     from .session import ship_package
 
     ship_package(spark)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(ZseqDataSource)
+    source = type(ZseqDataSource.__name__, (ZseqDataSource,),
+                  {"parallelism": spark.sparkContext.defaultParallelism})
+    spark.dataSource.register(source)
 
 
 class ZseqDataSource(DataSource):
+    #: read parallelism floor: the session's, set by :func:`register`
+    parallelism: int | None = None
+
     @classmethod
     def name(cls) -> str:
         return "zseq"
@@ -176,7 +207,8 @@ class ZseqDataSource(DataSource):
         # the columns option) OR a user-supplied .schema(...) — the
         # reader treats a superset as read-side evolution (new nullable
         # columns filled with L6 defaults) and a subset as projection.
-        return ZseqSourceReader(dict(self.options), schema)
+        return ZseqSourceReader(dict(self.options), schema,
+                                self.parallelism)
 
     def writer(self, schema: StructType,
                overwrite: bool) -> "ZseqSourceWriter":
@@ -187,7 +219,7 @@ class ZseqDataSource(DataSource):
         return ZseqStreamWriter(dict(self.options), schema)
 
     def streamReader(self, schema: StructType) -> "ZseqStreamReader":
-        return ZseqStreamReader(dict(self.options))
+        return ZseqStreamReader(dict(self.options), self.parallelism)
 
 
 def pa_select(schema, keep: list[str]):
@@ -199,7 +231,8 @@ def pa_select(schema, keep: list[str]):
 
 
 class ZseqSourceReader(DataSourceReader):
-    def __init__(self, options: dict, schema: StructType | None = None):
+    def __init__(self, options: dict, schema: StructType | None = None,
+                 parallelism: int | None = None):
         from .encode import read_manifest
 
         self._dir = options.get("path")
@@ -243,7 +276,7 @@ class ZseqSourceReader(DataSourceReader):
             options.get("target_partition_bytes", TARGET_BYTES))
         # an explicit .option("min_partitions", N) wins
         self._min_tasks = (int(options.get("min_partitions", 0))
-                           or _parallelism())
+                           or parallelism or _parallelism())
         # Zone maps exist for int-kind chunks (ints, timestamps, dates in
         # their storage domain) and for binary/string chunks (truncated
         # byte bounds) — those columns accept pushdown.
@@ -382,20 +415,10 @@ class ZseqSourceReader(DataSourceReader):
 
 class ZseqSourceWriter(DataSourceArrowWriter):
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from .codecs.bytescodecs import validate_zstd_level
         from .encode import begin
 
-        self._dir = options.get("path")
-        if not self._dir:
-            raise ValueError("zseq: .save(path) is required")
-        lvl = options.get("zstd_level")
-        self._zstd = int(lvl) if lvl else None
-        validate_zstd_level(self._zstd)
-        self._cluster = str(options.get("cluster", "true")).lower() != "false"
-        self._batch_rows = int(options.get("batch_rows", 1 << 16))
-        self._schema = to_arrow_schema(schema)
+        self._dir, self._zstd, self._batch_rows, self._schema = \
+            _write_options(options, schema, "save")
         # .mode('append') reaches here as overwrite=False: the append
         # checks run UP FRONT, before any task (the DataSource writer has
         # no reversed_cols option, so a reversed committed dataset fails
@@ -406,25 +429,15 @@ class ZseqSourceWriter(DataSourceArrowWriter):
         os.makedirs(self._dir, exist_ok=True)
 
     def write(self, iterator: Iterator) -> ZseqCommit:
-        import time
-
-        import pyarrow as pa
         from pyspark import TaskContext
 
-        from .encode import _encode_table_to_file, own_batches
+        from .encode import encode_batches
 
-        t0 = time.time()
-        batches = own_batches(list(iterator))
-        if not batches:
-            return ZseqCommit(None)
         c = self._commit
         pid = TaskContext.get().partitionId() + c.part_base
-        tbl = pa.Table.from_batches(batches).combine_chunks()
-        row = _encode_table_to_file(
-            tbl, self._dir, pid, self._schema, self._cluster,
-            self._batch_rows, t0, self._zstd,
-            fname=f"part-{c.token}-{pid:05d}.zseq")
-        return ZseqCommit(row)
+        return ZseqCommit(encode_batches(
+            iterator, self._dir, pid, self._schema, True, self._batch_rows,
+            self._zstd, c.token), c.token)
 
     def commit(self, messages) -> None:
         parts = [m.part for m in messages if m is not None and m.part]
@@ -444,7 +457,8 @@ class ZseqStreamWriter(DataSourceStreamArrowWriter):
     under .staging/ (they do not know the batch id), and commit(batchId)
     moves the staged files into the epoch directory and commits its
     manifest through ``encode.Commit`` — a replayed epoch that already
-    committed is a no-op (exactly-once), abort removes the staged files.
+    committed is a no-op (exactly-once); both commit and abort then
+    remove the micro-batch's staged files (``encode.gc_unreferenced``).
 
     CAVEAT (same semantics as Spark's built-in file sink, whose
     _spark_metadata log lives in the output dir): the epoch manifests in
@@ -459,107 +473,63 @@ class ZseqStreamWriter(DataSourceStreamArrowWriter):
     def __init__(self, options: dict, schema: StructType):
         import uuid
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        self._dir = options.get("path")
-        if not self._dir:
-            raise ValueError("zseq: .start(path) is required")
-        from .codecs.bytescodecs import validate_zstd_level
-
-        lvl = options.get("zstd_level")
-        self._zstd = int(lvl) if lvl else None
-        validate_zstd_level(self._zstd)
-        self._cluster = str(options.get("cluster", "true")).lower() != "false"
-        self._batch_rows = int(options.get("batch_rows", 1 << 16))
-        self._schema = to_arrow_schema(schema)
-        # Query-unique staging token: two concurrent streaming queries
+        self._dir, self._zstd, self._batch_rows, self._schema = \
+            _write_options(options, schema, "start")
+        # Writer-unique staging token: two concurrent streaming queries
         # writing the same path must never GC each other's staged parts
         # (a shared .staging sweep would make the victim's os.replace at
-        # commit fail and abort its micro-batch).
+        # commit fail and abort its micro-batch). Spark builds one writer
+        # for a micro-batch's tasks and a fresh one for its commit, so
+        # the token reaches commit/abort in the commit messages.
         self._token = uuid.uuid4().hex[:8]
         self._staging = os.path.join(self._dir, ".staging")
         os.makedirs(self._staging, exist_ok=True)
 
     def write(self, iterator: Iterator) -> ZseqCommit:
-        import time
-
-        import pyarrow as pa
         from pyspark import TaskContext
 
-        from .encode import _encode_table_to_file, own_batches
+        from .encode import encode_batches
 
-        t0 = time.time()
-        batches = own_batches(list(iterator))
-        if not batches:
-            return ZseqCommit(None)
         # Task attempt id is unique across retries within the query run —
         # the staged name can never collide; commit renumbers.
         aid = int(TaskContext.get().taskAttemptId())
-        tbl = pa.Table.from_batches(batches).combine_chunks()
-        row = _encode_table_to_file(
-            tbl, self._staging, aid, self._schema, self._cluster,
-            self._batch_rows, t0, self._zstd,
-            fname=f"part-{self._token}-{aid:05d}.zseq")
-        return ZseqCommit(row)
+        return ZseqCommit(encode_batches(
+            iterator, self._staging, aid, self._schema, True,
+            self._batch_rows, self._zstd, self._token), self._token)
 
     def commit(self, messages, batchId: int) -> None:
-        from .encode import begin, build_manifest
+        from .encode import begin, part_name
         from .streaming import epoch_dir
 
         parts = [m.part for m in messages if m is not None and m.part]
         parts.sort(key=lambda p: p["part_id"])
-        dest = epoch_dir(self._dir, batchId)
-        c = begin(dest)
-        if c.prev is not None:
-            # replayed epoch: already committed — drop the staged files
-            for p in parts:
-                try:
-                    os.remove(os.path.join(self._staging, p["file"]))
-                except OSError:
-                    pass
-            self._gc_staging()
-            return
-        os.makedirs(dest, exist_ok=True)
-        for i, p in enumerate(parts):
-            new = f"part-{i:05d}.zseq"
-            os.replace(os.path.join(self._staging, p["file"]),
-                       os.path.join(dest, new))
-            p["file"] = new
-            p["part_id"] = i
-        self._gc_staging()
-        c.finish(build_manifest(
-            mode="stream", partitions=len(parts),
-            arrow_schema=self._schema, parts=parts, zstd_level=self._zstd,
-            extra={"epoch": int(batchId), "revision": c.revision}))
-
-    def _gc_staging(self) -> None:
-        """Remove staged leftovers from THIS QUERY's dead/superseded task
-        attempts — only files carrying our query token. Safe at commit
-        time: our epoch's surviving files were just moved out, every
-        other token-matched file belongs to an attempt whose commit
-        message never arrived, and a still-running zombie writes
-        tmp-then-rename, so at worst its orphan reappears and the NEXT
-        commit collects it. A concurrent query's staged parts (different
-        token) are never touched."""
-        try:
-            names = os.listdir(self._staging)
-        except OSError:
-            return
-        prefix = f"part-{self._token}-"
-        for f in names:
-            if f.startswith(prefix) and ".zseq" in f:
-                try:
-                    os.remove(os.path.join(self._staging, f))
-                except OSError:
-                    pass
+        c = begin(epoch_dir(self._dir, batchId))
+        if c.prev is None:  # else a replayed epoch, already committed
+            os.makedirs(c.out_dir, exist_ok=True)
+            for i, p in enumerate(parts):
+                new = part_name(None, i)
+                os.replace(os.path.join(self._staging, p["file"]),
+                           os.path.join(c.out_dir, new))
+                p["file"] = new
+                p["part_id"] = i
+            c.publish(parts, mode="stream", arrow_schema=self._schema,
+                      zstd_level=self._zstd, extra={"epoch": int(batchId)})
+        self._drop_staged(messages)
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages or []:
-            if m is not None and m.part:
-                try:
-                    os.remove(os.path.join(self._staging, m.part["file"]))
-                except OSError:
-                    pass
+        self._drop_staged(messages)
+
+    def _drop_staged(self, messages) -> None:
+        """Remove the micro-batch's staged files: after a commit, a
+        replayed epoch's parts and those of task attempts whose commit
+        message never arrived. A still-running zombie writes
+        tmp-then-rename, so at worst its orphan stays for vacuum; a
+        concurrent query's staged parts (another token) are never
+        touched."""
+        from .encode import gc_unreferenced
+
+        for token in {m.token for m in messages or [] if m is not None}:
+            gc_unreferenced(self._staging, set(), set(), token)
 
 
 class ZseqStreamReader(DataSourceStreamReader):
@@ -574,7 +544,7 @@ class ZseqStreamReader(DataSourceStreamReader):
     path (packed groups, crc-verified, header schema checked against the
     first epoch's)."""
 
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, parallelism: int | None):
         from .encode import read_manifest
         from .streaming import committed_epochs
 
@@ -588,7 +558,7 @@ class ZseqStreamReader(DataSourceStreamReader):
         eps = committed_epochs(self._dir)
         m = read_manifest(eps[0]) if eps else None
         self._names = list(m["schema_names"]) if m else None
-        self._min_tasks = _parallelism()
+        self._min_tasks = parallelism or _parallelism()
 
     def initialOffset(self) -> dict:
         return {"epochs": 0}

@@ -14,7 +14,7 @@ DataSource (batch and stream):
   per-segment byte consumption and the trailing row count — then evolved
   to the reader schema (``read_group``).
 
-``decode`` runs the groups as ``spark.range(n_groups).mapInArrow``: one
+``decode`` runs one task per group through ``session.run_tasks``: one
 leaf node and a task list built only in the JVM.
 """
 
@@ -298,28 +298,22 @@ def read_parts(spark: SparkSession, entries: list[tuple],
                written: pa.Schema, columns: list[str] | None = None,
                predicate: list[tuple] | None = None,
                schema=None) -> DataFrame:
-    """``part_entries`` of one or more manifests -> DataFrame: one
-    ``spark.range`` leaf with a task per group, whatever the number of
-    files or directories. The group list rides in the task closure, so
-    the plan holds no per-file literal."""
+    """``part_entries`` of one or more manifests -> DataFrame: one task
+    per group (``session.run_tasks``), whatever the number of files or
+    directories."""
     from pyspark.sql.pandas.types import from_arrow_schema
+
+    from .session import run_tasks
 
     read_cols, emit, out = read_plan(written, schema, columns)
     groups = plan_groups(entries, predicate,
                          spark.sparkContext.defaultParallelism)
     names = written.names
 
-    def task(batches):
-        from .session import quiet_worker_zip_finders
+    def task(files):
+        return read_group(files, names, read_cols, predicate, emit)
 
-        quiet_worker_zip_finders()
-        for b in batches:  # each input id is the index of a group
-            for gid in b.column(0).to_pylist():
-                yield from read_group(groups[gid], names, read_cols,
-                                      predicate, emit)
-
-    n = len(groups)
-    return spark.range(0, n, 1, n).mapInArrow(task, from_arrow_schema(out))
+    return run_tasks(spark, groups, task, from_arrow_schema(out))
 
 
 def decode(spark: SparkSession, out_dir: str,

@@ -4,20 +4,28 @@ The Spark rebuild of the reference's write path (EP1 in SURVEY.md §3:
 parse -> validate -> shred -> compress -> write, all single-threaded in
 zbra). Here the plan is declarative up to the codec boundary:
 
-  df -> repartition(P, doc_id)           [the only shuffle]
+  df (mode preserve: no shuffle; hash/salted/range: one repartition)
      -> mapInArrow(encode_partition)     [Arrow batches -> numpy codecs]
-     -> executor writes part-{pid}.zseq  [tmp + rename, idempotent]
+     -> executor writes part-{token}-{pid}.zseq  [tmp + rename]
      -> metrics rows -> driver           [collect ~P small rows]
      -> manifest-r{N}.json, manifest.json [commit: put-if-absent link]
 
+Every writer (``encode``, ``encode_parquet``, the DataSource batch and
+stream writers, ``compact_parts``) encodes its parts through one kernel,
+``_encode_table_to_file``; ``encode_parquet``, ``compact_parts`` and
+``decode`` launch their tasks through ``session.run_tasks``.
+
 Scale notes (design target: 10^12 sequences, 1000 executors):
-  - One shuffle, hash-partitioned on doc_id: uniform row spread; a heavy
-    doc (giant token array) is a single row so hashing is the best
-    possible row-level balance — the per-partition token counts in the
-    manifest make residual skew observable.
+  - The default mode, preserve, encodes Spark's byte-uniform input
+    splits as they are; mode hash spreads rows by a hash of the key (a
+    heavy doc is a single row, so hashing is the best possible row-level
+    balance) and the per-part token counts in the manifest make residual
+    skew observable.
   - No driver-side data movement: the driver sees only P metric rows.
-  - Idempotent tasks: output name is keyed by partition id; retried tasks
-    overwrite via atomic rename. Resume anti-joins the manifest.
+  - Idempotent tasks: output names carry the job token and the part id
+    (``part_name``); retried tasks overwrite via atomic rename. Resume
+    filters ``spark_partition_id`` to the hash buckets whose parts are
+    missing.
   - Row clustering: within a partition, rows are reordered by the bit
     width of their token arrays before encoding (order is free in a
     DataFrame; the correctness contract is keyed by doc_id). Mixed-width
@@ -52,6 +60,8 @@ METRICS_SCHEMA = (
     "crc32 long, zones string"
 )
 
+BATCH_ROWS = 1 << 16  # rows per block in every part file
+
 _METRICS_PA = pa.schema([
     ("part_id", pa.int32()), ("file", pa.string()), ("rows", pa.int64()),
     ("list_elems", pa.int64()), ("raw_bytes", pa.int64()),
@@ -59,6 +69,15 @@ _METRICS_PA = pa.schema([
     ("codecs", pa.string()), ("col_bytes", pa.string()),
     ("crc32", pa.int64()), ("zones", pa.string()),
 ])
+
+
+def part_name(token: str | None, part_id: int | None = None) -> str:
+    """``part-{token}-{part_id:05d}.zseq``: the one spelling of a part
+    file name. Writers name their parts by job ``token``; a committed
+    stream epoch's parts carry no token (``token`` None). Without
+    ``part_id``: the prefix of every part file of job ``token``."""
+    head = f"part-{token}-" if token is not None else "part-"
+    return head if part_id is None else f"{head}{part_id:05d}.zseq"
 
 
 def gc_unreferenced(out_dir: str, keep: set[str], old_files: set[str],
@@ -89,7 +108,7 @@ def gc_unreferenced(out_dir: str, keep: set[str], old_files: set[str],
         if ".zseq" not in f or f in keep:
             continue
         base = f.split(".zseq")[0] + ".zseq"
-        ours = token is not None and base.startswith(f"part-{token}-")
+        ours = token is not None and base.startswith(part_name(token))
         stale_tmp = f != base and base in keep
         if not (base in old_files or ours or stale_tmp):
             continue
@@ -223,7 +242,10 @@ def strip_maps_df(df: DataFrame) -> tuple[DataFrame, bool]:
 def _restore_maps(tbl: pa.Table, schema: pa.Schema) -> pa.Table:
     """Worker-side inverse of ``strip_maps_df``: rebuild map arrays (per
     the target ``schema``) from the transferred entries arrays, into
-    fully self-owned buffers."""
+    fully self-owned buffers. A no-op for a map-free ``schema``."""
+    if not any(_type_has_map(f.type) for f in schema):
+        return tbl
+
     def rebuild(arr: pa.Array, want: pa.DataType) -> pa.Array:
         if isinstance(arr, pa.ChunkedArray):
             arr = arr.combine_chunks()
@@ -431,7 +453,7 @@ def _encode_table_to_file(tbl: pa.Table, out_dir: str, part_id: int,
         order = _cluster_order(tbl)
         if order is not None:
             tbl = _take_table(tbl, order)
-    fname = fname or f"part-{part_id:05d}.zseq"
+    fname = fname or part_name(None, part_id)
     final = os.path.join(out_dir, fname)
     # Attempt-unique tmp: pid alone can COLLIDE across machines on a
     # shared filesystem (speculative execution / zombie retries of the
@@ -472,9 +494,26 @@ def _encode_table_to_file(tbl: pa.Table, out_dir: str, part_id: int,
     }
 
 
+def encode_batches(batches, out_dir: str, part_id: int, schema: pa.Schema,
+                   cluster: bool, batch_rows: int, zstd_level: int | None,
+                   token: str) -> dict | None:
+    """A task's Arrow batches -> one part file named by job ``token``:
+    the batches are owned (``own_batches``) and combined, map columns
+    rebuilt (``_restore_maps``), and the table encoded by
+    ``_encode_table_to_file``. None for a task with no rows. Serves
+    ``encode`` and both DataSource writers."""
+    t0 = time.time()
+    got = own_batches(list(batches))
+    if not got:
+        return None
+    tbl = _restore_maps(pa.Table.from_batches(got).combine_chunks(), schema)
+    return _encode_table_to_file(tbl, out_dir, part_id, schema, cluster,
+                                 batch_rows, t0, zstd_level,
+                                 fname=part_name(token, part_id))
+
+
 def _encode_partition(out_dir: str, schema: pa.Schema, cluster: bool,
-                      batch_rows: int, zstd_level: int | None = None,
-                      token: str | None = None, part_base: int = 0):
+                      zstd_level: int | None, token: str, part_base: int):
     def fn(batches):
         from pyspark import TaskContext
 
@@ -484,68 +523,47 @@ def _encode_partition(out_dir: str, schema: pa.Schema, cluster: bool,
         # part_base offsets appended parts past the committed ids so the
         # in-file header metadata, file name, and manifest all agree
         pid = TaskContext.get().partitionId() + part_base
-        t0 = time.time()
-        got = list(batches)
-        if not got:
-            return
-        tbl = pa.Table.from_batches(got).combine_chunks()
-        if any(_type_has_map(f.type) for f in schema):
-            tbl = _restore_maps(tbl, schema)
-        fname = f"part-{token}-{pid:05d}.zseq" if token else None
-        row = _encode_table_to_file(
-            tbl, out_dir, pid, schema, cluster, batch_rows, t0,
-            zstd_level, fname=fname)
-        yield pa.RecordBatch.from_pylist([row], schema=_METRICS_PA)
+        row = encode_batches(batches, out_dir, pid, schema, cluster,
+                             BATCH_ROWS, zstd_level, token)
+        if row is not None:
+            yield pa.RecordBatch.from_pylist([row], schema=_METRICS_PA)
 
     return fn
 
 
-def _encode_files(spark, tasks: list[tuple[int, str]], out_dir: str,
-                  schema: pa.Schema, cluster: bool, batch_rows: int,
-                  columns: list[str] | None,
-                  zstd_level: int | None = None,
-                  token: str | None = None) -> DataFrame:
-    """Task frame for the parquet fast path, one task per (part_id,
-    parquet path) — a deterministic, resume-friendly 1:1 mapping of input
-    file to .zseq part. The task list is ``spark.range`` (built only in
-    the JVM: no Python RDD hop, no per-file plan literal); the worker
-    looks its file up in the closure-captured ``tasks`` by id, reads the
-    parquet itself via pyarrow (bypassing the JVM row->Arrow conversion,
-    which profiling shows costs more than the codecs for array columns)
-    and writes one .zseq."""
-    def fn(batches):
+def _encode_files(out_dir: str, schema: pa.Schema,
+                  columns: list[str] | None, zstd_level: int | None,
+                  token: str):
+    """Task body of the parquet fast path (manifest mode ``files``), one
+    (part_id, parquet path) item per task — a deterministic,
+    resume-friendly 1:1 mapping of input file to .zseq part. The worker
+    reads the parquet itself via pyarrow (bypassing the JVM row->Arrow
+    conversion, which profiling shows costs more than the codecs for
+    array columns) and writes one .zseq."""
+    def fn(item):
         import pyarrow.parquet as pq
 
-        from .session import quiet_worker_zip_finders
-
-        quiet_worker_zip_finders()
         # One task == one core: pyarrow's internal pool would otherwise
         # use every machine core per read, silently oversubscribing (and
         # making any cores-vs-throughput measurement meaningless).
         pa.set_cpu_count(1)
         pa.set_io_thread_count(2)
-        for batch in batches:
-            for i in batch.column(0).to_pylist():
-                part_id, path = tasks[i]
-                t0 = time.time()
-                tbl = pq.read_table(path, columns=columns, use_threads=False)
-                if schema.names != tbl.schema.names:
-                    tbl = tbl.select(schema.names)
-                tbl = tbl.cast(schema)
-                fname = (f"part-{token}-{part_id:05d}.zseq"
-                         if token else None)
-                out = _encode_table_to_file(
-                    tbl, out_dir, part_id, schema, cluster,
-                    batch_rows, t0, zstd_level, fname=fname)
-                yield pa.RecordBatch.from_pylist([out], schema=_METRICS_PA)
+        part_id, path = item
+        t0 = time.time()
+        tbl = pq.read_table(path, columns=columns, use_threads=False)
+        if schema.names != tbl.schema.names:
+            tbl = tbl.select(schema.names)
+        tbl = tbl.cast(schema)
+        row = _encode_table_to_file(tbl, out_dir, part_id, schema, True,
+                                    BATCH_ROWS, t0, zstd_level,
+                                    fname=part_name(token, part_id))
+        yield pa.RecordBatch.from_pylist([row], schema=_METRICS_PA)
 
-    n = len(tasks)
-    return spark.range(0, n, 1, n).mapInArrow(fn, METRICS_SCHEMA)
+    return fn
 
 
 def encode(df: DataFrame, out_dir: str, *, mode: str = "preserve",
            partitions: int | None = None,
-           cluster: bool = True, batch_rows: int = 1 << 16,
            partition_col: str | None = None,
            resume: bool = False,
            append: bool = False,
@@ -616,10 +634,6 @@ def encode(df: DataFrame, out_dir: str, *, mode: str = "preserve",
             "resume requires mode='hash' (preserve-mode split ids are not "
             "stable across plan changes)"
         )
-    if append and resume:
-        raise ValueError(
-            "append and resume are mutually exclusive: resume finishes a "
-            "crashed job over the SAME data; append adds NEW data")
     P = partitions or spark.sparkContext.defaultParallelism
     key = partition_col or df.columns[0]
     os.makedirs(out_dir, exist_ok=True)
@@ -644,6 +658,7 @@ def encode(df: DataFrame, out_dir: str, *, mode: str = "preserve",
     # committed schema/format is the original, map-typed one.
     df, _ = strip_maps_df(df)
     parts: list[dict] = []
+    cluster = True
     if mode == "salted":
         work = _salted_repartition(df, P, key)
         run = True
@@ -673,8 +688,8 @@ def encode(df: DataFrame, out_dir: str, *, mode: str = "preserve",
         work = df
         run = True
     if run:
-        fn = _encode_partition(out_dir, arrow_schema, cluster, batch_rows,
-                               zstd_level, c.token, part_base=c.part_base)
+        fn = _encode_partition(out_dir, arrow_schema, cluster, zstd_level,
+                               c.token, c.part_base)
         metrics = work.mapInArrow(fn, METRICS_SCHEMA)
         parts = [r.asDict() for r in metrics.collect()]
     parts.extend(c.done_parts.values())
@@ -766,8 +781,7 @@ def _merge_group(task: tuple) -> dict:
     Python so it runs identically inside a Spark task (compact_parts
     with a session) or on the driver — the dataset's rows never cross
     the JVM boundary either way; only this returned metrics dict does."""
-    (out_dir, files, schema_hex, batch_rows, zstd_level, part_id,
-     fname) = task
+    out_dir, files, schema_hex, zstd_level, part_id, fname = task
     from .zseqfile import ZseqReader, check_crc
 
     schema = pa.ipc.read_schema(pa.py_buffer(bytes.fromhex(schema_hex)))
@@ -780,14 +794,13 @@ def _merge_group(task: tuple) -> dict:
         tables.append(ZseqReader(content).read_all())
     tbl = pa.concat_tables(tables).combine_chunks()
     return _encode_table_to_file(tbl, out_dir, part_id, schema, False,
-                                 batch_rows, time.time(), zstd_level,
+                                 BATCH_ROWS, time.time(), zstd_level,
                                  fname=fname)
 
 
 def compact_parts(out_dir: str, spark=None, *,
                   target_bytes: int = 128 << 20,
                   small_bytes: int | None = None,
-                  batch_rows: int = 1 << 16,
                   dry_run: bool = False) -> dict:
     """In-place incremental compaction: merge a committed dataset's
     SMALL part files into ~``target_bytes`` parts, leaving large parts
@@ -864,17 +877,20 @@ def compact_parts(out_dir: str, spark=None, *,
     lvl = int(prev.get("zstd_level", 3) or 3)
     tasks = [
         (out_dir, [(p["file"], p.get("crc32")) for p in g],
-         prev["schema"], batch_rows, lvl, c.part_base + i,
-         f"part-{c.token}-{c.part_base + i:05d}.zseq")
+         prev["schema"], lvl, c.part_base + i,
+         part_name(c.token, c.part_base + i))
         for i, g in enumerate(groups)
     ]
     if spark is not None:
-        from .session import ship_package
+        from .session import run_tasks, ship_package
+
+        def merge(task):
+            yield pa.RecordBatch.from_pylist([_merge_group(task)],
+                                             schema=_METRICS_PA)
 
         ship_package(spark)
-        merged = (spark.sparkContext
-                  .parallelize(tasks, len(tasks))
-                  .map(_merge_group).collect())
+        merged = [r.asDict() for r in run_tasks(
+            spark, tasks, merge, METRICS_SCHEMA).collect()]
     else:
         merged = [_merge_group(t) for t in tasks]
     replaced = {p["file"] for g in groups for p in g}
@@ -1009,12 +1025,10 @@ def _salted_repartition(df: DataFrame, P: int, key: str) -> DataFrame:
 
 
 def encode_parquet(spark, input_dir: str, out_dir: str, *,
-                   cluster: bool = True, batch_rows: int = 1 << 16,
                    columns: list[str] | None = None,
                    resume: bool = False,
                    append: bool = False,
-                   zstd_level: int | None = None,
-                   reversed_cols: list[str] | None = None) -> EncodeResult:
+                   zstd_level: int | None = None) -> EncodeResult:
     """Parquet -> .zseq fast path: workers read parquet files directly
     with pyarrow instead of scanning through Spark's row pipeline.
 
@@ -1035,10 +1049,6 @@ def encode_parquet(spark, input_dir: str, out_dir: str, *,
     from .session import ship_package
 
     ship_package(spark)
-    if append and resume:
-        raise ValueError(
-            "append and resume are mutually exclusive: resume finishes a "
-            "crashed job over the SAME files; append adds NEW files")
     files = sorted(
         os.path.join(input_dir, f) for f in os.listdir(input_dir)
         if f.endswith(".parquet")
@@ -1064,18 +1074,13 @@ def encode_parquet(spark, input_dir: str, out_dir: str, *,
                 f"encode_parquet: columns {sorted(unknown)} not in "
                 f"{files[0]}'s schema {sorted(want)}")
         arrow_schema = pa.schema([arrow_schema.field(c) for c in columns])
-    if reversed_cols:
-        from .column import mark_reversed
-
-        arrow_schema = mark_reversed(arrow_schema, reversed_cols)
     c = begin(out_dir, append=append, resume=resume,
-              arrow_schema=arrow_schema, zstd_level=zstd_level,
-              reversed_cols=reversed_cols)
+              arrow_schema=arrow_schema, zstd_level=zstd_level)
     if resume and c.prev is not None and c.prev.get("input_files") != files:
         raise ValueError(
             "resume: input file list changed since the manifest was "
             "committed")
-    # Schema-drift check UP FRONT (footer reads, parallelized): a
+    # Schema-drift check UP FRONT (footer reads in a thread pool): a
     # mismatching file otherwise surfaces as a cast failure inside some
     # task minutes into the job, without naming the culprit. The check
     # mirrors exactly what the task path tolerates — extra columns are
@@ -1109,21 +1114,23 @@ def encode_parquet(spark, input_dir: str, out_dir: str, *,
                                 for col in sorted(drift)))
     tasks = [(i + c.part_base, f) for i, f in enumerate(files)
              if i not in c.done_parts]
-    parts = [r.asDict() for r in _encode_files(
-        spark, tasks, out_dir, arrow_schema, cluster, batch_rows,
-        columns, zstd_level, c.token).collect()] if tasks else []
+    from .session import run_tasks
+
+    parts = [r.asDict() for r in run_tasks(
+        spark, tasks,
+        _encode_files(out_dir, arrow_schema, columns, zstd_level, c.token),
+        METRICS_SCHEMA).collect()] if tasks else []
     parts.extend(c.done_parts.values())
     parts.sort(key=lambda p: p["part_id"])
     manifest = c.publish(
         parts, mode="files", arrow_schema=arrow_schema,
-        zstd_level=zstd_level, reversed_cols=reversed_cols,
-        partitions=len(files), extra={"input_files": files})
+        zstd_level=zstd_level, partitions=len(files),
+        extra={"input_files": files})
     return EncodeResult(out_dir, manifest, manifest["parts"])
 
 
 def vacuum(out_dir: str, min_age_sec: float = 86400.0,
-           dry_run: bool = False, _now: float | None = None,
-           keep_revisions: int = 1) -> list[str]:
+           dry_run: bool = False, keep_revisions: int = 1) -> list[str]:
     """Remove .zseq files (and their .tmp leftovers) that no committed
     manifest references and that are older than ``min_age_sec``.
 
@@ -1157,7 +1164,7 @@ def vacuum(out_dir: str, min_age_sec: float = 86400.0,
     if keep_revisions < 1:
         raise ValueError("keep_revisions must be >= 1 (the live "
                          "revision is never expired)")
-    now = _now if _now is not None else time.time()
+    now = time.time()
     removed: list[str] = []
 
     def sweep(d: str, keep: set[str]) -> None:
@@ -1425,8 +1432,9 @@ class Commit:
     :meth:`finish` (publish) or :meth:`abort` (discard). Every writer
     commits through it: ``encode``, ``encode_parquet``, the DataSource
     batch and stream writers, ``compact_parts`` and ``rollback``. The
-    first three publish through :meth:`publish`; the others build their
-    own manifest shapes and call :meth:`finish`.
+    first four publish through :meth:`publish`; ``compact_parts`` and
+    ``rollback`` build their own manifest shapes and call
+    :meth:`finish`.
 
     ``prev`` is the manifest the job builds on (None: fresh) and
     ``revision`` the one it commits (prev's + 1). ``replace``: the
@@ -1542,13 +1550,18 @@ def begin(out_dir: str, *, append: bool = False, resume: bool = False,
     ``append``: build on the committed manifest (append, compact,
     rollback); with no committed manifest this is a fresh commit.
     ``resume``: reuse the committed parts whose files survive — refused
-    after an append or compaction (part ids no longer mirror the
-    input); the caller checks its own resume key (partition count,
-    input file list). ``arrow_schema``: what the job writes, checked
-    against reused parts and, on append, against the committed schema.
+    with ``append``, and after an append or compaction (part ids no
+    longer mirror the input); the caller checks its own resume key
+    (partition count, input file list). ``arrow_schema``: what the job
+    writes, checked against reused parts and, on append, against the
+    committed schema.
     With no manifest the job commits past the highest leftover snapshot
     (a fresh commit that died before its ``manifest.json`` swap), so no
     writer is wedged on a revision that is already taken."""
+    if append and resume:
+        raise ValueError(
+            "append and resume are mutually exclusive: resume finishes a "
+            "crashed job over the SAME input; append adds NEW input")
     prev = read_manifest(out_dir)
     done: dict[int, dict] = {}
     part_base = 0

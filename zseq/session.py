@@ -12,7 +12,7 @@ import os
 import tempfile
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -72,10 +72,24 @@ def quiet_worker_zip_finders() -> None:
                 pass
 
 
+def run_tasks(spark: SparkSession, items: list, fn, schema) -> DataFrame:
+    """The one task frame: one Spark task per item of ``items``, each
+    yielding the Arrow record batches of ``fn(item)`` in ``schema`` (a
+    DDL string or StructType). The task list is ``spark.range`` (built
+    only in the JVM: no Python RDD hop, no per-item plan literal); the
+    worker looks its item up by id in the closure-captured ``items``."""
+    def task(batches):
+        quiet_worker_zip_finders()
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                yield from fn(items[i])
+
+    n = len(items)
+    return spark.range(0, n, 1, n).mapInArrow(task, schema)
+
+
 def get_spark(app: str = "zseq", master: str | None = None,
-              shuffle_partitions: int | None = None,
-              batch_rows: int = 1 << 16,
-              max_partition_bytes: int = 134217728) -> SparkSession:
+              shuffle_partitions: int | None = None) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
     sp = shuffle_partitions or cpus
@@ -96,11 +110,10 @@ def get_spark(app: str = "zseq", master: str | None = None,
         .config("spark.sql.shuffle.partitions", str(sp))
         .config("spark.default.parallelism", str(sp))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_rows))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes",
-                str(max_partition_bytes))
+        .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.files.openCostInBytes", "1048576")
         .config("spark.driver.memory",
                 os.environ.get("ZSEQ_DRIVER_MEM", "8g"))

@@ -67,28 +67,28 @@ def _signed32(x: int) -> int:
     return x - (1 << 32) if x >= (1 << 31) else x
 
 
-def hash_int(v: int, seed: int = SEED) -> int:
+def hash_int(v: int) -> int:
     """Spark hash of a 32-bit-kind value (byte/short/int/date)."""
-    h1 = _mix_h1(seed & _M32, _mix_k1(v & _M32))
+    h1 = _mix_h1(SEED, _mix_k1(v & _M32))
     return _signed32(_fmix(h1, 4))
 
 
-def hash_long(v: int, seed: int = SEED) -> int:
+def hash_long(v: int) -> int:
     """Spark hash of a long-kind value (bigint/timestamp-micros)."""
     v &= 0xFFFFFFFFFFFFFFFF
-    h1 = _mix_h1(seed & _M32, _mix_k1(v & _M32))
+    h1 = _mix_h1(SEED, _mix_k1(v & _M32))
     h1 = _mix_h1(h1, _mix_k1(v >> 32))
     return _signed32(_fmix(h1, 8))
 
 
-def hash_bytes(b: bytes, seed: int = SEED) -> int:
+def hash_bytes(b: bytes) -> int:
     """Spark hash of string (UTF-8 bytes) / binary values.
 
     Matches Murmur3_x86_32.hashUnsafeBytes: the aligned prefix is mixed
     as little-endian 4-byte words; each remaining tail byte is mixed as
     its OWN word, read as a SIGNED byte (Java getByte) — so bytes >=
     0x80 enter as negative ints. That tail rule is Spark-specific."""
-    h1 = seed & _M32
+    h1 = SEED
     n = len(b)
     aligned = n - n % 4
     for i in range(0, aligned, 4):

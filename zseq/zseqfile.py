@@ -143,8 +143,8 @@ class ZseqWriter:
         self._write(struct.pack("<BQ", 0, self.total_rows))
 
 
-def encode_table(table_or_batches, schema: pa.Schema | None = None,
-                 meta: dict | None = None) -> bytes:
+def encode_table(table_or_batches,
+                 schema: pa.Schema | None = None) -> bytes:
     """Convenience: encode a pa.Table / list of RecordBatches to bytes."""
     if isinstance(table_or_batches, pa.Table):
         schema = table_or_batches.schema
@@ -154,7 +154,7 @@ def encode_table(table_or_batches, schema: pa.Schema | None = None,
         if schema is None:
             schema = batches[0].schema
     sink = io.BytesIO()
-    w = ZseqWriter(sink, schema, meta)
+    w = ZseqWriter(sink, schema)
     for b in batches:
         w.write_batch(b)
     w.finish()
