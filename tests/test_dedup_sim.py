@@ -679,10 +679,9 @@ def test_kmeans_refine_is_deterministic(spark, clustered_vecs):
     bit-identical centroids."""
     base = clustered_vecs.selectExpr(
         "cast(vec_id as bigint) as vec_id", "embedding")
-    init = sim._ivf_centroids(clustered_vecs, 40, "vec_id",
-                              "embedding", 16)
-    c1 = sim._kmeans_refine(base, init, 16, "embedding", iters=5)
-    c2 = sim._kmeans_refine(base, init, 16, "embedding", iters=5)
+    init = sim._ivf_centroids(clustered_vecs, 40, 16)
+    c1 = sim._kmeans_refine(base, init, 16, iters=5)
+    c2 = sim._kmeans_refine(base, init, 16, iters=5)
     assert c1 == c2
     assert c1 != init  # it actually moved
 

@@ -58,15 +58,17 @@ def test_query_matches_oracle(spark, duck, name):
     got_cols = df.columns
     got = [tuple(r) for r in df.collect()]
     sql = E.oracle_sql().get(name)
-    if sql is None:
-        assert len(got) >= 0  # rows-only check
-        return
+    assert sql is not None, f"{name}: no oracle"
     res = duck.execute(sql)
     want_cols = [d[0] for d in res.description]
     want = res.fetchall()
     assert sorted(got_cols) == sorted(want_cols), (got_cols, want_cols)
     assert len(got) == len(want), f"{name}: {len(got)} vs {len(want)} rows"
     assert _norm(got, got_cols) == _norm(want, want_cols), name
+
+
+def test_every_query_has_an_oracle():
+    assert set(E.queries()) == set(E.oracle_sql())
 
 
 def test_entry_smoke(spark):

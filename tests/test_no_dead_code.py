@@ -1,22 +1,22 @@
 """No engine code without a caller, and no parameter without one.
 
-The name of every top-level ``def``/``class`` in ``zseq/`` must be
-referenced somewhere (the ``def`` or ``class`` statement itself is not a
-reference).
+The name of every top-level ``def``/``class`` and every top-level
+assigned name (dunders such as ``__version__`` aside) in ``zseq/`` must
+be referenced somewhere (the ``def`` or ``class`` statement or the
+assignment itself is not a reference).
 
 References are counted over the engine and the programs that drive it —
 ``zseq/``, ``bench*.py``, ``bench/``, ``perfbench/`` and
-``__spark_entry__.py`` — from the parsed source: names, attributes,
-imports, and string constants that spell an identifier or a dotted path
-(``getattr``/``setattr`` targets such as ``perfbench/trace.py``'s patch
-list). Tests do not count: a function only its own test calls is dead.
-Comments and docstrings do not count either.
+``__spark_entry__.py`` — from the parsed source: names read (not
+assigned), attributes, imports, and string constants that spell an
+identifier or a dotted path (``getattr``/``setattr`` targets such as
+``perfbench/trace.py``'s patch list). Tests do not count: a function
+only its own test calls is dead. Comments and docstrings do not count
+either.
 
 Every defaulted parameter of a ``zseq/`` function must be passed, by
 keyword or position, by some call of that function's name — tests
-included, since a test that sets a parameter is its caller. The
-operator modules (``dedup``, ``sim``, ``textops``, ``queries``) are
-exempt: their knobs serve the declared queries."""
+included, since a test that sets a parameter is its caller."""
 
 import ast
 import os
@@ -48,8 +48,16 @@ def _scan() -> tuple[list[tuple[str, str]], Counter]:
             defs += [(rel, n.name) for n in tree.body
                      if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef,
                                        ast.ClassDef))]
+            targets = [t for n in tree.body if isinstance(n, ast.Assign)
+                       for t in n.targets]
+            targets += [n.target for n in tree.body
+                        if isinstance(n, ast.AnnAssign)]
+            defs += [(rel, t.id) for tg in targets for t in ast.walk(tg)
+                     if isinstance(t, ast.Name)
+                     and isinstance(t.ctx, ast.Store)
+                     and not (t.id.startswith("__") and t.id.endswith("__"))]
         for n in ast.walk(tree):
-            if isinstance(n, ast.Name):
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
                 refs[n.id] += 1
             elif isinstance(n, ast.Attribute):
                 refs[n.attr] += 1
@@ -67,9 +75,6 @@ def test_every_top_level_engine_definition_has_a_caller():
     dead = [f"{rel}: {name}" for rel, name in defs if not refs[name]]
     assert not dead, "no caller outside the definition itself:\n" + \
         "\n".join(dead)
-
-
-_OPERATOR_MODULES = {"dedup.py", "sim.py", "textops.py", "queries.py"}
 
 
 def _defaulted(fn, shift: int) -> list[tuple[str, int | None]]:
@@ -115,8 +120,7 @@ def test_every_defaulted_parameter_has_a_caller():
         with open(path) as f:
             tree = ast.parse(f.read(), path)
         rel = os.path.relpath(path, REPO)
-        if rel.startswith("zseq" + os.sep) \
-                and os.path.basename(rel) not in _OPERATOR_MODULES:
+        if rel.startswith("zseq" + os.sep):
             params += [(rel, *p) for p in _params(tree)]
         for n in ast.walk(tree):
             if not isinstance(n, ast.Call):
@@ -131,6 +135,9 @@ def test_every_defaulted_parameter_has_a_caller():
                 else {k.arg for k in n.keywords}
             calls.setdefault(name, []).append((npos, kws))
     assert len(params) > 50  # the scan sees the engine's parameters
+    # ... the operator modules' too, so no path slip skips them silently
+    seen = {os.path.basename(rel) for rel, *_ in params}
+    assert {"dedup.py", "sim.py", "textops.py"} <= seen
     unset = [f"{rel}: {name}({p})" for rel, name, p, i in params
              if not any(kws is None or p in kws
                         or (i is not None and npos > i)

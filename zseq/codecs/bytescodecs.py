@@ -43,7 +43,6 @@ BIN_CODEC_NAMES = {
     T_BIN_FSST: "bin_fsst",
     T_BIN_CONST: "bin_const",
 }
-BIN_CODEC_TAGS = {v: k for k, v in BIN_CODEC_NAMES.items()}
 
 # Compression level: the reference default is 3, configurable 1-22
 # (compression.rs:14-23 Zstd{level}, :34-41 default). The level is an

@@ -84,7 +84,6 @@ INT_CODEC_NAMES = {
     T_WRAP: "zstd_wrap",
     T_PACK: "pack",
 }
-INT_CODEC_TAGS = {v: k for k, v in INT_CODEC_NAMES.items()}
 
 _wrap = np.errstate(over="ignore")
 

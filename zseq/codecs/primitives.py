@@ -16,7 +16,6 @@ from __future__ import annotations
 import numpy as np
 
 _U64_1 = np.uint64(1)
-_U64_8 = np.uint64(8)
 
 # numpy int64 overflow wraps two's-complement exactly like Rust's
 # wrapping_add/wrapping_sub, but emits RuntimeWarnings — suppress on purpose.

@@ -24,30 +24,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textops import fingerprint_exprs, shingle_exprs
+from .textops import SHINGLE_K, fingerprint_exprs, shingle_exprs
 
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
 
-def exact_groups(df: DataFrame, col: str = "text",
-                 key: str = "doc_id") -> DataFrame:
-    """Group identical (normalized) texts; keeper = min key per group."""
-    fp_s, _ = fingerprint_exprs(col)
+def exact_groups(df: DataFrame) -> DataFrame:
+    """Group identical (normalized) texts; keeper = min doc_id per group."""
+    fp_s, _ = fingerprint_exprs()
     return (
-        df.selectExpr(f"cast({key} as bigint) as {key}",
+        df.selectExpr("cast(doc_id as bigint) as doc_id",
                       f"{fp_s} as fingerprint")
         .groupBy("fingerprint")
-        .agg(F.min(key).alias("keeper"),
+        .agg(F.min("doc_id").alias("keeper"),
              F.count("*").alias("group_size"))
     )
 
 
-def exact_groups_oracle_sql(col: str = "text", key: str = "doc_id") -> str:
-    _, fp_d = fingerprint_exprs(col)
+def exact_groups_oracle_sql() -> str:
+    _, fp_d = fingerprint_exprs()
     return (
         f"SELECT {fp_d} as fingerprint, "
-        f"cast(min({key}) as bigint) as keeper, "
+        f"cast(min(doc_id) as bigint) as keeper, "
         f"cast(count(*) as bigint) as group_size "
         f"FROM documents GROUP BY {fp_d}"
     )
@@ -57,8 +56,8 @@ def exact_groups_oracle_sql(col: str = "text", key: str = "doc_id") -> str:
 # Exact n-gram Jaccard (the verification kernel + small-scale oracle)
 # ---------------------------------------------------------------------------
 
-def _shingle_table(df: DataFrame, col: str, k: int) -> DataFrame:
-    sh_s, _ = shingle_exprs(col, k)
+def _shingle_table(df: DataFrame) -> DataFrame:
+    sh_s, _ = shingle_exprs()
     return (
         df.selectExpr("cast(doc_id as bigint) as doc_id",
                       f"array_distinct({sh_s}) as sh")
@@ -67,12 +66,11 @@ def _shingle_table(df: DataFrame, col: str, k: int) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(df: DataFrame, col: str = "text", k: int = 3,
-                        min_num: int = 1, min_den: int = 5,
+def ngram_jaccard_pairs(df: DataFrame, min_num: int = 1, min_den: int = 5,
                         max_doc_freq: int | None = None) -> DataFrame:
     """All pairs with Jaccard >= min_num/min_den over distinct word
-    k-grams, computed exactly. Integer arithmetic only (cross-multiplied
-    threshold), so the DuckDB oracle matches bit-for-bit.
+    SHINGLE_K-grams, computed exactly. Integer arithmetic only (cross-
+    multiplied threshold), so the DuckDB oracle matches bit-for-bit.
 
     ``max_doc_freq`` is the hot-shingle guard for the quadratic self-
     join: a shingle present in n docs contributes n^2/2 join rows, and
@@ -83,7 +81,7 @@ def ngram_jaccard_pairs(df: DataFrame, col: str = "text", k: int = 3,
     stays internally consistent). This is the standard df-capping
     approximation; leave None for the exact oracle-checked kernel."""
     if max_doc_freq is not None:
-        sh_s, _ = shingle_exprs(col, k)
+        sh_s, _ = shingle_exprs()
         ex = (df.selectExpr("cast(doc_id as bigint) as doc_id",
                             f"array_distinct({sh_s}) as sh")
               .selectExpr("doc_id", "explode(sh) as shingle"))
@@ -94,7 +92,7 @@ def ngram_jaccard_pairs(df: DataFrame, col: str = "text", k: int = 3,
             F.count("*").cast("int").alias("n_sh"))
         sh = kept.join(n, on="doc_id").select("doc_id", "n_sh", "shingle")
     else:
-        sh = _shingle_table(df, col, k)
+        sh = _shingle_table(df)
     a = sh.alias("a")
     b = sh.alias("b")
     pairs = (
@@ -112,9 +110,8 @@ def ngram_jaccard_pairs(df: DataFrame, col: str = "text", k: int = 3,
     return pairs
 
 
-def ngram_jaccard_oracle_sql(col: str = "text", k: int = 3,
-                             min_num: int = 1, min_den: int = 5) -> str:
-    _, sh_d = shingle_exprs(col, k)
+def ngram_jaccard_oracle_sql(min_num: int = 1, min_den: int = 5) -> str:
+    _, sh_d = shingle_exprs()
     return f"""
 WITH sh AS (
   SELECT cast(doc_id as bigint) as doc_id,
@@ -148,6 +145,10 @@ HAVING count(*) * {min_den} >= (a.n_sh + b.n_sh - count(*)) * {min_num}
 
 HASH_FAMILIES = ("xxhash64", "md5")
 
+#: MinHash signature length and its LSH banding (16 bands x 4 rows).
+MINHASH_HASHES = 64
+MINHASH_BANDS = 16
+
 
 def _check_family(hash_family: str) -> None:
     if hash_family not in HASH_FAMILIES:
@@ -169,27 +170,25 @@ def _h64_duck(expr: str, seed: int) -> str:
             "1, 15)) as bigint)")
 
 
-def minhash_signatures(df: DataFrame, col: str = "text", k: int = 3,
-                       num_hashes: int = 64,
+def minhash_signatures(df: DataFrame,
                        hash_family: str = "xxhash64") -> DataFrame:
-    """MinHash over word k-gram shingles: h_i(doc) = min over shingles of
-    hash(shingle, seed=i). One explode + one groupBy(min array) —
-    fully JVM-side for either family (md5 is JVM codegen too, just a
-    wider expression)."""
+    """MinHash over word shingles: h_i(doc) = min over shingles of
+    hash(shingle, seed=i), i < MINHASH_HASHES. One explode + one
+    groupBy(min array) — fully JVM-side for either family (md5 is JVM
+    codegen too, just a wider expression)."""
     _check_family(hash_family)
-    sh = _shingle_table(df, col, k)
+    sh = _shingle_table(df)
     mins = [
         F.min(F.expr(_h64_spark("shingle", i, hash_family))).alias(f"h{i}")
-        for i in range(num_hashes)
+        for i in range(MINHASH_HASHES)
     ]
     return sh.groupBy("doc_id").agg(*mins).select(
-        "doc_id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig")
+        "doc_id",
+        F.array(*[f"h{i}" for i in range(MINHASH_HASHES)]).alias("sig")
     )
 
 
-def lsh_candidate_pairs(sigs: DataFrame, bands: int = 16,
-                        rows_per_band: int = 4,
-                        max_bucket: int | None = None,
+def lsh_candidate_pairs(sigs: DataFrame, max_bucket: int | None = None,
                         hash_family: str = "xxhash64") -> DataFrame:
     """Band the signature; docs sharing any band bucket are candidates.
     Shuffle key = (band, hash(band slice)): the only join at corpus scale.
@@ -203,9 +202,10 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int = 16,
     duplicate cliques, which `exact_groups` already collapses for a
     linear price — LSH only needs to find the non-identical tail."""
     _check_family(hash_family)
+    n = MINHASH_HASHES // MINHASH_BANDS
 
     def _bucket(b: int):
-        lo, n = b * rows_per_band + 1, rows_per_band
+        lo = b * n + 1
         if hash_family == "xxhash64":
             return F.xxhash64(F.slice("sig", lo, n))
         # md5 family: hash the band slice serialized as comma-joined
@@ -223,7 +223,7 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int = 16,
                 F.lit(b).alias("band"),
                 _bucket(b).alias("bucket"),
             )
-            for b in range(bands)
+            for b in range(MINHASH_BANDS)
         ])).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bucket")
     if max_bucket is not None:
@@ -242,9 +242,7 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int = 16,
     )
 
 
-def minhash_dedup(df: DataFrame, col: str = "text", k: int = 3,
-                  num_hashes: int = 64, bands: int = 16,
-                  min_num: int = 1, min_den: int = 5,
+def minhash_dedup(df: DataFrame, min_num: int = 1, min_den: int = 5,
                   max_bucket: int | None = None,
                   hash_family: str = "xxhash64") -> DataFrame:
     """Candidates from LSH, verified by exact Jaccard — and ONLY candidate
@@ -254,29 +252,22 @@ def minhash_dedup(df: DataFrame, col: str = "text", k: int = 3,
     attach each candidate doc's distinct-shingle array and compute the
     intersection with array_intersect. No all-pairs shingle join ever runs
     over the full corpus (that quadratic blow-up is exactly what LSH
-    exists to avoid). bands*rows must equal num_hashes."""
-    if num_hashes % bands:
-        raise ValueError(
-            f"minhash_dedup: bands ({bands}) must divide num_hashes "
-            f"({num_hashes}) — integer division would silently drop "
-            f"{num_hashes % bands} hashes and change the recall curve")
-    rows = num_hashes // bands
-    sigs = minhash_signatures(df, col, k, num_hashes,
-                              hash_family=hash_family)
+    exists to avoid)."""
+    sigs = minhash_signatures(df, hash_family=hash_family)
     # The candidate set is referenced three times below (ids twice, the
     # verification join once). Without materialization Spark re-executes
     # the full-corpus banded join per reference — localCheckpoint makes
     # it compute exactly once (its size is the LSH output: bounded by
     # bucket occupancy, tiny next to the corpus).
     cand = lsh_candidate_pairs(
-        sigs, bands, rows, max_bucket=max_bucket,
+        sigs, max_bucket=max_bucket,
         hash_family=hash_family).localCheckpoint(False)
     # Shingle arrays only for docs that appear in some candidate pair.
     ids = (cand.selectExpr("doc_a as doc_id")
            .union(cand.selectExpr("doc_b as doc_id")).distinct())
-    sh_s, _ = shingle_exprs(col, k)
+    sh_s, _ = shingle_exprs()
     sets = (
-        df.selectExpr("cast(doc_id as bigint) as doc_id", col)
+        df.selectExpr("cast(doc_id as bigint) as doc_id", "text")
         .join(ids, on="doc_id", how="left_semi")
         .selectExpr("doc_id", f"array_distinct({sh_s}) as sh")
         .selectExpr("doc_id", "sh", "size(sh) as n_sh")
@@ -298,9 +289,7 @@ def minhash_dedup(df: DataFrame, col: str = "text", k: int = 3,
     )
 
 
-def minhash_dedup_oracle_sql(col: str = "text", k: int = 3,
-                             num_hashes: int = 64, bands: int = 16,
-                             min_num: int = 1, min_den: int = 5) -> str:
+def minhash_dedup_oracle_sql(min_num: int = 1, min_den: int = 5) -> str:
     """DuckDB twin of ``minhash_dedup(..., hash_family='md5')`` — the
     FULL pipeline (signatures -> banded buckets -> candidate pairs ->
     exact-Jaccard verification), deterministically value-checkable
@@ -308,8 +297,8 @@ def minhash_dedup_oracle_sql(col: str = "text", k: int = 3,
     banded bucket rebuilds Spark's serialization exactly: band-slice
     values comma-joined in seed order (string_agg ORDER BY seed ==
     array_join over the sig slice), then hashed with seed 0."""
-    rows = num_hashes // bands
-    _, sh_d = shingle_exprs(col, k)
+    rows = MINHASH_HASHES // MINHASH_BANDS
+    _, sh_d = shingle_exprs()
     # per-seed shingle hash: seed is the cross-joined t.i, not a literal
     h_shingle = ("cast(concat('0x', substr(md5(concat(shingle, '|', t.i)), "
                  "1, 15)) as bigint)")
@@ -324,7 +313,7 @@ WITH sh AS (
 ),
 hs AS (
   SELECT doc_id, t.i as seed, min({h_shingle}) as h
-  FROM sh CROSS JOIN range({num_hashes}) t(i)
+  FROM sh CROSS JOIN range({MINHASH_HASHES}) t(i)
   GROUP BY doc_id, t.i
 ),
 band AS (
@@ -354,9 +343,12 @@ WHERE i_cnt * {min_den} >= u_cnt * {min_num}
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash(df: DataFrame, col: str = "text", bits: int = 64,
-            hash_family: str = "xxhash64") -> DataFrame:
-    """64-bit SimHash over words: per bit, the sign of the sum of
+#: SimHash signature width: one bigint.
+SIMHASH_BITS = 64
+
+
+def simhash(df: DataFrame, hash_family: str = "xxhash64") -> DataFrame:
+    """SIMHASH_BITS-bit SimHash over words: per bit, the sign of the sum of
     (+1 / -1) votes of each word's hash bit. Expressed relationally:
     explode words -> per-bit votes via bit arithmetic -> groupBy sum.
 
@@ -367,7 +359,7 @@ def simhash(df: DataFrame, col: str = "text", bits: int = 64,
     _check_family(hash_family)
     words = df.selectExpr(
         "cast(doc_id as bigint) as doc_id",
-        f"explode(split(trim(coalesce({col}, '')), ' +')) as w",
+        "explode(split(trim(coalesce(text, '')), ' +')) as w",
     )
     if hash_family == "xxhash64":
         words = words.withColumn("h", F.xxhash64("w"))
@@ -386,20 +378,20 @@ def simhash(df: DataFrame, col: str = "text", bits: int = 64,
             return F.shiftright(src, off).bitwiseAND(F.lit(1))
     votes = [
         F.sum(F.when(bit(i) == 1, 1).otherwise(-1)).alias(f"b{i}")
-        for i in range(bits)
+        for i in range(SIMHASH_BITS)
     ]
     agg = words.groupBy("doc_id").agg(*votes)
     bit_terms = " + ".join(
         f"(case when b{i} > 0 then shiftleft(1L, {i}) else 0L end)"
-        for i in range(bits)
+        for i in range(SIMHASH_BITS)
     )
     return agg.selectExpr("doc_id", f"({bit_terms}) as simhash")
 
 
-def _block_bounds(n_blocks: int, bits: int = 64) -> list[tuple[int, int]]:
-    """Split ``bits`` into ``n_blocks`` contiguous (offset, width) blocks,
-    widths differing by at most 1."""
-    base, extra = divmod(bits, n_blocks)
+def _block_bounds(n_blocks: int) -> list[tuple[int, int]]:
+    """Split SIMHASH_BITS into ``n_blocks`` contiguous (offset, width)
+    blocks, widths differing by at most 1."""
+    base, extra = divmod(SIMHASH_BITS, n_blocks)
     bounds, off = [], 0
     for i in range(n_blocks):
         w = base + (1 if i < extra else 0)
@@ -477,8 +469,7 @@ def simhash_near_pairs(sh: DataFrame, max_hamming: int = 7,
     )
 
 
-def simhash_pairs_oracle_sql(col: str = "text",
-                             max_hamming: int = 7) -> str:
+def simhash_pairs_oracle_sql(max_hamming: int = 7) -> str:
     """DuckDB twin of ``simhash_near_pairs(simhash(df, hash_family=
     'md5'), max_hamming)`` under the DEFAULT exact-recall banding
     (blocks = max_hamming + 1): the pigeonhole guarantee makes the
@@ -493,7 +484,7 @@ def simhash_pairs_oracle_sql(col: str = "text",
     return f"""
 WITH words AS (
   SELECT cast(doc_id as bigint) as doc_id,
-         unnest(string_split_regex(trim(coalesce({col}, '')), ' +')) as w
+         unnest(string_split_regex(trim(coalesce(text, '')), ' +')) as w
   FROM documents
 ),
 hw AS (
@@ -507,7 +498,7 @@ votes AS (
          sum(case when ((case when t.i < 60 then lo >> t.i
                          else hi >> (t.i - 60) end) & 1) = 1
              then 1 else -1 end) as v
-  FROM hw CROSS JOIN range(64) t(i)
+  FROM hw CROSS JOIN range({SIMHASH_BITS}) t(i)
   GROUP BY doc_id, t.i
 ),
 sig AS (
@@ -556,27 +547,27 @@ def planted_corpus(df: DataFrame) -> DataFrame:
     return base.union(dups)
 
 
-def minhash_planted_oracle_sql(k: int = 3, table: str = "documents") -> str:
+def minhash_planted_oracle_sql() -> str:
     """Expected minhash_dedup output on planted_corpus: exactly the
-    planted pairs, each with i_cnt = u_cnt = PLANT_WORDS - k + 1."""
-    n_sh = PLANT_WORDS - k + 1
+    planted pairs, each with i_cnt = u_cnt = PLANT_WORDS - SHINGLE_K + 1."""
+    n_sh = PLANT_WORDS - SHINGLE_K + 1
     return (
         f"SELECT cast(doc_id as bigint) as doc_a, "
         f"cast(doc_id + {PLANT_OFFSET} as bigint) as doc_b, "
         f"cast({n_sh} as bigint) as i_cnt, "
         f"cast({n_sh} as bigint) as u_cnt "
-        f"FROM {table} WHERE doc_id % {PLANT_MOD} = 0"
+        f"FROM documents WHERE doc_id % {PLANT_MOD} = 0"
     )
 
 
-def simhash_planted_oracle_sql(table: str = "documents") -> str:
+def simhash_planted_oracle_sql() -> str:
     """Expected simhash_near_pairs output on planted_corpus: the planted
     pairs at Hamming 0 (identical text => identical signature)."""
     return (
         f"SELECT cast(doc_id as bigint) as doc_a, "
         f"cast(doc_id + {PLANT_OFFSET} as bigint) as doc_b, "
         f"cast(0 as bigint) as hamming "
-        f"FROM {table} WHERE doc_id % {PLANT_MOD} = 0"
+        f"FROM documents WHERE doc_id % {PLANT_MOD} = 0"
     )
 
 
@@ -584,7 +575,12 @@ def simhash_planted_oracle_sql(table: str = "documents") -> str:
 # From pairs to a deduplicated corpus: connected components + keeper
 # ---------------------------------------------------------------------------
 
-def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
+#: Label-propagation rounds before connected_components gives up.
+CC_MAX_ITER = 25
+
+
+def connected_components(pairs: DataFrame,
+                         max_iter: int = CC_MAX_ITER) -> DataFrame:
     """(doc_a, doc_b) near-duplicate pairs -> (doc_id, component), where
     component is the SMALLEST doc id reachable through the pair graph —
     the canonical keeper of each duplicate cluster.
@@ -641,8 +637,6 @@ DEDUP_BROADCAST_MAX_ROWS = 4_000_000
 
 
 def dedup_corpus(df: DataFrame, pairs: DataFrame,
-                 id_col: str = "doc_id",
-                 max_iter: int = 25,
                  broadcast_max_rows: int = DEDUP_BROADCAST_MAX_ROWS
                  ) -> DataFrame:
     """Drop near-duplicates: every pair-graph component keeps only its
@@ -655,11 +649,10 @@ def dedup_corpus(df: DataFrame, pairs: DataFrame,
     drop-set (real near-dup rates run 30-80% of a web crawl, i.e.
     hundreds of billions of ids at 10^12 rows — broadcasting that OOMs
     every executor) takes a plain shuffled left_anti and lets AQE pick
-    the physical join. ``max_iter`` passes through to
-    connected_components for deep transitive chains."""
-    cc = connected_components(pairs, max_iter=max_iter)
-    drop = cc.filter("doc_id != component") \
-        .selectExpr(f"doc_id as {id_col}")
+    the physical join. Components come from connected_components with
+    its CC_MAX_ITER round guard."""
+    cc = connected_components(pairs)
+    drop = cc.filter("doc_id != component").select("doc_id")
     if drop.count() <= broadcast_max_rows:
         drop = F.broadcast(drop)
-    return df.join(drop, on=id_col, how="left_anti")
+    return df.join(drop, on="doc_id", how="left_anti")

@@ -1,14 +1,21 @@
-"""Similarity search over an embedding column (array<float>).
+"""Similarity search over the ``embeddings`` table's ``embedding``
+column (array<float>, keyed by ``vec_id``).
 
-Two paths:
+Four families:
 
   brute-force top-k   exact integer-quantized dot product of each query
                       against every row; one broadcast join + window
                       rank. The oracle-checkable baseline.
   LSH (random         sign-bit buckets from deterministic integer
-  hyperplanes)        hyperplanes; candidates ranked within buckets. The
-                      scale path: the full corpus is touched once to
-                      bucket, queries probe only their bucket.
+  hyperplanes)        hyperplanes; candidates ranked within the query's
+                      bucket plus multi-probe neighbors. The corpus is
+                      touched once to bucket.
+  IVF                 coarse quantizer (modular pick, optionally refined
+                      by integer Lloyd rounds) -> cell assignment as one
+                      projection -> queries probe their nprobe best
+                      cells, exact rerank.
+  embedding near-dups pairs co-located in an LSH bucket whose quantized
+                      dot clears NEAR_DUP_MIN_DOT_Q.
 
 Determinism: embeddings are quantized with floor(x * 1000) to int64 before
 any arithmetic, so scores are exact integers and Spark == DuckDB ==
@@ -17,8 +24,9 @@ coefficients come from a fixed integer formula, not an RNG.
 
 Scale notes: brute force is O(Q x N) — fine for reranking, not retrieval.
 The LSH bucket join shuffles on (bucket), bounded by bucket occupancy;
-at 10^12 rows you'd raise SIM_BITS to keep buckets small and multi-probe
-neighboring buckets for recall (probe count is the recall knob).
+``bits_for`` sizes the hyperplane count from the corpus so buckets stay
+small at any scale, and multi-probe of neighboring buckets buys recall
+(probe count is the recall knob).
 """
 
 from __future__ import annotations
@@ -31,20 +39,35 @@ from pyspark.sql import functions as F
 QUANT = 1000
 SIM_BITS = 8
 
+#: bits_for's target rows per LSH bucket and its fewest hyperplanes.
+LSH_OCCUPANCY = 64
+LSH_MIN_BITS = 3
 
-def bits_for(n_rows: int, target_occupancy: int = 64,
-             lo: int = 3, hi: int = 30) -> int:
+#: Query count (vec_id < N_QUERIES) and result depth of the top-k
+#: searches; their oracle twins read the same two constants.
+N_QUERIES = 10
+TOPK = 5
+
+#: Integer Lloyd rounds of the kmeans IVF quantizer.
+KMEANS_ITERS = 5
+
+#: Embedding near-dup threshold on the quantized dot: cosine 0.4 x QUANT^2.
+NEAR_DUP_MIN_DOT_Q = 400_000
+
+
+def bits_for(n_rows: int, hi: int = 30) -> int:
     """Hyperplane count sized from the corpus: 2^bits buckets targeting
-    ~target_occupancy rows per bucket, clamped to [lo, hi]. This is the
-    100x-scale knob the fixed SIM_BITS constant lacked: at 10^12 rows it
-    yields 34->30 bits (capped), keeping the bucket join's per-key fan-in
-    bounded instead of degenerating to 256 global buckets."""
+    ~LSH_OCCUPANCY rows per bucket, clamped to [LSH_MIN_BITS, hi]. Unlike
+    the fixed SIM_BITS constant it grows with the corpus: at 10^12 rows
+    it yields 34->30 bits (capped), keeping the bucket join's per-key
+    fan-in bounded instead of degenerating to 256 global buckets."""
     import math
 
     n = max(int(n_rows), 1)
-    if n <= target_occupancy:
-        return lo
-    return max(lo, min(hi, math.ceil(math.log2(n / target_occupancy))))
+    if n <= LSH_OCCUPANCY:
+        return LSH_MIN_BITS
+    return max(LSH_MIN_BITS,
+               min(hi, math.ceil(math.log2(n / LSH_OCCUPANCY))))
 
 
 def _qdot(a: str, b: str) -> str:
@@ -65,17 +88,16 @@ def _qdot_duck(a: str, b: str) -> str:
     )
 
 
-def brute_force_topk(df: DataFrame, n_queries: int = 10,
-                     topk: int = 5, id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> DataFrame:
+def brute_force_topk(df: DataFrame, n_queries: int = N_QUERIES,
+                     topk: int = TOPK) -> DataFrame:
     """Top-k neighbors (excluding self) for the first ``n_queries`` ids by
     quantized dot product; ties broken by neighbor id (deterministic)."""
     from pyspark.sql import Window
 
-    q = df.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+    q = df.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
     joined = df.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv")
     ).join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
     scored = joined.selectExpr(
         "query_id", "neighbor_id", _qdot("qv", "nv") + " as score")
@@ -91,15 +113,12 @@ def brute_force_topk(df: DataFrame, n_queries: int = 10,
     )
 
 
-def brute_force_topk_oracle_sql(n_queries: int = 10, topk: int = 5,
-                                table: str = "embeddings",
-                                id_col: str = "vec_id",
-                                vec_col: str = "embedding") -> str:
+def brute_force_topk_oracle_sql() -> str:
     dot = _qdot_duck("q.qv", "n.nv")
     return f"""
-WITH q AS (SELECT {id_col} as query_id, {vec_col} as qv FROM {table}
-           WHERE {id_col} < {n_queries}),
-     n AS (SELECT {id_col} as neighbor_id, {vec_col} as nv FROM {table}),
+WITH q AS (SELECT vec_id as query_id, embedding as qv FROM embeddings
+           WHERE vec_id < {N_QUERIES}),
+     n AS (SELECT vec_id as neighbor_id, embedding as nv FROM embeddings),
      scored AS (
        SELECT q.query_id, n.neighbor_id, {dot} as score
        FROM q JOIN n ON n.neighbor_id != q.query_id),
@@ -110,7 +129,7 @@ WITH q AS (SELECT {id_col} as query_id, {vec_col} as qv FROM {table}
 SELECT cast(query_id as bigint) as query_id,
        cast(neighbor_id as bigint) as neighbor_id,
        cast(score as bigint) as score, cast(rank as bigint) as rank
-FROM ranked WHERE rank <= {topk}
+FROM ranked WHERE rank <= {TOPK}
 """
 
 
@@ -124,15 +143,14 @@ def _hyperplane_coef(j: int, d: int) -> int:
     return ((j * 1315423911 + d * 2654435761 + 97) % 17) - 8
 
 
-def bucket_expr(vec_col: str, dim: int, bits: int = SIM_BITS,
-                dialect: str = "spark") -> str:
+def bucket_expr(dim: int, bits: int, dialect: str = "spark") -> str:
     """SQL expression computing the LSH bucket id (one sign bit per
     hyperplane) from the quantized embedding."""
     terms = []
     for j in range(bits):
         if dialect == "spark":
             dot = (
-                f"aggregate(zip_with({vec_col}, "
+                "aggregate(zip_with(embedding, "
                 f"array({', '.join(str(_hyperplane_coef(j, d)) for d in range(dim))}), "
                 f"(x, c) -> cast(floor(cast(x as double) * {QUANT}) as bigint) * c), "
                 f"0L, (acc, v) -> acc + v)"
@@ -144,7 +162,8 @@ def bucket_expr(vec_col: str, dim: int, bits: int = SIM_BITS,
             coefs = ", ".join(str(_hyperplane_coef(j, d)) for d in range(dim))
             dot = (
                 f"list_sum(list_transform(range(1, {dim} + 1), i -> "
-                f"cast(floor(cast({vec_col}[i] as double) * {QUANT}) as bigint) * "
+                "cast(floor(cast(embedding[i] as double) * "
+                f"{QUANT}) as bigint) * "
                 f"([{coefs}])[i]))"
             )
             terms.append(
@@ -154,23 +173,18 @@ def bucket_expr(vec_col: str, dim: int, bits: int = SIM_BITS,
     return "(" + " + ".join(terms) + ")"
 
 
-def lsh_buckets(df: DataFrame, dim: int, bits: int = SIM_BITS,
-                id_col: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
+def lsh_buckets(df: DataFrame, dim: int) -> DataFrame:
     return df.selectExpr(
-        f"cast({id_col} as bigint) as {id_col}",
-        f"{bucket_expr(vec_col, dim, bits)} as bucket",
+        "cast(vec_id as bigint) as vec_id",
+        f"{bucket_expr(dim, SIM_BITS)} as bucket",
     )
 
 
-def lsh_bucket_oracle_sql(dim: int, bits: int = SIM_BITS,
-                          table: str = "embeddings",
-                          id_col: str = "vec_id",
-                          vec_col: str = "embedding") -> str:
+def lsh_bucket_oracle_sql(dim: int) -> str:
     return (
-        f"SELECT cast({id_col} as bigint) as {id_col}, "
-        f"{bucket_expr(vec_col, dim, bits, dialect='duckdb')} as bucket "
-        f"FROM {table}"
+        "SELECT cast(vec_id as bigint) as vec_id, "
+        f"{bucket_expr(dim, SIM_BITS, dialect='duckdb')} as bucket "
+        "FROM embeddings"
     )
 
 
@@ -179,7 +193,7 @@ def _probe_masks(bits: int, probes: int) -> list[int]:
     (probes >= 1), all Hamming-2 flips (probes >= 2). Masks are distinct,
     so each (query, neighbor) pair matches at most once. Probed-bucket
     count is 1 + bits + C(bits,2) at probes=2 — at corpus scale (bits
-    ~20-30) that's a few hundred buckets of ~target_occupancy rows each,
+    ~20-30) that's a few hundred buckets of ~LSH_OCCUPANCY rows each,
     the standard multi-probe cost/recall trade."""
     masks = [0]
     if probes >= 1:
@@ -190,10 +204,9 @@ def _probe_masks(bits: int, probes: int) -> list[int]:
     return masks
 
 
-def lsh_topk(df: DataFrame, dim: int, n_queries: int = 10, topk: int = 5,
-             bits: int | None = None, probes: int = 1,
-             id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
+def lsh_topk(df: DataFrame, dim: int, n_queries: int = N_QUERIES,
+             topk: int = TOPK, bits: int | None = None,
+             probes: int = 1) -> DataFrame:
     """ANN: rank by exact quantized dot product within the query's LSH
     bucket plus (probes >= 1) all Hamming-1 neighbor buckets. bits=None
     sizes the hyperplane count from the corpus (bits_for), so bucket
@@ -204,15 +217,15 @@ def lsh_topk(df: DataFrame, dim: int, n_queries: int = 10, topk: int = 5,
     if bits is None:
         bits = bits_for(df.count())
     b = df.selectExpr(
-        f"cast({id_col} as bigint) as {id_col}", vec_col,
-        f"{bucket_expr(vec_col, dim, bits)} as bucket")
+        "cast(vec_id as bigint) as vec_id", "embedding",
+        f"{bucket_expr(dim, bits)} as bucket")
     probe = ", ".join(
         f"cast(bucket ^ {m} as bigint)" for m in _probe_masks(bits, probes))
-    q = b.filter(F.col(id_col) < n_queries).selectExpr(
-        f"{id_col} as query_id", f"{vec_col} as qv",
+    q = b.filter(F.col("vec_id") < n_queries).selectExpr(
+        "vec_id as query_id", "embedding as qv",
         f"explode(array({probe})) as bucket")
     joined = b.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"),
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv"),
         "bucket",
     ).join(F.broadcast(q), on="bucket").filter(
         F.col("neighbor_id") != F.col("query_id"))
@@ -248,8 +261,8 @@ IVF_MAX_INLINE_TERMS = 262_144
 IVF_MAX_MATRIX_TERMS = 16_777_216
 
 
-def _ivf_centroids(df: DataFrame, c_mod: int, id_col: str,
-                   vec_col: str, dim: int) -> list[tuple[int, list[int]]]:
+def _ivf_centroids(df: DataFrame, c_mod: int,
+                   dim: int) -> list[tuple[int, list[int]]]:
     """Deterministic coarse quantizer: the rows with id % c_mod == 0 are
     the centroids (k-means would need an RNG + iterations; a
     deterministic arithmetic pick keeps Spark == DuckDB == rerun exact,
@@ -266,14 +279,14 @@ def _ivf_centroids(df: DataFrame, c_mod: int, id_col: str,
         # normalized to null and join no cell); a WRONG-DIM vector that
         # lands here still raises below — that's input validation, not
         # dirty data, and must stay loud.
-        df.filter(f"{id_col} % {c_mod} = 0 and {vec_col} is not null "
-                  f"and not exists({vec_col}, x -> x is null)")
-        .selectExpr(f"cast({id_col} as bigint) as cid", vec_col)
+        df.filter(f"vec_id % {c_mod} = 0 and embedding is not null "
+                  "and not exists(embedding, x -> x is null)")
+        .selectExpr("cast(vec_id as bigint) as cid", "embedding")
         .collect()
     )
     if not rows:
         raise ValueError(
-            f"ivf: no centroids (no {id_col} % {c_mod} == 0 rows) — "
+            f"ivf: no centroids (no vec_id % {c_mod} == 0 rows) — "
             "lower c_mod")
     if len(rows) * dim > IVF_MAX_MATRIX_TERMS:
         raise ValueError(
@@ -282,17 +295,17 @@ def _ivf_centroids(df: DataFrame, c_mod: int, id_col: str,
             "c_mod (or pass c_mod=None to auto-size K ~ sqrt(N))")
     out = []
     for r in sorted(rows, key=lambda r: r["cid"]):
-        if len(r[vec_col]) != dim:
+        if len(r["embedding"]) != dim:
             raise ValueError(
-                f"ivf: centroid {r['cid']} has dim {len(r[vec_col])}, "
+                f"ivf: centroid {r['cid']} has dim {len(r['embedding'])}, "
                 f"expected {dim}")
-        q = [int(math.floor(float(x) * QUANT)) for x in r[vec_col]]
+        q = [int(math.floor(float(x) * QUANT)) for x in r["embedding"]]
         out.append((int(r["cid"]), q))
     return out
 
 
 def _kmeans_refine(base: DataFrame, cents: list[tuple[int, list[int]]],
-                   dim: int, vec_col: str, iters: int = 5,
+                   dim: int, iters: int = KMEANS_ITERS,
                    inline_cap: int = IVF_MAX_INLINE_TERMS
                    ) -> list[tuple[int, list[int]]]:
     """Deterministic integer Lloyd refinement of the modular init:
@@ -311,23 +324,23 @@ def _kmeans_refine(base: DataFrame, cents: list[tuple[int, list[int]]],
     bounded by the same IVF_MAX_MATRIX_TERMS cap as the quantizer
     itself, never corpus-sized."""
     qcols = [
-        f"cast(floor(cast({vec_col}[{i}] as double) * {QUANT}) as bigint)"
+        f"cast(floor(cast(embedding[{i}] as double) * {QUANT}) as bigint)"
         f" as q{i}"
         for i in range(dim)
     ]
     for _ in range(iters):
         assign1 = None
         if len(cents) * dim <= inline_cap:
-            cells = _ivf_cell_structs(vec_col, cents)
+            cells = _ivf_cell_structs(cents)
             assigned = base.selectExpr(
-                vec_col,
-                f"case when {vec_col} is null then null "
+                "embedding",
+                "case when embedding is null then null "
                 f"else -array_max({cells}).negc end as cid",
             ).filter("cid is not null")
         else:
             (assign1,) = _ivf_probe_udfs(base, cents, [1])
             assigned = base.withColumn(
-                "cid", F.element_at(assign1(F.col(vec_col)), 1)
+                "cid", F.element_at(assign1(F.col("embedding")), 1)
             ).filter("cid is not null")
         stats = (
             assigned.selectExpr("cid", *qcols)
@@ -448,15 +461,14 @@ def _ivf_probe_udfs(df: DataFrame, cents: list[tuple[int, list[int]]],
     return udfs
 
 
-def _ivf_cell_structs(vec_col: str,
-                      cents: list[tuple[int, list[int]]]) -> str:
+def _ivf_cell_structs(cents: list[tuple[int, list[int]]]) -> str:
     """Spark SQL: array of (score, -cid) structs against every centroid —
     the per-row coarse scoring, fully inside whole-stage codegen, zero
     joins/shuffles. Struct comparison is lexicographic, so max == argmax
     with ties to the smaller cid."""
     structs = ", ".join(
         "struct(("
-        f"aggregate(zip_with({vec_col}, "
+        "aggregate(zip_with(embedding, "
         f"array({', '.join(f'{c}L' for c in q)}), "
         f"(x, c) -> cast(floor(cast(x as double) * {QUANT}) as bigint)"
         " * c), 0L, (acc, v) -> acc + v)"
@@ -465,13 +477,10 @@ def _ivf_cell_structs(vec_col: str,
     return f"array({structs})"
 
 
-def ivf_topk(df: DataFrame, dim: int, n_queries: int = 10, topk: int = 5,
-             c_mod: int | None = 50, nprobe: int = 2,
-             id_col: str = "vec_id",
-             vec_col: str = "embedding",
+def ivf_topk(df: DataFrame, dim: int, n_queries: int = N_QUERIES,
+             topk: int = TOPK, c_mod: int | None = 50, nprobe: int = 2,
              max_inline_terms: int | None = None,
-             quantizer: str = "modular",
-             kmeans_iters: int = 5) -> DataFrame:
+             quantizer: str = "modular") -> DataFrame:
     """IVF ANN: every corpus row is assigned to its nearest centroid's
     cell (argmax quantized dot, ties to the smaller cid); a query probes
     its ``nprobe`` best cells and is reranked exactly against only those
@@ -492,7 +501,7 @@ def ivf_topk(df: DataFrame, dim: int, n_queries: int = 10, topk: int = 5,
     per-query rank window. Probing all cells (nprobe >= centroid count)
     degenerates to exact brute force — the recall knob is explicit.
 
-    ``quantizer='kmeans'`` refines the modular pick with ``kmeans_iters``
+    ``quantizer='kmeans'`` refines the modular pick with KMEANS_ITERS
     deterministic integer Lloyd rounds (:func:`_kmeans_refine`) — better
     recall / cell balance on CLUSTERED embeddings, identical determinism
     (all-int arithmetic; a rerun is bit-exact). The default stays
@@ -510,7 +519,7 @@ def ivf_topk(df: DataFrame, dim: int, n_queries: int = 10, topk: int = 5,
         n = df.count()
         # K = N / c_mod ~ sqrt(N)  =>  c_mod ~ sqrt(N)
         c_mod = max(1, int(math.sqrt(max(n, 1))))
-    cents = _ivf_centroids(df, c_mod, id_col, vec_col, dim)
+    cents = _ivf_centroids(df, c_mod, dim)
     # A vector with a NULL ELEMENT or a WRONG LENGTH is normalized to a
     # NULL VECTOR before either path sees it: the inline SQL and the
     # Arrow UDF would otherwise diverge (zip_with propagates element
@@ -520,44 +529,43 @@ def ivf_topk(df: DataFrame, dim: int, n_queries: int = 10, topk: int = 5,
     # Null vectors join no cell and drop out — one documented semantic,
     # identical on both paths.
     base = df.selectExpr(
-        f"cast({id_col} as bigint) as {id_col}",
-        f"case when exists({vec_col}, x -> x is null) "
-        f"or size({vec_col}) != {dim} then null "
-        f"else {vec_col} end as {vec_col}")
+        "cast(vec_id as bigint) as vec_id",
+        "case when exists(embedding, x -> x is null) "
+        f"or size(embedding) != {dim} then null "
+        "else embedding end as embedding")
     inline_cap = (IVF_MAX_INLINE_TERMS if max_inline_terms is None
                   else max_inline_terms)
     if quantizer == "kmeans":
-        cents = _kmeans_refine(base, cents, dim, vec_col,
-                               iters=kmeans_iters, inline_cap=inline_cap)
+        cents = _kmeans_refine(base, cents, dim, inline_cap=inline_cap)
     if len(cents) * dim <= inline_cap:
-        cells = _ivf_cell_structs(vec_col, cents)
+        cells = _ivf_cell_structs(cents)
         # null vectors get a NULL cid / NULL probe list (they'd
         # otherwise be "assigned" by the all-null-score tie-break) —
         # mirrored by the matrix prober's None handling
         assigned = base.selectExpr(
-            id_col, vec_col,
-            f"case when {vec_col} is null then null "
+            "vec_id", "embedding",
+            "case when embedding is null then null "
             f"else -array_max({cells}).negc end as cid")
         q = (
-            base.filter(f"{id_col} < {n_queries}")
+            base.filter(f"vec_id < {n_queries}")
             .selectExpr(
-                f"{id_col} as query_id", f"{vec_col} as qv",
-                f"explode(case when {vec_col} is null then null else "
+                "vec_id as query_id", "embedding as qv",
+                "explode(case when embedding is null then null else "
                 f"transform(slice(reverse(array_sort({cells})), "
                 f"1, {nprobe}), p -> -p.negc) end) as cid")
         )
     else:
         assign1, proben = _ivf_probe_udfs(df, cents, [1, nprobe])
         assigned = base.withColumn(
-            "cid", F.element_at(assign1(F.col(vec_col)), 1))
+            "cid", F.element_at(assign1(F.col("embedding")), 1))
         q = (
-            base.filter(f"{id_col} < {n_queries}")
-            .select(F.col(id_col).alias("query_id"),
-                    F.col(vec_col).alias("qv"),
-                    F.explode(proben(F.col(vec_col))).alias("cid"))
+            base.filter(f"vec_id < {n_queries}")
+            .select(F.col("vec_id").alias("query_id"),
+                    F.col("embedding").alias("qv"),
+                    F.explode(proben(F.col("embedding"))).alias("cid"))
         )
     joined = assigned.selectExpr(
-        f"{id_col} as neighbor_id", f"{vec_col} as nv", "cid"
+        "vec_id as neighbor_id", "embedding as nv", "cid"
     ).join(F.broadcast(q), on="cid").filter(
         F.col("neighbor_id") != F.col("query_id"))
     scored = joined.selectExpr(
@@ -574,19 +582,15 @@ def ivf_topk(df: DataFrame, dim: int, n_queries: int = 10, topk: int = 5,
     )
 
 
-def ivf_topk_oracle_sql(dim: int, n_queries: int = 10, topk: int = 5,
-                        c_mod: int = 50, nprobe: int = 2,
-                        table: str = "embeddings",
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> str:
+def ivf_topk_oracle_sql(dim: int, c_mod: int = 50, nprobe: int = 2) -> str:
     """Static SQL mirror: centroids re-derived from the same arithmetic
     rule, assignment/probing via window-rank argmax (same score-DESC,
     cid-ASC tiebreak), exact quantized rerank."""
     adot = _qdot_duck("b.v", "c.cv")
     sdot = _qdot_duck("qb.v", "nb.v")
     return f"""
-WITH base AS (SELECT cast({id_col} as bigint) as id, {vec_col} as v
-              FROM {table}),
+WITH base AS (SELECT cast(vec_id as bigint) as id, embedding as v
+              FROM embeddings),
      cents AS (SELECT id as cid, v as cv FROM base WHERE id % {c_mod} = 0),
      adots AS (SELECT b.id, c.cid, {adot} as s FROM base b, cents c),
      ranked_cells AS (
@@ -594,7 +598,7 @@ WITH base AS (SELECT cast({id_col} as bigint) as id, {vec_col} as v
               ORDER BY s DESC, cid ASC) as rn FROM adots),
      assign AS (SELECT id, cid FROM ranked_cells WHERE rn = 1),
      qprob AS (SELECT id as query_id, cid FROM ranked_cells
-               WHERE id < {n_queries} AND rn <= {nprobe}),
+               WHERE id < {N_QUERIES} AND rn <= {nprobe}),
      scored AS (
        SELECT q.query_id, a.id as neighbor_id, {sdot} as score
        FROM qprob q JOIN assign a USING (cid)
@@ -608,19 +612,15 @@ WITH base AS (SELECT cast({id_col} as bigint) as id, {vec_col} as v
 SELECT cast(query_id as bigint) as query_id,
        cast(neighbor_id as bigint) as neighbor_id,
        cast(score as bigint) as score, cast(rank as bigint) as rank
-FROM ranked WHERE rank <= {topk}
+FROM ranked WHERE rank <= {TOPK}
 """
 
 
-def ivf_topk_kmeans_oracle_sql(dim: int, n_queries: int = 10,
-                               topk: int = 5, c_mod: int = 50,
-                               nprobe: int = 2, iters: int = 5,
-                               table: str = "embeddings",
-                               id_col: str = "vec_id",
-                               vec_col: str = "embedding") -> str:
+def ivf_topk_kmeans_oracle_sql(dim: int, c_mod: int = 50,
+                               nprobe: int = 2) -> str:
     """Static SQL mirror of ``ivf_topk(quantizer='kmeans')``: the
     fixed-iteration integer Lloyd refinement (:func:`_kmeans_refine`) is
-    UNROLLED as ``iters`` CTE layers — assignment by argmax integer dot
+    UNROLLED as KMEANS_ITERS CTE layers — assignment by argmax integer dot
     (ties to the smaller cid), new centroid = component-wise floor-mean
     of the members' QUANT-quantized vectors, empty cells keep their
     previous centroid. All-int arithmetic makes the Spark result
@@ -633,7 +633,7 @@ def ivf_topk_kmeans_oracle_sql(dim: int, n_queries: int = 10,
             "i -> b.qv[i] * c.cq[i]))")
     sdot = _qdot_duck("qr.v", "nb.v")
     layers = []
-    for t in range(iters):
+    for t in range(KMEANS_ITERS):
         layers.append(f"""
      a{t} AS (SELECT id, cid FROM (
        SELECT b.id, c.cid, row_number() OVER (PARTITION BY b.id
@@ -649,8 +649,8 @@ def ivf_topk_kmeans_oracle_sql(dim: int, n_queries: int = 10,
      c{t + 1} AS (SELECT c.cid, coalesce(u.cq, c.cq) as cq
                   FROM c{t} c LEFT JOIN u{t} u USING (cid))""")
     return f"""
-WITH base AS (SELECT cast({id_col} as bigint) as id, {vec_col} as v
-              FROM {table}),
+WITH base AS (SELECT cast(vec_id as bigint) as id, embedding as v
+              FROM embeddings),
      qb AS (SELECT id, list_transform(v, x ->
               cast(floor(cast(x as double) * {QUANT}) as bigint)) as qv
             FROM base),
@@ -658,13 +658,13 @@ WITH base AS (SELECT cast({id_col} as bigint) as id, {vec_col} as v
             FROM qb, range(1, {dim} + 1) t(i)),
      c0 AS (SELECT id as cid, qv as cq FROM qb WHERE id % {c_mod} = 0),
      {",".join(layers)},
-     adots AS (SELECT b.id, c.cid, {idot} as s FROM qb b, c{iters} c),
+     adots AS (SELECT b.id, c.cid, {idot} as s FROM qb b, c{KMEANS_ITERS} c),
      ranked_cells AS (
        SELECT id, cid, row_number() OVER (PARTITION BY id
               ORDER BY s DESC, cid ASC) as rn FROM adots),
      assign AS (SELECT id, cid FROM ranked_cells WHERE rn = 1),
      qprob AS (SELECT id as query_id, cid FROM ranked_cells
-               WHERE id < {n_queries} AND rn <= {nprobe}),
+               WHERE id < {N_QUERIES} AND rn <= {nprobe}),
      scored AS (
        SELECT q.query_id, a.id as neighbor_id, {sdot} as score
        FROM qprob q JOIN assign a USING (cid)
@@ -678,17 +678,15 @@ WITH base AS (SELECT cast({id_col} as bigint) as id, {vec_col} as v
 SELECT cast(query_id as bigint) as query_id,
        cast(neighbor_id as bigint) as neighbor_id,
        cast(score as bigint) as score, cast(rank as bigint) as rank
-FROM ranked WHERE rank <= {topk}
+FROM ranked WHERE rank <= {TOPK}
 """
 
 
-def embedding_near_dups(df: DataFrame, dim: int, min_dot_q: int = 400_000,
-                        bits: int | None = None, probes: int = 1,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
+def embedding_near_dups(df: DataFrame, dim: int, bits: int | None = None,
+                        probes: int = 1) -> DataFrame:
     """Embedding near-duplicate pairs (the dedup brief's embedding-cosine
     family): pairs co-located in an LSH bucket (with Hamming multi-probe)
-    whose exact quantized dot product >= min_dot_q. Embeddings are
+    whose exact quantized dot product >= NEAR_DUP_MIN_DOT_Q. Embeddings are
     assumed L2-normalized, so the quantized dot IS cosine x QUANT^2 and
     the integer threshold is exact cross-engine.
 
@@ -700,61 +698,55 @@ def embedding_near_dups(df: DataFrame, dim: int, min_dot_q: int = 400_000,
     if bits is None:
         bits = bits_for(df.count())
     b = df.selectExpr(
-        f"cast({id_col} as bigint) as {id_col}", vec_col,
-        f"{bucket_expr(vec_col, dim, bits)} as bucket")
+        "cast(vec_id as bigint) as vec_id", "embedding",
+        f"{bucket_expr(dim, bits)} as bucket")
     probe = ", ".join(
         f"cast(bucket ^ {m} as bigint)" for m in _probe_masks(bits, probes))
-    a = b.selectExpr(f"{id_col} as doc_a", f"{vec_col} as va",
+    a = b.selectExpr("vec_id as doc_a", "embedding as va",
                      f"explode(array({probe})) as bucket")
-    bb = b.selectExpr(f"{id_col} as doc_b", f"{vec_col} as vb", "bucket")
+    bb = b.selectExpr("vec_id as doc_b", "embedding as vb", "bucket")
     return (
         a.join(bb, on="bucket")
         .filter("doc_a < doc_b")
         .selectExpr("doc_a", "doc_b", _qdot("va", "vb") + " as dot")
-        .filter(f"dot >= {min_dot_q}")
+        .filter(f"dot >= {NEAR_DUP_MIN_DOT_Q}")
         .selectExpr("doc_a", "doc_b", "cast(dot as bigint) as dot")
     )
 
 
-def embedding_near_dups_oracle_sql(dim: int, min_dot_q: int = 400_000,
-                                   bits: int = SIM_BITS, probes: int = 1,
-                                   table: str = "embeddings",
-                                   id_col: str = "vec_id",
-                                   vec_col: str = "embedding") -> str:
-    bx = bucket_expr(vec_col, dim, bits, dialect="duckdb")
+def embedding_near_dups_oracle_sql(dim: int, bits: int = SIM_BITS,
+                                   probes: int = 1) -> str:
+    bx = bucket_expr(dim, bits, dialect="duckdb")
     dot = _qdot_duck("a.va", "bb.vb")
     probe_list = ", ".join(
         f"xor(bucket, {m})" for m in _probe_masks(bits, probes))
     return f"""
-WITH b AS (SELECT cast({id_col} as bigint) as {id_col}, {vec_col},
-                  {bx} as bucket FROM {table}),
-     a AS (SELECT {id_col} as doc_a, {vec_col} as va,
+WITH b AS (SELECT cast(vec_id as bigint) as vec_id, embedding,
+                  {bx} as bucket FROM embeddings),
+     a AS (SELECT vec_id as doc_a, embedding as va,
                   unnest([{probe_list}]) as bucket FROM b),
-     bb AS (SELECT {id_col} as doc_b, {vec_col} as vb, bucket FROM b),
+     bb AS (SELECT vec_id as doc_b, embedding as vb, bucket FROM b),
      pairs AS (
        SELECT a.doc_a, bb.doc_b, {dot} as dot
        FROM a JOIN bb USING (bucket) WHERE a.doc_a < bb.doc_b)
 SELECT doc_a, doc_b, cast(dot as bigint) as dot
-FROM pairs WHERE dot >= {min_dot_q}
+FROM pairs WHERE dot >= {NEAR_DUP_MIN_DOT_Q}
 """
 
 
-def lsh_topk_oracle_sql(dim: int, n_queries: int = 10, topk: int = 5,
-                        bits: int = SIM_BITS, probes: int = 1,
-                        table: str = "embeddings",
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> str:
-    bx = bucket_expr(vec_col, dim, bits, dialect="duckdb")
+def lsh_topk_oracle_sql(dim: int, bits: int = SIM_BITS,
+                        probes: int = 1) -> str:
+    bx = bucket_expr(dim, bits, dialect="duckdb")
     dot = _qdot_duck("q.qv", "n.nv")
     probe_list = ", ".join(
         f"xor(bucket, {m})" for m in _probe_masks(bits, probes))
     return f"""
-WITH b AS (SELECT cast({id_col} as bigint) as {id_col}, {vec_col},
-                  {bx} as bucket FROM {table}),
-     q AS (SELECT {id_col} as query_id, {vec_col} as qv,
+WITH b AS (SELECT cast(vec_id as bigint) as vec_id, embedding,
+                  {bx} as bucket FROM embeddings),
+     q AS (SELECT vec_id as query_id, embedding as qv,
                   unnest([{probe_list}]) as bucket FROM b
-           WHERE {id_col} < {n_queries}),
-     n AS (SELECT {id_col} as neighbor_id, {vec_col} as nv, bucket FROM b),
+           WHERE vec_id < {N_QUERIES}),
+     n AS (SELECT vec_id as neighbor_id, embedding as nv, bucket FROM b),
      scored AS (
        SELECT q.query_id, n.neighbor_id, {dot} as score
        FROM q JOIN n ON q.bucket = n.bucket
@@ -766,5 +758,5 @@ WITH b AS (SELECT cast({id_col} as bigint) as {id_col}, {vec_col},
 SELECT cast(query_id as bigint) as query_id,
        cast(neighbor_id as bigint) as neighbor_id,
        cast(score as bigint) as score, cast(rank as bigint) as rank
-FROM ranked WHERE rank <= {topk}
+FROM ranked WHERE rank <= {TOPK}
 """
