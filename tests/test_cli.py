@@ -67,6 +67,40 @@ def test_info_reports_per_column_bytes(enc_dir, capsys):
     assert sum(cb.values()) <= view["totals"]["enc_bytes"]
 
 
+def test_info_sums_codec_hist_over_all_parts(enc_dir, capsys):
+    assert main(["info", enc_dir]) == 0
+    view = json.loads(capsys.readouterr().out)
+    parts = zenc.read_manifest(enc_dir)["parts"]
+    assert len(parts) == 2
+    want: dict = {}
+    for p in parts:
+        for path, by_codec in json.loads(p["codec_hist"]).items():
+            for c, (blocks, nbytes) in by_codec.items():
+                tot = want.setdefault(path, {}).setdefault(c, [0, 0])
+                tot[0] += blocks
+                tot[1] += nbytes
+    assert view["codecs"] == want
+    # one block per part, every path counted in both parts
+    assert all(sum(b for b, _ in h.values()) == 2
+               for h in view["codecs"].values())
+    assert set(view["codecs"]) >= {"doc_id", "tokens.element", "n_tok"}
+
+
+def test_info_falls_back_to_codecs_on_old_manifest(capsys):
+    """Parts committed before codec_hist existed (the checked-in
+    rev00001 dataset) report their last block's codec per path as one
+    block of unknown (0) bytes."""
+    import os
+
+    fix = os.path.join(os.path.dirname(__file__), "fixtures", "rev00001_ds")
+    [part] = zenc.read_manifest(fix)["parts"]
+    assert "codec_hist" not in part
+    assert main(["info", fix]) == 0
+    view = json.loads(capsys.readouterr().out)
+    assert view["codecs"] == {path: {c: [1, 0]} for path, c in
+                              json.loads(part["codecs"]).items()}
+
+
 def test_verify_cli_handles_map_columns(spark, tmp_path):
     """The distributed verify must survive map-typed columns (Spark
     forbids set ops on maps; they compare as sorted entry lists)."""

@@ -105,14 +105,16 @@ def test_take_table_allocates_about_one_output():
         tbl.column("tokens").take(pa.array(order)))
 
 
-# enc_bytes and crc32 of one clustered part, recorded at the commit before
-# the one-copy gather, lazy PACK and capped FSST build: those changes must
-# leave every encoded byte as it was.
+# enc_bytes and crc32 of one clustered part. The fixture's enc_bytes date
+# from before the one-copy gather, lazy PACK and capped FSST build, which
+# left every encoded byte as it was; its crc32 moved with the format
+# revision 00003 magic alone. The zipf part's tokens column takes the
+# width-symbol codec since 00003, so its enc_bytes fell.
 PINS = {
     "fixture": (lambda: synth.tokens_table_arrow(20_000, start=0),
-                441_698, 370_583_919),
+                441_698, 223_840_719),
     "zipf": (lambda: C.make_table("zipf", 7, 0, 5_000),
-             1_196_534, 1_588_541_621),
+             969_356, 3_785_171_250),
 }
 
 
@@ -125,15 +127,81 @@ def test_encoded_part_bytes_pinned(name, tmp_path):
     assert (row["enc_bytes"], row["crc32"]) == (enc_bytes, crc32)
 
 
+def _tokens_codecs_by_block(path: str) -> dict[str, list[int]]:
+    """{codec: [blocks, segment bytes]} of the ``tokens`` column's values,
+    counted by walking the part file's blocks: header, then per block a
+    marker, a row count and one length-prefixed chunk per field. A
+    ``list<int32>`` chunk without nulls is a list head, the lengths
+    segment, then the values chunk: an int head, width and signedness
+    bytes, and the values segment."""
+    import json
+    import struct
+
+    from zseq import column as COL
+    from zseq.codecs import intcodecs as IC
+
+    with open(path, "rb") as f:
+        buf = f.read()
+    pos = 16
+    for _ in range(2):  # meta, then the Arrow schema
+        (n,) = struct.unpack_from("<I", buf, pos)
+        if _ == 1:
+            names = pa.ipc.read_schema(
+                pa.py_buffer(buf[pos + 4:pos + 4 + n])).names
+        else:
+            json.loads(buf[pos + 4:pos + 4 + n])
+        pos += 4 + n
+    hist: dict[str, list[int]] = {}
+    while buf[pos] == 1:
+        pos += 5
+        for name in names:
+            (clen,) = struct.unpack_from("<I", buf, pos)
+            if name == "tokens":
+                at = pos + 4
+                assert COL._HEAD.unpack_from(buf, at) == (COL.K_LIST, 0)
+                at += COL._HEAD.size
+                at += IC.HEADER.size + IC.HEADER.unpack_from(buf, at)[1]
+                assert COL._HEAD.unpack_from(buf, at) == (COL.K_INT, 0)
+                at += COL._HEAD.size + 2
+                tag, plen = IC.HEADER.unpack_from(buf, at)
+                h = hist.setdefault(IC.INT_CODEC_NAMES[tag], [0, 0])
+                h[0] += 1
+                h[1] += IC.HEADER.size + plen
+            pos += 4 + clen
+    return hist
+
+
+def test_codec_hist_counts_every_block(tmp_path):
+    """A part whose blocks split between codecs reports all of them:
+    fixture rows (zstd_wrap) then Zipf rows (width_sym), 1,000-row
+    blocks, against a count taken over the part file's chunks."""
+    import json
+
+    tbl = pa.concat_tables([synth.tokens_table_arrow(3000),
+                            C.make_table("zipf", 7, 0, 3000)])
+    row = encode._encode_table_to_file(tbl, str(tmp_path), 0, tbl.schema,
+                                       False, 1000, 0.0)
+    hist = json.loads(row["codec_hist"])
+    want = _tokens_codecs_by_block(os.path.join(str(tmp_path),
+                                                row["file"]))
+    assert hist["tokens.element"] == want
+    assert set(want) == {"zstd_wrap", "width_sym"}
+    assert sum(b for b, _ in want.values()) == 6
+    # the last block's codec, as before, and every path counts 6 blocks
+    assert json.loads(row["codecs"])["tokens.element"] == "width_sym"
+    assert all(sum(b for b, _ in h.values()) == 6 for h in hist.values())
+
+
 # Every writer on one fixed 3,000-row table: the (part_id, rows,
-# enc_bytes, crc32) of each committed part and the manifest's keys,
-# recorded at the commit before the writers shared one batches->part
-# helper, one part-file name and one task frame.
+# enc_bytes, crc32) of each committed part and the manifest's keys. The
+# enc_bytes date from before the writers shared one batches->part
+# helper, one part-file name and one task frame; the crc32s moved with
+# the format revision 00003 magic alone.
 KEYS = ["format", "mode", "partitions", "partition_col", "zstd_level",
         "reversed_cols", "schema", "schema_names", "parts", "totals",
         "revision"]
-ONE_PART = [(0, 3000, 198_830, 676_962_287)]
-MERGED = [(2, 3000, 180_159, 2_004_599_617)]
+ONE_PART = [(0, 3000, 198_830, 3_943_327_029)]
+MERGED = [(2, 3000, 180_159, 1_103_351_906)]
 WRITER_PINS = {
     "encode": (ONE_PART, KEYS),
     "datasource": (ONE_PART, KEYS),
@@ -157,8 +225,8 @@ def test_writer_parts_pinned(writer, spark, tmp_path):
         before = encode.encode(df, out).manifest  # two parts
         assert [(p["part_id"], p["rows"], p["enc_bytes"], p["crc32"])
                 for p in before["parts"]] == [
-            (0, 1500, 133_734, 4_115_615_652),
-            (1, 1500, 133_117, 2_149_413_596)]
+            (0, 1500, 133_734, 79_996_697),
+            (1, 1500, 133_117, 2_649_799_103)]
         encode.compact_parts(out, spark if writer == "compact_spark"
                              else None, target_bytes=1 << 30)
     m = encode.read_manifest(out)

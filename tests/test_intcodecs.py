@@ -12,7 +12,7 @@ from zseq.codecs import bytescodecs as BC
 from zseq.codecs import intcodecs as IC
 
 ALL_CODECS = [IC.T_RAW, IC.T_ZBRA, IC.T_PACK, IC.T_FORBP, IC.T_DELTA,
-              IC.T_DICT, IC.T_RLE]
+              IC.T_DICT, IC.T_RLE, IC.T_WSYM]
 
 CASES = {
     "sequential": np.arange(10000, dtype=np.int64) * 3 + 7,
@@ -194,7 +194,7 @@ def test_const_strict_payload_size():
 
 @pytest.mark.parametrize("tag", [None, IC.T_RAW, IC.T_ZBRA, IC.T_PACK,
                                  IC.T_FORBP, IC.T_DELTA, IC.T_DICT,
-                                 IC.T_RLE])
+                                 IC.T_RLE, IC.T_WSYM])
 def test_decode_ints_narrow_matches_int64(tag, monkeypatch):
     rng = np.random.default_rng(17)
     byte_width = _byte_width_inputs(-(2**31))
@@ -468,3 +468,208 @@ def test_winning_retry_never_packs_past_trial_prefix(monkeypatch):
     assert sizes and max(sizes) <= _trial_values(31), sizes
     monkeypatch.setattr(IC.P, "pack_width", pack)
     assert seg == _eager_auto_pack(a)
+
+
+# ---------------------------------------------------------------------------
+# The width-symbol codec (T_WSYM): per-value bit-length symbols, zstd'd,
+# plus the mantissa bits below each leading 1 in one bitstream.
+# ---------------------------------------------------------------------------
+
+def _span_values(bits: int, lo: int, dtype, n: int = 3000) -> np.ndarray:
+    """``n`` values in [lo, lo + 2**bits - 1], both ends present, with
+    every bit length up to ``bits`` represented (shifted-down randoms)."""
+    rng = np.random.default_rng(bits)
+    u = rng.integers(0, 2**63, n, dtype=np.uint64) << np.uint64(1)
+    u |= rng.integers(0, 2, n, dtype=np.uint64)
+    u = u >> np.uint64(64 - bits) if bits else u * np.uint64(0)
+    u >>= rng.integers(0, max(bits, 1), n).astype(np.uint64)
+    u[:2] = (0, (1 << bits) - 1)
+    with np.errstate(over="ignore"):
+        v = (u + np.uint64(lo % 2**64)).view(np.int64)
+    return v.astype(dtype)
+
+
+@pytest.mark.parametrize("bits", range(65))
+def test_wsym_roundtrip_every_span(bits):
+    """int64 input over spans of 0-64 bits, and int32 input over spans
+    up to 32 bits, decoded both wide and narrow (int32, mod 2^32)."""
+    cases = [_span_values(bits, -(2**63), np.int64),
+             _span_values(bits, 12345 - 2**62 if bits < 62 else -(2**63),
+                          np.int64)]
+    if bits <= 32:
+        cases.append(_span_values(bits, -(2**31), np.int32))
+        cases.append(_span_values(bits, -7, np.int32) if bits < 31
+                     else _span_values(bits, -(2**31), np.int32))
+    for arr in cases:
+        seg = IC.encode_ints(arr, codec=IC.T_WSYM)
+        assert seg[0] == IC.T_WSYM
+        if arr.dtype == np.int32:  # the narrow encode writes the same bytes
+            assert seg == IC.encode_ints(arr.astype(np.int64),
+                                         codec=IC.T_WSYM)
+        d64, pos = IC.decode_ints(seg, 0, arr.size)
+        assert pos == len(seg)
+        assert np.array_equal(d64, arr.astype(np.int64))
+        d32, _ = IC.decode_ints(seg, 0, arr.size, np.int32)
+        assert d32.dtype == np.int32
+        assert np.array_equal(d32, arr.astype(np.int32))
+        assert IC.segment_zone(seg, 0, arr.size) == (int(arr.min()),
+                                                     int(arr.max()))
+
+
+@pytest.mark.parametrize("arr", [
+    np.array([-5], dtype=np.int64),
+    np.array([7], dtype=np.int32),
+    np.full(1000, -3, dtype=np.int32),
+    np.arange(-50, 50, dtype=np.int64),
+    np.random.default_rng(5).integers(-(2**40), -(2**40) + 1000, 2048),
+], ids=["n1_neg", "n1", "all_equal", "negative_lo", "row_2048"])
+def test_wsym_edge_arrays(arr):
+    seg = IC.encode_ints(arr, codec=IC.T_WSYM)
+    dec, pos = IC.decode_ints(seg, 0, arr.size)
+    assert pos == len(seg) and np.array_equal(dec, arr.astype(np.int64))
+    assert IC.segment_zone(seg, 0, arr.size) == (int(arr.min()),
+                                                 int(arr.max()))
+
+
+def test_wsym_auto_keeps_const_for_all_equal():
+    assert IC.encode_ints(np.full(1000, -3, dtype=np.int32))[0] == IC.T_CONST
+
+
+def test_wsym_windows_carry_offsets_across_blocks(monkeypatch):
+    """Small windows: a value's mantissa starts in one window's last word
+    and the next window begins mid-word, in both directions."""
+    default = IC._WSYM_WINDOW
+    for arr in (_span_values(17, 0, np.int32, 1001),
+                _span_values(40, -(2**50), np.int64, 1001),
+                _span_values(63, -(2**63), np.int64, 1001)):
+        whole = IC.encode_ints(arr, codec=IC.T_WSYM)  # one window
+        monkeypatch.setattr(IC, "_WSYM_WINDOW", 64)
+        assert IC.encode_ints(arr, codec=IC.T_WSYM) == whole
+        dec, _ = IC.decode_ints(whole, 0, arr.size)
+        assert np.array_equal(dec, arr.astype(np.int64))
+        monkeypatch.setattr(IC, "_WSYM_WINDOW", default)
+
+
+def test_wsym_truncated_and_trailing_payload_raise():
+    arr = _span_values(17, 100, np.int32)
+    seg = IC.encode_ints(arr, codec=IC.T_WSYM)
+    payload = seg[IC.HEADER.size:]
+
+    def with_payload(p):
+        return IC.HEADER.pack(IC.T_WSYM, len(p)) + p
+
+    for bad in (payload[:-1], payload + b"\x00", payload[:10],
+                payload[:IC._WSYM_HEAD.size + 3]):
+        with pytest.raises(ValueError):
+            IC.decode_ints(with_payload(bad), 0, arr.size)
+    with pytest.raises(ValueError):  # the segment says more than it has
+        IC.decode_ints(seg[:-1], 0, arr.size)
+    with pytest.raises(ValueError):  # symbols for fewer values
+        IC.decode_ints(seg, 0, arr.size + 1)
+
+
+def test_wsym_symbol_wider_than_span_raises():
+    arr = _span_values(17, 0, np.int32)
+    seg = bytearray(IC.encode_ints(arr, codec=IC.T_WSYM))
+    lo, hi, slen = IC._WSYM_HEAD.unpack_from(seg, IC.HEADER.size)
+    IC._WSYM_HEAD.pack_into(seg, IC.HEADER.size, lo, lo + 2**10, slen)
+    with pytest.raises(ValueError, match="wider"):
+        IC.decode_ints(bytes(seg), 0, arr.size)
+
+
+def _tokens(tbl):
+    return tbl.column("tokens").combine_chunks().flatten().to_numpy()
+
+
+def test_selection_keeps_zstd_wrap_on_fixture_chunk(monkeypatch):
+    """A fixture chunk keeps its zstd_wrap segment byte for byte and
+    pays only the sample estimate: the width-symbol encoder never runs."""
+    from zseq import synth
+
+    arr = _tokens(synth.tokens_table_arrow(20_000))
+    monkeypatch.setattr(select, "with_wsym_trial", lambda a, seg: seg)
+    before = IC.encode_ints(arr)
+    monkeypatch.undo()
+
+    def no_trial(_arr):
+        raise AssertionError("width-symbol trial ran on a fixture chunk")
+
+    monkeypatch.setitem(IC._ENCODERS, IC.T_WSYM, no_trial)
+    seg = IC.encode_ints(arr)
+    assert seg[0] == IC.T_WRAP and seg == before
+
+
+def test_selection_picks_wsym_on_zipf_chunk():
+    from perfbench import corpus as C
+
+    arr = _tokens(C.make_table("zipf", 7, 0, 2000))
+    seg = IC.encode_ints(arr)
+    assert seg[0] == IC.T_WSYM
+    assert len(seg) < select.WSYM_MARGIN * len(
+        IC.encode_ints(arr, exclude=frozenset({IC.T_WSYM, IC.T_DELTA})))
+    dec, _ = IC.decode_ints(seg, 0, arr.size, np.int32)
+    assert np.array_equal(dec, arr)
+
+
+def test_wsym_estimate_tracks_encoded_size():
+    from perfbench import corpus as C
+
+    arr = _tokens(C.make_table("zipf", 7, 0, 2000))
+    got = len(IC.encode_ints(arr, codec=IC.T_WSYM)) * 8 / arr.size
+    assert abs(select.wsym_bits(arr, int(arr.min())) - got) < 0.1 * got
+
+
+def test_wsym_never_nested():
+    """Nested segments (exclude non-empty) never trial the symbol codec,
+    and a forced WSYM segment is never wrapped."""
+    from perfbench import corpus as C
+
+    arr = _tokens(C.make_table("zipf", 7, 0, 500))
+    assert IC.encode_ints(arr, exclude=frozenset({IC.T_DELTA}))[0] \
+        != IC.T_WSYM
+    assert IC.encode_ints(arr, codec=IC.T_WSYM)[0] == IC.T_WSYM
+
+
+def test_no_column_grows_over_old_selection_on_parity_tables(monkeypatch):
+    """Every table of tests/test_size_parity.py: no column's chunk is
+    larger under the selection with the width-symbol trial than without
+    it (the trial only ever replaces a segment by a smaller one)."""
+    from test_size_parity import parity_tables
+
+    from zseq import column as COL
+
+    def sizes():
+        return {(t, c): len(COL.encode_column(
+                    tbl.column(c).combine_chunks()))
+                for t, tbl in parity_tables().items()
+                for c in tbl.column_names}
+
+    new = sizes()
+    monkeypatch.setattr(select, "with_wsym_trial", lambda a, seg: seg)
+    old = sizes()
+    assert new.keys() == old.keys() and len(new) > 10
+    grew = {k: (new[k], old[k]) for k in new if new[k] > old[k]}
+    assert not grew
+
+
+def test_fixture_part_bytes_unchanged_by_wsym_trial(tmp_path, monkeypatch):
+    """A clustered fixture part at 160K rows per part (the size-parity
+    module's tail-block case) encodes byte for byte as without the
+    width-symbol trial: every block keeps its codec."""
+    import os
+
+    from zseq import encode, synth
+
+    tbl = synth.tokens_table_arrow(160_000)
+
+    def part(sub):
+        out = str(tmp_path / sub)
+        os.makedirs(out)
+        row = encode._encode_table_to_file(tbl, out, 0, tbl.schema, True,
+                                           1 << 16, 0.0)
+        with open(os.path.join(out, row["file"]), "rb") as f:
+            return f.read()
+
+    new = part("new")
+    monkeypatch.setattr(select, "with_wsym_trial", lambda a, seg: seg)
+    assert new == part("old")

@@ -55,16 +55,85 @@ def test_tokens_table_beats_reference_total():
     assert len(blob) <= oracle.table_size(tbl)
 
 
-def test_timeseries_fixture_beats_reference():
+def timeseries_table() -> pa.Table:
     """FIXTURES.md F1 — the reference's production-data shape
     (tests/production-data.rs:19-107)."""
     i = np.arange(1000, dtype=np.int64)
-    tbl = pa.table({
+    return pa.table({
         "timestamp": pa.array(1640995200000 + i * 60000),
         "cpu_usage": pa.array(20.0 + (i * 0.1) % 80.0),
         "memory_usage": pa.array(512.0 + np.sin(i * 0.3) * 200.0),
         "disk_io": pa.array(np.where(i % 100 == 0, 1000.0, 10.0)),
     })
+
+
+def iot_table() -> pa.Table:
+    """FIXTURES.md F3 (tests/production-data.rs:579-685)."""
+    i = np.arange(1000, dtype=np.int64)
+    return pa.table({
+        "sensor_id": pa.array(i % 10),
+        "timestamp": pa.array(1640995200000 + i * 1000),
+        "temperature": pa.array(20.0 + (i % 10) * np.sin(i * 0.01)),
+        "humidity": pa.array(50 + np.cos(i * 0.05) * 20),
+        "battery_level": pa.array(100 - i // 100),
+    })
+
+
+def enum_table() -> pa.Table:
+    """A representative mixed-variant enum (dense union) column."""
+    n = 4000
+    codes = np.array([(i * 7) % 3 for i in range(n)], dtype=np.int8)
+    codes = np.where(codes == 2, 5, codes).astype(np.int8)  # tags 0,1,5
+    offs = np.zeros(n, np.int32)
+    for c in (0, 1, 5):
+        m = codes == c
+        offs[m] = np.arange(m.sum(), dtype=np.int32)
+    ints = pa.array(np.arange((codes == 0).sum(), dtype=np.int64) * 100)
+    strs = pa.array([f"ev_{i % 17}" for i in range((codes == 1).sum())])
+    dbls = pa.array(np.arange((codes == 5).sum()) * 0.25)
+    return pa.table({"u": pa.UnionArray.from_dense(
+        pa.array(codes), pa.array(offs),
+        [ints, strs, dbls], field_names=["i", "s", "d"],
+        type_codes=[0, 1, 5])})
+
+
+def nested_table() -> pa.Table:
+    from decimal import Decimal
+
+    n = 2000
+    return pa.table({
+        "st": pa.array([{"a": i % 50, "b": f"v{i % 20}"}
+                        for i in range(n)],
+                       pa.struct([("a", pa.int64()), ("b", pa.string())])),
+        "mp": pa.array([[(f"k{i % 5}", i)] for i in range(n)],
+                       pa.map_(pa.string(), pa.int64())),
+        "dec": pa.array([Decimal(i % 1000) / 100 for i in range(n)],
+                        pa.decimal128(12, 2)),
+        "dec38": pa.array([Decimal(i % 1000) * 10 ** 20 for i in range(n)],
+                          pa.decimal128(38, 0)),
+    })
+
+
+def parity_tables() -> dict[str, pa.Table]:
+    """Every table this module's per-column gates encode (the sf0.001
+    test tables where present)."""
+    import os
+
+    import pyarrow.parquet as pq
+    from test_driver_contract import SF_DIR, TABLES
+
+    out = {"tokens": synth.tokens_table_arrow(4000),
+           "timeseries": timeseries_table(), "iot": iot_table(),
+           "enum": enum_table(), "nested": nested_table()}
+    for name in TABLES:
+        path = os.path.join(SF_DIR, f"{name}.parquet")
+        if os.path.exists(path):
+            out[name] = pq.read_table(path)
+    return out
+
+
+def test_timeseries_fixture_beats_reference():
+    tbl = timeseries_table()
     ours = _zseq_column_sizes(tbl)
     zbra = oracle.table_column_sizes(tbl)
     for col in tbl.column_names:
@@ -72,15 +141,7 @@ def test_timeseries_fixture_beats_reference():
 
 
 def test_iot_fixture_beats_reference():
-    """FIXTURES.md F3 (tests/production-data.rs:579-685)."""
-    i = np.arange(1000, dtype=np.int64)
-    tbl = pa.table({
-        "sensor_id": pa.array(i % 10),
-        "timestamp": pa.array(1640995200000 + i * 1000),
-        "temperature": pa.array(20.0 + (i % 10) * np.sin(i * 0.01)),
-        "humidity": pa.array(50 + np.cos(i * 0.05) * 20),
-        "battery_level": pa.array(100 - i // 100),
-    })
+    tbl = iot_table()
     ours = _zseq_column_sizes(tbl)
     zbra = oracle.table_column_sizes(tbl)
     for col in tbl.column_names:
@@ -124,20 +185,7 @@ def test_enum_column_beats_reference():
     on a representative mixed-variant column."""
     from zseq import column as C
 
-    n = 4000
-    codes = np.array([(i * 7) % 3 for i in range(n)], dtype=np.int8)
-    codes = np.where(codes == 2, 5, codes).astype(np.int8)  # tags 0,1,5
-    offs = np.zeros(n, np.int32)
-    for c in (0, 1, 5):
-        m = codes == c
-        offs[m] = np.arange(m.sum(), dtype=np.int32)
-    ints = pa.array(np.arange((codes == 0).sum(), dtype=np.int64) * 100)
-    strs = pa.array([f"ev_{i % 17}" for i in range((codes == 1).sum())])
-    dbls = pa.array(np.arange((codes == 5).sum()) * 0.25)
-    u = pa.UnionArray.from_dense(
-        pa.array(codes), pa.array(offs),
-        [ints, strs, dbls], field_names=["i", "s", "d"],
-        type_codes=[0, 1, 5])
+    u = enum_table().column("u").combine_chunks()
     ours = len(C.encode_column(u))
     theirs = oracle.column_size(u)
     assert ours <= theirs, (ours, theirs)
@@ -146,20 +194,7 @@ def test_enum_column_beats_reference():
 def test_struct_map_decimal_columns_beat_reference():
     """The <=-reference gate extends to struct / map / decimal columns
     (previously the oracle had no dispatch for them at all)."""
-    from decimal import Decimal
-
-    n = 2000
-    tbl = pa.table({
-        "st": pa.array([{"a": i % 50, "b": f"v{i % 20}"}
-                        for i in range(n)],
-                       pa.struct([("a", pa.int64()), ("b", pa.string())])),
-        "mp": pa.array([[(f"k{i % 5}", i)] for i in range(n)],
-                       pa.map_(pa.string(), pa.int64())),
-        "dec": pa.array([Decimal(i % 1000) / 100 for i in range(n)],
-                        pa.decimal128(12, 2)),
-        "dec38": pa.array([Decimal(i % 1000) * 10 ** 20 for i in range(n)],
-                          pa.decimal128(38, 0)),
-    })
+    tbl = nested_table()
     ours = _zseq_column_sizes(tbl)
     ref = oracle.table_column_sizes(tbl)
     for name in tbl.column_names:

@@ -1,5 +1,7 @@
 """.zseq file format roundtrips + integrity checks."""
 
+import io
+
 import pyarrow as pa
 import pytest
 
@@ -42,6 +44,54 @@ def test_magic_compat_reads_previous_revision():
     future = b"||_ZSEQ||00099||" + blob[16:]
     with pytest.raises(ValueError, match="magic"):
         zseqfile.decode_table(future)
+
+
+def test_rev00001_fixture_and_rev00002_file_read():
+    """Files of every earlier revision still read: the checked-in
+    rev00001 part as it lies on disk, and a file carrying the 00002
+    magic (same chunk layout; only the width-symbol tag is new)."""
+    import os
+
+    import zseq
+
+    fix = os.path.join(os.path.dirname(__file__), "fixtures",
+                       "rev00001_ds", "part-00000.zseq")
+    with open(fix, "rb") as f:
+        blob = f.read()
+    assert blob[:16] == b"||_ZSEQ||00001||"
+    got = zseqfile.decode_table(blob)
+    want = synth.tokens_table_arrow(64)
+    assert sorted(got.column("doc_id").to_pylist()) == \
+        sorted(want.column("doc_id").to_pylist())
+    tbl = synth.tokens_table_arrow(500)
+    cur = zseqfile.encode_table(tbl)
+    assert cur[:16] == zseq.MAGIC == b"||_ZSEQ||00003||"
+    assert b"||_ZSEQ||00002||" in zseq.MAGIC_COMPAT
+    assert zseqfile.decode_table(
+        b"||_ZSEQ||00002||" + cur[16:]).equals(tbl)
+
+
+def test_older_reader_refuses_new_revision_at_header(monkeypatch):
+    """A reader that knows only revisions 00001/00002 refuses a 00003
+    file at the header, naming the revision, instead of failing
+    mid-column on the unknown codec tag."""
+    from perfbench import corpus as C
+
+    from zseq.codecs import intcodecs as IC
+
+    tbl = C.make_table("zipf", 7, 0, 300)
+    sink = io.BytesIO()
+    w = zseqfile.ZseqWriter(sink, tbl.schema)
+    w.write_batch(tbl.combine_chunks().to_batches()[0])
+    w.finish()
+    blob = sink.getvalue()
+    # the tag an old reader lacks
+    assert w.codec_stats["tokens.element"] == \
+        IC.INT_CODEC_NAMES[IC.T_WSYM]
+    monkeypatch.setattr(zseqfile, "MAGIC_COMPAT",
+                        (b"||_ZSEQ||00002||", b"||_ZSEQ||00001||"))
+    with pytest.raises(ValueError, match="revision 00003 is newer"):
+        zseqfile.ZseqReader(blob)
 
 
 def test_truncated_file():

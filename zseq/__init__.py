@@ -22,13 +22,15 @@ token-array equality on ``array<int32>`` columns.
 
 __version__ = "0.1.0"
 
-# Format revision 00002 added zone-map sections behind chunk flags-bit1
-# (int bounds, then string/binary byte-bound envelopes). The version is
-# part of the magic so a reader at an older revision REFUSES new files
-# loudly instead of misparsing the zone section; new readers accept both
-# revisions (the flags bit says whether a zone section is present).
-MAGIC = b"||_ZSEQ||00002||"
-MAGIC_COMPAT = (MAGIC, b"||_ZSEQ||00001||")
+# The format revision is part of the magic, so a reader at an older
+# revision REFUSES a newer file at the header instead of misparsing it
+# mid-column; new readers accept every revision in MAGIC_COMPAT.
+# 00002 added zone-map sections behind chunk flags-bit1 (int bounds,
+# then string/binary byte-bound envelopes); the flags bit says whether
+# a zone section is present. 00003 added the width-symbol int codec
+# (intcodecs T_WSYM), a tag older readers do not know.
+MAGIC = b"||_ZSEQ||00003||"
+MAGIC_COMPAT = (MAGIC, b"||_ZSEQ||00002||", b"||_ZSEQ||00001||")
 
 # Inside a pyspark executor worker (and only there — gated on the worker
 # factory env the daemon exports), quiet the immutable zip finders as

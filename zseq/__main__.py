@@ -153,9 +153,21 @@ def cmd_info(args) -> int:
                 for e in manifests),
         }
     col_bytes: dict[str, int] = {}
+    codecs: dict[str, dict[str, list[int]]] = {}
     for p in m.get("parts", []):
         for k, v in json.loads(p.get("col_bytes", "{}")).items():
             col_bytes[k] = col_bytes.get(k, 0) + v
+        # {path: {codec: [blocks, bytes]}} summed over every part; a part
+        # committed before ``codec_hist`` existed names only its last
+        # block's codec per path: one block of unknown (0) bytes
+        hist = json.loads(p.get("codec_hist") or "null") or {
+            path: {c: [1, 0]}
+            for path, c in json.loads(p.get("codecs", "{}")).items()}
+        for path, by_codec in hist.items():
+            for c, (blocks, nbytes) in by_codec.items():
+                tot = codecs.setdefault(path, {}).setdefault(c, [0, 0])
+                tot[0] += blocks
+                tot[1] += nbytes
     view = {
         "format": m["format"], "mode": m.get("mode"),
         "partitions": m["partitions"], "schema": m["schema_names"],
@@ -169,7 +181,7 @@ def cmd_info(args) -> int:
                   if m.get("_bytes_complete", True)
                   and "raw_bytes" in m["totals"]
                   and m["totals"].get("enc_bytes", 0) > 0 else None),
-        "codecs": json.loads(m["parts"][0]["codecs"]) if m["parts"] else {},
+        "codecs": codecs,
         "col_bytes": dict(sorted(col_bytes.items(),
                                  key=lambda kv: -kv[1])),
         # how much of the dataset supports driver-side FILE pruning:

@@ -41,9 +41,18 @@ types are handled at the column layer):
           auto-selected PACK is packed lazily (``_LazyPack``): the trial
           packs only the 64 KiB prefix it reads, and the whole PACK is
           built only when it is returned or wrapped itself
+  WSYM    width symbols + raw mantissas: per value, the symbol
+          k = bit_length(v - lo) as one uint8 of a zstd-compressed symbol
+          stream, and the k-1 bits below its leading 1 in one LSB-first
+          bitstream, in stream order (zstd's "code + extra bits" split,
+          RFC 8878). Entropy-codes skewed ids (Zipf tokens: 1.24 against
+          zstd_wrap's 1.53 B/value) where LZ finds no repeats. Decode is
+          one windowed gather per value, no permutation. Top-level only:
+          ``select.with_wsym_trial`` replaces the auto path's segment by
+          it on a fixed size margin; never wrapped or nested
 
-Zone maps are *derived*, not stored: CONST/PACK/FORBP/ZBRA/DICT headers
-already bound their values, so block pruning costs zero extra bytes
+Zone maps are *derived*, not stored: CONST/PACK/FORBP/ZBRA/DICT/WSYM
+headers already bound their values, so block pruning costs zero extra bytes
 (``segment_zone``).
 
 Decode is strict: truncated or trailing payload bytes raise, per the
@@ -69,6 +78,7 @@ T_DICT = 0x06
 T_RLE = 0x07
 T_WRAP = 0x08
 T_PACK = 0x09
+T_WSYM = 0x0A
 
 MINI = 1024  # FORBP mini-block size
 _BYTE_WIDTHS = (8, 16, 32, 64)  # PACK widths whose lanes are whole bytes
@@ -83,6 +93,7 @@ INT_CODEC_NAMES = {
     T_RLE: "rle",
     T_WRAP: "zstd_wrap",
     T_PACK: "pack",
+    T_WSYM: "width_sym",
 }
 
 _wrap = np.errstate(over="ignore")
@@ -358,6 +369,219 @@ def _dec_forbp(payload: memoryview, count: int,
     return out.view(np.int32 if narrow else np.int64)
 
 
+# lo i64 | hi i64 | zstd'd symbol stream length u32
+_WSYM_HEAD = struct.Struct("<qqI")
+# Values per encode/decode window: a multiple of 8 (``_bit_offsets``)
+# whose working arrays stay in a core's L2 cache.
+_WSYM_WINDOW = 1 << 16
+_M32 = np.uint64(0xFFFFFFFF)
+
+
+def _bit_lengths(d: np.ndarray, width: int) -> np.ndarray:
+    """``int.bit_length`` of every value of unsigned ``d`` (all below
+    ``2**width``) as uint8, read off the float exponent. The conversion
+    is exact below 2**24 (float32) and 2**53 (float64), so the exponent
+    is too; wider values are split into 32-bit halves."""
+    if width <= 24:
+        e = d.astype(np.float32).view(np.uint32) >> np.uint32(23)
+        bias = np.uint32(126)
+    elif width <= 53:
+        e = d.astype(np.float64).view(np.uint64) >> np.uint64(52)
+        bias = np.uint64(1022)
+    else:
+        k = _bit_lengths(d & _M32, 32)
+        top = d >> np.uint64(32)
+        big = np.flatnonzero(top)
+        k[big] = _bit_lengths(top[big], 32) + np.uint8(32)
+        return k
+    np.maximum(e, bias, out=e)  # zero's exponent field is 0
+    e -= bias
+    return e.astype(np.uint8)
+
+
+def _bit_offsets(m: np.ndarray, ph0: int, out: np.ndarray) -> int:
+    """Exclusive prefix sums of one window's per-value bit counts ``m``
+    (uint8, a multiple of 8 values), starting at ``ph0``, into ``out``
+    (uint32); returns the offset just past the window.
+
+    Offsets are relative to the window, so uint32 holds them however
+    long the block is; the caller carries the absolute offset as a
+    Python int. While every count is below 32, eight counts are summed
+    at once as the bytes of one uint64: multiplying by
+    0x0101010101010101 leaves in each byte the running sum up to it (at
+    most 8 * 31 < 256, so no byte carries into the next), and only the
+    group totals go through numpy's sequential cumsum."""
+    if int(m.max()) >= 32:
+        out[0] = 0
+        np.cumsum(m[:-1], dtype=np.uint32, out=out[1:])
+        out += np.uint32(ph0)
+        return int(out[-1]) + int(m[-1])
+    run = m.view(np.uint64) * np.uint64(0x0101010101010101)
+    group = np.empty(run.size, dtype=np.uint32)
+    group[0] = ph0
+    np.cumsum(run[:-1] >> np.uint64(56), dtype=np.uint32, out=group[1:])
+    group[1:] += np.uint32(ph0)
+    end = int(group[-1]) + int(run[-1] >> np.uint64(56))
+    run <<= np.uint64(8)  # running sums -> sums before each value
+    np.add(run.view(np.uint8), np.repeat(group, 8), out=out)
+    return end
+
+
+def _wsym_windows(k: np.ndarray):
+    """Yield (start, stop, m, offsets, base) per window of the symbols
+    ``k``: its values' mantissa bit counts ``m`` (k - 1, none for
+    k == 0; uint8) and bit offsets relative to bit ``base & ~31`` of the
+    stream, and ``base``, the absolute bit offset of its first value (a
+    Python int). A last, empty window carries the total bit count."""
+    n = k.size
+    win = min(_WSYM_WINDOW, -(-n // 8) * 8)
+    m = np.zeros(win, dtype=np.uint8)
+    pos = np.empty(win, dtype=np.uint32)
+    base = 0
+    for i in range(0, n, win):
+        j = min(i + win, n)
+        np.subtract(k[i:j], k[i:j] != 0, out=m[: j - i], dtype=np.uint8)
+        m[j - i:] = 0
+        end = _bit_offsets(m, base & 31, pos)
+        yield i, j, m[: j - i], pos[: j - i], base
+        base += end - (base & 31)
+    yield n, n, m[:0], pos[:0], base
+
+
+def _enc_wsym(arr: np.ndarray) -> bytes:
+    """lo i64 | hi i64 | sym_len u32 | zstd(symbols) | mantissa stream.
+
+    Each value's symbol is k = bit_length(v - lo), one uint8 per value,
+    and the symbol stream is entropy-coded by zstd's literal coder. The
+    k-1 bits below each value's leading 1 (its mantissa; none for
+    k <= 1) follow in stream order in one LSB-first bitstream of
+    ceil(sum(k-1) / 8) bytes: zstd's own "code + extra bits" split
+    (RFC 8878), per value.
+
+    Packing, one window at a time: each mantissa is shifted to its bit
+    phase within a 32-bit word and split into the (up to three) words
+    it touches. Each part is summed per word with one bincount, exact
+    in float64: the bits within a word are disjoint, so their sum is
+    their OR and below 2**32."""
+    lo, hi = int(arr.min()), int(arr.max())
+    width = (hi - lo).bit_length()
+    n = arr.size
+    udt = np.uint32 if arr.dtype == np.int32 else np.uint64
+    wbits = udt(8 * udt().itemsize)
+    k = np.empty(n, dtype=np.uint8)
+    d = np.empty(min(_WSYM_WINDOW, n), dtype=udt)
+    for i in range(0, n, d.size):
+        dd = d[: min(d.size, n - i)]
+        with _wrap:
+            np.subtract(arr[i:i + dd.size], arr.dtype.type(lo),
+                        out=dd.view(arr.dtype))
+        k[i:i + dd.size] = _bit_lengths(dd, width)
+    total = int(k.sum(dtype=np.uint64)) - int(np.count_nonzero(k))
+    words = np.zeros(total // 32 + 3, dtype=np.uint32)
+    for i, j, _m, pos, base in _wsym_windows(k):
+        if i == j:
+            break
+        dd = d[: j - i]
+        with _wrap:
+            np.subtract(arr[i:j], arr.dtype.type(lo),
+                        out=dd.view(arr.dtype))
+        cut = np.subtract(wbits + udt(1), k[i:j], dtype=udt)
+        dd <<= cut  # drop the leading 1 (shifts past the width give 0)
+        dd >>= cut
+        at = (pos >> np.uint32(5)).astype(np.intp)
+        ph = (pos & np.uint32(31)).astype(udt)
+        first = base >> 5
+        for step in (0, 1, 2) if udt is np.uint64 else (0, 1):
+            if step:
+                part = dd >> (udt(32 * step) - ph)
+            else:
+                part = dd << ph
+            if udt is np.uint64:
+                part &= _M32
+            sums = np.bincount(at, weights=part)
+            words[first + step:first + step + sums.size] += \
+                sums.astype(np.uint32)
+    from .bytescodecs import zstd_compress_symbols
+
+    sym = zstd_compress_symbols(k)
+    body = words.astype("<u4", copy=False).view(np.uint8)
+    return b"".join((_WSYM_HEAD.pack(lo, hi, len(sym)), sym,
+                     body[: (total + 7) // 8]))
+
+
+def _dec_wsym(payload: memoryview, count: int,
+              narrow: bool = False) -> np.ndarray:
+    """Inverse of ``_enc_wsym``: zstd, then per window of values the bit
+    offsets (``_bit_offsets``), one gather of the little-endian window
+    at each value's byte offset, and shifts that leave the value: no
+    permutation. A 4-byte window holds a mantissa of up to 24 bits past
+    its bit phase (symbols up to 25), an 8-byte one up to 56; wider
+    values OR in their ninth byte. ``narrow`` decodes to int32 (mod
+    2^32, as astype)."""
+    if len(payload) < _WSYM_HEAD.size:
+        raise ValueError("width_sym: truncated header")
+    lo, hi, slen = _WSYM_HEAD.unpack_from(payload, 0)
+    body = _WSYM_HEAD.size + slen
+    if hi < lo or body > len(payload):
+        raise ValueError("width_sym: truncated symbol stream")
+    width = (hi - lo).bit_length()
+    from .bytescodecs import zstd_decompress
+
+    try:
+        k = np.frombuffer(zstd_decompress(payload[_WSYM_HEAD.size:body],
+                                          count), dtype=np.uint8)
+    except OSError as e:  # pyarrow's corrupt-frame error
+        raise ValueError(f"width_sym: bad symbol stream ({e})") from e
+    if k.size != count:
+        raise ValueError("width_sym: symbol count mismatch")
+    if int(k.max()) > width:
+        raise ValueError("width_sym: symbol wider than the value span")
+    nbytes = len(payload) - body
+    buf = np.zeros(nbytes + 16, dtype=np.uint8)
+    buf[:nbytes] = np.frombuffer(payload, np.uint8, nbytes, body)
+    wdt = np.uint32 if width <= 25 else np.uint64
+    wbits = wdt(8 * wdt().itemsize)
+    # the window at every byte offset (unaligned, overlapping)
+    windows = np.ndarray((nbytes + 1,), dtype=f"<u{wdt().itemsize}",
+                         buffer=buf, strides=(1,))
+    odt = np.uint32 if narrow else np.uint64
+    lo_o = np.int64(lo).astype(odt)
+    out = np.empty(count, dtype=odt)
+    win = min(_WSYM_WINDOW, count)
+    at = np.empty(win, dtype=np.intp)
+    g = np.empty(win, dtype=wdt)
+    sh = np.empty(win, dtype=wdt)
+    for i, j, m, pos, base in _wsym_windows(k):
+        if i == j:
+            if (base + 7) // 8 != nbytes:
+                raise ValueError("width_sym: mantissa stream size mismatch")
+            break
+        w = j - i
+        first = (base >> 5) * 4  # pos counts from this byte's bit 0
+        np.right_shift(pos, np.uint32(3), out=at[:w], casting="unsafe")
+        np.bitwise_and(pos, np.uint32(7), out=sh[:w], casting="unsafe")
+        # a contiguous copy of just the windows this gather reads
+        np.take(np.ascontiguousarray(windows[first:first + int(at[w - 1])
+                                             + 1]),
+                at[:w], out=g[:w], mode="clip")
+        gw, sw = g[:w], sh[:w]
+        if width > 57:  # the top mantissa bits lie in the ninth byte
+            gw >>= sw
+            top = np.take(buf[first + 8:], at[:w], mode="clip")
+            gw |= top.astype(wdt) << (wbits - sw)
+            sw[...] = 0
+        # mantissa up against the top bit, the leading 1 set there, then
+        # down so the leading 1 lands at bit m (k == 0 shifts by the
+        # full width, which gives 0); the per-symbol shifts stay uint8
+        np.subtract(np.subtract(int(wbits) - 1, m, dtype=np.uint8), sw,
+                    out=sw, dtype=wdt)
+        gw <<= sw
+        gw |= wdt(1) << (wbits - wdt(1))
+        gw >>= np.subtract(int(wbits), k[i:j], dtype=np.uint8)
+        np.add(gw, lo_o, out=out[i:j], dtype=odt, casting="unsafe")
+    return out.view(np.int32 if narrow else np.int64)
+
+
 def _enc_delta(arr: np.ndarray) -> bytes:
     """first i64 | min i64 | max i64 | zig-zag'd diffs sub-segment.
     min/max exist solely for the derived zone map (DELTA is the codec of
@@ -467,6 +691,7 @@ _ENCODERS = {
     T_DELTA: _enc_delta,
     T_DICT: _enc_dict,
     T_RLE: _enc_rle,
+    T_WSYM: _enc_wsym,
 }
 
 # Encoders whose byte output is identical for int32 input without
@@ -475,7 +700,7 @@ _ENCODERS = {
 # inside the reference kernel). DELTA's wrapping np.diff is int64-domain
 # semantics, so it is widened before encode.
 _NARROW_OK = frozenset({T_CONST, T_RAW, T_ZBRA, T_PACK, T_FORBP,
-                        T_DICT, T_RLE})
+                        T_DICT, T_RLE, T_WSYM})
 
 
 def encode_ints(values, codec: int | None = None,
@@ -501,10 +726,14 @@ def encode_ints(values, codec: int | None = None,
     if not auto or T_WRAP in exclude:
         return _seg(codec, _ENCODERS[codec](arr))
     if codec != T_PACK:
-        return _maybe_wrap(_seg(codec, _ENCODERS[codec](arr)), n)
-    seg = _maybe_wrap(_LazyPack(arr), n)
-    return seg if isinstance(seg, bytes) else \
-        _maybe_wrap_byte_aligned(arr, seg, n)
+        seg = _maybe_wrap(_seg(codec, _ENCODERS[codec](arr)), n)
+    else:
+        seg = _maybe_wrap(_LazyPack(arr), n)
+        if not isinstance(seg, bytes):
+            seg = _maybe_wrap_byte_aligned(arr, seg, n)
+    if codec == T_CONST or exclude:  # the symbol codec is never nested
+        return seg
+    return select.with_wsym_trial(arr, seg)
 
 
 def _wrapped(seg: bytes, count: int, inner_len: int, comp: bytes) -> bytes:
@@ -593,8 +822,8 @@ def decode_ints(buf, offset: int, count: int,
     ``dtype`` may be np.int32 for columns whose physical width is <= 32
     bits: every value is then produced mod 2^32 — bit-identical to
     decoding in int64 and truncating with astype (C cast semantics), at
-    half the memory traffic. PACK/FORBP/CONST/RAW/DICT/RLE/WRAP have
-    direct 32-bit paths; DELTA/ZBRA decode in int64 and truncate."""
+    half the memory traffic. PACK/FORBP/CONST/RAW/DICT/RLE/WRAP/WSYM
+    have direct 32-bit paths; DELTA/ZBRA decode in int64 and truncate."""
     mv = memoryview(buf)
     tag, plen = HEADER.unpack_from(mv, offset)
     start = offset + HEADER.size
@@ -630,6 +859,8 @@ def decode_ints(buf, offset: int, count: int,
         return _dec_pack(payload, count, narrow), end
     if tag == T_FORBP:
         return _dec_forbp(payload, count, narrow), end
+    if tag == T_WSYM:
+        return _dec_wsym(payload, count, narrow), end
     if tag == T_DELTA:
         out = _dec_delta(payload, count)
         return out.astype(np.int32) if narrow else out, end
@@ -734,6 +965,10 @@ def segment_zone(buf, offset: int, count: int) -> tuple[int, int] | None:
             lo, hi = struct.unpack_from("<qq", payload, 5)
             return (lo, hi)
         return None
+    if tag == T_WSYM:
+        if len(payload) < 16:
+            return None
+        return struct.unpack_from("<qq", payload, 0)
     if tag == T_DELTA:
         if len(payload) < 24:
             return None

@@ -129,13 +129,19 @@ def _int_values(arr: pa.Array, np_dtype) -> np.ndarray:
 # Encode
 # ---------------------------------------------------------------------------
 
+def _note(stats: dict | None, path: str, seg: bytes, names) -> None:
+    if stats is not None:
+        stats[path] = (names[seg[0]], len(seg))
+
+
 def encode_column(arr: pa.Array, stats: dict | None = None,
                   path: str = "", zone: bool = False) -> bytes:
     """Encode one Arrow array as a column chunk. ``stats`` (optional dict)
-    collects {path: codec_name} for lineage metrics. ``zone=True`` (set by
-    the block writer for top-level fields only) stores byte-bounds zone
-    maps on binary/string chunks; child chunks never pay for them because
-    block pruning only consults field-root headers."""
+    collects {path: (codec_name, segment bytes)} for lineage metrics.
+    ``zone=True`` (set by the block writer for top-level fields only)
+    stores byte-bounds zone maps on binary/string chunks; child chunks
+    never pay for them because block pruning only consults field-root
+    headers."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     t = arr.type
@@ -150,9 +156,8 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
         flags = (1 if valid is not None else 0) | (2 if zseg else 0)
         return _HEAD.pack(kind, flags) + vseg + zseg
 
-    def note(codec_tag: int, names) -> None:
-        if stats is not None:
-            stats[path] = names[codec_tag]
+    def note(seg: bytes, names) -> None:
+        _note(stats, path, seg, names)
 
     if pa.types.is_timestamp(t) or pa.types.is_date64(t) \
             or pa.types.is_time64(t) or pa.types.is_duration(t):
@@ -160,14 +165,14 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
         if valid is not None:
             vals = np.where(valid, vals, 0)
         seg = IC.encode_ints(vals)
-        note(seg[0], IC.INT_CODEC_NAMES)
+        note(seg, IC.INT_CODEC_NAMES)
         return head(K_INT) + struct.pack("<BB", 8, 1) + seg
     if pa.types.is_date32(t) or pa.types.is_time32(t):
         vals = _int_values(arr, np.int32)  # int32 domain == value domain
         if valid is not None:
             vals = np.where(valid, vals, np.int32(0))
         seg = IC.encode_ints(vals)
-        note(seg[0], IC.INT_CODEC_NAMES)
+        note(seg, IC.INT_CODEC_NAMES)
         return head(K_INT) + struct.pack("<BB", 4, 1) + seg
     if t in _INT_TYPES:
         width, signed = _INT_TYPES[t]
@@ -189,7 +194,7 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
         if valid is not None:
             v = np.where(valid, v, v.dtype.type(0))
         seg = IC.encode_ints(v)
-        note(seg[0], IC.INT_CODEC_NAMES)
+        note(seg, IC.INT_CODEC_NAMES)
         return head(K_INT) + struct.pack("<BB", width, signed) + seg
     if pa.types.is_float64(t):
         f = _int_values(arr, np.float64)
@@ -197,20 +202,20 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
             f = np.where(valid, f, 0.0)
         mode, ints = _scale_doubles(f)
         seg = IC.encode_ints(ints)
-        note(seg[0], IC.INT_CODEC_NAMES)
+        note(seg, IC.INT_CODEC_NAMES)
         return head(K_DOUBLE) + struct.pack("<B", mode) + seg
     if pa.types.is_float32(t):
         vals = _int_values(arr, np.float32).view(np.int32)
         if valid is not None:
             vals = np.where(valid, vals, np.int32(0))
         seg = IC.encode_ints(vals)
-        note(seg[0], IC.INT_CODEC_NAMES)
+        note(seg, IC.INT_CODEC_NAMES)
         return head(K_FLOAT) + seg
     if pa.types.is_boolean(t):
         vals = pc.fill_null(arr, False).to_numpy(
             zero_copy_only=False).astype(np.int64)
         seg = IC.encode_ints(vals)
-        note(seg[0], IC.INT_CODEC_NAMES)
+        note(seg, IC.INT_CODEC_NAMES)
         return head(K_BOOL) + seg
     if pa.types.is_string(t) or pa.types.is_large_string(t) \
             or pa.types.is_binary(t) or pa.types.is_large_binary(t):
@@ -231,7 +236,7 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
                 lengths = np.zeros(0, dtype=np.int64)
                 data = np.zeros(0, dtype=np.uint8)
                 seg = BC.encode_binary(lengths, data)
-                note(seg[0], BC.BIN_CODEC_NAMES)
+                note(seg, BC.BIN_CODEC_NAMES)
                 return head(K_BINARY) + struct.pack("<B", utf8) + seg
             a = a.cast(pa.large_binary())
             odt = np.int64
@@ -247,7 +252,7 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
         )
         lengths = np.diff(offs)
         seg = BC.encode_binary(lengths, data)
-        note(seg[0], BC.BIN_CODEC_NAMES)
+        note(seg, BC.BIN_CODEC_NAMES)
         zseg = _bin_bounds(arr) if (zone and n) else b""
         return head(K_BINARY, zseg) + struct.pack("<B", utf8) + seg
     if pa.types.is_list(t) or pa.types.is_large_list(t):
@@ -258,8 +263,7 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
         # dtype-equivalent and the narrow domain halves the traffic
         child = arr.flatten()  # drops null/sliced-out slots, concatenated
         lseg = IC.encode_ints(lengths)
-        if stats is not None:
-            stats[path + ".lengths"] = IC.INT_CODEC_NAMES[lseg[0]]
+        _note(stats, path + ".lengths", lseg, IC.INT_CODEC_NAMES)
         cseg = encode_column(child, stats, path + ".element")
         return head(K_LIST) + lseg + cseg
     if pa.types.is_struct(t):
@@ -325,8 +329,7 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
             raise ValueError(f"enum: tag(s) {bad} not in schema "
                              f"(variants {tcodes.tolist()})")
         tseg = IC.encode_ints(codes.astype(np.int64))
-        if stats is not None:
-            stats[path + ".tags"] = IC.INT_CODEC_NAMES[tseg[0]]
+        _note(stats, path + ".tags", tseg, IC.INT_CODEC_NAMES)
         body = bytearray(struct.pack("<H", t.num_fields))
         for i in range(t.num_fields):
             fld = t.field(i)
@@ -376,10 +379,9 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
             if valid is not None:
                 limbs = [np.where(valid, x, 0) for x in limbs]
             segs = [IC.encode_ints(x) for x in limbs]
-            note(segs[0][0], IC.INT_CODEC_NAMES)
-            if stats is not None:
-                for i in range(1, 4):
-                    stats[f"{path}.l{i}"] = IC.INT_CODEC_NAMES[segs[i][0]]
+            note(segs[0], IC.INT_CODEC_NAMES)
+            for i in range(1, 4):
+                _note(stats, f"{path}.l{i}", segs[i], IC.INT_CODEC_NAMES)
             return (head(K_DECIMAL, zseg)
                     + struct.pack("<Bb", t.precision, t.scale)
                     + b"".join(segs))
@@ -420,9 +422,8 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
                 hi64 = np.where(valid, hi64, 0)
             lseg = IC.encode_ints(lo64)
             hseg = IC.encode_ints(hi64)
-            note(lseg[0], IC.INT_CODEC_NAMES)
-            if stats is not None:
-                stats[path + ".hi"] = IC.INT_CODEC_NAMES[hseg[0]]
+            note(lseg, IC.INT_CODEC_NAMES)
+            _note(stats, path + ".hi", hseg, IC.INT_CODEC_NAMES)
             return (head(K_DECIMAL, zseg)
                     + struct.pack("<Bb", t.precision, t.scale)
                     + lseg + hseg)
@@ -436,7 +437,7 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
         if not ok.all():
             raise ValueError("decimal128: value exceeds 64-bit range")
         seg = IC.encode_ints(lo64)
-        note(seg[0], IC.INT_CODEC_NAMES)
+        note(seg, IC.INT_CODEC_NAMES)
         return head(K_DECIMAL) + struct.pack(
             "<Bb", t.precision, t.scale) + seg
     raise NotImplementedError(f"zseq: unsupported Arrow type {t}")

@@ -57,7 +57,7 @@ from .zseqfile import ZseqWriter
 METRICS_SCHEMA = (
     "part_id int, file string, rows long, list_elems long, raw_bytes long, "
     "enc_bytes long, wall_sec double, codecs string, col_bytes string, "
-    "crc32 long, zones string"
+    "crc32 long, zones string, codec_hist string"
 )
 
 BATCH_ROWS = 1 << 16  # rows per block in every part file
@@ -68,6 +68,7 @@ _METRICS_PA = pa.schema([
     ("enc_bytes", pa.int64()), ("wall_sec", pa.float64()),
     ("codecs", pa.string()), ("col_bytes", pa.string()),
     ("crc32", pa.int64()), ("zones", pa.string()),
+    ("codec_hist", pa.string()),
 ])
 
 
@@ -491,6 +492,7 @@ def _encode_table_to_file(tbl: pa.Table, out_dir: str, part_id: int,
         # DataSource prune whole FILES on the driver before any task
         # launches (block pruning inside surviving files is unchanged)
         "zones": zones_to_json(w.part_zones, w.part_nulls),
+        "codec_hist": json.dumps(w.codec_hist),
     }
 
 

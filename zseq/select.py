@@ -16,6 +16,16 @@ next byte width and zstds the whole chunk once (byte-granular LZ matches
 cannot see repeats that bit-packing shifted to other bit phases). That
 retry replaces the PACK: the full-width PACK is packed only when it is
 what the chunk keeps.
+
+The width-symbol codec (intcodecs T_WSYM) comes last, on every top-level
+auto-selected chunk (``with_wsym_trial``): the auto path above builds
+its segment first; an O(SAMPLE) estimate from the same strided sample
+(mean mantissa bits plus the symbols' order-0 entropy, ``wsym_bits``)
+gates a full trial encode; and the trial replaces the segment only when
+smaller by the fixed margin ``WSYM_MARGIN``, the decode-cost tie-break.
+Chunks LZ compresses well (the fixture's repeated runs) fail the
+estimate and keep their bytes; skewed ids without repeats (Zipf token
+streams) pass it.
 """
 
 from __future__ import annotations
@@ -28,6 +38,20 @@ from .codecs import intcodecs as IC
 from .codecs import primitives as P
 
 SAMPLE = 8192
+# The width-symbol codec (intcodecs T_WSYM) replaces the auto path's
+# segment only when at most this fraction of its size: its decode (zstd
+# plus a per-value gather) costs about what a zstd_wrap decode costs and
+# several times a bare PACK/FORBP unpack, so a near tie keeps the old.
+WSYM_MARGIN = 0.9
+# Bytes of a width-symbol segment that do not scale with the values:
+# segment header, lo/hi/length head, and a zstd frame's own overhead.
+_WSYM_FIXED = IC.HEADER.size + IC._WSYM_HEAD.size + 9
+
+
+def _sample(arr: np.ndarray) -> np.ndarray:
+    """Up to SAMPLE values strided over the whole chunk (head-only
+    sampling misses regime changes mid-chunk)."""
+    return arr[::max(1, arr.size // SAMPLE)][:SAMPLE]
 
 
 @dataclass
@@ -47,10 +71,7 @@ class IntStats:
 
 def int_stats(arr: np.ndarray) -> IntStats:
     n = arr.size
-    # Strided sample sees the whole chunk (head-only sampling misses
-    # regime changes mid-chunk).
-    step = max(1, n // SAMPLE)
-    s = arr[::step][:SAMPLE]
+    s = _sample(arr)
     m = s.size
     # Full-chunk min/max are cheap and make range_bits exact — a sampled
     # max would under-size bit widths.
@@ -159,6 +180,40 @@ def select_int_codec(arr: np.ndarray,
     if st.card_ratio > 0.5:
         sizes.pop(IC.T_DICT, None)
     return min(sizes, key=sizes.__getitem__)
+
+
+def wsym_bits(arr: np.ndarray, lo: int) -> float:
+    """Predicted bits per value of the width-symbol codec on ``arr``
+    (minimum ``lo``), from the strided sample: the mean mantissa width
+    (k - 1 per symbol k) plus the order-0 entropy of the symbols, which
+    zstd's literal coder approaches."""
+    s = _sample(arr)
+    udt = np.uint32 if s.dtype == np.int32 else np.uint64
+    with np.errstate(over="ignore"):
+        d = (s - s.dtype.type(lo)).view(udt)
+    hist = np.bincount(IC._bit_lengths(d, int(d.max()).bit_length()),
+                       minlength=2).astype(np.float64)
+    mant = float(hist[2:] @ np.arange(1, hist.size - 1))
+    p = hist[hist > 0] / s.size
+    return mant / s.size - float(p @ np.log2(p))
+
+
+def with_wsym_trial(arr: np.ndarray, seg: bytes) -> bytes:
+    """``seg`` (the auto path's segment for ``arr``) or, when smaller by
+    the fixed margin ``WSYM_MARGIN``, the width-symbol segment. The
+    O(SAMPLE) estimate gates the trial, so chunks it cannot win (LZ
+    repeats, narrow packs) pay only the estimate."""
+    room = WSYM_MARGIN * len(seg) - _WSYM_FIXED
+    if room <= 0:
+        return seg
+    # the segment's zone, where its header has one, bounds the minimum
+    # without another pass over the chunk
+    zone = IC.segment_zone(seg, 0, arr.size)
+    lo = zone[0] if zone else int(arr.min())
+    if arr.size * wsym_bits(arr, lo) / 8 >= room:
+        return seg
+    trial = IC.encode_ints(arr, codec=IC.T_WSYM)
+    return trial if len(trial) < WSYM_MARGIN * len(seg) else seg
 
 
 # Binary/string codec selection lives in codecs.bytescodecs

@@ -9,8 +9,12 @@ reader silently zero-fills truncated data; we refuse).
 
 File layout:
 
-    magic: 16 bytes            b"||_ZSEQ||00002||" (readers also accept
-                               the pre-zone-map revision 00001)
+    magic: 16 bytes            b"||_ZSEQ||00003||"; readers accept
+                               every revision in zseq.MAGIC_COMPAT:
+                               00001  the first layout
+                               00002  + zone-map sections (chunk
+                                      flags-bit1)
+                               00003  + the width-symbol int codec tag
     meta_len: u32 LE           JSON metadata (writer info, free-form)
     meta: bytes
     schema_len: u32 LE         Arrow IPC schema
@@ -68,7 +72,11 @@ class ZseqWriter:
         #: running crc32 over every byte emitted — the manifest integrity
         #: value, maintained here so writers never re-read their output
         self.crc32 = 0
+        #: {path: codec} of the last block (the manifest's ``codecs``)
         self.codec_stats: dict[str, str] = {}
+        #: {path: {codec: [blocks, segment bytes]}} over every block, so
+        #: a part whose blocks chose different codecs reports them all
+        self.codec_hist: dict[str, dict[str, list[int]]] = {}
         # Per-column encoded bytes (top-level fields, incl. their chunk
         # length prefixes) — the lineage a 100 TB operator needs to see
         # WHICH column is eating the budget.
@@ -105,13 +113,14 @@ class ZseqWriter:
             )
         out = io.BytesIO()
         out.write(struct.pack("<BI", 1, batch.num_rows))
+        block: dict[str, tuple[str, int]] = {}
         for i, name in enumerate(self.schema.names):
             if COL.is_reversed(self.schema.field(i)):
                 chunk = COL.encode_column_reversed(
-                    batch.column(i), self.codec_stats, name, zone=True)
+                    batch.column(i), block, name, zone=True)
             else:
-                chunk = COL.encode_column(batch.column(i),
-                                          self.codec_stats, name, zone=True)
+                chunk = COL.encode_column(batch.column(i), block, name,
+                                          zone=True)
             out.write(struct.pack("<I", len(chunk)))
             out.write(chunk)
             self.col_bytes[name] = (
@@ -136,6 +145,11 @@ class ZseqWriter:
                 else:
                     self.part_zones[name] = (min(prev[0], zm[0]),
                                              max(prev[1], zm[1]))
+        for path, (codec, nbytes) in block.items():
+            self.codec_stats[path] = codec
+            h = self.codec_hist.setdefault(path, {}).setdefault(codec, [0, 0])
+            h[0] += 1
+            h[1] += nbytes
         self._write(out.getvalue())
         self.total_rows += batch.num_rows
 
@@ -164,10 +178,16 @@ def encode_table(table_or_batches,
 class ZseqReader:
     def __init__(self, buf: bytes | memoryview):
         self._mv = memoryview(buf)
-        if bytes(self._mv[:16]) not in MAGIC_COMPAT:
-            raise ValueError(
-                "not a .zseq file (bad magic, or a format revision newer "
-                "than this reader)")
+        magic = bytes(self._mv[:16])
+        if magic not in MAGIC_COMPAT:
+            if magic[:9] == MAGIC[:9]:
+                rev = magic[9:14].decode(errors="replace")
+                known = ", ".join(m[9:14].decode() for m in MAGIC_COMPAT)
+                raise ValueError(
+                    f"zseq: format revision {rev} is newer than this "
+                    f"reader, which reads revisions {known} (magic "
+                    "mismatch)")
+            raise ValueError("not a .zseq file (bad magic)")
         pos = 16
         (mlen,) = struct.unpack_from("<I", self._mv, pos)
         pos += 4
