@@ -22,3 +22,11 @@ def spark():
     s = get_spark("zseq-tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+def tokens_range(spark, start: int, stop: int, partitions: int):
+    """The fixture tokens table of doc ids [start, stop): a slice
+    disjoint from ``synth.tokens_df_range``'s, for append tests."""
+    from zseq import synth
+
+    return synth._tokens_from_ids(spark.range(start, stop, 1, partitions))

@@ -7,6 +7,7 @@ import shutil
 
 import pytest
 
+from conftest import tokens_range
 from zseq import decode as zdec
 from zseq import encode as zenc
 from zseq import synth
@@ -26,7 +27,7 @@ def base(spark, tmp_path):
 
 def test_append_roundtrip_equals_union(spark, base):
     out, df1, res1 = base
-    df2 = synth.tokens_df_range(spark, 200, partitions=2, start=1_000_000)
+    df2 = tokens_range(spark, 1_000_000, 1_000_200, 2)
     res2 = zenc.encode(df2, out, append=True)
     m = res2.manifest
     assert m["mode"] == "append"
@@ -46,8 +47,7 @@ def test_append_roundtrip_equals_union(spark, base):
 def test_append_twice_and_decode(spark, base):
     out, df1, _ = base
     for s in (1_000_000, 2_000_000):
-        zenc.encode(synth.tokens_df_range(spark, 100, partitions=1,
-                                          start=s), out, append=True)
+        zenc.encode(tokens_range(spark, s, s + 100, 1), out, append=True)
     m = zenc.read_manifest(out)
     assert m["appends"] == 2 and m["totals"]["rows"] == 500
     assert zdec.decode(spark, out).count() == 500
@@ -86,8 +86,7 @@ def test_append_resume_mutually_exclusive(spark, base):
 
 def test_resume_refused_on_appended_dataset(spark, base):
     out, _, _ = base
-    zenc.encode(synth.tokens_df_range(spark, 50, partitions=1,
-                                      start=1_000_000), out, append=True)
+    zenc.encode(tokens_range(spark, 1_000_000, 1_000_050, 1), out, append=True)
     df = synth.tokens_df_range(spark, 10, partitions=1)
     with pytest.raises(ValueError, match="dataset after 'append'"):
         zenc.encode(df, out, mode="hash", resume=True)
@@ -100,8 +99,7 @@ def test_concurrent_writer_fails_cas_cleanly(spark, base):
     out, _, res1 = base
     c = zenc.begin(out, append=True)  # the append reads revision r
     # concurrent overwrite commits first
-    winner = synth.tokens_df_range(spark, 120, partitions=1,
-                                   start=5_000_000)
+    winner = tokens_range(spark, 5_000_000, 5_000_120, 1)
     zenc.encode(winner, out, partitions=1)
     with pytest.raises(RuntimeError, match="concurrent"):
         c.finish(dict(res1.manifest, revision=c.revision))
@@ -129,7 +127,7 @@ def test_encode_parquet_append(spark, tmp_path):
     out = str(tmp_path / "ds")
     in1, in2 = str(tmp_path / "in1"), str(tmp_path / "in2")
     df1 = synth.tokens_df_range(spark, 200, partitions=2)
-    df2 = synth.tokens_df_range(spark, 150, partitions=2, start=1_000_000)
+    df2 = tokens_range(spark, 1_000_000, 1_000_150, 2)
     df1.write.parquet(in1)
     df2.write.parquet(in2)
     zenc.encode_parquet(spark, in1, out)
@@ -149,7 +147,7 @@ def test_datasource_append_mode(spark, tmp_path):
     register(spark)
     out = str(tmp_path / "ds")
     df1 = synth.tokens_df_range(spark, 200, partitions=2)
-    df2 = synth.tokens_df_range(spark, 100, partitions=2, start=1_000_000)
+    df2 = tokens_range(spark, 1_000_000, 1_000_100, 2)
     df1.write.format("zseq").mode("overwrite").save(out)
     df2.write.format("zseq").mode("append").save(out)
     m = zenc.read_manifest(out)
@@ -183,8 +181,7 @@ def test_append_preserves_input_files_provenance(spark, tmp_path):
     zenc.encode_parquet(spark, ind, out)
     files_before = zenc.read_manifest(out)["input_files"]
     assert files_before
-    zenc.encode(synth.tokens_df_range(spark, 50, partitions=1,
-                                      start=1_000_000), out, append=True)
+    zenc.encode(tokens_range(spark, 1_000_000, 1_000_050, 1), out, append=True)
     m = zenc.read_manifest(out)
     assert m["mode"] == "append"
     assert m["input_files"] == files_before

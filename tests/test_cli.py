@@ -5,6 +5,7 @@ import json
 
 import pytest
 
+from conftest import tokens_range
 from zseq import synth
 from zseq import encode as zenc
 from zseq.__main__ import main
@@ -237,8 +238,7 @@ def test_cli_encode_append_grows_dataset(spark, tmp_path, capsys):
     more = str(tmp_path / "in2")
     out = str(tmp_path / "enc")
     synth.tokens_df_range(spark, 300, partitions=1).write.parquet(base)
-    synth.tokens_df_range(spark, 200, partitions=1,
-                          start=1_000_000).write.parquet(more)
+    tokens_range(spark, 1_000_000, 1_000_200, 1).write.parquet(more)
     assert main(["encode", base, out]) == 0
     capsys.readouterr()
     assert main(["encode", more, out, "--append"]) == 0
@@ -294,8 +294,7 @@ def test_cli_history_and_revision_reads(spark, tmp_path, capsys):
     out = str(tmp_path / "enc")
     back = str(tmp_path / "back")
     synth.tokens_df_range(spark, 300, partitions=1).write.parquet(base)
-    synth.tokens_df_range(spark, 200, partitions=1,
-                          start=1_000_000).write.parquet(more)
+    tokens_range(spark, 1_000_000, 1_000_200, 1).write.parquet(more)
     assert main(["encode", base, out]) == 0
     capsys.readouterr()
     assert main(["encode", more, out, "--append"]) == 0

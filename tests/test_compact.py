@@ -9,6 +9,7 @@ import sys
 
 import pytest
 
+from conftest import tokens_range
 from zseq import decode as zdec
 from zseq import encode as zenc
 from zseq import synth
@@ -93,8 +94,7 @@ def test_compact_cas_refuses_concurrent_commit(spark, many_small):
     out, _, res = many_small
     c = zenc.begin(out, append=True)  # the compaction reads revision r
     # a concurrent append commits first
-    zenc.encode(synth.tokens_df_range(spark, 50, partitions=1,
-                                      start=1_000_000), out, append=True)
+    zenc.encode(tokens_range(spark, 1_000_000, 1_000_050, 1), out, append=True)
     with pytest.raises(RuntimeError, match="manifest changed"):
         c.finish(dict(res.manifest, revision=c.revision))
 
@@ -123,14 +123,12 @@ def test_compact_zones_survive_for_file_pruning(spark, tmp_path):
 
 def test_append_then_compact_then_append(spark, many_small):
     out, df, _ = many_small
-    df2 = synth.tokens_df_range(spark, 100, partitions=2,
-                                start=1_000_000)
+    df2 = tokens_range(spark, 1_000_000, 1_000_100, 2)
     zenc.encode(df2, out, append=True)
     zenc.compact_parts(out, target_bytes=1 << 30)
     m = zenc.read_manifest(out)
     assert m["appends"] == 1 and m["compactions"] == 1
-    df3 = synth.tokens_df_range(spark, 100, partitions=1,
-                                start=2_000_000)
+    df3 = tokens_range(spark, 2_000_000, 2_000_100, 1)
     zenc.encode(df3, out, append=True)
     back = zdec.decode(spark, out)
     assert _ids(back) == _ids(df.union(df2).union(df3))
@@ -141,14 +139,6 @@ def test_resume_refuses_compacted_dataset(spark, many_small):
     zenc.compact_parts(out, target_bytes=1 << 30)
     with pytest.raises(ValueError, match="resume cannot target"):
         zenc.encode(df, out, mode="hash", partitions=6, resume=True)
-
-
-def test_compact_spark_path_matches_driver_path(spark, many_small):
-    out, df, _ = many_small
-    summary = zenc.compact_parts(out, spark=spark,
-                                 target_bytes=1 << 30)
-    assert summary["merged_groups"] == 1
-    assert _ids(zdec.decode(spark, out)) == _ids(df)
 
 
 def test_crash_mid_compact_leaves_dataset_readable(spark, many_small):

@@ -406,10 +406,12 @@ def test_pushfilters_string_and_startswith(spark, tmp_path):
     assert got2 == 10
 
 
-def test_partition_packing_math(spark, tmp_path):
+def test_partition_packing_math(spark, tmp_path, monkeypatch):
     """Batch-read task packing: all part files covered exactly once; a
-    huge byte target still fans out to >= defaultParallelism groups; a
-    tiny target degenerates to one file per task."""
+    huge byte target still fans out to >= the parallelism floor of
+    groups; a tiny target degenerates to one file per task, and a floor
+    of 1 with a huge target packs everything into one group."""
+    from zseq import decode as zdec
     from zseq import encode as zenc
     from zseq import synth
     from zseq.datasource import ZseqSourceReader
@@ -418,8 +420,8 @@ def test_partition_packing_math(spark, tmp_path):
     df = synth.tokens_df_range(spark, 2000, partitions=16)
     zenc.encode(df, out, partitions=16, mode="hash")
 
-    r_big = ZseqSourceReader({"path": out,
-                              "target_partition_bytes": str(1 << 40)})
+    monkeypatch.setattr(zdec, "TARGET_BYTES", 1 << 40)
+    r_big = ZseqSourceReader({"path": out})
     groups = r_big.partitions()
     files = [f for g in groups for f, _ in g.files]
     assert sorted(files) == sorted(p for p, *_ in r_big._parts)
@@ -428,37 +430,43 @@ def test_partition_packing_math(spark, tmp_path):
     # spreads over exactly defaultParallelism tasks (one wave)
     floor = min(16, r_big._min_tasks)
     assert len(groups) == floor
+    assert len(ZseqSourceReader({"path": out}, parallelism=1)
+               .partitions()) == 1
 
-    r_tiny = ZseqSourceReader({"path": out,
-                               "target_partition_bytes": "1"})
+    monkeypatch.setattr(zdec, "TARGET_BYTES", 1)
+    r_tiny = ZseqSourceReader({"path": out})
     assert len(r_tiny.partitions()) == 16  # one file per task
+    with pytest.raises(ValueError, match="load"):
+        ZseqSourceReader({})
 
 
-def _plan(sizes, min_tasks, target_bytes=None):
-    from zseq.decode import TARGET_BYTES, plan_groups
+def _plan(sizes, min_tasks):
+    from zseq import decode as zdec
 
     entries = [(f"p{i}", i, s, {}, None) for i, s in enumerate(sizes)]
-    groups = plan_groups(entries, None, min_tasks,
-                         target_bytes or TARGET_BYTES)
+    groups = zdec.plan_groups(entries, None, min_tasks)
     # every file exactly once, in order, in non-empty groups
     assert [p for g in groups for p, _ in g] == [e[0] for e in entries]
     assert all(groups) or groups == [()]
     return [len(g) for g in groups]
 
 
-def test_plan_groups_one_wave():
+def test_plan_groups_one_wave(monkeypatch):
     """Near-equal parts never spill into an extra group: 16 parts of
     5.97-5.98 MB on 4 cores plan as 4 groups of 4, not [3, 3, 4, 4, 2]."""
+    from zseq import decode as zdec
+
     sizes = [5_970_000 + 677 * i % 9_973 for i in range(16)]
     assert _plan(sizes, 4) == [4, 4, 4, 4]
     assert _plan(sizes, 8) == [2] * 8
     assert _plan(sizes[:3], 8) == [1, 1, 1]   # fewer files than tasks
-    assert _plan(sizes, 4, target_bytes=1) == [1] * 16
-    assert _plan(sizes, 4, target_bytes=1 << 40) == [4, 4, 4, 4]
-    assert _plan(sizes, 4, target_bytes=12_000_000) == [2] * 8
     assert _plan([0] * 10, 4) == [3, 2, 3, 2]   # no sizes: by count
     assert _plan([1000] + [1] * 7, 4) == [1, 1, 1, 5]   # skew: non-empty
     assert _plan([], 4) == [0]
+    for target, want in ((1, [1] * 16), (1 << 40, [4, 4, 4, 4]),
+                         (12_000_000, [2] * 8)):
+        monkeypatch.setattr(zdec, "TARGET_BYTES", target)
+        assert _plan(sizes, 4) == want
 
 
 def test_partition_packing_without_enc_bytes(spark, tmp_path):
@@ -522,19 +530,3 @@ def test_read_plans_one_wave_of_session_parallelism(registered, tmp_path):
     back = registered.read.format("zseq").load(out)
     assert back.rdd.getNumPartitions() == 4
     assert back.count() == 1600
-
-
-def test_min_partitions_option_controls_packing_floor(spark, tmp_path):
-    from zseq import encode as zenc
-    from zseq import synth
-    from zseq.datasource import ZseqSourceReader
-
-    out = str(tmp_path / "mp")
-    df = synth.tokens_df_range(spark, 1000, partitions=8)
-    zenc.encode(df, out, partitions=8, mode="hash")
-    r = ZseqSourceReader({"path": out, "min_partitions": "2",
-                          "target_partition_bytes": str(1 << 40)})
-    assert r._min_tasks == 2
-    assert 2 <= len(r.partitions()) <= 8
-    with pytest.raises(ValueError, match="load"):
-        ZseqSourceReader({})

@@ -6,6 +6,12 @@ import pytest
 from zseq import dedup, sim
 
 
+def _queries(monkeypatch, n_queries: int, topk: int) -> None:
+    """Search the first ``n_queries`` ids for their ``topk`` neighbours."""
+    monkeypatch.setattr(sim, "N_QUERIES", n_queries)
+    monkeypatch.setattr(sim, "TOPK", topk)
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     base = ("the quick brown fox jumps over the lazy dog and runs far "
@@ -100,8 +106,9 @@ def vecs(spark):
         rows, "vec_id long, embedding array<float>").cache()
 
 
-def test_brute_force_topk(spark, vecs):
-    out = sim.brute_force_topk(vecs, n_queries=3, topk=5)
+def test_brute_force_topk(spark, vecs, monkeypatch):
+    _queries(monkeypatch, 3, 5)
+    out = sim.brute_force_topk(vecs)
     rows = out.collect()
     assert {r.query_id for r in rows} == {0, 1, 2}
     per_q = {q: [r for r in rows if r.query_id == q] for q in (0, 1, 2)}
@@ -119,16 +126,17 @@ def test_lsh_bucket_groups_planted_pair(spark, vecs):
     assert vals[0] == vals[500]  # near-identical vectors share the bucket
 
 
-def test_lsh_topk_finds_planted(spark, vecs):
-    out = sim.lsh_topk(vecs, dim=16, n_queries=1, topk=3)
+def test_lsh_topk_finds_planted(spark, vecs, monkeypatch):
+    _queries(monkeypatch, 1, 3)
+    out = sim.lsh_topk(vecs, dim=16)
     rows = sorted(out.collect(), key=lambda r: r.rank)
     assert rows and rows[0].neighbor_id == 500
 
 
 def test_simhash_blocks_guarantee_radius(spark):
     """Pigeonhole honesty: default banding (blocks = max_hamming + 1)
-    finds a pair at Hamming 7 whose differing bits hit every old 16-bit
-    block; the old 4-block banding provably misses it."""
+    finds a pair at Hamming 7 whose differing bits hit every 16-bit
+    quarter of the signature."""
     # flip 7 bits spread so each 16-bit quarter has >= 1 flipped bit
     flips = [0, 10, 16, 30, 40, 50, 60]
     sig_a = 0x0123456789ABCDEF
@@ -143,8 +151,6 @@ def test_simhash_blocks_guarantee_radius(spark):
     found = {(r.doc_a, r.doc_b): r.hamming
              for r in dedup.simhash_near_pairs(sh, max_hamming=7).collect()}
     assert found == {(1, 2): 7}
-    missed = dedup.simhash_near_pairs(sh, max_hamming=7, blocks=4).collect()
-    assert missed == []  # documented recall loss of explicit coarse blocks
 
 
 def test_minhash_dedup_planted_corpus_exact(spark):
@@ -164,21 +170,21 @@ def test_minhash_dedup_planted_corpus_exact(spark):
 def test_lsh_topk_multiprobe_recall(spark, vecs):
     """ANN recall gate: auto-sized bits + Hamming-1 multi-probe must
     recover >= 0.9 of the brute-force top-5 sets."""
-    bf = sim.brute_force_topk(vecs, n_queries=10, topk=5).collect()
-    ann = sim.lsh_topk(vecs, dim=16, n_queries=10, topk=5,
-                       bits=None, probes=2).collect()
+    bf = sim.brute_force_topk(vecs).collect()
+    ann = sim.lsh_topk(vecs, dim=16, bits=None, probes=2).collect()
     want = {(r.query_id, r.neighbor_id) for r in bf}
     got = {(r.query_id, r.neighbor_id) for r in ann}
     recall = len(want & got) / len(want)
     assert recall >= 0.9, recall
 
 
-def test_bits_for_scales_with_corpus():
+def test_bits_for_scales_with_corpus(monkeypatch):
     assert sim.bits_for(10) == 3
     assert sim.bits_for(500) == 3
     assert sim.bits_for(64 * 1024) == 10
     assert sim.bits_for(10**12) == 30  # ceil(log2(1e12/64)) = 34, capped
-    assert sim.bits_for(10**12, hi=20) == 20
+    monkeypatch.setattr(sim, "LSH_MAX_BITS", 20)
+    assert sim.bits_for(10**12) == 20
 
 
 def test_lsh_topk_recall_on_driver_embeddings(spark):
@@ -190,18 +196,17 @@ def test_lsh_topk_recall_on_driver_embeddings(spark):
         import pytest
         pytest.skip("driver testdata not present")
     emb = spark.read.parquet(path)
-    bf = sim.brute_force_topk(emb, n_queries=10, topk=5).collect()
-    ann = sim.lsh_topk(emb, dim=64, n_queries=10, topk=5,
-                       bits=None, probes=2).collect()
+    bf = sim.brute_force_topk(emb).collect()
+    ann = sim.lsh_topk(emb, dim=64, bits=None, probes=2).collect()
     want = {(r.query_id, r.neighbor_id) for r in bf}
     got = {(r.query_id, r.neighbor_id) for r in ann}
     recall = len(want & got) / len(want)
     assert recall >= 0.9, recall
 
 
-def test_lsh_max_bucket_drops_hot_cliques(spark):
+def test_lsh_max_bucket_drops_hot_cliques(spark, monkeypatch):
     """Hot-bucket guard: a 20-doc identical clique floods every band
-    bucket; max_bucket drops those buckets before the quadratic join
+    bucket; LSH_MAX_BUCKET drops those buckets before the quadratic join
     while small buckets (the planted pair) survive."""
     rows = [(i, "lorem ipsum dolor sit amet consectetur adipiscing")
             for i in range(20)]
@@ -211,19 +216,19 @@ def test_lsh_max_bucket_drops_hot_cliques(spark):
     sigs = dedup.minhash_signatures(docs)
     full = {(r.doc_a, r.doc_b)
             for r in dedup.lsh_candidate_pairs(sigs).collect()}
+    monkeypatch.setattr(dedup, "LSH_MAX_BUCKET", 10)
     capped = {(r.doc_a, r.doc_b)
-              for r in dedup.lsh_candidate_pairs(
-                  sigs, max_bucket=10).collect()}
+              for r in dedup.lsh_candidate_pairs(sigs).collect()}
     assert (0, 1) in full and (100, 101) in full
     assert capped == {(100, 101)}
     # end-to-end through minhash_dedup
     out = {(r.doc_a, r.doc_b)
-           for r in dedup.minhash_dedup(docs, min_num=1, min_den=2,
-                                        max_bucket=10).collect()}
+           for r in dedup.minhash_dedup(docs, min_num=1,
+                                        min_den=2).collect()}
     assert out == {(100, 101)}
 
 
-def test_ngram_max_doc_freq_drops_boilerplate(spark):
+def test_ngram_max_doc_freq_drops_boilerplate(spark, monkeypatch):
     """df-capping: boilerplate shingles shared by every doc stop
     producing quadratic pairs; rare-shingle near-dups still pair."""
     boiler = "common boiler plate text here"
@@ -235,16 +240,17 @@ def test_ngram_max_doc_freq_drops_boilerplate(spark):
             for r in dedup.ngram_jaccard_pairs(
                 docs, min_num=1, min_den=5).collect()}
     assert len(full) == 66  # all 12 docs pair through the boilerplate
+    monkeypatch.setattr(dedup, "NGRAM_MAX_DOC_FREQ", 3)
     capped = {(r.doc_a, r.doc_b): (r.i_cnt, r.u_cnt)
               for r in dedup.ngram_jaccard_pairs(
-                  docs, min_num=1, min_den=5, max_doc_freq=3).collect()}
+                  docs, min_num=1, min_den=5).collect()}
     assert set(capped) == {(100, 101)}
     i, u = capped[(100, 101)]
     assert i == u  # rare-shingle projections identical
 
 
 def test_simhash_radius_zero_single_block(spark):
-    """blocks=1 (max_hamming=0) must not overflow the 64-bit mask; only
+    """One block (max_hamming=0) must not overflow the 64-bit mask; only
     identical signatures pair."""
     sh = spark.createDataFrame(
         [(1, 123456789), (2, 123456789), (3, -987654321)],
@@ -270,25 +276,26 @@ def test_simhash_wide_bucket_guard(spark):
     dedup.simhash_near_pairs(sh).count()
 
 
-def test_ivf_full_probe_equals_brute_force(spark, vecs):
+def test_ivf_full_probe_equals_brute_force(spark, vecs, monkeypatch):
     """Probing every cell makes IVF exhaustive: identical rows to the
     exact brute-force baseline (assignment partitions the corpus, so
     probing all cells covers it completely)."""
     n_cells = vecs.filter("vec_id % 10 = 0").count()
-    ivf = sim.ivf_topk(vecs, 16, n_queries=3, topk=5, c_mod=10,
-                       nprobe=n_cells)
-    bf = sim.brute_force_topk(vecs, n_queries=3, topk=5)
+    _queries(monkeypatch, 3, 5)
+    ivf = sim.ivf_topk(vecs, 16, c_mod=10, nprobe=n_cells)
+    bf = sim.brute_force_topk(vecs)
     assert sorted(map(tuple, ivf.collect())) == \
         sorted(map(tuple, bf.collect()))
 
 
-def test_ivf_recall_at_nprobe(spark, vecs):
+def test_ivf_recall_at_nprobe(spark, vecs, monkeypatch):
     """nprobe=3 of 9 cells must still find most true neighbors, and the
     planted near-duplicate (500 ~ 0) must be found at rank 1 (its cell
     assignment matches the query's best cell by construction of the
     perturbation)."""
-    ivf = sim.ivf_topk(vecs, 16, n_queries=3, topk=5, c_mod=10, nprobe=3)
-    bf = sim.brute_force_topk(vecs, n_queries=3, topk=5)
+    _queries(monkeypatch, 3, 5)
+    ivf = sim.ivf_topk(vecs, 16, c_mod=10, nprobe=3)
+    bf = sim.brute_force_topk(vecs)
     got = {(r.query_id, r.neighbor_id) for r in ivf.collect()}
     want = {(r.query_id, r.neighbor_id) for r in bf.collect()}
     recall = len(got & want) / len(want)
@@ -302,18 +309,17 @@ def test_ivf_matrix_path_matches_inline(spark, vecs, monkeypatch):
     """Forcing the broadcast-matrix prober (cap -> 0) must return rows
     identical to the inline-expression path on the same corpus — same
     scores, same smaller-cid tie-breaks."""
-    inline = sim.ivf_topk(vecs, 16, n_queries=3, topk=5, c_mod=10,
-                          nprobe=3).collect()
+    _queries(monkeypatch, 3, 5)
+    inline = sim.ivf_topk(vecs, 16, c_mod=10, nprobe=3).collect()
     monkeypatch.setattr(sim, "IVF_MAX_INLINE_TERMS", 0)
-    matrix = sim.ivf_topk(vecs, 16, n_queries=3, topk=5, c_mod=10,
-                          nprobe=3)
+    matrix = sim.ivf_topk(vecs, 16, c_mod=10, nprobe=3)
     plan = matrix._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan, plan  # really the vectorized UDF
     assert sorted(map(tuple, matrix.collect())) == \
         sorted(map(tuple, inline))
 
 
-def test_ivf_matrix_path_dim768_k1024_probe_all(spark):
+def test_ivf_matrix_path_dim768_k1024_probe_all(spark, monkeypatch):
     """The production-embedding regime the inline expression can't
     reach: dim=768, K=1024 (K*dim ~ 786k terms > IVF_MAX_INLINE_TERMS).
     Probe-all through the broadcast-matrix path must equal exact brute
@@ -328,9 +334,9 @@ def test_ivf_matrix_path_dim768_k1024_probe_all(spark):
     vecs768 = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>")
     assert 1024 * 768 > sim.IVF_MAX_INLINE_TERMS
-    ivf = sim.ivf_topk(vecs768, 768, n_queries=3, topk=5, c_mod=2,
-                       nprobe=1024)
-    bf = sim.brute_force_topk(vecs768, n_queries=3, topk=5)
+    _queries(monkeypatch, 3, 5)
+    ivf = sim.ivf_topk(vecs768, 768, c_mod=2, nprobe=1024)
+    bf = sim.brute_force_topk(vecs768)
     assert sorted(map(tuple, ivf.collect())) == \
         sorted(map(tuple, bf.collect()))
 
@@ -351,11 +357,10 @@ def test_ivf_null_embedding_degrades_gracefully(spark, vecs, monkeypatch):
         [(999, None), (998, nanvec), (997, nullelem), (996, ragged),
          (990, None)],
         "vec_id long, embedding array<float>"))
-    inline = sim.ivf_topk(dirty, 16, n_queries=3, topk=5, c_mod=10,
-                          nprobe=3).collect()
+    _queries(monkeypatch, 3, 5)
+    inline = sim.ivf_topk(dirty, 16, c_mod=10, nprobe=3).collect()
     monkeypatch.setattr(sim, "IVF_MAX_INLINE_TERMS", 0)
-    matrix = sim.ivf_topk(dirty, 16, n_queries=3, topk=5, c_mod=10,
-                          nprobe=3).collect()
+    matrix = sim.ivf_topk(dirty, 16, c_mod=10, nprobe=3).collect()
     # NaN elements quantize to 0 on BOTH paths (measured ANSI cast
     # semantics); null vectors, null-ELEMENT vectors and wrong-length
     # vectors are normalized to null and drop on both — row-identical
@@ -410,12 +415,13 @@ def test_dedup_corpus_drops_non_keepers(spark):
     assert ids == {1, 3}  # cluster {1,2,5} keeps 1; 3 passes through
 
 
-def test_connected_components_nonconvergence_raises(spark):
-    # a 5-chain with max_iter=1 cannot reach fixpoint -> loud error
+def test_connected_components_nonconvergence_raises(spark, monkeypatch):
+    # a 5-chain with one round cannot reach fixpoint -> loud error
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], "doc_a long, doc_b long")
+    monkeypatch.setattr(dedup, "CC_MAX_ITER", 1)
     with pytest.raises(RuntimeError, match="fixpoint"):
-        dedup.connected_components(pairs, max_iter=1)
+        dedup.connected_components(pairs)
 
 
 def test_gopher_rules_each_direction(spark, tmp_path):
@@ -460,12 +466,12 @@ def test_gopher_rules_each_direction(spark, tmp_path):
     assert {d for d, r in rows.items() if r["keep"]} == {0}
 
 
-def test_ivf_dim_validated_and_auto_cmod(spark, vecs):
+def test_ivf_dim_validated_and_auto_cmod(spark, vecs, monkeypatch):
     with pytest.raises(ValueError, match="dim"):
         sim.ivf_topk(vecs, 99, c_mod=10)
     # c_mod=None auto-sizes K ~ sqrt(N) and still returns ranked rows
-    out = sim.ivf_topk(vecs, 16, n_queries=2, topk=3, c_mod=None,
-                       nprobe=3)
+    _queries(monkeypatch, 2, 3)
+    out = sim.ivf_topk(vecs, 16, c_mod=None, nprobe=3)
     assert out.count() == 6
 
 
@@ -481,7 +487,7 @@ def test_dedup_corpus_plan_broadcasts_drop_set(spark):
     assert out.count() == 49
 
 
-def test_dedup_corpus_large_drop_set_shuffles(spark):
+def test_dedup_corpus_large_drop_set_shuffles(spark, monkeypatch):
     """Above the broadcast gate the drop-set must NOT be forced into a
     broadcast: the join falls back to a shuffled left_anti (an Exchange
     on the corpus side) so a corpus-scale drop-set can't OOM executors.
@@ -490,7 +496,8 @@ def test_dedup_corpus_large_drop_set_shuffles(spark):
         [(i, f"t{i}") for i in range(50)], "doc_id long, text string")
     pairs = spark.createDataFrame(
         [(1, 2), (3, 4)], "doc_a long, doc_b long")
-    out = dedup.dedup_corpus(corpus, pairs, broadcast_max_rows=0)
+    monkeypatch.setattr(dedup, "DEDUP_BROADCAST_MAX_ROWS", 0)
+    out = dedup.dedup_corpus(corpus, pairs)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in plan, plan
     assert "LeftAnti" in plan, plan
@@ -654,18 +661,20 @@ def clustered_vecs(spark):
         rows, "vec_id long, embedding array<float>").cache()
 
 
-def test_kmeans_quantizer_beats_modular_on_clusters(spark, clustered_vecs):
+def test_kmeans_quantizer_beats_modular_on_clusters(spark, clustered_vecs,
+                                                   monkeypatch):
     """The recall gate VERDICT asked for: on a clustered corpus whose
     modular init is degenerate (all centroids in one cluster), the
     integer-Lloyd refinement must strictly improve recall vs brute
     force at the same (c_mod, nprobe). Measured deterministic values:
     modular 0.88, kmeans 1.0."""
-    bf = {(r.query_id, r.neighbor_id) for r in sim.brute_force_topk(
-        clustered_vecs, n_queries=5, topk=5).collect()}
+    _queries(monkeypatch, 5, 5)
+    bf = {(r.query_id, r.neighbor_id)
+          for r in sim.brute_force_topk(clustered_vecs).collect()}
 
     def recall(q):
         got = {(r.query_id, r.neighbor_id) for r in sim.ivf_topk(
-            clustered_vecs, 16, n_queries=5, topk=5, c_mod=40, nprobe=2,
+            clustered_vecs, 16, c_mod=40, nprobe=2,
             quantizer=q).collect()}
         return len(got & bf) / len(bf)
 
@@ -680,19 +689,20 @@ def test_kmeans_refine_is_deterministic(spark, clustered_vecs):
     base = clustered_vecs.selectExpr(
         "cast(vec_id as bigint) as vec_id", "embedding")
     init = sim._ivf_centroids(clustered_vecs, 40, 16)
-    c1 = sim._kmeans_refine(base, init, 16, iters=5)
-    c2 = sim._kmeans_refine(base, init, 16, iters=5)
+    c1 = sim._kmeans_refine(base, init, 16)
+    c2 = sim._kmeans_refine(base, init, 16)
     assert c1 == c2
     assert c1 != init  # it actually moved
 
 
-def test_kmeans_full_probe_still_exact(spark, clustered_vecs):
+def test_kmeans_full_probe_still_exact(spark, clustered_vecs, monkeypatch):
     """Probing every cell is exhaustive regardless of quantizer — the
     cell assignment is a partition of the corpus either way."""
     k = clustered_vecs.filter("vec_id % 40 = 0").count()
-    ivf = sim.ivf_topk(clustered_vecs, 16, n_queries=3, topk=5,
-                       c_mod=40, nprobe=k, quantizer="kmeans")
-    bf = sim.brute_force_topk(clustered_vecs, n_queries=3, topk=5)
+    _queries(monkeypatch, 3, 5)
+    ivf = sim.ivf_topk(clustered_vecs, 16, c_mod=40, nprobe=k,
+                       quantizer="kmeans")
+    bf = sim.brute_force_topk(clustered_vecs)
     assert sorted(map(tuple, ivf.collect())) == \
         sorted(map(tuple, bf.collect()))
 

@@ -206,7 +206,6 @@ WRITER_PINS = {
     "encode": (ONE_PART, KEYS),
     "datasource": (ONE_PART, KEYS),
     "compact": (MERGED, KEYS + ["compactions"]),
-    "compact_spark": (MERGED, KEYS + ["compactions"]),
 }
 
 
@@ -227,8 +226,7 @@ def test_writer_parts_pinned(writer, spark, tmp_path):
                 for p in before["parts"]] == [
             (0, 1500, 133_734, 79_996_697),
             (1, 1500, 133_117, 2_649_799_103)]
-        encode.compact_parts(out, spark if writer == "compact_spark"
-                             else None, target_bytes=1 << 30)
+        encode.compact_parts(out, target_bytes=1 << 30)
     m = encode.read_manifest(out)
     parts, keys = WRITER_PINS[writer]
     assert [(p["part_id"], p["rows"], p["enc_bytes"], p["crc32"])

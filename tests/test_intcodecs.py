@@ -217,7 +217,10 @@ def test_decode_ints_narrow_matches_int64(tag, monkeypatch):
             # mini sizes whose minis are not byte-aligned for most widths
             # take the per-mini branch of both decoders
             for mini in (5, 13):
-                payload = memoryview(IC._enc_forbp(a32, mini=mini))
+                with monkeypatch.context() as m:
+                    m.setattr(IC, "MINI", mini)
+                    payload = memoryview(IC._enc_forbp(a32))
+                assert struct.unpack_from("<H", payload)[0] == mini
                 w64 = IC._dec_forbp(payload, a32.size)
                 w32 = IC._dec_forbp(payload, a32.size, narrow=True)
                 assert w32.dtype == np.int32
@@ -673,3 +676,42 @@ def test_fixture_part_bytes_unchanged_by_wsym_trial(tmp_path, monkeypatch):
     new = part("new")
     monkeypatch.setattr(select, "with_wsym_trial", lambda a, seg: seg)
     assert new == part("old")
+
+
+def test_corrupt_zstd_frames_raise_value_error():
+    """Seeded single-byte flips inside the zstd frame of an auto-encoded
+    ``zstd_wrap`` int segment and of a ``bin_zstd`` segment: each decode
+    raises the strict-decode ``ValueError`` or, as the frames carry no
+    checksum, returns wrong values; pyarrow's ``OSError`` never escapes."""
+    from zseq import synth
+
+    ints = _tokens(synth.tokens_table_arrow(1000))
+    iseg = IC.encode_ints(ints)
+    assert iseg[0] == IC.T_WRAP
+    # the frame follows raw_len u32, the zone flag and the 16-byte zone
+    ifrom = IC.HEADER.size + 5 + (16 if iseg[IC.HEADER.size + 4] else 0)
+    words = [f"doc {i % 977} {'x' * (i % 13)} text" for i in range(20_000)]
+    lengths = np.array([len(w) for w in words])
+    data = np.frombuffer("".join(words).encode(), np.uint8)
+    bseg = BC.encode_binary(lengths, data, codec=BC.T_BIN_ZSTD)
+    # the frame follows the lengths segment and the raw size u64
+    _, pos = IC.decode_ints(bseg[IC.HEADER.size:], 0, lengths.size)
+    bfrom = IC.HEADER.size + pos + 8
+    rng = np.random.default_rng(5)
+    cases = (
+        (iseg, ifrom, ints, lambda b: IC.decode_ints(b, 0, ints.size)[0]),
+        (bseg, bfrom, data,
+         lambda b: BC.decode_binary(b, 0, lengths.size)[1]),
+    )
+    for seg, lo, want, decode in cases:
+        refused = 0
+        for p in rng.integers(lo, len(seg), 200):
+            bad = bytearray(seg)
+            bad[p] ^= int(rng.integers(1, 256))
+            try:
+                got = decode(bytes(bad))
+            except ValueError:
+                refused += 1
+                continue
+            assert got.shape != want.shape or not np.array_equal(got, want)
+        assert refused  # some flips break the frame itself

@@ -28,26 +28,29 @@ def test_minhash_dedup_materializes_candidates_once(spark):
     assert "xxhash64" not in plan
 
 
-def test_brute_force_topk_broadcasts_queries(spark, ):
+def test_brute_force_topk_broadcasts_queries(spark, monkeypatch):
     import numpy as np
 
     rng = np.random.default_rng(3)
     rows = [(i, [float(x) for x in rng.standard_normal(8)])
             for i in range(50)]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    plan = _plan(sim.brute_force_topk(vecs, n_queries=3, topk=2))
+    monkeypatch.setattr(sim, "N_QUERIES", 3)
+    monkeypatch.setattr(sim, "TOPK", 2)
+    plan = _plan(sim.brute_force_topk(vecs))
     assert "Broadcast" in plan  # query side broadcast, never shuffled
 
 
-def test_lsh_topk_broadcasts_probes(spark):
+def test_lsh_topk_broadcasts_probes(spark, monkeypatch):
     import numpy as np
 
     rng = np.random.default_rng(4)
     rows = [(i, [float(x) for x in rng.standard_normal(8)])
             for i in range(80)]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    plan = _plan(sim.lsh_topk(vecs, dim=8, n_queries=3, topk=2,
-                              bits=3, probes=1))
+    monkeypatch.setattr(sim, "N_QUERIES", 3)
+    monkeypatch.setattr(sim, "TOPK", 2)
+    plan = _plan(sim.lsh_topk(vecs, dim=8, bits=3, probes=1))
     assert "BroadcastHashJoin" in plan
 
 

@@ -9,17 +9,27 @@ from zseq import synth, zseqfile
 from zseq.zseqfile import ZseqReader
 
 
+def _read(buf, columns=None, predicate=None) -> pa.Table:
+    """The blocks of ``buf`` that ``predicate`` does not prune, with
+    only ``columns``."""
+    r = ZseqReader(buf)
+    keep = r.schema.names if columns is None else columns
+    return pa.Table.from_batches(
+        list(r.batches(columns, predicate)),
+        schema=pa.schema([f for f in r.schema if f.name in keep]))
+
+
 @pytest.fixture(scope="module")
 def blob():
     tbl = synth.tokens_table_arrow(4000)
     # multiple blocks so pruning has something to skip
-    return zseqfile.encode_table(
-        tbl.to_batches(max_chunksize=500), schema=tbl.schema), tbl
+    return zseqfile.encode_table(pa.Table.from_batches(
+        tbl.to_batches(max_chunksize=500))), tbl
 
 
 def test_projection_only_selected_columns(blob):
     buf, tbl = blob
-    out = zseqfile.decode_table(buf, columns=["doc_id", "n_tok"])
+    out = _read(buf, columns=["doc_id", "n_tok"])
     assert out.column_names == ["doc_id", "n_tok"]
     assert out.column("doc_id").to_pylist() == \
         tbl.column("doc_id").to_pylist()
@@ -29,7 +39,7 @@ def test_projection_only_selected_columns(blob):
 def test_projection_unknown_column_raises(blob):
     buf, _ = blob
     with pytest.raises(KeyError):
-        zseqfile.decode_table(buf, columns=["nope"])
+        _read(buf, columns=["nope"])
 
 
 def test_predicate_prunes_blocks(blob):
@@ -70,8 +80,8 @@ def test_predicate_skips_with_sorted_data():
         "k": pa.array(np.arange(10000, dtype=np.int64)),
         "v": pa.array(np.arange(10000, dtype=np.int64) * 3),
     })
-    buf = zseqfile.encode_table(ids.to_batches(max_chunksize=1000),
-                                schema=ids.schema)
+    buf = zseqfile.encode_table(pa.Table.from_batches(
+        ids.to_batches(max_chunksize=1000)))
     r = ZseqReader(buf)
     out = pa.Table.from_batches(
         list(r.batches(predicate=[("k", ">=", 9000)])), schema=r.schema)
@@ -113,8 +123,8 @@ def test_string_predicate_skips_with_sorted_data():
     ids = [f"doc_{i:08d}" for i in range(10000)]
     tbl = pa.table({"doc_id": pa.array(ids),
                     "v": pa.array(np.arange(10000, dtype=np.int64))})
-    buf = zseqfile.encode_table(tbl.to_batches(max_chunksize=1000),
-                                schema=tbl.schema)
+    buf = zseqfile.encode_table(pa.Table.from_batches(
+        tbl.to_batches(max_chunksize=1000)))
     r = ZseqReader(buf)
     out = pa.Table.from_batches(
         list(r.batches(predicate=[("doc_id", ">=", "doc_00009000")])),
@@ -140,8 +150,8 @@ def test_string_zone_truncation_is_conservative():
         + ["prefix_zzzzzzzzzzzzzzzz_%04d" % i for i in range(100)]
     tbl = pa.table({"s": pa.array(vals),
                     "v": pa.array(np.arange(200, dtype=np.int64))})
-    buf = zseqfile.encode_table(tbl.to_batches(max_chunksize=100),
-                                schema=tbl.schema)
+    buf = zseqfile.encode_table(pa.Table.from_batches(
+        tbl.to_batches(max_chunksize=100)))
     r = ZseqReader(buf)
     out = pa.Table.from_batches(
         list(r.batches(predicate=[("s", "=", vals[150])])), schema=r.schema)
@@ -163,7 +173,7 @@ def test_string_zone_truncation_is_conservative():
 def test_string_nulls_and_type_mismatch_stay_conservative():
     tbl = pa.table({"s": pa.array(["b", None, "d", "a"]),
                     "v": pa.array(np.arange(4, dtype=np.int64))})
-    buf = zseqfile.encode_table(tbl.to_batches(), schema=tbl.schema)
+    buf = zseqfile.encode_table(tbl)
     r = ZseqReader(buf)
     # nulls encode as "" -> lo bound "" -> never wrongly pruned
     out = pa.Table.from_batches(
@@ -287,10 +297,10 @@ def test_pushdown_prune_never_drops_rows(n, data, block, preds):
         "s": pa.array(strs, type=pa.string()),
         "b": pa.array(bins, type=pa.binary()),
     })
-    buf = zseqfile.encode_table(tbl.to_batches(max_chunksize=block),
-                                schema=tbl.schema)
+    buf = zseqfile.encode_table(pa.Table.from_batches(
+        tbl.to_batches(max_chunksize=block)))
     full = zseqfile.decode_table(buf)
-    pruned = zseqfile.decode_table(buf, predicate=list(preds))
+    pruned = _read(buf, predicate=list(preds))
 
     cols = {"i": ints, "ts": tss, "d": decs, "D": dec38s,
             "s": strs, "b": bins}
@@ -328,8 +338,8 @@ def test_decimal_predicate_skips_with_sorted_data():
         "price": pa.array([Decimal(i) / 100 for i in range(10000)],
                           type=pa.decimal128(12, 2)),
     })
-    buf = zseqfile.encode_table(prices.to_batches(max_chunksize=1000),
-                                schema=prices.schema)
+    buf = zseqfile.encode_table(pa.Table.from_batches(
+        prices.to_batches(max_chunksize=1000)))
     r = ZseqReader(buf)
     # storage domain: cents — price >= 90.00 is unscaled 9000
     out = pa.Table.from_batches(
@@ -347,8 +357,8 @@ def test_decimal_predicate_skips_with_sorted_data():
                          for i in range(100)],
                         type=pa.decimal128(38, 0)),
     })
-    buf38 = zseqfile.encode_table(wide.to_batches(max_chunksize=10),
-                                  schema=wide.schema)
+    buf38 = zseqfile.encode_table(pa.Table.from_batches(
+        wide.to_batches(max_chunksize=10)))
     r38 = ZseqReader(buf38)
     out38 = pa.Table.from_batches(
         list(r38.batches(predicate=[("p38", ">=", 80 * 10 ** 20
@@ -360,8 +370,8 @@ def test_decimal_predicate_skips_with_sorted_data():
     # nulls stay conservative: all-null chunk has no bounds, never prunes
     nulls = pa.table({"p38": pa.array([None] * 20,
                                       type=pa.decimal128(38, 0))})
-    bn = zseqfile.encode_table(nulls.to_batches(max_chunksize=10),
-                               schema=nulls.schema)
+    bn = zseqfile.encode_table(pa.Table.from_batches(
+        nulls.to_batches(max_chunksize=10)))
     rn = ZseqReader(bn)
     outn = pa.Table.from_batches(
         list(rn.batches(predicate=[("p38", ">", 0)])), schema=rn.schema)
@@ -443,18 +453,18 @@ def test_decode_file_pruning_end_to_end(spark, range_ds):
     assert a == list(range(95, 105))
 
 
-def test_datasource_file_pruning_partitions(spark, range_ds):
+def test_datasource_file_pruning_partitions(spark, range_ds, monkeypatch):
     from pyspark.sql.datasource import EqualTo
 
+    from zseq import decode as zdec
     from zseq.datasource import ZseqSourceReader
 
     out, _ = range_ds
     # force 1 file per group so group count == file count
-    r = ZseqSourceReader({"path": out, "target_partition_bytes": "1",
-                          "min_partitions": "1"})
+    monkeypatch.setattr(zdec, "TARGET_BYTES", 1)
+    r = ZseqSourceReader({"path": out}, parallelism=1)
     assert len(r.partitions()) == 3
-    r2 = ZseqSourceReader({"path": out, "target_partition_bytes": "1",
-                           "min_partitions": "1"})
+    r2 = ZseqSourceReader({"path": out}, parallelism=1)
     r2.pushFilters([EqualTo(("k",), 250)])
     parts = r2.partitions()
     assert len(parts) == 1
@@ -476,7 +486,7 @@ def test_uint64_sign_crossing_disables_zone_bounds():
     tbl = pa.table({"u": pa.array([1, 2, 2 ** 64 - 1], pa.uint64())})
     buf = zseqfile.encode_table(tbl)
     # block level: the matching row survives the predicate
-    out = zseqfile.decode_table(buf, predicate=[("u", "=", 2 ** 64 - 1)])
+    out = _read(buf, predicate=[("u", "=", 2 ** 64 - 1)])
     assert out.column("u").to_pylist().count(2 ** 64 - 1) == 1
     # part level: the writer records no envelope for the column
     import io
@@ -515,8 +525,7 @@ def test_all_null_chunk_does_not_poison_part_envelope():
     lo, hi = w.part_zones["s"]
     assert lo <= b"b" and hi >= b"d"
     # and rows (incl. the nulls) still decode past a matching predicate
-    out = zseqfile.decode_table(sink.getvalue(),
-                                predicate=[("s", "=", "b")])
+    out = _read(sink.getvalue(), predicate=[("s", "=", "b")])
     assert out.column("s").to_pylist().count("b") == 1
 
 
@@ -645,11 +654,12 @@ def test_bucket_pruning_decode_in_list(spark, hash_ds, tmp_path):
     assert sorted(r["v"] for r in got) == [2, 399]
 
 
-def test_bucket_pruning_datasource(spark, hash_ds, tmp_path):
+def test_bucket_pruning_datasource(spark, hash_ds, tmp_path, monkeypatch):
     import shutil
 
     from pyspark.sql.datasource import EqualTo
 
+    from zseq import decode as zdec
     from zseq.datasource import ZseqSourceReader
     from zseq.sparkhash import bucket_of
 
@@ -659,8 +669,8 @@ def test_bucket_pruning_datasource(spark, hash_ds, tmp_path):
     key = "doc_00042"
     b = bucket_of(key, pa.string(), m["partitions"])
     _corrupt_all_but(work, m, {b})
-    r = ZseqSourceReader({"path": work, "target_partition_bytes": "1",
-                          "min_partitions": "1"})
+    monkeypatch.setattr(zdec, "TARGET_BYTES", 1)  # one file per group
+    r = ZseqSourceReader({"path": work}, parallelism=1)
     r.pushFilters([EqualTo(("doc_id",), key)])
     parts = r.partitions()
     assert len(parts) == 1

@@ -74,7 +74,7 @@ def test_encode_parquet_task_plan_is_constant_size(spark):
     from zseq.session import run_tasks
 
     schema = pa.schema([pa.field("doc_id", pa.int64())])
-    fn = zenc._encode_files("/nonexistent/out", schema, None, None, "tok")
+    fn = zenc._encode_files("/nonexistent/out", schema, None, "tok")
 
     def plan(n):
         tasks = [(i, f"/nonexistent/in-{i:05d}.parquet") for i in range(n)]
@@ -298,9 +298,6 @@ def test_encode_parquet_schema_drift_named_up_front(spark, tmp_path):
     out = str(tmp_path / "driftout")
     with pytest.raises(ValueError, match="b.parquet"):
         zenc.encode_parquet(spark, src, out)
-    # a column-projected encode that avoids the drifting column works
-    res = zenc.encode_parquet(spark, src, out, columns=["v"])
-    assert res.total_rows == 3
 
     # castable widening (int32 -> int64) + an extra column are accepted,
     # exactly as the task path always handled them
@@ -364,25 +361,4 @@ def test_resume_refuses_schema_drift(spark, tokens_df, tmp_path):
     # same-schema resume still works after the refusal
     res = zenc.encode(tokens_df, out, partitions=4, mode="hash",
                       resume=True)
-    assert res.total_rows == 2000
-
-
-def test_encode_parquet_resume_refuses_projection_drift(spark, tokens_df,
-                                                        tmp_path):
-    """encode_parquet resume pins the COLUMN PROJECTION too, and an
-    unknown column in `columns` is named up front."""
-    src = str(tmp_path / "pqsrc")
-    tokens_df.repartition(2).write.parquet(src)
-    out = str(tmp_path / "pqout")
-    full = zenc.encode_parquet(spark, src, out,
-                               columns=["doc_id", "n_tok"])
-    os.remove(os.path.join(out, full.parts[0]["file"]))
-    with pytest.raises(ValueError, match="projection|schema"):
-        zenc.encode_parquet(spark, src, out, columns=["doc_id"],
-                            resume=True)
-    with pytest.raises(KeyError, match="typo"):
-        zenc.encode_parquet(spark, src, str(tmp_path / "pqout2"),
-                            columns=["typo"])
-    res = zenc.encode_parquet(spark, src, out,
-                              columns=["doc_id", "n_tok"], resume=True)
     assert res.total_rows == 2000

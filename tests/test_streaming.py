@@ -1,7 +1,7 @@
 """``decode_stream`` over the epoch layout: one scan over every committed
-epoch, each file checked against its own epoch's crc, read-side schema
-evolution and manifest pruning, and one file-stream -> sink -> decode
-roundtrip. The sink's own contract is tested in test_datasource.py."""
+epoch, each file checked against its own epoch's crc, and one
+file-stream -> sink -> decode roundtrip. The sink's own contract is
+tested in test_datasource.py."""
 
 import os
 
@@ -115,107 +115,3 @@ def test_decode_stream_crc_enforced_per_epoch(spark, tmp_path):
     open(p, "wb").write(bytes(blob))
     with pytest.raises(Exception, match="crc32"):
         streaming.decode_stream(spark, out).count()
-
-
-def test_decode_stream_schema_evolution(spark, tmp_path):
-    """decode_stream(schema=ext): the batch read-side evolution over
-    EVERY committed epoch — new nullable columns L6-default-filled,
-    narrowing refused, only-new-column projection keeps the row count."""
-    import pyarrow as pa
-    import pytest
-
-    from zseq.encode import read_manifest
-
-    out = str(tmp_path / "sevo")
-    expect = []
-    for e in range(3):
-        expect += _write_epoch(out, e)
-    w = pa.ipc.read_schema(pa.py_buffer(bytes.fromhex(
-        read_manifest(streaming.epoch_dir(out, 0))["schema"])))
-    ext = pa.schema(list(w) + [pa.field("quality", pa.int64(),
-                                        nullable=True)])
-    df = streaming.decode_stream(spark, out, schema=ext)
-    assert df.columns == ["doc_id", "v", "quality"]
-    rows = df.collect()
-    assert len(rows) == len(expect)
-    assert sorted((r["doc_id"], r["v"]) for r in rows) == sorted(expect)
-    assert all(r["quality"] == 0 for r in rows)
-
-    only = streaming.decode_stream(spark, out, schema=ext,
-                                   columns=["quality"])
-    assert only.columns == ["quality"]
-    assert only.count() == len(expect)
-
-    with pytest.raises(ValueError, match="narrowing"):
-        streaming.decode_stream(
-            spark, out, schema=pa.schema([pa.field("doc_id", pa.int64())]))
-
-
-def test_decode_stream_file_pruning_by_manifest_zones(spark, tmp_path):
-    """Epoch parts whose manifest zone envelope excludes the predicate
-    are never OPENED: prove it by corrupting every other epoch's part
-    file on disk — a read that touched them would die on the crc gate."""
-    import json
-
-    from zseq.zseqfile import zones_to_json
-
-    out = str(tmp_path / "sprune")
-    for e in range(3):
-        _write_epoch(out, e)
-        d = streaming.epoch_dir(out, e)
-        mp = os.path.join(d, "manifest.json")
-        m = json.load(open(mp))
-        m["parts"][0]["zones"] = zones_to_json(
-            {"doc_id": (e * 100, e * 100 + 4)})
-        json.dump(m, open(mp, "w"))
-    # corrupt epochs 0 and 2 (leave their manifests claiming the old crc)
-    for e in (0, 2):
-        p = os.path.join(streaming.epoch_dir(out, e), "part-00000.zseq")
-        b = bytearray(open(p, "rb").read())
-        b[len(b) // 2] ^= 0xFF
-        open(p, "wb").write(bytes(b))
-    got = streaming.decode_stream(
-        spark, out, predicate=[("doc_id", "=", 103)]) \
-        .filter("doc_id = 103").collect()
-    assert [(r["doc_id"], r["v"]) for r in got] == [(103, "x1_3")]
-    # without the predicate the corrupted epochs ARE read and refused
-    import pytest
-
-    with pytest.raises(Exception, match="crc32|corrupt"):
-        streaming.decode_stream(spark, out).count()
-
-
-def test_decode_stream_bucket_pruning(spark, tmp_path):
-    """Epochs are committed via encode(mode='hash'), so an equality
-    predicate on the key pins ONE bucket file per epoch — proven by
-    corrupting every non-pinned file across all epochs."""
-    import json
-    import os
-
-    import pyarrow as pa
-
-    from zseq import encode as zenc
-    from zseq.sparkhash import bucket_of
-    from zseq.streaming import decode_stream, epoch_dir
-
-    out = str(tmp_path / "stream")
-    os.makedirs(out)
-    for e in range(3):
-        df = spark.range(e * 100, (e + 1) * 100).selectExpr(
-            "concat('k_', lpad(cast(id as string), 4, '0')) as doc_id",
-            "id as v")
-        zenc.encode(df, epoch_dir(out, e), mode="hash", partitions=4,
-                    partition_col="doc_id")
-    key = "k_0150"  # lives in epoch 1
-    b = bucket_of(key, pa.string(), 4)
-    for e in range(3):
-        d = epoch_dir(out, e)
-        m = json.load(open(os.path.join(d, "manifest.json")))
-        for p in m["parts"]:
-            if p["part_id"] != b:
-                with open(os.path.join(d, p["file"]), "wb") as f:
-                    f.write(b"junk")
-    got = decode_stream(spark, out,
-                        predicate=[("doc_id", "=", key)]) \
-        .filter(f"doc_id = '{key}'").collect()
-    assert [(r["doc_id"], r["v"]) for r in got] == [(key, 150)]

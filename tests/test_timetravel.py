@@ -9,6 +9,7 @@ import os
 
 import pytest
 
+from conftest import tokens_range
 from zseq import decode as zdec
 from zseq import encode as zenc
 from zseq import synth
@@ -24,7 +25,7 @@ def appended(spark, tmp_path):
     out = str(tmp_path / "ds")
     df1 = synth.tokens_df_range(spark, 300, partitions=2)
     r1 = zenc.encode(df1, out, partitions=2)
-    df2 = synth.tokens_df_range(spark, 200, partitions=2, start=1_000_000)
+    df2 = tokens_range(spark, 1_000_000, 1_000_200, 2)
     r2 = zenc.encode(df2, out, append=True)
     return out, df1, df2, r1, r2
 
@@ -68,7 +69,7 @@ def test_compaction_retains_previous_revision(spark, tmp_path):
     out = str(tmp_path / "ds")
     df = synth.tokens_df_range(spark, 400, partitions=4)
     zenc.encode(df, out, partitions=4)
-    summary = zenc.compact_parts(out, target_bytes=1 << 30, spark=spark)
+    summary = zenc.compact_parts(out, target_bytes=1 << 30)
     assert summary["parts_after"] < summary["parts_before"]
     # pre-compaction revision still readable (replaced files are
     # vacuum's to sweep, not the compactor's)
@@ -83,7 +84,7 @@ def test_vacuum_expires_history_and_frees_only_then(spark, tmp_path):
     df = synth.tokens_df_range(spark, 400, partitions=4)
     zenc.encode(df, out, partitions=4)
     pre_files = {p["file"] for p in zenc.read_manifest(out)["parts"]}
-    zenc.compact_parts(out, target_bytes=1 << 30, spark=spark)
+    zenc.compact_parts(out, target_bytes=1 << 30)
     live = zenc.read_manifest(out)
     replaced = pre_files - {p["file"] for p in live["parts"]}
     assert replaced
@@ -110,7 +111,7 @@ def test_overwrite_resets_history(spark, tmp_path):
     zenc.encode(synth.tokens_df_range(spark, 50, partitions=1), out,
                 append=True)
     assert len(zenc.revisions(out)) == 2
-    df3 = synth.tokens_df_range(spark, 70, partitions=1, start=5_000_000)
+    df3 = tokens_range(spark, 5_000_000, 5_000_070, 1)
     zenc.encode(df3, out)  # overwrite: superseded parts GC'd immediately
     rows = zenc.revisions(out)
     assert [r["revision"] for r in rows] == [3]
@@ -137,8 +138,7 @@ def test_history_cli(spark, tmp_path, capsys):
 
     out = str(tmp_path / "ds")
     zenc.encode(synth.tokens_df_range(spark, 60, partitions=1), out)
-    zenc.encode(synth.tokens_df_range(spark, 40, partitions=1,
-                                      start=1_000_000), out, append=True)
+    zenc.encode(tokens_range(spark, 1_000_000, 1_000_040, 1), out, append=True)
     assert main(["history", out]) == 0
     lines = [json.loads(ln) for ln in
              capsys.readouterr().out.strip().splitlines()]
@@ -180,7 +180,7 @@ def test_rollback_refused_when_target_parts_vacuumed(spark, tmp_path):
     out = str(tmp_path / "ds")
     zenc.encode(synth.tokens_df_range(spark, 300, partitions=3), out,
                 partitions=3)
-    zenc.compact_parts(out, target_bytes=1 << 30, spark=spark)
+    zenc.compact_parts(out, target_bytes=1 << 30)
     # remove one of rev-1's (replaced) parts by hand, keep its snapshot
     m1 = zenc.read_manifest(out, revision=1)
     os.remove(os.path.join(out, m1["parts"][0]["file"]))
@@ -210,8 +210,7 @@ def test_rollback_cli(spark, tmp_path, capsys):
 
     out = str(tmp_path / "ds")
     zenc.encode(synth.tokens_df_range(spark, 60, partitions=1), out)
-    zenc.encode(synth.tokens_df_range(spark, 40, partitions=1,
-                                      start=1_000_000), out, append=True)
+    zenc.encode(tokens_range(spark, 1_000_000, 1_000_040, 1), out, append=True)
     assert main(["rollback", out, "1"]) == 0
     rep = json.loads(capsys.readouterr().out)
     assert rep == {"revision": 3, "rollback_of": 1, "rows": 60, "parts": 1}
@@ -226,9 +225,9 @@ def test_vacuum_keep_revisions_retention_floor(spark, tmp_path):
     out = str(tmp_path / "ds")
     zenc.encode(synth.tokens_df_range(spark, 100, partitions=1), out)
     for i in range(3):  # revisions 2,3,4
-        zenc.encode(synth.tokens_df_range(
-            spark, 50, partitions=1, start=(i + 1) * 1_000_000),
-            out, append=True)
+        start = (i + 1) * 1_000_000
+        zenc.encode(tokens_range(spark, start, start + 50, 1), out,
+                    append=True)
     assert [r["revision"] for r in zenc.revisions(out)] == [1, 2, 3, 4]
     # everything is aged, but the floor keeps the newest 3
     zenc.vacuum(out, min_age_sec=0.0, keep_revisions=3)

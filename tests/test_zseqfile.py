@@ -18,7 +18,7 @@ def test_tokens_table_roundtrip():
 def test_multi_batch_roundtrip():
     tbl = synth.tokens_table_arrow(3000)
     batches = tbl.to_batches(max_chunksize=500)
-    blob = zseqfile.encode_table(batches, schema=tbl.schema)
+    blob = zseqfile.encode_table(pa.Table.from_batches(batches))
     out = zseqfile.decode_table(blob)
     assert out.equals(tbl)
 
@@ -168,7 +168,8 @@ def test_reversed_marker_roundtrip():
 
     tbl = synth.tokens_table_arrow(300)
     marked = C.mark_reversed(tbl.schema, ["n_tok"])
-    blob = zseqfile.encode_table(tbl.to_batches(), schema=marked)
+    blob = zseqfile.encode_table(
+        pa.Table.from_batches(tbl.to_batches(), schema=marked))
     r = zseqfile.ZseqReader(blob)
     assert C.is_reversed(r.schema.field("n_tok"))
     assert not C.is_reversed(r.schema.field("doc_id"))

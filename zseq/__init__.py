@@ -31,21 +31,3 @@ __version__ = "0.1.0"
 # (intcodecs T_WSYM), a tag older readers do not know.
 MAGIC = b"||_ZSEQ||00003||"
 MAGIC_COMPAT = (MAGIC, b"||_ZSEQ||00002||", b"||_ZSEQ||00001||")
-
-# Inside a pyspark executor worker (and only there — gated on the worker
-# factory env the daemon exports), quiet the immutable zip finders as
-# soon as zseq is imported: the worker re-reads every zip finder's
-# central directory before EVERY task otherwise (see
-# zseq.session.quiet_worker_zip_finders), and warmup tasks import zseq
-# before the first timed task runs.
-import os as _os
-
-if "PYTHON_WORKER_FACTORY_SECRET" in _os.environ \
-        or "PYTHON_WORKER_FACTORY_PORT" in _os.environ \
-        or "PYTHON_WORKER_FACTORY_SOCK_PATH" in _os.environ:
-    try:
-        from .session import quiet_worker_zip_finders as _q
-
-        _q()
-    except Exception:  # never let an optimization break an import
-        pass

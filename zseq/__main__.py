@@ -382,7 +382,7 @@ def cmd_synth(args) -> int:
     return 0
 
 
-def main(argv: list[str] | None = None) -> int:
+def main(argv: list[str]) -> int:
     p = argparse.ArgumentParser(prog="zseq")
     p.add_argument("--master", default=None,
                    help="Spark master (default local[$SPARK_GRAFT_CPUS])")
@@ -437,8 +437,6 @@ def main(argv: list[str] | None = None) -> int:
     v = sub.add_parser("verify")
     v.add_argument("input")
     v.add_argument("enc")
-    v.add_argument("--key", default=None,
-                   help="deprecated, ignored (verify is key-free now)")
     v.set_defaults(fn=cmd_verify)
 
     c = sub.add_parser("compact")
@@ -484,4 +482,4 @@ def main(argv: list[str] | None = None) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

@@ -227,7 +227,7 @@ def _dec_pack(payload: memoryview, count: int,
     return out.view(np.int32 if narrow else np.int64)
 
 
-def _enc_forbp(arr: np.ndarray, mini: int = MINI) -> bytes:
+def _enc_forbp(arr: np.ndarray) -> bytes:
     """mini u16 | nminis x (min i64 LE, width u8) | packed minis
     (byte-aligned; nminis = ceil(count / mini), derived on decode).
     width==0: all equal min. width==64: raw 8-byte deltas.
@@ -240,6 +240,7 @@ def _enc_forbp(arr: np.ndarray, mini: int = MINI) -> bytes:
     2^32; true deltas < 2^32 by int32-span construction, so the uint32
     view is exact) — identical bytes, half the memory traffic on the hot
     token-column path."""
+    mini = MINI
     n = arr.size
     nminis = (n + mini - 1) // mini
     nfull = n // mini
@@ -527,11 +528,8 @@ def _dec_wsym(payload: memoryview, count: int,
     width = (hi - lo).bit_length()
     from .bytescodecs import zstd_decompress
 
-    try:
-        k = np.frombuffer(zstd_decompress(payload[_WSYM_HEAD.size:body],
-                                          count), dtype=np.uint8)
-    except OSError as e:  # pyarrow's corrupt-frame error
-        raise ValueError(f"width_sym: bad symbol stream ({e})") from e
+    k = np.frombuffer(zstd_decompress(payload[_WSYM_HEAD.size:body],
+                                      count), dtype=np.uint8)
     if k.size != count:
         raise ValueError("width_sym: symbol count mismatch")
     if int(k.max()) > width:

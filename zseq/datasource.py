@@ -74,6 +74,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from .session import quiet_worker_zip_finders
+
 _PUSHABLE = {
     EqualTo: "=",
     GreaterThan: ">",
@@ -160,6 +162,12 @@ def register(spark) -> None:
 
 
 class ZseqDataSource(DataSource):
+    """Spark calls ``schema``, ``reader`` and the writer factories in
+    reused Python planning workers, and the readers' ``read`` and the
+    writers' ``write`` in reused task workers. Each quiets the worker's
+    zip finders first (``session.quiet_worker_zip_finders``), so a
+    worker's later calls skip the per-call zip directory re-read."""
+
     #: read parallelism floor: the session's, set by :func:`register`
     parallelism: int | None = None
 
@@ -178,6 +186,7 @@ class ZseqDataSource(DataSource):
 
         from .encode import read_manifest
 
+        quiet_worker_zip_finders()
         m = read_manifest(self._path(), revision=_revision_opt(self.options))
         if m is None:
             # Streaming layout: schema from the first committed epoch.
@@ -207,18 +216,22 @@ class ZseqDataSource(DataSource):
         # the columns option) OR a user-supplied .schema(...) — the
         # reader treats a superset as read-side evolution (new nullable
         # columns filled with L6 defaults) and a subset as projection.
+        quiet_worker_zip_finders()
         return ZseqSourceReader(dict(self.options), schema,
                                 self.parallelism)
 
     def writer(self, schema: StructType,
                overwrite: bool) -> "ZseqSourceWriter":
+        quiet_worker_zip_finders()
         return ZseqSourceWriter(dict(self.options), schema, overwrite)
 
     def streamWriter(self, schema: StructType,
                      overwrite: bool) -> "ZseqStreamWriter":
+        quiet_worker_zip_finders()
         return ZseqStreamWriter(dict(self.options), schema)
 
     def streamReader(self, schema: StructType) -> "ZseqStreamReader":
+        quiet_worker_zip_finders()
         return ZseqStreamReader(dict(self.options), self.parallelism)
 
 
@@ -254,8 +267,7 @@ class ZseqSourceReader(DataSourceReader):
             raise FileNotFoundError(
                 f"{self._dir}/manifest.json missing — not a committed "
                 "zseq dataset")
-        from .decode import (TARGET_BYTES, manifest_schema, part_entries,
-                             read_plan)
+        from .decode import manifest_schema, part_entries, read_plan
 
         self._names = list(m["schema_names"])
         cols = options.get("columns")
@@ -270,13 +282,9 @@ class ZseqSourceReader(DataSourceReader):
             written, schema, cols if schema is None else None,
             allow_subset=True)
         self._parts = part_entries(self._dir, m)
-        # Task sizing: cut the part files into ~target-byte groups, at
+        # Task sizing: cut the part files into ~TARGET_BYTES groups, at
         # least the session's parallelism of them (decode.plan_groups).
-        self._target_bytes = int(
-            options.get("target_partition_bytes", TARGET_BYTES))
-        # an explicit .option("min_partitions", N) wins
-        self._min_tasks = (int(options.get("min_partitions", 0))
-                           or parallelism or _parallelism())
+        self._min_tasks = parallelism or _parallelism()
         # Zone maps exist for int-kind chunks (ints, timestamps, dates in
         # their storage domain) and for binary/string chunks (truncated
         # byte bounds) — those columns accept pushdown.
@@ -403,12 +411,12 @@ class ZseqSourceReader(DataSourceReader):
         from .decode import plan_groups
 
         return [ZseqPartGroup(g) for g in plan_groups(
-            self._parts, self._predicate, self._min_tasks,
-            self._target_bytes)]
+            self._parts, self._predicate, self._min_tasks)]
 
     def read(self, partition: ZseqPartGroup):
         from .decode import read_group
 
+        quiet_worker_zip_finders()
         yield from read_group(partition.files, self._names, self._columns,
                               self._predicate or None, self._emit)
 
@@ -433,6 +441,7 @@ class ZseqSourceWriter(DataSourceArrowWriter):
 
         from .encode import encode_batches
 
+        quiet_worker_zip_finders()
         c = self._commit
         pid = TaskContext.get().partitionId() + c.part_base
         return ZseqCommit(encode_batches(
@@ -490,6 +499,7 @@ class ZseqStreamWriter(DataSourceStreamArrowWriter):
 
         from .encode import encode_batches
 
+        quiet_worker_zip_finders()
         # Task attempt id is unique across retries within the query run —
         # the staged name can never collide; commit renumbers.
         aid = int(TaskContext.get().taskAttemptId())
@@ -586,6 +596,7 @@ class ZseqStreamReader(DataSourceStreamReader):
     def read(self, partition: ZseqPartGroup):
         from .decode import read_group
 
+        quiet_worker_zip_finders()
         yield from read_group(partition.files, self._names, self._columns,
                               None, None)
 

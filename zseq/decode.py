@@ -231,8 +231,8 @@ def part_entries(d: str, m: dict) -> list[tuple]:
     return out
 
 
-def plan_groups(entries: list[tuple], predicate, min_tasks: int,
-                target_bytes: int = TARGET_BYTES) -> list[tuple]:
+def plan_groups(entries: list[tuple], predicate,
+                min_tasks: int) -> list[tuple]:
     """The driver-side read plan: ``part_entries`` -> file pruning ->
     groups of (path, crc32) that run in one wave.
 
@@ -240,7 +240,7 @@ def plan_groups(entries: list[tuple], predicate, min_tasks: int,
     once per manifest through ``zseqfile.prune_parts``; a pruned file
     never reaches a task. It is a conservative superset: callers still
     filter rows exactly. The kept files, in order, are cut into exactly
-    min(files, max(``min_tasks``, total / ``target_bytes``)) contiguous
+    min(files, max(``min_tasks``, total / ``TARGET_BYTES``)) contiguous
     groups at the byte quantiles of their prefix sums, so a small read
     fans out to every core and near-equal files never spill into an
     extra wave; with no size information at all every file weighs the
@@ -258,7 +258,7 @@ def plan_groups(entries: list[tuple], predicate, min_tasks: int,
     n = len(entries)
     sizes = [e[2] for e in entries]
     total = sum(sizes)
-    k = min(n, max(min_tasks, 1, -(-total // max(1, target_bytes))))
+    k = min(n, max(min_tasks, 1, -(-total // max(1, TARGET_BYTES))))
     if total == 0:
         sizes, total = [1] * n, n
     prefix = list(itertools.accumulate(sizes, initial=0))

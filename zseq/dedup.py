@@ -66,27 +66,33 @@ def _shingle_table(df: DataFrame) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(df: DataFrame, min_num: int = 1, min_den: int = 5,
-                        max_doc_freq: int | None = None) -> DataFrame:
+#: The hot-shingle guard of ``ngram_jaccard_pairs``: None keeps the exact,
+#: oracle-checked kernel.
+NGRAM_MAX_DOC_FREQ: int | None = None
+
+
+def ngram_jaccard_pairs(df: DataFrame, min_num: int = 1,
+                        min_den: int = 5) -> DataFrame:
     """All pairs with Jaccard >= min_num/min_den over distinct word
     SHINGLE_K-grams, computed exactly. Integer arithmetic only (cross-
     multiplied threshold), so the DuckDB oracle matches bit-for-bit.
 
-    ``max_doc_freq`` is the hot-shingle guard for the quadratic self-
-    join: a shingle present in n docs contributes n^2/2 join rows, and
-    boilerplate shingles (headers, license text) appear in millions of
-    docs. When set, shingles with document frequency > max_doc_freq are
+    ``NGRAM_MAX_DOC_FREQ`` is the hot-shingle guard for the quadratic
+    self-join: a shingle present in n docs contributes n^2/2 join rows,
+    and boilerplate shingles (headers, license text) appear in millions
+    of docs. When set, shingles with document frequency above it are
     dropped BEFORE the join and Jaccard is computed over each document's
     *rare-shingle projection* (n_sh counts kept shingles, so the metric
     stays internally consistent). This is the standard df-capping
-    approximation; leave None for the exact oracle-checked kernel."""
-    if max_doc_freq is not None:
+    approximation; None keeps the exact oracle-checked kernel."""
+    if NGRAM_MAX_DOC_FREQ is not None:
         sh_s, _ = shingle_exprs()
         ex = (df.selectExpr("cast(doc_id as bigint) as doc_id",
                             f"array_distinct({sh_s}) as sh")
               .selectExpr("doc_id", "explode(sh) as shingle"))
         keep = (ex.groupBy("shingle").count()
-                .filter(F.col("count") <= max_doc_freq).select("shingle"))
+                .filter(F.col("count") <= NGRAM_MAX_DOC_FREQ)
+                .select("shingle"))
         kept = ex.join(keep, on="shingle", how="left_semi")
         n = kept.groupBy("doc_id").agg(
             F.count("*").cast("int").alias("n_sh"))
@@ -149,6 +155,10 @@ HASH_FAMILIES = ("xxhash64", "md5")
 MINHASH_HASHES = 64
 MINHASH_BANDS = 16
 
+#: The hot-bucket guard of ``lsh_candidate_pairs``: None keeps every
+#: bucket.
+LSH_MAX_BUCKET: int | None = None
+
 
 def _check_family(hash_family: str) -> None:
     if hash_family not in HASH_FAMILIES:
@@ -188,15 +198,15 @@ def minhash_signatures(df: DataFrame,
     )
 
 
-def lsh_candidate_pairs(sigs: DataFrame, max_bucket: int | None = None,
+def lsh_candidate_pairs(sigs: DataFrame,
                         hash_family: str = "xxhash64") -> DataFrame:
     """Band the signature; docs sharing any band bucket are candidates.
     Shuffle key = (band, hash(band slice)): the only join at corpus scale.
 
-    ``max_bucket`` is the hot-bucket guard for that join: a bucket of n
-    docs yields n^2/2 candidate pairs, and real corpora have giant
+    ``LSH_MAX_BUCKET`` is the hot-bucket guard for that join: a bucket
+    of n docs yields n^2/2 candidate pairs, and real corpora have giant
     boilerplate cliques, so at 10^12 rows one hot bucket can dominate
-    the whole job. Buckets larger than max_bucket are dropped BEFORE the
+    the whole job. Larger buckets are dropped BEFORE the
     self-join (one map-side-combinable count + semi-join). The trade is
     explicit and standard: members of a dropped bucket are near-exact
     duplicate cliques, which `exact_groups` already collapses for a
@@ -226,9 +236,9 @@ def lsh_candidate_pairs(sigs: DataFrame, max_bucket: int | None = None,
             for b in range(MINHASH_BANDS)
         ])).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bucket")
-    if max_bucket is not None:
+    if LSH_MAX_BUCKET is not None:
         keep = (banded.groupBy("band", "bucket").count()
-                .filter(F.col("count") <= max_bucket)
+                .filter(F.col("count") <= LSH_MAX_BUCKET)
                 .select("band", "bucket"))
         banded = banded.join(keep, on=["band", "bucket"], how="left_semi")
     a, b = banded.alias("a"), banded.alias("b")
@@ -243,7 +253,6 @@ def lsh_candidate_pairs(sigs: DataFrame, max_bucket: int | None = None,
 
 
 def minhash_dedup(df: DataFrame, min_num: int = 1, min_den: int = 5,
-                  max_bucket: int | None = None,
                   hash_family: str = "xxhash64") -> DataFrame:
     """Candidates from LSH, verified by exact Jaccard — and ONLY candidate
     pairs pay verification. The corpus-scale plan is: one banded equi-join
@@ -260,8 +269,7 @@ def minhash_dedup(df: DataFrame, min_num: int = 1, min_den: int = 5,
     # it compute exactly once (its size is the LSH output: bounded by
     # bucket occupancy, tiny next to the corpus).
     cand = lsh_candidate_pairs(
-        sigs, max_bucket=max_bucket,
-        hash_family=hash_family).localCheckpoint(False)
+        sigs, hash_family=hash_family).localCheckpoint(False)
     # Shingle arrays only for docs that appear in some candidate pair.
     ids = (cand.selectExpr("doc_a as doc_id")
            .union(cand.selectExpr("doc_b as doc_id")).distinct())
@@ -401,21 +409,17 @@ def _block_bounds(n_blocks: int) -> list[tuple[int, int]]:
 
 
 def simhash_near_pairs(sh: DataFrame, max_hamming: int = 7,
-                       blocks: int | None = None,
                        allow_wide_buckets: bool = False) -> DataFrame:
     """Candidate generation by block buckets over the 64-bit signature,
     exact popcount verification.
 
     Recall contract (pigeonhole): a pair at Hamming distance d is
-    GUARANTEED to share a block iff d < blocks. The default therefore
-    uses ``blocks = max_hamming + 1``, making recall exact for the
-    requested radius. The trade at corpus scale: block width = 64/blocks
-    bits, so bucket cardinality is 2^(64/blocks) — wider radii mean
-    coarser buckets and more candidates to verify. Callers chasing
-    10^12-row scale should keep max_hamming <= 3 (16-bit blocks, 65536
-    buckets) or pass an explicit smaller ``blocks`` and accept the
-    documented recall loss (pairs with > blocks-1 differing bits spread
-    across all blocks are missed).
+    GUARANTEED to share a block iff d < blocks, so the signature is cut
+    into ``max_hamming + 1`` blocks: recall is exact for the requested
+    radius. The trade at corpus scale: block width = 64/blocks bits, so
+    bucket cardinality is 2^(64/blocks) — wider radii mean coarser
+    buckets and more candidates to verify. Callers chasing 10^12-row
+    scale should keep max_hamming <= 3 (16-bit blocks, 65536 buckets).
 
     Corpus-scale guard: block width < 8 bits means <= 256 distinct
     buckets per block — at large corpus sizes the banded self-join
@@ -424,21 +428,21 @@ def simhash_near_pairs(sh: DataFrame, max_hamming: int = 7,
     (legitimate on small corpora, e.g. a few thousand docs). The default
     radius is therefore 7 (8 blocks x 8-bit buckets — the widest radius
     whose exact-recall banding still clears the guard)."""
-    n_blocks = (max_hamming + 1) if blocks is None else blocks
+    n_blocks = max_hamming + 1
     if not 1 <= n_blocks <= 64:
-        raise ValueError(f"simhash blocks must be in [1, 64]: {n_blocks}")
+        raise ValueError(
+            f"simhash max_hamming must be in [0, 63]: {max_hamming}")
     if 64 // n_blocks < 8 and not allow_wide_buckets:
         raise ValueError(
             f"simhash: {n_blocks} blocks -> {64 // n_blocks}-bit buckets "
             "— at corpus scale the banded join degenerates to "
-            "near-all-pairs. Reduce max_hamming (<= 7), pass explicit "
-            "blocks <= 8, or opt in with allow_wide_buckets=True for "
-            "small corpora.")
+            "near-all-pairs. Reduce max_hamming (<= 7), or opt in with "
+            "allow_wide_buckets=True for small corpora.")
     bounds = _block_bounds(n_blocks)
 
     def block_val(off: int, w: int):
         v = F.shiftright("simhash", off)
-        # w == 64 only for blocks=1: the mask (1<<64)-1 overflows a Java
+        # w == 64 only for max_hamming=0: the mask (1<<64)-1 overflows a Java
         # long and the full signature needs no masking anyway.
         return v if w >= 64 else v.bitwiseAND(F.lit((1 << w) - 1))
 
@@ -579,8 +583,7 @@ def simhash_planted_oracle_sql() -> str:
 CC_MAX_ITER = 25
 
 
-def connected_components(pairs: DataFrame,
-                         max_iter: int = CC_MAX_ITER) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(doc_a, doc_b) near-duplicate pairs -> (doc_id, component), where
     component is the SMALLEST doc id reachable through the pair graph —
     the canonical keeper of each duplicate cluster.
@@ -589,10 +592,11 @@ def connected_components(pairs: DataFrame,
     min(own label, neighbors' labels) — one join + one aggregation per
     round, converging in O(component diameter) rounds. Duplicate
     clusters are near-cliques by construction (members share the keeper
-    as a pair partner), so real corpora converge in 2-3 rounds; max_iter
-    is a guard against pathological chains, and non-convergence RAISES
-    rather than silently returning split components. Each round is
-    localCheckpoint'd: the plan stays O(1) deep instead of doubling per
+    as a pair partner), so real corpora converge in 2-3 rounds;
+    CC_MAX_ITER is a guard against pathological chains, and
+    non-convergence RAISES rather than silently returning split
+    components. Each round is localCheckpoint'd: the plan stays O(1)
+    deep instead of doubling per
     iteration (lineage blowup is the classic iterative-Spark trap), and
     the monotone sum(label) doubles as the exact convergence test
     (labels only ever decrease, so an unchanged sum == a fixpoint)."""
@@ -602,7 +606,7 @@ def connected_components(pairs: DataFrame,
     labels = und.selectExpr("a as doc_id").distinct() \
         .withColumn("component", F.col("doc_id")) \
         .localCheckpoint(eager=True)
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         nbr_min = (
             und.join(labels, und["a"] == labels["doc_id"])
             .groupBy("b").agg(F.min("component").alias("nc"))
@@ -624,8 +628,8 @@ def connected_components(pairs: DataFrame,
         if changed == 0:
             return labels
     raise RuntimeError(
-        f"connected_components: no fixpoint after {max_iter} rounds — "
-        "component diameter exceeds max_iter; raise it")
+        f"connected_components: no fixpoint after {CC_MAX_ITER} rounds "
+        "— component diameter exceeds CC_MAX_ITER; raise it")
 
 
 #: Broadcast the anti-join drop-set only below this many rows. A drop-set
@@ -636,23 +640,22 @@ def connected_components(pairs: DataFrame,
 DEDUP_BROADCAST_MAX_ROWS = 4_000_000
 
 
-def dedup_corpus(df: DataFrame, pairs: DataFrame,
-                 broadcast_max_rows: int = DEDUP_BROADCAST_MAX_ROWS
-                 ) -> DataFrame:
+def dedup_corpus(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Drop near-duplicates: every pair-graph component keeps only its
     smallest id; rows in no pair pass through untouched.
 
     The drop-set's size is measured (a cheap count — the component
     labels are already localCheckpoint'd) and the anti-join strategy is
-    chosen from it: a provably-small drop-set (<= ``broadcast_max_rows``)
-    is BROADCAST so the corpus is never shuffled; a corpus-scale
-    drop-set (real near-dup rates run 30-80% of a web crawl, i.e.
+    chosen from it: a provably-small drop-set (<=
+    ``DEDUP_BROADCAST_MAX_ROWS``) is BROADCAST so the corpus is never
+    shuffled; a corpus-scale drop-set (real near-dup rates run 30-80%
+    of a web crawl, i.e.
     hundreds of billions of ids at 10^12 rows — broadcasting that OOMs
     every executor) takes a plain shuffled left_anti and lets AQE pick
     the physical join. Components come from connected_components with
     its CC_MAX_ITER round guard."""
     cc = connected_components(pairs)
     drop = cc.filter("doc_id != component").select("doc_id")
-    if drop.count() <= broadcast_max_rows:
+    if drop.count() <= DEDUP_BROADCAST_MAX_ROWS:
         drop = F.broadcast(drop)
     return df.join(drop, on="doc_id", how="left_anti")

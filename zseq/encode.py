@@ -12,8 +12,9 @@ zbra). Here the plan is declarative up to the codec boundary:
 
 Every writer (``encode``, ``encode_parquet``, the DataSource batch and
 stream writers, ``compact_parts``) encodes its parts through one kernel,
-``_encode_table_to_file``; ``encode_parquet``, ``compact_parts`` and
-``decode`` launch their tasks through ``session.run_tasks``.
+``_encode_table_to_file``; ``encode_parquet`` and ``decode`` launch
+their tasks through ``session.run_tasks``, and ``compact_parts`` runs
+on the driver.
 
 Scale notes (design target: 10^12 sequences, 1000 executors):
   - The default mode, preserve, encodes Spark's byte-uniform input
@@ -533,8 +534,7 @@ def _encode_partition(out_dir: str, schema: pa.Schema, cluster: bool,
     return fn
 
 
-def _encode_files(out_dir: str, schema: pa.Schema,
-                  columns: list[str] | None, zstd_level: int | None,
+def _encode_files(out_dir: str, schema: pa.Schema, zstd_level: int | None,
                   token: str):
     """Task body of the parquet fast path (manifest mode ``files``), one
     (part_id, parquet path) item per task — a deterministic,
@@ -552,7 +552,7 @@ def _encode_files(out_dir: str, schema: pa.Schema,
         pa.set_io_thread_count(2)
         part_id, path = item
         t0 = time.time()
-        tbl = pq.read_table(path, columns=columns, use_threads=False)
+        tbl = pq.read_table(path, use_threads=False)
         if schema.names != tbl.schema.names:
             tbl = tbl.select(schema.names)
         tbl = tbl.cast(schema)
@@ -739,12 +739,7 @@ def check_append_compat(prev: dict, arrow_schema: pa.Schema,
             "manifest's — appended parts must match the dataset schema "
             "exactly (schema evolution is a read-side feature; writes "
             "never mix schemas)")
-    prev_lvl = prev.get("zstd_level", 3)
-    if (zstd_level or 3) != prev_lvl:
-        raise ValueError(
-            f"append: zstd_level {zstd_level or 3} differs from the "
-            f"committed manifest's {prev_lvl} — the manifest records one "
-            f"level for all parts; pass zstd_level={prev_lvl}")
+    _check_zstd_level(prev, zstd_level, "append")
     if (reversed_cols or []) != prev.get("reversed_cols", []):
         raise ValueError(
             "append: reversed_cols differ from the committed manifest's "
@@ -777,16 +772,13 @@ def append_commit(c: Commit, new_parts: list[dict],
                "appends": prev.get("appends", 0) + 1}))
 
 
-def _merge_group(task: tuple) -> dict:
+def _merge_group(out_dir: str, files: list[tuple], schema: pa.Schema,
+                 zstd_level: int, part_id: int, fname: str) -> dict:
     """One compaction unit: read a group of committed small parts
-    (crc-gated), concatenate, re-encode as ONE staged part file. Pure
-    Python so it runs identically inside a Spark task (compact_parts
-    with a session) or on the driver — the dataset's rows never cross
-    the JVM boundary either way; only this returned metrics dict does."""
-    out_dir, files, schema_hex, zstd_level, part_id, fname = task
+    ((file, crc32) pairs, crc-gated), concatenate, re-encode as ONE
+    staged part file named ``fname``; returns its metrics row."""
     from .zseqfile import ZseqReader, check_crc
 
-    schema = pa.ipc.read_schema(pa.py_buffer(bytes.fromhex(schema_hex)))
     tables = []
     for rel, crc in files:
         path = os.path.join(out_dir, rel)
@@ -800,7 +792,7 @@ def _merge_group(task: tuple) -> dict:
                                  fname=fname)
 
 
-def compact_parts(out_dir: str, spark=None, *,
+def compact_parts(out_dir: str, *,
                   target_bytes: int = 128 << 20,
                   small_bytes: int | None = None,
                   dry_run: bool = False) -> dict:
@@ -814,13 +806,12 @@ def compact_parts(out_dir: str, spark=None, *,
 
     Parts with encoded size under ``small_bytes`` (default
     ``target_bytes // 2``) are greedily grouped in manifest order up to
-    ``target_bytes``; groups of one are left alone (no gain). With a
-    SparkSession each group is an independent task (rows stay in Python
-    workers; re-selection of codecs over the bigger concatenated chunks
-    typically also shrinks the bytes); without one, groups run serially
-    on the driver — the CLI convenience path. The merged part's zone
-    envelope is computed fresh by the writer, so driver-side file
-    pruning keeps working.
+    ``target_bytes``; groups of one are left alone (no gain). The groups
+    are merged one after another on the driver, no Spark session needed
+    (re-selection of codecs over the bigger concatenated chunks
+    typically also shrinks the bytes). The merged part's zone envelope
+    is computed fresh by the writer, so driver-side file pruning keeps
+    working.
 
     Commit = the manifest (untouched parts in order, then the merged
     ones) published through :meth:`Commit.finish`, like an append: a
@@ -877,31 +868,18 @@ def compact_parts(out_dir: str, spark=None, *,
             + len(groups)
         return summary
     lvl = int(prev.get("zstd_level", 3) or 3)
-    tasks = [
-        (out_dir, [(p["file"], p.get("crc32")) for p in g],
-         prev["schema"], lvl, c.part_base + i,
-         part_name(c.token, c.part_base + i))
+    schema = pa.ipc.read_schema(pa.py_buffer(bytes.fromhex(prev["schema"])))
+    merged = [
+        _merge_group(out_dir, [(p["file"], p.get("crc32")) for p in g],
+                     schema, lvl, c.part_base + i,
+                     part_name(c.token, c.part_base + i))
         for i, g in enumerate(groups)
     ]
-    if spark is not None:
-        from .session import run_tasks, ship_package
-
-        def merge(task):
-            yield pa.RecordBatch.from_pylist([_merge_group(task)],
-                                             schema=_METRICS_PA)
-
-        ship_package(spark)
-        merged = [r.asDict() for r in run_tasks(
-            spark, tasks, merge, METRICS_SCHEMA).collect()]
-    else:
-        merged = [_merge_group(t) for t in tasks]
     replaced = {p["file"] for g in groups for p in g}
     new_parts = [p for p in parts if p["file"] not in replaced] + merged
     extra = {k: prev[k] for k in ("input_files", "appends") if k in prev}
     manifest = c.finish(build_manifest(
-        mode="compact", partitions=len(new_parts),
-        arrow_schema=pa.ipc.read_schema(
-            pa.py_buffer(bytes.fromhex(prev["schema"]))),
+        mode="compact", partitions=len(new_parts), arrow_schema=schema,
         parts=new_parts,
         partition_col=prev.get("partition_col"),
         zstd_level=prev.get("zstd_level"),
@@ -919,19 +897,20 @@ def compact_parts(out_dir: str, spark=None, *,
     return summary
 
 
-def _check_resume_zstd(prev: dict, zstd_level: int | None) -> None:
-    """Resume reuses parts encoded at the PREVIOUS run's zstd level; a
-    different level this run would make the rewritten manifest's single
-    recorded zstd_level wrong for the reused parts (decode is unaffected
-    — zstd frames self-describe — but lineage must not lie). Refuse."""
-    prev_lvl = int(prev.get("zstd_level", 3) or 3)
-    this_lvl = int(zstd_level if zstd_level is not None else 3)
+def _check_zstd_level(prev: dict, zstd_level: int | None,
+                      verb: str) -> None:
+    """The manifest records ONE zstd level for all its parts, so a job
+    that keeps the committed parts (``verb``: append, resume) must
+    encode at the committed level (default 3): otherwise the recorded
+    level would be wrong for some parts. Decode is unaffected — zstd
+    frames self-describe — but lineage must not lie. Refuse."""
+    prev_lvl = int(prev.get("zstd_level") or 3)
+    this_lvl = int(zstd_level or 3)
     if prev_lvl != this_lvl:
         raise ValueError(
-            f"resume: zstd_level {this_lvl} differs from the committed "
-            f"manifest's {prev_lvl} — reused parts would carry the wrong "
-            "lineage. Re-run with the original level, or without resume "
-            "to re-encode everything.")
+            f"{verb}: zstd_level {this_lvl} differs from the committed "
+            f"manifest's {prev_lvl} — the manifest records one level for "
+            f"all parts; pass zstd_level={prev_lvl}")
 
 
 def _salted_repartition(df: DataFrame, P: int, key: str) -> DataFrame:
@@ -1027,7 +1006,6 @@ def _salted_repartition(df: DataFrame, P: int, key: str) -> DataFrame:
 
 
 def encode_parquet(spark, input_dir: str, out_dir: str, *,
-                   columns: list[str] | None = None,
                    resume: bool = False,
                    append: bool = False,
                    zstd_level: int | None = None) -> EncodeResult:
@@ -1066,16 +1044,6 @@ def encode_parquet(spark, input_dir: str, out_dir: str, *,
     validate_zstd_level(zstd_level)
     arrow_schema = pq.read_schema(files[0])
     want = {f.name: f.type for f in arrow_schema}
-    if columns:
-        unknown = set(columns) - set(want)
-        if unknown:
-            # validate the projection against files[0] FIRST — otherwise
-            # the drift sweep below blames other files for a column that
-            # exists nowhere (or KeyErrors on want[c])
-            raise KeyError(
-                f"encode_parquet: columns {sorted(unknown)} not in "
-                f"{files[0]}'s schema {sorted(want)}")
-        arrow_schema = pa.schema([arrow_schema.field(c) for c in columns])
     c = begin(out_dir, append=append, resume=resume,
               arrow_schema=arrow_schema, zstd_level=zstd_level)
     if resume and c.prev is not None and c.prev.get("input_files") != files:
@@ -1091,7 +1059,7 @@ def encode_parquet(spark, input_dir: str, out_dir: str, *,
     # column or a cast-incompatible type is refused. Files already
     # committed by a resume manifest were validated when first encoded
     # (input_files is pinned) and are skipped.
-    required = set(columns) if columns else set(want)
+    required = set(want)
     to_check = [f for i, f in enumerate(files)
                 if i not in c.done_parts and f != files[0]]
     if to_check:
@@ -1120,7 +1088,7 @@ def encode_parquet(spark, input_dir: str, out_dir: str, *,
 
     parts = [r.asDict() for r in run_tasks(
         spark, tasks,
-        _encode_files(out_dir, arrow_schema, columns, zstd_level, c.token),
+        _encode_files(out_dir, arrow_schema, zstd_level, c.token),
         METRICS_SCHEMA).collect()] if tasks else []
     parts.extend(c.done_parts.values())
     parts.sort(key=lambda p: p["part_id"])
@@ -1574,7 +1542,7 @@ def begin(out_dir: str, *, append: bool = False, resume: bool = False,
                 "its part ids no longer mirror the input (hash buckets, "
                 "input_files); append new data with append=True or "
                 "re-encode fresh")
-        _check_resume_zstd(prev, zstd_level)
+        _check_zstd_level(prev, zstd_level, "resume")
         done = {p["part_id"]: p for p in prev.get("parts", [])
                 if os.path.exists(os.path.join(out_dir, p["file"]))}
         if done and prev.get("schema") != \

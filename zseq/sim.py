@@ -39,9 +39,11 @@ from pyspark.sql import functions as F
 QUANT = 1000
 SIM_BITS = 8
 
-#: bits_for's target rows per LSH bucket and its fewest hyperplanes.
+#: bits_for's target rows per LSH bucket and its fewest and most
+#: hyperplanes.
 LSH_OCCUPANCY = 64
 LSH_MIN_BITS = 3
+LSH_MAX_BITS = 30
 
 #: Query count (vec_id < N_QUERIES) and result depth of the top-k
 #: searches; their oracle twins read the same two constants.
@@ -55,9 +57,10 @@ KMEANS_ITERS = 5
 NEAR_DUP_MIN_DOT_Q = 400_000
 
 
-def bits_for(n_rows: int, hi: int = 30) -> int:
+def bits_for(n_rows: int) -> int:
     """Hyperplane count sized from the corpus: 2^bits buckets targeting
-    ~LSH_OCCUPANCY rows per bucket, clamped to [LSH_MIN_BITS, hi]. Unlike
+    ~LSH_OCCUPANCY rows per bucket, clamped to [LSH_MIN_BITS,
+    LSH_MAX_BITS]. Unlike
     the fixed SIM_BITS constant it grows with the corpus: at 10^12 rows
     it yields 34->30 bits (capped), keeping the bucket join's per-key
     fan-in bounded instead of degenerating to 256 global buckets."""
@@ -67,7 +70,7 @@ def bits_for(n_rows: int, hi: int = 30) -> int:
     if n <= LSH_OCCUPANCY:
         return LSH_MIN_BITS
     return max(LSH_MIN_BITS,
-               min(hi, math.ceil(math.log2(n / LSH_OCCUPANCY))))
+               min(LSH_MAX_BITS, math.ceil(math.log2(n / LSH_OCCUPANCY))))
 
 
 def _qdot(a: str, b: str) -> str:
@@ -88,13 +91,13 @@ def _qdot_duck(a: str, b: str) -> str:
     )
 
 
-def brute_force_topk(df: DataFrame, n_queries: int = N_QUERIES,
-                     topk: int = TOPK) -> DataFrame:
-    """Top-k neighbors (excluding self) for the first ``n_queries`` ids by
-    quantized dot product; ties broken by neighbor id (deterministic)."""
+def brute_force_topk(df: DataFrame) -> DataFrame:
+    """Top-``TOPK`` neighbors (excluding self) for the first
+    ``N_QUERIES`` ids by quantized dot product; ties broken by neighbor
+    id (deterministic)."""
     from pyspark.sql import Window
 
-    q = df.filter(F.col("vec_id") < n_queries).select(
+    q = df.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
     joined = df.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv")
@@ -105,7 +108,7 @@ def brute_force_topk(df: DataFrame, n_queries: int = N_QUERIES,
         F.desc("score"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
+        .filter(F.col("rank") <= TOPK)
         .selectExpr("cast(query_id as bigint) as query_id",
                     "cast(neighbor_id as bigint) as neighbor_id",
                     "cast(score as bigint) as score",
@@ -204,8 +207,7 @@ def _probe_masks(bits: int, probes: int) -> list[int]:
     return masks
 
 
-def lsh_topk(df: DataFrame, dim: int, n_queries: int = N_QUERIES,
-             topk: int = TOPK, bits: int | None = None,
+def lsh_topk(df: DataFrame, dim: int, bits: int | None = None,
              probes: int = 1) -> DataFrame:
     """ANN: rank by exact quantized dot product within the query's LSH
     bucket plus (probes >= 1) all Hamming-1 neighbor buckets. bits=None
@@ -221,7 +223,7 @@ def lsh_topk(df: DataFrame, dim: int, n_queries: int = N_QUERIES,
         f"{bucket_expr(dim, bits)} as bucket")
     probe = ", ".join(
         f"cast(bucket ^ {m} as bigint)" for m in _probe_masks(bits, probes))
-    q = b.filter(F.col("vec_id") < n_queries).selectExpr(
+    q = b.filter(F.col("vec_id") < N_QUERIES).selectExpr(
         "vec_id as query_id", "embedding as qv",
         f"explode(array({probe})) as bucket")
     joined = b.select(
@@ -235,7 +237,7 @@ def lsh_topk(df: DataFrame, dim: int, n_queries: int = N_QUERIES,
         F.desc("score"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
+        .filter(F.col("rank") <= TOPK)
         .selectExpr("cast(query_id as bigint) as query_id",
                     "cast(neighbor_id as bigint) as neighbor_id",
                     "cast(score as bigint) as score",
@@ -305,11 +307,10 @@ def _ivf_centroids(df: DataFrame, c_mod: int,
 
 
 def _kmeans_refine(base: DataFrame, cents: list[tuple[int, list[int]]],
-                   dim: int, iters: int = KMEANS_ITERS,
-                   inline_cap: int = IVF_MAX_INLINE_TERMS
+                   dim: int, inline_cap: int = IVF_MAX_INLINE_TERMS
                    ) -> list[tuple[int, list[int]]]:
     """Deterministic integer Lloyd refinement of the modular init:
-    ``iters`` fixed rounds of (assign every row to its argmax-dot cell,
+    ``KMEANS_ITERS`` fixed rounds of (assign every row to its argmax-dot cell,
     ties to the smaller cid) -> (new centroid = floor of the component-
     wise integer mean of its members' QUANT-quantized vectors). All
     arithmetic is int64 — sums are associative/commutative EXACTLY, so
@@ -328,7 +329,7 @@ def _kmeans_refine(base: DataFrame, cents: list[tuple[int, list[int]]],
         f" as q{i}"
         for i in range(dim)
     ]
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         assign1 = None
         if len(cents) * dim <= inline_cap:
             cells = _ivf_cell_structs(cents)
@@ -477,8 +478,8 @@ def _ivf_cell_structs(cents: list[tuple[int, list[int]]]) -> str:
     return f"array({structs})"
 
 
-def ivf_topk(df: DataFrame, dim: int, n_queries: int = N_QUERIES,
-             topk: int = TOPK, c_mod: int | None = 50, nprobe: int = 2,
+def ivf_topk(df: DataFrame, dim: int, c_mod: int | None = 50,
+             nprobe: int = 2,
              max_inline_terms: int | None = None,
              quantizer: str = "modular") -> DataFrame:
     """IVF ANN: every corpus row is assigned to its nearest centroid's
@@ -496,8 +497,8 @@ def ivf_topk(df: DataFrame, dim: int, n_queries: int = N_QUERIES,
     that — production dims 768-1536 would otherwise blow Catalyst up on
     a multi-MB expression — the matrix rides an explicit broadcast and
     assignment is an Arrow-batched numpy matmul+argmax (_ivf_probe_udfs).
-    Only the n_queries QUERY rows pay the top-nprobe sort. The probe
-    join broadcasts (n_queries x nprobe) rows; one shuffle for the
+    Only the N_QUERIES QUERY rows pay the top-nprobe sort. The probe
+    join broadcasts (N_QUERIES x nprobe) rows; one shuffle for the
     per-query rank window. Probing all cells (nprobe >= centroid count)
     degenerates to exact brute force — the recall knob is explicit.
 
@@ -547,7 +548,7 @@ def ivf_topk(df: DataFrame, dim: int, n_queries: int = N_QUERIES,
             "case when embedding is null then null "
             f"else -array_max({cells}).negc end as cid")
         q = (
-            base.filter(f"vec_id < {n_queries}")
+            base.filter(f"vec_id < {N_QUERIES}")
             .selectExpr(
                 "vec_id as query_id", "embedding as qv",
                 "explode(case when embedding is null then null else "
@@ -559,7 +560,7 @@ def ivf_topk(df: DataFrame, dim: int, n_queries: int = N_QUERIES,
         assigned = base.withColumn(
             "cid", F.element_at(assign1(F.col("embedding")), 1))
         q = (
-            base.filter(f"vec_id < {n_queries}")
+            base.filter(f"vec_id < {N_QUERIES}")
             .select(F.col("vec_id").alias("query_id"),
                     F.col("embedding").alias("qv"),
                     F.explode(proben(F.col("embedding"))).alias("cid"))
@@ -574,7 +575,7 @@ def ivf_topk(df: DataFrame, dim: int, n_queries: int = N_QUERIES,
         F.desc("score"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
+        .filter(F.col("rank") <= TOPK)
         .selectExpr("cast(query_id as bigint) as query_id",
                     "cast(neighbor_id as bigint) as neighbor_id",
                     "cast(score as bigint) as score",

@@ -46,24 +46,16 @@ def committed_epochs(out_dir: str) -> list[str]:
     return out
 
 
-def decode_stream(spark: SparkSession, out_dir: str,
-                  columns: list[str] | None = None,
-                  predicate: list[tuple] | None = None,
-                  schema=None) -> DataFrame:
+def decode_stream(spark: SparkSession, out_dir: str) -> DataFrame:
     """All committed epochs as one DataFrame, through the read path of
     :func:`zseq.decode.decode`: the driver reads every epoch manifest
-    once, prunes each epoch's files against ``predicate`` and packs the
-    surviving (path, crc32) pairs of all epochs into task groups; the
-    plan is ONE ``spark.range`` leaf plus one mapInArrow regardless of
-    the epoch count (a per-epoch ``decode().unionByName()`` chain costs
-    O(epochs) plan nodes — at thousands of epochs the driver chokes
-    before the cluster does). Every file is checked against its own
-    epoch's crc. The schema must be identical across epochs.
-
-    ``schema`` -> the same read-side schema EVOLUTION as
-    :func:`zseq.decode.decode`: a superset reader schema whose new
-    nullable columns are L6-default-filled — a long-lived stream whose
-    consumers grew columns keeps reading every epoch ever committed."""
+    once and packs the (path, crc32) pairs of all epochs into task
+    groups; the plan is ONE ``spark.range`` leaf plus one mapInArrow
+    regardless of the epoch count (a per-epoch
+    ``decode().unionByName()`` chain costs O(epochs) plan nodes — at
+    thousands of epochs the driver chokes before the cluster does).
+    Every file is checked against its own epoch's crc. The schema must
+    be identical across epochs."""
     from . import decode as zdec
     from .session import ship_package
 
@@ -82,5 +74,4 @@ def decode_stream(spark: SparkSession, out_dir: str,
                 "was restarted with a different schema; compact or read "
                 "the epoch ranges separately")
         entries += zdec.part_entries(d, m)
-    return zdec.read_parts(spark, entries, zdec.manifest_schema(m0),
-                           columns, predicate, schema)
+    return zdec.read_parts(spark, entries, zdec.manifest_schema(m0))

@@ -266,12 +266,9 @@ def tokens_duckdb_sql(table: str = "documents") -> str:
     )
 
 
-def tokens_df_range(spark, n_docs: int, partitions: int | None = None,
-                    start: int = 0):
-    """Self-contained Spark tokens table over spark.range (bench scale).
-    ``start`` offsets the id range — disjoint slices of the same fixture
-    for append/merge tests."""
-    _check_id_range(start, n_docs)
-    rng = spark.range(start, start + n_docs, 1, partitions) if partitions \
-        else spark.range(start, start + n_docs)
+def tokens_df_range(spark, n_docs: int, partitions: int | None = None):
+    """Self-contained Spark tokens table over spark.range (bench scale)."""
+    _check_id_range(0, n_docs)
+    rng = spark.range(0, n_docs, 1, partitions) if partitions \
+        else spark.range(0, n_docs)
     return _tokens_from_ids(rng)

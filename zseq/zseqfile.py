@@ -157,19 +157,12 @@ class ZseqWriter:
         self._write(struct.pack("<BQ", 0, self.total_rows))
 
 
-def encode_table(table_or_batches,
-                 schema: pa.Schema | None = None) -> bytes:
-    """Convenience: encode a pa.Table / list of RecordBatches to bytes."""
-    if isinstance(table_or_batches, pa.Table):
-        schema = table_or_batches.schema
-        batches = table_or_batches.to_batches()
-    else:
-        batches = list(table_or_batches)
-        if schema is None:
-            schema = batches[0].schema
+def encode_table(table: pa.Table) -> bytes:
+    """Convenience: encode a pa.Table to bytes, one block per record
+    batch of the table."""
     sink = io.BytesIO()
-    w = ZseqWriter(sink, schema)
-    for b in batches:
+    w = ZseqWriter(sink, table.schema)
+    for b in table.to_batches():
         w.write_batch(b)
     w.finish()
     return sink.getvalue()
@@ -287,14 +280,9 @@ class ZseqReader:
                 cols.append(arr)
             yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
 
-    def read_all(self, columns: list[str] | None = None,
-                 predicate=None) -> pa.Table:
-        names = list(self.schema.names)
-        sel = set(columns) if columns is not None else set(names)
-        out_schema = pa.schema(
-            [self.schema.field(n) for n in names if n in sel])
-        return pa.Table.from_batches(
-            list(self.batches(columns, predicate)), schema=out_schema)
+    def read_all(self) -> pa.Table:
+        return pa.Table.from_batches(list(self.batches()),
+                                     schema=self.schema)
 
 
 _OPS = {
@@ -472,6 +460,5 @@ def _block_provably_empty(predicate, zonemaps) -> bool:
     return False
 
 
-def decode_table(buf: bytes | memoryview, columns: list[str] | None = None,
-                 predicate=None) -> pa.Table:
-    return ZseqReader(buf).read_all(columns, predicate)
+def decode_table(buf: bytes | memoryview) -> pa.Table:
+    return ZseqReader(buf).read_all()
