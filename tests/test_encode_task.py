@@ -63,7 +63,7 @@ def _chunked(tbl: pa.Table, chunks: int) -> pa.Table:
         return tbl
     k = tbl.num_rows // 3  # sliced chunks: list arrays with an offset
     out = pa.concat_tables([tbl.slice(0, k), tbl.slice(k)])
-    assert out.column("tok").num_chunks == 2
+    assert all(c.num_chunks == 2 for c in out.columns)
     return out
 
 
@@ -89,20 +89,80 @@ def test_cluster_order_is_chunking_invariant():
 
 def test_take_table_allocates_about_one_output():
     """The gather writes rows straight into one output buffer: no
-    per-element index arrays the size of the column."""
-    tbl = synth.tokens_table_arrow(13_000)
-    out_bytes = tbl.column("tokens").combine_chunks().values.nbytes
-    assert out_bytes >= 8_000_000  # ~2M int32 tokens
-    order = encode._cluster_order(tbl)
-    tracemalloc.start()
-    try:
-        got = encode._take_table(tbl, order)
-        peak = tracemalloc.get_traced_memory()[1]
-    finally:
-        tracemalloc.stop()
-    assert peak < 1.5 * out_bytes, (peak, out_bytes)
-    assert got.column("tokens").equals(
-        tbl.column("tokens").take(pa.array(order)))
+    per-element index arrays the size of the column, and no combined
+    copy of a multi-chunk input (2 chunks: how a fixture part reads).
+    tracemalloc sees numpy's buffers; Arrow's pool allocations (a
+    ``combine_chunks`` copy) are counted through a proxy pool."""
+    for chunks in (1, 2):
+        tbl = _chunked(synth.tokens_table_arrow(13_000), chunks)
+        out_bytes = tbl.column("tokens").combine_chunks().values.nbytes
+        assert out_bytes >= 8_000_000  # ~2M int32 tokens
+        order = encode._cluster_order(tbl)
+        default = pa.default_memory_pool()
+        pool = pa.proxy_memory_pool(default)
+        pa.set_memory_pool(pool)
+        tracemalloc.start()
+        try:
+            got = encode._take_table(tbl, order)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+            pa.set_memory_pool(default)
+        same = got.column("tokens").equals(
+            tbl.column("tokens").take(pa.array(order)))
+        del got  # its Arrow buffers live in ``pool``: free them first
+        assert same, chunks
+        assert peak < 1.5 * out_bytes, (chunks, peak, out_bytes)
+        assert pool.max_memory() < 0.1 * out_bytes, (
+            chunks, pool.max_memory(), out_bytes)
+
+
+# Peak RSS is the process's VmHWM: ru_maxrss would start at the RSS of
+# the process that spawned this one (Linux carries it across exec).
+_RSS_PROBE = """
+import sys
+import pyarrow.parquet as pq
+from zseq import encode
+def hwm():
+    with open("/proc/self/status") as f:
+        return next(int(ln.split()[1]) << 10 for ln in f
+                    if ln.startswith("VmHWM:"))
+warm, part, out = sys.argv[1:]
+task = encode._encode_files(out, pq.read_schema(part), None, "mem")
+list(task((0, warm)))
+before = hwm()
+[row] = list(task((1, part)))
+print(hwm() - before, row.column("raw_bytes")[0].as_py())
+"""
+
+
+def test_encode_task_peak_rss_is_bounded(tmp_path):
+    """One fixture part (234,375 rows, 153 MB of Arrow) through the
+    parquet task body, in a fresh process after a 2,000-row warm-up
+    part: its peak RSS grows by at most 3x the part's Arrow bytes. A
+    whole-file read plus a combined tokens column and a clustered copy
+    of the whole part grows it by 5.4-6.2x; a streamed read gathering
+    one block at a time, by 2.1-2.2x."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root)
+    warm, part = (str(tmp_path / f) for f in ("warm.parquet",
+                                              "part.parquet"))
+    subprocess.run(
+        [sys.executable, "-c",
+         "from perfbench import corpus as C\n"
+         f"C.write_file('fixture', 7, 14_000_000, 2_000, {warm!r})\n"
+         f"C.write_file('fixture', 7, 14_000_000, 234_375, {part!r})"],
+        env=env, check=True)
+    out = subprocess.run(
+        [sys.executable, "-c", _RSS_PROBE, warm, part, str(tmp_path)],
+        env=env, check=True, capture_output=True, text=True).stdout
+    grown, arrow_bytes = map(int, out.split())
+    assert arrow_bytes > 150_000_000
+    assert grown <= 3 * arrow_bytes, (grown, arrow_bytes,
+                                      grown / arrow_bytes)
 
 
 # enc_bytes and crc32 of one clustered part. The fixture's enc_bytes date

@@ -715,3 +715,24 @@ def test_corrupt_zstd_frames_raise_value_error():
                 continue
             assert got.shape != want.shape or not np.array_equal(got, want)
         assert refused  # some flips break the frame itself
+
+
+def test_segment_payload_past_u32_limit_is_refused(monkeypatch):
+    """A payload length past the u32 header field is a ValueError naming
+    the field, not a struct.error (the limit is patched: no 4 GiB)."""
+    arr = np.arange(5000, dtype=np.int64) % 1000
+    monkeypatch.setattr(IC, "LEN_LIMIT", 100)
+    for codec in (IC.T_RAW, IC.T_PACK, None):
+        with pytest.raises(ValueError,
+                           match="segment payload length .* limit of 100"):
+            IC.encode_ints(arr, codec=codec)
+    with pytest.raises(ValueError, match="segment payload length"):
+        BC.encode_binary(np.array([200]), np.full(200, 7, np.uint8))
+
+
+def test_wrapped_inner_length_past_u32_limit_is_refused(monkeypatch):
+    arr = np.arange(5000, dtype=np.int64) % 1000
+    seg = IC.encode_ints(arr, codec=IC.T_PACK)
+    monkeypatch.setattr(IC, "LEN_LIMIT", len(seg) - 1)
+    with pytest.raises(ValueError, match="wrapped segment length"):
+        IC._wrapped(seg, arr.size, len(seg), b"")

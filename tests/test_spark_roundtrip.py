@@ -325,6 +325,31 @@ def test_encode_parquet_schema_drift_named_up_front(spark, tmp_path):
         zenc.encode_parquet(spark, src3, str(tmp_path / "driftout3"))
 
 
+def test_encode_parquet_zero_row_file_roundtrip(spark, tmp_path):
+    """A zero-row parquet input commits an empty part: the task reads its
+    file in record batches, and the file's schema types the empty
+    table."""
+    import pyarrow.parquet as pq
+
+    from zseq.zseqfile import ZseqReader
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    os.makedirs(src)
+    tbl = synth.tokens_table_arrow(300)
+    pq.write_table(tbl, os.path.join(src, "a.parquet"))
+    pq.write_table(tbl.slice(0, 0), os.path.join(src, "b.parquet"))
+    res = zenc.encode_parquet(spark, src, out)
+    assert [(p["part_id"], p["rows"]) for p in res.parts] == [(0, 300),
+                                                             (1, 0)]
+    with open(os.path.join(out, res.parts[1]["file"]), "rb") as f:
+        empty = ZseqReader(f.read()).read_all()
+    assert empty.num_rows == 0 and empty.schema.names == tbl.schema.names
+    back = zdec.decode(spark, out)
+    assert _sorted_rows(back) == sorted(
+        (r["doc_id"], r["tokens"], r["n_tok"], r["source"])
+        for r in tbl.to_pylist())
+
+
 def test_nested_map_parquet_roundtrip(spark, tmp_path):
     """Regression: map arrays crossing the JVM->Python Arrow boundary
     segfault this Spark/pyarrow pairing intermittently (worst with

@@ -262,3 +262,48 @@ def test_mixed_kind_table_roundtrip(rows):
             assert np.array_equal(av, bv), name
         else:
             assert a.equals(b), name
+
+
+def _write(batch: pa.RecordBatch) -> None:
+    zseqfile.ZseqWriter(io.BytesIO(), batch.schema).write_batch(batch)
+
+
+def test_block_row_count_past_u32_limit_is_refused(monkeypatch):
+    """Past the u32 field a length is a ValueError naming the field (and
+    the column, for a chunk), not a struct.error. The limit is patched,
+    so no 4 GiB input is built."""
+    from zseq.codecs import intcodecs as IC
+
+    batch = synth.tokens_table_arrow(10).to_batches()[0]
+    monkeypatch.setattr(IC, "LEN_LIMIT", 9)
+    with pytest.raises(ValueError, match="block row count 10 .* limit of 9"):
+        _write(batch)
+
+
+def test_chunk_length_past_u32_limit_names_the_column(monkeypatch):
+    import numpy as np
+
+    from zseq import column as COL
+    from zseq.codecs import intcodecs as IC
+
+    # a struct chunk holds 20 child chunks, so it is far longer than any
+    # segment a child's codec selection builds: only the chunk is past
+    rng = np.random.default_rng(0)
+    wide = pa.StructArray.from_arrays(
+        [pa.array(rng.integers(-2**62, 2**62, 1000)) for _ in range(20)],
+        names=[f"c{i}" for i in range(20)])
+    batch = pa.record_batch([wide], names=["wide"])
+    chunk = COL.encode_column(wide, None, "wide", zone=True)
+    monkeypatch.setattr(IC, "LEN_LIMIT", len(chunk) - 1)
+    with pytest.raises(ValueError, match="column 'wide': chunk length"):
+        _write(batch)
+
+
+def test_segment_past_u32_limit_names_the_column(monkeypatch):
+    from zseq.codecs import intcodecs as IC
+
+    tok = synth.tokens_table_arrow(50).column("tokens").chunk(0)
+    monkeypatch.setattr(IC, "LEN_LIMIT", 100)
+    with pytest.raises(ValueError,
+                       match="column 'tokens': segment payload length"):
+        _write(pa.record_batch([tok], names=["tokens"]))

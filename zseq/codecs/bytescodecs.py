@@ -114,7 +114,8 @@ def zstd_decompress(data, raw_size: int) -> bytes:
 
 
 def _seg(tag: int, payload: bytes) -> bytes:
-    return IC.HEADER.pack(tag, len(payload)) + payload
+    return IC.HEADER.pack(
+        tag, IC.u32_len(len(payload), "segment payload length")) + payload
 
 
 def _offsets(lengths: np.ndarray) -> np.ndarray:

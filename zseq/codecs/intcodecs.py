@@ -68,6 +68,7 @@ import numpy as np
 from . import primitives as P
 
 HEADER = struct.Struct("<BI")  # tag, payload_len
+LEN_LIMIT = 0xFFFFFFFF  # the largest value a u32 length field holds
 
 T_CONST = 0x01
 T_RAW = 0x02
@@ -99,8 +100,20 @@ INT_CODEC_NAMES = {
 _wrap = np.errstate(over="ignore")
 
 
+def u32_len(n: int, what: str) -> int:
+    """``n`` for a u32 length field of the format; past ``LEN_LIMIT`` a
+    ValueError naming the field, where struct would raise its own
+    error."""
+    if n > LEN_LIMIT:
+        raise ValueError(
+            f"{what} {n:,} is past the format's u32 limit of "
+            f"{LEN_LIMIT:,}")
+    return n
+
+
 def _seg(tag: int, payload: bytes) -> bytes:
-    return HEADER.pack(tag, len(payload)) + payload
+    return HEADER.pack(tag, u32_len(len(payload), "segment payload length")) \
+        + payload
 
 
 def _as_i64(values) -> np.ndarray:
@@ -154,7 +167,8 @@ class _LazyPack:
         width = (int(arr.max()) - lo).bit_length()
         nbody = (arr.size * width + 7) // 8
         self.arr, self.lo, self.width = arr, lo, width
-        self.head = (HEADER.pack(T_PACK, 9 + nbody)
+        self.head = (HEADER.pack(
+                         T_PACK, u32_len(9 + nbody, "segment payload length"))
                      + lo.to_bytes(8, "little", signed=True)
                      + bytes([width]))
         self._len = len(self.head) + nbody
@@ -744,7 +758,8 @@ def _wrapped(seg: bytes, count: int, inner_len: int, comp: bytes) -> bytes:
         struct.pack("<Bqq", 1, zone[0], zone[1]) if zone
         else struct.pack("<B", 0)
     )
-    return _seg(T_WRAP, struct.pack("<I", inner_len) + zhead + comp)
+    return _seg(T_WRAP, struct.pack(
+        "<I", u32_len(inner_len, "wrapped segment length")) + zhead + comp)
 
 
 def _maybe_wrap(seg: bytes | _LazyPack,
@@ -795,7 +810,7 @@ def _maybe_wrap_byte_aligned(arr: np.ndarray, seg: _LazyPack,
     wide = next(b for b in _BYTE_WIDTHS if b >= width)
     head = HEADER.size + 9
     inner_len = head + count * (wide // 8)
-    if len(seg) < 128 or width == wide or inner_len > 0xFFFFFFFF:
+    if len(seg) < 128 or width == wide or inner_len > LEN_LIMIT:
         return seg.seg()
     inner = np.empty(inner_len, dtype=np.uint8)
     inner[:head] = np.frombuffer(seg.head, np.uint8)  # tag, lo

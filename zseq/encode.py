@@ -32,6 +32,13 @@ Scale notes (design target: 10^12 sequences, 1000 executors):
     DataFrame; the correctness contract is keyed by doc_id). Mixed-width
     batches otherwise force every FORBP mini-block to the widest regime —
     measured ~2x size win on mixed-regime data.
+  - Bounded task memory: a task holds its input once plus one block. The
+    parquet fast path reads its file in ``BATCH_ROWS`` record batches;
+    no writer combines the input's chunks; the clustered order is
+    computed once per part, and each block gathers its slice of it
+    straight from the input chunks (``_take_table``). One fixture part
+    (234,375 rows, 153 MB of Arrow) grows the task's peak RSS by about
+    2.2x its Arrow bytes.
 """
 
 from __future__ import annotations
@@ -335,7 +342,7 @@ def _cluster_order(tbl: pa.Table) -> np.ndarray | None:
     """Row order by (bit width of per-row max |value| of the first list
     column, list length). Returns None when there is nothing to cluster.
     Reads the column chunk by chunk: the per-row stats need no combined
-    copy (``_take_table`` makes the only one)."""
+    copy, and neither does ``_take_table``'s gather."""
     list_col = None
     for name in tbl.column_names:
         t = tbl.schema.field(name).type
@@ -376,55 +383,67 @@ def _cluster_order(tbl: pa.Table) -> np.ndarray | None:
 _GATHER_VALUES = 1 << 16  # bound on the gather's temporary, in values
 
 
-def _take_rows(fv: np.ndarray, starts: np.ndarray, lengths: np.ndarray,
+def _take_rows(fvs: list[np.ndarray], which: np.ndarray,
+               starts: np.ndarray, lengths: np.ndarray,
                new_offs: np.ndarray) -> np.ndarray:
-    """Flat values of the rows ``fv[starts[i]:starts[i] + lengths[i]]``,
-    concatenated in order, written straight into one output buffer.
+    """Flat values of the rows ``fvs[which[i]][starts[i]:starts[i] +
+    lengths[i]]``, concatenated in order, written straight into one
+    output buffer.
 
     ``_cluster_order`` sorts rows by (width, length), so rows of equal
     length are contiguous: each run of length L is a fancy-index gather
     of whole rows from a read-only (fv.size - L + 1, L) sliding-window
-    view of ``fv``, at most ``_GATHER_VALUES`` values at a time. Any
-    order is correct; clustered orders make it a few hundred runs."""
-    out = np.empty(int(new_offs[-1]), dtype=fv.dtype)
+    view of each input chunk's values, at most ``_GATHER_VALUES`` values
+    at a time. Any order is correct; clustered orders make it a few
+    hundred runs."""
+    out = np.empty(int(new_offs[-1]), dtype=fvs[0].dtype)
     firsts = np.flatnonzero(np.diff(lengths, prepend=-1)).tolist()
-    step = fv.strides[0]
     for a, e in zip(firsts, firsts[1:] + [lengths.size]):
         L = int(lengths[a])
         if L == 0:
             continue
-        win = as_strided(fv, shape=(fv.size - L + 1, L),
-                         strides=(step, step), writeable=False)
         dst = out[new_offs[a]:new_offs[e]].reshape(e - a, L)
-        rows = max(1, _GATHER_VALUES // L)
-        for i in range(a, e, rows):
-            j = min(i + rows, e)
-            dst[i - a:j - a] = win[starts[i:j]]
+        step = max(1, _GATHER_VALUES // L)
+        for k, fv in enumerate(fvs):
+            rows = a + np.flatnonzero(which[a:e] == k)
+            if rows.size == 0:
+                continue
+            win = as_strided(fv, shape=(fv.size - L + 1, L),
+                             strides=(fv.strides[0],) * 2, writeable=False)
+            for i in range(0, rows.size, step):
+                r = rows[i:i + step]
+                dst[r - a] = win[starts[r]]
     return out
 
 
 def _take_table(tbl: pa.Table, order: np.ndarray) -> pa.Table:
     """``tbl.take(order)``, fast for list columns of numbers: Arrow's
     take gathers lists element by element (measured ~2x the cost of the
-    codecs), while ``_take_rows`` copies whole rows into the one output
-    buffer. Null-bearing lists and other value types take the Arrow
-    path. A multi-chunk column is combined here, once."""
+    codecs), while ``_take_rows`` copies whole rows from their input
+    chunks into the one output buffer, so a multi-chunk list column is
+    never combined. Null-bearing lists and other value types take the
+    Arrow path. ``_encode_table_to_file`` calls it once per block, with
+    that block's slice of the clustered order."""
     cols = []
     for col in tbl.columns:
-        # combine_chunks copies even a single chunk
-        arr = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
-        t = arr.type
+        t = col.type
         if (pa.types.is_list(t) or pa.types.is_large_list(t)) \
-                and arr.null_count == 0 and arr.values.null_count == 0 \
                 and (pa.types.is_integer(t.value_type)
-                     or pa.types.is_floating(t.value_type)):
-            offs = arr.offsets.to_numpy().astype(np.int64)
-            lengths = np.diff(offs)[order]
+                     or pa.types.is_floating(t.value_type)) \
+                and col.null_count == 0 \
+                and all(c.values.null_count == 0 for c in col.chunks):
+            offs = [c.offsets.to_numpy().astype(np.int64)
+                    for c in col.chunks]
+            starts = np.concatenate([o[:-1] for o in offs])[order]
+            lengths = np.concatenate([np.diff(o) for o in offs])[order]
+            which = np.repeat(np.arange(len(offs)),
+                              [o.size - 1 for o in offs])[order]
             new_offs = np.zeros(order.size + 1, dtype=np.int64)
             np.cumsum(lengths, out=new_offs[1:])
             new_flat = pa.array(
-                _take_rows(arr.values.to_numpy(), offs[:-1][order],
-                           lengths, new_offs), type=t.value_type)
+                _take_rows([c.values.to_numpy() for c in col.chunks],
+                           which, starts, lengths, new_offs),
+                type=t.value_type)
             if pa.types.is_large_list(t):
                 rebuilt = pa.LargeListArray.from_arrays(
                     pa.array(new_offs, type=pa.int64()), new_flat)
@@ -434,8 +453,17 @@ def _take_table(tbl: pa.Table, order: np.ndarray) -> pa.Table:
                     new_flat)
             cols.append(rebuilt.cast(t))
         else:
-            cols.append(arr.take(pa.array(order)))
+            cols.append(col.take(pa.array(order)))
     return pa.Table.from_arrays(cols, schema=tbl.schema)
+
+
+def _one_batch(tbl: pa.Table) -> pa.RecordBatch:
+    """``tbl`` (one block's rows) as one record batch: only a column
+    that spans chunks is copied (``combine_chunks`` copies even a single
+    chunk)."""
+    return pa.RecordBatch.from_arrays(
+        [c.chunk(0) if c.num_chunks == 1 else c.combine_chunks()
+         for c in tbl.columns], schema=tbl.schema)
 
 
 def _encode_table_to_file(tbl: pa.Table, out_dir: str, part_id: int,
@@ -451,10 +479,9 @@ def _encode_table_to_file(tbl: pa.Table, out_dir: str, part_id: int,
 
     _BC.set_zstd_level(zstd_level if zstd_level is not None else 3)
     raw_bytes = tbl.nbytes
-    if cluster:
-        order = _cluster_order(tbl)
-        if order is not None:
-            tbl = _take_table(tbl, order)
+    # The clustered order is computed once; each block gathers its slice
+    # of it from the input, so no clustered copy of the whole part exists.
+    order = _cluster_order(tbl) if cluster else None
     fname = fname or part_name(None, part_id)
     final = os.path.join(out_dir, fname)
     # Attempt-unique tmp: pid alone can COLLIDE across machines on a
@@ -469,8 +496,10 @@ def _encode_table_to_file(tbl: pa.Table, out_dir: str, part_id: int,
             list_elems += int(le or 0)
     with open(tmp, "wb") as f:
         w = ZseqWriter(f, schema, {"part_id": part_id})
-        for b in tbl.to_batches(max_chunksize=batch_rows):
-            w.write_batch(b)
+        for lo in range(0, tbl.num_rows, batch_rows):
+            block = (tbl.slice(lo, batch_rows) if order is None
+                     else _take_table(tbl, order[lo:lo + batch_rows]))
+            w.write_batch(_one_batch(block))
         w.finish()
         f.flush()
         os.fsync(f.fileno())
@@ -501,15 +530,16 @@ def encode_batches(batches, out_dir: str, part_id: int, schema: pa.Schema,
                    cluster: bool, batch_rows: int, zstd_level: int | None,
                    token: str) -> dict | None:
     """A task's Arrow batches -> one part file named by job ``token``:
-    the batches are owned (``own_batches``) and combined, map columns
-    rebuilt (``_restore_maps``), and the table encoded by
-    ``_encode_table_to_file``. None for a task with no rows. Serves
-    ``encode`` and both DataSource writers."""
+    the batches are owned (``own_batches``), map columns rebuilt
+    (``_restore_maps``), and the table encoded block by block by
+    ``_encode_table_to_file``; nothing combines the whole task's
+    batches. None for a task with no rows. Serves ``encode`` and both
+    DataSource writers."""
     t0 = time.time()
     got = own_batches(list(batches))
     if not got:
         return None
-    tbl = _restore_maps(pa.Table.from_batches(got).combine_chunks(), schema)
+    tbl = _restore_maps(pa.Table.from_batches(got), schema)
     return _encode_table_to_file(tbl, out_dir, part_id, schema, cluster,
                                  batch_rows, t0, zstd_level,
                                  fname=part_name(token, part_id))
@@ -552,7 +582,13 @@ def _encode_files(out_dir: str, schema: pa.Schema, zstd_level: int | None,
         pa.set_io_thread_count(2)
         part_id, path = item
         t0 = time.time()
-        tbl = pq.read_table(path, use_threads=False)
+        # Record batches, not pq.read_table: the whole-file read peaks
+        # the Arrow pool at several times the table's size. The file's
+        # schema makes a zero-row file an empty table.
+        with pq.ParquetFile(path) as pf:
+            tbl = pa.Table.from_batches(
+                pf.iter_batches(batch_size=BATCH_ROWS, use_threads=False),
+                schema=pf.schema_arrow)
         if schema.names != tbl.schema.names:
             tbl = tbl.select(schema.names)
         tbl = tbl.cast(schema)
@@ -775,8 +811,9 @@ def append_commit(c: Commit, new_parts: list[dict],
 def _merge_group(out_dir: str, files: list[tuple], schema: pa.Schema,
                  zstd_level: int, part_id: int, fname: str) -> dict:
     """One compaction unit: read a group of committed small parts
-    ((file, crc32) pairs, crc-gated), concatenate, re-encode as ONE
-    staged part file named ``fname``; returns its metrics row."""
+    ((file, crc32) pairs, crc-gated), concatenate (no combined copy),
+    re-encode as ONE staged part file named ``fname``; returns its
+    metrics row."""
     from .zseqfile import ZseqReader, check_crc
 
     tables = []
@@ -786,7 +823,7 @@ def _merge_group(out_dir: str, files: list[tuple], schema: pa.Schema,
             content = f.read()
         check_crc(content, crc, path)
         tables.append(ZseqReader(content).read_all())
-    tbl = pa.concat_tables(tables).combine_chunks()
+    tbl = pa.concat_tables(tables)
     return _encode_table_to_file(tbl, out_dir, part_id, schema, False,
                                  BATCH_ROWS, time.time(), zstd_level,
                                  fname=fname)

@@ -50,6 +50,7 @@ import pyarrow as pa
 
 from . import MAGIC, MAGIC_COMPAT
 from . import column as COL
+from .codecs import intcodecs as IC
 
 
 def check_crc(content, want: int | None, path: str = "") -> None:
@@ -112,16 +113,21 @@ class ZseqWriter:
                 f"{self.schema.names}"
             )
         out = io.BytesIO()
-        out.write(struct.pack("<BI", 1, batch.num_rows))
+        out.write(struct.pack(
+            "<BI", 1, IC.u32_len(batch.num_rows, "block row count")))
         block: dict[str, tuple[str, int]] = {}
         for i, name in enumerate(self.schema.names):
-            if COL.is_reversed(self.schema.field(i)):
-                chunk = COL.encode_column_reversed(
-                    batch.column(i), block, name, zone=True)
-            else:
-                chunk = COL.encode_column(batch.column(i), block, name,
-                                          zone=True)
-            out.write(struct.pack("<I", len(chunk)))
+            try:
+                if COL.is_reversed(self.schema.field(i)):
+                    chunk = COL.encode_column_reversed(
+                        batch.column(i), block, name, zone=True)
+                else:
+                    chunk = COL.encode_column(batch.column(i), block, name,
+                                              zone=True)
+                out.write(struct.pack(
+                    "<I", IC.u32_len(len(chunk), "chunk length")))
+            except ValueError as e:
+                raise ValueError(f"column {name!r}: {e}") from e
             out.write(chunk)
             self.col_bytes[name] = (
                 self.col_bytes.get(name, 0) + 4 + len(chunk))
