@@ -81,6 +81,46 @@ def test_take_table_equals_arrow_take(chunks, how):
         assert got.column(name).equals(want.column(name)), name
 
 
+def test_take_table_blocks_of_four_chunks():
+    """The blocks of a 4-chunk table, gathered one block at a time as
+    ``_encode_table_to_file`` gathers them, equal Arrow's take of the
+    whole clustered order sliced per block. A block of an Arrow-path
+    column takes its rows from the chunks that hold them: Arrow's pool
+    never holds the whole column again, as a concatenation would."""
+    def four_chunks(tbl):
+        k = tbl.num_rows // 4
+        out = pa.concat_tables([tbl.slice(i * k, k) for i in range(3)]
+                               + [tbl.slice(3 * k)])
+        assert all(c.num_chunks == 4 for c in out.columns)
+        return out
+
+    tbl = four_chunks(_table())
+    order = encode._cluster_order(tbl)
+    want = tbl.take(pa.array(order))
+    for lo in range(0, tbl.num_rows, 64):
+        got = encode._take_table(tbl, order[lo:lo + 64])
+        assert got.schema == tbl.schema
+        for name in tbl.column_names:
+            assert got.column(name).equals(
+                want.column(name).slice(lo, 64)), (lo, name)
+    tbl = four_chunks(synth.tokens_table_arrow(20_000)).select(["doc_id"])
+    order = encode._cluster_order(synth.tokens_table_arrow(20_000))
+    default = pa.default_memory_pool()
+    for lo in range(0, tbl.num_rows, 2500):
+        pool = pa.proxy_memory_pool(default)
+        pa.set_memory_pool(pool)
+        try:
+            got = encode._take_table(tbl, order[lo:lo + 2500])
+        finally:
+            pa.set_memory_pool(default)
+        same = got.column(0).equals(
+            tbl.column(0).take(pa.array(order[lo:lo + 2500])))
+        del got  # its Arrow buffers live in ``pool``: free them first
+        assert same, lo
+        assert pool.max_memory() < 0.5 * tbl.nbytes, (
+            lo, pool.max_memory(), tbl.nbytes)
+
+
 def test_cluster_order_is_chunking_invariant():
     tbl = _table()
     assert np.array_equal(encode._cluster_order(tbl),
@@ -115,6 +155,38 @@ def test_take_table_allocates_about_one_output():
         assert peak < 1.5 * out_bytes, (chunks, peak, out_bytes)
         assert pool.max_memory() < 0.1 * out_bytes, (
             chunks, pool.max_memory(), out_bytes)
+
+
+def test_raw_bytes_is_chunking_invariant(tmp_path):
+    """A part's ``raw_bytes`` counts its rows' Arrow data, not how the
+    table holds them: the same fixture rows as one chunk, as four
+    chunks, and as the parquet task streams and casts them (three
+    different ``Table.nbytes``) record one ``raw_bytes``, the count of
+    values, offsets and string bytes."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "in.parquet")
+    C.write_file("fixture", 7, 14_000_000, 2_000, src)
+    one = pq.read_table(src).combine_chunks()
+    k = one.num_rows // 4
+    four = pa.concat_tables([one.slice(i * k, k) for i in range(3)]
+                            + [one.slice(3 * k)])
+    got = [encode._encode_table_to_file(tbl, str(tmp_path), i, tbl.schema,
+                                        True, 1 << 16, 0.0)["raw_bytes"]
+           for i, tbl in enumerate((one, four))]
+    task = encode._encode_files(str(tmp_path), pq.read_schema(src), None,
+                                "raw")
+    [row] = list(task((2, src)))
+    got.append(row.column("raw_bytes")[0].as_py())
+    # no nulls, so no validity bits: 4-byte offsets of doc_id, tokens
+    # and source, n_tok, and the int32 tokens
+    assert all(c.null_count == 0 for c in one.columns)
+    strings = sum(pc.sum(pc.binary_length(one.column(c))).as_py()
+                  for c in ("doc_id", "source"))
+    tokens = pc.sum(pc.list_value_length(one.column("tokens"))).as_py()
+    want = 4 * (4 * one.num_rows + tokens) + strings
+    assert got == [want] * 3, (got, want)
 
 
 # Peak RSS is the process's VmHWM: ru_maxrss would start at the RSS of

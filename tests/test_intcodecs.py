@@ -585,12 +585,13 @@ def _tokens(tbl):
 
 
 def test_selection_keeps_zstd_wrap_on_fixture_chunk(monkeypatch):
-    """A fixture chunk keeps its zstd_wrap segment byte for byte and
-    pays only the sample estimate: the width-symbol encoder never runs."""
+    """A fixture chunk keeps its zstd_wrap segment byte for byte, as
+    with the width-symbol codec out of reach (a zero margin), and the
+    width-symbol encoder never runs."""
     from zseq import synth
 
     arr = _tokens(synth.tokens_table_arrow(20_000))
-    monkeypatch.setattr(select, "with_wsym_trial", lambda a, seg: seg)
+    monkeypatch.setattr(select, "WSYM_MARGIN", 0)
     before = IC.encode_ints(arr)
     monkeypatch.undo()
 
@@ -614,6 +615,48 @@ def test_selection_picks_wsym_on_zipf_chunk():
     assert np.array_equal(dec, arr)
 
 
+def test_wsym_chunk_builds_only_its_segment(monkeypatch):
+    """A chunk the selector predicts as width_sym builds no other
+    full-chunk segment: every other encoder runs on the selector's
+    prefix at most, and no zstd wrap is tried."""
+    from perfbench import corpus as C
+
+    arr = _tokens(C.make_table("zipf", 7, 0, 2000))
+    calls = []
+    for tag, enc in list(IC._ENCODERS.items()):
+        def recorded(a, tag=tag, enc=enc):
+            calls.append((tag, a.size))
+            return enc(a)
+
+        monkeypatch.setitem(IC._ENCODERS, tag, recorded)
+
+    def no_wrap(*_):
+        raise AssertionError("zstd wrap tried on a width_sym chunk")
+
+    monkeypatch.setattr(IC, "_maybe_wrap", no_wrap)
+    assert IC.encode_ints(arr)[0] == IC.T_WSYM
+    assert [t for t, size in calls if size == arr.size] == [IC.T_WSYM]
+    assert all(size <= select.SAMPLE for t, size in calls
+               if t != IC.T_WSYM), calls
+
+
+def test_u32_limit_checks_only_the_segment_built(monkeypatch):
+    """With the u32 limit between a Zipf chunk's width_sym and FORBP
+    payload lengths, the auto encode writes the width_sym segment: no
+    FORBP candidate is built to be refused and thrown away."""
+    from perfbench import corpus as C
+
+    arr = _tokens(C.make_table("zipf", 7, 0, 2000))
+    wsym = len(IC.encode_ints(arr, codec=IC.T_WSYM)) - IC.HEADER.size
+    forbp = len(IC.encode_ints(arr, codec=IC.T_FORBP)) - IC.HEADER.size
+    assert wsym < forbp
+    monkeypatch.setattr(IC, "LEN_LIMIT", (wsym + forbp) // 2)
+    seg = IC.encode_ints(arr)
+    assert seg[0] == IC.T_WSYM
+    with pytest.raises(ValueError, match="segment payload length"):
+        IC.encode_ints(arr, codec=IC.T_FORBP)
+
+
 def test_wsym_estimate_tracks_encoded_size():
     from perfbench import corpus as C
 
@@ -635,8 +678,8 @@ def test_wsym_never_nested():
 
 def test_no_column_grows_over_old_selection_on_parity_tables(monkeypatch):
     """Every table of tests/test_size_parity.py: no column's chunk is
-    larger under the selection with the width-symbol trial than without
-    it (the trial only ever replaces a segment by a smaller one)."""
+    larger under the selection with the width-symbol codec than without
+    it (a zero margin puts it out of reach)."""
     from test_size_parity import parity_tables
 
     from zseq import column as COL
@@ -648,34 +691,43 @@ def test_no_column_grows_over_old_selection_on_parity_tables(monkeypatch):
                 for c in tbl.column_names}
 
     new = sizes()
-    monkeypatch.setattr(select, "with_wsym_trial", lambda a, seg: seg)
+    monkeypatch.setattr(select, "WSYM_MARGIN", 0)
     old = sizes()
     assert new.keys() == old.keys() and len(new) > 10
     grew = {k: (new[k], old[k]) for k in new if new[k] > old[k]}
     assert not grew
 
 
-def test_fixture_part_bytes_unchanged_by_wsym_trial(tmp_path, monkeypatch):
+# sha256 of clustered parts, pinned to the bytes the selector wrote when
+# the width-symbol codec was a trial encode after the auto path's
+# segment: predicting it from the sample changed no block's codec.
+PART_SHA256 = {
+    "fixture":
+        "6044e35ae7b260e6f79e67ecf0e604341615346ac56893a3041bbc5e5c34c2d5",
+    "zipf":
+        "cfdd3f6f8d9f6bfc3bd5c49277aa794b5b9ec19cf1c35f11ff1e341677722ec7",
+}
+
+
+def test_fixture_part_bytes_unchanged_by_wsym_trial(tmp_path):
     """A clustered fixture part at 160K rows per part (the size-parity
-    module's tail-block case) encodes byte for byte as without the
-    width-symbol trial: every block keeps its codec."""
+    module's tail-block case; its tokens zstd_wrap) and a 2,000-row
+    Zipf part (its tokens width_sym) encode to pinned bytes."""
+    import hashlib
     import os
 
+    from perfbench import corpus as C
     from zseq import encode, synth
 
-    tbl = synth.tokens_table_arrow(160_000)
-
-    def part(sub):
-        out = str(tmp_path / sub)
+    for name, tbl in (("fixture", synth.tokens_table_arrow(160_000)),
+                      ("zipf", C.make_table("zipf", 7, 0, 2000))):
+        out = str(tmp_path / name)
         os.makedirs(out)
         row = encode._encode_table_to_file(tbl, out, 0, tbl.schema, True,
                                            1 << 16, 0.0)
         with open(os.path.join(out, row["file"]), "rb") as f:
-            return f.read()
-
-    new = part("new")
-    monkeypatch.setattr(select, "with_wsym_trial", lambda a, seg: seg)
-    assert new == part("old")
+            assert hashlib.sha256(f.read()).hexdigest() == \
+                PART_SHA256[name], name
 
 
 def test_corrupt_zstd_frames_raise_value_error():

@@ -47,9 +47,9 @@ types are handled at the column layer):
           bitstream, in stream order (zstd's "code + extra bits" split,
           RFC 8878). Entropy-codes skewed ids (Zipf tokens: 1.24 against
           zstd_wrap's 1.53 B/value) where LZ finds no repeats. Decode is
-          one windowed gather per value, no permutation. Top-level only:
-          ``select.with_wsym_trial`` replaces the auto path's segment by
-          it on a fixed size margin; never wrapped or nested
+          one windowed gather per value, no permutation. Top-level only,
+          chosen from the sample like the rest (``select``), and then
+          the only segment built: never wrapped or nested
 
 Zone maps are *derived*, not stored: CONST/PACK/FORBP/ZBRA/DICT/WSYM
 headers already bound their values, so block pruning costs zero extra bytes
@@ -735,17 +735,13 @@ def encode_ints(values, codec: int | None = None,
         codec = T_RAW
     if arr.dtype != np.int64 and codec not in _NARROW_OK:
         arr = arr.astype(np.int64)  # codecs with int64-domain byte paths
-    if not auto or T_WRAP in exclude:
+    if not auto or T_WRAP in exclude or codec == T_WSYM:
         return _seg(codec, _ENCODERS[codec](arr))
     if codec != T_PACK:
-        seg = _maybe_wrap(_seg(codec, _ENCODERS[codec](arr)), n)
-    else:
-        seg = _maybe_wrap(_LazyPack(arr), n)
-        if not isinstance(seg, bytes):
-            seg = _maybe_wrap_byte_aligned(arr, seg, n)
-    if codec == T_CONST or exclude:  # the symbol codec is never nested
-        return seg
-    return select.with_wsym_trial(arr, seg)
+        return _maybe_wrap(_seg(codec, _ENCODERS[codec](arr)), n)
+    seg = _maybe_wrap(_LazyPack(arr), n)
+    return seg if isinstance(seg, bytes) else \
+        _maybe_wrap_byte_aligned(arr, seg, n)
 
 
 def _wrapped(seg: bytes, count: int, inner_len: int, comp: bytes) -> bytes:

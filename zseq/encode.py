@@ -416,15 +416,35 @@ def _take_rows(fvs: list[np.ndarray], which: np.ndarray,
     return out
 
 
+def _chunk_plan(lengths: tuple[int, ...], order: np.ndarray) -> tuple:
+    """How to gather the rows ``order`` from a column chunked as
+    ``lengths``: per chunk, the rows of ``order`` it holds (indices
+    within the chunk, in order), and where each row of ``order`` lies
+    among those pieces concatenated."""
+    bounds = np.cumsum((0,) + lengths)
+    which = np.searchsorted(bounds, order, side="right") - 1
+    by = np.argsort(which, kind="stable")
+    cuts = np.searchsorted(which[by], np.arange(len(lengths) + 1))
+    local = [pa.array(order[by[a:e]] - bounds[k])
+             for k, (a, e) in enumerate(zip(cuts, cuts[1:]))]
+    at = np.empty_like(by)
+    at[by] = np.arange(by.size)
+    return local, pa.array(at)
+
+
 def _take_table(tbl: pa.Table, order: np.ndarray) -> pa.Table:
     """``tbl.take(order)``, fast for list columns of numbers: Arrow's
     take gathers lists element by element (measured ~2x the cost of the
     codecs), while ``_take_rows`` copies whole rows from their input
     chunks into the one output buffer, so a multi-chunk list column is
     never combined. Null-bearing lists and other value types take the
-    Arrow path. ``_encode_table_to_file`` calls it once per block, with
-    that block's slice of the clustered order."""
-    cols = []
+    Arrow path: Arrow's take of a multi-chunk column concatenates all
+    its chunks on every call, so each chunk gives up its rows of the
+    block (``_chunk_plan``, shared by columns chunked alike) and one
+    take of those pieces puts them in order. ``_encode_table_to_file``
+    calls it once per block, with that block's slice of the clustered
+    order."""
+    cols, plans = [], {}
     for col in tbl.columns:
         t = col.type
         if (pa.types.is_list(t) or pa.types.is_large_list(t)) \
@@ -452,8 +472,15 @@ def _take_table(tbl: pa.Table, order: np.ndarray) -> pa.Table:
                     pa.array(new_offs.astype(np.int32), type=pa.int32()),
                     new_flat)
             cols.append(rebuilt.cast(t))
-        else:
+        elif col.num_chunks < 2:
             cols.append(col.take(pa.array(order)))
+        else:
+            key = tuple(len(c) for c in col.chunks)
+            if key not in plans:
+                plans[key] = _chunk_plan(key, order)
+            local, at = plans[key]
+            cols.append(pa.concat_arrays(
+                [c.take(i) for c, i in zip(col.chunks, local)]).take(at))
     return pa.Table.from_arrays(cols, schema=tbl.schema)
 
 
@@ -464,6 +491,42 @@ def _one_batch(tbl: pa.Table) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(
         [c.chunk(0) if c.num_chunks == 1 else c.combine_chunks()
          for c in tbl.columns], schema=tbl.schema)
+
+
+def _data_bytes(chunks: list[pa.Array]) -> int:
+    """Arrow bytes of the rows in ``chunks`` (one column's chunks): per
+    row its fixed-width value or offset, the string bytes and list
+    children it spans, and a validity bit where the column has nulls.
+    Chunking does not change it, where ``Table.nbytes`` counts whole
+    buffers: a sliced chunk's unreferenced values, a bitmap per chunk
+    that carries one, an offset per chunk. Unions count their
+    buffers."""
+    chunks = [a for a in chunks if len(a)]
+    if not chunks:
+        return 0
+    t = chunks[0].type
+    n = sum(len(a) for a in chunks)
+    total = (n + 7) // 8 if any(a.null_count for a in chunks) else 0
+    if pa.types.is_struct(t):
+        return total + sum(_data_bytes([a.field(i) for a in chunks])
+                           for i in range(t.num_fields))
+    lists = pa.types.is_list(t) or pa.types.is_large_list(t) \
+        or pa.types.is_map(t)
+    wide = pa.types.is_large_list(t) or pa.types.is_large_binary(t) \
+        or pa.types.is_large_string(t)
+    if lists or wide or pa.types.is_binary(t) or pa.types.is_string(t):
+        spans = [np.frombuffer(a.buffers()[1], np.int64 if wide else np.int32,
+                               a.offset + len(a) + 1)[[a.offset, -1]]
+                 .tolist() for a in chunks]
+        total += n * (8 if wide else 4)
+        if lists:
+            return total + _data_bytes([a.values.slice(lo, hi - lo)
+                                        for a, (lo, hi) in zip(chunks, spans)])
+        return total + sum(hi - lo for lo, hi in spans)
+    try:
+        return total + (n * t.bit_width + 7) // 8
+    except ValueError:  # not fixed-width: a union, or the null type
+        return sum(a.nbytes for a in chunks)
 
 
 def _encode_table_to_file(tbl: pa.Table, out_dir: str, part_id: int,
@@ -478,7 +541,7 @@ def _encode_table_to_file(tbl: pa.Table, out_dir: str, part_id: int,
     from .codecs import bytescodecs as _BC
 
     _BC.set_zstd_level(zstd_level if zstd_level is not None else 3)
-    raw_bytes = tbl.nbytes
+    raw_bytes = sum(_data_bytes(c.chunks) for c in tbl.columns)
     # The clustered order is computed once; each block gathers its slice
     # of it from the input, so no clustered copy of the whole part exists.
     order = _cluster_order(tbl) if cluster else None

@@ -9,23 +9,19 @@ score each codec's *predicted* encoded size in bytes, and pick the minimum.
 
 Prediction is deliberately cheap (no trial encodes of the full chunk) so the
 selector adds O(SAMPLE) work per chunk regardless of chunk size — the right
-trade at 10^12-sequence scale where chunks are millions of values. The one
-full-chunk trial is downstream of selection: when a chosen PACK at a
-non-byte width fails its zstd-wrap trial, ``intcodecs`` re-packs it at the
-next byte width and zstds the whole chunk once (byte-granular LZ matches
-cannot see repeats that bit-packing shifted to other bit phases). That
-retry replaces the PACK: the full-width PACK is packed only when it is
-what the chunk keeps.
-
-The width-symbol codec (intcodecs T_WSYM) comes last, on every top-level
-auto-selected chunk (``with_wsym_trial``): the auto path above builds
-its segment first; an O(SAMPLE) estimate from the same strided sample
-(mean mantissa bits plus the symbols' order-0 entropy, ``wsym_bits``)
-gates a full trial encode; and the trial replaces the segment only when
-smaller by the fixed margin ``WSYM_MARGIN``, the decode-cost tie-break.
-Chunks LZ compresses well (the fixture's repeated runs) fail the
-estimate and keep their bytes; skewed ids without repeats (Zipf token
-streams) pass it.
+trade at 10^12-sequence scale where chunks are millions of values. The
+width-symbol codec (intcodecs T_WSYM) is scored the same way, for
+top-level chunks only: its estimate (``wsym_bits``: mean mantissa bits
+plus the symbols' order-0 entropy on the strided sample) must beat the
+winner's predicted size, scaled by the zstd ratio of the winner's
+encoding of the first SAMPLE values, by the margin ``WSYM_MARGIN``.
+Chunks LZ compresses well (the fixture's repeated runs) keep their
+codec; skewed ids without repeats (Zipf token streams) take T_WSYM, and
+only its segment is built. The one full-chunk trial is downstream of
+selection, in ``intcodecs``: the zstd wrap of the chosen segment, and for
+a PACK at a non-byte width whose wrap fails, a re-pack at the next byte
+width zstd'd whole once (byte-granular LZ matches cannot see repeats
+that bit-packing shifted to other bit phases).
 """
 
 from __future__ import annotations
@@ -34,14 +30,15 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from .codecs import bytescodecs as BC
 from .codecs import intcodecs as IC
 from .codecs import primitives as P
 
 SAMPLE = 8192
-# The width-symbol codec (intcodecs T_WSYM) replaces the auto path's
-# segment only when at most this fraction of its size: its decode (zstd
+# The width-symbol codec (intcodecs T_WSYM) is chosen only when predicted
+# at most this fraction of the best other codec's size: its decode (zstd
 # plus a per-value gather) costs about what a zstd_wrap decode costs and
-# several times a bare PACK/FORBP unpack, so a near tie keeps the old.
+# several times a bare PACK/FORBP unpack, so a near tie keeps the other.
 WSYM_MARGIN = 0.9
 # Bytes of a width-symbol segment that do not scale with the values:
 # segment header, lo/hi/length head, and a zstd frame's own overhead.
@@ -159,6 +156,22 @@ def predict_int_sizes(st: IntStats) -> dict[int, float]:
     return sizes
 
 
+def wsym_bits(arr: np.ndarray, lo: int) -> float:
+    """Predicted bits per value of the width-symbol codec on ``arr``
+    (minimum ``lo``), from the strided sample: the mean mantissa width
+    (k - 1 per symbol k) plus the order-0 entropy of the symbols, which
+    zstd's literal coder approaches."""
+    s = _sample(arr)
+    udt = np.uint32 if s.dtype == np.int32 else np.uint64
+    with np.errstate(over="ignore"):
+        d = (s - s.dtype.type(lo)).view(udt)
+    hist = np.bincount(IC._bit_lengths(d, int(d.max()).bit_length()),
+                       minlength=2).astype(np.float64)
+    mant = float(hist[2:] @ np.arange(1, hist.size - 1))
+    p = hist[hist > 0] / s.size
+    return mant / s.size - float(p @ np.log2(p))
+
+
 def select_int_codec(arr: np.ndarray,
                      exclude: frozenset = frozenset()) -> int:
     n = arr.size
@@ -179,41 +192,21 @@ def select_int_codec(arr: np.ndarray,
         sizes.pop(IC.T_RLE, None)
     if st.card_ratio > 0.5:
         sizes.pop(IC.T_DICT, None)
-    return min(sizes, key=sizes.__getitem__)
-
-
-def wsym_bits(arr: np.ndarray, lo: int) -> float:
-    """Predicted bits per value of the width-symbol codec on ``arr``
-    (minimum ``lo``), from the strided sample: the mean mantissa width
-    (k - 1 per symbol k) plus the order-0 entropy of the symbols, which
-    zstd's literal coder approaches."""
-    s = _sample(arr)
-    udt = np.uint32 if s.dtype == np.int32 else np.uint64
-    with np.errstate(over="ignore"):
-        d = (s - s.dtype.type(lo)).view(udt)
-    hist = np.bincount(IC._bit_lengths(d, int(d.max()).bit_length()),
-                       minlength=2).astype(np.float64)
-    mant = float(hist[2:] @ np.arange(1, hist.size - 1))
-    p = hist[hist > 0] / s.size
-    return mant / s.size - float(p @ np.log2(p))
-
-
-def with_wsym_trial(arr: np.ndarray, seg: bytes) -> bytes:
-    """``seg`` (the auto path's segment for ``arr``) or, when smaller by
-    the fixed margin ``WSYM_MARGIN``, the width-symbol segment. The
-    O(SAMPLE) estimate gates the trial, so chunks it cannot win (LZ
-    repeats, narrow packs) pay only the estimate."""
-    room = WSYM_MARGIN * len(seg) - _WSYM_FIXED
-    if room <= 0:
-        return seg
-    # the segment's zone, where its header has one, bounds the minimum
-    # without another pass over the chunk
-    zone = IC.segment_zone(seg, 0, arr.size)
-    lo = zone[0] if zone else int(arr.min())
-    if arr.size * wsym_bits(arr, lo) / 8 >= room:
-        return seg
-    trial = IC.encode_ints(arr, codec=IC.T_WSYM)
-    return trial if len(trial) < WSYM_MARGIN * len(seg) else seg
+    best = min(sizes, key=sizes.__getitem__)
+    if exclude:  # the width-symbol codec is never nested
+        return best
+    # It must beat ``best`` by the margin, zstd wrap included: the
+    # O(SAMPLE) estimate gates the wrap's ratio on a prefix
+    room = WSYM_MARGIN * sizes[best]
+    wsym = n * wsym_bits(arr, st.vmin) / 8 + _WSYM_FIXED
+    if wsym >= room:
+        return best
+    head = arr[:SAMPLE]
+    if best not in IC._NARROW_OK:
+        head = head.astype(np.int64)
+    enc = IC._ENCODERS[best](head)
+    ratio = len(BC.zstd_compress(enc)) / len(enc)
+    return IC.T_WSYM if wsym < room * ratio else best
 
 
 # Binary/string codec selection lives in codecs.bytescodecs
