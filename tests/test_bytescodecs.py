@@ -135,3 +135,18 @@ def test_bin_fsst_trailing_junk_refused():
     bad = bytes([tag]) + _st.pack("<I", plen + 5) + seg[5:] + b"junk!"
     with pytest.raises(ValueError, match="fsst"):
         BC.decode_binary(bad, 0, len(strs))
+
+
+def test_fsst_table_not_built_where_its_floor_loses(monkeypatch):
+    """A column of 1-byte strings (a flag column): every FSST code covers
+    one byte here, so FSST's floor is the raw size and the dict codec
+    wins without the sample-table build."""
+    from zseq.codecs import fsst
+
+    def refuse(_):
+        raise AssertionError("fsst.build_table called")
+
+    monkeypatch.setattr(fsst, "build_table", refuse)
+    rng = np.random.default_rng(3)
+    lens, data = _col(list(rng.choice([b"A", b"N", b"R"], 65_536)))
+    assert BC.encode_binary(lens, data)[0] == BC.T_BIN_DICT

@@ -668,3 +668,47 @@ def test_sparse_union_size_parity_vs_oracle():
     zbra = oracle.table_column_sizes(tbl)["e"]
     ours = len(C.encode_column(u, {}, "e"))
     assert ours <= zbra, (ours, zbra)
+
+
+def _wide_ints(n: int) -> pa.Array:
+    return pa.array(np.random.default_rng(0).integers(-2**62, 2**62, n))
+
+
+def _enum(child: pa.Array) -> pa.Array:
+    n = len(child)
+    return pa.UnionArray.from_dense(
+        pa.array([0] * n, pa.int8()), pa.array(range(n), pa.int32()),
+        [child, pa.array([], pa.string())], ["big", "small"])
+
+
+@pytest.mark.parametrize("kind,field", [
+    ("struct", "struct child chunk length"),
+    ("map", "map key chunk length"),
+    ("enum", "enum child chunk length"),
+])
+def test_child_chunk_length_past_u32_limit_is_refused(monkeypatch, kind,
+                                                      field):
+    """A child chunk is longer than any segment inside it, so a limit of
+    its length - 1 trips only the chunk's own u32 field."""
+    from zseq.codecs import intcodecs as IC
+
+    child = _wide_ints(1000)
+    arr = {"struct": lambda: pa.StructArray.from_arrays([child], ["c"]),
+           "map": lambda: pa.MapArray.from_arrays(
+               pa.array([0, 1000], pa.int32()), child,
+               pa.array([0] * 1000, pa.int8())),
+           "enum": lambda: _enum(child)}[kind]()
+    limit = len(C.encode_column(child)) - 1
+    monkeypatch.setattr(IC, "LEN_LIMIT", limit)
+    with pytest.raises(ValueError, match=f"{field} .* limit of {limit:,}"):
+        C.encode_column(arr)
+
+
+def test_validity_byte_count_past_u32_limit_is_refused(monkeypatch):
+    from zseq.codecs import intcodecs as IC
+
+    arr = pa.array([None if i % 3 else i for i in range(1000)], pa.int64())
+    monkeypatch.setattr(IC, "LEN_LIMIT", 124)
+    with pytest.raises(ValueError,
+                       match="validity byte count 125 .* limit of 124"):
+        C.encode_column(arr)

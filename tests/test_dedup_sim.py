@@ -305,26 +305,23 @@ def test_ivf_recall_at_nprobe(spark, vecs, monkeypatch):
     assert top0 == [500]
 
 
-def test_ivf_matrix_path_matches_inline(spark, vecs, monkeypatch):
-    """Forcing the broadcast-matrix prober (cap -> 0) must return rows
-    identical to the inline-expression path on the same corpus — same
-    scores, same smaller-cid tie-breaks."""
+def test_ivf_assignment_runs_as_arrow_udf(spark, vecs, monkeypatch):
+    """Cell assignment and probing run as the vectorized Arrow prober:
+    one batch-at-a-time Python node per side of the probe join (corpus
+    assignment, query probing) in the executed plan, and no K x dim
+    centroid literals in the projection."""
     _queries(monkeypatch, 3, 5)
-    inline = sim.ivf_topk(vecs, 16, c_mod=10, nprobe=3).collect()
-    monkeypatch.setattr(sim, "IVF_MAX_INLINE_TERMS", 0)
-    matrix = sim.ivf_topk(vecs, 16, c_mod=10, nprobe=3)
-    plan = matrix._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan, plan  # really the vectorized UDF
-    assert sorted(map(tuple, matrix.collect())) == \
-        sorted(map(tuple, inline))
+    out = sim.ivf_topk(vecs, 16, c_mod=10, nprobe=3)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 2, plan
+    assert "array_max" not in plan, plan
+    assert out.count() == 15
 
 
 def test_ivf_matrix_path_dim768_k1024_probe_all(spark, monkeypatch):
-    """The production-embedding regime the inline expression can't
-    reach: dim=768, K=1024 (K*dim ~ 786k terms > IVF_MAX_INLINE_TERMS).
-    Probe-all through the broadcast-matrix path must equal exact brute
-    force — the same exhaustiveness identity the inline path proves at
-    dim 16."""
+    """The production-embedding regime: dim=768, K=1024 (K*dim ~ 786k
+    terms of broadcast centroid matrix). Probe-all must equal exact
+    brute force — the same exhaustiveness identity proved at dim 16."""
     import numpy as np
 
     rng = np.random.default_rng(41)
@@ -333,7 +330,6 @@ def test_ivf_matrix_path_dim768_k1024_probe_all(spark, monkeypatch):
     rows = [(i, [float(x) for x in mat[i]]) for i in range(2048)]
     vecs768 = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>")
-    assert 1024 * 768 > sim.IVF_MAX_INLINE_TERMS
     _queries(monkeypatch, 3, 5)
     ivf = sim.ivf_topk(vecs768, 768, c_mod=2, nprobe=1024)
     bf = sim.brute_force_topk(vecs768)
@@ -342,12 +338,11 @@ def test_ivf_matrix_path_dim768_k1024_probe_all(spark, monkeypatch):
 
 
 def test_ivf_null_embedding_degrades_gracefully(spark, vecs, monkeypatch):
-    """A NULL embedding row must not fail the job on either path: it
-    joins no cell and drops out of the results; clean rows rank as
-    usual. (The matrix prober would otherwise np.stack-crash the whole
-    task on one bad row.)"""
-    import pyspark.sql.functions as F
-
+    """Dirty rows must not fail the job: null vectors, null-ELEMENT
+    vectors and wrong-length vectors are normalized to null, join no
+    cell and drop out; NaN elements quantize to 0; clean rows rank as
+    usual. The expected rows were recorded when an inline-SQL quantizer
+    and the matrix prober both existed and agreed on them."""
     nanvec = [float("nan")] * 8 + [0.5] * 8
     nullelem = [None] * 4 + [0.25] * 12   # NULL ELEMENT -> null vector
     ragged = [0.5] * 15                   # WRONG LENGTH -> null vector
@@ -358,15 +353,41 @@ def test_ivf_null_embedding_degrades_gracefully(spark, vecs, monkeypatch):
          (990, None)],
         "vec_id long, embedding array<float>"))
     _queries(monkeypatch, 3, 5)
-    inline = sim.ivf_topk(dirty, 16, c_mod=10, nprobe=3).collect()
-    monkeypatch.setattr(sim, "IVF_MAX_INLINE_TERMS", 0)
-    matrix = sim.ivf_topk(dirty, 16, c_mod=10, nprobe=3).collect()
-    # NaN elements quantize to 0 on BOTH paths (measured ANSI cast
-    # semantics); null vectors, null-ELEMENT vectors and wrong-length
-    # vectors are normalized to null and drop on both — row-identical
-    assert sorted(map(tuple, matrix)) == sorted(map(tuple, inline))
-    assert {999, 997, 996, 990}.isdisjoint(
-        {r.neighbor_id for r in matrix})
+    got = sorted(map(tuple, sim.ivf_topk(dirty, 16, c_mod=10,
+                                         nprobe=3).collect()))
+    assert got == [
+        (0, 6, 776236, 2), (0, 19, 467701, 5), (0, 23, 587559, 3),
+        (0, 43, 527410, 4), (0, 500, 999387, 1), (1, 10, 436624, 2),
+        (1, 20, 122761, 5), (1, 31, 303061, 3), (1, 49, 507830, 1),
+        (1, 73, 302926, 4), (2, 27, 435366, 2), (2, 35, 377809, 4),
+        (2, 36, 486829, 1), (2, 65, 406346, 3), (2, 70, 367060, 5)]
+
+
+def test_ivf_prober_quantizes_like_ansi_sql_cast():
+    """The Arrow batch prober alone: NaN -> 0, +/-Inf -> int64 max/min,
+    a finite value past int64 raises, a null row gets a null list, a
+    non-null row of the wrong length raises, and equal scores go to the
+    smaller cid (argmax and the top-n sort alike)."""
+    import numpy as np
+    import pyarrow as pa
+
+    cids = np.array([3, 5, 8], dtype=np.int64)
+    mat = np.array([[1, 0], [0, 1], [0, 1]], dtype=np.int64)
+    inf, nan = float("inf"), float("nan")
+    vs = pa.array([[inf, 0.5],       # max beats 500: cell 3 first
+                   [-inf, 0.5],      # min: cell 3 last
+                   None,
+                   [nan, -0.001],    # 0 beats -1: cell 3
+                   [0.5, 0.5]],      # 500 x 3: ties to the smaller cid
+                  pa.list_(pa.float32()))
+    assert sim._probe_cells(vs, cids, mat, 1).to_pylist() == \
+        [[3], [5], None, [3], [3]]
+    assert sim._probe_cells(vs, cids, mat, 2).to_pylist() == \
+        [[3, 5], [5, 8], None, [3, 5], [3, 5]]
+    with pytest.raises(ValueError, match="overflows int64"):
+        sim._probe_cells(pa.array([[1e300, 0.0]]), cids, mat, 1)
+    with pytest.raises(ValueError, match="dim 2"):
+        sim._probe_cells(pa.array([[0.5]]), cids, mat, 1)
 
 
 def test_ivf_matrix_terms_cap_raises(spark, vecs):

@@ -779,7 +779,45 @@ def test_segment_payload_past_u32_limit_is_refused(monkeypatch):
                            match="segment payload length .* limit of 100"):
             IC.encode_ints(arr, codec=codec)
     with pytest.raises(ValueError, match="segment payload length"):
-        BC.encode_binary(np.array([200]), np.full(200, 7, np.uint8))
+        BC.encode_binary(np.array([100, 100]),
+                         np.arange(200, dtype=np.uint8))
+
+
+@pytest.mark.parametrize("codec,field", [(IC.T_DICT, "dict cardinality"),
+                                         (IC.T_RLE, "rle run count")])
+def test_int_count_field_past_u32_limit_is_refused(monkeypatch, codec,
+                                                   field):
+    arr = np.repeat(np.arange(300, dtype=np.int64) * 1_000_003, 7)
+    monkeypatch.setattr(IC, "LEN_LIMIT", 299)
+    with pytest.raises(ValueError, match=f"{field} 300 .* limit of 299"):
+        IC.encode_ints(arr, codec=codec)
+
+
+def test_wsym_stream_length_past_u32_limit_is_refused(monkeypatch):
+    """The symbol stream is shorter than its segment, so a limit of its
+    length - 1 trips only the width-symbol header's u32 field."""
+    arr = np.random.default_rng(1).zipf(1.3, 5000).astype(np.int64)
+    seg = IC.encode_ints(arr, codec=IC.T_WSYM)
+    (slen,) = struct.unpack_from("<I", seg, IC.HEADER.size + 16)
+    monkeypatch.setattr(IC, "LEN_LIMIT", slen - 1)
+    with pytest.raises(ValueError, match="width-symbol stream length"):
+        IC.encode_ints(arr, codec=IC.T_WSYM)
+
+
+def test_binary_const_length_past_u32_limit_is_refused(monkeypatch):
+    monkeypatch.setattr(IC, "LEN_LIMIT", 100)
+    with pytest.raises(ValueError, match="const value length 200"):
+        BC.encode_binary(np.array([200, 200]), np.full(400, 7, np.uint8),
+                         codec=BC.T_BIN_CONST)
+
+
+def test_binary_dict_cardinality_past_u32_limit_is_refused(monkeypatch):
+    strs = [b"v%03d" % (i % 300) for i in range(3000)]
+    data = np.frombuffer(b"".join(strs), np.uint8)
+    lens = np.array([len(v) for v in strs], dtype=np.int64)
+    monkeypatch.setattr(IC, "LEN_LIMIT", 299)
+    with pytest.raises(ValueError, match="dict cardinality 300"):
+        BC.encode_binary(lens, data, codec=BC.T_BIN_DICT)
 
 
 def test_wrapped_inner_length_past_u32_limit_is_refused(monkeypatch):

@@ -17,7 +17,11 @@ either.
 Every defaulted parameter of a ``zseq/`` function must be passed, by
 keyword or position, by some call of that function's name in the same
 sources. Tests do not count here either: a value only a test sets is a
-module constant the test patches, not a parameter."""
+module constant the test patches, not a parameter.
+
+Every field of a ``zseq/`` ``@dataclass`` must be read as an attribute
+in the same sources: a field that is only computed and stored costs its
+computation on every construction."""
 
 import ast
 import os
@@ -145,3 +149,35 @@ def test_every_defaulted_parameter_has_a_caller():
                         for npos, kws in calls.get(name, []))]
     assert not unset, "no caller passes these parameters:\n" + \
         "\n".join(unset)
+
+
+def _dataclass_fields(tree) -> list[tuple[str, str]]:
+    """(class, field) of every ``@dataclass`` class in ``tree``."""
+    out = []
+    for c in ast.walk(tree):
+        if isinstance(c, ast.ClassDef) and any(
+                "dataclass" in ast.unparse(d) for d in c.decorator_list):
+            out += [(c.name, n.target.id) for n in c.body
+                    if isinstance(n, ast.AnnAssign)
+                    and isinstance(n.target, ast.Name)]
+    return out
+
+
+def test_every_dataclass_field_is_read():
+    """A ``@dataclass`` field in ``zseq/`` must be read as ``.field``
+    somewhere in the engine or the programs that drive it: a field only
+    ever computed and stored is dead work on every construction."""
+    fields, reads = [], Counter()
+    for path in _sources():
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        rel = os.path.relpath(path, REPO)
+        if rel.startswith("zseq" + os.sep):
+            fields += [(rel, *cf) for cf in _dataclass_fields(tree)]
+        reads.update(n.attr for n in ast.walk(tree)
+                     if isinstance(n, ast.Attribute)
+                     and isinstance(n.ctx, ast.Load))
+    assert len(fields) > 10  # the scan sees the engine's dataclasses
+    unread = [f"{rel}: {cls}.{name}" for rel, cls, name in fields
+              if not reads[name]]
+    assert not unread, "never read as an attribute:\n" + "\n".join(unread)

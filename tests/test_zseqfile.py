@@ -1,6 +1,7 @@
 """.zseq file format roundtrips + integrity checks."""
 
 import io
+import json
 
 import pyarrow as pa
 import pytest
@@ -264,8 +265,11 @@ def test_mixed_kind_table_roundtrip(rows):
             assert a.equals(b), name
 
 
-def _write(batch: pa.RecordBatch) -> None:
-    zseqfile.ZseqWriter(io.BytesIO(), batch.schema).write_batch(batch)
+def _writer(batch: pa.RecordBatch):
+    """``write_batch(batch)`` on a writer whose header (meta and schema
+    lengths, checked at construction) is already written."""
+    w = zseqfile.ZseqWriter(io.BytesIO(), batch.schema)
+    return lambda: w.write_batch(batch)
 
 
 def test_block_row_count_past_u32_limit_is_refused(monkeypatch):
@@ -274,10 +278,10 @@ def test_block_row_count_past_u32_limit_is_refused(monkeypatch):
     so no 4 GiB input is built."""
     from zseq.codecs import intcodecs as IC
 
-    batch = synth.tokens_table_arrow(10).to_batches()[0]
+    write = _writer(synth.tokens_table_arrow(10).to_batches()[0])
     monkeypatch.setattr(IC, "LEN_LIMIT", 9)
     with pytest.raises(ValueError, match="block row count 10 .* limit of 9"):
-        _write(batch)
+        write()
 
 
 def test_chunk_length_past_u32_limit_names_the_column(monkeypatch):
@@ -292,18 +296,34 @@ def test_chunk_length_past_u32_limit_names_the_column(monkeypatch):
     wide = pa.StructArray.from_arrays(
         [pa.array(rng.integers(-2**62, 2**62, 1000)) for _ in range(20)],
         names=[f"c{i}" for i in range(20)])
-    batch = pa.record_batch([wide], names=["wide"])
+    write = _writer(pa.record_batch([wide], names=["wide"]))
     chunk = COL.encode_column(wide, None, "wide", zone=True)
     monkeypatch.setattr(IC, "LEN_LIMIT", len(chunk) - 1)
     with pytest.raises(ValueError, match="column 'wide': chunk length"):
-        _write(batch)
+        write()
 
 
 def test_segment_past_u32_limit_names_the_column(monkeypatch):
     from zseq.codecs import intcodecs as IC
 
     tok = synth.tokens_table_arrow(50).column("tokens").chunk(0)
-    monkeypatch.setattr(IC, "LEN_LIMIT", 100)
+    write = _writer(pa.record_batch([tok], names=["tokens"]))
+    # above the chunk's distinct-value count (3,861), so the dict
+    # candidate's cardinality field is not the one refused
+    monkeypatch.setattr(IC, "LEN_LIMIT", 4000)
     with pytest.raises(ValueError,
                        match="column 'tokens': segment payload length"):
-        _write(pa.record_batch([tok], names=["tokens"]))
+        write()
+
+
+@pytest.mark.parametrize("field", ["meta length", "schema length"])
+def test_header_length_past_u32_limit_is_refused(monkeypatch, field):
+    from zseq.codecs import intcodecs as IC
+
+    meta = {"k": "v" * 100}
+    schema = synth.tokens_table_arrow(10).schema
+    n = len(json.dumps(meta)) if field == "meta length" \
+        else len(schema.serialize())
+    monkeypatch.setattr(IC, "LEN_LIMIT", n - 1)
+    with pytest.raises(ValueError, match=f"{field} {n:,} .* limit of"):
+        zseqfile.ZseqWriter(io.BytesIO(), schema, meta)

@@ -147,7 +147,8 @@ def _enc_fsst(lengths: np.ndarray, data: np.ndarray) -> bytes:
 
 def _enc_const(lengths: np.ndarray, data: np.ndarray) -> bytes:
     L = int(lengths[0])
-    return struct.pack("<I", L) + data[:L].tobytes()
+    return struct.pack("<I", IC.u32_len(L, "const value length")) \
+        + data[:L].tobytes()
 
 
 def _enc_dict(lengths: np.ndarray, data: np.ndarray) -> bytes:
@@ -164,13 +165,14 @@ def _enc_dict(lengths: np.ndarray, data: np.ndarray) -> bytes:
     dict_vals = dvals.to_pylist()
     dict_blob = b"".join(dict_vals)
     dlens = np.array([len(v) for v in dict_vals], dtype=np.int64)
+    card = struct.pack("<I", IC.u32_len(dlens.size, "dict cardinality"))
     dbuf = np.frombuffer(dict_blob, dtype=np.uint8)
     sub_tag = select_bin_codec(dlens, dbuf)
     if sub_tag == T_BIN_DICT:  # no recursive dictionaries
         sub_tag = T_BIN_ZSTD
     dict_seg = encode_binary(dlens, dbuf, codec=sub_tag)
     idx_seg = IC.encode_ints(idx, exclude=frozenset({IC.T_DICT}))
-    return struct.pack("<I", dlens.size) + dict_seg + idx_seg
+    return card + dict_seg + idx_seg
 
 
 # ---------------------------------------------------------------------------
@@ -322,10 +324,18 @@ def select_bin_codec(lengths: np.ndarray, data: np.ndarray) -> int:
     # (~3-6x), or when strings are long (zstd's home turf).
     zstd_ratio = est[T_BIN_ZSTD] / max(1.0, float(total))
     if mean_len <= FSST_MAX_MEAN_LEN and total >= 1024 and zstd_ratio > 0.22:
-        table = fsst.build_table(sample_vals)
         slens = np.array([len(v) for v in sample_vals], dtype=np.int64)
-        sdata = np.frombuffer(sample_blob, dtype=np.uint8)
-        enc, _ = fsst.encode_column(sdata, _offsets(slens), table)
-        ratio = enc.size / sample_bytes
-        est[T_BIN_FSST] = ratio * total + len(table.serialize()) + n * 0.5 + 40
+        # Nor when even FSST's floor loses: a code covers at most 8 bytes,
+        # a non-empty string emits at least one code and the table is at
+        # least 1 byte, so the estimate below is never under this floor
+        # (same association, so float rounding keeps the order) and min()
+        # keeps the earlier key on a tie: the selection is unchanged.
+        lo = max(len(sample_blob) / 8, np.count_nonzero(slens)) / sample_bytes
+        if lo * total + 1 + n * 0.5 + 40 < min(est.values()):
+            table = fsst.build_table(sample_vals)
+            sdata = np.frombuffer(sample_blob, dtype=np.uint8)
+            enc, _ = fsst.encode_column(sdata, _offsets(slens), table)
+            ratio = enc.size / sample_bytes
+            est[T_BIN_FSST] = (ratio * total + len(table.serialize())
+                               + n * 0.5 + 40)
     return min(est, key=est.__getitem__)

@@ -520,7 +520,8 @@ def _enc_wsym(arr: np.ndarray) -> bytes:
 
     sym = zstd_compress_symbols(k)
     body = words.astype("<u4", copy=False).view(np.uint8)
-    return b"".join((_WSYM_HEAD.pack(lo, hi, len(sym)), sym,
+    slen = u32_len(len(sym), "width-symbol stream length")
+    return b"".join((_WSYM_HEAD.pack(lo, hi, slen), sym,
                      body[: (total + 7) // 8]))
 
 
@@ -626,9 +627,10 @@ def _dec_delta(payload: memoryview, count: int) -> np.ndarray:
 
 def _enc_dict(arr: np.ndarray) -> bytes:
     uniq, idx = np.unique(arr, return_inverse=True)
+    card = struct.pack("<I", u32_len(uniq.size, "dict cardinality"))
     d = encode_ints(uniq, codec=_pick_simple(uniq))
     i = encode_ints(idx.astype(np.int64), exclude=frozenset({T_DICT}))
-    return struct.pack("<I", uniq.size) + d + i
+    return card + d + i
 
 
 def _dec_dict(payload: memoryview, count: int,
@@ -663,9 +665,10 @@ def run_lengths(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 def _enc_rle(arr: np.ndarray) -> bytes:
     vals, lens = run_lengths(arr)
+    nruns = struct.pack("<I", u32_len(vals.size, "rle run count"))
     v = encode_ints(vals, codec=_pick_simple(vals))
     l = encode_ints(lens, exclude=frozenset({T_RLE, T_DICT}))
-    return struct.pack("<I", vals.size) + v + l
+    return nruns + v + l
 
 
 def _dec_rle(payload: memoryview, count: int,

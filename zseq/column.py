@@ -150,7 +150,8 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
     vseg = b""
     if valid is not None:
         bits = np.packbits(valid, bitorder="little").tobytes()
-        vseg = struct.pack("<I", len(bits)) + bits
+        vseg = struct.pack(
+            "<I", IC.u32_len(len(bits), "validity byte count")) + bits
 
     def head(kind: int, zseg: bytes = b"") -> bytes:
         flags = (1 if valid is not None else 0) | (2 if zseg else 0)
@@ -274,7 +275,9 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
             chunk = encode_column(child, stats, f"{path}.{fld.name}")
             nb = fld.name.encode()
             body += struct.pack("<H", len(nb)) + nb
-            body += struct.pack("<I", len(chunk)) + chunk
+            body += struct.pack(
+                "<I", IC.u32_len(len(chunk), "struct child chunk length"))
+            body += chunk
         return head(K_STRUCT) + bytes(body)
     if pa.types.is_map(t):
         # Map == lengths + flattened key child + flattened item child
@@ -296,7 +299,8 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
         iseg = encode_column(items, stats, path + ".value")
         return (
             head(K_MAP) + lseg
-            + struct.pack("<I", len(kseg)) + kseg + iseg
+            + struct.pack("<I", IC.u32_len(len(kseg), "map key chunk length"))
+            + kseg + iseg
         )
     if pa.types.is_union(t):
         # Enum (sum type): tags + sparse per-variant children
@@ -339,7 +343,9 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
             nb = fld.name.encode()
             body += struct.pack("<b", int(tcodes[i]))
             body += struct.pack("<H", len(nb)) + nb
-            body += struct.pack("<I", len(chunk)) + chunk
+            body += struct.pack(
+                "<I", IC.u32_len(len(chunk), "enum child chunk length"))
+            body += chunk
         return head(K_ENUM) + tseg + bytes(body)
     if pa.types.is_decimal(t):
         if pa.types.is_decimal256(t):

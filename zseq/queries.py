@@ -1174,17 +1174,15 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sim_ivf_topk_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVF broadcast-matrix assignment path (the production-dim
-    regime where inlining K x dim literals would blow up Catalyst),
-    FORCED here via max_inline_terms=0 on the same corpus/constants as
-    sim_ivf_topk — so the SAME static oracle must hash-match: the two
-    physical paths are semantically identical by contract (stable argmax
-    ties to the smaller cid)."""
+    """The IVF broadcast-matrix assignment path, the production-dim
+    regime where K x dim literals would blow up Catalyst. It is now the
+    only path, so this takes the same path as sim_ivf_topk on the same
+    corpus and constants, and the SAME static oracle must hash-match
+    (stable argmax ties to the smaller cid)."""
     from . import sim
 
     df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return sim.ivf_topk(df, _EMB_DIM, c_mod=50, nprobe=2,
-                        max_inline_terms=0)
+    return sim.ivf_topk(df, _EMB_DIM, c_mod=50, nprobe=2)
 
 
 def q_sim_ivf_topk_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -54,7 +54,6 @@ def _sample(arr: np.ndarray) -> np.ndarray:
 @dataclass
 class IntStats:
     n: int
-    sampled: int
     card_ratio: float       # unique/sampled on the sample
     mean_run: float          # mean run length on the sample
     sorted_frac: float       # fraction of non-negative successive deltas
@@ -62,7 +61,6 @@ class IntStats:
     delta_bits: int          # bits of max |successive delta| (zig-zag domain)
     vmin: int
     vmax: int
-    med_est: int             # sample median (zbra's FOR reference)
     mini_bits: float         # mean per-mini-block width (contiguous windows)
 
 
@@ -77,7 +75,6 @@ def int_stats(arr: np.ndarray) -> IntStats:
     range_bits = rng.bit_length() if rng else 0
     uniq = np.unique(s)
     card_ratio = uniq.size / m
-    med_est = int(np.partition(s, m // 2)[m // 2]) if m else 0
     # Delta/run/sortedness statistics come from CONTIGUOUS windows, not
     # the strided sample: step-apart differences are blind to adjacent
     # oscillation (a ±1e6 alternation with period under the stride reads
@@ -117,8 +114,8 @@ def int_stats(arr: np.ndarray) -> IntStats:
     else:
         mean_run, sorted_frac = 1.0, 1.0
     mini_bits = float(np.mean(bits)) if bits else 0.0
-    return IntStats(n, m, card_ratio, mean_run, sorted_frac,
-                    range_bits, delta_bits, vmin, vmax, med_est, mini_bits)
+    return IntStats(n, card_ratio, mean_run, sorted_frac,
+                    range_bits, delta_bits, vmin, vmax, mini_bits)
 
 
 def predict_int_sizes(st: IntStats) -> dict[int, float]:

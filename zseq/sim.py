@@ -12,8 +12,9 @@ Four families:
                       touched once to bucket.
   IVF                 coarse quantizer (modular pick, optionally refined
                       by integer Lloyd rounds) -> cell assignment as one
-                      projection -> queries probe their nprobe best
-                      cells, exact rerank.
+                      Arrow UDF projection (a numpy matmul against the
+                      broadcast centroid matrix) -> queries probe their
+                      nprobe best cells, exact rerank.
   embedding near-dups pairs co-located in an LSH bucket whose quantized
                       dot clears NEAR_DUP_MIN_DOT_Q.
 
@@ -32,7 +33,8 @@ small at any scale, and multi-probe of neighboring buckets buys recall
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -249,15 +251,7 @@ def lsh_topk(df: DataFrame, dim: int, bits: int | None = None,
 # IVF (inverted-file) ANN: coarse quantizer -> cell assignment -> probe
 # ---------------------------------------------------------------------------
 
-#: Inline the quantizer into a SQL expression only up to this many K*dim
-#: terms. The cap is on K*dim, NOT K: the expression size (and Catalyst
-#: analysis cost) scales with the literal count, so K=4096 at dim=64 is
-#: fine (262144 terms, the testdata regime) while the SAME K at
-#: production dims 768-1536 would be a multi-MB projection Catalyst
-#: chokes on. Beyond the cap the broadcast-matrix path takes over.
-IVF_MAX_INLINE_TERMS = 262_144
-
-#: Hard cap on the quantizer's K*dim for the broadcast-matrix path:
+#: Hard cap on the quantizer's K*dim, the broadcast centroid matrix:
 #: 16M int64 terms = 128 MB of broadcast state per executor — the point
 #: where "coarse quantizer as broadcast state" stops being coarse.
 IVF_MAX_MATRIX_TERMS = 16_777_216
@@ -307,8 +301,7 @@ def _ivf_centroids(df: DataFrame, c_mod: int,
 
 
 def _kmeans_refine(base: DataFrame, cents: list[tuple[int, list[int]]],
-                   dim: int, inline_cap: int = IVF_MAX_INLINE_TERMS
-                   ) -> list[tuple[int, list[int]]]:
+                   dim: int) -> list[tuple[int, list[int]]]:
     """Deterministic integer Lloyd refinement of the modular init:
     ``KMEANS_ITERS`` fixed rounds of (assign every row to its argmax-dot cell,
     ties to the smaller cid) -> (new centroid = floor of the component-
@@ -319,8 +312,8 @@ def _kmeans_refine(base: DataFrame, cents: list[tuple[int, list[int]]],
     and not float k-means). Cell labels keep the init's cids; a cell
     that goes empty keeps its previous centroid (standard Lloyd).
 
-    Cost: per round, one corpus scan for assignment (the same inline-
-    codegen / broadcast-matrix split the query path uses) plus one
+    Cost: per round, one corpus scan for assignment (the query path's
+    Arrow matrix prober, :func:`_ivf_probe_udfs`) plus one
     map-side-combined aggregation whose shuffle is K*dim partial sums —
     bounded by the same IVF_MAX_MATRIX_TERMS cap as the quantizer
     itself, never corpus-sized."""
@@ -330,33 +323,19 @@ def _kmeans_refine(base: DataFrame, cents: list[tuple[int, list[int]]],
         for i in range(dim)
     ]
     for _ in range(KMEANS_ITERS):
-        assign1 = None
-        if len(cents) * dim <= inline_cap:
-            cells = _ivf_cell_structs(cents)
-            assigned = base.selectExpr(
-                "embedding",
-                "case when embedding is null then null "
-                f"else -array_max({cells}).negc end as cid",
-            ).filter("cid is not null")
-        else:
-            (assign1,) = _ivf_probe_udfs(base, cents, [1])
-            assigned = base.withColumn(
-                "cid", F.element_at(assign1(F.col("embedding")), 1)
-            ).filter("cid is not null")
+        bc, (assign1,) = _ivf_probe_udfs(base, cents, [1])
         stats = (
-            assigned.selectExpr("cid", *qcols)
+            base.withColumn("cid", F.element_at(assign1("embedding"), 1))
+            .filter("cid is not null")
+            .selectExpr("cid", *qcols)
             .groupBy("cid")
             .agg(F.count("*").alias("n"),
                  *[F.sum(f"q{i}").alias(f"s{i}") for i in range(dim)])
             .collect()
         )
-        if assign1 is not None:
-            # this round's centroid broadcast is dead once the stats
-            # are collected — release it instead of accumulating one
-            # ~128 MB blob per iteration
-            bc = getattr(assign1, "_zseq_bc", None)
-            if bc is not None:
-                bc.unpersist(False)
+        # this round's centroid broadcast is dead once the stats are
+        # collected — release it instead of pinning one per round
+        bc.unpersist(False)
         by_cid = {int(r["cid"]): r for r in stats}
         new: list[tuple[int, list[int]]] = []
         for cid, q in cents:
@@ -373,114 +352,77 @@ def _kmeans_refine(base: DataFrame, cents: list[tuple[int, list[int]]],
     return cents
 
 
+def _probe_cells(vs: pa.ListArray, cids: np.ndarray, mat: np.ndarray,
+                 n: int) -> pa.ListArray:
+    """One Arrow batch of vectors -> each row's ``n`` best cids, best
+    first. The non-null rows' flat values become one (rows, dim) matrix,
+    quantized like the SQL ``cast(floor(x * QUANT) as bigint)`` under
+    ANSI: NaN -> 0, +/-Inf -> int64 max/min, a finite value past int64
+    raises. One int64 matmul scores every cell; ties go to the smaller
+    cid (``cids`` is sorted, argmax takes the first max, the argsort is
+    stable). A null row gets a null list, so it joins no cell."""
+    dim = mat.shape[1]
+    if pc.any(pc.not_equal(pc.list_value_length(vs), dim)).as_py():
+        raise ValueError(
+            f"ivf probe: a non-null embedding's length is not dim {dim}")
+    valid = vs.is_valid().to_numpy(zero_copy_only=False)
+    x = vs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    scaled = np.floor(x.reshape(-1, dim) * QUANT)
+    finite = np.isfinite(scaled)
+    over = finite & ((scaled > 9.223372036854774e18)
+                     | (scaled < -9.223372036854775e18))
+    if over.any():
+        raise ValueError(
+            "ivf probe: embedding value "
+            f"{float(scaled[over][0]) / QUANT!r} overflows int64 after "
+            f"x{QUANT} quantization. Normalize embeddings before indexing.")
+    q = np.where(finite, scaled, 0).astype(np.int64)
+    q[scaled == np.inf] = np.iinfo(np.int64).max
+    q[scaled == -np.inf] = np.iinfo(np.int64).min
+    scores = q @ mat.T                    # (rows, K) exact int64
+    if n == 1:
+        # O(K) first max: the per-corpus-row hot path; only the query
+        # rows pay the O(K log K) argsort
+        tops = cids[scores.argmax(axis=1)][:, None]
+    else:
+        # ~s == -s - 1 orders like -s without -int64_min overflowing
+        tops = cids[np.argsort(~scores, axis=1, kind="stable")[:, :n]]
+    offsets = np.zeros(len(vs) + 1, dtype=np.int32)
+    offsets[1:] = np.cumsum(valid * tops.shape[1])
+    return pa.ListArray.from_arrays(offsets, pa.array(tops.ravel()),
+                                    mask=pa.array(~valid))
+
+
 def _ivf_probe_udfs(df: DataFrame, cents: list[tuple[int, list[int]]],
                     ns: list[int]):
-    """Vectorized (Arrow-batched) cell probers for quantizers too large
-    to inline: the (K, dim) int64 centroid matrix is an explicit Spark
-    BROADCAST (made ONCE and shared by every returned prober — at the
-    16M-term cap a duplicate would double 128 MB of executor state), and
-    each batch scores all K cells with one numpy matmul
-    (batch x dim) @ (dim x K), then takes the top-``n`` cids per row —
-    stable argsort on -score, so ties go to the smaller cid, exactly the
-    inline path's struct-max/reverse-sort semantics. No per-row Python,
-    no expression blow-up: Catalyst sees one opaque projection. Returns
-    one pandas UDF per entry of ``ns``."""
-    from pyspark.sql.functions import pandas_udf
+    """Cell probers: the (K, dim) int64 centroid matrix is one explicit
+    Spark BROADCAST, shared by every returned prober (at the 16M-term cap
+    a duplicate would double 128 MB of executor state), and each Arrow
+    batch is scored by :func:`_probe_cells`. No per-row Python and no
+    K x dim literals in the plan: Catalyst sees one ArrowEvalPython
+    projection. Returns the broadcast (iterative callers unpersist it)
+    and one Arrow UDF per entry of ``ns``."""
+    from pyspark.sql.functions import arrow_udf
 
-    cids = np.array([c for c, _ in cents], dtype=np.int64)
-    mat = np.array([q for _, q in cents], dtype=np.int64)
-    bc = df.sparkSession.sparkContext.broadcast((cids, mat))
+    bc = df.sparkSession.sparkContext.broadcast(
+        (np.array([c for c, _ in cents], dtype=np.int64),
+         np.array([q for _, q in cents], dtype=np.int64)))
 
     def make(n: int):
-        @pandas_udf("array<bigint>")
-        def probe(vs: pd.Series) -> pd.Series:
-            if len(vs) == 0:
-                return pd.Series([], dtype=object)
-            cids_, mat_ = bc.value
-            # NULL / ragged vectors get a NULL probe list — they then
-            # join no cell, exactly the inline path's degradation (its
-            # null scores make explode/join drop the row). A raw
-            # np.stack would instead fail the whole task on one bad row.
-            out: list = [None] * len(vs)
-            idxs, vecs = [], []
-            for i, v in enumerate(vs):
-                if v is None:
-                    continue
-                a = np.asarray(v, dtype=np.float64)
-                if a.ndim != 1 or a.shape[0] != mat_.shape[1]:
-                    continue
-                idxs.append(i)
-                vecs.append(a)
-            if vecs:
-                # Element quantization mirrors the inline SQL cast
-                # (measured on this Spark, ANSI on): NaN -> 0,
-                # +/-Inf -> int64 max/min. FINITE values past int64
-                # RAISE, exactly like the inline path's ANSI cast would
-                # — the two physical paths must be behaviorally
-                # identical on every input, not just on the normalized
-                # embeddings where overflow is unreachable (float32
-                # embeddings stay ~1e18 away from the edge).
-                scaled = np.floor(np.stack(vecs) * QUANT)
-                finite = np.isfinite(scaled)
-                over = finite & ((scaled > 9.223372036854774e18)
-                                 | (scaled < -9.223372036854775e18))
-                if over.any():
-                    bad = float(scaled[over].flat[0]) / QUANT
-                    raise ValueError(
-                        "ivf probe: embedding value "
-                        f"{bad!r} overflows int64 after x{QUANT} "
-                        "quantization (the inline SQL path would raise "
-                        "under ANSI too). Normalize embeddings before "
-                        "indexing.")
-                q = np.zeros(scaled.shape, dtype=np.int64)
-                q[finite] = scaled[finite].astype(np.int64)
-                q[scaled == np.inf] = np.iinfo(np.int64).max
-                q[scaled == -np.inf] = np.iinfo(np.int64).min
-                scores = q @ mat_.T               # (batch, K) exact int64
-                if n == 1:
-                    # O(K) first-max == smallest cid on ties (cid-sorted
-                    # matrix) — this is the per-corpus-row hot path; the
-                    # O(K log K) argsort is only paid by query rows.
-                    tops = cids_[scores.argmax(axis=1)][:, None]
-                else:
-                    order = np.argsort(-scores, axis=1,
-                                       kind="stable")[:, :n]
-                    tops = cids_[order]
-                for j, i in enumerate(idxs):
-                    out[i] = tops[j]
-            return pd.Series(out)
+        @arrow_udf("array<bigint>")
+        def probe(vs: pa.Array) -> pa.Array:
+            return _probe_cells(vs, *bc.value, n)
 
-        return probe
+        # Marked nondeterministic only so that Catalyst does not copy the
+        # prober into the isnotnull(cid) filter it infers and pushes below
+        # the projection: the corpus goes through Python once, not twice.
+        return probe.asNondeterministic()
 
-    udfs = [make(n) for n in ns]
-    for u in udfs:
-        # expose the shared broadcast so iterative callers (the k-means
-        # refiner builds fresh centroids each round) can unpersist it —
-        # otherwise every Lloyd iteration pins up to 128 MB of dead
-        # executor state for the application's lifetime
-        u._zseq_bc = bc
-    return udfs
-
-
-def _ivf_cell_structs(cents: list[tuple[int, list[int]]]) -> str:
-    """Spark SQL: array of (score, -cid) structs against every centroid —
-    the per-row coarse scoring, fully inside whole-stage codegen, zero
-    joins/shuffles. Struct comparison is lexicographic, so max == argmax
-    with ties to the smaller cid."""
-    structs = ", ".join(
-        "struct(("
-        "aggregate(zip_with(embedding, "
-        f"array({', '.join(f'{c}L' for c in q)}), "
-        f"(x, c) -> cast(floor(cast(x as double) * {QUANT}) as bigint)"
-        " * c), 0L, (acc, v) -> acc + v)"
-        f") as s, {-cid}L as negc)"
-        for cid, q in cents)
-    return f"array({structs})"
+    return bc, [make(n) for n in ns]
 
 
 def ivf_topk(df: DataFrame, dim: int, c_mod: int | None = 50,
              nprobe: int = 2,
-             max_inline_terms: int | None = None,
              quantizer: str = "modular") -> DataFrame:
     """IVF ANN: every corpus row is assigned to its nearest centroid's
     cell (argmax quantized dot, ties to the smaller cid); a query probes
@@ -491,12 +433,10 @@ def ivf_topk(df: DataFrame, dim: int, c_mod: int | None = 50,
 
     Plan shape (the IVF scale story): cell assignment is a single
     PROJECTION, so the corpus is touched once with no join, no shuffle,
-    and no per-row sort. Two physically different projections, same
-    semantics: when K*dim <= IVF_MAX_INLINE_TERMS the centroid matrix is
-    inlined into a codegen'd expression (O(K) array_max argmax); beyond
-    that — production dims 768-1536 would otherwise blow Catalyst up on
-    a multi-MB expression — the matrix rides an explicit broadcast and
-    assignment is an Arrow-batched numpy matmul+argmax (_ivf_probe_udfs).
+    and no per-row sort. The centroid matrix rides an explicit broadcast
+    and assignment is an Arrow-batched numpy matmul+argmax
+    (:func:`_ivf_probe_udfs`), so the plan never holds K x dim literals
+    (production dims 768-1536 would blow Catalyst up on them).
     Only the N_QUERIES QUERY rows pay the top-nprobe sort. The probe
     join broadcasts (N_QUERIES x nprobe) rows; one shuffle for the
     per-query rank window. Probing all cells (nprobe >= centroid count)
@@ -522,49 +462,25 @@ def ivf_topk(df: DataFrame, dim: int, c_mod: int | None = 50,
         c_mod = max(1, int(math.sqrt(max(n, 1))))
     cents = _ivf_centroids(df, c_mod, dim)
     # A vector with a NULL ELEMENT or a WRONG LENGTH is normalized to a
-    # NULL VECTOR before either path sees it: the inline SQL and the
-    # Arrow UDF would otherwise diverge (zip_with propagates element
-    # nulls into null scores and silently truncates ragged vectors with
-    # engine-specific tie behavior, while Arrow->pandas folds element
-    # nulls into NaN and the matrix prober can't score a short row).
-    # Null vectors join no cell and drop out — one documented semantic,
-    # identical on both paths.
+    # NULL VECTOR before the prober sees it (the SQL rerank's zip_with
+    # would propagate element nulls and truncate ragged vectors). Null
+    # vectors get a null probe list, join no cell and drop out.
     base = df.selectExpr(
         "cast(vec_id as bigint) as vec_id",
         "case when exists(embedding, x -> x is null) "
         f"or size(embedding) != {dim} then null "
         "else embedding end as embedding")
-    inline_cap = (IVF_MAX_INLINE_TERMS if max_inline_terms is None
-                  else max_inline_terms)
     if quantizer == "kmeans":
-        cents = _kmeans_refine(base, cents, dim, inline_cap=inline_cap)
-    if len(cents) * dim <= inline_cap:
-        cells = _ivf_cell_structs(cents)
-        # null vectors get a NULL cid / NULL probe list (they'd
-        # otherwise be "assigned" by the all-null-score tie-break) —
-        # mirrored by the matrix prober's None handling
-        assigned = base.selectExpr(
-            "vec_id", "embedding",
-            "case when embedding is null then null "
-            f"else -array_max({cells}).negc end as cid")
-        q = (
-            base.filter(f"vec_id < {N_QUERIES}")
-            .selectExpr(
-                "vec_id as query_id", "embedding as qv",
-                "explode(case when embedding is null then null else "
-                f"transform(slice(reverse(array_sort({cells})), "
-                f"1, {nprobe}), p -> -p.negc) end) as cid")
-        )
-    else:
-        assign1, proben = _ivf_probe_udfs(df, cents, [1, nprobe])
-        assigned = base.withColumn(
-            "cid", F.element_at(assign1(F.col("embedding")), 1))
-        q = (
-            base.filter(f"vec_id < {N_QUERIES}")
-            .select(F.col("vec_id").alias("query_id"),
-                    F.col("embedding").alias("qv"),
-                    F.explode(proben(F.col("embedding"))).alias("cid"))
-        )
+        cents = _kmeans_refine(base, cents, dim)
+    _, (assign1, proben) = _ivf_probe_udfs(base, cents, [1, nprobe])
+    assigned = base.withColumn(
+        "cid", F.element_at(assign1(F.col("embedding")), 1))
+    q = (
+        base.filter(f"vec_id < {N_QUERIES}")
+        .select(F.col("vec_id").alias("query_id"),
+                F.col("embedding").alias("qv"),
+                F.explode(proben(F.col("embedding"))).alias("cid"))
+    )
     joined = assigned.selectExpr(
         "vec_id as neighbor_id", "embedding as nv", "cid"
     ).join(F.broadcast(q), on="cid").filter(

@@ -98,8 +98,9 @@ class ZseqWriter:
         mb = json.dumps(meta or {}).encode()
         sb = schema.serialize().to_pybytes()
         self._write(MAGIC)
-        self._write(struct.pack("<I", len(mb)) + mb)
-        self._write(struct.pack("<I", len(sb)) + sb)
+        self._write(struct.pack("<I", IC.u32_len(len(mb), "meta length")) + mb)
+        self._write(
+            struct.pack("<I", IC.u32_len(len(sb), "schema length")) + sb)
 
     def _write(self, b: bytes) -> None:
         self._sink.write(b)
