@@ -364,18 +364,18 @@ def test_ivf_null_embedding_degrades_gracefully(spark, vecs, monkeypatch):
 
 
 def test_ivf_prober_quantizes_like_ansi_sql_cast():
-    """The Arrow batch prober alone: NaN -> 0, +/-Inf -> int64 max/min,
-    a finite value past int64 raises, a null row gets a null list, a
-    non-null row of the wrong length raises, and equal scores go to the
-    smaller cid (argmax and the top-n sort alike)."""
+    """The Arrow batch prober alone: NaN -> 0, a finite value past int64
+    raises, a null row gets a null list, a non-null row of the wrong
+    length raises, and equal scores go to the smaller cid (argmax and the
+    top-n sort alike)."""
     import numpy as np
     import pyarrow as pa
 
     cids = np.array([3, 5, 8], dtype=np.int64)
     mat = np.array([[1, 0], [0, 1], [0, 1]], dtype=np.int64)
-    inf, nan = float("inf"), float("nan")
-    vs = pa.array([[inf, 0.5],       # max beats 500: cell 3 first
-                   [-inf, 0.5],      # min: cell 3 last
+    nan = float("nan")
+    vs = pa.array([[1.0, 0.5],       # 1000 beats 500: cell 3 first
+                   [-1.0, 0.5],      # -1000: cell 3 last
                    None,
                    [nan, -0.001],    # 0 beats -1: cell 3
                    [0.5, 0.5]],      # 500 x 3: ties to the smaller cid
@@ -388,6 +388,35 @@ def test_ivf_prober_quantizes_like_ansi_sql_cast():
         sim._probe_cells(pa.array([[1e300, 0.0]]), cids, mat, 1)
     with pytest.raises(ValueError, match="dim 2"):
         sim._probe_cells(pa.array([[0.5]]), cids, mat, 1)
+
+
+def test_ivf_prober_refuses_what_would_wrap_int64():
+    """Boundaries of the int64 score: +/-Inf and the largest finite
+    double (infinite after quantization) are refused, and so is a vector
+    whose quantized values fit int64 but whose products with the
+    centroids may not (max|q| * max|c| * dim). NaN still scores as 0; a
+    null row stays null. The wrapping matmul had probed [inf, 0] as
+    [2, 1] against centroids [[2, 0], [1, 0]]."""
+    import numpy as np
+    import pyarrow as pa
+
+    cids = np.array([1, 2], dtype=np.int64)
+    mat = np.array([[2, 0], [1, 0]], dtype=np.int64)
+    big = np.finfo(np.float64).max
+    for bad in ([float("inf"), 0.0], [float("-inf"), 0.0], [big, 0.0],
+                [9e15, 0.0]):  # 9e18 * 2 * 2 is past int64
+        with pytest.raises(ValueError, match="infinite|past int64"):
+            sim._probe_cells(pa.array([None, bad]), cids, mat, 2)
+    got = sim._probe_cells(pa.array([[float("nan"), 0.0], None, [1.0, 0.0]]),
+                           cids, mat, 2)
+    assert got.to_pylist() == [[1, 2], None, [1, 2]]
+    # the largest |q| the bound admits at max|c| = 1, dim 2, and past it
+    eye = np.array([[1, 0], [0, 1]], dtype=np.int64)
+    ok = pa.array([[-4.6e15, 1.0], None, [4.6e15, -1.0]])
+    assert sim._probe_cells(ok, cids, eye, 2).to_pylist() == \
+        [[2, 1], None, [1, 2]]
+    with pytest.raises(ValueError, match="past int64"):
+        sim._probe_cells(pa.array([[4.7e15, 0.0]]), cids, eye, 1)
 
 
 def test_ivf_matrix_terms_cap_raises(spark, vecs):

@@ -368,8 +368,7 @@ def _eager_wrap(seg: bytes, count: int) -> bytes:
     if len(comp_trial) > 0.85 * len(trial):
         return seg
     comp = comp_trial if trial is seg else BC.zstd_compress(seg)
-    wrapped = IC._wrapped(seg, count, len(seg), comp)
-    return wrapped if len(wrapped) < 0.9 * len(seg) else seg
+    return IC._wrapped(seg, count, len(seg), comp, len(seg)) or seg
 
 
 def _eager_byte_aligned(arr: np.ndarray, seg: bytes, count: int) -> bytes:
@@ -388,8 +387,8 @@ def _eager_byte_aligned(arr: np.ndarray, seg: bytes, count: int) -> bytes:
         np.subtract(arr, arr.dtype.type(lo),
                     out=inner[head:].view(f"<u{wide // 8}"),
                     casting="unsafe")
-    wrapped = IC._wrapped(seg, count, inner_len, BC.zstd_compress(inner))
-    return wrapped if len(wrapped) < 0.9 * len(seg) else seg
+    return IC._wrapped(seg, count, inner_len, BC.zstd_compress(inner),
+                       len(seg)) or seg
 
 
 def _eager_auto_pack(arr: np.ndarray) -> bytes:
@@ -471,6 +470,122 @@ def test_winning_retry_never_packs_past_trial_prefix(monkeypatch):
     assert sizes and max(sizes) <= _trial_values(31), sizes
     monkeypatch.setattr(IC.P, "pack_width", pack)
     assert seg == _eager_auto_pack(a)
+
+
+# ---------------------------------------------------------------------------
+# FORBP built once into one buffer, in pieces: byte-identical to the
+# composition it replaced (a payload of joined per-run bodies behind
+# _seg's header), and bounded in memory.
+# ---------------------------------------------------------------------------
+
+def _composed_forbp(arr: np.ndarray) -> bytes:
+    """FORBP composed as the encoder before the one-buffer build did it:
+    every delta of the block at once, one bytes object per run of
+    equal-width minis, their join, and the segment header concatenated
+    in front. Per-mini plain loops: it shares only ``pack_width`` with
+    ``_forbp_seg``."""
+    mini, n = IC.MINI, arr.size
+    nminis, nfull = (n + mini - 1) // mini, n // mini
+    udt = np.uint32 if arr.dtype == np.int32 else np.uint64
+    mins = np.empty(nminis, dtype=np.int64)
+    widths = np.empty(nminis, dtype=np.int64)
+    deltas = []
+    for m in range(nminis):
+        blk = arr[m * mini:(m + 1) * mini]
+        lo = blk.min()
+        with np.errstate(over="ignore"):
+            deltas.append((blk - lo).view(udt))
+        mins[m] = lo
+        widths[m] = int(deltas[-1].max()).bit_length()
+    heads = np.empty((nminis, 9), dtype=np.uint8)
+    heads[:, :8] = mins.astype("<i8").view(np.uint8).reshape(nminis, 8)
+    heads[:, 8] = widths
+    bodies = []
+    m = 0
+    while m < nminis:
+        w, e = int(widths[m]), m + 1
+        while e < nfull and widths[e] == w:
+            e += 1
+        d = np.concatenate(deltas[m:e])
+        if w == 64:
+            bodies.append(d.astype("<u8").tobytes())
+        elif w and (mini * w % 8 == 0 or e - m == 1):
+            bodies.append(IC.P.pack_width(d, w))
+        elif w:
+            bodies.extend(IC.P.pack_width(x, w)
+                          for x in deltas[m:e])
+        m = e
+    payload = struct.pack("<H", mini) + heads.tobytes() + b"".join(bodies)
+    return IC.HEADER.pack(IC.T_FORBP, len(payload)) + payload
+
+
+def _mixed_minis(n: int, dtype, seed: int = 0) -> np.ndarray:
+    """Random values whose width changes every few minis: runs of 1-4
+    minis, each at a width of 0-31 bits above a random base."""
+    rng = np.random.default_rng(seed)
+    out = np.empty(n, dtype=np.int64)
+    i = 0
+    while i < n:
+        j = min(n, i + IC.MINI * int(rng.integers(1, 5)))
+        w = int(rng.integers(0, 32))
+        out[i:j] = rng.integers(-(2**30), 2**30) + rng.integers(
+            0, 1 << w, j - i)
+        i = j
+    return out.astype(dtype)
+
+
+@pytest.mark.parametrize("mini", [1024, 5, 13])
+@pytest.mark.parametrize("dt", [np.int32, np.int64])
+def test_forbp_one_buffer_matches_composition(dt, mini, monkeypatch):
+    monkeypatch.setattr(IC, "MINI", mini)
+    info = np.iinfo(dt)
+    rng = np.random.default_rng(mini)
+    for n in (1, mini - 1, mini, 70 * mini + 3, 70_001):
+        for a in (_mixed_minis(n, dt, n),
+                  rng.integers(info.min, info.max, n, dtype=dt,
+                               endpoint=True),
+                  np.full(n, info.min, dtype=dt)):
+            seg = IC.encode_ints(a, codec=IC.T_FORBP)
+            assert seg == _composed_forbp(a), (n, a[:4])
+            assert bytes(IC._enc_forbp(a)) == seg[IC.HEADER.size:]
+            got, pos = IC.decode_ints(seg, 0, n, dt)
+            assert pos == len(seg) and np.array_equal(got, a)
+
+
+def test_forbp_encode_peak_memory_is_bounded(monkeypatch):
+    """A 4M-value int32 block of mixed mini widths. Its FORBP segment
+    peaks within 1.25x the segment plus 4 MiB while it is built: deltas
+    exist for one pack piece of minis at a time, and the segment is one
+    buffer. The auto encode, with the selector pinned to FORBP, adds the
+    zstd wrap check: its prefix trial passes on the compressible heads,
+    and the whole-segment zstd output (about the segment's size, as the
+    bodies are random) then lives beside the segment, so that path peaks
+    within 2.25x plus 4 MiB; a losing wrap is not built. Every delta of
+    the block at once (4 B/value), a bytes object per run, their join and
+    the header concatenation peaked at 5.0x; the wrap check then made two
+    more copies of its output."""
+    import tracemalloc
+
+    a = _mixed_minis(4_000_000, np.int32)
+    monkeypatch.setattr(select, "select_int_codec",
+                        lambda arr, exclude=frozenset(): IC.T_FORBP)
+    peaks = []
+    tracemalloc.start()
+    try:
+        for codec in (IC.T_FORBP, None):
+            tracemalloc.reset_peak()
+            base = tracemalloc.get_traced_memory()[0]
+            seg = IC.encode_ints(a, codec=codec)
+            peaks.append(tracemalloc.get_traced_memory()[1] - base)
+            del seg
+    finally:
+        tracemalloc.stop()
+    seg = IC.encode_ints(a)
+    assert seg[0] == IC.T_FORBP
+    assert seg == IC.encode_ints(a, codec=IC.T_FORBP)
+    built, auto = peaks
+    assert built <= 1.25 * len(seg) + (4 << 20), (built, len(seg))
+    assert auto <= 2.25 * len(seg) + (4 << 20), (auto, len(seg))
 
 
 # ---------------------------------------------------------------------------
@@ -629,6 +744,13 @@ def test_wsym_chunk_builds_only_its_segment(monkeypatch):
             return enc(a)
 
         monkeypatch.setitem(IC._ENCODERS, tag, recorded)
+    forbp = IC._forbp_seg  # FORBP's segment is built outside _ENCODERS
+
+    def recorded_forbp(a):
+        calls.append((IC.T_FORBP, a.size))
+        return forbp(a)
+
+    monkeypatch.setattr(IC, "_forbp_seg", recorded_forbp)
 
     def no_wrap(*_):
         raise AssertionError("zstd wrap tried on a width_sym chunk")
@@ -825,4 +947,4 @@ def test_wrapped_inner_length_past_u32_limit_is_refused(monkeypatch):
     seg = IC.encode_ints(arr, codec=IC.T_PACK)
     monkeypatch.setattr(IC, "LEN_LIMIT", len(seg) - 1)
     with pytest.raises(ValueError, match="wrapped segment length"):
-        IC._wrapped(seg, arr.size, len(seg), b"")
+        IC._wrapped(seg, arr.size, len(seg), b"", len(seg))

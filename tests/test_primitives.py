@@ -124,6 +124,30 @@ def test_hourly_timestamps_ratio():
 # width, size, and input dtype it accepts.
 # ---------------------------------------------------------------------------
 
+def _pack_width_lanes(u: np.ndarray, width: int) -> bytes:
+    """Reference lane implementation (any width), in one piece: groups
+    of 8 values go into little-endian uint64 lanes with one strided pass
+    per value position. The byte-layout oracle of ``pack_width``."""
+    n = u.size
+    if n == 0 or width == 0:
+        return b""
+    ngroups = (n + 7) // 8
+    g = np.zeros(ngroups * 8, dtype=np.uint64)
+    g[:n] = u
+    g = g.reshape(ngroups, 8)
+    nlanes = (8 * width + 63) // 64
+    lanes = np.zeros((ngroups, nlanes), dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        for k in range(8):
+            lane, off = divmod(k * width, 64)
+            lanes[:, lane] |= g[:, k] << np.uint64(off)
+            if off + width > 64:
+                lanes[:, lane + 1] |= g[:, k] >> np.uint64(64 - off)
+    by = lanes.view("<u8").view(np.uint8).reshape(ngroups, nlanes * 8)
+    out = np.ascontiguousarray(by[:, :width]).reshape(-1)
+    return out[: (n * width + 7) // 8].tobytes()
+
+
 @pytest.mark.parametrize("width", list(range(1, 36)) + [40, 63, 64])
 def test_pack_width_tree_matches_lanes(width):
     rng = np.random.default_rng(width)
@@ -131,7 +155,7 @@ def test_pack_width_tree_matches_lanes(width):
     for n in (0, 1, 7, 8, 9, 63, 64, 65, 1024, 1025, 4096):
         u = rng.integers(0, hi, size=n, dtype=np.uint64)
         got = P.pack_width(u, width)
-        want = P._pack_width_lanes(u, width)
+        want = _pack_width_lanes(u, width)
         assert got == want, (width, n)
         if n:
             assert np.array_equal(P.unpack_width(got, n, width), u)
@@ -144,7 +168,26 @@ def test_pack_width_tree_matches_lanes(width):
 def test_pack_width_narrow_dtype_input(width, dt):
     rng = np.random.default_rng(width)
     u = rng.integers(0, 1 << width, size=1000, dtype=np.uint64)
-    assert P.pack_width(u.astype(dt), width) == P._pack_width_lanes(u, width)
+    assert P.pack_width(u.astype(dt), width) == _pack_width_lanes(u, width)
+
+
+@pytest.mark.parametrize("width", range(1, 65))
+def test_pack_width_pieces_match_lanes(width):
+    """Packed in pieces of PACK_PIECE values, into one new buffer or into
+    a given ``out``, the bytes are the one-piece lane oracle's: on both
+    sides of a piece boundary and with a partial last group."""
+    rng = np.random.default_rng(200 + width)
+    hi = 1 << width
+    for n in (0, 7, 8, 65_535, 65_536, 65_537, 200_003):
+        u = rng.integers(0, hi, size=n, dtype=np.uint64) if width < 64 \
+            else rng.integers(0, 2**64, size=n, dtype=np.uint64)
+        want = _pack_width_lanes(u, width)
+        assert P.pack_width(u, width) == want, (width, n)
+        out = np.full(len(want), 0xA5, dtype=np.uint8)
+        assert P.pack_width(u, width, out=out) is out
+        assert out.tobytes() == want, (width, n)
+    with pytest.raises(ValueError, match="out must hold"):
+        P.pack_width(u, width, out=np.empty(len(want) + 1, np.uint8))
 
 
 # ---------------------------------------------------------------------------

@@ -26,7 +26,9 @@ types are handled at the column layer):
   FORBP   mini-block min-FOR + bit-pack: per-1024-value blocks, per-block
           min and bit width — fixes the reference's known sharp edge where
           one outlier poisons a whole column's bit width
-          (compression.rs:130-131; SURVEY.md §4.3)
+          (compression.rs:130-131; SURVEY.md §4.3). Sized from the minis'
+          min and max, then built once into one buffer, 64 minis of
+          deltas at a time (``_forbp_seg``)
   DELTA   first value + zig-zag'd successive deltas, sub-encoded
           (wins on sorted/monotonic data)
   DICT    sorted unique values + packed indices (low cardinality)
@@ -241,14 +243,19 @@ def _dec_pack(payload: memoryview, count: int,
     return out.view(np.int32 if narrow else np.int64)
 
 
-def _enc_forbp(arr: np.ndarray) -> bytes:
-    """mini u16 | nminis x (min i64 LE, width u8) | packed minis
-    (byte-aligned; nminis = ceil(count / mini), derived on decode).
+def _forbp_seg(arr: np.ndarray) -> bytearray:
+    """The whole FORBP segment, built once into one exact-size buffer:
+    segment header | mini u16 | nminis x (min i64 LE, width u8) | packed
+    minis (byte-aligned; nminis = ceil(count / mini), derived on decode).
     width==0: all equal min. width==64: raw 8-byte deltas.
 
-    Vectorized over *runs* of consecutive same-width minis: after row
-    clustering, chunks have long width runs, so packing happens in a few
-    large pack_width calls instead of one per mini (same bytes out).
+    Each mini's min and width come from the min and max of the reshaped
+    block, so the length is known before anything is allocated. The
+    deltas are then computed for at most one pack piece of minis at a
+    time (``P.PACK_PIECE`` values: 64 minis of 1024), and each run of
+    equal-width minis in it is packed straight into its bytes of the
+    buffer (one mini at a time where a mini does not fill whole bytes):
+    no temporary grows with the block.
 
     int32 input runs entirely in the 32-bit domain ((v - min) wraps mod
     2^32; true deltas < 2^32 by int32-span construction, so the uint32
@@ -258,70 +265,68 @@ def _enc_forbp(arr: np.ndarray) -> bytes:
     n = arr.size
     nminis = (n + mini - 1) // mini
     nfull = n // mini
-    narrow = arr.dtype == np.int32
-    udt = np.uint32 if narrow else np.uint64
-    # Per-mini min/width, vectorized for the full minis.
-    if nfull:
-        g = arr[: nfull * mini].reshape(nfull, mini)
-        mins_full = g.min(axis=1)
-        with _wrap:
-            deltas_full = (g - mins_full[:, None]).view(udt)
-        maxd = deltas_full.max(axis=1)
-        bl = np.zeros(nfull, dtype=np.int64)
-        nz = maxd != 0
-        if nz.any():
-            if narrow:  # frexp exact for every value < 2^32
-                bl[nz] = np.frexp(maxd[nz].astype(np.float64))[1]
-            else:
-                bl[nz] = np.frexp(
-                    np.clip(maxd[nz], 0,
-                            (1 << 53) - 1).astype(np.float64))[1]
-                big = maxd[nz] >= (1 << 53)
-                if big.any():  # exact bit_length for the huge tail
-                    idx = np.flatnonzero(nz)[big]
-                    bl[idx] = [int(maxd[i]).bit_length() for i in idx]
-    mins = np.empty(nminis, dtype=np.int64)
-    widths = np.empty(nminis, dtype=np.int64)
-    if nfull:
-        mins[:nfull] = mins_full
-        widths[:nfull] = bl
-    tail_d = None
+    udt = np.uint32 if arr.dtype == np.int32 else np.uint64
+    full = arr[: nfull * mini].reshape(nfull, mini)
+    mins = np.empty(nminis, dtype=arr.dtype)
+    spans = np.empty(nminis, dtype=arr.dtype)
+    full.min(axis=1, out=mins[:nfull])
+    full.max(axis=1, out=spans[:nfull])
     if nminis > nfull:  # trailing partial mini
-        blk = arr[nfull * mini:]
-        lo = int(blk.min())
-        with _wrap:
-            tail_d = (blk - blk.dtype.type(lo)).view(udt)
-        hi = int(tail_d.max())
-        mins[-1] = lo
-        widths[-1] = 0 if hi == 0 else hi.bit_length()
-    heads = np.empty((nminis, 9), dtype=np.uint8)
+        tail = arr[nfull * mini:]
+        mins[-1], spans[-1] = tail.min(), tail.max()
+    with _wrap:
+        spans -= mins
+    widths = _bit_lengths(spans.view(udt), 8 * udt().itemsize)
+    counts = np.full(nminis, mini, dtype=np.int64)
+    counts[nfull:] = n - nfull * mini
+    head = HEADER.size + 2 + 9 * nminis
+    offs = np.empty(nminis + 1, dtype=np.int64)
+    offs[0] = head
+    np.cumsum((counts * widths + 7) // 8, out=offs[1:])
+    offs[1:] += head
+    size = int(offs[-1])
+    buf = bytearray(size)
+    out = np.frombuffer(buf, dtype=np.uint8)
+    HEADER.pack_into(buf, 0, T_FORBP,
+                     u32_len(size - HEADER.size, "segment payload length"))
+    struct.pack_into("<H", buf, HEADER.size, mini)
+    heads = out[HEADER.size + 2:head].reshape(nminis, 9)
     heads[:, :8] = mins.astype("<i8").view(np.uint8).reshape(nminis, 8)
     heads[:, 8] = widths
-    bodies = []
-    # Pack runs of equal width among the full minis in one call each.
-    m = 0
-    while m < nfull:
-        w = int(widths[m])
-        e = m + 1
-        while e < nfull and widths[e] == w:
-            e += 1
+    offs = offs.tolist()
+    wlist = widths.tolist()
+
+    def put(d: np.ndarray, m: int, e: int) -> None:
+        """Pack the deltas ``d`` of the minis [m, e), all one width."""
+        w = wlist[m]
         if w == 64:
-            bodies.append(deltas_full[m:e].reshape(-1).astype("<u8").tobytes())
-        elif w > 0:
-            if (mini * w) % 8 == 0:
-                bodies.append(P.pack_width(deltas_full[m:e].reshape(-1), w))
-            else:  # minis are individually byte-aligned; pack one by one
-                for i in range(m, e):
-                    bodies.append(P.pack_width(deltas_full[i], w))
-        m = e
+            out[offs[m]:offs[e]] = d.reshape(-1).astype("<u8").view(np.uint8)
+        elif w and (mini * w % 8 == 0 or e - m == 1):
+            P.pack_width(d.reshape(-1), w, out=out[offs[m]:offs[e]])
+        elif w:  # minis are individually byte-aligned; pack one by one
+            for i in range(m, e):
+                P.pack_width(d[i - m], w, out=out[offs[i]:offs[i + 1]])
+
+    per = max(1, P.PACK_PIECE // mini)
+    d = np.empty((min(per, nfull), mini), dtype=udt)
+    for c0 in range(0, nfull, per):
+        c1 = min(c0 + per, nfull)
+        c = d[: c1 - c0]
+        with _wrap:
+            np.subtract(full[c0:c1], mins[c0:c1, None], out=c.view(arr.dtype))
+        runs = [c0, *(np.flatnonzero(np.diff(widths[c0:c1])) + 1 + c0)
+                .tolist(), c1]
+        for m, e in zip(runs, runs[1:]):
+            put(c[m - c0:e - c0], m, e)
     if nminis > nfull:
-        w = int(widths[-1])
-        d = tail_d  # computed once with the width above
-        if w == 64:
-            bodies.append(d.astype("<u8").tobytes())
-        elif w > 0:
-            bodies.append(P.pack_width(d, w))
-    return struct.pack("<H", mini) + heads.tobytes() + b"".join(bodies)
+        with _wrap:
+            put((tail - mins[-1]).view(udt)[None], nfull, nminis)
+    return buf
+
+
+def _enc_forbp(arr: np.ndarray) -> memoryview:
+    """The FORBP payload: ``_forbp_seg`` past its segment header."""
+    return memoryview(_forbp_seg(arr))[HEADER.size:]
 
 
 def _dec_forbp(payload: memoryview, count: int,
@@ -718,11 +723,18 @@ _NARROW_OK = frozenset({T_CONST, T_RAW, T_ZBRA, T_PACK, T_FORBP,
                         T_DICT, T_RLE, T_WSYM})
 
 
+def _segment(codec: int, arr: np.ndarray) -> bytes | bytearray:
+    if codec == T_FORBP:  # built whole, header included, in one buffer
+        return _forbp_seg(arr)
+    return _seg(codec, _ENCODERS[codec](arr))
+
+
 def encode_ints(values, codec: int | None = None,
-                exclude: frozenset[int] = frozenset()) -> bytes:
-    """Encode an integer array as one segment. ``codec=None`` auto-selects
-    via zseq.select (sampled stats). ``exclude`` removes codecs from the
-    auto candidate set (used by nested segments to bound recursion)."""
+                exclude: frozenset[int] = frozenset()) -> bytes | bytearray:
+    """Encode an integer array as one segment (bytes-like; its first byte
+    is the codec tag). ``codec=None`` auto-selects via zseq.select
+    (sampled stats). ``exclude`` removes codecs from the auto candidate
+    set (used by nested segments to bound recursion)."""
     arr = _as_int(values)
     n = arr.size
     if n == 0:
@@ -739,30 +751,36 @@ def encode_ints(values, codec: int | None = None,
     if arr.dtype != np.int64 and codec not in _NARROW_OK:
         arr = arr.astype(np.int64)  # codecs with int64-domain byte paths
     if not auto or T_WRAP in exclude or codec == T_WSYM:
-        return _seg(codec, _ENCODERS[codec](arr))
+        return _segment(codec, arr)
     if codec != T_PACK:
-        return _maybe_wrap(_seg(codec, _ENCODERS[codec](arr)), n)
+        return _maybe_wrap(_segment(codec, arr), n)
     seg = _maybe_wrap(_LazyPack(arr), n)
     return seg if isinstance(seg, bytes) else \
         _maybe_wrap_byte_aligned(arr, seg, n)
 
 
-def _wrapped(seg: bytes, count: int, inner_len: int, comp: bytes) -> bytes:
+def _wrapped(seg, count: int, inner_len: int, comp: bytes,
+             than: int) -> bytes | None:
     """T_WRAP around ``comp`` (zstd of an ``inner_len``-byte inner segment
-    holding the same values as ``seg``). The zone header is derived from
+    holding the same values as ``seg``), or None unless it is shorter
+    than 0.9 * ``than`` bytes: its length is known before it is built,
+    so a losing wrap copies nothing. The zone header is derived from
     ``seg`` so block pruning still works on wrapped chunks; a PACK's head
     alone is enough for that."""
     zone = segment_zone(seg, 0, count)
-    zhead = (
-        struct.pack("<Bqq", 1, zone[0], zone[1]) if zone
-        else struct.pack("<B", 0)
-    )
-    return _seg(T_WRAP, struct.pack(
-        "<I", u32_len(inner_len, "wrapped segment length")) + zhead + comp)
+    head = struct.pack("<I", u32_len(inner_len, "wrapped segment length")) \
+        + (struct.pack("<Bqq", 1, zone[0], zone[1]) if zone
+           else struct.pack("<B", 0))
+    plen = len(head) + len(comp)
+    if HEADER.size + plen >= 0.9 * than:
+        return None
+    return b"".join((HEADER.pack(T_WRAP,
+                                 u32_len(plen, "segment payload length")),
+                     head, comp))
 
 
-def _maybe_wrap(seg: bytes | _LazyPack,
-                count: int) -> bytes | _LazyPack:
+def _maybe_wrap(seg: bytes | bytearray | _LazyPack,
+                count: int) -> bytes | bytearray | _LazyPack:
     """Cascade compression: zstd the finished segment when it still has
     exploitable structure (e.g. periodic patterns no single codec models).
     A ~64 KiB trial bounds cost; kept only on a clear (>=10%) win.
@@ -785,8 +803,7 @@ def _maybe_wrap(seg: bytes | _LazyPack,
         return seg
     full = seg.seg() if lazy else seg
     comp = comp_trial if len(trial) == len(full) else zstd_compress(full)
-    wrapped = _wrapped(full, count, len(full), comp)
-    return wrapped if len(wrapped) < 0.9 * len(full) else seg
+    return _wrapped(full, count, len(full), comp, len(full)) or seg
 
 
 def _maybe_wrap_byte_aligned(arr: np.ndarray, seg: _LazyPack,
@@ -821,8 +838,8 @@ def _maybe_wrap_byte_aligned(arr: np.ndarray, seg: _LazyPack,
                     casting="unsafe")
     from .bytescodecs import zstd_compress
 
-    wrapped = _wrapped(seg.head, count, inner_len, zstd_compress(inner))
-    return wrapped if len(wrapped) < 0.9 * len(seg) else seg.seg()
+    return _wrapped(seg.head, count, inner_len, zstd_compress(inner),
+                    len(seg)) or seg.seg()
 
 
 def decode_ints(buf, offset: int, count: int,

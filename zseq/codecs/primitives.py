@@ -149,14 +149,12 @@ def bp64_unpack(packed: bytes | memoryview, count: int) -> np.ndarray:
                         out=np.empty(count, dtype=np.uint64))
 
 
-def _pack_width_lanes(u: np.ndarray, width: int) -> bytes:
-    """Reference lane implementation (any width): packs groups of 8
-    values into little-endian uint64 lanes with one strided pass per
-    value position. Kept as the wide-width (>= 33) path and as the
-    byte-layout oracle the fast tree path is property-tested against."""
+def _lane_groups(u: np.ndarray, width: int) -> np.ndarray:
+    """(ngroups, 8 * nlanes) uint8, any width: each group of 8 values
+    packed into little-endian uint64 lanes with one strided pass per
+    value position, its bits in the row's first ``width`` bytes (the
+    reference layout)."""
     n = u.size
-    if n == 0 or width == 0:
-        return b""
     ngroups = (n + 7) // 8
     if ngroups * 8 != n:
         g = np.zeros(ngroups * 8, dtype=np.uint64)
@@ -174,32 +172,15 @@ def _pack_width_lanes(u: np.ndarray, width: int) -> bytes:
             lanes[:, lane] |= g[:, k] << off_u
             if off + width > 64:
                 lanes[:, lane + 1] |= g[:, k] >> np.uint64(64 - off)
-    # Little-endian lane bytes; keep the first `width` bytes per group,
-    # then trim to the exact reference byte count.
-    by = lanes.view("<u8").view(np.uint8).reshape(ngroups, nlanes * 8)
-    out = np.ascontiguousarray(by[:, :width]).reshape(-1)
-    return out[: (n * width + 7) // 8].tobytes()
+    return lanes.view("<u8").view(np.uint8).reshape(ngroups, nlanes * 8)
 
 
-def pack_width(u: np.ndarray, width: int) -> bytes:
-    """Pack unsigned values at ``width`` bits each, LSB-first, vectorized.
-
-    Byte layout is identical to the reference's scalar bit-buffer loop
-    (compression.rs:152-177). For widths <= 32 (the overwhelmingly common
-    case: token ids, lengths, FOR deltas) values are combined pairwise in
-    the narrowest dtype that holds them — a log2(8)=3-level tree of
-    CONTIGUOUS shift/or passes — instead of 8 strided per-position passes
-    over 64-bit lanes. The codec path is memory-bandwidth-bound at high
-    core counts, and the tree cuts its traffic ~4x (measured ~3-4x wall
-    on the packing step). ``u`` may be any unsigned/int64 dtype whose
-    values fit ``width`` bits; widths >= 33 take the lane path.
-    """
+def _tree_groups(u: np.ndarray, w: int) -> np.ndarray:
+    """(ngroups, >= w) uint8, the rows of ``_lane_groups`` for w <= 32:
+    values are combined pairwise in the narrowest dtype that holds them,
+    a log2(8)=3-level tree of CONTIGUOUS shift/or passes instead of 8
+    strided per-position passes over 64-bit lanes."""
     n = u.size
-    if n == 0 or width == 0:
-        return b""
-    if width >= 33:
-        return _pack_width_lanes(u, width)
-    w = width
     ngroups = (n + 7) // 8
     dt = np.uint8 if w <= 8 else (np.uint16 if w <= 16 else np.uint32)
     if ngroups * 8 != n:
@@ -219,9 +200,8 @@ def pack_width(u: np.ndarray, width: int) -> bytes:
             v64 = v32.view(np.uint64)
             lane = (v64 & np.uint64(0xFFFFFFFF)) | (
                 (v64 >> np.uint64(32)) << np.uint64(4 * w))
-            by = lane.view(np.uint8).reshape(ngroups, 8)
-            out = np.ascontiguousarray(by[:, :w]).reshape(-1)
-        elif w <= 16:
+            return lane.view(np.uint8).reshape(ngroups, 8)
+        if w <= 16:
             v32 = g.view(np.uint32)
             v32 = (v32 & np.uint32(0xFFFF)) | (
                 (v32 >> np.uint32(16)) << np.uint32(w))
@@ -237,33 +217,71 @@ def pack_width(u: np.ndarray, width: int) -> bytes:
                 outm = np.empty((ngroups, w), dtype=np.uint8)
                 outm[:, :nb] = byv[:, 0, :nb]
                 outm[:, nb:] = byv[:, 1, :nb]
-                out = outm.reshape(-1)
-            else:
-                L = v64.reshape(ngroups, 2)
-                pair = np.empty((ngroups, 2), dtype=np.uint64)
-                pair[:, 0] = L[:, 0] | (L[:, 1] << np.uint64(s))
-                pair[:, 1] = L[:, 1] >> np.uint64(64 - s)
-                out = np.ascontiguousarray(
-                    pair.view(np.uint8).reshape(ngroups, 16)[:, :w]
-                ).reshape(-1)
-        else:
-            v64 = g.view(np.uint64)
-            v64 = (v64 & np.uint64(0xFFFFFFFF)) | (
-                (v64 >> np.uint64(32)) << np.uint64(w))
-            # four lanes per group of 2w bits each; assemble the 8w-bit
-            # (<= 256) group stream in 4 out-words
-            L = v64.reshape(ngroups, 4)
-            words = np.zeros((ngroups, 4), dtype=np.uint64)
-            for j in range(4):
-                s = j * 2 * w
-                t0, off = divmod(s, 64)
-                words[:, t0] |= L[:, j] << np.uint64(off)
-                if off + 2 * w > 64:
-                    words[:, t0 + 1] |= L[:, j] >> np.uint64(64 - off)
-            out = np.ascontiguousarray(
-                words.view(np.uint8).reshape(ngroups, 32)[:, :w]
-            ).reshape(-1)
-    return out[: (n * w + 7) // 8].tobytes()
+                return outm
+            L = v64.reshape(ngroups, 2)
+            pair = np.empty((ngroups, 2), dtype=np.uint64)
+            pair[:, 0] = L[:, 0] | (L[:, 1] << np.uint64(s))
+            pair[:, 1] = L[:, 1] >> np.uint64(64 - s)
+            return pair.view(np.uint8).reshape(ngroups, 16)
+        v64 = g.view(np.uint64)
+        v64 = (v64 & np.uint64(0xFFFFFFFF)) | (
+            (v64 >> np.uint64(32)) << np.uint64(w))
+        # four lanes per group of 2w bits each; assemble the 8w-bit
+        # (<= 256) group stream in 4 out-words
+        L = v64.reshape(ngroups, 4)
+        words = np.zeros((ngroups, 4), dtype=np.uint64)
+        for j in range(4):
+            s = j * 2 * w
+            t0, off = divmod(s, 64)
+            words[:, t0] |= L[:, j] << np.uint64(off)
+            if off + 2 * w > 64:
+                words[:, t0 + 1] |= L[:, j] >> np.uint64(64 - off)
+        return words.view(np.uint8).reshape(ngroups, 32)
+
+
+# Values per packing piece: a multiple of 8, so every piece starts on a
+# byte of the output, and few enough that a piece's temporaries (a few
+# bytes per value) stay in a core's L2 cache.
+PACK_PIECE = 1 << 16
+
+
+def pack_width(u: np.ndarray, width: int, out: np.ndarray | None = None):
+    """Pack unsigned values at ``width`` bits each, LSB-first, vectorized.
+
+    Byte layout is identical to the reference's scalar bit-buffer loop
+    (compression.rs:152-177). ``u`` may be any unsigned/int64 dtype whose
+    values fit ``width`` bits. The values are packed in pieces of
+    ``PACK_PIECE``, each written straight into its bytes of the output,
+    so no temporary grows with ``u``. Widths <= 32 (token ids, lengths,
+    FOR deltas) take the tree of ``_tree_groups``: the codec path is
+    memory-bandwidth-bound at high core counts, and the tree cuts its
+    traffic ~4x against the lanes (measured ~3-4x wall on the packing
+    step); widths >= 33 take the lanes of ``_lane_groups``.
+
+    ``out`` (a writable uint8 array of exactly ceil(n * width / 8) bytes,
+    e.g. a slice of a segment's buffer) receives the bytes and is
+    returned; without it the result is one bytearray of that size."""
+    n = u.size
+    nbytes = (n * width + 7) // 8
+    if out is None:
+        res = bytearray(nbytes)
+        out = np.frombuffer(res, dtype=np.uint8)
+    elif out.shape != (nbytes,):
+        raise ValueError(f"bitpack: out must hold {nbytes} bytes")
+    else:
+        res = out
+    if width == 0:
+        return res
+    groups = _tree_groups if width <= 32 else _lane_groups
+    for i in range(0, n, PACK_PIECE):
+        j = min(i + PACK_PIECE, n)
+        by = groups(u[i:j], width)
+        dst = out[i * width // 8:(j * width + 7) // 8]
+        whole = min(by.shape[0], dst.size // width)
+        dst[:whole * width].reshape(whole, width)[...] = by[:whole, :width]
+        if whole < by.shape[0]:  # the bytes of a last, partial group
+            dst[whole * width:] = by[whole, :dst.size - whole * width]
+    return res
 
 
 def _unpack_width_lanes(data, count: int, width: int) -> np.ndarray:

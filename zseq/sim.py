@@ -316,7 +316,12 @@ def _kmeans_refine(base: DataFrame, cents: list[tuple[int, list[int]]],
     Arrow matrix prober, :func:`_ivf_probe_udfs`) plus one
     map-side-combined aggregation whose shuffle is K*dim partial sums —
     bounded by the same IVF_MAX_MATRIX_TERMS cap as the quantizer
-    itself, never corpus-sized."""
+    itself, never corpus-sized.
+
+    The sums run in Spark SQL under ANSI mode (Spark 4's default), so a
+    cell whose bigint sum passes int64 raises an arithmetic overflow
+    instead of wrapping; the assignment's int64 matmul is guarded in
+    :func:`_probe_cells` the same way."""
     qcols = [
         f"cast(floor(cast(embedding[{i}] as double) * {QUANT}) as bigint)"
         f" as q{i}"
@@ -357,28 +362,40 @@ def _probe_cells(vs: pa.ListArray, cids: np.ndarray, mat: np.ndarray,
     """One Arrow batch of vectors -> each row's ``n`` best cids, best
     first. The non-null rows' flat values become one (rows, dim) matrix,
     quantized like the SQL ``cast(floor(x * QUANT) as bigint)`` under
-    ANSI: NaN -> 0, +/-Inf -> int64 max/min, a finite value past int64
-    raises. One int64 matmul scores every cell; ties go to the smaller
-    cid (``cids`` is sorted, argmax takes the first max, the argsort is
-    stable). A null row gets a null list, so it joins no cell."""
+    ANSI: NaN -> 0, and +/-Inf or a finite value past int64 raises. One
+    int64 matmul scores every cell; it is refused before it runs when
+    ``max|q| * max|c| * dim`` could wrap int64 (the SQL sum would raise
+    an ANSI overflow). Ties go to the smaller cid (``cids`` is sorted,
+    argmax takes the first max, the argsort is stable). A null row gets
+    a null list, so it joins no cell."""
     dim = mat.shape[1]
     if pc.any(pc.not_equal(pc.list_value_length(vs), dim)).as_py():
         raise ValueError(
             f"ivf probe: a non-null embedding's length is not dim {dim}")
     valid = vs.is_valid().to_numpy(zero_copy_only=False)
     x = vs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    scaled = np.floor(x.reshape(-1, dim) * QUANT)
-    finite = np.isfinite(scaled)
-    over = finite & ((scaled > 9.223372036854774e18)
-                     | (scaled < -9.223372036854775e18))
+    with np.errstate(over="ignore"):  # an infinite product is refused
+        scaled = np.floor(x.reshape(-1, dim) * QUANT)
+    if np.isinf(scaled).any():
+        raise ValueError(
+            "ivf probe: an embedding value is infinite after "
+            f"x{QUANT} quantization. Normalize embeddings before indexing.")
+    over = (scaled > 9.223372036854774e18) | (scaled < -9.223372036854775e18)
     if over.any():
         raise ValueError(
             "ivf probe: embedding value "
             f"{float(scaled[over][0]) / QUANT!r} overflows int64 after "
             f"x{QUANT} quantization. Normalize embeddings before indexing.")
-    q = np.where(finite, scaled, 0).astype(np.int64)
-    q[scaled == np.inf] = np.iinfo(np.int64).max
-    q[scaled == -np.inf] = np.iinfo(np.int64).min
+    q = np.nan_to_num(scaled, nan=0.0).astype(np.int64)
+    if q.size and mat.size:
+        # in exact Python ints, so the bound itself cannot wrap
+        bound = (max(int(q.max()), -int(q.min()))
+                 * max(int(mat.max()), -int(mat.min())) * dim)
+        if bound > np.iinfo(np.int64).max:
+            raise ValueError(
+                f"ivf probe: a score may reach {bound:,}, past int64: "
+                "the int64 matmul would wrap. Normalize embeddings "
+                "before indexing.")
     scores = q @ mat.T                    # (rows, K) exact int64
     if n == 1:
         # O(K) first max: the per-corpus-row hot path; only the query
