@@ -712,3 +712,123 @@ def test_validity_byte_count_past_u32_limit_is_refused(monkeypatch):
     with pytest.raises(ValueError,
                        match="validity byte count 125 .* limit of 124"):
         C.encode_column(arr)
+
+
+# ---------------------------------------------------------------------------
+# Byte pins: the decimal limb layouts and the temporal types encode to
+# these exact chunks, stats and zone maps; a change to any of them is a
+# format change
+# ---------------------------------------------------------------------------
+
+def _pin_arrays() -> dict[str, pa.Array]:
+    """Decimals at 1, 2 and 4 limbs and the temporal types, each with
+    nulls over garbage buffer bytes; the decimals also sliced."""
+    rng = np.random.default_rng(17)
+    n = 3000
+    valid = rng.random(n) > 0.2
+    vbits = pa.array(valid).buffers()[1]
+
+    def build(t, vals):
+        info = np.iinfo(vals.dtype)
+        vals[~valid] = rng.integers(info.min, info.max, vals.shape,
+                                    dtype=vals.dtype)[~valid]
+        return pa.Array.from_buffers(t, n, [vbits, pa.py_buffer(vals)])
+
+    out = {}
+    for name, t, digits in (("dec12", pa.decimal128(12, 2), 12),
+                            ("dec18", pa.decimal128(18, 0), 18),
+                            ("dec38", pa.decimal128(38, 0), 38),
+                            ("dec76", pa.decimal256(76, 10), 76)):
+        limbs = np.empty((n, t.bit_width // 64), np.int64)
+        limbs[:, 0] = rng.integers(-(10 ** min(digits, 18)) + 1,
+                                   10 ** min(digits, 18), n)
+        limbs[:, 1:] = limbs[:, :1] >> 63
+        if digits > 18:  # every 7th value needs the high limbs
+            limbs[::7, 1:] = rng.integers(-(2**40), 2**40,
+                                          limbs[::7, 1:].shape)
+        arr = build(t, limbs)
+        out[name] = arr
+        out[name + "_slice"] = arr.slice(5, n - 12)
+    day = 86_400
+    for name, t, vals in (
+            ("ts_us", pa.timestamp("us"),
+             1_700_000_000_000_000 + np.cumsum(rng.integers(0, 10**6, n))),
+            ("ts_ms_utc", pa.timestamp("ms", tz="UTC"),
+             rng.integers(0, 2**45, n)),
+            ("date32", pa.date32(), rng.integers(0, 50_000, n)),
+            ("date64", pa.date64(), rng.integers(0, 50_000, n) * day * 1000),
+            ("time32_s", pa.time32("s"), rng.integers(0, day, n)),
+            ("time64_ns", pa.time64("ns"), rng.integers(0, day * 10**9, n)),
+            ("dur_s", pa.duration("s"), rng.integers(-(2**40), 2**40, n))):
+        out[name] = build(t, vals.astype(f"i{t.bit_width // 8}"))
+    return out
+
+
+_PINS = {
+    "date32":
+        "d429d23a5ecf51fedbd8a49bf4285f9b2ecd27886366faf065b7efe9826d8b72",
+    "date64":
+        "1f87955c81b2673c4d916a4521c55fd0ae46166972fec3c2277c45b3f21d9ac8",
+    "dec12":
+        "3414989dab8425f67257e2cf36aa93a9179225cdc4b28e8d0aea7939f778f309",
+    "dec12_slice":
+        "198955d621ec2bdfa142bae2f5a2a63c9c60d51e2a9a2e8cddb24c1d512f8779",
+    "dec18":
+        "9289ffe12b7bd082e318bc4652c0af32b3b945d7c78621164f5a1eb0739cc15d",
+    "dec18_slice":
+        "0bca74ef6b44c7235294ad6b3ade3bb5acd9d334d3e0d615aacf3dda61b74213",
+    "dec38":
+        "716aa804e93ca85864473a4c21aa726366c5f8d4dfcd43a1746e43c2d28c8772",
+    "dec38_slice":
+        "e1fc01ef8fc70ca5a724299add125e2c3595fd858afc468fc882469995bdb964",
+    "dec76":
+        "7b9abc7b76223b6b4150237e699a51da9b937dfa7c25ce85f4c78ade5f40139a",
+    "dec76_slice":
+        "0d2115168086c11e5f0be909331ae02cc65547923865b31ad79074b15e36d25e",
+    "dur_s":
+        "6c27fac6ec53a8ea43106a976ba51afc9881e7a1c604b78aeae2728502ac6395",
+    "time32_s":
+        "1074a925c112a102713e16182004af39f562caf04512fcf6ded177ef8dfd56f2",
+    "time64_ns":
+        "c3c7906e86cf057374317ea41fed39c31ddcad7b173bb81d9f80b1ee815338dc",
+    "ts_ms_utc":
+        "495c5817a2be77ac1ffa69e2dab5e41e275ea2181b57904fcb90728e98d8cbae",
+    "ts_us":
+        "7711e086a5edaffde289da678b2a7afc0a2420e7c98944f391501bfd32de7784",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PINS))
+def test_decimal_and_temporal_chunks_match_pinned_bytes(name):
+    import hashlib
+
+    arr = _pin_arrays()[name]
+    h = hashlib.sha256()
+    for zone in (False, True):
+        stats = {}
+        chunk = C.encode_column(arr, stats, "c", zone=zone)
+        h.update(chunk)
+        h.update(repr(stats).encode())
+        h.update(repr(C.chunk_stats(chunk, 0, len(arr))).encode())
+        dec, pos = C.decode_column(chunk, 0, arr.type, len(arr))
+        assert pos == len(chunk) and dec.to_pylist() == arr.to_pylist()
+    assert h.hexdigest() == _PINS[name]
+
+
+def test_decimal18_value_past_64_bits_is_refused():
+    """The one-limb layout stores only the low word, so a valid slot
+    whose high word is not its sign extension cannot be stored."""
+    vals = np.array([5, 0, 7, 1], dtype=np.int64)  # 7 + 2^64
+    arr = pa.Array.from_buffers(pa.decimal128(18, 0), 2,
+                                [None, pa.py_buffer(vals)])
+    with pytest.raises(ValueError, match="exceeds 64-bit range"):
+        C.encode_column(arr)
+
+
+def test_interval_type_is_refused():
+    """``pa.types.is_temporal`` holds for intervals, but they have no
+    int storage layout here."""
+    arr = pa.array([pa.MonthDayNano([1, 2, 3]), None],
+                   pa.month_day_nano_interval())
+    with pytest.raises(NotImplementedError, match="month_day_nano"):
+        C.encode_column(arr)

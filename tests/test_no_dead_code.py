@@ -21,7 +21,12 @@ module constant the test patches, not a parameter.
 
 Every field of a ``zseq/`` ``@dataclass`` must be read as an attribute
 in the same sources: a field that is only computed and stored costs its
-computation on every construction."""
+computation on every construction.
+
+Every local a ``zseq/`` function binds by assignment must be read in
+that function (nested functions included); a name starting with ``_``
+marks a value bound only to be dropped, such as one slot of an
+unpacking."""
 
 import ast
 import os
@@ -181,3 +186,50 @@ def test_every_dataclass_field_is_read():
     unread = [f"{rel}: {cls}.{name}" for rel, cls, name in fields
               if not reads[name]]
     assert not unread, "never read as an attribute:\n" + "\n".join(unread)
+
+
+_SCOPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda, ast.ClassDef)
+
+
+def _bound(fn) -> set[str]:
+    """Names ``fn`` itself binds by assignment: assignment, loop,
+    ``with``, comprehension and walrus targets, not those of its nested
+    functions or classes."""
+    out, todo = set(), list(ast.iter_child_nodes(fn))
+    while todo:
+        n = todo.pop()
+        if isinstance(n, _SCOPES):
+            continue
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store):
+            out.add(n.id)
+        todo.extend(ast.iter_child_nodes(n))
+    return out
+
+
+def test_every_local_is_read():
+    """A ``zseq/`` function's assigned local that nothing reads is dead
+    work (an unused unpack slot, a value computed and dropped)."""
+    unread, nfuncs = [], 0
+    for path in _sources():
+        rel = os.path.relpath(path, REPO)
+        if not rel.startswith("zseq" + os.sep):
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        mod = os.path.splitext(os.path.basename(rel))[0]
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            nfuncs += 1
+            reads, shared = set(), set()
+            for n in ast.walk(fn):
+                if isinstance(n, ast.Name) and not isinstance(n.ctx,
+                                                              ast.Store):
+                    reads.add(n.id)
+                elif isinstance(n, (ast.Global, ast.Nonlocal)):
+                    shared.update(n.names)
+            unread += [f"{mod}.{fn.name}: {name}"
+                       for name in sorted(_bound(fn) - reads - shared)
+                       if not name.startswith("_")]
+    assert nfuncs > 300  # the scan sees the engine's functions
+    assert not unread, "assigned, never read:\n" + "\n".join(unread)

@@ -160,6 +160,9 @@ class _LazyPack:
     the byte-aligned retry wins the whole segment is never needed, so the
     body is packed in full only by ``seg()`` (cached).
 
+    Every build goes into one buffer of its exact size: the deltas exist
+    for one ``P.PACK_PIECE`` of values at a time, each piece packed
+    straight into its bytes, so no temporary grows with the block.
     int32 input stays in the 32-bit domain: (arr - lo) wraps mod 2^32,
     and the true deltas are < 2^32 by construction (int32 span), so the
     uint32 view is exact — same bytes, half the traffic."""
@@ -174,42 +177,52 @@ class _LazyPack:
                      + lo.to_bytes(8, "little", signed=True)
                      + bytes([width]))
         self._len = len(self.head) + nbody
-        self._seg: bytes | None = None
+        self._seg: bytearray | None = None
 
     def __len__(self) -> int:
         return self._len
 
-    def body(self, count: int | None = None) -> bytes:
-        """The packed deltas of the first ``count`` values (all: None).
-        width==0: empty. width==64: raw 8-byte deltas."""
-        arr = self.arr[:count]
-        if self.width == 0:
-            return b""
-        udt = np.uint32 if arr.dtype == np.int32 else np.uint64
-        with _wrap:
-            deltas = (arr - arr.dtype.type(self.lo)).view(udt)
-        if self.width == 64:
-            return deltas.astype("<u8").tobytes()
-        return P.pack_width(deltas, self.width)
+    def _build(self, count: int) -> bytearray:
+        """The head and the packed deltas of the first ``count`` values.
+        width==0: no body. width==64: raw 8-byte deltas."""
+        w, h = self.width, len(self.head)
+        buf = bytearray(h + (count * w + 7) // 8)
+        buf[:h] = self.head
+        out = np.frombuffer(buf, dtype=np.uint8)[h:]
+        udt = np.uint32 if self.arr.dtype == np.int32 else np.uint64
+        lo = self.arr.dtype.type(self.lo)
+        for i in range(0, count if w else 0, P.PACK_PIECE):
+            j = min(i + P.PACK_PIECE, count)
+            with _wrap:
+                d = (self.arr[i:j] - lo).view(udt)
+            # a piece starts on a whole byte: PACK_PIECE is 8k values
+            dst = out[i * w // 8:(j * w + 7) // 8]
+            if w == 64:
+                dst[:] = d.view(np.uint8)
+            else:
+                P.pack_width(d, w, out=dst)
+        return buf
 
-    def prefix(self, nbytes: int) -> bytes:
+    def prefix(self, nbytes: int) -> memoryview:
         """``seg()[:nbytes]``. Every 8 values pack to ``width`` whole
         bytes, so whole 8-value groups give exactly the full segment's
-        leading bytes."""
+        leading bytes; a prefix of every value is the segment itself."""
         groups = -(-(nbytes - len(self.head)) // self.width)
-        return (self.head + self.body(8 * groups))[:nbytes]
+        count = min(self.arr.size, 8 * groups)
+        whole = count == self.arr.size
+        return memoryview(self.seg() if whole else self._build(count))[:nbytes]
 
-    def seg(self) -> bytes:
+    def seg(self) -> bytearray:
         if self._seg is None:
-            self._seg = self.head + self.body()
+            self._seg = self._build(self.arr.size)
         return self._seg
 
 
-def _enc_pack(arr: np.ndarray) -> bytes:
-    """min i64 LE | width u8 | packed deltas (byte-aligned).
-    width==0: all equal min. width==64: raw 8-byte deltas."""
-    p = _LazyPack(arr)
-    return p.head[HEADER.size:] + p.body()
+def _enc_pack(arr: np.ndarray) -> memoryview:
+    """min i64 LE | width u8 | packed deltas (byte-aligned): the PACK
+    segment past its header. width==0: all equal min. width==64: raw
+    8-byte deltas."""
+    return memoryview(_LazyPack(arr).seg())[HEADER.size:]
 
 
 def _dec_pack(payload: memoryview, count: int,
@@ -726,6 +739,8 @@ _NARROW_OK = frozenset({T_CONST, T_RAW, T_ZBRA, T_PACK, T_FORBP,
 def _segment(codec: int, arr: np.ndarray) -> bytes | bytearray:
     if codec == T_FORBP:  # built whole, header included, in one buffer
         return _forbp_seg(arr)
+    if codec == T_PACK:  # likewise
+        return _LazyPack(arr).seg()
     return _seg(codec, _ENCODERS[codec](arr))
 
 
@@ -807,7 +822,7 @@ def _maybe_wrap(seg: bytes | bytearray | _LazyPack,
 
 
 def _maybe_wrap_byte_aligned(arr: np.ndarray, seg: _LazyPack,
-                             count: int) -> bytes:
+                             count: int) -> bytes | bytearray:
     """Retry of a declined wrap of the PACK segment ``seg`` of ``arr``;
     returns the wrapped retry or the built PACK.
 

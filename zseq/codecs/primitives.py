@@ -428,7 +428,7 @@ def zbra_compressed_size(values: np.ndarray) -> int:
     n = arr.size
     if n == 0:
         return 0
-    mid, deltas = for_encode(arr)
+    _mid, deltas = for_encode(arr)
     zz = zigzag_encode(deltas)
     width = bit_width_u64(int(zz.max())) if n else 1
     packed = 1 + (n * 8 if width >= 32 else (n * width + 7) // 8)

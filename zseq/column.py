@@ -19,9 +19,10 @@ Column chunk wire format:
 
     flags bit0: has validity bitmap
     validity:   nbytes u32 LE + LSB-first bitmap (np.packbits little)
-    flags bit1: has byte-bounds zone map (BINARY field chunks only)
+    flags bit1: has byte-bounds zone map (BINARY and multi-limb DECIMAL
+                field chunks only)
     zone:       lo_len u8 + lo + hi_len u8 + hi — an inclusive [lo, hi]
-                envelope of every value's bytes. Bounds are truncated to
+                envelope of every value's bytes. Binary bounds are cut to
                 16 bytes: lo is a prefix of the true min (a prefix sorts
                 <= the full string, so it stays a valid lower bound); hi
                 is the true max when it fits, else the max's prefix with
@@ -33,7 +34,11 @@ Column chunk wire format:
     not stored — int block pruning costs zero bytes. Byte bounds cost
     <= 36 bytes per binary field chunk.
 
-    kind 1 INT     width u8, signed u8, int segment (values widened to i64)
+    kind 1 INT     width u8, signed u8, int segment. Every fixed-width int
+                   type: the integer types with their own width and sign;
+                   timestamp, date, time and duration as their signed
+                   storage ints (width = bit_width / 8), told apart by the
+                   schema only. Interval types are refused.
     kind 2 DOUBLE  mode u8 + int segment:
                      mode 0: float64 bit patterns (the reference's
                        doubles-ride-the-int-pipeline trick, binary.rs:295-301)
@@ -50,10 +55,17 @@ Column chunk wire format:
                    (the striped SoA split, striped.rs:287-339)
     kind 8 MAP     lengths int segment + sized key chunk + item chunk
                    (the reference's Map key/value split, striped.rs:106-125)
-    kind 9 DECIMAL precision u8 + scale i8 + int segment(s): one for
-                   precision <= 18, two limbs (lo, hi) for 19-38
-                   (decimal128), four limbs (l0..l3) for 39-76
-                   (decimal256) — the precision byte IS the layout key
+    kind 9 DECIMAL precision u8 + scale i8 + one int64 segment per limb
+                   of the unscaled value, lowest first (the last signed).
+                   The precision byte is the layout key: 1 limb for <= 18
+                   (decimal128, whose high word must be sign extension),
+                   2 for 19-38 (decimal128), 4 for 39-76 (decimal256; one
+                   of precision <= 38 is refused). Limbs past the values'
+                   range are sign extension, near-free under CONST/RLE.
+                   Multi-limb field chunks store exact [lo, hi] in the
+                   zone section: 8 * limbs bytes each, offset-binary
+                   (v + 2^(64 * limbs - 1)) big-endian, so byte order is
+                   numeric order.
     kind 10 ENUM   tags int segment + nvariants u16 + per variant:
                    type-code i8, name, sized child chunk holding ONLY that
                    variant's values in row order (the reference's Enum =
@@ -125,6 +137,29 @@ def _int_values(arr: pa.Array, np_dtype) -> np.ndarray:
     return vals[arr.offset :]
 
 
+def _int_layout(t: pa.DataType) -> tuple[int, int] | None:
+    """(width, signed) of a type stored as kind INT, else None: the
+    integer types, and the temporals as their signed storage ints."""
+    if t in _INT_TYPES:
+        return _INT_TYPES[t]
+    if pa.types.is_timestamp(t) or pa.types.is_date(t) \
+            or pa.types.is_time(t) or pa.types.is_duration(t):
+        return t.bit_width // 8, 1
+    return None
+
+
+def _decimal_limbs(precision: int) -> int:
+    """Int64 limbs of a decimal chunk: the precision byte is the layout
+    key (module docstring, kind 9)."""
+    return 4 if precision > 38 else 2 if precision > 18 else 1
+
+
+def _sized(chunk: bytes, what: str) -> bytes:
+    """A child chunk behind its u32 byte length (``what`` names the
+    field in the refusal past the u32 limit)."""
+    return struct.pack("<I", IC.u32_len(len(chunk), what)) + chunk
+
+
 # ---------------------------------------------------------------------------
 # Encode
 # ---------------------------------------------------------------------------
@@ -139,9 +174,9 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
     """Encode one Arrow array as a column chunk. ``stats`` (optional dict)
     collects {path: (codec_name, segment bytes)} for lineage metrics.
     ``zone=True`` (set by the block writer for top-level fields only)
-    stores byte-bounds zone maps on binary/string chunks; child chunks
-    never pay for them because block pruning only consults field-root
-    headers."""
+    stores zone sections on binary/string and multi-limb decimal chunks;
+    child chunks never pay for them because block pruning only consults
+    field-root headers."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     t = arr.type
@@ -160,64 +195,46 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
     def note(seg: bytes, names) -> None:
         _note(stats, path, seg, names)
 
-    if pa.types.is_timestamp(t) or pa.types.is_date64(t) \
-            or pa.types.is_time64(t) or pa.types.is_duration(t):
-        vals = _int_values(arr, np.int64).astype(np.int64)
-        if valid is not None:
-            vals = np.where(valid, vals, 0)
+    def ints(kind: int, body_head: bytes, vals: np.ndarray) -> bytes:
+        """A chunk whose body is ``body_head`` + one int segment."""
         seg = IC.encode_ints(vals)
         note(seg, IC.INT_CODEC_NAMES)
-        return head(K_INT) + struct.pack("<BB", 8, 1) + seg
-    if pa.types.is_date32(t) or pa.types.is_time32(t):
-        vals = _int_values(arr, np.int32)  # int32 domain == value domain
-        if valid is not None:
-            vals = np.where(valid, vals, np.int32(0))
-        seg = IC.encode_ints(vals)
-        note(seg, IC.INT_CODEC_NAMES)
-        return head(K_INT) + struct.pack("<BB", 4, 1) + seg
-    if t in _INT_TYPES:
-        width, signed = _INT_TYPES[t]
+        return head(kind) + body_head + seg
+
+    layout = _int_layout(t)
+    if layout is not None:
+        width, signed = layout
         vals = _int_values(arr, _np_int_dtype(width, signed))
         # Stay in the narrowest value-preserving integer domain: the
         # int codecs produce identical bytes for int32 input with half
         # the memory traffic (uint32/uint64 values exceed int32, and
         # uint64 rides as its int64 bit pattern as before).
-        if signed and width == 8:
+        if signed and width >= 4:
             v = vals
         elif not signed and width == 8:
             v = vals.view(np.int64)
         elif not signed and width == 4:
             v = vals.astype(np.int64)
-        elif signed and width == 4:
-            v = vals
         else:
             v = vals.astype(np.int32)
         if valid is not None:
             v = np.where(valid, v, v.dtype.type(0))
-        seg = IC.encode_ints(v)
-        note(seg, IC.INT_CODEC_NAMES)
-        return head(K_INT) + struct.pack("<BB", width, signed) + seg
+        return ints(K_INT, struct.pack("<BB", width, signed), v)
     if pa.types.is_float64(t):
         f = _int_values(arr, np.float64)
         if valid is not None:
             f = np.where(valid, f, 0.0)
-        mode, ints = _scale_doubles(f)
-        seg = IC.encode_ints(ints)
-        note(seg, IC.INT_CODEC_NAMES)
-        return head(K_DOUBLE) + struct.pack("<B", mode) + seg
+        mode, scaled = _scale_doubles(f)
+        return ints(K_DOUBLE, struct.pack("<B", mode), scaled)
     if pa.types.is_float32(t):
         vals = _int_values(arr, np.float32).view(np.int32)
         if valid is not None:
             vals = np.where(valid, vals, np.int32(0))
-        seg = IC.encode_ints(vals)
-        note(seg, IC.INT_CODEC_NAMES)
-        return head(K_FLOAT) + seg
+        return ints(K_FLOAT, b"", vals)
     if pa.types.is_boolean(t):
         vals = pc.fill_null(arr, False).to_numpy(
             zero_copy_only=False).astype(np.int64)
-        seg = IC.encode_ints(vals)
-        note(seg, IC.INT_CODEC_NAMES)
-        return head(K_BOOL) + seg
+        return ints(K_BOOL, b"", vals)
     if pa.types.is_string(t) or pa.types.is_large_string(t) \
             or pa.types.is_binary(t) or pa.types.is_large_binary(t):
         utf8 = 1 if (pa.types.is_string(t) or pa.types.is_large_string(t)) else 0
@@ -275,9 +292,7 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
             chunk = encode_column(child, stats, f"{path}.{fld.name}")
             nb = fld.name.encode()
             body += struct.pack("<H", len(nb)) + nb
-            body += struct.pack(
-                "<I", IC.u32_len(len(chunk), "struct child chunk length"))
-            body += chunk
+            body += _sized(chunk, "struct child chunk length")
         return head(K_STRUCT) + bytes(body)
     if pa.types.is_map(t):
         # Map == lengths + flattened key child + flattened item child
@@ -297,11 +312,8 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
         lseg = IC.encode_ints(lengths)
         kseg = encode_column(keys, stats, path + ".key")
         iseg = encode_column(items, stats, path + ".value")
-        return (
-            head(K_MAP) + lseg
-            + struct.pack("<I", IC.u32_len(len(kseg), "map key chunk length"))
-            + kseg + iseg
-        )
+        return (head(K_MAP) + lseg + _sized(kseg, "map key chunk length")
+                + iseg)
     if pa.types.is_union(t):
         # Enum (sum type): tags + sparse per-variant children
         # (striped.rs:340-387). Arrow dense union IS that layout; children
@@ -343,109 +355,53 @@ def encode_column(arr: pa.Array, stats: dict | None = None,
             nb = fld.name.encode()
             body += struct.pack("<b", int(tcodes[i]))
             body += struct.pack("<H", len(nb)) + nb
-            body += struct.pack(
-                "<I", IC.u32_len(len(chunk), "enum child chunk length"))
-            body += chunk
+            body += _sized(chunk, "enum child chunk length")
         return head(K_ENUM) + tseg + bytes(body)
     if pa.types.is_decimal(t):
-        if pa.types.is_decimal256(t):
-            # Four-limb layout (precision 39-76): each 32-byte LE value
-            # rides as FOUR int64 segments l0 (lowest) .. l3 (signed
-            # high), the natural widening of the two-limb scheme below.
-            # For every |value| < 2^63 limbs l1-l3 are pure sign
-            # extension — constant runs the int pipeline's CONST/RLE
-            # eats, so the 256-bit type costs near-zero extra bytes
-            # until values actually need the range. Layout keyed on the
-            # header's precision byte (> 38), no new format flag. Zone
-            # maps: explicit 32-byte offset-binary (v + 2^255, BE)
-            # bounds — bytewise order == numeric order.
-            if t.precision <= 38:
-                # the precision byte is the layout key, so a decimal256
-                # carrying a decimal128-range precision would decode as
-                # two-limb and misread — and it fits in decimal128
-                # anyway. Refuse with the fix.
-                raise ValueError(
-                    f"zseq: {t} — precision {t.precision} fits "
-                    "decimal128; cast the column (the on-disk layout is "
-                    "keyed on precision, 39-76 = four-limb)")
-            buf = arr.buffers()[1]
-            raw = np.frombuffer(buf, dtype=np.int64,
-                                count=4 * (arr.offset + n))
-            raw = raw.reshape(-1, 4)[arr.offset:]
-            limbs = [raw[:, i].copy() for i in range(4)]
-            zseg = b""
-            vl = [x[valid] if valid is not None else x for x in limbs]
-            if zone and vl[0].size:
-                zmin = _limbs_extreme(vl, take_max=False)
-                zmax = _limbs_extreme(vl, take_max=True)
-                zseg = (bytes([32])
-                        + (zmin + 2 ** 255).to_bytes(32, "big")
-                        + bytes([32])
-                        + (zmax + 2 ** 255).to_bytes(32, "big"))
+        if pa.types.is_decimal256(t) and t.precision <= 38:
+            # the precision byte is the layout key, so a decimal256
+            # carrying a decimal128-range precision would decode as
+            # two-limb and misread — and it fits in decimal128 anyway.
+            # Refuse with the fix.
+            raise ValueError(
+                f"zseq: {t} — precision {t.precision} fits "
+                "decimal128; cast the column (the on-disk layout is "
+                "keyed on precision, 39-76 = four-limb)")
+        nlimbs = _decimal_limbs(t.precision)
+        words = t.bit_width // 64
+        raw = np.frombuffer(arr.buffers()[1], dtype=np.int64,
+                            count=words * (arr.offset + n))
+        raw = raw.reshape(-1, words)[arr.offset:]
+        limbs = [raw[:, i] for i in range(nlimbs)]
+        zseg = b""
+        if nlimbs == 1:
+            # Null slots may carry arbitrary buffer bytes (legal in
+            # Arrow — compute kernels / IPC produce non-canonical
+            # garbage there), so the 64-bit range check only applies
+            # to valid slots.
+            ok = raw[:, 1] == (limbs[0] >> 63)
             if valid is not None:
-                limbs = [np.where(valid, x, 0) for x in limbs]
-            segs = [IC.encode_ints(x) for x in limbs]
-            note(segs[0], IC.INT_CODEC_NAMES)
-            for i in range(1, 4):
-                _note(stats, f"{path}.l{i}", segs[i], IC.INT_CODEC_NAMES)
-            return (head(K_DECIMAL, zseg)
-                    + struct.pack("<Bb", t.precision, t.scale)
-                    + b"".join(segs))
-        # decimal128 buffer: 16B LE per value; low word is the value for
-        # precision <= 18, high word its sign extension.
-        buf = arr.buffers()[1]
-        raw = np.frombuffer(buf, dtype=np.int64,
-                            count=2 * (arr.offset + n))
-        raw = raw.reshape(-1, 2)[arr.offset:]
-        lo64, hi64 = raw[:, 0].copy(), raw[:, 1].copy()
-        if t.precision > 18:
-            # Two-limb layout (precision 19-38, e.g. the lakehouse-common
-            # decimal(38, x)): the 128-bit LE pair rides as TWO int64
-            # segments, low limb then high limb, each through the normal
-            # int codec pipeline. The high limb is the sign extension for
-            # every |value| < 2^63 — i.e. almost always CONST/RLE, so the
-            # wide type costs near-zero extra bytes until values actually
-            # need the range. The layout is keyed on the header's
-            # precision byte (old files can only contain <= 18, which the
-            # writer refused to widen), so no extra format flag is spent.
-            # Zone maps: segment headers can't bound a value split across
-            # two limbs, so top-level chunks store explicit 16-byte
-            # offset-binary (v + 2^127, big-endian) min/max bounds in the
-            # flags-bit1 zone section — bytewise order == numeric order;
-            # chunk_stats decodes them back to exact python ints.
-            zseg = b""
-            vlo = lo64[valid] if valid is not None else lo64
-            vhi = hi64[valid] if valid is not None else hi64
-            if zone and vlo.size:
-                # int128 order == lexicographic (hi signed, lo unsigned)
-                # — the shared multi-limb extreme helper
-                zmin = _limbs_extreme([vlo, vhi], take_max=False)
-                zmax = _limbs_extreme([vlo, vhi], take_max=True)
-                zseg = (bytes([16]) + (zmin + 2 ** 127).to_bytes(16, "big")
-                        + bytes([16]) + (zmax + 2 ** 127).to_bytes(16, "big"))
-            if valid is not None:
-                lo64 = np.where(valid, lo64, 0)
-                hi64 = np.where(valid, hi64, 0)
-            lseg = IC.encode_ints(lo64)
-            hseg = IC.encode_ints(hi64)
-            note(lseg, IC.INT_CODEC_NAMES)
-            _note(stats, path + ".hi", hseg, IC.INT_CODEC_NAMES)
-            return (head(K_DECIMAL, zseg)
-                    + struct.pack("<Bb", t.precision, t.scale)
-                    + lseg + hseg)
-        # Null slots may carry arbitrary buffer bytes (legal in Arrow —
-        # compute kernels / IPC produce non-canonical garbage there), so
-        # the 64-bit range check only applies to valid slots.
-        ok = hi64 == (lo64 >> 63)
+                ok |= ~valid
+            if not ok.all():
+                raise ValueError("decimal128: value exceeds 64-bit range")
+        elif zone and n > arr.null_count:
+            # Segment headers cannot bound a value split across limbs,
+            # so the exact bounds of the valid values go in the zone
+            # section (see the module docstring).
+            vl = limbs if valid is None else [x[valid] for x in limbs]
+            nb, off = 8 * nlimbs, 2 ** (64 * nlimbs - 1)
+            zseg = b"".join(
+                bytes([nb]) + (_limbs_extreme(vl, m) + off).to_bytes(nb, "big")
+                for m in (False, True))
         if valid is not None:
-            ok = ok | ~valid
-            lo64 = np.where(valid, lo64, 0)
-        if not ok.all():
-            raise ValueError("decimal128: value exceeds 64-bit range")
-        seg = IC.encode_ints(lo64)
-        note(seg, IC.INT_CODEC_NAMES)
-        return head(K_DECIMAL) + struct.pack(
-            "<Bb", t.precision, t.scale) + seg
+            limbs = [np.where(valid, x, 0) for x in limbs]
+        segs = [IC.encode_ints(x) for x in limbs]
+        note(segs[0], IC.INT_CODEC_NAMES)
+        for i, seg in enumerate(segs[1:], 1):
+            sub = ".hi" if nlimbs == 2 else f".l{i}"
+            _note(stats, path + sub, seg, IC.INT_CODEC_NAMES)
+        return (head(K_DECIMAL, zseg)
+                + struct.pack("<Bb", t.precision, t.scale) + b"".join(segs))
     raise NotImplementedError(f"zseq: unsupported Arrow type {t}")
 
 
@@ -570,33 +526,39 @@ def _unscale_doubles(mode: int, ints: np.ndarray) -> np.ndarray:
     return ints / _SCALES[mode - 1]
 
 
+def _chunk_head(mv: memoryview, offset: int):
+    """Parse a chunk's head: (kind, validity bitmap view or None, zone
+    section (lo, hi) bytes or None, offset of the body)."""
+    kind, flags = _HEAD.unpack_from(mv, offset)
+    pos = offset + _HEAD.size
+    bits = zm = None
+    if flags & 1:
+        (nbytes,) = struct.unpack_from("<I", mv, pos)
+        bits = mv[pos + 4 : pos + 4 + nbytes]
+        pos += 4 + nbytes
+    if flags & 2:
+        bounds = []
+        for _ in range(2):
+            (ln,) = struct.unpack_from("<B", mv, pos)
+            bounds.append(bytes(mv[pos + 1 : pos + 1 + ln]))
+            pos += 1 + ln
+        zm = tuple(bounds)
+    return kind, bits, zm, pos
+
+
 def chunk_stats(buf, offset: int, n: int) -> tuple[int, tuple | None]:
     """(kind, zone_map) from a chunk header WITHOUT decoding the body.
     Int zone maps are (lo, hi) ints derived from the codec parameters
     (intcodecs.segment_zone) — nothing stored; binary zone maps are
     (lo, hi) bytes read from the chunk's zone section."""
     mv = memoryview(buf)
-    kind, flags = _HEAD.unpack_from(mv, offset)
-    pos = offset + _HEAD.size
-    if flags & 1:
-        (nbytes,) = struct.unpack_from("<I", mv, pos)
-        pos += 4 + nbytes
-    zm = None
-    if flags & 2:
-        (ll,) = struct.unpack_from("<B", mv, pos)
-        lo = bytes(mv[pos + 1 : pos + 1 + ll])
-        pos += 1 + ll
-        (hl,) = struct.unpack_from("<B", mv, pos)
-        hi = bytes(mv[pos + 1 : pos + 1 + hl])
-        pos += 1 + hl
-        zm = (lo, hi)
+    kind, _bits, zm, pos = _chunk_head(mv, offset)
     if kind == K_REVERSED:
         # No-op wrapper: zone maps come from the inner chunk.
         return chunk_stats(mv, pos, n)
     if kind == K_INT:
         width, signed = struct.unpack_from("<BB", mv, pos)
-        pos += 2
-        zm = IC.segment_zone(mv, pos, n)
+        zm = IC.segment_zone(mv, pos + 2, n)
         if zm is not None and width == 8 and not signed and zm[0] < 0:
             # uint64 rides as its int64 BIT PATTERN (values >= 2^63 are
             # negative int64s), so segment-derived bounds live in signed
@@ -608,25 +570,19 @@ def chunk_stats(buf, offset: int, n: int) -> tuple[int, tuple | None]:
             # agree, bounds stay valid; widths < 8 widen nonneg.)
             zm = None
     elif kind == K_DECIMAL:
-        precision, _scale = struct.unpack_from("<Bb", mv, pos)
-        if precision <= 18:
-            # Single-limb: the unscaled int64 segment's derived bounds
-            # ARE the value bounds (predicate literals cross in the
-            # unscaled storage domain).
+        nlimbs = _decimal_limbs(struct.unpack_from("<B", mv, pos)[0])
+        if nlimbs == 1:
+            # The unscaled int64 segment's derived bounds ARE the value
+            # bounds (predicate literals cross in the unscaled storage
+            # domain).
             zm = IC.segment_zone(mv, pos + 2, n)
-        elif precision <= 38 and zm is not None \
-                and len(zm[0]) == 16 and len(zm[1]) == 16:
-            # Two-limb: explicit 16-byte offset-binary bounds from the
-            # zone section, decoded back to exact (arbitrary-precision)
-            # python ints — the zone comparisons are pure Python, so the
-            # int domain works past int64 unchanged.
-            zm = (int.from_bytes(zm[0], "big") - 2 ** 127,
-                  int.from_bytes(zm[1], "big") - 2 ** 127)
-        elif precision > 38 and zm is not None \
-                and len(zm[0]) == 32 and len(zm[1]) == 32:
-            # Four-limb: 32-byte offset-binary bounds, offset 2^255.
-            zm = (int.from_bytes(zm[0], "big") - 2 ** 255,
-                  int.from_bytes(zm[1], "big") - 2 ** 255)
+        elif zm is not None and len(zm[0]) == len(zm[1]) == 8 * nlimbs:
+            # Multi-limb: the stored offset-binary bounds, decoded back
+            # to exact python ints — the zone comparisons are pure
+            # Python, so the int domain works past int64 unchanged.
+            off = 2 ** (64 * nlimbs - 1)
+            zm = (int.from_bytes(zm[0], "big") - off,
+                  int.from_bytes(zm[1], "big") - off)
         else:
             zm = None  # older multi-limb chunk without bounds: no pruning
     elif kind != K_BINARY:
@@ -643,23 +599,13 @@ def decode_column(buf, offset: int, typ: pa.DataType,
     """Decode one column chunk of ``n`` rows at ``offset`` into an Arrow
     array of ``typ``. Returns (array, next offset)."""
     mv = memoryview(buf)
-    kind, flags = _HEAD.unpack_from(mv, offset)
-    pos = offset + _HEAD.size
-    validity_buf = None
-    valid = None
-    if flags & 1:
-        (nbytes,) = struct.unpack_from("<I", mv, pos)
-        pos += 4
-        bits = np.frombuffer(mv[pos : pos + nbytes], dtype=np.uint8)
-        pos += nbytes
-        valid = np.unpackbits(bits, count=n, bitorder="little").astype(bool)
-        validity_buf = pa.py_buffer(bits.tobytes())
-    if flags & 2:
-        # byte-bounds zone section: pruning metadata only — skip
-        (ll,) = struct.unpack_from("<B", mv, pos)
-        pos += 1 + ll
-        (hl,) = struct.unpack_from("<B", mv, pos)
-        pos += 1 + hl
+    kind, bits, _zm, pos = _chunk_head(mv, offset)
+    validity_buf = None if bits is None else pa.py_buffer(bytes(bits))
+
+    def fixed(vals: np.ndarray) -> pa.Array:
+        """The fixed-width array of ``typ`` over ``vals``' bytes."""
+        body = pa.py_buffer(np.ascontiguousarray(vals))  # zero-copy
+        return pa.Array.from_buffers(typ, n, [validity_buf, body])
 
     if kind == K_INT:
         width, signed = struct.unpack_from("<BB", mv, pos)
@@ -667,41 +613,25 @@ def decode_column(buf, offset: int, typ: pa.DataType,
         if width < 8:
             # <= 32-bit physical target: decode directly in the 32-bit
             # domain (bit-identical to int64 + astype truncation, half
-            # the traffic on the hot token path)
-            v32, pos = IC.decode_ints(mv, pos, n, np.int32)
-            if pa.types.is_date32(typ) or pa.types.is_time32(typ) \
-                    or (width == 4 and signed):
-                vals = v32
-            elif width == 4:  # uint32 bit pattern
-                vals = v32.view(np.uint32)
-            else:
-                vals = v32.astype(_np_int_dtype(width, signed))
-        else:
-            v64, pos = IC.decode_ints(mv, pos, n)
-            if typ in _INT_TYPES and not signed:  # uint64 bit pattern
-                vals = v64.view(np.uint64)
-            else:  # int64 / timestamp / date64 / time64 / duration
-                vals = v64
-        body = pa.py_buffer(np.ascontiguousarray(vals))  # zero-copy
-        return pa.Array.from_buffers(typ, n, [validity_buf, body]), pos
+            # the traffic on the hot token path); a 4-byte type keeps
+            # the int32 bits as they are
+            vals, pos = IC.decode_ints(mv, pos, n, np.int32)
+            if width < 4:
+                vals = vals.astype(_np_int_dtype(width, signed))
+        else:  # every 8-byte type: its int64 bits (uint64 is one)
+            vals, pos = IC.decode_ints(mv, pos, n)
+        return fixed(vals), pos
     if kind == K_DOUBLE:
         (mode,) = struct.unpack_from("<B", mv, pos)
         pos += 1
         v64, pos = IC.decode_ints(mv, pos, n)
-        vals = _unscale_doubles(mode, v64)
-        body = pa.py_buffer(np.ascontiguousarray(vals))  # zero-copy
-        return pa.Array.from_buffers(typ, n, [validity_buf, body]), pos
+        return fixed(_unscale_doubles(mode, v64)), pos
     if kind == K_FLOAT:
         v32, pos = IC.decode_ints(mv, pos, n, np.int32)
-        vals = v32.view(np.float32)
-        body = pa.py_buffer(np.ascontiguousarray(vals))  # zero-copy
-        return pa.Array.from_buffers(typ, n, [validity_buf, body]), pos
+        return fixed(v32.view(np.float32)), pos
     if kind == K_BOOL:
         v32, pos = IC.decode_ints(mv, pos, n, np.int32)
-        bits = np.packbits(v32.astype(bool), bitorder="little")
-        return pa.Array.from_buffers(
-            typ, n, [validity_buf, pa.py_buffer(bits.tobytes())]
-        ), pos
+        return fixed(np.packbits(v32.astype(bool), bitorder="little")), pos
     if kind == K_BINARY:
         (_utf8,) = struct.unpack_from("<B", mv, pos)
         pos += 1
@@ -840,33 +770,20 @@ def decode_column(buf, offset: int, typ: pa.DataType,
             type_codes=list(typ.type_codes))
         return out, pos
     if kind == K_DECIMAL:
-        precision, scale = struct.unpack_from("<Bb", mv, pos)
+        (precision,) = struct.unpack_from("<B", mv, pos)
         pos += 2
-        if precision > 38:
-            # four-limb layout (decimal256): l0..l3 segments in order
-            if not pa.types.is_decimal256(typ):
-                raise ValueError(
-                    f"decimal: stored precision {precision} is a "
-                    f"decimal256 (four-limb) chunk but the target type "
-                    f"is {typ}")
-            raw = np.empty((n, 4), dtype=np.int64)
-            for i in range(4):
-                raw[:, i], pos = IC.decode_ints(mv, pos, n)
-            body = pa.py_buffer(np.ascontiguousarray(raw))  # zero-copy
-            return pa.Array.from_buffers(
-                typ, n, [validity_buf, body]), pos
-        if not pa.types.is_decimal128(typ):
+        nlimbs = _decimal_limbs(precision)
+        wide = nlimbs == 4
+        if not (pa.types.is_decimal256 if wide else
+                pa.types.is_decimal128)(typ):
+            layout = "decimal256 (four-limb)" if wide else "decimal128"
             raise ValueError(
-                f"decimal: stored precision {precision} is a decimal128 "
+                f"decimal: stored precision {precision} is a {layout} "
                 f"chunk but the target type is {typ}")
-        v64, pos = IC.decode_ints(mv, pos, n)
-        raw = np.empty((n, 2), dtype=np.int64)
-        raw[:, 0] = v64
-        if precision > 18:
-            # two-limb layout: high limb follows as its own segment
-            raw[:, 1], pos = IC.decode_ints(mv, pos, n)
-        else:
-            raw[:, 1] = v64 >> 63
-        body = pa.py_buffer(np.ascontiguousarray(raw))  # zero-copy
-        return pa.Array.from_buffers(typ, n, [validity_buf, body]), pos
+        raw = np.empty((n, 4 if wide else 2), dtype=np.int64)
+        for i in range(nlimbs):
+            raw[:, i], pos = IC.decode_ints(mv, pos, n)
+        if nlimbs == 1:
+            raw[:, 1] = raw[:, 0] >> 63
+        return fixed(raw), pos
     raise ValueError(f"unknown column kind {kind}")

@@ -538,7 +538,8 @@ def q_codec_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K_DECIMAL: decimal128(precision <= 18) rides the int64 pipeline as
     its unscaled value (the reference's data model is i64/f64 only —
     logical.rs:10-24 — so this is a zseq extension, bounds-checked at
-    encode, column.py:301-326). The decimal is cast in Spark, crosses as
+    encode: the one-limb layout of ``column.encode_column``'s K_DECIMAL
+    branch). The decimal is cast in Spark, crosses as
     Arrow decimal128(12,2), roundtrips through encode/decode, and the
     DECODED unscaled cents are returned, so scaling or codec bugs break
     the oracle hash."""
