@@ -150,3 +150,147 @@ def test_fsst_table_not_built_where_its_floor_loses(monkeypatch):
     rng = np.random.default_rng(3)
     lens, data = _col(list(rng.choice([b"A", b"N", b"R"], 65_536)))
     assert BC.encode_binary(lens, data)[0] == BC.T_BIN_DICT
+
+
+def _select_oracle(lengths, data):
+    """``select_bin_codec`` as it was with the sample as Python bytes
+    (``to_pylist``): the reference its Arrow-side sample must match."""
+    import pyarrow as pa
+
+    from zseq.codecs import fsst
+
+    n = lengths.size
+    if n == 0:
+        return BC.T_BIN_RAW
+    total = int(lengths.sum())
+    mean_len = total / n
+    offs = BC._offsets(lengths)
+    want = max(64, int(BC.SAMPLE_BYTES / max(1.0, mean_len)))
+    step = max(1, n // want)
+    arr = pa.Array.from_buffers(
+        pa.large_binary(), n,
+        [None, pa.py_buffer(np.ascontiguousarray(offs)),
+         pa.py_buffer(np.ascontiguousarray(data))])
+    sample_vals = arr.take(pa.array(np.arange(0, n, step))).to_pylist()
+    m = len(sample_vals)
+    distinct = len(set(sample_vals))
+    if distinct == 1 and step == 1:
+        return BC.T_BIN_CONST
+    sample_blob = b"".join(sample_vals)
+    sample_bytes = max(1, len(sample_blob))
+    est = {}
+    lens_cost = n * 0.5 + 26
+    est[BC.T_BIN_RAW] = total + lens_cost
+    comp = BC.zstd_compress(sample_blob)
+    est[BC.T_BIN_ZSTD] = len(comp) / sample_bytes * total + lens_cost + 16
+    if distinct < 0.5 * m:
+        card = distinct / m * n if distinct > 1 else distinct
+        dict_bytes = distinct / m * total
+        idx_bits = max(1, int(np.ceil(np.log2(max(2.0, card)))))
+        est[BC.T_BIN_DICT] = (
+            min(dict_bytes, total) * 0.7 + n * idx_bits / 8.0 + 64)
+    zstd_ratio = est[BC.T_BIN_ZSTD] / max(1.0, float(total))
+    if mean_len <= BC.FSST_MAX_MEAN_LEN and total >= 1024 \
+            and zstd_ratio > 0.22:
+        slens = np.array([len(v) for v in sample_vals], dtype=np.int64)
+        lo = max(len(sample_blob) / 8, np.count_nonzero(slens)) \
+            / sample_bytes
+        if lo * total + 1 + n * 0.5 + 40 < min(est.values()):
+            table = fsst.build_table(sample_vals)
+            sdata = np.frombuffer(sample_blob, dtype=np.uint8)
+            enc, _ = fsst.encode_column(sdata, BC._offsets(slens), table)
+            est[BC.T_BIN_FSST] = (enc.size / sample_bytes * total
+                                  + len(table.serialize()) + n * 0.5 + 40)
+    return min(est, key=est.__getitem__)
+
+
+def _string_tables():
+    """Every table of the size-parity gates, one block of each benchmark
+    corpus, and the sf0.001 and sf0.01 testdata tables where present."""
+    import os
+
+    import pyarrow.parquet as pq
+    from test_driver_contract import SF_DIR, TABLES
+    from test_size_parity import parity_tables
+
+    from perfbench import corpus
+
+    out = dict(parity_tables())
+    for name in ("fixture", "zipf"):
+        out[name] = corpus.make_table(name, 7, 14_000_000, 1 << 16)
+    for sf in ("sf0.001", "sf0.01"):
+        for name in TABLES:
+            path = os.path.join(os.path.dirname(SF_DIR), sf,
+                                f"{name}.parquet")
+            if os.path.exists(path):
+                out[f"{sf}/{name}"] = pq.read_table(path)
+    return out
+
+
+def test_selector_matches_pylist_oracle_on_every_string_column(
+        monkeypatch):
+    """Every selection the column layer makes on the first 64K rows of
+    every column of the parity and testdata tables (string columns,
+    nested strings and dictionary values) picks the oracle's codec."""
+    from zseq import column as COL
+
+    calls = []
+    select = BC.select_bin_codec
+
+    def recorded(lengths, data):
+        calls.append((lengths.copy(), data.copy()))
+        return select(lengths, data)
+
+    monkeypatch.setattr(BC, "select_bin_codec", recorded)
+    for name, tbl in _string_tables().items():
+        for col in tbl.column_names:
+            before = len(calls)
+            COL.encode_column(tbl.column(col).slice(0, 1 << 16)
+                              .combine_chunks())
+            for lengths, data in calls[before:]:
+                assert select(lengths, data) == _select_oracle(
+                    lengths, data), (name, col)
+    assert len(calls) > 80
+
+
+_ODD = st.sampled_from([b"", b"\x00", b"\x00\x00ab", b"\xff\xfe", b"\xc3",
+                        b"doc_", b"web", b"\x80\x81\x82\x83"])
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.one_of(
+    st.lists(st.binary(max_size=40), min_size=1, max_size=3000),
+    st.lists(_ODD, min_size=1, max_size=3000),
+    st.lists(st.lists(_ODD, max_size=6).map(b"".join), min_size=1,
+             max_size=3000),
+    st.tuples(st.binary(max_size=12), st.integers(1, 5000))
+    .map(lambda t: [t[0]] * t[1])))
+def test_selector_matches_pylist_oracle_property(strs):
+    """Empty strings, one distinct value (``bin_const``), NUL and
+    non-UTF-8 bytes: the Arrow-side sample picks the oracle's codec."""
+    lens, data = _col(strs)
+    assert BC.select_bin_codec(lens, data) == _select_oracle(lens, data)
+
+
+@pytest.mark.parametrize("length", [7, 100, 127])
+def test_fsst_table_from_sample_prefix_is_the_full_table(length,
+                                                         monkeypatch):
+    """The FSST trial gets as Python bytes only the sample values its
+    16 KiB build budget reads. Where the budget ends inside a value, the
+    table built from that prefix is the table of the whole sample."""
+    from zseq.codecs import fsst
+
+    rng = np.random.default_rng(length)
+    strs = [bytes(rng.integers(97, 123, length, dtype=np.uint8))
+            for _ in range(20_000)]
+    lens, data = _col(strs)
+    got = []
+    build = fsst.build_table
+    monkeypatch.setattr(fsst, "build_table",
+                        lambda s: got.append(s) or build(s))
+    assert BC.select_bin_codec(lens, data) == _select_oracle(lens, data)
+    prefix, full = got  # the selector's build, then the oracle's
+    assert sum(map(len, prefix[:-1])) < fsst.BUILD_SAMPLE_BYTES \
+        < sum(map(len, prefix))
+    assert len(prefix) < len(full) and full[:len(prefix)] == prefix
+    assert build(prefix).serialize() == build(full).serialize()

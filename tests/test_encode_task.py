@@ -1,12 +1,14 @@
-"""The encode task body: the clustered row gather (``_take_table``), a
-pin of the bytes ``_encode_table_to_file`` writes, and pins of what
-every writer commits."""
+"""The encode task body: the parquet read (``_read_parquet``), the
+clustered row gather (``_take_table``), a pin of the bytes
+``_encode_table_to_file`` writes, and pins of what every writer
+commits."""
 
 import os
 import tracemalloc
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 
 from perfbench import corpus as C
@@ -127,6 +129,45 @@ def test_cluster_order_is_chunking_invariant():
                           encode._cluster_order(_chunked(tbl, 2)))
 
 
+def _cluster_oracle(tbl: pa.Table, name: str) -> np.ndarray:
+    """Row order by (bit width of the row's max |value|, length), from
+    Python ints. The row's extremes are cast to int64 first, so a
+    uint64 extreme past 2^63 wraps, as it always has."""
+    def wrap(v):
+        return v - (1 << 64) if v >= 1 << 63 else v
+
+    rows = [r or [] for r in tbl.column(name).to_pylist()]
+    lengths = [len(r) for r in rows]
+    rowmax = [min(max(abs(wrap(max(r))), abs(wrap(min(r)))), 1 << 52)
+              if r else 0 for r in rows]
+    width = np.frexp(np.array(rowmax, dtype=np.float64))[1]
+    return np.lexsort((lengths, width))
+
+
+@pytest.mark.parametrize("chunks", [1, 2])
+@pytest.mark.parametrize("values", ["negative", "non_negative", "uint32",
+                                    "uint64"])
+def test_cluster_order_matches_abs_max_oracle(values, chunks):
+    """A list column with a negative value keeps the min reduction (|min|
+    can pass the max); without one the row max alone orders the rows,
+    except uint64, whose extremes wrap in the cast to int64. Every case
+    gives the order of the per-row max |value|."""
+    tbl = _table().select(["tok", "n"])
+    tok = tbl.column("tok").combine_chunks()
+    vals = tok.values.to_numpy()
+    if values == "non_negative":
+        vals = np.abs(vals)
+    elif values == "uint32":
+        vals = np.abs(vals).astype(np.uint32) << np.uint32(11)
+    elif values == "uint64":
+        vals = np.abs(vals).astype(np.uint64) << np.uint64(44)
+    tok = pa.ListArray.from_arrays(tok.offsets, pa.array(vals))
+    tbl = _chunked(tbl.set_column(0, "tok", tok), chunks)
+    assert (vals.min() < 0) == (values == "negative")
+    assert np.array_equal(encode._cluster_order(tbl),
+                          _cluster_oracle(tbl, "tok"))
+
+
 def test_take_table_allocates_about_one_output():
     """The gather writes rows straight into one output buffer: no
     per-element index arrays the size of the column, and no combined
@@ -189,6 +230,29 @@ def test_raw_bytes_is_chunking_invariant(tmp_path):
     assert got == [want] * 3, (got, want)
 
 
+def _subprocess_env() -> dict:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return dict(os.environ, PYTHONPATH=root)
+
+
+@pytest.fixture(scope="module")
+def fixture_part(tmp_path_factory):
+    """One fixture part (234,375 rows, 153 MB of Arrow) and a 2,000-row
+    warm-up part, written by a subprocess."""
+    import subprocess
+    import sys
+
+    d = tmp_path_factory.mktemp("fixture_part")
+    warm, part = str(d / "warm.parquet"), str(d / "part.parquet")
+    subprocess.run(
+        [sys.executable, "-c",
+         "from perfbench import corpus as C\n"
+         f"C.write_file('fixture', 7, 14_000_000, 2_000, {warm!r})\n"
+         f"C.write_file('fixture', 7, 14_000_000, 234_375, {part!r})"],
+        env=_subprocess_env(), check=True)
+    return warm, part
+
+
 # Peak RSS is the process's VmHWM: ru_maxrss would start at the RSS of
 # the process that spawned this one (Linux carries it across exec).
 _RSS_PROBE = """
@@ -208,34 +272,237 @@ print(hwm() - before, row.column("raw_bytes")[0].as_py())
 """
 
 
-def test_encode_task_peak_rss_is_bounded(tmp_path):
+def test_encode_task_peak_rss_is_bounded(fixture_part, tmp_path):
     """One fixture part (234,375 rows, 153 MB of Arrow) through the
     parquet task body, in a fresh process after a 2,000-row warm-up
     part: its peak RSS grows by at most 2x the part's Arrow bytes. A
     whole-file read plus a combined tokens column and a clustered copy
     of the whole part grows it by 5.4-6.2x; a streamed read gathering
     one block at a time, by 2.1-2.2x; with each FORBP segment built once
-    in pieces and the column chunks read 1 MiB at a time, by 1.64x."""
+    in pieces and the column chunks read 1 MiB at a time, by 1.64x; with
+    4,096-row batches and the tokens streamed into one buffer, by
+    1.65-1.67x (the buffer's pages replace the Arrow pool's)."""
     import subprocess
     import sys
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, PYTHONPATH=root)
-    warm, part = (str(tmp_path / f) for f in ("warm.parquet",
-                                              "part.parquet"))
-    subprocess.run(
-        [sys.executable, "-c",
-         "from perfbench import corpus as C\n"
-         f"C.write_file('fixture', 7, 14_000_000, 2_000, {warm!r})\n"
-         f"C.write_file('fixture', 7, 14_000_000, 234_375, {part!r})"],
-        env=env, check=True)
+    warm, part = fixture_part
     out = subprocess.run(
         [sys.executable, "-c", _RSS_PROBE, warm, part, str(tmp_path)],
-        env=env, check=True, capture_output=True, text=True).stdout
+        env=_subprocess_env(), check=True, capture_output=True,
+        text=True).stdout
     grown, arrow_bytes = map(int, out.split())
     assert arrow_bytes > 150_000_000
     assert grown <= 2 * arrow_bytes, (grown, arrow_bytes,
                                       grown / arrow_bytes)
+
+
+_POOL_PROBE = """
+import sys
+import pyarrow as pa
+from zseq import encode
+tbl = encode._read_parquet(sys.argv[1])
+print(pa.default_memory_pool().max_memory(),
+      sum(encode._data_bytes(c.chunks) for c in tbl.columns))
+"""
+
+
+def test_parquet_read_keeps_the_arrow_pool_small(fixture_part):
+    """The task body's read of a fixture part, in a fresh process:
+    Arrow's pool peaks at no more than a quarter of the part's Arrow
+    bytes. Reading 65,536-row batches peaked it at 1.60x (245 MB):
+    Arrow grows each batch's list buffers to their size."""
+    import subprocess
+    import sys
+
+    out = subprocess.run(
+        [sys.executable, "-c", _POOL_PROBE, fixture_part[1]],
+        env=_subprocess_env(), check=True, capture_output=True,
+        text=True).stdout
+    peak, raw = map(int, out.split())
+    assert raw > 150_000_000
+    assert peak <= 0.25 * raw, (peak, raw, peak / raw)
+
+
+def _with_nulls(tbl: pa.Table, name: str, rows: np.ndarray,
+                elems: bool) -> pa.Table:
+    """``tbl`` with the list column ``name`` null at ``rows`` (or, with
+    ``elems``, holding a null element in each of those rows)."""
+    col = tbl.column(name).combine_chunks()
+    vals = col.values
+    if elems:
+        offs = col.offsets.to_numpy()
+        hit = np.zeros(len(vals), dtype=bool)
+        starts = offs[:-1][rows]
+        hit[starts[starts < offs[1:][rows]]] = True
+        arr = pa.ListArray.from_arrays(
+            col.offsets, pa.array(vals.to_numpy(), mask=hit), type=col.type)
+    else:
+        mask = np.zeros(len(col), dtype=bool)
+        mask[rows] = True
+        arr = pc.if_else(pa.array(mask), pa.scalar(None, col.type), col)
+    return tbl.set_column(tbl.column_names.index(name), name, arr)
+
+
+def _read_case(name: str) -> tuple[pa.Table, pa.Schema | None]:
+    """(table to write, schema the task is given or None for the
+    file's) for one shape the parquet read meets."""
+    tbl = C.make_table("fixture", 7, 14_000_000, 20_000)
+    rows = np.arange(9_000, 20_000, 7)  # past the first read batches
+    if name == "row_groups":
+        return tbl, None
+    if name == "null_rows":
+        return _with_nulls(tbl, "tokens", rows, False), None
+    if name == "null_elements":
+        return _with_nulls(tbl, "tokens", rows, True), None
+    if name == "null_from_the_start":
+        return _with_nulls(tbl, "tokens", np.arange(0, 20_000, 5),
+                           False), None
+    if name == "large_list_int64":
+        return tbl.set_column(1, "tokens", tbl.column("tokens").cast(
+            pa.large_list(pa.int64()))), None
+    if name == "list_float":
+        col = tbl.column("tokens").combine_chunks()
+        w = pa.ListArray.from_arrays(
+            col.offsets,
+            pa.array(col.values.to_numpy().astype(np.float32) / 7))
+        return tbl.append_column("w", w), None
+    if name == "list_not_first":
+        return pa.table({"doc_id": tbl.column("doc_id"),
+                         "extra": pa.array(np.arange(20_000) * 3),
+                         "source": tbl.column("source"),
+                         "tokens": tbl.column("tokens"),
+                         "n_tok": tbl.column("n_tok")}), None
+    if name == "type_drift":
+        narrow = pa.schema([
+            ("doc_id", pa.string()),
+            ("tokens", pa.list_(pa.field("element", pa.int32()))),
+            ("n_tok", pa.int16()), ("source", pa.large_string())])
+        wide = pa.schema([
+            ("doc_id", pa.string()),
+            ("tokens", pa.large_list(pa.field("element", pa.int64()))),
+            ("n_tok", pa.int32()), ("source", pa.string())])
+        return tbl.cast(narrow), wide
+    if name == "empty_lists":
+        empty = pa.ListArray.from_arrays(
+            pa.array(np.zeros(20_001, dtype=np.int32)),
+            pa.array([], pa.int32()))
+        return tbl.set_column(1, "tokens", empty), None
+    if name == "zero_rows":
+        return tbl.slice(0, 0), None
+    raise KeyError(name)
+
+
+READ_CASES = ["row_groups", "null_rows", "null_elements",
+              "null_from_the_start", "large_list_int64", "list_float",
+              "list_not_first", "type_drift", "empty_lists", "zero_rows"]
+
+
+def _sha256(path: str) -> str:
+    import hashlib
+
+    with open(path, "rb") as f:
+        return hashlib.sha256(f.read()).hexdigest()
+
+
+def _task_and_oracle(src: str, schema: pa.Schema, out: str) -> tuple:
+    """sha256 of the part the parquet task body writes for ``src``, and
+    of the part ``_encode_table_to_file`` writes from ``pq.read_table``
+    of it."""
+    import pyarrow.parquet as pq
+
+    task_dir, oracle_dir = (os.path.join(out, d) for d in ("t", "o"))
+    os.makedirs(task_dir)
+    os.makedirs(oracle_dir)
+    [row] = list(encode._encode_files(task_dir, schema, None, "rd")(
+        (3, src)))
+    fname = row.column("file")[0].as_py()
+    encode._encode_table_to_file(
+        pq.read_table(src).cast(schema), oracle_dir, 3, schema, True,
+        encode.BATCH_ROWS, 0.0, fname=fname)
+    return (_sha256(os.path.join(task_dir, fname)),
+            _sha256(os.path.join(oracle_dir, fname)))
+
+
+@pytest.mark.parametrize("case", READ_CASES)
+def test_parquet_task_writes_the_whole_file_reads_bytes(case, tmp_path,
+                                                       monkeypatch):
+    """The parquet task body's part is byte for byte the part of a
+    whole-file ``pq.read_table`` and cast, for every shape its read
+    streams or falls back on. Row groups of 5,000 rows do not align with
+    the 4,096-row read batches, and 10,000-row blocks make each block
+    span read chunks."""
+    import pyarrow.parquet as pq
+
+    monkeypatch.setattr(encode, "BATCH_ROWS", 10_000)
+    tbl, schema = _read_case(case)
+    src = str(tmp_path / "in.parquet")
+    pq.write_table(tbl, src, row_group_size=5_000)
+    task, oracle = _task_and_oracle(src, schema or pq.read_schema(src),
+                                    str(tmp_path))
+    assert task == oracle
+
+
+def test_parquet_task_hands_tokens_over_as_one_chunk(tmp_path,
+                                                     monkeypatch):
+    """The tokens column reaches ``_encode_table_to_file`` as one chunk
+    (one gather per run of equal-length rows); the string columns as
+    chunks of at most ``BATCH_ROWS`` rows."""
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "in.parquet")
+    pq.write_table(C.make_table("fixture", 7, 14_000_000, 20_000), src,
+                   row_group_size=5_000)
+    seen = {}
+    real = encode._encode_table_to_file
+
+    def spy(tbl, *args, **kw):
+        seen.update((n, [len(c) for c in tbl.column(n).chunks])
+                    for n in tbl.column_names)
+        return real(tbl, *args, **kw)
+
+    monkeypatch.setattr(encode, "BATCH_ROWS", 8_192)
+    monkeypatch.setattr(encode, "_encode_table_to_file", spy)
+    list(encode._encode_files(str(tmp_path), pq.read_schema(src), None,
+                              "one")((0, src)))
+    assert seen["tokens"] == [20_000]
+    assert seen["doc_id"] == seen["source"] == [8_192, 8_192, 3_616]
+
+
+def test_block_string_bytes_past_int32_offsets_are_refused(tmp_path,
+                                                           monkeypatch):
+    """With the int32 offset limit patched between a block's string
+    bytes and the part's token count, the tokens column falls back to
+    Arrow's chunks and the part's bytes do not change. Patched under a
+    block's ``doc_id`` bytes, the part is refused with a ValueError
+    naming the column, clustered or not, where pyarrow would raise
+    while combining the block."""
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "in.parquet")
+    tbl = C.make_table("fixture", 7, 14_000_000, 10_000)
+    pq.write_table(tbl, src)
+    schema = pq.read_schema(src)
+    want = _task_and_oracle(src, schema, str(tmp_path / "a"))
+    assert want[0] == want[1]
+    tokens = pc.sum(pc.list_value_length(tbl.column("tokens"))).as_py()
+    strings = max(pc.sum(pc.binary_length(tbl.column(c))).as_py()
+                  for c in ("doc_id", "source"))
+    limit = 2 * strings
+    assert limit < tokens // 2
+    monkeypatch.setattr(encode, "_OFFSETS_MAX", limit)
+    chunks = encode._read_parquet(src).column("tokens").num_chunks
+    assert chunks > 1
+    assert _task_and_oracle(src, schema, str(tmp_path / "b")) == want
+    doc_bytes = pc.sum(pc.binary_length(tbl.column("doc_id"))).as_py()
+    monkeypatch.setattr(encode, "_OFFSETS_MAX", doc_bytes - 1)
+    for cluster in (True, False):
+        two = pa.concat_tables([tbl.slice(0, 5_000), tbl.slice(5_000)])
+        with pytest.raises(ValueError, match="'doc_id'.*large_string"):
+            encode._encode_table_to_file(two, str(tmp_path), 0, schema,
+                                         cluster, 1 << 16, 0.0)
+    with pytest.raises(ValueError, match="'doc_id'"):
+        list(encode._encode_files(str(tmp_path), schema, None, "big")(
+            (0, src)))
 
 
 # enc_bytes and crc32 of one clustered part. The fixture's enc_bytes date

@@ -26,6 +26,7 @@ import struct
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from . import fsst
 from . import intcodecs as IC
@@ -288,29 +289,31 @@ def select_bin_codec(lengths: np.ndarray, data: np.ndarray) -> int:
     total = int(lengths.sum())
     mean_len = total / n
     offs = _offsets(lengths)
-    # Strided sample of whole values — sliced out via Arrow take (C
-    # kernels) instead of a per-value Python loop; identical values, so
-    # selection (and the encoded bytes) are unchanged.
+    # Strided sample of whole values, gathered by Arrow's take and kept
+    # an Arrow array: its count of distinct values, its bytes (one slice
+    # of the taken data buffer) and its lengths (from the offsets) need
+    # no per-value Python objects.
     want = max(64, int(SAMPLE_BYTES / max(1.0, mean_len)))
     step = max(1, n // want)
-    sidx = np.arange(0, n, step)
     arr = pa.Array.from_buffers(
         pa.large_binary(), n,
         [None, pa.py_buffer(np.ascontiguousarray(offs)),
          pa.py_buffer(np.ascontiguousarray(data))])
-    sample_vals = arr.take(pa.array(sidx)).to_pylist()
-    m = len(sample_vals)
-    distinct = len(set(sample_vals))
+    sample = arr.take(pa.array(np.arange(0, n, step)))
+    m = len(sample)
+    distinct = pc.count_distinct(sample).as_py()
     if distinct == 1 and step == 1:
         return T_BIN_CONST
-    sample_blob = b"".join(sample_vals)
-    sample_bytes = max(1, len(sample_blob))
+    soffs = np.frombuffer(sample.buffers()[1], np.int64, m + 1)
+    sdata = np.frombuffer(sample.buffers()[2] or b"", np.uint8)[
+        soffs[0]:soffs[-1]]
+    sample_bytes = max(1, sdata.size)
 
     est: dict[int, float] = {}
     # lengths segment cost (shared by raw/zstd) — estimate via mean 1B/val.
     lens_cost = n * 0.5 + 26
     est[T_BIN_RAW] = total + lens_cost
-    comp = zstd_compress(sample_blob)
+    comp = zstd_compress(sdata)
     est[T_BIN_ZSTD] = len(comp) / sample_bytes * total + lens_cost + 16
     if distinct < 0.5 * m:
         card = distinct / m * n if distinct > 1 else distinct
@@ -324,17 +327,20 @@ def select_bin_codec(lengths: np.ndarray, data: np.ndarray) -> int:
     # (~3-6x), or when strings are long (zstd's home turf).
     zstd_ratio = est[T_BIN_ZSTD] / max(1.0, float(total))
     if mean_len <= FSST_MAX_MEAN_LEN and total >= 1024 and zstd_ratio > 0.22:
-        slens = np.array([len(v) for v in sample_vals], dtype=np.int64)
+        slens = np.diff(soffs)
         # Nor when even FSST's floor loses: a code covers at most 8 bytes,
         # a non-empty string emits at least one code and the table is at
         # least 1 byte, so the estimate below is never under this floor
         # (same association, so float rounding keeps the order) and min()
         # keeps the earlier key on a tie: the selection is unchanged.
-        lo = max(len(sample_blob) / 8, np.count_nonzero(slens)) / sample_bytes
+        lo = max(sdata.size / 8, np.count_nonzero(slens)) / sample_bytes
         if lo * total + 1 + n * 0.5 + 40 < min(est.values()):
-            table = fsst.build_table(sample_vals)
-            sdata = np.frombuffer(sample_blob, dtype=np.uint8)
-            enc, _ = fsst.encode_column(sdata, _offsets(slens), table)
+            # build_table reads values until BUILD_SAMPLE_BYTES of them:
+            # only those become Python bytes
+            k = int(np.searchsorted(soffs[:-1] - soffs[0],
+                                    fsst.BUILD_SAMPLE_BYTES))
+            table = fsst.build_table(sample.slice(0, k).to_pylist())
+            enc, _ = fsst.encode_column(sdata, soffs - soffs[0], table)
             ratio = enc.size / sample_bytes
             est[T_BIN_FSST] = (ratio * total + len(table.serialize())
                                + n * 0.5 + 40)

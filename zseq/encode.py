@@ -33,14 +33,16 @@ Scale notes (design target: 10^12 sequences, 1000 executors):
     batches otherwise force every FORBP mini-block to the widest regime —
     measured ~2x size win on mixed-regime data.
   - Bounded task memory: a task holds its input once plus one block. The
-    parquet fast path reads its file in ``BATCH_ROWS`` record batches
-    through a 1 MiB buffered stream, so no column chunk is held whole;
+    parquet fast path reads its file in ``READ_ROWS`` record batches
+    through a 1 MiB buffered stream, so no column chunk is held whole,
+    and copies each list-of-numbers column into one buffer sized from
+    the file's footer, so no Arrow buffer grows (``_read_parquet``);
     no writer combines the input's chunks; the clustered order is
     computed once per part, and each block gathers its slice of it
     straight from the input chunks (``_take_table``); the int codecs
     pack in cache-sized pieces, and a FORBP segment is built once into
     one buffer. One fixture part (234,375 rows, 153 MB of Arrow) grows
-    the task's peak RSS by about 1.64x its Arrow bytes.
+    the task's peak RSS by about 1.65x its Arrow bytes.
 """
 
 from __future__ import annotations
@@ -70,7 +72,18 @@ METRICS_SCHEMA = (
     "crc32 long, zones string, codec_hist string"
 )
 
-BATCH_ROWS = 1 << 16  # rows per block in every part file
+# Rows per block in every part file, and the most rows of a chunk the
+# parquet read regroups its batches into.
+BATCH_ROWS = 1 << 16
+# Rows per record batch of the parquet task's read. Arrow grows each
+# batch's list buffers to their size, and at BATCH_ROWS those
+# allocations are too large for its pool to recycle: reading a fixture
+# part faulted in fresh pages (112K minor faults in a fresh process at
+# 65,536 rows, 7K-15K at 4,096). Of 1,024 to 16,384 rows, 4,096 read a
+# fixture part fastest (min of 6 in process: 398 ms; 447 at 1,024, 490
+# at 8,192, 687 at 16,384).
+READ_ROWS = 1 << 12
+_OFFSETS_MAX = (1 << 31) - 1  # the most bytes or values int32 offsets span
 
 _METRICS_PA = pa.schema([
     ("part_id", pa.int32()), ("file", pa.string()), ("rows", pa.int64()),
@@ -343,8 +356,9 @@ def own_batches(batches: list) -> list:
 def _cluster_order(tbl: pa.Table) -> np.ndarray | None:
     """Row order by (bit width of per-row max |value| of the first list
     column, list length). Returns None when there is nothing to cluster.
-    Reads the column chunk by chunk: the per-row stats need no combined
-    copy, and neither does ``_take_table``'s gather."""
+    Reads the column chunk by chunk (the parquet task reads it as one):
+    the per-row stats need no combined copy, and neither does
+    ``_take_table``'s gather."""
     list_col = None
     for name in tbl.column_names:
         t = tbl.schema.field(name).type
@@ -369,10 +383,15 @@ def _cluster_order(tbl: pa.Table) -> np.ndarray | None:
             # max |value| per row WITHOUT materializing |values| in int64:
             # reduceat min and max on the native (usually int32) buffer,
             # abs on the tiny per-row results — same rowmax, ~4x less
-            # traffic.
+            # traffic. Without a negative value (token ids; one min
+            # tells) it is the row max. uint64 keeps both reductions:
+            # its cast to int64 can wrap.
             row_hi = np.maximum.reduceat(vals, starts).astype(np.int64)
-            row_lo = np.minimum.reduceat(vals, starts).astype(np.int64)
-            rm[nz] = np.maximum(np.abs(row_hi), np.abs(row_lo))
+            if vals.dtype != np.uint64 and vals.min() >= 0:
+                rm[nz] = row_hi
+            else:
+                row_lo = np.minimum.reduceat(vals, starts).astype(np.int64)
+                rm[nz] = np.maximum(np.abs(row_hi), np.abs(row_lo))
         lengths.append(ln)
         rowmax.append(rm)
     lengths, rowmax = np.concatenate(lengths), np.concatenate(rowmax)
@@ -418,6 +437,13 @@ def _take_rows(fvs: list[np.ndarray], which: np.ndarray,
     return out
 
 
+def _numeric_list(t: pa.DataType) -> bool:
+    """A list or large list of ints or floats."""
+    return (pa.types.is_list(t) or pa.types.is_large_list(t)) \
+        and (pa.types.is_integer(t.value_type)
+             or pa.types.is_floating(t.value_type))
+
+
 def _chunk_plan(lengths: tuple[int, ...], order: np.ndarray) -> tuple:
     """How to gather the rows ``order`` from a column chunked as
     ``lengths``: per chunk, the rows of ``order`` it holds (indices
@@ -439,20 +465,19 @@ def _take_table(tbl: pa.Table, order: np.ndarray) -> pa.Table:
     take gathers lists element by element (measured ~2x the cost of the
     codecs), while ``_take_rows`` copies whole rows from their input
     chunks into the one output buffer, so a multi-chunk list column is
-    never combined. Null-bearing lists and other value types take the
-    Arrow path: Arrow's take of a multi-chunk column concatenates all
-    its chunks on every call, so each chunk gives up its rows of the
-    block (``_chunk_plan``, shared by columns chunked alike) and one
-    take of those pieces puts them in order. ``_encode_table_to_file``
-    calls it once per block, with that block's slice of the clustered
-    order."""
+    never combined. The parquet task reads such a column as one chunk,
+    so each run of equal-length rows is one gather (367 for a fixture
+    part, where four 65,536-row chunks made 1,459 pieces). Null-bearing
+    lists and other value types take the Arrow path: Arrow's take of a
+    multi-chunk column concatenates all its chunks on every call, so
+    each chunk gives up its rows of the block (``_chunk_plan``, shared
+    by columns chunked alike) and one take of those pieces puts them in
+    order. ``_encode_table_to_file`` calls it once per block, with that
+    block's slice of the clustered order."""
     cols, plans = [], {}
     for col in tbl.columns:
         t = col.type
-        if (pa.types.is_list(t) or pa.types.is_large_list(t)) \
-                and (pa.types.is_integer(t.value_type)
-                     or pa.types.is_floating(t.value_type)) \
-                and col.null_count == 0 \
+        if _numeric_list(t) and col.null_count == 0 \
                 and all(c.values.null_count == 0 for c in col.chunks):
             offs = [c.offsets.to_numpy().astype(np.int64)
                     for c in col.chunks]
@@ -495,6 +520,41 @@ def _one_batch(tbl: pa.Table) -> pa.RecordBatch:
          for c in tbl.columns], schema=tbl.schema)
 
 
+def _offsets(a: pa.Array) -> np.ndarray:
+    """The ``len(a) + 1`` offsets of a non-empty string, binary, list or
+    map array's rows, read in place."""
+    t = a.type
+    wide = pa.types.is_large_list(t) or pa.types.is_large_binary(t) \
+        or pa.types.is_large_string(t)
+    return np.frombuffer(a.buffers()[1], np.int64 if wide else np.int32,
+                         a.offset + len(a) + 1)[a.offset:]
+
+
+def _check_block_bytes(tbl: pa.Table, order: np.ndarray | None,
+                       batch_rows: int) -> None:
+    """Refuse, naming the column, a part one of whose blocks holds more
+    ``string`` or ``binary`` bytes than int32 offsets span: gathering
+    the block (``_take_table``) or combining its chunks (``_one_batch``)
+    would otherwise fail inside pyarrow. Only a column whose part-level
+    bytes pass the limit is counted row by row."""
+    for name, col in zip(tbl.column_names, tbl.columns):
+        if not (pa.types.is_string(col.type) or pa.types.is_binary(col.type)):
+            continue
+        offs = [_offsets(c) for c in col.chunks if len(c)]
+        if sum(int(o[-1]) - int(o[0]) for o in offs) <= _OFFSETS_MAX:
+            continue
+        lens = np.concatenate([np.diff(o) for o in offs]).astype(np.int64)
+        if order is not None:
+            lens = lens[order]
+        most = int(np.add.reduceat(
+            lens, np.arange(0, lens.size, batch_rows)).max())
+        if most > _OFFSETS_MAX:
+            raise ValueError(
+                f"column {name!r}: a block of at most {batch_rows:,} rows "
+                f"holds {most:,} bytes, past the {_OFFSETS_MAX:,} that "
+                f"{col.type} offsets span; write it as large_{col.type}")
+
+
 def _data_bytes(chunks: list[pa.Array]) -> int:
     """Arrow bytes of the rows in ``chunks`` (one column's chunks): per
     row its fixed-width value or offset, the string bytes and list
@@ -517,9 +577,7 @@ def _data_bytes(chunks: list[pa.Array]) -> int:
     wide = pa.types.is_large_list(t) or pa.types.is_large_binary(t) \
         or pa.types.is_large_string(t)
     if lists or wide or pa.types.is_binary(t) or pa.types.is_string(t):
-        spans = [np.frombuffer(a.buffers()[1], np.int64 if wide else np.int32,
-                               a.offset + len(a) + 1)[[a.offset, -1]]
-                 .tolist() for a in chunks]
+        spans = [_offsets(a)[[0, -1]].tolist() for a in chunks]
         total += n * (8 if wide else 4)
         if lists:
             return total + _data_bytes([a.values.slice(lo, hi - lo)
@@ -547,6 +605,7 @@ def _encode_table_to_file(tbl: pa.Table, out_dir: str, part_id: int,
     # The clustered order is computed once; each block gathers its slice
     # of it from the input, so no clustered copy of the whole part exists.
     order = _cluster_order(tbl) if cluster else None
+    _check_block_bytes(tbl, order, batch_rows)
     fname = fname or part_name(None, part_id)
     final = os.path.join(out_dir, fname)
     # Attempt-unique tmp: pid alone can COLLIDE across machines on a
@@ -629,6 +688,137 @@ def _encode_partition(out_dir: str, schema: pa.Schema, cluster: bool,
     return fn
 
 
+def _leaves(t: pa.DataType) -> int:
+    """Parquet leaf columns of an Arrow field of type ``t``."""
+    if pa.types.is_struct(t):
+        return sum(_leaves(f.type) for f in t)
+    if pa.types.is_map(t):
+        return _leaves(t.key_type) + _leaves(t.item_type)
+    if pa.types.is_list(t) or pa.types.is_large_list(t) \
+            or pa.types.is_fixed_size_list(t):
+        return _leaves(t.value_type)
+    return 1
+
+
+class _ListBuffer:
+    """The rows of one list-of-numbers column, copied batch by batch into
+    one values buffer sized from the parquet footer and one offsets
+    array sized from the row count."""
+
+    def __init__(self, t: pa.DataType, values: int, rows: int):
+        self.type = t
+        self.values = np.empty(values, t.value_type.to_pandas_dtype())
+        self.offsets = np.zeros(
+            rows + 1, np.int64 if pa.types.is_large_list(t) else np.int32)
+        self.rows = 0
+
+    def add(self, arr: pa.Array) -> bool:
+        """Append ``arr``'s rows. False, and nothing appended, if it holds
+        a null row or element, or more rows or values than the buffers
+        have left (a footer that undercounts)."""
+        if arr.null_count or arr.values.null_count:
+            return False
+        offs = _offsets(arr)
+        lo, hi = int(offs[0]), int(offs[-1])
+        at, r = int(self.offsets[self.rows]), self.rows
+        if at + hi - lo > self.values.size \
+                or r + len(arr) >= self.offsets.size:
+            return False
+        self.values[at:at + hi - lo] = arr.values.to_numpy()[lo:hi]
+        self.offsets[r + 1:r + 1 + len(arr)] = offs[1:] - (lo - at)
+        self.rows += len(arr)
+        return True
+
+    def array(self) -> pa.Array:
+        """The rows appended so far, over the buffers (no copy)."""
+        offs = self.offsets[:self.rows + 1]
+        return (pa.LargeListArray if pa.types.is_large_list(self.type)
+                else pa.ListArray).from_arrays(
+            pa.array(offs), pa.array(self.values[:int(offs[-1])]),
+            type=self.type)
+
+
+class _Regroup:
+    """The batches of one column, concatenated into chunks of at most
+    ``BATCH_ROWS`` rows, each within what int32 offsets span."""
+
+    def __init__(self):
+        self.chunks: list[pa.Array] = []
+        self.pending: list[pa.Array] = []
+        self.rows = self.span = 0
+
+    def add(self, arr: pa.Array) -> None:
+        t = arr.type
+        span = 0
+        if pa.types.is_string(t) or pa.types.is_binary(t) \
+                or pa.types.is_list(t):
+            offs = _offsets(arr)
+            span = int(offs[-1]) - int(offs[0])
+        if self.rows + len(arr) > BATCH_ROWS \
+                or self.span + span > _OFFSETS_MAX:
+            self.flush()
+        self.pending.append(arr)
+        self.rows += len(arr)
+        self.span += span
+
+    def flush(self) -> None:
+        if self.pending:
+            self.chunks.append(pa.concat_arrays(self.pending))
+        self.pending, self.rows, self.span = [], 0, 0
+
+
+def _read_parquet(path: str) -> pa.Table:
+    """A parquet file as a table, read in ``READ_ROWS`` record batches
+    through a 1 MiB buffered stream, which reads each column chunk a
+    piece at a time instead of holding it whole. Arrow's pool holds no
+    more than a few batches and the chunks below: 28 MB at its peak for
+    a fixture part of 153 MB, where ``BATCH_ROWS`` batches peaked at
+    245 MB and ``pq.read_table`` at several times the table.
+
+    A list-of-numbers column (one parquet leaf) is one chunk:
+    its values are streamed into one buffer whose size is the leaf's
+    ``num_values`` over the row groups, an upper bound on its element
+    count, so no Arrow buffer grows, and ``_take_table`` gathers each
+    run of equal-length rows from it at once. Every other column, and a
+    list column whose footer bound passes its offsets or whose data
+    holds a null, keeps Arrow's batches, regrouped into chunks of at
+    most ``BATCH_ROWS`` rows. The file's schema makes a zero-row file
+    an empty table."""
+    import pyarrow.parquet as pq
+
+    with pq.ParquetFile(path, buffer_size=1 << 20) as pf:
+        schema, meta = pf.schema_arrow, pf.metadata
+        flat: dict[int, _ListBuffer] = {}
+        leaf = 0
+        for i, t in enumerate(schema.types):
+            if _numeric_list(t):
+                bound = sum(meta.row_group(g).column(leaf).num_values
+                            for g in range(meta.num_row_groups))
+                if pa.types.is_large_list(t) or bound <= _OFFSETS_MAX:
+                    flat[i] = _ListBuffer(t, bound, meta.num_rows)
+            leaf += _leaves(t)
+        if leaf != meta.num_columns:  # a layout _leaves does not know
+            flat = {}
+        groups = [_Regroup() for _ in schema]
+        for batch in pf.iter_batches(batch_size=READ_ROWS,
+                                     use_threads=False):
+            for i, arr in enumerate(batch.columns):
+                if i in flat and not flat[i].add(arr):
+                    if flat[i].rows:  # the rows before it stay one chunk
+                        groups[i].chunks.append(flat[i].array())
+                    del flat[i]
+                if i not in flat:
+                    groups[i].add(arr)
+    cols = []
+    for i, t in enumerate(schema.types):
+        if i in flat:
+            cols.append(pa.chunked_array([flat[i].array()], t))
+        else:
+            groups[i].flush()
+            cols.append(pa.chunked_array(groups[i].chunks, t))
+    return pa.Table.from_arrays(cols, schema=schema)
+
+
 def _encode_files(out_dir: str, schema: pa.Schema, zstd_level: int | None,
                   token: str):
     """Task body of the parquet fast path (manifest mode ``files``), one
@@ -638,8 +828,6 @@ def _encode_files(out_dir: str, schema: pa.Schema, zstd_level: int | None,
     conversion, which profiling shows costs more than the codecs for
     array columns) and writes one .zseq."""
     def fn(item):
-        import pyarrow.parquet as pq
-
         # One task == one core: pyarrow's internal pool would otherwise
         # use every machine core per read, silently oversubscribing (and
         # making any cores-vs-throughput measurement meaningless).
@@ -647,16 +835,7 @@ def _encode_files(out_dir: str, schema: pa.Schema, zstd_level: int | None,
         pa.set_io_thread_count(2)
         part_id, path = item
         t0 = time.time()
-        # Record batches, not pq.read_table: the whole-file read peaks
-        # the Arrow pool at several times the table's size. A buffered
-        # stream reads each column chunk 1 MiB at a time instead of
-        # holding it whole (fixture part: pool peak 312 -> 245 MB, the
-        # same table). The file's schema makes a zero-row file an empty
-        # table.
-        with pq.ParquetFile(path, buffer_size=1 << 20) as pf:
-            tbl = pa.Table.from_batches(
-                pf.iter_batches(batch_size=BATCH_ROWS, use_threads=False),
-                schema=pf.schema_arrow)
+        tbl = _read_parquet(path)
         if schema.names != tbl.schema.names:
             tbl = tbl.select(schema.names)
         tbl = tbl.cast(schema)
