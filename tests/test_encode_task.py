@@ -131,13 +131,15 @@ def test_cluster_order_is_chunking_invariant():
 
 def _cluster_oracle(tbl: pa.Table, name: str) -> np.ndarray:
     """Row order by (bit width of the row's max |value|, length), from
-    Python ints. The row's extremes are cast to int64 first, so a
-    uint64 extreme past 2^63 wraps, as it always has."""
+    Python ints; a null element is no value. The row's extremes are
+    cast to int64 first, so a uint64 extreme past 2^63 wraps, as it
+    always has."""
     def wrap(v):
         return v - (1 << 64) if v >= 1 << 63 else v
 
     rows = [r or [] for r in tbl.column(name).to_pylist()]
     lengths = [len(r) for r in rows]
+    rows = [[v for v in r if v is not None] for r in rows]
     rowmax = [min(max(abs(wrap(max(r))), abs(wrap(min(r)))), 1 << 52)
               if r else 0 for r in rows]
     width = np.frexp(np.array(rowmax, dtype=np.float64))[1]
@@ -166,6 +168,28 @@ def test_cluster_order_matches_abs_max_oracle(values, chunks):
     assert (vals.min() < 0) == (values == "negative")
     assert np.array_equal(encode._cluster_order(tbl),
                           _cluster_oracle(tbl, "tok"))
+
+
+@pytest.mark.parametrize("chunks", [1, 2])
+def test_cluster_order_counts_only_valid_elements(chunks):
+    """Null elements (every 13th value) and null rows of a list<int32>
+    column are no value: no float NaN reaches an int cast (which warned
+    and wrapped to INT64_MIN), and the rows take the width order of
+    their valid values."""
+    import warnings
+
+    base = _table()
+    holes = base.column("holes").combine_chunks()
+    nulls = np.zeros(len(holes), dtype=bool)
+    nulls[3::17] = True
+    tok = pa.ListArray.from_arrays(holes.offsets, holes.values,
+                                   mask=pa.array(nulls))
+    tbl = _chunked(pa.table({"tok": tok, "n": base.column("n")}), chunks)
+    assert tok.values.null_count and tok.null_count
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        got = encode._cluster_order(tbl)
+    assert np.array_equal(got, _cluster_oracle(tbl, "tok"))
 
 
 def test_take_table_allocates_about_one_output():
@@ -275,13 +299,18 @@ print(hwm() - before, row.column("raw_bytes")[0].as_py())
 def test_encode_task_peak_rss_is_bounded(fixture_part, tmp_path):
     """One fixture part (234,375 rows, 153 MB of Arrow) through the
     parquet task body, in a fresh process after a 2,000-row warm-up
-    part: its peak RSS grows by at most 2x the part's Arrow bytes. A
+    part: its peak RSS grows by at most 1.65x the part's Arrow bytes. A
     whole-file read plus a combined tokens column and a clustered copy
     of the whole part grows it by 5.4-6.2x; a streamed read gathering
     one block at a time, by 2.1-2.2x; with each FORBP segment built once
     in pieces and the column chunks read 1 MiB at a time, by 1.64x; with
     4,096-row batches and the tokens streamed into one buffer, by
-    1.65-1.67x (the buffer's pages replace the Arrow pool's)."""
+    1.64-1.67x (the buffer's pages replace the Arrow pool's); with each
+    block freed before the next gather, by 1.52-1.56x (11 runs in two
+    windows on one 4-vCPU host). The bound is the largest of those plus
+    0.09x (about 14 MiB), over twice their spread: peak RSS moves with
+    the allocator, the pyarrow build and the page size. It stays under
+    the 1.67x of a task that holds a block through the next gather."""
     import subprocess
     import sys
 
@@ -292,8 +321,8 @@ def test_encode_task_peak_rss_is_bounded(fixture_part, tmp_path):
         text=True).stdout
     grown, arrow_bytes = map(int, out.split())
     assert arrow_bytes > 150_000_000
-    assert grown <= 2 * arrow_bytes, (grown, arrow_bytes,
-                                      grown / arrow_bytes)
+    assert grown <= 1.65 * arrow_bytes, (grown, arrow_bytes,
+                                         grown / arrow_bytes)
 
 
 _POOL_PROBE = """

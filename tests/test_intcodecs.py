@@ -372,30 +372,51 @@ def _eager_wrap(seg: bytes, count: int) -> bytes:
     return IC._wrapped(seg, count, len(seg), comp, len(seg)) or seg
 
 
-def _eager_byte_aligned(arr: np.ndarray, seg: bytes, count: int) -> bytes:
-    width = seg[IC.HEADER.size + 8]
-    wide = next(b for b in IC._BYTE_WIDTHS if b >= width)
+def _eager_repack(arr: np.ndarray, seg: bytes, wide: int) -> np.ndarray:
     head = IC.HEADER.size + 9
-    inner_len = head + count * (wide // 8)
-    if len(seg) < 128 or width == wide or inner_len > 0xFFFFFFFF:
-        return seg
-    inner = np.empty(inner_len, dtype=np.uint8)
+    inner = np.empty(head + arr.size * (wide // 8), dtype=np.uint8)
     inner[:head] = np.frombuffer(seg, np.uint8, head)
-    IC.HEADER.pack_into(inner, 0, IC.T_PACK, inner_len - IC.HEADER.size)
+    IC.HEADER.pack_into(inner, 0, IC.T_PACK, inner.size - IC.HEADER.size)
     inner[head - 1] = wide
     lo = int.from_bytes(seg[IC.HEADER.size : head - 1], "little", signed=True)
     with np.errstate(over="ignore"):
         np.subtract(arr, arr.dtype.type(lo),
                     out=inner[head:].view(f"<u{wide // 8}"),
                     casting="unsafe")
-    return IC._wrapped(seg, count, inner_len, BC.zstd_compress(inner),
-                       len(seg)) or seg
+    return inner
+
+
+def _eager_retry(arr: np.ndarray, seg: bytes, count: int) -> bytes:
+    """The declined PACK's retry: the byte-width re-pack (none at a byte
+    width) and FORBP (``_composed_forbp``), each built whole, in the
+    order of zstd of their sample (the chunk itself up to 64 minis, else
+    16 evenly spaced windows of 4 whole minis), the re-pack first on a
+    tie, until one wraps."""
+    width = seg[IC.HEADER.size + 8]
+    wide = next(b for b in IC._BYTE_WIDTHS if b >= width)
+    if len(seg) < 128:
+        return seg
+    builds = [_composed_forbp]
+    if wide != width:
+        builds.insert(0, lambda v: _eager_repack(v, seg, wide))
+    nfull = count // IC.MINI
+    sample = arr if nfull <= 64 else np.concatenate([
+        arr[s * IC.MINI:(s + 4) * IC.MINI]
+        for s in (i * (nfull - 4) // 15 for i in range(16))])
+    ests = [len(BC.zstd_compress(b(sample))) for b in builds]
+    for i in sorted(range(len(builds)), key=ests.__getitem__):
+        inner = builds[i](arr)
+        got = IC._wrapped(seg, count, len(inner), BC.zstd_compress(inner),
+                          len(seg))
+        if got:
+            return got
+    return seg
 
 
 def _eager_auto_pack(arr: np.ndarray) -> bytes:
     seg = _eager_wrap(IC._seg(IC.T_PACK, IC._enc_pack(arr)), arr.size)
     if seg[0] == IC.T_PACK:
-        seg = _eager_byte_aligned(arr, seg, arr.size)
+        seg = _eager_retry(arr, seg, arr.size)
     return seg
 
 
@@ -445,32 +466,112 @@ def test_lazy_pack_matches_eager_composition(dt, lo, widths, regime,
         assert IC.encode_ints(a) == want, (width, regime)
         pack_len = len(IC.encode_ints(a, codec=IC.T_PACK))
         got = _regime_of(want, pack_len)
-        # nothing to retry at a byte width; at width 1 the 8-bit re-pack
-        # is 8x the PACK, more than zstd wins back
-        if regime == "retry" and (width == 1 or width in IC._BYTE_WIDTHS):
+        # at a byte width FORBP finds the repeat (no re-pack there); at
+        # width 1 the 8-bit re-pack is 8x the PACK, more than zstd wins
+        # back, and FORBP's 1-bit minis keep the PACK's bit phases
+        if regime == "retry" and width == 1:
             assert got == "declined"
         else:
             assert got == regime, (width, got)
 
 
 def test_winning_retry_never_packs_past_trial_prefix(monkeypatch):
+    """The PACK body is packed only as far as the wrap trial reads when
+    a retry wins (the retry's sample packs FORBP minis, not the PACK)."""
     a = _phase_shifted_repeats()
     a = np.concatenate([a, a[5:]])  # 2M values
     assert a.size >= 1 << 20
     sizes = []
-    pack = IC.P.pack_width
+    build = IC._LazyPack._build
 
-    def recorded(u, width, out=None):
-        sizes.append(u.size)
-        return pack(u, width, out=out)
+    def recorded(self, count):
+        sizes.append(count)
+        return build(self, count)
 
-    monkeypatch.setattr(IC.P, "pack_width", recorded)
+    monkeypatch.setattr(IC._LazyPack, "_build", recorded)
     seg = IC.encode_ints(a)
     assert _regime_of(seg, IC.HEADER.size + 9 + (a.size * 31 + 7) // 8) \
         == "retry"
     assert sizes and max(sizes) <= _trial_values(31), sizes
-    monkeypatch.setattr(IC.P, "pack_width", pack)
+    monkeypatch.setattr(IC._LazyPack, "_build", build)
     assert seg == _eager_auto_pack(a)
+
+
+def _additive_rows(nrows: int) -> np.ndarray:
+    """1024-value rows, each one pattern plus a constant of its own: the
+    pattern spans 31 bits, so the PACK and every FORBP mini are 31 bits
+    wide, and a row repeats another only up to its constant."""
+    rng = np.random.default_rng(20)
+    row = rng.integers(0, 3 << 29, IC.MINI)
+    row[:2] = 0, 3 << 29
+    consts = rng.integers(0, 1 << 29, (nrows, 1))
+    return (row + consts).reshape(-1).astype(np.int32)
+
+
+def _shifted_rows(width: int, nrows: int) -> np.ndarray:
+    """4096-value rows cut from one ``width``-bit pseudo-random sequence
+    at 1000k + 1 + k % 7, as ``_phase_shifted_repeats``: at an odd width
+    no repeat starts on a byte in the PACK or in FORBP's minis."""
+    base = np.random.default_rng(width).integers(0, 2**width,
+                                                 1000 * nrows + 4096)
+    rows = [base[1000 * k + 1 + k % 7:][:4096] for k in range(nrows)]
+    return np.concatenate(rows).astype(np.int32)
+
+
+def _inner_tag(seg) -> int:
+    skip = IC.HEADER.size + 5 + (16 if seg[IC.HEADER.size + 4] else 0)
+    (raw_len,) = struct.unpack_from("<I", seg, IC.HEADER.size)
+    return BC.zstd_decompress(memoryview(seg)[skip:], raw_len)[0]
+
+
+# up to 64 minis the chunk is the retry's sample; past that it samples
+_RETRY_PATHS = pytest.mark.parametrize("nrows", [60, 300],
+                                       ids=["own-sample", "sampled"])
+
+
+@_RETRY_PATHS
+def test_retry_takes_forbp_on_rows_repeated_up_to_a_constant(nrows):
+    """The fixture's tail-block shape: the wrap trial and the 32-bit
+    re-pack see no repeat, FORBP's per-mini minimum brings them back."""
+    a = _additive_rows(nrows)
+    pack = IC.encode_ints(a, codec=IC.T_PACK)
+    assert pack[IC.HEADER.size + 8] == 31
+    seg = IC.encode_ints(a)
+    assert seg[0] == IC.T_WRAP and _inner_tag(seg) == IC.T_FORBP
+    repack = IC.HEADER.size + 21 + len(BC.zstd_compress(
+        _eager_repack(a, pack, 32)))
+    assert 4 * len(seg) <= min(repack, len(pack)), (len(seg), repack)
+    assert seg == _eager_auto_pack(a)
+    got, pos = IC.decode_ints(seg, 0, a.size, np.int32)
+    assert pos == len(seg) and np.array_equal(got, a)
+
+
+@pytest.mark.parametrize("nrows", [14, 64], ids=["own-sample", "sampled"])
+def test_retry_keeps_the_byte_width_repack_on_shifted_repeats(nrows):
+    """11-bit rows repeated far apart at shifted offsets: FORBP keeps the
+    PACK's bit phases, so the chunk keeps the 16-bit re-pack's bytes."""
+    a = _shifted_rows(11, nrows)
+    pack = IC.encode_ints(a, codec=IC.T_PACK)
+    assert pack[IC.HEADER.size + 8] == 11
+    inner = _eager_repack(a, pack, 16)
+    want = IC._wrapped(pack, a.size, inner.size, BC.zstd_compress(inner),
+                       len(pack))
+    assert want is not None
+    assert IC.encode_ints(a) == want
+
+
+@_RETRY_PATHS
+def test_retry_skips_a_forbp_candidate_past_the_u32_limit(nrows,
+                                                          monkeypatch):
+    """With the u32 limit just under the FORBP candidate's length, the
+    chunk falls back to the byte-width re-pack, which is longer still
+    and so skipped too: the PACK is written, nothing is refused."""
+    a = _additive_rows(nrows)
+    pack = IC.encode_ints(a, codec=IC.T_PACK)
+    forbp = IC.encode_ints(a, codec=IC.T_FORBP)
+    assert len(pack) < len(forbp) < IC.HEADER.size + 9 + 4 * a.size
+    monkeypatch.setattr(IC, "LEN_LIMIT", len(forbp) - 1)
+    assert IC.encode_ints(a) == pack
 
 
 # ---------------------------------------------------------------------------
@@ -806,9 +907,9 @@ def test_wsym_chunk_builds_only_its_segment(monkeypatch):
         monkeypatch.setitem(IC._ENCODERS, tag, recorded)
     forbp = IC._forbp_seg  # FORBP's segment is built outside _ENCODERS
 
-    def recorded_forbp(a):
+    def recorded_forbp(a, layout):
         calls.append((IC.T_FORBP, a.size))
-        return forbp(a)
+        return forbp(a, layout)
 
     monkeypatch.setattr(IC, "_forbp_seg", recorded_forbp)
 
@@ -882,10 +983,13 @@ def test_no_column_grows_over_old_selection_on_parity_tables(monkeypatch):
 
 # sha256 of clustered parts, pinned to the bytes the selector wrote when
 # the width-symbol codec was a trial encode after the auto path's
-# segment: predicting it from the sample changed no block's codec.
+# segment: predicting it from the sample changed no block's codec. The
+# fixture pin moved once since, when a declined PACK wrap gained its
+# FORBP retry: only the tail block's tokens chunk changed (2,801,037 ->
+# 727,748 B, still zstd_wrap).
 PART_SHA256 = {
     "fixture":
-        "6044e35ae7b260e6f79e67ecf0e604341615346ac56893a3041bbc5e5c34c2d5",
+        "0377c7dfbdab5005aea39b722d10e20fec6e6dffafd17b159a128dae4dacd128",
     "zipf":
         "cfdd3f6f8d9f6bfc3bd5c49277aa794b5b9ec19cf1c35f11ff1e341677722ec7",
 }

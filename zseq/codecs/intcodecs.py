@@ -36,13 +36,17 @@ types are handled at the column layer):
   WRAP    zstd over a finished segment (cascade; catches periodic
           structure no single codec models); carries the inner segment's
           derived zone map so pruning survives the wrap. LZ matches are
-          byte-granular, so a PACK at a non-byte width hides most repeats
-          (7 of 8 start at another bit phase); when the wrap trial fails
-          there, the values are re-packed at the next byte width and
-          zstd'd whole once (``_maybe_wrap_byte_aligned``). An
-          auto-selected PACK is packed lazily (``_LazyPack``): the trial
-          packs only the 64 KiB prefix it reads, and the whole PACK is
-          built only when it is returned or wrapped itself
+          byte-granular, and a PACK hides two kinds of repeats: at a
+          non-byte width 7 of 8 start at another bit phase, and against
+          its one global minimum a run repeated up to an additive
+          constant is other bytes. When the wrap trial fails, the retry
+          (``_retry_wrap``) zstds whole the values re-packed at the next
+          byte width or their FORBP segment (per-mini minimum, each mini
+          on a byte), in the order zstd of a sample of whole minis
+          predicts, until one wraps. An auto-selected PACK is packed
+          lazily (``_LazyPack``): the trial packs only the 64 KiB prefix
+          it reads, and the whole PACK is built only when it is returned
+          or wrapped itself
   WSYM    width symbols + raw mantissas: per value, the symbol
           k = bit_length(v - lo) as one uint8 of a zstd-compressed symbol
           stream, and the k-1 bits below its leading 1 in one LSB-first
@@ -157,8 +161,8 @@ class _LazyPack:
 
     Head (tag, length, min, width) and length come from min and max
     alone. The auto path's wrap trials read just a 64 KiB prefix, and when
-    the byte-aligned retry wins the whole segment is never needed, so the
-    body is packed in full only by ``seg()`` (cached).
+    a retry (``_retry_wrap``) wins the whole segment is never needed, so
+    the body is packed in full only by ``seg()`` (cached).
 
     Every build goes into one buffer of its exact size: the deltas exist
     for one ``P.PACK_PIECE`` of values at a time, each piece packed
@@ -256,24 +260,11 @@ def _dec_pack(payload: memoryview, count: int,
     return out.view(np.int32 if narrow else np.int64)
 
 
-def _forbp_seg(arr: np.ndarray) -> bytearray:
-    """The whole FORBP segment, built once into one exact-size buffer:
-    segment header | mini u16 | nminis x (min i64 LE, width u8) | packed
-    minis (byte-aligned; nminis = ceil(count / mini), derived on decode).
-    width==0: all equal min. width==64: raw 8-byte deltas.
-
-    Each mini's min and width come from the min and max of the reshaped
-    block, so the length is known before anything is allocated. The
-    deltas are then computed for at most one pack piece of minis at a
-    time (``P.PACK_PIECE`` values: 64 minis of 1024), and each run of
-    equal-width minis in it is packed straight into its bytes of the
-    buffer (one mini at a time where a mini does not fill whole bytes):
-    no temporary grows with the block.
-
-    int32 input runs entirely in the 32-bit domain ((v - min) wraps mod
-    2^32; true deltas < 2^32 by int32-span construction, so the uint32
-    view is exact) — identical bytes, half the memory traffic on the hot
-    token-column path."""
+def _forbp_layout(arr: np.ndarray) -> tuple:
+    """(mins, widths, offs) of the FORBP segment of ``arr``: each mini's
+    min and width from the min and max of the reshaped block, and
+    ``offs``, where each mini's packed body starts in the segment, whose
+    last entry is the segment's exact length. Nothing is packed."""
     mini = MINI
     n = arr.size
     nminis = (n + mini - 1) // mini
@@ -297,6 +288,31 @@ def _forbp_seg(arr: np.ndarray) -> bytearray:
     offs[0] = head
     np.cumsum((counts * widths + 7) // 8, out=offs[1:])
     offs[1:] += head
+    return mins, widths, offs
+
+
+def _forbp_seg(arr: np.ndarray, layout: tuple) -> bytearray:
+    """The whole FORBP segment, built once into one exact-size buffer:
+    segment header | mini u16 | nminis x (min i64 LE, width u8) | packed
+    minis (byte-aligned; nminis = ceil(count / mini), derived on decode).
+    width==0: all equal min. width==64: raw 8-byte deltas.
+
+    ``layout`` (``_forbp_layout(arr)``) sizes the segment before anything
+    is allocated. The deltas are then computed for at most one pack piece
+    of minis at a time (``P.PACK_PIECE`` values: 64 minis of 1024), and
+    each run of equal-width minis in it is packed straight into its bytes
+    of the buffer (one mini at a time where a mini does not fill whole
+    bytes): no temporary grows with the block.
+
+    int32 input runs entirely in the 32-bit domain ((v - min) wraps mod
+    2^32; true deltas < 2^32 by int32-span construction, so the uint32
+    view is exact) — identical bytes, half the memory traffic on the hot
+    token-column path."""
+    mins, widths, offs = layout
+    mini, nminis, nfull = MINI, widths.size, arr.size // MINI
+    udt = np.uint32 if arr.dtype == np.int32 else np.uint64
+    full = arr[: nfull * mini].reshape(nfull, mini)
+    head = int(offs[0])
     size = int(offs[-1])
     buf = bytearray(size)
     out = np.frombuffer(buf, dtype=np.uint8)
@@ -333,13 +349,14 @@ def _forbp_seg(arr: np.ndarray) -> bytearray:
             put(c[m - c0:e - c0], m, e)
     if nminis > nfull:
         with _wrap:
-            put((tail - mins[-1]).view(udt)[None], nfull, nminis)
+            put((arr[nfull * mini:] - mins[-1]).view(udt)[None], nfull,
+                nminis)
     return buf
 
 
 def _enc_forbp(arr: np.ndarray) -> memoryview:
     """The FORBP payload: ``_forbp_seg`` past its segment header."""
-    return memoryview(_forbp_seg(arr))[HEADER.size:]
+    return memoryview(_forbp_seg(arr, _forbp_layout(arr)))[HEADER.size:]
 
 
 def _dec_forbp(payload: memoryview, count: int,
@@ -738,7 +755,7 @@ _NARROW_OK = frozenset({T_CONST, T_RAW, T_ZBRA, T_PACK, T_FORBP,
 
 def _segment(codec: int, arr: np.ndarray) -> bytes | bytearray:
     if codec == T_FORBP:  # built whole, header included, in one buffer
-        return _forbp_seg(arr)
+        return _forbp_seg(arr, _forbp_layout(arr))
     if codec == T_PACK:  # likewise
         return _LazyPack(arr).seg()
     return _seg(codec, _ENCODERS[codec](arr))
@@ -770,8 +787,7 @@ def encode_ints(values, codec: int | None = None,
     if codec != T_PACK:
         return _maybe_wrap(_segment(codec, arr), n)
     seg = _maybe_wrap(_LazyPack(arr), n)
-    return seg if isinstance(seg, bytes) else \
-        _maybe_wrap_byte_aligned(arr, seg, n)
+    return seg if isinstance(seg, bytes) else _retry_wrap(arr, seg, n)
 
 
 def _wrapped(seg, count: int, inner_len: int, comp: bytes,
@@ -803,10 +819,9 @@ def _maybe_wrap(seg: bytes | bytearray | _LazyPack,
     An auto-selected PACK arrives unbuilt (``_LazyPack``): the trial packs
     only the prefix it reads, and the whole segment is built only when
     the trial passes. A PACK this declines comes back still a
-    ``_LazyPack``, and ``encode_ints`` retries it once in
-    ``_maybe_wrap_byte_aligned``: zstd matches whole bytes, and
-    bit-packing at a non-byte width shifts repeated runs to other bit
-    phases."""
+    ``_LazyPack``, and ``encode_ints`` retries it in another layout in
+    ``_retry_wrap``: zstd matches whole bytes, and a PACK hides repeats
+    at other bit phases or up to an additive constant."""
     if len(seg) < 128:
         return seg
     from .bytescodecs import zstd_compress
@@ -821,40 +836,91 @@ def _maybe_wrap(seg: bytes | bytearray | _LazyPack,
     return _wrapped(full, count, len(full), comp, len(full)) or seg
 
 
-def _maybe_wrap_byte_aligned(arr: np.ndarray, seg: _LazyPack,
-                             count: int) -> bytes | bytearray:
-    """Retry of a declined wrap of the PACK segment ``seg`` of ``arr``;
-    returns the wrapped retry or the built PACK.
+# A declined PACK wrap retries in two layouts (``_retry_wrap``), built in
+# the order zstd of a sample predicts: _RETRY_WINDOWS evenly spaced
+# windows of _RETRY_WINDOW_MINIS whole minis each. A chunk of at most
+# that many minis is its own sample, so its prediction is exact.
+_RETRY_WINDOWS = 16
+_RETRY_WINDOW_MINIS = 4
 
-    At a width that is not 8/16/32/64, a run repeated at an offset that is
-    not a multiple of 8 values starts at another bit phase, so zstd's
-    byte-granular matches miss it (row-clustered token blocks whose rows
-    share runs: zstd reaches 0.88 of the 31-bit PACK, but 0.16 at 32 bits).
-    Re-pack the same values at the next byte width and zstd that inner
-    segment whole — a prefix trial cannot tell, because the repeats may lie
-    far apart — keeping the wrap under ``_maybe_wrap``'s 0.9 rule against
-    the PACK's length. Costs one whole-segment zstd pass, and runs only
-    after ``_maybe_wrap`` declined. The inner segment is built in one
-    buffer and compressed in place; the zone header comes from the PACK's
-    head, so a winning retry never packs the PACK body at all."""
-    width = seg.width
-    wide = next(b for b in _BYTE_WIDTHS if b >= width)
+
+def _repack(arr: np.ndarray, seg: _LazyPack, wide: int) -> np.ndarray:
+    """The PACK segment ``seg`` of ``arr`` re-packed at the byte width
+    ``wide``, in one buffer: every value's delta is one whole lane."""
     head = HEADER.size + 9
-    inner_len = head + count * (wide // 8)
-    if len(seg) < 128 or width == wide or inner_len > LEN_LIMIT:
-        return seg.seg()
-    inner = np.empty(inner_len, dtype=np.uint8)
+    inner = np.empty(head + arr.size * (wide // 8), dtype=np.uint8)
     inner[:head] = np.frombuffer(seg.head, np.uint8)  # tag, lo
-    HEADER.pack_into(inner, 0, T_PACK, inner_len - HEADER.size)
+    HEADER.pack_into(inner, 0, T_PACK, inner.size - HEADER.size)
     inner[head - 1] = wide
     with _wrap:  # deltas < 2^width, so the wrapping subtract casts exactly
         np.subtract(arr, arr.dtype.type(seg.lo),
                     out=inner[head:].view(f"<u{wide // 8}"),
                     casting="unsafe")
+    return inner
+
+
+def _retry_wrap(arr: np.ndarray, seg: _LazyPack,
+                count: int) -> bytes | bytearray:
+    """Retry of a declined wrap of the PACK segment ``seg`` of ``arr``;
+    returns a wrapped retry or the built PACK.
+
+    zstd matches whole bytes, and a PACK hides two kinds of repeats from
+    it. At a width that is not 8/16/32/64, a run repeated at an offset
+    that is not a multiple of 8 values starts at another bit phase; one
+    candidate re-packs the values at the next byte width (none at a byte
+    width). Against the one global minimum, a run repeated up to an
+    additive constant is other bytes; the other candidate is FORBP, whose
+    per-mini minimum turns it back into a repeat, and whose minis each
+    start on a byte (the fixture's tail block of wide rows: zstd of its
+    FORBP is 0.18 of zstd of its 32-bit re-pack). Each is zstd'd whole
+    (the repeats may lie far apart, past any prefix trial) and kept under
+    ``_maybe_wrap``'s 0.9 rule against the PACK's length.
+
+    Both layouts of a sample of whole minis are zstd'd (the sample's
+    FORBP minis are the chunk's own), and the candidates are built in
+    the order of their sample's output, the re-pack first on a tie,
+    until one wraps. A chunk no larger than the sample is its own
+    sample: its zstd outputs are the candidates', and nothing is built
+    twice. A candidate past ``LEN_LIMIT`` is skipped, never refused. The
+    zone header comes from the PACK's head, so a winning retry never
+    packs the PACK body at all."""
+    if len(seg) < 128:
+        return seg.seg()
     from .bytescodecs import zstd_compress
 
-    return _wrapped(seg.head, count, inner_len, zstd_compress(inner),
-                    len(seg)) or seg.seg()
+    def forbp(vals: np.ndarray) -> bytearray | None:
+        layout = _forbp_layout(vals)
+        return None if layout[2][-1] > LEN_LIMIT \
+            else _forbp_seg(vals, layout)
+
+    builds = [forbp]
+    lane = next(b for b in _BYTE_WIDTHS if b >= seg.width)
+    if lane != seg.width and HEADER.size + 9 + count * (lane // 8) \
+            <= LEN_LIMIT:
+        builds.insert(0, lambda vals: _repack(vals, seg, lane))
+    nfull = count // MINI
+    if nfull <= _RETRY_WINDOWS * _RETRY_WINDOW_MINIS:
+        sample = arr
+    else:
+        at = np.arange(_RETRY_WINDOWS) * (nfull - _RETRY_WINDOW_MINIS) \
+            // (_RETRY_WINDOWS - 1)
+        rows = (at[:, None] + np.arange(_RETRY_WINDOW_MINIS)).reshape(-1)
+        sample = arr[: nfull * MINI].reshape(nfull, MINI)[rows].reshape(-1)
+    tries = []
+    for build in builds:
+        inner = build(sample)
+        if inner is not None:  # a sample past the limit rules the chunk out
+            tries.append((zstd_compress(inner), len(inner), build))
+    for comp, inner_len, build in sorted(tries, key=lambda t: len(t[0])):
+        if sample is not arr:
+            inner = build(arr)
+            if inner is None:
+                continue
+            comp, inner_len = zstd_compress(inner), len(inner)
+        got = _wrapped(seg.head, count, inner_len, comp, len(seg))
+        if got:
+            return got
+    return seg.seg()
 
 
 def decode_ints(buf, offset: int, count: int,

@@ -355,7 +355,8 @@ def own_batches(batches: list) -> list:
 
 def _cluster_order(tbl: pa.Table) -> np.ndarray | None:
     """Row order by (bit width of per-row max |value| of the first list
-    column, list length). Returns None when there is nothing to cluster.
+    column, list length); null elements count as no value. Returns None
+    when there is nothing to cluster.
     Reads the column chunk by chunk (the parquet task reads it as one):
     the per-row stats need no combined copy, and neither does
     ``_take_table``'s gather."""
@@ -373,7 +374,10 @@ def _cluster_order(tbl: pa.Table) -> np.ndarray | None:
         ln = pc.list_value_length(arr).to_numpy(zero_copy_only=False)
         ln = np.nan_to_num(ln, nan=0).astype(np.int64) \
             if ln.dtype.kind == "f" else ln.astype(np.int64)
-        vals = arr.flatten().to_numpy(zero_copy_only=False)
+        flat = arr.flatten()
+        if flat.null_count:  # a zero never raises a row's max |value|
+            flat = pc.fill_null(flat, 0)
+        vals = flat.to_numpy(zero_copy_only=False)
         offs = np.zeros(ln.size + 1, dtype=np.int64)
         np.cumsum(ln, out=offs[1:])
         rm = np.zeros(ln.size, dtype=np.int64)
@@ -620,10 +624,11 @@ def _encode_table_to_file(tbl: pa.Table, out_dir: str, part_id: int,
             list_elems += int(le or 0)
     with open(tmp, "wb") as f:
         w = ZseqWriter(f, schema, {"part_id": part_id})
+        # no name holds a block, so each is freed before the next gather
         for lo in range(0, tbl.num_rows, batch_rows):
-            block = (tbl.slice(lo, batch_rows) if order is None
-                     else _take_table(tbl, order[lo:lo + batch_rows]))
-            w.write_batch(_one_batch(block))
+            w.write_batch(_one_batch(
+                tbl.slice(lo, batch_rows) if order is None
+                else _take_table(tbl, order[lo:lo + batch_rows])))
         w.finish()
         f.flush()
         os.fsync(f.fileno())

@@ -19,9 +19,13 @@ Chunks LZ compresses well (the fixture's repeated runs) keep their
 codec; skewed ids without repeats (Zipf token streams) take T_WSYM, and
 only its segment is built. The one full-chunk trial is downstream of
 selection, in ``intcodecs``: the zstd wrap of the chosen segment, and for
-a PACK at a non-byte width whose wrap fails, a re-pack at the next byte
-width zstd'd whole once (byte-granular LZ matches cannot see repeats
-that bit-packing shifted to other bit phases).
+a PACK whose wrap fails, one retry zstd'd whole (``_retry_wrap``) in the
+layout that shows zstd the repeats a PACK hides: the values re-packed at
+the next byte width (repeats that bit-packing shifted to other bit
+phases) or FORBP (runs repeated up to an additive constant, which its
+per-mini minimum cancels). zstd of both layouts of a sample of whole
+minis (the whole chunk, up to 64 minis) orders them, and the second is
+built only when the first is declined.
 """
 
 from __future__ import annotations
