@@ -1,8 +1,11 @@
 """No top-level int chunk grows: every top-level ``encode_ints`` segment
 written for the size-parity tables (``test_size_parity.parity_tables``:
-the synthetic tables and the sf0.001 test tables) is at most its pinned
-length in ``fixtures/int_chunk_lengths.json``, so a codec change gives
-each chunk the same segment or a smaller one.
+the synthetic tables and the sf0.001 test tables) and for two clustered
+parts (``part_tables``) is at most its pinned length in
+``fixtures/int_chunk_lengths.json``, so a codec change gives each chunk
+the same segment or a smaller one. The parts hold chunks of more than 64
+FORBP minis, where the wrap layouts are ordered from a sample of the
+chunk rather than from the whole chunk.
 
 A change that shrinks chunks may lower the pin. Rewrite it with
 ``python tests/test_int_chunk_pins.py`` from the repo root; that refuses
@@ -11,6 +14,7 @@ a pin that would rise or lose an entry."""
 import json
 import os
 import sys
+import tempfile
 from contextlib import contextmanager
 
 if __name__ == "__main__":  # the script's own directory is on the path
@@ -25,48 +29,82 @@ from zseq.codecs import intcodecs as IC
 PIN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures",
                    "int_chunk_lengths.json")
 SYNTHETIC = ("tokens", "timeseries", "iot", "enum", "nested")
+PARTS = ("part:fixture_160k", "part:zipf_25k")
+
+
+def part_tables() -> dict:
+    """A fixture part at 160K rows (its tail block's tokens reach the
+    wrap retry) and a seed-7 Zipf part of 25K rows, as the encode task
+    writes them: clustered, in blocks of 65,536 rows."""
+    from perfbench import corpus as C
+    from zseq import synth
+
+    return {"part:fixture_160k": synth.tokens_table_arrow(160_000),
+            "part:zipf_25k": C.make_table("zipf", 7, 14_000_000, 25_000)}
 
 
 @contextmanager
-def _recorded(lengths: list):
-    """Append the length of every top-level ``encode_ints`` segment
-    (none nested inside another) to ``lengths``."""
-    encode_ints, depth = IC.encode_ints, [0]
-
-    def recorded(values, codec=None, exclude=frozenset()):
-        depth[0] += 1
-        try:
-            seg = encode_ints(values, codec, exclude)
-        finally:
-            depth[0] -= 1
-        if not depth[0]:
-            lengths.append(len(seg))
-        return seg
-
-    IC.encode_ints = recorded
+def _patched(owner, attr: str, wrap):
+    fn = getattr(owner, attr)
+    setattr(owner, attr, wrap(fn))
     try:
         yield
     finally:
-        IC.encode_ints = encode_ints
+        setattr(owner, attr, fn)
 
 
-def chunk_lengths() -> dict[str, list[int]]:
-    """{"table/column": the column's top-level int segment lengths, in
-    the order its encode writes them}."""
-    out = {}
-    for name, tbl in parity_tables().items():
-        for col in tbl.column_names:
-            lengths = out.setdefault(f"{name}/{col}", [])
-            with _recorded(lengths):
+def _top_level(sink):
+    """A wrapper that appends the length of every top-level result (none
+    nested inside another call of the same function) to ``sink()``."""
+    depth = [0]
+
+    def wrap(fn):
+        def recorded(*args, **kw):
+            depth[0] += 1
+            try:
+                seg = fn(*args, **kw)
+            finally:
+                depth[0] -= 1
+            if not depth[0]:
+                sink().append(len(seg))
+            return seg
+        return recorded
+    return wrap
+
+
+def chunk_lengths(owner=IC, attr: str = "encode_ints") -> dict:
+    """{"table/column": the column's top-level ``owner.attr`` segment
+    lengths, in the order its encode writes them}. A part's columns are
+    keyed by the column path the writer passes to the column layer."""
+    from zseq import encode
+
+    out, key = {}, [""]
+
+    def named(fn):
+        def column(arr, stats=None, path="", zone=False):
+            key[0] = f"{table}/{path}"
+            out.setdefault(key[0], [])
+            return fn(arr, stats, path, zone)
+        return column
+
+    with _patched(owner, attr, _top_level(lambda: out[key[0]])):
+        for table, tbl in parity_tables().items():
+            for col in tbl.column_names:
+                key[0] = f"{table}/{col}"
+                out.setdefault(key[0], [])
                 COL.encode_column(tbl.column(col).combine_chunks())
+        with _patched(COL, "encode_column", named), \
+                _patched(COL, "encode_column_reversed", named), \
+                tempfile.TemporaryDirectory() as tmp:
+            for i, (table, tbl) in enumerate(part_tables().items()):
+                encode._encode_table_to_file(tbl, tmp, i, tbl.schema, True,
+                                             1 << 16, 0.0)
     return out
 
 
-def test_no_top_level_int_chunk_grows():
-    with open(PIN) as f:
+def check_pins(path: str, got: dict) -> None:
+    with open(path) as f:
         pins = json.load(f)
-    got = chunk_lengths()
-    assert {k.split("/")[0] for k in got} >= set(SYNTHETIC)
     assert set(got) <= set(pins), sorted(set(got) - set(pins))
     grew = {}
     for key, lengths in got.items():
@@ -76,11 +114,12 @@ def test_no_top_level_int_chunk_grows():
     assert not grew, grew
 
 
-if __name__ == "__main__":
-    new = chunk_lengths()
+def rewrite_pins(path: str, new: dict) -> None:
+    """Write ``new`` as the pin file, refusing a pin that would rise or
+    lose an entry."""
     old = {}
-    if os.path.exists(PIN):
-        with open(PIN) as f:
+    if os.path.exists(path):
+        with open(path) as f:
             old = json.load(f)
     lost = sorted(set(old) - set(new))
     rose = sorted(k for k in set(old) & set(new)
@@ -88,8 +127,19 @@ if __name__ == "__main__":
                   or any(n > p for n, p in zip(new[k], old[k])))
     if lost or rose:
         sys.exit(f"refused: entries lost {lost}, risen or reshaped {rose}")
-    with open(PIN, "w") as f:
+    with open(path, "w") as f:
         f.write("{\n" + ",\n".join(f"{json.dumps(k)}: {json.dumps(new[k])}"
                                     for k in sorted(new)) + "\n}\n")
     print(f"{sum(map(len, new.values()))} chunk lengths in {len(new)} "
-          f"columns -> {PIN}")
+          f"columns -> {path}")
+
+
+def test_no_top_level_int_chunk_grows():
+    got = chunk_lengths()
+    tables = {k.split("/")[0] for k in got}
+    assert tables >= set(SYNTHETIC) | set(PARTS)
+    check_pins(PIN, got)
+
+
+if __name__ == "__main__":
+    rewrite_pins(PIN, chunk_lengths())
