@@ -153,8 +153,9 @@ def test_fsst_table_not_built_where_its_floor_loses(monkeypatch):
 
 
 def _select_oracle(lengths, data):
-    """``select_bin_codec`` as it was with the sample as Python bytes
-    (``to_pylist``): the reference its Arrow-side sample must match."""
+    """``select_bin_codec`` with the sample and the FSST gate's windows
+    as Python bytes (``to_pylist``): the reference its Arrow-side sample
+    must match."""
     import pyarrow as pa
 
     from zseq.codecs import fsst
@@ -193,9 +194,17 @@ def _select_oracle(lengths, data):
     if mean_len <= BC.FSST_MAX_MEAN_LEN and total >= 1024 \
             and zstd_ratio > 0.22:
         slens = np.array([len(v) for v in sample_vals], dtype=np.int64)
-        lo = max(len(sample_blob) / 8, np.count_nonzero(slens)) \
-            / sample_bytes
-        if lo * total + 1 + n * 0.5 + 40 < min(est.values()):
+        lo = sum(-(-len(v) // 8) for v in sample_vals) / sample_bytes
+        floor = lo * total + 1 + n * 0.5 + 40
+        # zstd of 8 evenly spaced runs of m // 8 whole values
+        k = max(1, m // 8)
+        nwin = min(8, max(1, n // k))
+        runs = b"".join(b"".join(arr.slice(s, k).to_pylist())
+                        for s in ((n - k) * i // max(1, nwin - 1)
+                                  for i in range(nwin)))
+        windowed = len(BC.zstd_compress(runs)) / max(1, len(runs))
+        if floor < min(est.values()) and (
+                step == 1 or floor < windowed * total + lens_cost + 16):
             table = fsst.build_table(sample_vals)
             sdata = np.frombuffer(sample_blob, dtype=np.uint8)
             enc, _ = fsst.encode_column(sdata, BC._offsets(slens), table)

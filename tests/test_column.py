@@ -722,6 +722,13 @@ def test_validity_byte_count_past_u32_limit_is_refused(monkeypatch):
 # smaller zstd_wrap of FORBP (dec12 15,389 -> 13,751 B, dur_s 15,389 ->
 # 13,739, time64_ns 17,639 -> 15,439, ts_ms_utc 16,889 -> 14,845, the
 # dec18/38/76 low limbs about 220 B smaller), with the same values.
+# Twelve moved again when one sample ordered a bit-packed chunk's wrap
+# layouts (the PACK's own wrap among them), every chunk smaller: first
+# int segment dec12 13,751 -> 13,671, dur_s 13,739 -> 13,664, time64_ns
+# 15,439 -> 15,425, ts_ms_utc 14,845 -> 14,840, ts_us 14,607 -> 9,519,
+# the dec18/38/76 low limbs 19,770/19,789/19,783 -> 19,620/19,634/19,625,
+# and the dec38/76 high-limb dictionary segments 3,682 -> 3,474 B and
+# the like (dec76 chunk 31,100 -> 30,404); the slices likewise.
 # ---------------------------------------------------------------------------
 
 def _pin_arrays() -> dict[str, pa.Array]:
@@ -774,31 +781,31 @@ _PINS = {
     "date64":
         "1f87955c81b2673c4d916a4521c55fd0ae46166972fec3c2277c45b3f21d9ac8",
     "dec12":
-        "b0fbc7656766911676e7bca1eeee79a62fc735a66b472fcdd656abcf51f6a3d1",
+        "a4d1b6ef05847107e7d1c5bf945381aa096eb23a77e00c5c973b0b03b60df2a1",
     "dec12_slice":
-        "a988ad3576c2ee79866862e9b94e31c98ccc92272d5f3d078423c6a0cb1ca6b1",
+        "d9dc0b723735cb5c6269f628c6e260c0ed178900caff2a423f28b72f005484ae",
     "dec18":
-        "a4b26744fc52a4469bf2d2694cde47044676effcb66e1c64910c050c820f5737",
+        "19cfe15e5885620f5f8d42d079e81ae5a2d76e15fd726259d12f2d1749da3c03",
     "dec18_slice":
-        "3e48c006e2cf1712dcf1ecd49d2a4f4f39ed508a66c999b3b1c46e0fbd8a7e3e",
+        "c25ee39b7f1230b7db16dec3e8ee080c8f9f0a4b615928eb1a33d67ea7e2896d",
     "dec38":
-        "d23ea5cf213f9bcb5687ad0eae904adf9d44b11dc521b771582870163ef8f9c3",
+        "671d01a6bb2f1ce3fdd3835e534edd2e02b6fc8137ab760cb5360fd4826159d3",
     "dec38_slice":
-        "6b12ecc312199ffb415e30630658a0c17c168b9d240fe9c00aa5b63a6d01c588",
+        "e4338a5ad812b7c0792f203b8f90b99dca91efaa8ff65aaa5288b2a27be63eff",
     "dec76":
-        "5720fe02f156e1a866b8f9fb49964bf327cbd4d8ae32c5025b6e818857971135",
+        "6fa5bbc2c68dbea0c3ea8fdd6ce0d0e66b6a4672d0c441ebbaa48ea2ae4dcbe6",
     "dec76_slice":
-        "1bc4c3085c74a4d7ed652275fca39f2dfe01868d888cd6835ad974ed11f1ca7c",
+        "08b92e2cc145ed41c107595021a7fda51f1eb3e36d55ee3bea62d45a61730470",
     "dur_s":
-        "e8d90bc27c5b84a5c338ba2328cd81901574b60762f53de1ba302e872c4ee22a",
+        "24cac0e78fc833438353a04d3f15a03d6dfd3c35316f5bdf5135f934e2974820",
     "time32_s":
         "1074a925c112a102713e16182004af39f562caf04512fcf6ded177ef8dfd56f2",
     "time64_ns":
-        "7de39385ffb09da061ae0558dae168d21ebef8c7538f356f03b3927d6eb15235",
+        "dc8264ac21cffc5f438c99180ba23096baaab45d0a567c38fc3e19ada3d386ba",
     "ts_ms_utc":
-        "758d12708d0ea1e63ba0d20e7167817d824cf2a9a793933f7825748f2b7d0063",
+        "da829020c01272c62dc00f31ed437a56a08a5889b7d4424d4bef705b45b5aa0c",
     "ts_us":
-        "7711e086a5edaffde289da678b2a7afc0a2420e7c98944f391501bfd32de7784",
+        "6d09e18a80189661bc3956ba93035b238c8679a3279bfc14020f24f489fb4fd3",
 }
 
 
@@ -817,6 +824,26 @@ def test_decimal_and_temporal_chunks_match_pinned_bytes(name):
         dec, pos = C.decode_column(chunk, 0, arr.type, len(arr))
         assert pos == len(chunk) and dec.to_pylist() == arr.to_pylist()
     assert h.hexdigest() == _PINS[name]
+
+
+def test_dec12_keeps_the_whole_pack_wrap_its_rule_accepts(monkeypatch):
+    """The dec12 pin array's first int segment: a 41-bit PACK of 3,000
+    values (15,389 B) whose whole zstd is 0.887 of it. The 0.9 rule keeps
+    that wrap (13,671 B); a 64 KiB prefix trial gating at 0.85 declined
+    it and wrote a 13,751 B FORBP wrap instead."""
+    from zseq.codecs import intcodecs as IC
+
+    segs = []
+    encode_ints = IC.encode_ints
+
+    def recorded(values, codec=None, exclude=frozenset()):
+        segs.append(encode_ints(values, codec, exclude))
+        return segs[-1]
+
+    monkeypatch.setattr(IC, "encode_ints", recorded)
+    C.encode_column(_pin_arrays()["dec12"])
+    [seg] = segs  # one limb, no nested segment
+    assert seg[0] == IC.T_WRAP and len(seg) <= 13_671, len(seg)
 
 
 def test_decimal18_value_past_64_bits_is_refused():

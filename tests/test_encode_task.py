@@ -538,10 +538,12 @@ def test_block_string_bytes_past_int32_offsets_are_refused(tmp_path,
 # from before the one-copy gather, lazy PACK and capped FSST build, which
 # left every encoded byte as it was; its crc32 moved with the format
 # revision 00003 magic alone. The zipf part's tokens column takes the
-# width-symbol codec since 00003, so its enc_bytes fell.
+# width-symbol codec since 00003, so its enc_bytes fell. The fixture
+# part fell again (441,698 -> 441,626 B) when a FORBP tokens chunk's
+# byte-width re-pack could wrap first.
 PINS = {
     "fixture": (lambda: synth.tokens_table_arrow(20_000, start=0),
-                441_698, 223_840_719),
+                441_626, 2_507_291_688),
     "zipf": (lambda: C.make_table("zipf", 7, 0, 5_000),
              969_356, 3_785_171_250),
 }
@@ -625,12 +627,15 @@ def test_codec_hist_counts_every_block(tmp_path):
 # enc_bytes, crc32) of each committed part and the manifest's keys. The
 # enc_bytes date from before the writers shared one batches->part
 # helper, one part-file name and one task frame; the crc32s moved with
-# the format revision 00003 magic alone.
+# the format revision 00003 magic alone. Every part shrank once since,
+# when a FORBP tokens chunk's byte-width re-pack could wrap first: one
+# part 198,830 -> 178,237 B, the two parts 133,734/133,117 ->
+# 128,649/127,750, the compacted part 180,159 -> 179,545.
 KEYS = ["format", "mode", "partitions", "partition_col", "zstd_level",
         "reversed_cols", "schema", "schema_names", "parts", "totals",
         "revision"]
-ONE_PART = [(0, 3000, 198_830, 3_943_327_029)]
-MERGED = [(2, 3000, 180_159, 1_103_351_906)]
+ONE_PART = [(0, 3000, 178_237, 1_259_732_181)]
+MERGED = [(2, 3000, 179_545, 1_385_625_156)]
 WRITER_PINS = {
     "encode": (ONE_PART, KEYS),
     "datasource": (ONE_PART, KEYS),
@@ -653,8 +658,8 @@ def test_writer_parts_pinned(writer, spark, tmp_path):
         before = encode.encode(df, out).manifest  # two parts
         assert [(p["part_id"], p["rows"], p["enc_bytes"], p["crc32"])
                 for p in before["parts"]] == [
-            (0, 1500, 133_734, 79_996_697),
-            (1, 1500, 133_117, 2_649_799_103)]
+            (0, 1500, 128_649, 3_303_996_486),
+            (1, 1500, 127_750, 52_750_428)]
         encode.compact_parts(out, target_bytes=1 << 30)
     m = encode.read_manifest(out)
     parts, keys = WRITER_PINS[writer]

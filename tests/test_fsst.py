@@ -120,7 +120,9 @@ def test_bin_codec_choice_unchanged_by_capped_build(corpus, rows, tmp_path,
                                                     monkeypatch):
     """Every doc_id/source block of one clustered part, as the encode task
     hands it to the selector, selects the same codec with the capped and
-    the uncapped table build."""
+    the uncapped table build. The gate's window estimate is taken out, so
+    the trial runs where the strided sample alone lets it (with it, no
+    table is built on these parts: ``test_no_fsst_table_on_benchmark_parts``)."""
     from perfbench import corpus as C
     from perfbench.workloads import BATCH_ROWS
     from zseq import encode
@@ -137,6 +139,7 @@ def test_bin_codec_choice_unchanged_by_capped_build(corpus, rows, tmp_path,
     builds = []
     build = fsst.build_table
     monkeypatch.setattr(BC, "select_bin_codec", recorded)
+    monkeypatch.setattr(BC, "_window_ratio", lambda *_: float("inf"))
     monkeypatch.setattr(fsst, "build_table",
                         lambda strs: builds.append(1) or build(strs))
     encode._encode_table_to_file(tbl, str(tmp_path), 0, tbl.schema, True,
@@ -146,3 +149,36 @@ def test_bin_codec_choice_unchanged_by_capped_build(corpus, rows, tmp_path,
     monkeypatch.setattr(fsst, "_greedy_encode_py", _uncapped_greedy)
     assert [c for _l, _d, c in calls] == [select(l, d) for l, d, _c in calls]
     assert builds  # the FSST trial ran on some block
+
+
+@pytest.mark.parametrize("corpus,rows", [("fixture", 234_375),
+                                         ("zipf", 25_000)])
+def test_no_fsst_table_on_benchmark_parts(corpus, rows, tmp_path,
+                                          monkeypatch):
+    """The clustered 12-byte doc_ids of both benchmark corpora: FSST's
+    floor (2 codes per id, 0.167 of the bytes) loses to zstd of
+    contiguous windows (fixture 0.106, Zipf 0.153), so no part builds a
+    table, and every block picks the codec it picked with the trial."""
+    from perfbench import corpus as C
+    from perfbench.workloads import BATCH_ROWS
+    from zseq import encode
+    from zseq.codecs import bytescodecs as BC
+
+    tbl = C.make_table(corpus, 7, 14_000_000, rows)
+    calls = []
+    select = BC.select_bin_codec
+
+    def recorded(lengths, data):
+        calls.append((lengths.copy(), data.copy(), select(lengths, data)))
+        return calls[-1][2]
+
+    def refuse(_strs):
+        raise AssertionError("fsst.build_table called")
+
+    monkeypatch.setattr(BC, "select_bin_codec", recorded)
+    monkeypatch.setattr(fsst, "build_table", refuse)
+    encode._encode_table_to_file(tbl, str(tmp_path), 0, tbl.schema, True,
+                                 BATCH_ROWS, 0.0)
+    monkeypatch.undo()
+    monkeypatch.setattr(BC, "_window_ratio", lambda *_: float("inf"))
+    assert [c for _l, _d, c in calls] == [select(l, d) for l, d, _c in calls]

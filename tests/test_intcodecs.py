@@ -356,9 +356,9 @@ def test_narrow_decode_never_takes_lane_path(tag, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
-# Lazy PACK on the auto path: the wrap trials pack only the 64 KiB prefix
-# they read. Oracle: the eager composition (whole PACK, wrap trial, then
-# the byte-aligned retry), kept here verbatim.
+# The auto path of a bit-packed chunk builds only what it tries or keeps.
+# Oracle: the same rule with every candidate built whole and zstd'd whole,
+# in the same order, from compositions kept here verbatim.
 # ---------------------------------------------------------------------------
 
 def _eager_wrap(seg: bytes, count: int) -> bytes:
@@ -372,13 +372,13 @@ def _eager_wrap(seg: bytes, count: int) -> bytes:
     return IC._wrapped(seg, count, len(seg), comp, len(seg)) or seg
 
 
-def _eager_repack(arr: np.ndarray, seg: bytes, wide: int) -> np.ndarray:
+def _eager_repack(arr: np.ndarray, lo: int, wide: int) -> np.ndarray:
     head = IC.HEADER.size + 9
     inner = np.empty(head + arr.size * (wide // 8), dtype=np.uint8)
-    inner[:head] = np.frombuffer(seg, np.uint8, head)
     IC.HEADER.pack_into(inner, 0, IC.T_PACK, inner.size - IC.HEADER.size)
+    inner[IC.HEADER.size:head - 1] = np.frombuffer(
+        lo.to_bytes(8, "little", signed=True), np.uint8)
     inner[head - 1] = wide
-    lo = int.from_bytes(seg[IC.HEADER.size : head - 1], "little", signed=True)
     with np.errstate(over="ignore"):
         np.subtract(arr, arr.dtype.type(lo),
                     out=inner[head:].view(f"<u{wide // 8}"),
@@ -386,51 +386,91 @@ def _eager_repack(arr: np.ndarray, seg: bytes, wide: int) -> np.ndarray:
     return inner
 
 
-def _eager_retry(arr: np.ndarray, seg: bytes, count: int) -> bytes:
-    """The declined PACK's retry: the byte-width re-pack (none at a byte
-    width) and FORBP (``_composed_forbp``), each built whole, in the
-    order of zstd of their sample (the chunk itself up to 64 minis, else
-    16 evenly spaced windows of 4 whole minis), the re-pack first on a
-    tie, until one wraps."""
-    width = seg[IC.HEADER.size + 8]
-    wide = next(b for b in IC._BYTE_WIDTHS if b >= width)
-    if len(seg) < 128:
-        return seg
-    builds = [_composed_forbp]
-    if wide != width:
-        builds.insert(0, lambda v: _eager_repack(v, seg, wide))
-    nfull = count // IC.MINI
-    sample = arr if nfull <= 64 else np.concatenate([
+def _eager_sample(arr: np.ndarray) -> np.ndarray:
+    """The chunk itself up to 64 minis, else 16 evenly spaced windows of
+    4 whole minis."""
+    nfull = arr.size // IC.MINI
+    return arr if nfull <= 64 else np.concatenate([
         arr[s * IC.MINI:(s + 4) * IC.MINI]
         for s in (i * (nfull - 4) // 15 for i in range(16))])
-    ests = [len(BC.zstd_compress(b(sample))) for b in builds]
-    for i in sorted(range(len(builds)), key=ests.__getitem__):
-        inner = builds[i](arr)
-        got = IC._wrapped(seg, count, len(inner), BC.zstd_compress(inner),
-                          len(seg))
-        if got:
-            return got
-    return seg
+
+
+def _predicted(build, arr: np.ndarray, sample: np.ndarray) -> float:
+    """zstd of the sample's layout, scaled to the chunk's layout."""
+    inner = build(sample)
+    return len(BC.zstd_compress(inner)) * len(build(arr)) / len(inner)
+
+
+def _zone_len(seg: bytes, count: int) -> int:
+    return 21 if IC.segment_zone(seg, 0, count) else 5
 
 
 def _eager_auto_pack(arr: np.ndarray) -> bytes:
-    seg = _eager_wrap(IC._seg(IC.T_PACK, IC._enc_pack(arr)), arr.size)
-    if seg[0] == IC.T_PACK:
-        seg = _eager_retry(arr, seg, arr.size)
-    return seg
+    """A PACK chunk: its sample laid out as the PACK, the byte-width
+    re-pack (none at a byte width) and FORBP (``_composed_forbp``), the
+    layouts ordered by predicted zstd bytes (ties in that order), the
+    PACK only where its prediction passes the 0.9 rule; each built whole
+    and zstd'd whole in that order until one wraps against the PACK."""
+    pack = _composed_pack(arr)
+    if len(pack) < 128:
+        return pack
+    lo, width = int(arr.min()), pack[IC.HEADER.size + 8]
+    wide = next(b for b in IC._BYTE_WIDTHS if b >= width)
+    sample = _eager_sample(arr)
+    builds = [lambda v: _composed_pack(v, lo, width)]
+    if wide != width:
+        builds.append(lambda v: _eager_repack(v, lo, wide))
+    builds.append(_composed_forbp)
+    ests = [_predicted(b, arr, sample) for b in builds]
+    order = sorted(range(len(builds)), key=ests.__getitem__)
+    if IC.HEADER.size + _zone_len(pack, arr.size) + ests[0] \
+            >= 0.9 * len(pack):
+        order.remove(0)
+    for i in order:
+        inner = builds[i](arr)
+        got = IC._wrapped(pack, arr.size, len(inner),
+                          BC.zstd_compress(inner), len(pack))
+        if got:
+            return got
+    return pack
+
+
+def _eager_auto_forbp(arr: np.ndarray) -> bytes:
+    """A FORBP chunk: the byte-width re-pack is built whole and wrapped
+    first only where its sample predicts it beats FORBP's sample and
+    passes the 0.9 rule against FORBP; else FORBP's own wrap check."""
+    seg = _composed_forbp(arr)
+    lo = int(arr.min())
+    wide = next(b for b in IC._BYTE_WIDTHS
+                if b >= (int(arr.max()) - lo).bit_length())
+    if len(seg) >= 128:
+        sample = _eager_sample(arr)
+        rest = _predicted(lambda v: _eager_repack(v, lo, wide), arr, sample)
+        if rest < _predicted(_composed_forbp, arr, sample) and \
+                IC.HEADER.size + _zone_len(seg, arr.size) + rest \
+                < 0.9 * len(seg):
+            inner = _eager_repack(arr, lo, wide)
+            got = IC._wrapped(seg, arr.size, len(inner),
+                              BC.zstd_compress(inner), len(seg))
+            if got:
+                return got
+    return _eager_wrap(seg, arr.size)
 
 
 def _trial_values(width: int) -> int:
-    """Values whose PACK body fills the 64 KiB wrap trial."""
+    """Values whose PACK body fills 64 KiB, the reach of the prefix
+    trial a PACK's wrap once took."""
     return 8 * -(-(65536 - IC.HEADER.size - 9) // width)
 
 
 def _regime_input(regime: str, width: int, lo: int, dt) -> np.ndarray:
     """Values spanning exactly ``width`` bits above ``lo``, shaped so the
     auto PACK lands in ``regime``: "accepted" (a 64-value tile repeated:
-    the prefix trial and the whole wrap pass), "retry" (a random block
-    longer than the trial, then again shifted by 3 values: the trial sees
-    no repeat, the byte-width re-pack does) or "declined" (random)."""
+    the PACK's own wrap wins), "retry" (a random block of more than 64
+    KiB of PACK body, then again shifted by 3 values: where the width is
+    not a multiple of 8 the repeat lies at other bit phases of the PACK,
+    and the byte-width re-pack or FORBP wraps it) or "declined"
+    (random)."""
     rng = np.random.default_rng(width)
     m = _trial_values(width) + 8
     if regime == "accepted":
@@ -466,34 +506,37 @@ def test_lazy_pack_matches_eager_composition(dt, lo, widths, regime,
         assert IC.encode_ints(a) == want, (width, regime)
         pack_len = len(IC.encode_ints(a, codec=IC.T_PACK))
         got = _regime_of(want, pack_len)
-        # at a byte width FORBP finds the repeat (no re-pack there); at
-        # width 1 the 8-bit re-pack is 8x the PACK, more than zstd wins
-        # back, and FORBP's 1-bit minis keep the PACK's bit phases
+        # at width 1 the 8-bit re-pack is 8x the PACK, more than zstd
+        # wins back, and FORBP's 1-bit minis keep the PACK's bit phases;
+        # at a multiple of 8 bits the repeat 3 values on lies on whole
+        # bytes of the PACK itself, which its whole-chunk zstd sees
         if regime == "retry" and width == 1:
             assert got == "declined"
+        elif regime == "retry" and width % 8 == 0:
+            assert got == "accepted", width
         else:
             assert got == regime, (width, got)
 
 
-def test_winning_retry_never_packs_past_trial_prefix(monkeypatch):
-    """The PACK body is packed only as far as the wrap trial reads when
-    a retry wins (the retry's sample packs FORBP minis, not the PACK)."""
+def test_winning_repack_or_forbp_never_builds_the_pack_body(monkeypatch):
+    """A chunk whose re-pack wins builds the PACK's layout of its sample
+    only: no PACK body of the whole chunk is packed."""
     a = _phase_shifted_repeats()
     a = np.concatenate([a, a[5:]])  # 2M values
     assert a.size >= 1 << 20
     sizes = []
-    build = IC._LazyPack._build
+    build = IC._pack_seg
 
-    def recorded(self, count):
-        sizes.append(count)
-        return build(self, count)
+    def recorded(vals, lo, width):
+        sizes.append(vals.size)
+        return build(vals, lo, width)
 
-    monkeypatch.setattr(IC._LazyPack, "_build", recorded)
+    monkeypatch.setattr(IC, "_pack_seg", recorded)
     seg = IC.encode_ints(a)
     assert _regime_of(seg, IC.HEADER.size + 9 + (a.size * 31 + 7) // 8) \
         == "retry"
-    assert sizes and max(sizes) <= _trial_values(31), sizes
-    monkeypatch.setattr(IC._LazyPack, "_build", build)
+    assert sizes and max(sizes) <= 64 * IC.MINI, sizes
+    monkeypatch.setattr(IC, "_pack_seg", build)
     assert seg == _eager_auto_pack(a)
 
 
@@ -539,7 +582,7 @@ def test_retry_takes_forbp_on_rows_repeated_up_to_a_constant(nrows):
     seg = IC.encode_ints(a)
     assert seg[0] == IC.T_WRAP and _inner_tag(seg) == IC.T_FORBP
     repack = IC.HEADER.size + 21 + len(BC.zstd_compress(
-        _eager_repack(a, pack, 32)))
+        _eager_repack(a, int(a.min()), 32)))
     assert 4 * len(seg) <= min(repack, len(pack)), (len(seg), repack)
     assert seg == _eager_auto_pack(a)
     got, pos = IC.decode_ints(seg, 0, a.size, np.int32)
@@ -553,7 +596,7 @@ def test_retry_keeps_the_byte_width_repack_on_shifted_repeats(nrows):
     a = _shifted_rows(11, nrows)
     pack = IC.encode_ints(a, codec=IC.T_PACK)
     assert pack[IC.HEADER.size + 8] == 11
-    inner = _eager_repack(a, pack, 16)
+    inner = _eager_repack(a, int(a.min()), 16)
     want = IC._wrapped(pack, a.size, inner.size, BC.zstd_compress(inner),
                        len(pack))
     assert want is not None
@@ -572,6 +615,98 @@ def test_retry_skips_a_forbp_candidate_past_the_u32_limit(nrows,
     assert len(pack) < len(forbp) < IC.HEADER.size + 9 + 4 * a.size
     monkeypatch.setattr(IC, "LEN_LIMIT", len(forbp) - 1)
     assert IC.encode_ints(a) == pack
+
+
+def _grouped_rows(nrows: int) -> np.ndarray:
+    """1024-value rows cut from one 11-bit pseudo-random sequence at
+    100k + 1 + k % 7, each group of 4 rows raised by its own multiple of
+    2**13. Every FORBP mini spans about 11 bits against the chunk's 15,
+    so the selector takes FORBP. A row repeats most of the row before it
+    at a shift that is not a multiple of 8 values: other bit phases in
+    FORBP's minis, whole lanes in the 16-bit re-pack."""
+    base = np.random.default_rng(11).integers(0, 2**11, 100 * nrows + 1024)
+    rows = np.stack([base[100 * k + 1 + k % 7:][:1024] for k in range(nrows)])
+    return (rows + (np.arange(nrows) // 4 % 4 << 13)[:, None]).reshape(
+        -1).astype(np.int32)
+
+
+@_RETRY_PATHS
+def test_forbp_chunk_wraps_its_byte_width_repack_first(nrows, monkeypatch):
+    """The re-pack's wrap is kept, smaller than FORBP's own, under the
+    zone of FORBP's minis; past 64 minis no FORBP body of the whole chunk
+    is packed."""
+    a = _grouped_rows(nrows)
+    assert select.select_int_codec(a) == IC.T_FORBP
+    forbp = IC.encode_ints(a, codec=IC.T_FORBP)
+    sizes = []
+    build = IC._forbp_seg
+
+    def recorded(vals, layout):
+        sizes.append(vals.size)
+        return build(vals, layout)
+
+    monkeypatch.setattr(IC, "_forbp_seg", recorded)
+    seg = IC.encode_ints(a)
+    assert seg[0] == IC.T_WRAP and _inner_tag(seg) == IC.T_PACK
+    assert len(seg) < 0.75 * len(_eager_wrap(forbp, a.size))
+    assert IC.segment_zone(seg, 0, a.size) == \
+        IC.segment_zone(forbp, 0, a.size)
+    assert max(sizes) <= 64 * IC.MINI, sizes
+    monkeypatch.setattr(IC, "_forbp_seg", build)
+    assert seg == _eager_auto_forbp(a)
+    got, pos = IC.decode_ints(seg, 0, a.size, np.int32)
+    assert pos == len(seg) and np.array_equal(got, a)
+
+
+@_RETRY_PATHS
+def test_forbp_chunk_skips_a_repack_past_the_u32_limit(nrows, monkeypatch):
+    """With the u32 limit between the FORBP segment's length and the
+    re-pack's, the chunk writes FORBP's own wrap check, nothing
+    refused."""
+    a = _grouped_rows(nrows)
+    forbp = IC.encode_ints(a, codec=IC.T_FORBP)
+    want = _eager_wrap(forbp, a.size)
+    repack = IC.HEADER.size + 9 + 2 * a.size
+    assert len(forbp) < repack
+    monkeypatch.setattr(IC, "LEN_LIMIT", (len(forbp) + repack) // 2)
+    assert IC.encode_ints(a) == want
+
+
+@pytest.mark.parametrize("shape", ["mixed", "grouped", "grouped_sampled",
+                                   "additive", "random"])
+def test_auto_forbp_matches_eager_composition(shape, monkeypatch):
+    """With the selector pinned to FORBP, every shape writes the eager
+    oracle's bytes: the re-pack first where predicted, else FORBP's own
+    wrap check byte for byte."""
+    a = {"mixed": lambda: _mixed_minis(200_000, np.int32),
+         "grouped": lambda: _grouped_rows(60),
+         "grouped_sampled": lambda: _grouped_rows(300),
+         "additive": lambda: _additive_rows(100),
+         "random": lambda: np.random.default_rng(4).integers(
+             0, 2**17, 150_000).astype(np.int32)}[shape]()
+    monkeypatch.setattr(select, "select_int_codec",
+                        lambda arr, exclude=frozenset(): IC.T_FORBP)
+    assert IC.encode_ints(a) == _eager_auto_forbp(a)
+
+
+def test_side_by_side_duplicate_docs_wrap_the_byte_width_repack():
+    """The 2,000-doc Zipf table (seed 7) with each row taken twice in a
+    row, 621,084 tokens: a 17-bit PACK hides the second copy at other bit
+    phases, so the PACK's own wrap wrote 1.349 B/value. The sample orders
+    the 32-bit re-pack's wrap first. References on the same tokens:
+    forced width_sym 0.992 and DICT 0.807 B/value (DICT stays out of the
+    auto candidates: ``np.unique`` on a fixture token block costs more
+    than its whole auto encode)."""
+    from perfbench import corpus as C
+
+    tbl = C.make_table("zipf", 7, 0, 2000)
+    arr = _tokens(tbl.take(np.repeat(np.arange(2000), 2)))
+    assert arr.size == 621_084
+    seg = IC.encode_ints(arr)
+    assert seg[0] == IC.T_WRAP and len(seg) <= 0.93 * arr.size, len(seg)
+    assert len(seg) < len(IC.encode_ints(arr, codec=IC.T_WSYM))
+    got, pos = IC.decode_ints(seg, 0, arr.size, np.int32)
+    assert pos == len(seg) and np.array_equal(got, arr)
 
 
 # ---------------------------------------------------------------------------
@@ -702,11 +837,14 @@ def _spanning(width: int, dt, n: int) -> np.ndarray:
     return (u + np.uint64(2**63)).view(np.int64)
 
 
-def _composed_pack(a: np.ndarray) -> bytes:
+def _composed_pack(a: np.ndarray, lo: int | None = None,
+                   width: int | None = None) -> bytes:
     """The PACK segment as a head plus ``pack_width`` over every delta of
-    the block at once."""
-    lo = int(a.min())
-    width = (int(a.max()) - lo).bit_length()
+    the block at once, in the frame (``lo``, ``width``), by default the
+    block's own."""
+    if lo is None:
+        lo = int(a.min())
+        width = (int(a.max()) - lo).bit_length()
     with np.errstate(over="ignore"):
         d = (a - a.dtype.type(lo)).view(
             np.uint32 if a.dtype == np.int32 else np.uint64)
@@ -984,12 +1122,15 @@ def test_no_column_grows_over_old_selection_on_parity_tables(monkeypatch):
 # sha256 of clustered parts, pinned to the bytes the selector wrote when
 # the width-symbol codec was a trial encode after the auto path's
 # segment: predicting it from the sample changed no block's codec. The
-# fixture pin moved once since, when a declined PACK wrap gained its
-# FORBP retry: only the tail block's tokens chunk changed (2,801,037 ->
-# 727,748 B, still zstd_wrap).
+# fixture pin moved twice since. When a declined PACK wrap gained its
+# FORBP retry, only the tail block's tokens chunk changed (2,801,037 ->
+# 727,748 B, still zstd_wrap). When a FORBP chunk's byte-width re-pack
+# could wrap first, block 0's tokens chunk became a wrapped 16-bit
+# re-pack (131,365 -> 89,430 B) and two `source` dictionary index
+# segments shrank (part 1,724,359 -> 1,682,409 B).
 PART_SHA256 = {
     "fixture":
-        "0377c7dfbdab5005aea39b722d10e20fec6e6dffafd17b159a128dae4dacd128",
+        "17e3afab039e80315b8afc86b2772e6431b2905e1a7800cb0e24e4d449ab9d01",
     "zipf":
         "cfdd3f6f8d9f6bfc3bd5c49277aa794b5b9ec19cf1c35f11ff1e341677722ec7",
 }

@@ -282,6 +282,19 @@ def decode_binary(buf, offset: int, count: int) -> tuple[np.ndarray, np.ndarray,
 # Selection — trial-based on a strided sample
 # ---------------------------------------------------------------------------
 
+def _window_ratio(offs: np.ndarray, data: np.ndarray, m: int) -> float:
+    """zstd's output over its input on 8 evenly spaced windows of
+    ``m // 8`` whole values each, laid out as ``select.int_stats`` lays
+    its windows: contiguous runs keep the locality a strided sample
+    destroys."""
+    n = offs.size - 1
+    k = max(1, m // 8)
+    nwin = min(8, max(1, n // k))
+    starts = (n - k) * np.arange(nwin) // max(1, nwin - 1)
+    win = np.concatenate([data[offs[i]:offs[i + k]] for i in starts])
+    return len(zstd_compress(win)) / max(1, win.size)
+
+
 def select_bin_codec(lengths: np.ndarray, data: np.ndarray) -> int:
     n = lengths.size
     if n == 0:
@@ -327,14 +340,23 @@ def select_bin_codec(lengths: np.ndarray, data: np.ndarray) -> int:
     # (~3-6x), or when strings are long (zstd's home turf).
     zstd_ratio = est[T_BIN_ZSTD] / max(1.0, float(total))
     if mean_len <= FSST_MAX_MEAN_LEN and total >= 1024 and zstd_ratio > 0.22:
-        slens = np.diff(soffs)
-        # Nor when even FSST's floor loses: a code covers at most 8 bytes,
-        # a non-empty string emits at least one code and the table is at
-        # least 1 byte, so the estimate below is never under this floor
-        # (same association, so float rounding keeps the order) and min()
-        # keeps the earlier key on a tie: the selection is unchanged.
-        lo = max(sdata.size / 8, np.count_nonzero(slens)) / sample_bytes
-        if lo * total + 1 + n * 0.5 + 40 < min(est.values()):
+        # Nor when even FSST's floor loses: a code covers at most 8 bytes
+        # and never spans strings, so a string of L bytes takes at least
+        # ceil(L / 8) codes, and the table is at least 1 byte. The
+        # estimate below is never under this floor (same association, so
+        # float rounding keeps the order), and a floor that loses to the
+        # other estimates rules FSST out with no change of choice. The
+        # floor must also beat zstd's estimate from contiguous windows
+        # (``_window_ratio``), which the choice itself does not use: the
+        # strided sample splits clustered ids apart and overstates zstd's
+        # output (fixture doc_id blocks: 0.168 strided, 0.106 in windows,
+        # 0.095 whole), so 12-byte ids, whose floor is 2/12, build no
+        # table.
+        lo = int(((np.diff(soffs) + 7) // 8).sum()) / sample_bytes
+        floor = lo * total + 1 + n * 0.5 + 40
+        if floor < min(est.values()) and (
+                step == 1 or floor < _window_ratio(offs, data, m)
+                * total + lens_cost + 16):
             # build_table reads values until BUILD_SAMPLE_BYTES of them:
             # only those become Python bytes
             k = int(np.searchsorted(soffs[:-1] - soffs[0],

@@ -36,17 +36,21 @@ types are handled at the column layer):
   WRAP    zstd over a finished segment (cascade; catches periodic
           structure no single codec models); carries the inner segment's
           derived zone map so pruning survives the wrap. LZ matches are
-          byte-granular, and a PACK hides two kinds of repeats: at a
-          non-byte width 7 of 8 start at another bit phase, and against
-          its one global minimum a run repeated up to an additive
-          constant is other bytes. When the wrap trial fails, the retry
-          (``_retry_wrap``) zstds whole the values re-packed at the next
-          byte width or their FORBP segment (per-mini minimum, each mini
-          on a byte), in the order zstd of a sample of whole minis
-          predicts, until one wraps. An auto-selected PACK is packed
-          lazily (``_LazyPack``): the trial packs only the 64 KiB prefix
-          it reads, and the whole PACK is built only when it is returned
-          or wrapped itself
+          byte-granular, and a bit-packed layout hides two kinds of
+          repeats: at a non-byte width 7 of 8 start at another bit
+          phase, and against one global minimum a run repeated up to an
+          additive constant is other bytes. So a bit-packed chunk's
+          wrap is decided before it is built: zstd of a sample of whole
+          minis (the chunk itself up to 64 minis) predicts the wrap of
+          each layout that could show zstd those repeats. An auto PACK
+          (``_pack_or_wrap``) tries its byte-width re-pack and FORBP
+          (per-mini minimum, each mini on a byte), each built and
+          zstd'd whole, in predicted order, and itself only where its
+          prediction passes the 0.9 rule; the PACK body is built only
+          when it is tried or kept. An auto FORBP (``_forbp_or_wrap``)
+          tries its byte-width re-pack first only where the sample
+          predicts that it wins; else FORBP, like every other segment,
+          takes the 64 KiB prefix trial (``_maybe_wrap``)
   WSYM    width symbols + raw mantissas: per value, the symbol
           k = bit_length(v - lo) as one uint8 of a zstd-compressed symbol
           stream, and the k-1 bits below its leading 1 in one LSB-first
@@ -156,77 +160,57 @@ def _enc_zbra(arr: np.ndarray) -> bytes:
     return P.zbra_compress_int_array(arr)
 
 
-class _LazyPack:
-    """The PACK segment of ``arr``, packed only as far as it is read.
+def _pack_head(lo: int, width: int, count: int) -> bytes:
+    """Segment header, min i64 LE and width u8 of the PACK segment of
+    ``count`` values in the frame (``lo``, ``width``): all a zone map or
+    a size check needs, sized from min and max alone."""
+    nbody = (count * width + 7) // 8
+    return (HEADER.pack(T_PACK, u32_len(9 + nbody, "segment payload length"))
+            + lo.to_bytes(8, "little", signed=True) + bytes([width]))
 
-    Head (tag, length, min, width) and length come from min and max
-    alone. The auto path's wrap trials read just a 64 KiB prefix, and when
-    a retry (``_retry_wrap``) wins the whole segment is never needed, so
-    the body is packed in full only by ``seg()`` (cached).
 
-    Every build goes into one buffer of its exact size: the deltas exist
-    for one ``P.PACK_PIECE`` of values at a time, each piece packed
-    straight into its bytes, so no temporary grows with the block.
-    int32 input stays in the 32-bit domain: (arr - lo) wraps mod 2^32,
-    and the true deltas are < 2^32 by construction (int32 span), so the
-    uint32 view is exact — same bytes, half the traffic."""
+def _pack_seg(arr: np.ndarray, lo: int, width: int) -> bytearray:
+    """The PACK segment of ``arr`` in the frame (``lo``, ``width``): every
+    value lies in [lo, lo + 2**width). width==0: no body. width==64: raw
+    8-byte deltas.
 
-    def __init__(self, arr: np.ndarray):
-        lo = int(arr.min())
-        width = (int(arr.max()) - lo).bit_length()
-        nbody = (arr.size * width + 7) // 8
-        self.arr, self.lo, self.width = arr, lo, width
-        self.head = (HEADER.pack(
-                         T_PACK, u32_len(9 + nbody, "segment payload length"))
-                     + lo.to_bytes(8, "little", signed=True)
-                     + bytes([width]))
-        self._len = len(self.head) + nbody
-        self._seg: bytearray | None = None
+    Built once into one buffer of its exact size: the deltas exist for
+    one ``P.PACK_PIECE`` of values at a time, each piece packed straight
+    into its bytes, so no temporary grows with the block. int32 input
+    stays in the 32-bit domain: (arr - lo) wraps mod 2^32, and the true
+    deltas are < 2^32 by construction (int32 span), so the uint32 view
+    is exact — same bytes, half the traffic."""
+    head = _pack_head(lo, width, arr.size)
+    h, count = len(head), arr.size
+    buf = bytearray(h + (count * width + 7) // 8)
+    buf[:h] = head
+    out = np.frombuffer(buf, dtype=np.uint8)[h:]
+    udt = np.uint32 if arr.dtype == np.int32 else np.uint64
+    base = arr.dtype.type(lo)
+    for i in range(0, count if width else 0, P.PACK_PIECE):
+        j = min(i + P.PACK_PIECE, count)
+        with _wrap:
+            d = (arr[i:j] - base).view(udt)
+        # a piece starts on a whole byte: PACK_PIECE is 8k values
+        dst = out[i * width // 8:(j * width + 7) // 8]
+        if width == 64:
+            dst[:] = d.view(np.uint8)
+        else:
+            P.pack_width(d, width, out=dst)
+    return buf
 
-    def __len__(self) -> int:
-        return self._len
 
-    def _build(self, count: int) -> bytearray:
-        """The head and the packed deltas of the first ``count`` values.
-        width==0: no body. width==64: raw 8-byte deltas."""
-        w, h = self.width, len(self.head)
-        buf = bytearray(h + (count * w + 7) // 8)
-        buf[:h] = self.head
-        out = np.frombuffer(buf, dtype=np.uint8)[h:]
-        udt = np.uint32 if self.arr.dtype == np.int32 else np.uint64
-        lo = self.arr.dtype.type(self.lo)
-        for i in range(0, count if w else 0, P.PACK_PIECE):
-            j = min(i + P.PACK_PIECE, count)
-            with _wrap:
-                d = (self.arr[i:j] - lo).view(udt)
-            # a piece starts on a whole byte: PACK_PIECE is 8k values
-            dst = out[i * w // 8:(j * w + 7) // 8]
-            if w == 64:
-                dst[:] = d.view(np.uint8)
-            else:
-                P.pack_width(d, w, out=dst)
-        return buf
-
-    def prefix(self, nbytes: int) -> memoryview:
-        """``seg()[:nbytes]``. Every 8 values pack to ``width`` whole
-        bytes, so whole 8-value groups give exactly the full segment's
-        leading bytes; a prefix of every value is the segment itself."""
-        groups = -(-(nbytes - len(self.head)) // self.width)
-        count = min(self.arr.size, 8 * groups)
-        whole = count == self.arr.size
-        return memoryview(self.seg() if whole else self._build(count))[:nbytes]
-
-    def seg(self) -> bytearray:
-        if self._seg is None:
-            self._seg = self._build(self.arr.size)
-        return self._seg
+def _pack_frame(arr: np.ndarray) -> tuple[int, int]:
+    """(lo, width) of the PACK segment of ``arr``."""
+    lo = int(arr.min())
+    return lo, (int(arr.max()) - lo).bit_length()
 
 
 def _enc_pack(arr: np.ndarray) -> memoryview:
     """min i64 LE | width u8 | packed deltas (byte-aligned): the PACK
     segment past its header. width==0: all equal min. width==64: raw
     8-byte deltas."""
-    return memoryview(_LazyPack(arr).seg())[HEADER.size:]
+    return memoryview(_pack_seg(arr, *_pack_frame(arr)))[HEADER.size:]
 
 
 def _dec_pack(payload: memoryview, count: int,
@@ -291,6 +275,22 @@ def _forbp_layout(arr: np.ndarray) -> tuple:
     return mins, widths, offs
 
 
+def _forbp_head(layout: tuple) -> bytearray:
+    """The FORBP segment's bytes before its packed minis, from its
+    ``layout``: segment header | mini u16 | nminis x (min i64 LE, width
+    u8). Enough for ``segment_zone``."""
+    mins, widths, offs = layout
+    nminis = widths.size
+    buf = bytearray(int(offs[0]))
+    HEADER.pack_into(buf, 0, T_FORBP, u32_len(int(offs[-1]) - HEADER.size,
+                                              "segment payload length"))
+    struct.pack_into("<H", buf, HEADER.size, MINI)
+    heads = np.frombuffer(buf, np.uint8)[HEADER.size + 2:].reshape(nminis, 9)
+    heads[:, :8] = mins.astype("<i8").view(np.uint8).reshape(nminis, 8)
+    heads[:, 8] = widths
+    return buf
+
+
 def _forbp_seg(arr: np.ndarray, layout: tuple) -> bytearray:
     """The whole FORBP segment, built once into one exact-size buffer:
     segment header | mini u16 | nminis x (min i64 LE, width u8) | packed
@@ -312,16 +312,10 @@ def _forbp_seg(arr: np.ndarray, layout: tuple) -> bytearray:
     mini, nminis, nfull = MINI, widths.size, arr.size // MINI
     udt = np.uint32 if arr.dtype == np.int32 else np.uint64
     full = arr[: nfull * mini].reshape(nfull, mini)
-    head = int(offs[0])
-    size = int(offs[-1])
-    buf = bytearray(size)
+    head = _forbp_head(layout)
+    buf = bytearray(int(offs[-1]))
+    buf[:len(head)] = head
     out = np.frombuffer(buf, dtype=np.uint8)
-    HEADER.pack_into(buf, 0, T_FORBP,
-                     u32_len(size - HEADER.size, "segment payload length"))
-    struct.pack_into("<H", buf, HEADER.size, mini)
-    heads = out[HEADER.size + 2:head].reshape(nminis, 9)
-    heads[:, :8] = mins.astype("<i8").view(np.uint8).reshape(nminis, 8)
-    heads[:, 8] = widths
     offs = offs.tolist()
     wlist = widths.tolist()
 
@@ -757,7 +751,7 @@ def _segment(codec: int, arr: np.ndarray) -> bytes | bytearray:
     if codec == T_FORBP:  # built whole, header included, in one buffer
         return _forbp_seg(arr, _forbp_layout(arr))
     if codec == T_PACK:  # likewise
-        return _LazyPack(arr).seg()
+        return _pack_seg(arr, *_pack_frame(arr))
     return _seg(codec, _ENCODERS[codec](arr))
 
 
@@ -784,10 +778,20 @@ def encode_ints(values, codec: int | None = None,
         arr = arr.astype(np.int64)  # codecs with int64-domain byte paths
     if not auto or T_WRAP in exclude or codec == T_WSYM:
         return _segment(codec, arr)
-    if codec != T_PACK:
-        return _maybe_wrap(_segment(codec, arr), n)
-    seg = _maybe_wrap(_LazyPack(arr), n)
-    return seg if isinstance(seg, bytes) else _retry_wrap(arr, seg, n)
+    if codec == T_PACK:
+        return _pack_or_wrap(arr)
+    if codec == T_FORBP:
+        return _forbp_or_wrap(arr)
+    return _maybe_wrap(_segment(codec, arr), n)
+
+
+def _wrap_head(seg, count: int, inner_len: int) -> bytes:
+    """The T_WRAP payload's head: the inner segment's length and the zone
+    ``segment_zone`` derives from ``seg``, whose head alone is enough."""
+    zone = segment_zone(seg, 0, count)
+    return struct.pack("<I", u32_len(inner_len, "wrapped segment length")) \
+        + (struct.pack("<Bqq", 1, zone[0], zone[1]) if zone
+           else struct.pack("<B", 0))
 
 
 def _wrapped(seg, count: int, inner_len: int, comp: bytes,
@@ -796,12 +800,8 @@ def _wrapped(seg, count: int, inner_len: int, comp: bytes,
     holding the same values as ``seg``), or None unless it is shorter
     than 0.9 * ``than`` bytes: its length is known before it is built,
     so a losing wrap copies nothing. The zone header is derived from
-    ``seg`` so block pruning still works on wrapped chunks; a PACK's head
-    alone is enough for that."""
-    zone = segment_zone(seg, 0, count)
-    head = struct.pack("<I", u32_len(inner_len, "wrapped segment length")) \
-        + (struct.pack("<Bqq", 1, zone[0], zone[1]) if zone
-           else struct.pack("<B", 0))
+    ``seg`` so block pruning still works on wrapped chunks."""
+    head = _wrap_head(seg, count, inner_len)
     plen = len(head) + len(comp)
     if HEADER.size + plen >= 0.9 * than:
         return None
@@ -810,117 +810,185 @@ def _wrapped(seg, count: int, inner_len: int, comp: bytes,
                      head, comp))
 
 
-def _maybe_wrap(seg: bytes | bytearray | _LazyPack,
-                count: int) -> bytes | bytearray | _LazyPack:
+def _maybe_wrap(seg: bytes | bytearray, count: int) -> bytes | bytearray:
     """Cascade compression: zstd the finished segment when it still has
     exploitable structure (e.g. periodic patterns no single codec models).
-    A ~64 KiB trial bounds cost; kept only on a clear (>=10%) win.
-
-    An auto-selected PACK arrives unbuilt (``_LazyPack``): the trial packs
-    only the prefix it reads, and the whole segment is built only when
-    the trial passes. A PACK this declines comes back still a
-    ``_LazyPack``, and ``encode_ints`` retries it in another layout in
-    ``_retry_wrap``: zstd matches whole bytes, and a PACK hides repeats
-    at other bit phases or up to an additive constant."""
+    A ~64 KiB trial bounds cost; kept only on a clear (>=10%) win. The
+    path of every auto segment but PACK's (``_pack_or_wrap``) and the
+    width-symbol codec's (never wrapped)."""
     if len(seg) < 128:
         return seg
     from .bytescodecs import zstd_compress
 
-    lazy = isinstance(seg, _LazyPack)
-    trial = seg.prefix(65536) if lazy else memoryview(seg)[:65536]
+    trial = memoryview(seg)[:65536]
     comp_trial = zstd_compress(trial)
     if len(comp_trial) > 0.85 * len(trial):
         return seg
-    full = seg.seg() if lazy else seg
-    comp = comp_trial if len(trial) == len(full) else zstd_compress(full)
-    return _wrapped(full, count, len(full), comp, len(full)) or seg
+    comp = comp_trial if len(trial) == len(seg) else zstd_compress(seg)
+    return _wrapped(seg, count, len(seg), comp, len(seg)) or seg
 
 
-# A declined PACK wrap retries in two layouts (``_retry_wrap``), built in
-# the order zstd of a sample predicts: _RETRY_WINDOWS evenly spaced
-# windows of _RETRY_WINDOW_MINIS whole minis each. A chunk of at most
-# that many minis is its own sample, so its prediction is exact.
-_RETRY_WINDOWS = 16
-_RETRY_WINDOW_MINIS = 4
+# The wrap layouts of a bit-packed chunk are ordered by zstd of a sample
+# (``_wrap_sample``): _WRAP_WINDOWS evenly spaced windows of
+# _WRAP_WINDOW_MINIS whole minis. A chunk of at most that many minis is
+# its own sample, so its prediction is exact.
+_WRAP_WINDOWS = 16
+_WRAP_WINDOW_MINIS = 4
 
 
-def _repack(arr: np.ndarray, seg: _LazyPack, wide: int) -> np.ndarray:
-    """The PACK segment ``seg`` of ``arr`` re-packed at the byte width
-    ``wide``, in one buffer: every value's delta is one whole lane."""
-    head = HEADER.size + 9
-    inner = np.empty(head + arr.size * (wide // 8), dtype=np.uint8)
-    inner[:head] = np.frombuffer(seg.head, np.uint8)  # tag, lo
-    HEADER.pack_into(inner, 0, T_PACK, inner.size - HEADER.size)
-    inner[head - 1] = wide
+def _wrap_sample(arr: np.ndarray) -> np.ndarray:
+    """``arr`` itself up to _WRAP_WINDOWS * _WRAP_WINDOW_MINIS minis,
+    else that many whole minis in evenly spaced windows (so a sample's
+    FORBP minis are the chunk's own)."""
+    nfull = arr.size // MINI
+    if nfull <= _WRAP_WINDOWS * _WRAP_WINDOW_MINIS:
+        return arr
+    at = np.arange(_WRAP_WINDOWS) * (nfull - _WRAP_WINDOW_MINIS) \
+        // (_WRAP_WINDOWS - 1)
+    rows = (at[:, None] + np.arange(_WRAP_WINDOW_MINIS)).reshape(-1)
+    return arr[: nfull * MINI].reshape(nfull, MINI)[rows].reshape(-1)
+
+
+def _repack(arr: np.ndarray, lo: int, wide: int) -> np.ndarray:
+    """The PACK segment of ``arr`` at the frame minimum ``lo`` and the
+    byte width ``wide``, in one buffer: every value's delta is one whole
+    lane."""
+    inner = np.empty(HEADER.size + 9 + arr.size * (wide // 8), np.uint8)
+    head = _pack_head(lo, wide, arr.size)
+    inner[:len(head)] = np.frombuffer(head, np.uint8)
     with _wrap:  # deltas < 2^width, so the wrapping subtract casts exactly
-        np.subtract(arr, arr.dtype.type(seg.lo),
-                    out=inner[head:].view(f"<u{wide // 8}"),
+        np.subtract(arr, arr.dtype.type(lo),
+                    out=inner[len(head):].view(f"<u{wide // 8}"),
                     casting="unsafe")
     return inner
 
 
-def _retry_wrap(arr: np.ndarray, seg: _LazyPack,
-                count: int) -> bytes | bytearray:
-    """Retry of a declined wrap of the PACK segment ``seg`` of ``arr``;
-    returns a wrapped retry or the built PACK.
+def _lane(width: int) -> int:
+    """The byte width a re-pack of ``width``-bit deltas takes."""
+    return next(b for b in _BYTE_WIDTHS if b >= width)
+
+
+def _passes(zone, count: int, inner_len: int, comp_len: float,
+            than: int) -> bool:
+    """Whether a wrap of ``comp_len`` zstd bytes passes ``_wrapped``'s
+    rule against ``than`` bytes."""
+    return HEADER.size + len(_wrap_head(zone, count, inner_len)) \
+        + comp_len < 0.9 * than
+
+
+def _pack_or_wrap(arr: np.ndarray) -> bytes | bytearray:
+    """An auto-selected PACK of ``arr``, or a wrap of it in another
+    layout; the PACK is built only where it is tried or kept.
 
     zstd matches whole bytes, and a PACK hides two kinds of repeats from
     it. At a width that is not 8/16/32/64, a run repeated at an offset
-    that is not a multiple of 8 values starts at another bit phase; one
-    candidate re-packs the values at the next byte width (none at a byte
-    width). Against the one global minimum, a run repeated up to an
-    additive constant is other bytes; the other candidate is FORBP, whose
-    per-mini minimum turns it back into a repeat, and whose minis each
-    start on a byte (the fixture's tail block of wide rows: zstd of its
-    FORBP is 0.18 of zstd of its 32-bit re-pack). Each is zstd'd whole
-    (the repeats may lie far apart, past any prefix trial) and kept under
-    ``_maybe_wrap``'s 0.9 rule against the PACK's length.
+    that is not a multiple of 8 values starts at another bit phase; the
+    byte-width re-pack (none at a byte width) puts every value on whole
+    bytes. Against the one global minimum, a run repeated up to an
+    additive constant is other bytes; FORBP's per-mini minimum turns it
+    back into a repeat, and its minis each start on a byte (the
+    fixture's tail block of wide rows: zstd of its FORBP is 0.18 of zstd
+    of its 32-bit re-pack).
 
-    Both layouts of a sample of whole minis are zstd'd (the sample's
-    FORBP minis are the chunk's own), and the candidates are built in
-    the order of their sample's output, the re-pack first on a tie,
-    until one wraps. A chunk no larger than the sample is its own
+    The sample (``_wrap_sample``) is laid out three ways, the PACK, the
+    re-pack and FORBP, and each is zstd'd; a layout's predicted zstd
+    bytes are its sample's output scaled by its length over the
+    sample's. The re-pack and FORBP are built whole and zstd'd in
+    predicted order (the repeats may lie far apart, past any sample:
+    only the whole chunk decides); the PACK takes its place in that
+    order only where its prediction passes ``_wrapped``'s 0.9 rule. The
+    first wrap that passes against the PACK's exact length wins, else
+    the PACK is kept. A chunk no larger than the sample is its own
     sample: its zstd outputs are the candidates', and nothing is built
     twice. A candidate past ``LEN_LIMIT`` is skipped, never refused. The
-    zone header comes from the PACK's head, so a winning retry never
-    packs the PACK body at all."""
-    if len(seg) < 128:
-        return seg.seg()
+    zone header comes from the PACK's head, so a winning re-pack or
+    FORBP never packs the PACK body at all."""
     from .bytescodecs import zstd_compress
 
-    def forbp(vals: np.ndarray) -> bytearray | None:
-        layout = _forbp_layout(vals)
-        return None if layout[2][-1] > LEN_LIMIT \
-            else _forbp_seg(vals, layout)
+    n = arr.size
+    lo, width = _pack_frame(arr)
+    zone = _pack_head(lo, width, n)
+    plen = len(zone) + (n * width + 7) // 8
+    if plen < 128:
+        return _pack_seg(arr, lo, width)
+    lane = _lane(width)
+    forbp = _forbp_layout(arr)
 
-    builds = [forbp]
-    lane = next(b for b in _BYTE_WIDTHS if b >= seg.width)
-    if lane != seg.width and HEADER.size + 9 + count * (lane // 8) \
-            <= LEN_LIMIT:
-        builds.insert(0, lambda vals: _repack(vals, seg, lane))
-    nfull = count // MINI
-    if nfull <= _RETRY_WINDOWS * _RETRY_WINDOW_MINIS:
-        sample = arr
-    else:
-        at = np.arange(_RETRY_WINDOWS) * (nfull - _RETRY_WINDOW_MINIS) \
-            // (_RETRY_WINDOWS - 1)
-        rows = (at[:, None] + np.arange(_RETRY_WINDOW_MINIS)).reshape(-1)
-        sample = arr[: nfull * MINI].reshape(nfull, MINI)[rows].reshape(-1)
-    tries = []
-    for build in builds:
+    def pack(vals):
+        return _pack_seg(vals, lo, width)
+
+    layouts = [(pack, plen)]
+    if lane != width:
+        layouts.append((lambda vals: _repack(vals, lo, lane),
+                        HEADER.size + 9 + n * (lane // 8)))
+    layouts.append((lambda vals: _forbp_seg(
+        vals, forbp if vals is arr else _forbp_layout(vals)),
+        int(forbp[2][-1])))
+    sample = _wrap_sample(arr)
+    whole = sample is arr
+    built, tries = None, []
+    for build, full in layouts:
+        if full > LEN_LIMIT:
+            continue
         inner = build(sample)
-        if inner is not None:  # a sample past the limit rules the chunk out
-            tries.append((zstd_compress(inner), len(inner), build))
-    for comp, inner_len, build in sorted(tries, key=lambda t: len(t[0])):
-        if sample is not arr:
-            inner = build(arr)
-            if inner is None:
+        comp = zstd_compress(inner)
+        est = len(comp) * full / len(inner)
+        if build is pack:
+            built = inner if whole else None
+            if not _passes(zone, n, full, est, plen):
                 continue
-            comp, inner_len = zstd_compress(inner), len(inner)
-        got = _wrapped(seg.head, count, inner_len, comp, len(seg))
+        tries.append((est, build, full, comp if whole else None))
+    for _est, build, full, comp in sorted(tries, key=lambda t: t[0]):
+        if comp is None:
+            inner = build(arr)
+            comp = zstd_compress(inner)
+            if build is pack:
+                built = inner
+            del inner
+        got = _wrapped(zone, n, full, comp, plen)
         if got:
             return got
-    return seg.seg()
+    return built if built is not None else pack(arr)
+
+
+def _forbp_or_wrap(arr: np.ndarray) -> bytes | bytearray:
+    """An auto-selected FORBP of ``arr``, or a wrap of its byte-width
+    re-pack, which is built first only where the sample predicts that
+    its wrap passes ``_wrapped``'s 0.9 rule against FORBP's exact length
+    and beats FORBP's predicted wrap. The wrap's zone header comes from
+    FORBP's minis, as it would for a wrapped FORBP, and a kept re-pack
+    leaves the FORBP body unpacked. Otherwise FORBP takes
+    ``_maybe_wrap``, as every other segment. The order is asymmetric on
+    purpose: a sample cannot stand in for the whole chunk where repeats
+    lie far apart, so FORBP, the selected layout, is never dropped on a
+    prediction; the re-pack can only move ahead of it."""
+    from .bytescodecs import zstd_compress
+
+    n = arr.size
+    layout = _forbp_layout(arr)
+    zone = _forbp_head(layout)
+    flen = int(layout[2][-1])
+    lo, width = _pack_frame(arr)
+    lane = _lane(width)
+    rlen = HEADER.size + 9 + n * (lane // 8)
+    seg = None
+    if 128 <= flen and rlen <= LEN_LIMIT:
+        sample = _wrap_sample(arr)
+        whole = sample is arr
+        fseg = _forbp_seg(sample, layout if whole else _forbp_layout(sample))
+        rseg = _repack(sample, lo, lane)
+        rcomp = zstd_compress(rseg)
+        rest = len(rcomp) * rlen / rseg.size
+        if whole:
+            seg = fseg
+        if rest < len(zstd_compress(fseg)) * flen / len(fseg) \
+                and _passes(zone, n, rlen, rest, flen):
+            if not whole:
+                rcomp = zstd_compress(_repack(arr, lo, lane))
+            got = _wrapped(zone, n, rlen, rcomp, flen)
+            if got:
+                return got
+    return _maybe_wrap(_forbp_seg(arr, layout) if seg is None else seg, n)
 
 
 def decode_ints(buf, offset: int, count: int,

@@ -17,15 +17,16 @@ winner's predicted size, scaled by the zstd ratio of the winner's
 encoding of the first SAMPLE values, by the margin ``WSYM_MARGIN``.
 Chunks LZ compresses well (the fixture's repeated runs) keep their
 codec; skewed ids without repeats (Zipf token streams) take T_WSYM, and
-only its segment is built. The one full-chunk trial is downstream of
-selection, in ``intcodecs``: the zstd wrap of the chosen segment, and for
-a PACK whose wrap fails, one retry zstd'd whole (``_retry_wrap``) in the
-layout that shows zstd the repeats a PACK hides: the values re-packed at
-the next byte width (repeats that bit-packing shifted to other bit
-phases) or FORBP (runs repeated up to an additive constant, which its
-per-mini minimum cancels). zstd of both layouts of a sample of whole
-minis (the whole chunk, up to 64 minis) orders them, and the second is
-built only when the first is declined.
+only its segment is built. The full-chunk trials are downstream of
+selection, in ``intcodecs``, and a sample orders them before anything
+is built: for a bit-packed chunk, zstd of a sample of whole minis (the
+whole chunk, up to 64 minis) predicts the wrap of each layout that shows
+zstd the repeats bit-packing hides, the values re-packed at the next
+byte width (repeats shifted to other bit phases) and FORBP (runs
+repeated up to an additive constant, which its per-mini minimum
+cancels). A PACK tries those layouts in predicted order, each zstd'd
+whole, and its own wrap only where the sample predicts it passes; a
+FORBP tries the re-pack first only where the sample predicts it wins.
 """
 
 from __future__ import annotations
